@@ -642,6 +642,8 @@ def media_features(
     if columns is None:
         keep = tuple(_FEATURE_COL_TYPES)
     else:
+        if not columns:
+            raise ValueError("columns must name at least one feature column")
         unknown = set(columns) - set(_FEATURE_COL_TYPES)
         if unknown:
             raise ValueError(f"unknown feature columns: {sorted(unknown)}")

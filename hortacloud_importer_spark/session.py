@@ -9,19 +9,53 @@ available parallelism rather than the 200 default.
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
 from pyspark.sql import SparkSession
 
+# The Python worker module of get_spark sessions (pyspark_graft_worker.py
+# at the repository root): it stops every task from re-reading the
+# directory of pyspark.zip. pyspark.daemon only accepts names that begin
+# with "pyspark".
+WORKER_MODULE = "pyspark_graft_worker"
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_conf() -> dict[str, str]:
+    """Spark conf for Python workers that share the driver's files: they import the
+    engine from this checkout whatever the driver's working directory,
+    and start from WORKER_MODULE when the driver can import it (a
+    worker module that fails to import would stop the daemon, and with
+    it every Python task)."""
+    paths = [_REPO]
+    conf = {}
+    spec = importlib.util.find_spec(WORKER_MODULE)
+    if spec is not None and spec.origin is not None:
+        paths.append(os.path.dirname(os.path.abspath(spec.origin)))
+        conf["spark.python.worker.module"] = WORKER_MODULE
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths))
+    return conf
+
 
 def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
+    """The engine's session: AQE, Arrow and sized shuffle partitions.
+
+    On local and local-cluster masters the Python workers start from
+    WORKER_MODULE (see worker_conf), which skips pyspark.zip's
+    per-task directory re-read. Other masters, sessions built directly
+    with ``SparkSession.builder``, and the Python planners the JVM
+    starts on its own (``pyspark.sql.worker.*``, e.g. Python data
+    source planning) keep stock pyspark workers.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # SPARK_GRAFT_MASTER points the whole harness (oracle checks,
     # bench, CLI) at any master — e.g. local-cluster[2,8,4096] for
     # real-executor runs, or spark://... for a standalone cluster.
     # Non-local masters need the package on executors
-    # (spark.executorEnv.PYTHONPATH below covers local-cluster; real
-    # clusters ship it via --py-files / pip).
+    # (worker_conf below covers local-cluster; real clusters ship it
+    # via --py-files / pip).
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -36,10 +70,7 @@ def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
         # stages by actual bytes — scale-adaptive, not a local tune:
         # measured 6.9->3.5 s on vol_octree_build, 2.2->1.4 s on
         # vol_pyramid_throughput at sf0.1 (OPTIMIZATION_r14.md).
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_REPLAN", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python DataSource readers (sources/datasource.py) prune chunk
@@ -53,11 +84,10 @@ def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        builder = builder.config(map=worker_conf())
     if master.startswith("local-cluster"):
-        import hortacloud_importer_spark as _pkg
-
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(_pkg.__file__)))
         builder = builder.config(
-            "spark.executorEnv.PYTHONPATH", repo
-        ).config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXEC_MEM", "2g"))
+            "spark.executor.memory", os.environ.get("SPARK_GRAFT_EXEC_MEM", "2g")
+        )
     return builder.getOrCreate()

@@ -120,3 +120,26 @@ def test_rep_loop_steal_defenses_present():
         "cold_cache_reps",
     ):
         assert f'host["{stamp}"]' in src
+
+
+def test_bench_ab_runs_both_sides_in_one_cache_mode(tmp_path, monkeypatch):
+    spec = importlib.util.spec_from_file_location(
+        "bench_ab_module",
+        os.path.join(os.path.dirname(_BENCH_PATH), "tools", "bench_ab.py"),
+    )
+    bench_ab = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench_ab)
+    old = tmp_path / "old"
+    old.mkdir()
+    (old / "bench.py").write_text("reps = 3\n")
+
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_COLDCACHE", raising=False)
+    assert bench_ab.coldcache_mode(str(old)) == "0"
+    # an old bench.py without the cold-cache mode cannot match a cold side
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_COLDCACHE", "1")
+    with pytest.raises(SystemExit, match="no cold-cache mode"):
+        bench_ab.coldcache_mode(str(old))
+    (old / "bench.py").write_text(
+        'cold = os.environ.get("SPARK_GRAFT_BENCH_COLDCACHE", "1")\n'
+    )
+    assert bench_ab.coldcache_mode(str(old)) == "1"

@@ -15,7 +15,8 @@ and KTX bytes to match the single-JVM run EXACTLY.
 Found-by-this-test (kept as documentation): executors do not inherit
 the driver's sys.path — the package must ship via --py-files /
 executorEnv.PYTHONPATH on a real cluster, which is what the
-subprocess configures.
+subprocess configures. The first subprocess also starts its executors'
+Python workers from the engine's worker module, as get_spark does.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ import sys
 import pytest
 
 from hortacloud_importer_spark.pipelines import build_octree, tiff_octree_to_ktx
+from hortacloud_importer_spark.session import WORKER_MODULE
 from hortacloud_importer_spark.volume import synthetic_volume
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -44,8 +46,13 @@ spark = (SparkSession.builder.appName("lc")
     .config("spark.sql.python.filterPushdown.enabled", "true")
     .config("spark.executor.memory", "2g")
     .config("spark.executorEnv.PYTHONPATH", {repo!r})
+    .config("spark.python.worker.module", {worker_module!r})
     .config("spark.ui.enabled", "false")
     .getOrCreate())
+# which zipimporter invalidation the executors' Python workers run
+print("INVALIDATE " + spark.sparkContext.parallelize([0], 1).map(
+    lambda _: __import__("zipimport").zipimporter.invalidate_caches.__module__
+).first())
 from hortacloud_importer_spark.pipelines import build_octree, tiff_octree_to_ktx
 from hortacloud_importer_spark.volume import synthetic_volume
 v = synthetic_volume(spark, 16, 16, 16, zero_fraction_mod=5)
@@ -75,7 +82,13 @@ def test_fused_pipelines_byte_identical_under_real_executors(
     (tmp_path / "l").mkdir()
     lc_store, lc_ktx = str(tmp_path / "lc" / "store"), str(tmp_path / "lc" / "ktx")
     proc = subprocess.run(
-        [sys.executable, "-c", _DRIVER.format(repo=_REPO, store=lc_store, ktx=lc_ktx)],
+        [
+            sys.executable,
+            "-c",
+            _DRIVER.format(
+                repo=_REPO, store=lc_store, ktx=lc_ktx, worker_module=WORKER_MODULE
+            ),
+        ],
         capture_output=True,
         text=True,
         timeout=360,
@@ -83,6 +96,7 @@ def test_fused_pipelines_byte_identical_under_real_executors(
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert '"n_files": 9' in proc.stdout, proc.stdout
+    assert f"INVALIDATE {WORKER_MODULE}" in proc.stdout, proc.stdout
 
     local_store, local_ktx = str(tmp_path / "l" / "store"), str(tmp_path / "l" / "ktx")
     v = synthetic_volume(spark, 16, 16, 16, zero_fraction_mod=5)

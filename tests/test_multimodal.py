@@ -326,7 +326,7 @@ def test_features_wanted_columns_pushdown(spark):
     """columns=... narrows both the kernel's work and the Arrow output
     schema (guide §4.1: Spark cannot prune through an opaque
     mapInPandas). Values must match the full kernel's for the kept
-    columns; unknown names must fail loudly."""
+    columns; unknown names and an empty subset must fail loudly."""
     media = synthetic_media(spark, 12, "image")
     narrow = media_features(media, columns=("n_bytes",))
     assert [f.name for f in narrow.schema.fields] == ["media_id", "n_bytes"]
@@ -346,6 +346,9 @@ def test_features_wanted_columns_pushdown(spark):
         assert r["max_intensity"] == fr[r["media_id"]]["max_intensity"]
     with pytest.raises(ValueError, match="unknown feature columns"):
         media_features(media, columns=("nope",))
+    # an empty subset would build the malformed schema 'media_id long, '
+    with pytest.raises(ValueError, match="at least one feature column"):
+        media_features(media, columns=())
 
 
 def test_features_wanted_columns_tag_mode(spark):

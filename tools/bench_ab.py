@@ -72,9 +72,10 @@ def read_steal_sec() -> float | None:
 STEAL_DISCARD_CPS = 0.5
 
 
-def run_bench(tree: str) -> dict:
+def run_bench(tree: str, coldcache: str) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_BENCH_REPS"] = "1"
+    env["SPARK_GRAFT_BENCH_COLDCACHE"] = coldcache
     env.setdefault("SPARK_GRAFT_CPUS", "32")
     # Pin the idle gate explicitly so both sides wait on the SAME
     # threshold (the old rev's bench.py defaults to the looser 2.0).
@@ -124,6 +125,24 @@ def run_bench(tree: str) -> dict:
     return out
 
 
+def coldcache_mode(old_tree: str) -> str:
+    """The SPARK_GRAFT_BENCH_COLDCACHE value both sides run with.
+
+    A bench.py without the cold-cache mode (the pinned r8 one) always
+    keeps caches across reps, so warm ("0") is the default: a cold new
+    side against a warm old side would put the methodology change into
+    the ratio."""
+    mode = os.environ.get("SPARK_GRAFT_BENCH_COLDCACHE", "0")
+    with open(os.path.join(old_tree, "bench.py")) as fh:
+        old_has_cold = "SPARK_GRAFT_BENCH_COLDCACHE" in fh.read()
+    if mode != "0" and not old_has_cold:
+        raise SystemExit(
+            f"SPARK_GRAFT_BENCH_COLDCACHE={mode}: the old side's bench.py "
+            "has no cold-cache mode; run the A/B with 0"
+        )
+    return mode
+
+
 def main() -> None:
     old_rev = sys.argv[1] if len(sys.argv) > 1 else PINNED_R8_REV
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -134,6 +153,7 @@ def main() -> None:
             cwd=REPO,
             check=True,
         )
+    coldcache = coldcache_mode(old_tree)
     runs: dict[str, list] = {"old": [], "new": []}
     discarded = 0
     for rep in range(reps):
@@ -145,7 +165,7 @@ def main() -> None:
                     + " ...",
                     flush=True,
                 )
-                r = run_bench(tree)
+                r = run_bench(tree, coldcache)
                 cps = r.get("effective_steal_cps")
                 if cps is None or cps <= STEAL_DISCARD_CPS or attempt == 2:
                     if cps is not None and cps > STEAL_DISCARD_CPS:
@@ -223,7 +243,8 @@ def main() -> None:
         "",
         f"Interleaved {reps}x single-rep runs per side on one idle "
         "session; every run calibration-spun immediately before "
-        f"launch and normalized to calib {REF_CALIB} (BENCH_r10's).",
+        f"launch and normalized to calib {REF_CALIB} (BENCH_r10's); "
+        f"SPARK_GRAFT_BENCH_COLDCACHE={coldcache} on both sides.",
         "",
         f"- old ({old_rev}): raw {old_b['raw_totals']} "
         f"norm {old_b['norm_totals']} (calibs {old_b['calibs']}, "
@@ -304,6 +325,7 @@ def main() -> None:
         ),
         "old_rev": old_rev,
         "new_rev": head,
+        "bench_coldcache": coldcache,
         "old_best_norm": old_b["best_norm"],
         "new_best_norm": new_b["best_norm"],
         "shared_queries": len(shared),

@@ -31,14 +31,17 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from hortacloud_importer_spark.session import worker_conf
+
     cpus = os.environ["SPARK_GRAFT_CPUS"]
     spark = (
         SparkSession.builder.appName("profile-query")
         .master(f"local[{cpus}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # keep in lockstep with session.get_spark: AQE re-planning of
-        # cached plans' output partitioning (round-14)
+        # keep in lockstep with session.get_spark, which sets this
+        # unconditionally: AQE re-planning of cached plans' output
+        # partitioning
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
@@ -51,6 +54,8 @@ def main() -> None:
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4058")
+        # the engine's Python worker path (session.get_spark)
+        .config(map=worker_conf())
         .getOrCreate()
     )
     from hortacloud_importer_spark.registry import all_queries

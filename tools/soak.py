@@ -243,6 +243,8 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     from pyspark.sql import SparkSession
 
+    from hortacloud_importer_spark.session import worker_conf
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.appName("soak")
@@ -257,6 +259,8 @@ def main() -> int:
         .config("spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"])
         .config("spark.ui.enabled", "true")  # REST stage metrics
         .config("spark.ui.port", "4051")
+        # the engine's Python worker path (session.get_spark)
+        .config(map=worker_conf())
         .getOrCreate()
     )
     from hortacloud_importer_spark.pipelines import (
