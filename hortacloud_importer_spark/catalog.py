@@ -96,10 +96,6 @@ def spread(df: DataFrame) -> DataFrame:
     because every consumer is row-order independent (aggregates,
     hash joins, windows with total orders).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     memo_key = (sc.applicationId, id(df))

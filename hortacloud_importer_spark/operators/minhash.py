@@ -126,8 +126,6 @@ def minhash_pairs(
     pair blowup on repetitive corpora; None preserves classic-LSH
     semantics exactly (the oracle-checked mode).
     """
-    import os
-
     rows = n_hashes // bands
     sig = minhash_signatures(shingles, n_hashes, portable=portable)
     # Materialize the signature table ONCE for its 3-4 consumers
@@ -136,22 +134,11 @@ def minhash_pairs(
     # concurrent jobs, and a lazy cache lets them race through the
     # un-filled InMemoryRelation — the signature aggregate (the
     # query's dominant compute) ran TWICE in the round-14 profile.
-    # MEASURED AND KEPT AT cache()+count() (round-15, guide §1.1): a
-    # localCheckpoint() variant (env SPARK_GRAFT_MINHASH_CKPT=1) was
-    # tried to collapse the per-consumer plan weight — at sf0.1 the
-    # query's wall is ~95% driver latency (2.5 s wall vs 0.11
-    # executor-s) — but two 5-rep interleaved toggles read
-    # dedup_minhash ~0.90 / dedup_approx ~1.14 with the untouched
-    # control itself swinging ~2x: no clean win, and the checkpointed
-    # RDD blocks' ASYNC ContextCleaner teardown lands in the NEXT
-    # timed query's window (the control ran right after and slowed in
-    # every rep). The checkpoint path stays behind the toggle as the
-    # recorded experiment.
-    if os.environ.get("SPARK_GRAFT_MINHASH_CKPT", "0") == "1":
-        sig = sig.localCheckpoint()
-    else:
-        sig = sig.cache()
-        sig.count()
+    # cache()+count() rather than localCheckpoint() (round-15 A/B): the
+    # checkpoint showed no clean win, and its RDD blocks' ASYNC
+    # ContextCleaner teardown lands in the NEXT query's window.
+    sig = sig.cache()
+    sig.count()
 
     def _bucket_sql(i: int) -> str:
         cols = [f"sig[{i * rows + r}]" for r in range(rows)]
@@ -177,36 +164,8 @@ def minhash_pairs(
         )
         return F.expr(f"({matches}) / {float(n_hashes)!r}D")
 
-    if os.environ.get("SPARK_GRAFT_MINHASH_SIG_THROUGH", "0") != "0":
-        # Round-14 shape: signatures ride THROUGH the band join and est
-        # is computed inline on the join output, so the one distinct
-        # over (doc_a, doc_b, est) is the whole tail. Cheapest in
-        # per-job overhead (no join-back stage), but the LSH band
-        # exchange carries the full sig (n_hashes longs) on BOTH sides
-        # x bands copies — ~20x the payload of id-only banding. The
-        # r14 verdict flagged that as the wrong trade at 100 TB; kept
-        # behind this toggle as the recorded experiment (see
-        # OPTIMIZATION_r15.md for the measured A/B).
-        banded = sig.select(
-            "doc_id", "sig", F.expr(f"explode(array({structs}))").alias("bb")
-        ).select("doc_id", "sig", "bb.band", "bb.bucket")
-        if bucket_cap is not None:
-            banded = _drop_hot_buckets(banded, ["band", "bucket"], bucket_cap)
-        a = banded.alias("a")
-        b = banded.alias("b")
-        return (
-            a.join(b, ["band", "bucket"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                _est("a.sig", "b.sig").alias("est_jaccard"),
-            )
-            .distinct()
-        )
-
-    # Default (round-15, guide §2.3 "shuffle keys and metadata instead
-    # of payloads" / §8): the band exchange carries ONLY
+    # Round-15 (guide §2.3 "shuffle keys and metadata instead of
+    # payloads" / §8): the band exchange carries ONLY
     # (band, bucket, doc_id) — ~24 B/doc/band — never the signature.
     # The distinct pair set is computed on ids alone, then the sig
     # table is joined back ONCE per side to score the survivors. At
@@ -214,7 +173,9 @@ def minhash_pairs(
     # instead of bands x ~260 B x 2 sides, and the join-back shuffles
     # the sig table once per side — bounded by docs, not by band
     # fan-out. est is a deterministic function of the pair, so scoring
-    # after the distinct returns exactly the same rows.
+    # after the distinct returns exactly the same rows. (Carrying the
+    # signatures through the band join saved the join-back stage but
+    # moved ~20x the band-exchange payload; OPTIMIZATION_r15.md.)
     banded = sig.select(
         "doc_id", F.expr(f"explode(array({structs}))").alias("bb")
     ).select("doc_id", "bb.band", "bb.bucket")
@@ -312,19 +273,13 @@ def simhash_pairs(
     that enforces the budget satisfies its clustering from the join's
     partitioning — the full pair stream is ranked and cut WITHOUT
     ever being exchanged (plan-asserted in tests/test_plans.py)."""
-    import os
-
     sig = simhash_signatures(tokens, portable=portable).withColumn(
         "band", F.shiftrightunsigned("simhash", 48)
     )
     # one eager materialization for both join sides + the hot filter —
-    # same rationale (and the same rejected-checkpoint toggle) as
-    # minhash_pairs above
-    if os.environ.get("SPARK_GRAFT_MINHASH_CKPT", "0") == "1":
-        sig = sig.localCheckpoint()
-    else:
-        sig = sig.cache()
-        sig.count()
+    # same rationale (cache, not checkpoint) as minhash_pairs above
+    sig = sig.cache()
+    sig.count()
     if bucket_cap is not None:
         sig = _drop_hot_buckets(sig, ["band"], bucket_cap)
     a = sig.select(

@@ -10,6 +10,5 @@ from hortacloud_importer_spark.pipelines.crop import (  # noqa: F401
     crop_octree,
 )
 from hortacloud_importer_spark.pipelines.ktx import (  # noqa: F401
-    block_mip_chain,
     tiff_octree_to_ktx,
 )

@@ -6,23 +6,17 @@ own mipmap chain (the bounded-state cascade), and writes one
 ``block_..._ch.ktx`` per node holding the full chain.
 ``tiff_octree_to_ktx`` is that run as one declarative plan:
 
-- scan: ``read_tiff_block_store`` (binaryFile + clean-room decode on
-  executors, coordinates from octree path digits);
-- convert (default, ``fused=True``): the whole per-block pass —
-  input stats, requant, optional XY halving, the in-block mip chain,
-  KTX encode — as ONE executor kernel per block
-  (``ktx_convert_blocks_fused``): a map-only plan with zero shuffles
-  (one groupBy only when interleaving channels), because every step
-  is block-local, exactly like the reference's one-task-per-node
-  execution;
-- convert (``fused=False`` dual, byte-identical and test-pinned):
-  distributed aggregates — ``channel_block_stats`` (histogram
-  shuffle + window CDF), Catalyst ``requantize_blocks``,
-  ``block_mip_chain`` (one hash aggregate + re-pack per level) — for
-  blocks too large for a single task's memory;
-- sink: ``ktx_encode_blocks`` / the fused kernel's rows -> the
-  ``ktx_files`` DataSource writer (idempotent names, sharded
-  manifest commit).
+- list: ``_block_file_groups`` — the store's committed block files as
+  PATH rows (one row per file, or one row per block holding its
+  channel files when interleaving); no payload is read or shuffled;
+- convert: ``ktx_convert_blocks_fused`` — the whole per-block pass
+  (input stats, requant, optional XY halving, the in-block mip chain,
+  KTX encode) as ONE executor kernel per block that reads its own
+  file(s): a map-only plan (one paths-only groupBy when interleaving
+  channels), because every step is block-local, exactly like the
+  reference's one-task-per-node execution;
+- sink: the kernel's rows -> the ``ktx_files`` DataSource writer
+  (idempotent names, sharded manifest commit).
 """
 
 from __future__ import annotations
@@ -31,246 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
-from hortacloud_importer_spark.sources.block_store import (
-    read_tiff_block_store,
-)
 from hortacloud_importer_spark.sources.datasource import (
     register_volume_sources,
 )
-from hortacloud_importer_spark.sources.ktx import ktx_encode_blocks
-from hortacloud_importer_spark.volume.downsample import (
-    _agg_expr,
-    child_index,
-    mipmap_dimension,
-)
-
-_KEY = ["zi", "yi", "xi", "channel"]
-
-
-def _block_key(blocks: DataFrame) -> list[str]:
-    return [
-        c for c in ("zi", "yi", "xi", "depth", "channel") if c in blocks.columns
-    ]
-
-
-def channel_block_stats(blocks: DataFrame) -> DataFrame:
-    """Per-(block, channel) input-intensity statistics — the
-    reference's pass-1 per-channel histogram walk
-    (ktx_from_rendered_tiff.py:433-530) as ONE fused plan per store:
-    all 101 exact non-zero percentiles, zero/total counts, and the
-    black/white/gamma intensity-downsample params (D4+D5+D6+D10,
-    grouped by block key instead of globally — same shape as
-    queries/flagship.py::channel_stats).
-
-    Output columns: block key + ``stats_percentiles`` (array<long>,
-    101 entries), ``stats_zero_count``, ``stats_total_count``,
-    ``black_level``, ``white_level``, ``gamma0`` — the passthrough
-    schema sources/ktx.py::ktx_encode_blocks consumes. The only
-    shuffle is the (key, intensity) histogram groupBy, whose output is
-    bounded by 65,536 bins per block-channel regardless of voxels."""
-    from pyspark.sql import Window
-
-    from hortacloud_importer_spark.operators import requant as R
-
-    key = _block_key(blocks)
-    vox = blocks.select(*key, F.explode("voxels").alias("i"))
-    full_hist = vox.groupBy(*key, "i").agg(F.count("*").alias("bin_count"))
-    order = Window.partitionBy(*key).orderBy("i")
-    whole = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    nz_count = F.when(F.col("i") > 0, F.col("bin_count"))
-    cdf = full_hist.withColumn("cum_count", F.sum(nz_count).over(order)).withColumn(
-        "total_nonzero", F.sum(nz_count).over(whole)
-    )
-    nz_i = "CASE WHEN i > 0 THEN i END"
-    # The 101 percentile aggregates land in ONE array column instead
-    # of 101 named columns: the per-block variant of the flagship's
-    # plan would otherwise thread 101 columns through three nested
-    # projections, and Catalyst's analysis time on that width (not the
-    # execution) dominated the whole pass (measured ~2.5s of a 4.6s
-    # stats step at 9 blocks). Values are identical — the moments
-    # below fold the array left-to-right exactly like the column-wise
-    # reduce in operators/requant.band_moments.
-    pct_exprs = [F.expr(f"CAST(COALESCE(MIN({nz_i}), 0) AS BIGINT)")]
-    for p in range(1, 100):
-        pct_exprs.append(
-            F.expr(
-                "CAST(COALESCE(MIN(CASE WHEN (100.0D * cum_count)"
-                f" / total_nonzero >= {float(p)}D THEN i END), 0) AS BIGINT)"
-            )
-        )
-    pct_exprs.append(F.expr(f"CAST(COALESCE(MAX({nz_i}), 0) AS BIGINT)"))
-    pctl = cdf.groupBy(*key).agg(
-        F.array(*pct_exprs).alias("stats_percentiles"),
-        F.sum("bin_count").alias("stats_total_count"),
-        F.coalesce(
-            F.sum(F.when(F.col("i") == 0, F.col("bin_count"))),
-            F.lit(0).cast("bigint"),
-        ).alias("stats_zero_count"),
-    )
-    arr = F.col("stats_percentiles")
-    band = F.slice(arr, R.MIN_QUANTILE + 1, len(R.BAND))  # p20..p95
-    n = float(len(R.BAND))
-    s1 = F.aggregate(band, F.lit(0).cast("long"), lambda a, b: a + b)
-    s2 = F.aggregate(
-        band, F.lit(0).cast("long"), lambda a, b: a + b * b
-    )
-    mean = s1 / F.lit(n)
-    stddev = F.sqrt(s2 / F.lit(n) - mean * mean)
-    p20 = F.element_at(arr, R.MIN_QUANTILE + 1)
-    p95 = F.element_at(arr, R.MAX_BASE_QUANTILE + 1)
-    p100 = F.element_at(arr, 101)
-    white = F.floor(p95 + F.lit(R.MAX_SIGMA_BUFFER) * stddev)
-    white = F.greatest(white, F.floor(F.lit(R.MAX_PROPORTION) * p100))
-    white = F.least(white, p100.cast("bigint"))
-    white = F.greatest(white, F.lit(254).cast("bigint"))
-    black = F.greatest(
-        F.least(p20.cast("bigint"), white - F.lit(253)),
-        F.lit(1).cast("bigint"),
-    )
-    return pctl.select(
-        *key,
-        "stats_percentiles",
-        "stats_zero_count",
-        "stats_total_count",
-        black.alias("black_level"),
-        white.alias("white_level"),
-        F.lit(0.5).alias("gamma0"),
-    )
-
-
-def requantize_blocks(blocks: DataFrame, stats: DataFrame) -> DataFrame:
-    """uint16 -> uint8 intensity requantization of block payloads with
-    per-(block, channel) params — the reference's pass-2 transform
-    (ktx_from_rendered_tiff.py:346-365), as a Catalyst
-    ``F.transform`` over the voxel arrays (no explode, no Python):
-    shift by black, floor small values at 1, preserve zero as no-data,
-    scale by 1/range, clamp at 1, gamma-correct, expand to 0-254,
-    ceil. Association mirrors the NumPy mirror
-    (volume/geometry.py::requantize) exactly."""
-    key = _block_key(blocks)
-    joined = blocks.join(
-        stats.select(*key, "black_level", "white_level", "gamma0"), key, "left"
-    )
-    black = F.coalesce(F.col("black_level").cast("double"), F.lit(1.0))
-    white = F.coalesce(F.col("white_level").cast("double"), F.lit(65535.0))
-    gamma = F.coalesce(F.col("gamma0"), F.lit(0.5))
-    rng = F.greatest(F.lit(1.0), white - black)
-
-    def requant(v):
-        t = v.cast("double") - black
-        t = F.when(t <= 1.0, F.lit(1.0)).otherwise(t)
-        t = F.when(v == 0, F.lit(0.0)).otherwise(t)
-        t = t * (F.lit(1.0) / rng)
-        t = F.when(t >= 1.0, F.lit(1.0)).otherwise(t)
-        t = F.pow(t, gamma) * F.lit(254.0)
-        return F.ceil(t).cast("int")
-
-    return joined.withColumn("voxels", F.transform("voxels", requant)).drop(
-        "black_level", "white_level", "gamma0"
-    )
-
-
-def downsample_blocks_xy(
-    blocks: DataFrame,
-    block_dims: tuple[int, int, int],
-    filter_: str = "arthur",
-) -> DataFrame:
-    """Halve block payloads in X and Y only (z untouched) — the
-    reference's optional first-mip spatial downsample
-    (downsample_array_xy, ktx/util.py:184-192), as one hash aggregate
-    with the same zero-is-NULL kernel and odd-pivot mapping as the
-    z-halving chain."""
-    key = _block_key(blocks)
-    bz, by, bx = block_dims
-    my, mx = mipmap_dimension(1, by), mipmap_dimension(1, bx)
-    pos = F.col("pos")
-    vox = blocks.select(
-        *key, F.posexplode("voxels").alias("pos", "intensity")
-    ).select(
-        *key,
-        F.floor(pos / (by * bx)).cast("int").alias("lz"),
-        child_index((F.floor(pos / bx) % by).cast("int"), by).alias("ly"),
-        child_index((pos % bx).cast("int"), bx).alias("lx"),
-        "intensity",
-    )
-    agg = vox.groupBy(*key, "lz", "ly", "lx").agg(
-        _agg_expr(filter_).cast("int").alias("intensity")
-    )
-    packed = F.struct(
-        ((F.col("lz") * my + F.col("ly")) * mx + F.col("lx"))
-        .cast("long")
-        .alias("k"),
-        F.col("intensity").alias("v"),
-    )
-    return (
-        agg.groupBy(*key)
-        .agg(F.sort_array(F.collect_list(packed)).alias("kv"))
-        .select(
-            *key,
-            F.array(F.lit(bz), F.lit(my), F.lit(mx)).alias("shape"),
-            F.transform("kv", lambda s: s["v"]).alias("voxels"),
-        )
-    )
-
-
-def block_mip_chain(
-    blocks: DataFrame,
-    block_dims: tuple[int, int, int],
-    n_mips: int,
-    filter_: str = "arthur",
-) -> DataFrame:
-    """(zi, yi, xi, channel, shape, voxels) -> the same rows plus
-    ``level`` 1..n_mips-1 downsampled WITHIN each block — the per-node
-    chain a KTX file stores. Every level is one hash aggregate; the
-    block key rides along, so no per-block Python loop exists anywhere.
-    A ``depth`` column (octree level of the block, from
-    read_tiff_block_store) joins the key when present so whole-store
-    conversions keep same-coordinate blocks at different levels apart.
-    """
-    key = _KEY + (["depth"] if "depth" in blocks.columns else [])
-    bz, by, bx = block_dims
-    frames = [
-        blocks.select(*key, "shape", "voxels").withColumn("level", F.lit(0))
-    ]
-    pos = F.col("pos")
-    cur = blocks.select(*key, F.posexplode("voxels").alias("pos", "intensity"))
-    cur = cur.select(
-        *key,
-        F.floor(pos / (by * bx)).cast("int").alias("lz"),
-        (F.floor(pos / bx) % by).cast("int").alias("ly"),
-        (pos % bx).cast("int").alias("lx"),
-        "intensity",
-    )
-    dims_k = block_dims
-    for k in range(1, n_mips):
-        cz = child_index(F.col("lz"), dims_k[0]).alias("lz")
-        cy = child_index(F.col("ly"), dims_k[1]).alias("ly")
-        cx = child_index(F.col("lx"), dims_k[2]).alias("lx")
-        cur = cur.groupBy(*key, cz, cy, cx).agg(
-            _agg_expr(filter_).cast("int").alias("intensity")
-        )
-        dims_k = tuple(mipmap_dimension(1, d) for d in dims_k)
-        mz, my, mx = dims_k
-        packed = F.struct(
-            ((F.col("lz") * my + F.col("ly")) * mx + F.col("lx"))
-            .cast("long")
-            .alias("k"),
-            F.col("intensity").alias("v"),
-        )
-        frames.append(
-            cur.groupBy(*key)
-            .agg(F.sort_array(F.collect_list(packed)).alias("kv"))
-            .select(
-                *key,
-                F.transform("kv", lambda s: s["v"]).alias("voxels"),
-                F.array(*[F.lit(int(d)) for d in dims_k]).alias("shape"),
-                F.lit(k).alias("level"),
-            )
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
 
 
 def _block_file_groups(
@@ -348,48 +105,48 @@ def _block_file_groups(
 
 
 def ktx_convert_blocks_fused(
-    blocks: DataFrame,
+    groups: DataFrame,
+    store_root: str,
     n_mips: int,
     filter_: str = "arthur",
     interleave: bool = False,
     geometry=None,
     downsample_intensity: bool = False,
     downsample_xy: bool = False,
-    store_root: str | None = None,
 ) -> DataFrame:
     """The whole per-block KTX conversion — input statistics, requant,
     optional XY halving, the in-block mip chain, encode — as ONE
     executor-side kernel per block.
 
-    Every step of the reference's pass-2 is block-local (one task per
-    node, ktx_from_rendered_tiff.py:331-427): stats/percentiles/
-    requant params are per (block, channel), the mip chain never
-    crosses a block boundary, and the KTX blob serializes one block.
-    Expressing that as distributed aggregates (the ``fused=False``
-    path) costs a histogram shuffle, a window sort, two shuffles per
-    mip level, and a stats join — all to regroup rows that START
-    grouped. This kernel keeps the grouping: the single-channel form
-    is ``mapInPandas`` over the scan — a map-ONLY plan, zero
-    shuffles at any store size — and the interleaved form pays exactly
-    one shuffle (channels of a block live in separate files). Blocks
-    are bounded by construction (each came from one TIFF file), so the
-    in-memory NumPy chain is safe; values are pinned to the
-    distributed duals by np_halve property tests and the fused-vs-
-    unfused byte-identity test.
+    ``groups`` are :func:`_block_file_groups` PATH rows under
+    ``store_root``: one file per row when ``interleave=False``, a
+    block's channel files per row when ``interleave=True``. Each task
+    reads and decodes its own block's file(s), the reference's
+    one-task-per-node model (ktx_from_rendered_tiff.py:331-427).
+    Every step of the reference's pass-2 is block-local: stats,
+    percentiles and requant params are per (block, channel), the mip
+    chain never crosses a block boundary, and the KTX blob serializes
+    one block. So the conversion is ``mapInPandas`` over path rows
+    and no exchange carries a payload at any store size. Blocks are
+    bounded by construction (each came from one TIFF file), so the
+    in-memory NumPy chain is safe. The values are pinned to
+    independent NumPy references (``np_halve`` against the loop
+    mirror, ``volume.geometry.requantize``) and the stored bytes to
+    the golden digests of tests/test_golden_store.py.
     """
     import numpy as np
     import pandas as pd
 
     from hortacloud_importer_spark.sources.ktx import (
+        KTX_SCHEMA,
+        _channel_stats,
         _interleaved_block_row,
         _single_block_row,
         interleave_channels,
     )
-    from hortacloud_importer_spark.sources.ktx import KTX_SCHEMA
     from hortacloud_importer_spark.volume import geometry as G
     from hortacloud_importer_spark.volume.downsample import np_halve
 
-    has_depth = "depth" in blocks.columns
     itemsize = 1 if downsample_intensity else 2
     dtype = np.uint8 if itemsize == 1 else np.uint16
     need_stats = geometry is not None or downsample_intensity
@@ -400,17 +157,7 @@ def ktx_convert_blocks_fused(
         arr = np.asarray(voxels, dtype=np.int32).reshape(
             tuple(int(s) for s in shape)
         )
-        st = None
-        if need_stats:
-            hist = np.bincount(arr.ravel(), minlength=G.N_BINS)
-            st = {
-                "percentiles": G.nonzero_percentiles(hist),
-                "zero_count": int(hist[0]),
-                "total_count": int(arr.size),
-            }
-            if downsample_intensity:
-                b, w, g = G.intensity_downsample_params(st["percentiles"])
-                st["black"], st["white"], st["gamma0"] = float(b), float(w), g
+        st = _channel_stats(arr, downsample_intensity) if need_stats else None
         if downsample_intensity:
             arr = G.requantize(
                 arr, st["black"], st["white"], st["gamma0"]
@@ -422,28 +169,6 @@ def ktx_convert_blocks_fused(
             arr = np_halve(arr, filter_)
             levels.append(arr)
         return levels, st, levels[0].shape
-
-    def fused_single(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                levels, st, shape = convert_one(row.voxels, row.shape)
-                out.append(
-                    _single_block_row(
-                        int(row.zi),
-                        int(row.yi),
-                        int(row.xi),
-                        int(row.depth) if has_depth else 0,
-                        int(row.channel),
-                        [lv.astype(dtype).tobytes() for lv in levels],
-                        shape,
-                        itemsize,
-                        geometry,
-                        st,
-                        has_depth,
-                    )
-                )
-            yield pd.DataFrame(out)
 
     def interleaved_row(zi, yi, xi, depth, items):
         """items: (channel, voxels, shape) per channel, any order."""
@@ -463,19 +188,8 @@ def ktx_convert_blocks_fused(
             zi, yi, xi, depth, chans, mip_bytes, shape,
             itemsize, geometry,
             stats_list if geometry is not None else None,
-            has_depth,
+            True,
         )
-
-    def fused_interleaved(key, pdf):
-        if has_depth:
-            zi, yi, xi, depth = (int(k) for k in key)
-        else:
-            (zi, yi, xi), depth = (int(k) for k in key), 0
-        items = [
-            (int(row.channel), row.voxels, row.shape)
-            for row in pdf.itertuples()
-        ]
-        return pd.DataFrame([interleaved_row(zi, yi, xi, depth, items)])
 
     def fused_filegroups(batches):
         import re as _re
@@ -507,7 +221,7 @@ def ktx_convert_blocks_fused(
                         arr = decode_tiff(fh.read())[..., 0]
                     items.append((int(m.group(1)), arr, arr.shape))
                 zi, yi, xi = int(row.zi), int(row.yi), int(row.xi)
-                depth = int(row.depth) if has_depth else 0
+                depth = int(row.depth)
                 if single:
                     if len(items) != 1:
                         raise ValueError(
@@ -522,27 +236,17 @@ def ktx_convert_blocks_fused(
                         _single_block_row(
                             zi, yi, xi, depth, ch,
                             [lv.astype(dtype).tobytes() for lv in levels],
-                            shape, itemsize, geometry, st, has_depth,
+                            shape, itemsize, geometry, st, True,
                         )
                     )
                 else:
                     out.append(interleaved_row(zi, yi, xi, depth, items))
             yield pd.DataFrame(out)
 
-    if store_root is not None:
-        # file-group mode: `blocks` carries PATH rows, not payloads —
-        # at most one metadata shuffle (the interleave channel-pairing
-        # groupBy) moves paths (see _block_file_groups); each kernel
-        # task reads its block's file(s), exactly the reference's
-        # one-task-per-block I/O model. A resume filter upstream acts
-        # on paths, so committed blocks are never even opened.
-        return blocks.mapInPandas(fused_filegroups, KTX_SCHEMA)
-    if interleave:
-        key = ["zi", "yi", "xi"] + (["depth"] if has_depth else [])
-        return blocks.groupBy(*key).applyInPandas(
-            fused_interleaved, KTX_SCHEMA
-        )
-    return blocks.mapInPandas(fused_single, KTX_SCHEMA)
+    # at most one metadata shuffle (the interleave channel-pairing
+    # groupBy in _block_file_groups) moves paths; a resume filter
+    # upstream acts on paths, so committed blocks are never opened
+    return groups.mapInPandas(fused_filegroups, KTX_SCHEMA)
 
 
 def tiff_octree_to_ktx(
@@ -558,7 +262,6 @@ def tiff_octree_to_ktx(
     downsample_xy: bool = False,
     with_metadata: bool = True,
     specimen_id: str | None = None,
-    fused: bool = True,
     delete_source: bool = False,
     resume: bool = False,
     lz4: bool = False,
@@ -601,40 +304,27 @@ def tiff_octree_to_ktx(
     reference leaves its lowest-resolution slices.
     """
     register_volume_sources(spark)
-    if fused:
-        # path rows instead of decoded payloads (round-6 soak: the
-        # payload-grouped interleave shuffled ~1 GiB at 2 GiB scale):
-        # single-channel mode is one row per file with zero shuffle;
-        # interleave pairs a block's channel files with a paths-only
-        # groupBy. Resume below then filters on paths, so committed
-        # blocks are never opened, let alone decoded.
-        blocks = _block_file_groups(
-            spark, store_root, depth, per_channel=not interleave
-        )
-    else:
-        blocks = read_tiff_block_store(spark, store_root)
-        if depth is not None:
-            blocks = blocks.filter(F.col("depth") == depth)
+    # path rows instead of decoded payloads (round-6 soak: a
+    # payload-grouped interleave shuffled ~1 GiB at 2 GiB scale):
+    # single-channel mode is one row per file with zero shuffle;
+    # interleave pairs a block's channel files with a paths-only
+    # groupBy. Resume below then filters on paths, so committed
+    # blocks are never opened, let alone decoded.
+    blocks = _block_file_groups(
+        spark, store_root, depth, per_channel=not interleave
+    )
     if resume:
         # the reference's pass-2 resume skips blocks whose .ktx output
         # already exists (tiff2octree.py:400-402, per-file
-        # os.path.exists); here: one anti-join of the work list
+        # os.path.exists); here: one anti-join of the PATH rows
         # against the OUTPUT store's manifest on the expected file
-        # name. In fused mode the work list is PATH rows, so committed
-        # blocks are never opened; in the fused=False fallback the
-        # anti-join sits above the decode (those blocks are read once,
-        # then dropped — the price of the giant-block fallback)
+        # name, so committed blocks are never opened
         done = manifest.committed_files_df(spark, out_dir)
         if done is not None:
-            has_depth = "depth" in blocks.columns
-            tag = (
-                F.when(
-                    F.col("depth") > 0,
-                    F.concat(F.lit("_d"), F.col("depth").cast("string")),
-                ).otherwise(F.lit(""))
-                if has_depth
-                else F.lit("")
-            )
+            tag = F.when(
+                F.col("depth") > 0,
+                F.concat(F.lit("_d"), F.col("depth").cast("string")),
+            ).otherwise(F.lit(""))
             ch = (
                 F.lit("-1")
                 if interleave
@@ -654,17 +344,6 @@ def tiff_octree_to_ktx(
                 .join(done, "rel", "left_anti")
                 .drop("rel")
             )
-    raw_blocks = None
-    if not fused:
-        # One store read for the whole pass: the decoded blocks feed
-        # the stats aggregate AND every mip-chain union branch —
-        # without the persist each consumer re-runs the binaryFile
-        # scan + TIFF decode (2 + n_mips store reads at 100 TB; the
-        # reference's two-pass design reads each file twice). The
-        # fused path has exactly one consumer, so it skips the cache.
-        from pyspark import StorageLevel
-
-        blocks = raw_blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
 
     from hortacloud_importer_spark.volume.geometry import (
         OctreeGeometry,
@@ -684,66 +363,24 @@ def tiff_octree_to_ktx(
             downsample_intensity=downsample_intensity,
         )
 
-    if fused:
-        # the default: the whole conversion as one executor-side
-        # kernel per block — a map-only plan (one shuffle when
-        # interleaving), see ktx_convert_blocks_fused
-        (
-            ktx_convert_blocks_fused(
-                blocks,
-                n_mips=n_mips,
-                filter_=filter_,
-                interleave=interleave,
-                geometry=geometry,
-                downsample_intensity=downsample_intensity,
-                downsample_xy=downsample_xy,
-                store_root=store_root,
-            )
-            .write.format("ktx_files")
-            .option("lz4", str(lz4).lower())
-            .mode("append")
-            .save(out_dir)
+    # the whole conversion as one executor-side kernel per block — a
+    # map-only plan over path rows, see ktx_convert_blocks_fused
+    (
+        ktx_convert_blocks_fused(
+            blocks,
+            store_root,
+            n_mips=n_mips,
+            filter_=filter_,
+            interleave=interleave,
+            geometry=geometry,
+            downsample_intensity=downsample_intensity,
+            downsample_xy=downsample_xy,
         )
-    else:
-        stats = None
-        if geometry is not None or downsample_intensity:
-            # pass-1 statistics of the INPUT intensities, shared by
-            # the requant transform and the header KV; persisted
-            # because both consumers would otherwise recompute the
-            # histogram aggregate
-            stats = channel_block_stats(blocks).persist()
-        itemsize = 2
-        if downsample_intensity:
-            blocks = requantize_blocks(blocks, stats)
-            itemsize = 1
-        out_block_dims = block_dims
-        if downsample_xy:
-            blocks = downsample_blocks_xy(blocks, block_dims, filter_)
-            bz, by, bx = block_dims
-            out_block_dims = (
-                bz,
-                mipmap_dimension(1, by),
-                mipmap_dimension(1, bx),
-            )
-        chain = block_mip_chain(blocks, out_block_dims, n_mips, filter_)
-        if stats is not None:
-            chain = chain.join(stats, _block_key(blocks), "left")
-        (
-            ktx_encode_blocks(
-                chain,
-                itemsize=itemsize,
-                interleave=interleave,
-                geometry=geometry,
-            )
-            .write.format("ktx_files")
-            .option("lz4", str(lz4).lower())
-            .mode("append")
-            .save(out_dir)
-        )
-        if stats is not None:
-            stats.unpersist()
-    if raw_blocks is not None:
-        raw_blocks.unpersist(blocking=False)
+        .write.format("ktx_files")
+        .option("lz4", str(lz4).lower())
+        .mode("append")
+        .save(out_dir)
+    )
     if transform is not None:
         # the reference copies transform.txt beside the KTX output
         # verbatim (tiff2octree.py:894-901)

@@ -12,16 +12,18 @@ the engine's existing operators into exactly that run:
   (N5/Zarr via ``n5_volume``/``zarr_volume``, parquet, …);
 - dims: inferred with one tiny aggregate when not given (the
   reference infers from the first file, tiff2octree.py:653-691);
-- blocks: ``blockify`` at leaf-grid granularity — 2^(nlevels-1)
-  blocks per axis, the reference's calc_optimal_nlevels arrangement
-  (tiff2octree.py:618-626);
-- pyramid: ``halve_blocks`` per level by default (D1-D3 kernels in
-  one grouped-map per parent block — a single packed-array shuffle
-  per level; ``fused=False`` keeps the byte-identical
-  ``downsample_voxels`` global-aggregate dual); every level reuses
-  the same leaf block DIMS, half the block COUNT per axis
-  (ktx/util.py:223-239), so level k lands at octree depth
-  nlevels-1-k — the root block is the lowest-resolution mip;
+- blocks: leaf-grid granularity — 2^(nlevels-1) blocks per axis, the
+  reference's calc_optimal_nlevels arrangement
+  (tiff2octree.py:618-626). Slice directories are cut into packed
+  tiles in-executor (``_slices_to_blocks``); DataFrame sources go
+  through ``densify`` + ``blockify``;
+- pyramid: one grouped-map per parent block and level — a single
+  packed-array shuffle per level: ``halve_blocks`` for the D1-D3
+  filters, ``assemble_halved_blocks`` after the per-block aa/spline3
+  kernels. Every level reuses the same leaf block DIMS, half the
+  block COUNT per axis (ktx/util.py:223-239), so level k lands at
+  octree depth nlevels-1-k — the root block is the lowest-resolution
+  mip;
 - sink: the ``tiff_blocks`` DataSource (A6 — octree-path ZLIB TIFF,
   skip-empty, sharded manifest commit: one immutable shard per level,
   sources/manifest.py);
@@ -52,7 +54,6 @@ from hortacloud_importer_spark.volume import (
     densify,
     mipmap_dimension,
     octree_path,
-    unblockify,
 )
 from hortacloud_importer_spark.operators.kernels import (
     KERNELS,
@@ -61,7 +62,6 @@ from hortacloud_importer_spark.operators.kernels import (
 from hortacloud_importer_spark.volume.downsample import (
     FILTERS,
     assemble_halved_blocks,
-    downsample_voxels,
     halve_blocks,
 )
 
@@ -177,11 +177,10 @@ def _slices_to_blocks(
             for row in pdf.itertuples():
                 z = int(row.z)
                 if z >= pz:
-                    # clip to the padded grid, like the densify grid
-                    # join does on the voxel-row path: a stray slice
-                    # past the grid (e.g. one channel listing more
-                    # files than the channel dims were inferred from)
-                    # must not alias onto an in-grid octree path
+                    # clip to the padded grid: a stray slice past the
+                    # grid (e.g. one channel listing more files than
+                    # the channel dims were inferred from) must not
+                    # alias onto an in-grid octree path
                     continue
                 h, w = int(row.height), int(row.width)
                 # uint16 is lossless for every supported slice source
@@ -509,7 +508,6 @@ def build_octree(
     origin_nm: tuple[float, float, float] = (0.0, 0.0, 0.0),
     voxel_size_um: tuple[float, float, float] = (1.0, 1.0, 1.0),
     write_transform: bool = True,
-    fused: bool = True,
 ) -> DataFrame:
     """Run the full slices -> octree-of-TIFF-blocks build.
 
@@ -545,30 +543,6 @@ def build_octree(
         if dims is None:
             # listing + one header walk, never a voxel aggregate
             dims = _infer_slice_dims(source, channels, suffix)
-        if not fused:
-            if channels == 1:
-                # any slice naming: every file in sorted order is a z
-                voxels = (
-                    spark.read.format("tiff_volume")
-                    .option("suffix", suffix)
-                    .load(source)
-                    .withColumn("channel", F.lit(0))
-                )
-            else:
-                # one scan per channel of the reference's
-                # default.{ch}.{z} naming; the channel option keeps z
-                # assignment per-channel
-                for ch in range(channels):
-                    scan = (
-                        spark.read.format("tiff_volume")
-                        .option("suffix", suffix)
-                        .option("channel", str(ch))
-                        .load(source)
-                        .withColumn("channel", F.lit(ch))
-                    )
-                    voxels = (
-                        scan if voxels is None else voxels.unionByName(scan)
-                    )
     else:
         voxels = source
         if dims is None:
@@ -602,7 +576,7 @@ def build_octree(
             voxels.agg(F.countDistinct("channel").alias("c")).first()["c"]
         )
     padded = tuple(b * leaf_grid for b in block_dims)
-    if isinstance(source, str) and fused:
+    if isinstance(source, str):
         # leaf ingest as packed tiles (one shuffle; y/x/z zero-pad on
         # the tile/block canvases — no densify grid join)
         blocks = _slices_to_blocks(
@@ -686,39 +660,27 @@ def build_octree(
         summary_rows.append((level, n_blocks, n_voxels))
         if level < nlevels - 1:
             if filter_ in FILTERS:
-                if fused:
-                    # mean/max/arthur at block granularity: assemble 8
-                    # sibling blocks per parent and halve in-executor —
-                    # ONE packed-array shuffle per level (see
-                    # halve_blocks; byte-identity with the global
-                    # aggregate pinned in tests/test_octree_pipeline)
-                    nxt = halve_blocks(
-                        blocks,
-                        filter_,
-                        # even dims: halve in place first so the level
-                        # shuffle moves child/8 bytes (SOAK.md)
-                        halve_first=not any(b % 2 for b in block_dims),
-                    )
-                else:
-                    # the single-hash-aggregate global voxel downsample
-                    child = downsample_voxels(
-                        unblockify(blocks), cur_dims, filter_
-                    )
-                    nxt = blockify(child, block_dims)
+                # mean/max/arthur at block granularity: assemble 8
+                # sibling blocks per parent and halve in-executor —
+                # ONE packed-array shuffle per level (see halve_blocks;
+                # values pinned by the NumPy-mirror tests in
+                # tests/test_octree_pipeline.py)
+                nxt = halve_blocks(
+                    blocks,
+                    filter_,
+                    # even dims: halve in place first so the level
+                    # shuffle moves child/8 bytes (SOAK.md)
+                    halve_first=not any(b % 2 for b in block_dims),
+                )
             else:
                 # neighborhood kernels (aa / spline3,
                 # tiff2octree.py:244-261): halve each block's payload
                 # with the grouped-map kernel, then re-assemble 8
-                # half-size siblings into full child blocks
-                halved = downsample_blocks_kernel(blocks, filter_)
-                if fused:
-                    # packed-array re-assembly, one shuffle (the dual
-                    # of blockify(unblockify(halved)))
-                    nxt = assemble_halved_blocks(halved)
-                else:
-                    # voxel-row re-assembly (the unblockify coords of a
-                    # halved block ARE the child resolution's globals)
-                    nxt = blockify(unblockify(halved), block_dims)
+                # half-size siblings into full child blocks with one
+                # packed-array shuffle
+                nxt = assemble_halved_blocks(
+                    downsample_blocks_kernel(blocks, filter_)
+                )
             cur_dims = tuple(mipmap_dimension(1, d) for d in cur_dims)
             prev, blocks = blocks, nxt
         else:

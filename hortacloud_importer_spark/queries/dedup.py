@@ -10,8 +10,6 @@ buckets so the candidate set stays bounded under skew.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1848,11 +1846,11 @@ def _pack_prefix_of(spark: SparkSession, d: DataFrame) -> DataFrame:
     # the checkpoint is cheap at any scale while the avoided recompute
     # is a full corpus pass (guide §3.3/§5: truncate duplicated
     # lineage; the jaccard posting-list checkpoint is the same move).
-    ranged = d.repartitionByRange(spark_parts, "doc_id").withColumn(
-        "_pid", F.spark_partition_id()
+    ranged = (
+        d.repartitionByRange(spark_parts, "doc_id")
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
     )
-    if os.environ.get("SPARK_GRAFT_PACK_CKPT", "1") != "0":
-        ranged = ranged.localCheckpoint()
     counts = ranged.groupBy("_pid").agg(F.sum("n").alias("_t"))
     w_off = Window.orderBy("_pid").rowsBetween(
         Window.unboundedPreceding, -1

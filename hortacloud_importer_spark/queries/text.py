@@ -879,26 +879,12 @@ def bigram_lm_bits(corpus: DataFrame, words: Column | None = None) -> DataFrame:
         )
         .select("doc_id", F.unhex(F.md5("g")).alias("gh"))
     )
-    # SPARK_GRAFT_PPX_CKPT=1 materializes the bigram-digest stream
-    # ONCE (guide §3.3/§5): bg feeds BOTH the count aggregate (the
-    # model) and the scoring join, so without truncation the tokenizer
-    # + per-bigram md5 run TWICE over the corpus — the round-15
-    # profile put ~95% of the query's executor time in those two
-    # identical passes. At 100 TB (saturated cluster, executor-time is
-    # the budget) the checkpoint deletes a full tokenize+hash corpus
-    # pass and is the production setting. Default OFF for the local
-    # bench (the round-15 interleaved toggle read the checkpoint 1.09x
-    # SLOWER at sf0.1, control 0.95): on an idle local[32] the two
-    # passes run as CONCURRENT AQE jobs on spare cores, so the
-    # recompute is wall-free there while the materialization
-    # serializes — a scale-dependent setting parameterised per the
-    # round rules, not a silent local tune. Same storage trade (and
-    # caveat: executor-local blocks, no lineage recompute) as the
-    # jaccard posting-list checkpoint (dedup.py::jaccard_pairs).
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PPX_CKPT", "0") == "1":
-        bg = bg.localCheckpoint()
+    # bg feeds BOTH the count aggregate (the model) and the scoring
+    # join, so the tokenizer + per-bigram md5 run twice over the
+    # corpus. Not checkpointed: a localCheckpoint of bg read 1.09x
+    # SLOWER at sf0.1 (round-15 interleaved A/B) — the two passes run
+    # as concurrent AQE jobs on spare cores, so the recompute costs no
+    # wall time while a materialization serializes.
     cnt = bg.groupBy("gh").agg(F.count("*").cast("bigint").alias("c"))
     return (
         bg.join(cnt, "gh")

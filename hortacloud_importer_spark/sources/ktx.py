@@ -259,38 +259,23 @@ def _viewer_metadata(
     return md
 
 
-_STATS_COLS = ("stats_percentiles", "stats_zero_count", "stats_total_count")
-
-
-def _channel_stats(row, level0_voxels: np.ndarray, downsample_intensity: bool):
-    """Stats for one channel: from the passthrough stats_* columns when
-    the pipeline computed them upstream (pre-requant — the reference
-    reports INPUT-intensity statistics), else from the level-0 payload
-    via the NumPy mirror of D4/D5/D10 (volume/geometry.py)."""
+def _channel_stats(voxels: np.ndarray, downsample_intensity: bool) -> dict:
+    """Stats for one channel of one block, from its INPUT intensities
+    (the reference reports pre-requant statistics) via the NumPy
+    mirror of D4/D5/D10 (volume/geometry.py); with
+    ``downsample_intensity`` also the requant black/white/gamma."""
     from hortacloud_importer_spark.volume import geometry as G
 
-    if row is not None and "stats_percentiles" in row and row["stats_percentiles"] is not None:
-        st = {
-            "percentiles": np.asarray(row["stats_percentiles"], dtype="int64"),
-            "zero_count": int(row["stats_zero_count"]),
-            "total_count": int(row["stats_total_count"]),
-        }
-    else:
-        v = np.asarray(level0_voxels, dtype="int64")
-        hist = np.bincount(v, minlength=G.N_BINS)
-        st = {
-            "percentiles": G.nonzero_percentiles(hist),
-            "zero_count": int(hist[0]),
-            "total_count": int(v.size),
-        }
+    v = np.asarray(voxels, dtype="int64").ravel()
+    hist = np.bincount(v, minlength=G.N_BINS)
+    st = {
+        "percentiles": G.nonzero_percentiles(hist),
+        "zero_count": int(hist[0]),
+        "total_count": int(v.size),
+    }
     if downsample_intensity:
-        if row is not None and "black_level" in row and row["black_level"] is not None:
-            st["black"] = float(row["black_level"])
-            st["white"] = float(row["white_level"])
-            st["gamma0"] = float(row["gamma0"])
-        else:
-            b, w, g = G.intensity_downsample_params(st["percentiles"])
-            st["black"], st["white"], st["gamma0"] = float(b), float(w), g
+        b, w, g = G.intensity_downsample_params(st["percentiles"])
+        st["black"], st["white"], st["gamma0"] = float(b), float(w), g
     return st
 
 
@@ -407,11 +392,7 @@ def ktx_encode_blocks(
     (ktx_from_rendered_tiff.py:147-251). The block's octree depth is
     taken from a ``depth`` input column when present (part of the
     group key), else 0 (a root-only conversion). Channel statistics
-    come from ``stats_percentiles``/``stats_zero_count``/
-    ``stats_total_count`` (+ ``black_level``/``white_level``/
-    ``gamma0``) passthrough columns when the pipeline computed them
-    upstream of a requant, else are derived from the level-0 payload
-    inside the encode task.
+    are derived from the level-0 payload inside the encode task.
     """
     dtype = np.uint8 if itemsize == 1 else np.uint16
     cols = pyramid_blocks.columns
@@ -432,7 +413,7 @@ def ktx_encode_blocks(
         st = None
         if geometry is not None:
             first = pdf.iloc[0]
-            st = _channel_stats(first, first["voxels"], dsi)
+            st = _channel_stats(first["voxels"], dsi)
         # whole-store conversions carry blocks at several octree
         # levels; same (zi,yi,xi) can exist at each, so the level
         # must ride the metadata (and the sink file name)
@@ -469,7 +450,7 @@ def ktx_encode_blocks(
             per_channel = []
             for c in chans:
                 row = lvl0[lvl0["channel"] == c].iloc[0]
-                per_channel.append(_channel_stats(row, row["voxels"], dsi))
+                per_channel.append(_channel_stats(row["voxels"], dsi))
         return pd.DataFrame(
             [
                 _interleaved_block_row(

@@ -102,8 +102,9 @@ def downsample_voxels(
 def np_child_indices(in_len: int) -> "object":
     """Vectorized :func:`child_index`: parent index -> child index for
     one axis (identical branch structure, NumPy instead of Catalyst).
-    Used by the in-executor block kernels (pipelines/ktx.py fused
-    path), where a block's voxels are already local to one task."""
+    Used by the in-executor block kernels (np_halve: the pyramid's
+    halve_blocks and pipelines/ktx.py::ktx_convert_blocks_fused),
+    where a block's voxels are already local to one task."""
     import numpy as np
 
     out_len = mipmap_dimension(1, in_len)
@@ -132,8 +133,8 @@ def np_halve(
 
     Bucketing is one bincount/maximum.at pass per reduction — no
     Python loops — so a 512^3 block halves in tens of milliseconds,
-    which is what makes the fused per-block KTX conversion a map-only
-    job instead of a shuffle cascade."""
+    which is what makes the per-block KTX conversion a map-only job
+    instead of a shuffle cascade."""
     import numpy as np
 
     vol = np.asarray(vol)
@@ -211,11 +212,13 @@ def halve_blocks(
       boundary spans two siblings), so the kernel validates and
       raises — callers with odd dims keep the assemble-first plan.
 
-    Equality with the global Catalyst downsample is pinned by the
-    fused-vs-unfused store byte-identity test
-    (tests/test_octree_pipeline.py) plus a direct halve_first-vs-
-    assemble-first equality test; np_halve itself is property-tested.
-    Missing octants (skip-empty store read-backs) densify to zero.
+    This is the only pyramid step of ``build_octree`` for the D1-D3
+    filters. Its stores are checked level by level against the NumPy
+    loop mirror (tests/test_octree_pipeline.py) and byte for byte
+    against recorded digests (tests/test_golden_store.py); a direct
+    halve_first-vs-assemble-first equality test pins the two plans,
+    and np_halve itself is property-tested. Missing octants
+    (skip-empty store read-backs) densify to zero.
     """
     if not halve_first:
         return _octant_regroup(blocks, lambda big: np_halve(big, filter_))
@@ -255,8 +258,8 @@ def halve_blocks(
                     raise ValueError(
                         "halve_first uint16 payload overflow "
                         f"(max {int(out.max())}): the source has "
-                        ">16-bit intensities; build with fused=False "
-                        "or pre-requantize to uint16"
+                        ">16-bit intensities; requantize it to 16 bits "
+                        "or fewer before the build"
                     )
                 rows.append(
                     {

@@ -279,8 +279,9 @@ def intensity_downsample_params(
     Moments come from exact integer sums (s1, s2 fit a double exactly:
     76 band entries <= 65535) folded through the SAME float64
     expression tree as the Catalyst/DuckDB one-pass form
-    (operators/requant.band_moments), so the fused in-executor kernels
-    and the distributed aggregates produce bit-identical params — a
+    (operators/requant.band_moments), so the in-executor KTX kernel
+    and the distributed channel-statistics query (queries/flagship.py)
+    produce bit-identical params — a
     two-pass sum((x-mean)^2) differs by an ulp, which a FLOOR at an
     integer boundary would amplify into a one-level white_level split
     between the two paths."""
@@ -308,8 +309,9 @@ def requantize(
     per-slice transform (ktx_from_rendered_tiff.py:346-365): shift by
     the black level, floor small values at 1, preserve zero as
     no-data, scale into [0,1], gamma-correct, expand to 0-254, ceil.
-    The distributed dual is the Catalyst F.transform lambda in
-    pipelines/ktx.py::requantize_blocks."""
+    The KTX conversion kernel
+    (pipelines/ktx.py::ktx_convert_blocks_fused) calls this per block
+    and channel; it is the only requantization path."""
     v = np.asarray(values)
     t = v.astype("float64") - black
     t[t <= 1] = 1

@@ -122,13 +122,18 @@ def test_rep_loop_steal_defenses_present():
         assert f'host["{stamp}"]' in src
 
 
-def test_bench_ab_runs_both_sides_in_one_cache_mode(tmp_path, monkeypatch):
+def _load_bench_ab():
     spec = importlib.util.spec_from_file_location(
         "bench_ab_module",
         os.path.join(os.path.dirname(_BENCH_PATH), "tools", "bench_ab.py"),
     )
     bench_ab = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench_ab)
+    return bench_ab
+
+
+def test_bench_ab_runs_both_sides_in_one_cache_mode(tmp_path, monkeypatch):
+    bench_ab = _load_bench_ab()
     old = tmp_path / "old"
     old.mkdir()
     (old / "bench.py").write_text("reps = 3\n")
@@ -143,3 +148,44 @@ def test_bench_ab_runs_both_sides_in_one_cache_mode(tmp_path, monkeypatch):
         'cold = os.environ.get("SPARK_GRAFT_BENCH_COLDCACHE", "1")\n'
     )
     assert bench_ab.coldcache_mode(str(old)) == "1"
+
+
+def test_bench_ab_screens_both_sides_on_kept_pass_steal(monkeypatch):
+    """Both A/B sides are screened by one rule: the worst KEPT rep pass
+    (host.steal_cps_reps) when the revision's bench.py emits it, else
+    the harness average — never host.steal_cps, which still counts
+    passes bench.py discarded. The metric used is recorded per run."""
+    import json
+    from types import SimpleNamespace
+
+    bench_ab = _load_bench_ab()
+    payload = {}
+    clock = iter([100.0, 110.0] * 3)  # each run spans 10 s
+    steal = iter([50.0, 58.0] * 3)  # 8 s of steal per run: 0.8 vCPUs
+
+    def fake_run(cmd, **kw):
+        line = json.dumps({"value": 30.0, "queries": {}, **payload})
+        return SimpleNamespace(returncode=0, stdout=line + "\n", stderr="")
+
+    monkeypatch.setattr(bench_ab, "calib_spin", lambda: bench_ab.REF_CALIB)
+    monkeypatch.setattr(bench_ab, "read_steal_sec", lambda: next(steal))
+    monkeypatch.setattr(bench_ab, "time", SimpleNamespace(time=lambda: next(clock)))
+    monkeypatch.setattr(bench_ab, "subprocess", SimpleNamespace(run=fake_run))
+
+    # a revision with the per-pass stamps: its worst kept pass screens
+    payload["host"] = {"steal_cps": 0.9, "steal_cps_reps": [0.1, None, 0.3]}
+    new = bench_ab.run_bench("tree", "0")
+    assert new["harness_steal_cps"] == 0.8
+    assert (new["effective_steal_cps"], new["steal_metric"]) == (
+        0.3, "host.steal_cps_reps_max"
+    )
+    assert new["effective_steal_cps"] <= bench_ab.STEAL_DISCARD_CPS
+
+    # a revision without them (or with no readable pass): the harness
+    # average screens
+    for host in ({"steal_cps": 0.9}, {"steal_cps_reps": [None]}):
+        payload["host"] = host
+        old = bench_ab.run_bench("tree", "0")
+        assert (old["effective_steal_cps"], old["steal_metric"]) == (
+            0.8, "harness_steal_cps"
+        )

@@ -1,12 +1,13 @@
-"""The fused per-block KTX converter (pipelines/ktx.py::
-ktx_convert_blocks_fused): byte-identical to the distributed-aggregate
-path across every pass-2 option, with a map-only physical plan.
+"""The per-block KTX converter (pipelines/ktx.py::
+ktx_convert_blocks_fused) across every pass-2 option, checked against
+an independent NumPy reference, and its map-only physical plan.
 
 The reference's KTX pass is one task per octree node
-(ktx_from_rendered_tiff.py:331-427); the fused path keeps that
+(ktx_from_rendered_tiff.py:331-427); the converter keeps that
 block-locality — stats, requant, XY halving, mip chain, and encode all
-run inside one executor kernel — so the single-channel conversion
-plans with ZERO exchanges at any store size."""
+run inside one executor kernel that reads its block's file(s) — so
+the single-channel conversion plans with no payload exchange at any
+store size."""
 
 from __future__ import annotations
 
@@ -20,7 +21,12 @@ from hortacloud_importer_spark.pipelines import (
     build_octree,
     tiff_octree_to_ktx,
 )
+from hortacloud_importer_spark.sources.ktx import decode_ktx
+from hortacloud_importer_spark.volume import geometry as G
 from hortacloud_importer_spark.volume import synthetic_volume
+
+from tests.test_octree_pipeline import dense_volume, expected_blocks
+from tests.test_volume import np_downsample
 
 
 @pytest.fixture(scope="module")
@@ -33,8 +39,8 @@ def store(spark, tmp_path_factory):
     return root
 
 
-def _convert(spark, store, tmp, fused, **kw):
-    out = str(tmp / f"ktx_{fused}_{'_'.join(sorted(kw))}")
+def _convert(spark, store, tmp, **kw):
+    out = str(tmp / f"ktx_{'_'.join(sorted(kw))}")
     tiff_octree_to_ktx(
         spark,
         store,
@@ -42,7 +48,6 @@ def _convert(spark, store, tmp, fused, **kw):
         block_dims=(8, 8, 8),
         n_mips=3,
         filter_="arthur",
-        fused=fused,
         **kw,
     ).count()
     return out
@@ -55,6 +60,58 @@ def _files(root):
     }
 
 
+def _expected_ktx(vols, n_mips, downsample_intensity=False,
+                  downsample_xy=False, interleave=False):
+    """{file name: (mip arrays, per-channel input percentiles)} of a
+    16^3 / 2-level arthur store, from NumPy alone: the octree's blocks
+    from the loop mirror, requant via volume.geometry, XY halving and
+    the mip chain via the loop mirror. Interleaved mips are
+    (z, y, x, channel)."""
+    blocks = expected_blocks(vols, 2, (8, 8, 8), "arthur")
+    per_file = {}
+    for (depth, zi, yi, xi, ch), blk in sorted(blocks.items()):
+        pct = G.nonzero_percentiles(np.bincount(blk.ravel(), minlength=G.N_BINS))
+        arr = blk
+        if downsample_intensity:
+            arr = G.requantize(arr, *G.intensity_downsample_params(pct))
+        if downsample_xy:
+            arr = np_downsample(arr, "arthur", axes=(False, True, True))
+        mips = [arr]
+        for _ in range(1, n_mips):
+            mips.append(np_downsample(mips[-1], "arthur"))
+        tag = f"_d{depth}" if depth else ""
+        name = f"block_{zi}_{yi}_{xi}{tag}_ch{-1 if interleave else ch}.ktx"
+        per_file.setdefault(name, []).append((mips, pct))
+    return {
+        name: (
+            [np.stack([c[0][lv] for c in chans], axis=-1) for lv in range(n_mips)],
+            [c[1] for c in chans],
+        )
+        for name, chans in per_file.items()
+    }
+
+
+def _assert_ktx(out_dir, want, itemsize):
+    from hortacloud_importer_spark.sources.ktx import GL_UNSIGNED_BYTE
+
+    got = _files(out_dir)
+    assert sorted(got) == sorted(want)
+    dtype = np.uint8 if itemsize == 1 else np.uint16
+    for name, (mips, pcts) in want.items():
+        header, payloads = decode_ktx(got[name])
+        assert (header.gl_type == GL_UNSIGNED_BYTE) == (itemsize == 1)
+        assert len(payloads) == len(mips), name
+        for lv, (raw, m) in enumerate(zip(payloads, mips)):
+            arr = np.frombuffer(raw, dtype=dtype)
+            assert np.array_equal(arr, m.ravel()), (name, lv)
+        # the header's quantiles describe the INPUT intensities
+        for c, pct in enumerate(pcts):
+            key = f"channel_{c}_intensity_quantiles".encode()
+            assert header.metadata[key].rstrip(b"\x00").decode() == str(
+                [int(pct[10 * p]) for p in range(11)]
+            ), (name, c)
+
+
 @pytest.mark.parametrize(
     "kw",
     [
@@ -64,56 +121,40 @@ def _files(root):
     ids=["requant_xy_metadata", "interleave"],
 )
 def test_fused_matches_unfused_byte_for_byte(spark, store, tmp_path, kw):
-    a = _files(_convert(spark, store, tmp_path, True, **kw))
-    b = _files(_convert(spark, store, tmp_path, False, **kw))
-    assert sorted(a) == sorted(b) and len(a) == 9
-    assert all(a[f] == b[f] for f in a)
+    """Every mip of every KTX file equals the NumPy reference, and the
+    header quantiles describe the input block. The name predates the
+    removal of the distributed-aggregate conversion it was compared
+    with."""
+    vols = dense_volume(
+        synthetic_volume(spark, 16, 16, 16, zero_fraction_mod=5),
+        (16, 16, 16),
+    )
+    want = _expected_ktx(vols, 3, **kw)
+    assert len(want) == 9
+    _assert_ktx(
+        _convert(spark, store, tmp_path, **kw),
+        want,
+        1 if kw.get("downsample_intensity") else 2,
+    )
 
 
 def test_fused_single_channel_plan_has_no_exchange(spark, store):
-    """The structural point of the fused path: one map stage, no
-    shuffle — the conversion scales as a pure map job."""
+    """The plan tiff_octree_to_ktx runs for one channel: MapInPandas
+    over per-file PATH rows — no grouped map, no hash exchange, and
+    no scan column carrying file content."""
     from hortacloud_importer_spark.pipelines.ktx import (
+        _block_file_groups,
         ktx_convert_blocks_fused,
     )
-    from hortacloud_importer_spark.sources.block_store import (
-        read_tiff_block_store,
-    )
 
-    blocks = read_tiff_block_store(spark, store)
-    plan = (
-        ktx_convert_blocks_fused(blocks, n_mips=3, filter_="arthur")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange hashpartitioning" not in plan
+    rows = _block_file_groups(spark, store, per_channel=True)
+    out = ktx_convert_blocks_fused(rows, store, n_mips=3, filter_="arthur")
+    assert out.count() == 9
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
-
-
-def test_np_halve_axes_variant_matches_catalyst_xy(spark):
-    """np_halve(axes=(False, True, True)) == downsample_blocks_xy on
-    the same block (the XY-only first-mip option, ktx/util.py:184-192).
-    """
-    from hortacloud_importer_spark.pipelines.ktx import downsample_blocks_xy
-    from hortacloud_importer_spark.volume.downsample import np_halve
-
-    rng = np.random.default_rng(3)
-    vol = rng.integers(0, 1 << 16, size=(4, 6, 5)).astype(np.int64)
-    vol[rng.random(size=vol.shape) < 0.3] = 0
-    rows = [(0, 0, 0, 0, [4, 6, 5], [int(v) for v in vol.ravel()])]
-    blocks = spark.createDataFrame(
-        rows,
-        "zi int, yi int, xi int, channel int, shape array<int>,"
-        " voxels array<int>",
-    )
-    for filt in ("mean", "max", "arthur"):
-        got = downsample_blocks_xy(blocks, (4, 6, 5), filt).first()
-        want = np_halve(vol, filt, axes=(False, True, True))
-        assert tuple(got["shape"]) == want.shape
-        assert np.array_equal(
-            np.asarray(got["voxels"]).reshape(want.shape), want
-        ), filt
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "Exchange hashpartitioning" not in plan
+    assert "content" not in plan
 
 
 def test_delete_source_reclaims_store_after_commit(spark, tmp_path):
@@ -189,21 +230,21 @@ def store2ch(spark, tmp_path_factory):
 def test_filegroup_interleave_matches_unfused_byte_for_byte(
     spark, store2ch, tmp_path
 ):
-    """SOAK.md finding: the payload-grouped interleave shuffled every
-    decoded block. The fused pipeline now plans per-block FILE groups
-    (paths shuffle, payloads don't) — output must stay byte-identical
-    to the distributed dual, now over a genuinely multi-channel
-    store."""
-    a = _files(
-        _convert(spark, store2ch, tmp_path, True, interleave=True,
-                 downsample_intensity=True)
+    """SOAK.md finding: a payload-grouped interleave shuffled every
+    decoded block. The converter plans per-block FILE groups (paths
+    shuffle, payloads don't); the interleaved, requantized output of a
+    genuinely multi-channel store must match the NumPy reference. The
+    name predates the removal of the distributed-aggregate conversion
+    it was compared with."""
+    vols = dense_volume(
+        synthetic_volume(spark, 16, 16, 16, channels=2, zero_fraction_mod=5),
+        (16, 16, 16),
+        channels=2,
     )
-    b = _files(
-        _convert(spark, store2ch, tmp_path, False, interleave=True,
-                 downsample_intensity=True)
-    )
-    assert sorted(a) == sorted(b) and len(a) == 9
-    assert all(a[f] == b[f] for f in a)
+    kw = {"interleave": True, "downsample_intensity": True}
+    want = _expected_ktx(vols, 3, **kw)
+    assert len(want) == 9
+    _assert_ktx(_convert(spark, store2ch, tmp_path, **kw), want, 1)
 
 
 def test_filegroup_interleave_shuffles_paths_not_payloads(spark, store2ch):
@@ -217,8 +258,7 @@ def test_filegroup_interleave_shuffles_paths_not_payloads(spark, store2ch):
 
     groups = _block_file_groups(spark, store2ch)
     out = ktx_convert_blocks_fused(
-        groups, n_mips=3, filter_="arthur", interleave=True,
-        store_root=store2ch,
+        groups, store2ch, n_mips=3, filter_="arthur", interleave=True
     )
     out.count()
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -299,10 +339,9 @@ def test_ktx_resume_skips_committed_blocks(spark, store, tmp_path):
 
 
 def test_ktx_resume_never_opens_committed_source_blocks(spark, store, tmp_path):
-    """Resume must be payload-free in fused mode: after converting
-    depth 1, CORRUPT those source blocks — a resume that re-read them
-    would crash; the path-level anti-join completes and converts only
-    the root."""
+    """Resume must be payload-free: after converting depth 1, CORRUPT
+    those source blocks — a resume that re-read them would crash; the
+    path-level anti-join completes and converts only the root."""
     import glob as _glob
     import os
 
@@ -364,8 +403,8 @@ def test_block_file_groups_skip_stray_tif(spark, tmp_path):
 
     # and the fused conversion over those groups completes
     out = ktx_convert_blocks_fused(
-        _block_file_groups(spark, root), n_mips=2, filter_="arthur",
-        interleave=True, store_root=root,
+        _block_file_groups(spark, root), root, n_mips=2, filter_="arthur",
+        interleave=True,
     )
     assert out.count() == 1
 
@@ -374,8 +413,6 @@ def test_fused_filegroups_names_offending_path(spark):
     """If a non-conforming path ever reaches the fused kernel (e.g. a
     caller-built group row), the error names the file instead of an
     opaque AttributeError."""
-    from pyspark.sql import functions as F
-
     from hortacloud_importer_spark.pipelines.ktx import (
         ktx_convert_blocks_fused,
     )
@@ -385,8 +422,7 @@ def test_fused_filegroups_names_offending_path(spark):
         "zi int, yi int, xi int, depth int, paths array<string>",
     )
     out = ktx_convert_blocks_fused(
-        rows, n_mips=2, filter_="arthur", interleave=True,
-        store_root="/nowhere",
+        rows, "/nowhere", n_mips=2, filter_="arthur", interleave=True
     )
     with pytest.raises(Exception, match="default.<channel>.tif"):
         out.count()
@@ -400,7 +436,7 @@ def test_ktx_lz4_side_compression_roundtrip(spark, store, tmp_path):
     uncompressed store's."""
     from hortacloud_importer_spark.sources.ktx import ktx_decode_blocks
 
-    plain = _convert(spark, store, tmp_path, True)
+    plain = _convert(spark, store, tmp_path)
     lz = str(tmp_path / "ktx_lz4")
     tiff_octree_to_ktx(
         spark, store, lz, block_dims=(8, 8, 8), n_mips=3,

@@ -11,8 +11,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources.ktx import (
     GL_UNSIGNED_BYTE,
@@ -297,33 +295,3 @@ def test_octree_to_ktx_without_transform_keeps_plain_metadata(spark, tmp_path):
         "block_zyx", "channel", "depth",
     ]
     assert not (tmp_path / "ktx_plain" / "transform.txt").exists()
-
-
-@pytest.mark.parametrize("seed", [61])
-def test_requant_plan_is_catalyst_transform(spark, seed):
-    """The requant path must stay JVM-side: no Python eval in the
-    voxel transform (the only Python stage is the final encode)."""
-    from hortacloud_importer_spark.pipelines.ktx import (
-        channel_block_stats,
-        requantize_blocks,
-    )
-
-    rng = np.random.default_rng(seed)
-    vox = rng.integers(0, 60000, 64).astype(int).tolist()
-    blocks = spark.createDataFrame(
-        [(0, 0, 0, 0, [4, 4, 4], vox)],
-        "zi int, yi int, xi int, channel int, shape array<int>,"
-        " voxels array<int>",
-    )
-    stats = channel_block_stats(blocks)
-    out = requantize_blocks(blocks, stats)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-    # and the values equal the NumPy mirror
-    row = out.first()
-    v = np.asarray(vox)
-    hist = np.bincount(v, minlength=G.N_BINS)
-    pct = G.nonzero_percentiles(hist)
-    b, w, g = G.intensity_downsample_params(pct)
-    assert row["voxels"] == G.requantize(v, b, w, g).astype(int).tolist()

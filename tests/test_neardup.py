@@ -370,36 +370,3 @@ def test_simhash_budget_matches_duckdb_when_budget_fires(spark):
     assert max(per_doc.values()) <= 2
     assert per_doc[0] == 2
     assert {(a, b) for a, b, _ in got if a == 0} == {(0, 1), (0, 2)}
-
-
-def test_minhash_pairs_sig_through_toggle_is_equivalent(
-    spark, corpus, monkeypatch
-):
-    """SPARK_GRAFT_MINHASH_SIG_THROUGH flips between the round-14
-    sig-through-band-join shape and the round-15 id-only banding +
-    sig join-back default. est_jaccard is a deterministic function of
-    the pair, so the two shapes must return the SAME row set — this is
-    the equivalence that lets the A/B toggle exist without an oracle
-    re-derivation per side."""
-
-    def rows(flag: str):
-        monkeypatch.setenv("SPARK_GRAFT_MINHASH_SIG_THROUGH", flag)
-        return sorted(
-            (r["doc_a"], r["doc_b"], r["est_jaccard"])
-            for r in minhash_pairs(
-                _shingles(corpus), n_hashes=32, bands=8
-            ).collect()
-        )
-
-    assert rows("0") == rows("1")
-    # and with the production bucket cap engaged
-    def rows_capped(flag: str):
-        monkeypatch.setenv("SPARK_GRAFT_MINHASH_SIG_THROUGH", flag)
-        return sorted(
-            (r["doc_a"], r["doc_b"], r["est_jaccard"])
-            for r in minhash_pairs(
-                _shingles(corpus), n_hashes=32, bands=8, bucket_cap=2
-            ).collect()
-        )
-
-    assert rows_capped("0") == rows_capped("1")

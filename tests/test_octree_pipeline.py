@@ -5,6 +5,7 @@ main-program flow (tiff2octree.py:1236-1366) as one composition."""
 from __future__ import annotations
 
 import glob
+import os
 
 import numpy as np
 import pytest
@@ -311,168 +312,160 @@ def test_optimal_nlevels_matches_reference_rule():
     assert optimal_nlevels((2048, 512, 128)) == 2
 
 
+def _stored_blocks(root):
+    """{(depth, zi, yi, xi, channel): block} for every block file of an
+    octree store, with the coordinates read off the path digits."""
+    out = {}
+    for p in glob.glob(f"{root}/**/default.*.tif", recursive=True):
+        parts = os.path.relpath(p, root).split(os.sep)
+        zi = yi = xi = 0
+        for digit in parts[:-1]:
+            o = int(digit) - 1
+            zi, yi, xi = 2 * zi + (o >> 2 & 1), 2 * yi + (o >> 1 & 1), 2 * xi + (o & 1)
+        ch = int(parts[-1].split(".")[1])
+        with open(p, "rb") as fh:
+            block = decode_tiff(fh.read())[..., 0]
+        out[(len(parts) - 1, zi, yi, xi, ch)] = block.astype(np.int64)
+    return out
+
+
+def expected_blocks(vols, nlevels, block_dims, filter_):
+    """The same map from NumPy alone: each channel's zero-padded dense
+    volume halved level by level with the loop mirror
+    (tests/test_volume.py::np_downsample), cut into ``block_dims``
+    blocks, all-zero blocks skipped."""
+    from tests.test_volume import np_downsample
+
+    bz, by, bx = block_dims
+    out = {}
+    for ch, vol in enumerate(vols):
+        for level in range(nlevels):
+            if level:
+                vol = np_downsample(vol, filter_)
+            gz, gy, gx = vol.shape[0] // bz, vol.shape[1] // by, vol.shape[2] // bx
+            for zi in range(gz):
+                for yi in range(gy):
+                    for xi in range(gx):
+                        blk = vol[
+                            zi * bz : (zi + 1) * bz,
+                            yi * by : (yi + 1) * by,
+                            xi * bx : (xi + 1) * bx,
+                        ]
+                        if blk.any():
+                            key = (nlevels - 1 - level, zi, yi, xi, ch)
+                            out[key] = blk.astype(np.int64)
+    return out
+
+
+def _assert_store(root, want):
+    got = _stored_blocks(root)
+    assert sorted(got) == sorted(want)
+    for k in want:
+        assert np.array_equal(got[k], want[k]), k
+
+
+def dense_volume(voxels, dims, channels=1):
+    """A voxels DataFrame collected into a (channel, z, y, x) array."""
+    out = np.zeros((channels, *dims), dtype=np.int64)
+    for r in voxels.collect():
+        out[r["channel"], r["z"], r["y"], r["x"]] = r["intensity"]
+    return out
+
+
 @pytest.mark.parametrize("filt", ["arthur", "mean", "max"])
 def test_fused_build_matches_global_aggregate_byte_for_byte(
     spark, tmp_path, filt
 ):
     """halve_blocks (grouped-map per parent block, one packed-array
-    shuffle per level) produces the same store, byte for byte, as the
-    global unblockify->downsample_voxels->blockify chain — including
-    odd block extents (dims 20^3 / 3 levels -> 5^3 blocks), where the
-    equality rests on 2x2x2 cubes never crossing a parent's region."""
-    import os
-
+    shuffle per level) stores every level exactly as the NumPy loop
+    mirror halves the whole dense volume — including odd block
+    extents (dims 20^3 / 3 levels -> 5^3 blocks, the assemble-first
+    plan), where the equality rests on 2x2x2 cubes never crossing a
+    parent's region. The name predates the removal of the global
+    aggregate build path; the reference is now the loop mirror."""
     from hortacloud_importer_spark.pipelines import build_octree
     from hortacloud_importer_spark.volume import synthetic_volume
 
-    stores = []
-    for fused in (True, False):
-        out = str(tmp_path / f"store_{filt}_{fused}")
-        v = synthetic_volume(spark, 20, 20, 20, zero_fraction_mod=4)
-        build_octree(
-            spark,
-            v,
-            out,
-            nlevels=3,
-            filter_=filt,
-            dims=(20, 20, 20),
-            fused=fused,
-        ).count()
-        stores.append(out)
-    a, b = stores
-    fa = sorted(
-        os.path.relpath(p, a)
-        for p in glob.glob(f"{a}/**/*.tif", recursive=True)
+    out = str(tmp_path / f"store_{filt}")
+    v = synthetic_volume(spark, 20, 20, 20, zero_fraction_mod=4)
+    build_octree(
+        spark, v, out, nlevels=3, filter_=filt, dims=(20, 20, 20)
+    ).count()
+    want = expected_blocks(
+        dense_volume(v, (20, 20, 20)), 3, (5, 5, 5), filt
     )
-    fb = sorted(
-        os.path.relpath(p, b)
-        for p in glob.glob(f"{b}/**/*.tif", recursive=True)
-    )
-    assert fa == fb and fa
-    for f in fa:
-        assert (
-            open(os.path.join(a, f), "rb").read()
-            == open(os.path.join(b, f), "rb").read()
-        ), f
+    _assert_store(out, want)
 
 
 def test_fused_kernel_build_matches_voxel_row_assembly(spark, tmp_path):
-    """assemble_halved_blocks (packed re-assembly after the aa/spline3
-    per-block kernels) produces the same store byte-for-byte as the
-    blockify(unblockify(...)) voxel-row path."""
-    import os
-
+    """assemble_halved_blocks (packed re-assembly after the aa
+    per-block kernel) places each halved leaf at its octant of the
+    root: the root equals ``_kernel_aa`` applied per leaf block and
+    tiled; the leaves are the source blocks. The name predates the
+    removal of the voxel-row assembly; the reference is now NumPy."""
+    from hortacloud_importer_spark.operators.kernels import _kernel_aa
     from hortacloud_importer_spark.pipelines import build_octree
     from hortacloud_importer_spark.volume import synthetic_volume
 
-    stores = []
-    for fused in (True, False):
-        out = str(tmp_path / f"kstore_{fused}")
-        v = synthetic_volume(spark, 16, 16, 16, zero_fraction_mod=5)
-        build_octree(
-            spark,
-            v,
-            out,
-            nlevels=2,
-            filter_="aa",
-            dims=(16, 16, 16),
-            fused=fused,
-        ).count()
-        stores.append(out)
-    a, b = stores
-    fa = sorted(
-        os.path.relpath(p, a)
-        for p in glob.glob(f"{a}/**/*.tif", recursive=True)
-    )
-    fb = sorted(
-        os.path.relpath(p, b)
-        for p in glob.glob(f"{b}/**/*.tif", recursive=True)
-    )
-    assert fa == fb and fa
-    for f in fa:
-        assert (
-            open(os.path.join(a, f), "rb").read()
-            == open(os.path.join(b, f), "rb").read()
-        ), f
+    out = str(tmp_path / "kstore")
+    v = synthetic_volume(spark, 16, 16, 16, zero_fraction_mod=5)
+    build_octree(
+        spark, v, out, nlevels=2, filter_="aa", dims=(16, 16, 16)
+    ).count()
+    leaves = {
+        k: b
+        for k, b in expected_blocks(
+            dense_volume(v, (16, 16, 16)), 2, (8, 8, 8), "max"
+        ).items()
+        if k[0] == 1
+    }
+    root = np.zeros((8, 8, 8), dtype=np.int64)
+    for (_, zi, yi, xi, _), blk in leaves.items():
+        root[
+            zi * 4 : zi * 4 + 4, yi * 4 : yi * 4 + 4, xi * 4 : xi * 4 + 4
+        ] = _kernel_aa(blk)
+    _assert_store(out, {**leaves, (0, 0, 0, 0, 0): root})
 
 
 def test_fused_slice_ingest_matches_voxel_path(spark, tmp_path):
-    """The packed-tile leaf ingest (_slices_to_blocks) builds the same
-    store, byte for byte, as the voxel-row scan + densify + blockify
-    path — odd dims exercise the y/x/z canvas padding."""
-    import os
-
+    """The packed-tile leaf ingest (_slices_to_blocks) stores the
+    zero-padded source — odd dims exercise the y/x/z canvas padding —
+    and the pyramid above it matches the NumPy mirror. The name
+    predates the removal of the voxel-row ingest; the reference is
+    now NumPy."""
     from hortacloud_importer_spark.pipelines import build_octree
 
     rng = np.random.default_rng(31)
     vol = rng.integers(0, 60000, (7, 6, 5)).astype(np.uint16)
     _write_slices(tmp_path / "fslices", list(vol))
-    stores = []
-    for fused in (True, False):
-        out = str(tmp_path / f"fstore_{fused}")
-        build_octree(
-            spark,
-            str(tmp_path / "fslices"),
-            out,
-            nlevels=2,
-            filter_="max",
-            fused=fused,
-        ).count()
-        stores.append(out)
-    a, b = stores
-    fa = sorted(
-        os.path.relpath(p, a)
-        for p in glob.glob(f"{a}/**/*.tif", recursive=True)
-    )
-    fb = sorted(
-        os.path.relpath(p, b)
-        for p in glob.glob(f"{b}/**/*.tif", recursive=True)
-    )
-    assert fa == fb and fa
-    for f in fa:
-        assert (
-            open(os.path.join(a, f), "rb").read()
-            == open(os.path.join(b, f), "rb").read()
-        ), f
+    out = str(tmp_path / "fstore")
+    build_octree(
+        spark, str(tmp_path / "fslices"), out, nlevels=2, filter_="max"
+    ).count()
+    padded = np.zeros((8, 6, 6), dtype=np.int64)
+    padded[:7, :, :5] = vol
+    _assert_store(out, expected_blocks([padded], 2, (4, 3, 3), "max"))
 
 
 def test_fused_ingest_clips_slices_beyond_padded_grid(spark, tmp_path):
-    """A slice dir with more files than the caller's dims must clip in
-    the fused tile ingest exactly like the voxel path's densify grid
-    join — a stray z would otherwise alias onto an in-grid octree
-    path."""
-    import os
-
+    """A slice dir with more files than the caller's dims: slices past
+    the padded grid are dropped — a stray z would otherwise alias onto
+    an in-grid octree path — while slices inside the padding are
+    kept."""
     from hortacloud_importer_spark.pipelines import build_octree
 
     rng = np.random.default_rng(37)
     vol = rng.integers(1, 60000, (9, 6, 5)).astype(np.uint16)
     _write_slices(tmp_path / "clipslices", list(vol))  # 9 files, dims say 7
-    stores = []
-    for fused in (True, False):
-        out = str(tmp_path / f"clipstore_{fused}")
-        build_octree(
-            spark,
-            str(tmp_path / "clipslices"),
-            out,
-            nlevels=2,
-            filter_="max",
-            dims=(7, 6, 5),
-            fused=fused,
-        ).count()
-        stores.append(out)
-    a, b = stores
-    fa = sorted(
-        os.path.relpath(p, a)
-        for p in glob.glob(f"{a}/**/*.tif", recursive=True)
-    )
-    fb = sorted(
-        os.path.relpath(p, b)
-        for p in glob.glob(f"{b}/**/*.tif", recursive=True)
-    )
-    assert fa == fb and fa
-    for f in fa:
-        assert (
-            open(os.path.join(a, f), "rb").read()
-            == open(os.path.join(b, f), "rb").read()
-        ), f
+    out = str(tmp_path / "clipstore")
+    build_octree(
+        spark,
+        str(tmp_path / "clipslices"),
+        out,
+        nlevels=2,
+        filter_="max",
+        dims=(7, 6, 5),
+    ).count()
+    padded = np.zeros((8, 6, 6), dtype=np.int64)
+    padded[:, :, :5] = vol[:8]
+    _assert_store(out, expected_blocks([padded], 2, (4, 3, 3), "max"))

@@ -241,24 +241,6 @@ def test_join_suite_facets_keep_their_strategies(spark, sf_dir):
     assert "row_number" in plan  # the as-of top-1
 
 
-def test_block_mip_chain_is_hash_aggregates_only(spark):
-    """The per-block mip chain (pipelines/ktx.py) must be hash
-    aggregates keyed by block coords — no SinglePartition exchange,
-    no window — so a 100 TB octree's chains scale with its blocks."""
-    from pyspark.sql import functions as F
-
-    from hortacloud_importer_spark.pipelines import block_mip_chain
-    from hortacloud_importer_spark.volume import blockify, synthetic_volume
-
-    blocks = blockify(synthetic_volume(spark, 8, 8, 8), (4, 4, 4))
-    chain = block_mip_chain(blocks, (4, 4, 4), n_mips=3, filter_="max")
-    chain.collect()
-    plan = chain._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" not in plan
-    assert "Window" not in plan
-    assert "HashAggregate" in plan
-
-
 def test_halve_blocks_is_single_packed_shuffle(spark):
     """The fused pyramid step must plan exactly ONE exchange (the
     parent-block regroup of packed arrays) — no voxel-row explode, no
@@ -357,8 +339,11 @@ def test_halve_first_rejects_17bit_values(spark):
          for z in range(2) for y in range(2) for x in range(2)],
         schema,
     )
-    with pytest.raises(Exception, match="overflow"):
+    with pytest.raises(Exception, match="overflow") as err:
         halve_blocks(blocks, "max", halve_first=True).collect()
+    # the remedy it names must exist: requantize, not a removed flag
+    assert "fused" not in str(err.value)
+    assert "requantize" in str(err.value)
     # the assemble-first plan narrows only at the sink, so it still works
     assert halve_blocks(blocks, "max").count() == 1
 

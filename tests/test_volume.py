@@ -42,20 +42,27 @@ def np_child_index(j: int, in_len: int) -> int:
     return (j - 1) // 2
 
 
-def np_downsample(vol: np.ndarray, filter_: str) -> np.ndarray:
-    dz, dy, dx = vol.shape
-    oz, oy, ox = (mipmap_dimension(1, d) for d in vol.shape)
+def np_downsample(
+    vol: np.ndarray,
+    filter_: str,
+    axes: tuple[bool, bool, bool] = (True, True, True),
+) -> np.ndarray:
+    """One halving step; an axis whose ``axes`` entry is False keeps
+    its extent (identity child map), the XY-only first-mip option."""
+    maps = [
+        [np_child_index(j, d) if h else j for j in range(d)]
+        for d, h in zip(vol.shape, axes)
+    ]
+    odims = tuple(
+        mipmap_dimension(1, d) if h else d for d, h in zip(vol.shape, axes)
+    )
     buckets: dict[tuple[int, int, int], list[int]] = {}
-    for z in range(dz):
-        for y in range(dy):
-            for x in range(dx):
-                key = (
-                    np_child_index(z, dz),
-                    np_child_index(y, dy),
-                    np_child_index(x, dx),
-                )
+    for z in range(vol.shape[0]):
+        for y in range(vol.shape[1]):
+            for x in range(vol.shape[2]):
+                key = (maps[0][z], maps[1][y], maps[2][x])
                 buckets.setdefault(key, []).append(int(vol[z, y, x]))
-    out = np.zeros((oz, oy, ox), dtype=np.int64)
+    out = np.zeros(odims, dtype=np.int64)
     for (z, y, x), vals in buckets.items():
         a = np.array(vals, dtype=np.int64)
         nz = a[a != 0]

@@ -72,6 +72,22 @@ def read_steal_sec() -> float | None:
 STEAL_DISCARD_CPS = 0.5
 
 
+def screening_steal(out: dict) -> tuple[float | None, str]:
+    """(steal vCPUs, metric name) a run is screened on — one rule for
+    both sides: the worst KEPT pass of the bench's own rep loop
+    (``host.steal_cps_reps``) when the revision emits it, else the
+    harness average over the whole subprocess. Not ``host.steal_cps``:
+    that timed-region average includes passes bench.py already
+    discarded and re-ran, so it would penalize a clean run twice."""
+    reps = [
+        c for c in out.get("host", {}).get("steal_cps_reps") or []
+        if c is not None
+    ]
+    if reps:
+        return max(reps), "host.steal_cps_reps_max"
+    return out.get("harness_steal_cps"), "harness_steal_cps"
+
+
 def run_bench(tree: str, coldcache: str) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_BENCH_REPS"] = "1"
@@ -113,15 +129,7 @@ def run_bench(tree: str, coldcache: str) -> dict:
         out["harness_steal_cps"] = round(
             (steal1 - steal0) / max(time.time() - t0, 1e-9), 3
         )
-    # Prefer the bench's OWN timed-region steal metric when the revision
-    # emits one (r14 ADVICE: the harness average spans idle-gate wait +
-    # JVM startup, so a wave on the timed region can be diluted below
-    # the threshold and startup steal can trigger a spurious discard);
-    # the harness measurement stays as the fallback for old revisions
-    # whose bench.py predates the instrument.
-    out["effective_steal_cps"] = out.get("host", {}).get(
-        "steal_cps", out.get("harness_steal_cps")
-    )
+    out["effective_steal_cps"], out["steal_metric"] = screening_steal(out)
     return out
 
 
@@ -339,6 +347,10 @@ def main() -> None:
         "steal_discarded_reps": discarded,
         "steal_cps_per_run": {
             side: [r.get("effective_steal_cps") for r in runs[side]]
+            for side in ("old", "new")
+        },
+        "steal_metric": {
+            side: [r.get("steal_metric") for r in runs[side]]
             for side in ("old", "new")
         },
         "steal_cps_harness_per_run": {

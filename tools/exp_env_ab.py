@@ -4,15 +4,15 @@
 Same methodology as tools/bench_ab.py (interleaved sides, single-rep
 bench subprocesses, per-query min across reps, calibration spin per
 run) but both sides run the CURRENT tree — the variable is an
-environment toggle (e.g. SPARK_GRAFT_SPREAD=0/1), so a mechanism can
-be attributed without committing a revert first.
+environment setting (e.g. SPARK_GRAFT_BENCH_COLDCACHE=0/1), so a
+mechanism can be attributed without committing a revert first.
 
 Usage:
     python tools/exp_env_ab.py '<env_a_json>' '<env_b_json>' <reps> q1 q2 ...
 
 Example:
-    python tools/exp_env_ab.py '{"SPARK_GRAFT_SPREAD":"1"}' \
-        '{"SPARK_GRAFT_SPREAD":"0"}' 3 sim_ann sim_topk
+    python tools/exp_env_ab.py '{"SPARK_GRAFT_BENCH_COLDCACHE":"1"}' \
+        '{"SPARK_GRAFT_BENCH_COLDCACHE":"0"}' 3 sim_ann sim_topk
 """
 
 from __future__ import annotations
