@@ -11,6 +11,7 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -237,6 +238,72 @@ def _read_steal_sec() -> float | None:
         return None
 
 
+def _run_reps(
+    spark,
+    queries: dict[str, Callable[[], None]],
+    reps: int,
+    steal_thresh: float,
+    steal_max_retries: int,
+    cold_cache: bool,
+    read_steal: Callable[[], float | None],
+) -> tuple[dict[str, float], dict]:
+    """Best-of-``reps`` wall seconds per query, rep passes interleaved
+    over the whole list. A pass whose average steal (``read_steal``
+    deltas over its wall) exceeds ``steal_thresh`` vCPUs is discarded
+    and re-run, up to ``steal_max_retries`` extra passes per rep; when
+    retries run out the contaminated pass is kept and counted. With
+    ``cold_cache`` the SQL cache is cleared before every timed query.
+    Returns (timings, host stamps)."""
+    timings: dict[str, float] = {name: float("inf") for name in queries}
+    steal_cps_reps: list[float | None] = []
+    steal_discarded = 0
+    steal_kept_contaminated = 0
+    for _ in range(reps):
+        for attempt in range(steal_max_retries + 1):
+            pass_timings: dict[str, float] = {}
+            rep_steal0 = read_steal()
+            rep_t0 = time.time()
+            for name, run in queries.items():
+                if cold_cache:
+                    spark.catalog.clearCache()
+                t0 = time.time()
+                run()
+                pass_timings[name] = time.time() - t0
+            rep_steal1 = read_steal()
+            rep_cps = None
+            if rep_steal0 is not None and rep_steal1 is not None:
+                rep_cps = round(
+                    (rep_steal1 - rep_steal0)
+                    / max(time.time() - rep_t0, 1e-9),
+                    3,
+                )
+            contaminated = rep_cps is not None and rep_cps > steal_thresh
+            if contaminated and attempt < steal_max_retries:
+                steal_discarded += 1
+                print(
+                    f"bench: rep pass DISCARDED (steal {rep_cps} vCPUs "
+                    f"avg > {steal_thresh}) — re-running",
+                    file=sys.stderr,
+                )
+                continue
+            if contaminated:
+                steal_kept_contaminated += 1
+                print(
+                    f"bench: KEPT CONTAMINATED rep pass (steal {rep_cps} "
+                    "vCPUs avg, retries exhausted)",
+                    file=sys.stderr,
+                )
+            steal_cps_reps.append(rep_cps)
+            for name, t in pass_timings.items():
+                timings[name] = min(timings[name], t)
+            break
+    return {name: round(t, 3) for name, t in timings.items()}, {
+        "steal_cps_reps": steal_cps_reps,
+        "steal_discarded_reps": steal_discarded,
+        "steal_kept_contaminated": steal_kept_contaminated,
+    }
+
+
 def _await_idle() -> tuple[float | None, float, bool]:
     """Pre-flight gate: spin-wait until the 1-min load drops below
     $SPARK_GRAFT_BENCH_MAXLOAD (default 0.8) or the wait exceeds
@@ -324,50 +391,20 @@ def main() -> None:
     cold_cache = os.environ.get("SPARK_GRAFT_BENCH_COLDCACHE", "1") != "0"
     steal_pre = _read_steal_sec()
     t_timed0 = time.time()
-    timings: dict[str, float] = {name: float("inf") for name in names}
-    steal_cps_reps: list[float | None] = []
-    steal_discarded = 0
-    steal_kept_contaminated = 0
-    for _ in range(reps):
-        for attempt in range(steal_max_retries + 1):
-            pass_timings: dict[str, float] = {}
-            rep_steal0 = _read_steal_sec()
-            rep_t0 = time.time()
-            for name in names:
-                if cold_cache:
-                    spark.catalog.clearCache()
-                t0 = time.time()
-                _trigger(specs[name].fn(spark, sf_dir), name)
-                pass_timings[name] = time.time() - t0
-            rep_steal1 = _read_steal_sec()
-            rep_cps = None
-            if rep_steal0 is not None and rep_steal1 is not None:
-                rep_cps = round(
-                    (rep_steal1 - rep_steal0)
-                    / max(time.time() - rep_t0, 1e-9),
-                    3,
-                )
-            contaminated = rep_cps is not None and rep_cps > steal_thresh
-            if contaminated and attempt < steal_max_retries:
-                steal_discarded += 1
-                print(
-                    f"bench: rep pass DISCARDED (steal {rep_cps} vCPUs "
-                    f"avg > {steal_thresh}) — re-running",
-                    file=sys.stderr,
-                )
-                continue
-            if contaminated:
-                steal_kept_contaminated += 1
-                print(
-                    f"bench: KEPT CONTAMINATED rep pass (steal {rep_cps} "
-                    "vCPUs avg, retries exhausted)",
-                    file=sys.stderr,
-                )
-            steal_cps_reps.append(rep_cps)
-            for name, t in pass_timings.items():
-                timings[name] = min(timings[name], t)
-            break
-    timings = {name: round(t, 3) for name, t in timings.items()}
+    timings, rep_stamps = _run_reps(
+        spark,
+        {
+            name: lambda name=name: _trigger(
+                specs[name].fn(spark, sf_dir), name
+            )
+            for name in names
+        },
+        reps,
+        steal_thresh,
+        steal_max_retries,
+        cold_cache,
+        _read_steal_sec,
+    )
 
     host["loadavg_post"] = _read_loadavg()
     steal_post = _read_steal_sec()
@@ -385,9 +422,7 @@ def main() -> None:
         wall = max(time.time() - t_timed0, 1e-9)
         host["steal_sec"] = round(steal_post - steal_pre, 2)
         host["steal_cps"] = round((steal_post - steal_pre) / wall, 3)
-    host["steal_cps_reps"] = steal_cps_reps
-    host["steal_discarded_reps"] = steal_discarded
-    host["steal_kept_contaminated"] = steal_kept_contaminated
+    host.update(rep_stamps)
     host["cold_cache_reps"] = cold_cache
     total = round(sum(timings.values()), 3)
     out = {

@@ -11,11 +11,11 @@ Decode is REAL for the whole crawl-format set — clean-room codecs in
 sources/ cover tiff, jpeg (baseline/progressive/12-bit), png, gif,
 bmp, webp (lossy VP8 + lossless VP8L), netpbm, avi (MJPG + DIB),
 wav, flac, and jp2, with
-``raw8`` as the plain-bytes fast path. PIL, when importable, takes
-over 8-bit jpeg and the long tail of exotic formats; when absent only
-genuinely-uncovered formats raise ``NotImplementedError``. Every
-decoder raises its named ParseError on corrupt payloads (fuzz-pinned),
-which is what the kernels' ``errors="skip"/"tag"`` crawl modes catch.
+``raw8`` as the plain-bytes fast path. Each format has exactly one
+decoder, the clean-room one; formats none covers raise
+``NotImplementedError`` naming the built-in set. Every decoder raises
+its named ParseError on corrupt payloads (fuzz-pinned), which is what
+the kernels' ``errors="skip"/"tag"`` crawl modes catch.
 """
 
 from __future__ import annotations
@@ -36,31 +36,10 @@ MEDIA_SCHEMA = (
 )
 
 
-class MediaDecodeError(ValueError):
-    """Named wrapper for parse failures raised by the OPTIONAL library
-    tail (PIL / tifffile / imageio). Those libraries signal corrupt
-    payloads with OSError ('broken data stream'), SyntaxError, or
-    ValueError — types too broad to catch globally in a skip/tag
-    kernel — so the library calls are wrapped and re-raised as this
-    named error, keeping the corruption contract uniform whether a
-    binding is installed or not."""
-
-
-_LIB_DECODE_ERRORS = (OSError, SyntaxError, ValueError, KeyError, IndexError)
-
-
-def _lib_decode(fn, what: str) -> np.ndarray:
-    """Run an optional-library decode, renaming its parse failures."""
-    try:
-        return fn()
-    except _LIB_DECODE_ERRORS as exc:
-        raise MediaDecodeError(f"{what}: {type(exc).__name__}: {exc}") from exc
-
-
 def _decode_one(fmt: str, payload: bytes, meta) -> np.ndarray:
-    """payload -> ndarray. raw8 is real; tiff/compressed are gated on
-    codec libs (absent in this container — probe recorded in
-    FIXTURES.md)."""
+    """payload -> (frames, h, w, channels) ndarray through the
+    format's clean-room decoder; formats with none raise
+    ``NotImplementedError``."""
     if fmt == "raw8":
         h, w, c = int(meta["height"]), int(meta["width"]), int(meta["channels"])
         nf = max(1, int(meta["n_frames"] or 1))
@@ -68,80 +47,23 @@ def _decode_one(fmt: str, payload: bytes, meta) -> np.ndarray:
     if fmt in ("tiff", "tif"):
         # the reference's entire front door is TIFF page decode
         # (slice_to_dask_array / stack_to_dask_array,
-        # tiff2octree.py:653-691, 628-651). tifffile/imageio when
-        # importable (full codec coverage); otherwise the clean-room
-        # baseline reader handles the uncompressed striped stacks the
-        # reference renders (sources/tiff.py) and compressed files
-        # raise TiffParseError naming the missing codec.
-        try:
-            import tifffile
-        except ImportError:
-            try:
-                import imageio.v3 as tifffile  # type: ignore[no-redef]
-            except ImportError:
-                from hortacloud_importer_spark.sources.tiff import decode_tiff
+        # tiff2octree.py:653-691, 628-651): the clean-room reader
+        # (sources/tiff.py) covers the stacks the reference renders
+        from hortacloud_importer_spark.sources.tiff import decode_tiff
 
-                return decode_tiff(bytes(payload))
-        import io as _io
-
-        arr = _lib_decode(
-            lambda: np.asarray(tifffile.imread(_io.BytesIO(payload))),
-            "tifffile",
-        )
-        # normalize to (frames, h, w, channels)
-        if arr.ndim == 2:  # single grayscale page
-            arr = arr[None, :, :, None]
-        elif arr.ndim == 3:
-            # page stack (pages, h, w) when the last dim is image-sized;
-            # otherwise a single (h, w, c) page
-            arr = arr[..., None] if arr.shape[-1] > 8 else arr[None, ...]
-        return arr
+        return decode_tiff(bytes(payload))
     if fmt in ("jpeg", "jpg"):
-        # Dispatch by the frame's precision byte: 8-bit streams go to
-        # Pillow when importable (libjpeg speed); 12-bit SOF1/SOF2 —
-        # which PIL cannot open — and bindingless environments use the
-        # clean-room T.81 decoder (sources/jpeg.py: grayscale + YCbCr,
-        # sequential AND progressive Huffman, 8- and 12-bit).
-        from hortacloud_importer_spark.sources.jpeg import (
-            JpegParseError,
-            decode_jpeg,
-            sniff_sof_marker,
-            sniff_sof_precision,
-        )
+        # clean-room T.81 decoder (sources/jpeg.py): grayscale + YCbCr,
+        # sequential AND progressive Huffman, 8- and 12-bit
+        from hortacloud_importer_spark.sources.jpeg import decode_jpeg
 
-        use_clean = True
-        if (
-            sniff_sof_precision(bytes(payload)) == 8
-            and sniff_sof_marker(bytes(payload)) != 0xC3  # PIL: no SOF3
-        ):
-            try:
-                import PIL.Image  # noqa: F401
-
-                use_clean = False  # generic PIL tail below
-            except ImportError:
-                pass
-        if use_clean:
-            try:
-                return decode_jpeg(bytes(payload))[None, ...]
-            except JpegParseError as parse_exc:
-                try:
-                    import PIL.Image  # noqa: F401
-                except ImportError:
-                    # corrupt/out-of-scope stream and no binding: the
-                    # parse error is the honest answer, not "needs codec"
-                    raise parse_exc from None
-                # PIL present: fall through to the generic tail below
+        return decode_jpeg(bytes(payload))[None, ...]
     if fmt == "png":
-        try:
-            import PIL.Image  # noqa: F401
-        except ImportError:
-            # clean-room PNG (sources/png.py): stdlib zlib + filters;
-            # APNG animations composite to real multi-frame output
-            from hortacloud_importer_spark.sources.png import (
-                decode_png_frames,
-            )
+        # clean-room PNG (sources/png.py): stdlib zlib + filters;
+        # APNG animations composite to real multi-frame output
+        from hortacloud_importer_spark.sources.png import decode_png_frames
 
-            return decode_png_frames(bytes(payload))
+        return decode_png_frames(bytes(payload))
     if fmt == "gif":
         # clean-room GIF87a/89a (sources/gif.py): LZW, interlace,
         # animation compositing with 89a disposal — the one built-in
@@ -216,7 +138,7 @@ def _decode_one(fmt: str, payload: bytes, meta) -> np.ndarray:
         return decode_adts(bytes(payload))
     if fmt in ("jp2", "j2k"):
         # clean-room lossless JPEG 2000 (sources/j2k.py) with the
-        # glymur/imageio/PIL fallback chain inside decode_jp2
+        # J2kUnsupported features raise NotImplementedError naming them
         from hortacloud_importer_spark.sources.jp2 import decode_jp2
 
         return decode_jp2(bytes(payload))
@@ -228,24 +150,11 @@ def _decode_one(fmt: str, payload: bytes, meta) -> np.ndarray:
         )
 
         return decode_isobmff(bytes(payload))
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as exc:  # codec libs absent in this container
-        raise NotImplementedError(
-            f"format {fmt!r} needs an image codec (PIL); built-in "
-            "clean-room decoders cover raw8, tiff, jpeg, png, gif, "
-            "bmp, webp, pnm/pgm/ppm, tga, avi, wav, flac, and jp2"
-        ) from exc
-    import io
-
-    import PIL.Image as Image
-
-    arr = _lib_decode(
-        lambda: np.asarray(Image.open(io.BytesIO(payload))), "PIL"
+    raise NotImplementedError(
+        f"format {fmt!r} has no decoder; built-in clean-room decoders "
+        "cover raw8, tiff, jpeg, png, gif, bmp, webp, pnm/pgm/ppm, tga, "
+        "avi, wav, flac, mp3, ogg, aac, jp2 and the ISOBMFF containers"
     )
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    return arr[None, ...]
 
 
 def synthetic_media(
@@ -388,7 +297,7 @@ def _decode_error_types() -> tuple[type, ...]:
     from hortacloud_importer_spark.sources.wav import WavParseError
     from hortacloud_importer_spark.sources.webp import WebpParseError
 
-    named: tuple[type, ...] = (
+    return (
         AdtsParseError,
         AviParseError,
         BmpParseError,
@@ -408,17 +317,7 @@ def _decode_error_types() -> tuple[type, ...]:
         WebpParseError,
         # the honest format gates (needs-a-binding / out-of-scope)
         NotImplementedError,
-        # optional-library (PIL/tifffile) parse failures, renamed by
-        # _lib_decode so OSError etc. never need catching globally
-        MediaDecodeError,
     )
-    try:  # when the optional PIL tail is live, its parse failure too
-        from PIL import UnidentifiedImageError
-
-        named += (UnidentifiedImageError,)
-    except ImportError:
-        pass
-    return named
 
 
 PROBE_SCHEMA = (

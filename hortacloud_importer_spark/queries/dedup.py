@@ -1054,178 +1054,46 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level hashing; this finds them for span REMOVAL, not doc
     removal).
 
-    Plan shape (100 TB posture): this is the distributed formulation
-    of suffix-array substring dedup — one row per character position
-    carrying a 16-BYTE BINARY md5 digest (same grouping as the
-    oracle's hex md5, half the width; an 8-byte xxhash64 would halve
-    it again at a quantifiable collision risk), counted per digest
-    with a window aggregate (ONE shuffle of the grams, sorted by the
-    digest), then re-grouped per doc for gaps-and-islands span
-    merging (second, much smaller shuffle of only the duplicated
-    positions). Nothing but (hash, doc_id, pos) triples ever
-    shuffles — never document text. Suffix arrays beat this on one
-    machine but do not distribute; the window-hash formulation is
-    what MapReduce-scale substring dedup ships.
-
-    Honest cost model: stride-1 exactness means ~28 shuffle bytes PER
-    CORPUS CHARACTER — a petabyte-class shuffle at 100 TB, inherent
-    to the algorithm (Lee et al.'s suffix arrays are likewise
-    O(total bytes), and single-machine), not to this plan. Run it on
-    the post-doc-dedup corpus and budget accordingly. One degenerate
-    hot key (a corpus that is one repeated character) would pin a
-    reducer through the window sort; the doc-level exact dedup that
-    precedes this pass removes exactly those repeats.
+    Plan shape (100 TB posture): the distributed formulation of
+    suffix-array substring dedup is a window-hash count — suffix
+    arrays beat it on one machine but do not distribute. Nothing but
+    hashes, doc_ids and positions ever shuffles, never document text;
+    :func:`substring_find` seeds the count with minimizer anchors so
+    only candidate positions carry a 16-byte digest. Run it on the
+    post-doc-dedup corpus: one degenerate hot key (a corpus that is
+    one repeated character) would pin a reducer through the window
+    sort, and the doc-level exact dedup that precedes this pass
+    removes exactly those repeats.
     """
     return substring_find(_dup_corpus(spark, sf_dir))
 
 
-def substring_find(corpus: DataFrame, L: int = _SUBSTR_L) -> DataFrame:
-    """Stride-1 substring-dedup FIND over an arbitrary (doc_id, text)
-    corpus — the operator behind :func:`dedup_substring` (which binds
-    it to the oracle's duplicated fixture corpus). tools/soak_corpus.py
-    runs it directly on the big corpus."""
-    from pyspark.sql.window import Window
+_SEED_K = 24  # minimizer k-gram length (chars): long enough that
+#               seed-level duplication tracks L-gram-level duplication
+#               on real text (short k floods pass 2 with common-phrase
+#               candidates)
+_SEED_W = 17  # minimizer window (k-gram positions); k + w - 1 <= L
+_POS_BITS = 20  # packed-long position field; docs must be < 2^20 chars
 
-    grams = (
-        corpus.filter(F.length("text") >= L)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - L + 1)
-            ).alias("pos"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            "pos",
-            # 16-byte BINARY digest: same grouping as DuckDB's hex md5
-            # (bijective) at half the shuffle width
-            F.unhex(F.md5(F.expr(f"substring(text, pos, {L})"))).alias(
-                "h"
-            ),
-        )
+if _SEED_K + _SEED_W - 1 > _SUBSTR_L:
+    # the entire exactness argument of _substring_spans rests on every
+    # L-gram holding at least one FULL minimizer window — fail loud,
+    # not subtly
+    raise ValueError(
+        f"substring dedup needs k + w - 1 <= L (got k={_SEED_K}, "
+        f"w={_SEED_W}, L={_SUBSTR_L}): a duplicated L-gram could "
+        "otherwise carry no anchor and be silently missed"
     )
-    dup = (
-        grams.withColumn("c", F.count("*").over(Window.partitionBy("h")))
-        .filter(F.col("c") > 1)
-        .select("doc_id", "pos")
-    )
-    return _substring_spans(corpus, dup, L)
 
 
-@register("dedup_substring_df", "K1", oracle=_SUBSTR_ORACLE,
-          driver=False)
-def dedup_substring_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stride-1 substring dedup with a DOCUMENT-FREQUENCY PRE-FILTER
-    on the gram fingerprints (round-13 ask #2): byte-identical output
-    to :func:`dedup_substring` — the same oracle pins all three
-    variants — see :func:`substring_find_df`."""
-    return substring_find_df(_dup_corpus(spark, sf_dir))
-
-
-def substring_find_df(corpus: DataFrame, L: int = _SUBSTR_L) -> DataFrame:
-    """Stride-1 substring-dedup FIND with a DF pre-filter: only gram
-    fingerprints seen >= 2 times corpus-wide can seed a span, so the
-    expensive exact-verify stage runs on candidate positions
-    (proportional to DUPLICATED content), not the whole corpus.
-
-    Exactness argument (same family as substring_find_seeded's): pass
-    1 counts an 8-byte xxhash64 of each L-gram; a truly duplicated
-    gram hashes identically at every occurrence, so its seed hash
-    reaches count >= 2 and ALL its positions survive the semi-join —
-    no miss. A hash collision between different grams only ADDS
-    candidates; pass 2 re-verifies candidates with the exact 16-byte
-    md5 digest, and a duplicated gram's full occurrence set is inside
-    the candidate set, so its candidate-subset count equals its
-    corpus-wide count. Collided unique grams count 1 under md5 and
-    drop. Output is therefore bit-identical to the baseline.
-
-    Plan shape (100 TB posture) vs the stride-1 baseline's single
-    ~28 B/char sorted window shuffle:
-    1. seed DF count: the narrowest possible corpus-wide shuffle —
-       8-byte hashes through a map-side-combined HASH aggregate (no
-       doc_id/pos payload, no sort); repeated grams combine before
-       the wire, so dup-heavy corpora shuffle LESS here, not more;
-    2. the duplicated-fingerprint table semi-joins back onto a
-       map-side recompute of the gram stream (md5 computed BEFORE the
-       join and text dropped, so even a shuffle-fallback join never
-       moves document text. On mostly-unique corpora the table is
-       tiny and broadcasts — stage 2 is then map-side free);
-    3. exact verify: the baseline's digest window, but over
-       candidates only.
-    MEASURED AND REJECTED as a scale path (SOAK.md, round 14, both
-    corpus shapes at 500k docs): 1.9x MORE shuffle than stride-1 on
-    the 46%-duplicated corpus (stages 2-3 remove nothing there) and
-    STILL 1.75x more on the fully-unique corpus — the premise that
-    the seed table is "tiny" fails, because it is one row per
-    POSITION and on a unique corpus nothing map-side-combines, so
-    stage 1 exchanges the positional stream it was meant to avoid.
-    The lever that works is reducing positions (the minimizer-seeded
-    variant, 6.5x less shuffle on unique corpora). Kept registered
-    oracle-exact as the recorded experiment, per the ngram_ppx
-    pre-agg rejection discipline."""
-    from pyspark.sql.window import Window
-
-    eligible = corpus.filter(F.length("text") >= L)
-    pos_seq = F.explode(
-        F.sequence(F.lit(1), F.length("text") - L + 1)
-    ).alias("pos")
-    gram = F.expr(f"substring(text, pos, {L})")
-    dup_xh = (
-        eligible.select(pos_seq, "text")
-        .select(F.xxhash64(gram).alias("xh"))
-        .groupBy("xh")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") > 1)
-        .select("xh")
-    )
-    cand = (
-        eligible.select("doc_id", pos_seq, "text")
-        .select(
-            "doc_id",
-            "pos",
-            F.xxhash64(gram).alias("xh"),
-            F.unhex(F.md5(gram)).alias("h"),
-        )
-        .join(dup_xh, "xh", "left_semi")
-        .select("doc_id", "pos", "h")
-    )
-    dup = (
-        cand.withColumn("c", F.count("*").over(Window.partitionBy("h")))
-        .filter(F.col("c") > 1)
-        .select("doc_id", "pos")
-    )
-    return _substring_spans(corpus, dup, L)
-
-
-def _substring_spans(corpus: DataFrame, dup: DataFrame, L: int) -> DataFrame:
-    """Shared tail of the substring-dedup family: duplicated positions
-    -> gaps-and-islands span merge -> per-doc (n_spans, dup_chars,
-    total_chars). ``dup`` is (doc_id, pos) — one row per position
-    whose L-gram occurs >= 2 times corpus-wide."""
-    from pyspark.sql.window import Window
-
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = Window.partitionBy("doc_id").orderBy("pos")
-    isl = dup.withColumn(
-        "prev_max", F.max(F.col("pos") + L).over(prev)
-    ).withColumn(
-        "island",
-        F.sum(
-            F.when(
-                F.col("prev_max").isNull()
-                | (F.col("pos") > F.col("prev_max")),
-                1,
-            ).otherwise(0)
-        ).over(run),
-    )
-    spans = isl.groupBy("doc_id", "island").agg(
-        F.min("pos").alias("s"), (F.max("pos") + L).alias("e")
-    )
+def substring_find(corpus: DataFrame) -> DataFrame:
+    """Substring-dedup FIND over an arbitrary (doc_id, text) corpus —
+    the operator behind :func:`dedup_substring` (which binds it to the
+    oracle's duplicated fixture corpus); tools/soak_corpus.py runs it
+    directly on the big corpus. Output is per doc (doc_id, n_spans,
+    dup_chars, total_chars) over the maximal duplicated spans of
+    :func:`_substring_spans`."""
+    spans = _substring_spans(corpus)
     # project text down to its LENGTH before the join: the final
     # per-doc regroup must shuffle (doc_id, total_chars) longs, never
     # document text (plan-asserted in tests/test_plans.py)
@@ -1245,33 +1113,12 @@ def _substring_spans(corpus: DataFrame, dup: DataFrame, L: int) -> DataFrame:
     )
 
 
-_SEED_K = 24  # minimizer k-gram length (chars): long enough that
-#               seed-level duplication tracks L-gram-level duplication
-#               on real text (short k floods pass 2 with common-phrase
-#               candidates)
-_SEED_W = 17  # minimizer window (k-gram positions); k + w - 1 <= L
-_POS_BITS = 20  # packed-long position field; docs must be < 2^20 chars
-
-
-@register("dedup_substring_seeded", "K1", oracle=_SUBSTR_ORACLE,
-          driver=False)
-def dedup_substring_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimizer-SEEDED exact substring dedup: identical output to
-    :func:`dedup_substring` (same oracle pins both) at a fraction of
-    its shuffle bytes — see :func:`substring_find_seeded`."""
-    return substring_find_seeded(_dup_corpus(spark, sf_dir))
-
-
-def substring_find_seeded(
-    corpus: DataFrame,
-    L: int = _SUBSTR_L,
-    k: int = _SEED_K,
-    w: int = _SEED_W,
-) -> DataFrame:
-    """Seeded substring-dedup FIND: byte-identical output to
-    :func:`substring_find` without its ~28 shuffle bytes per corpus
-    character. Stride-1 exactness shuffles one digest row per
-    position; this shuffles only MINIMIZER positions as candidate
+def _substring_spans(corpus: DataFrame) -> DataFrame:
+    """Maximal duplicated spans (doc_id, s, e), 1-based with ``e``
+    exclusive: every position whose L-gram occurs >= 2 times
+    corpus-wide, merged per doc by gaps-and-islands. Stride-1
+    exactness would shuffle one digest row per corpus character (~28
+    B/char); this shuffles only MINIMIZER positions as candidate
     seeds, then verifies exactly.
 
     Exactness argument (why seeding loses nothing): a (w, k) minimizer
@@ -1301,7 +1148,7 @@ def substring_find_seeded(
 
     Plan shape (100 TB posture), three thin shuffles + one broadcast:
     1. anchors (packed seed int64, doc_id, pos) at ~2/(w+1) of
-       positions — ~2-3 B/char against the baseline's ~28 B/char;
+       positions — ~2-3 B/char against stride-1's ~28 B/char;
     2. surviving anchor positions, grouped per doc (rows proportional
        to DUPLICATED content, not corpus size), broadcast back onto
        the corpus scan — candidate digests are then computed map-side,
@@ -1314,18 +1161,12 @@ def substring_find_seeded(
        verified individually; measured tables in SOAK.md).
     If the duplicated-anchor side ever outgrows broadcast, Spark falls
     back to a doc_id shuffle join whose corpus side is raw text
-    (~1 B/char) — still ~28x under the stride-1 baseline. Run after
-    doc-level dedup, like the baseline."""
+    (~1 B/char) — still ~28x under stride-1. The duplicated positions
+    then re-group per doc for the span merge (a much smaller shuffle
+    of only the duplicated positions)."""
     from pyspark.sql.window import Window
 
-    if k + w - 1 > L:
-        # the entire exactness argument rests on every L-gram holding
-        # at least one FULL minimizer window — fail loud, not subtly
-        raise ValueError(
-            f"substring_find_seeded needs k + w - 1 <= L "
-            f"(got k={k}, w={w}, L={L}): a duplicated L-gram could "
-            "otherwise carry no anchor and be silently missed"
-        )
+    L, k, w = _SUBSTR_L, _SEED_K, _SEED_W
     pos_mask = (1 << _POS_BITS) - 1
     eligible = corpus.filter(F.length("text") >= L)
 
@@ -1336,7 +1177,7 @@ def substring_find_seeded(
         F.raise_error(
             F.concat(
                 F.lit(
-                    "substring_find_seeded: document longer than "
+                    "substring_find: document longer than "
                     f"{(1 << _POS_BITS) - 1} chars (doc_id "
                 ),
                 F.col("doc_id").cast("string"),
@@ -1433,7 +1274,29 @@ def substring_find_seeded(
         .filter(F.col("c") > 1)
         .select("doc_id", "pos")
     )
-    return _substring_spans(corpus, dup, L)
+
+    # --- span merge: gaps-and-islands per doc ---
+    prev = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    run = Window.partitionBy("doc_id").orderBy("pos")
+    isl = dup.withColumn(
+        "prev_max", F.max(F.col("pos") + L).over(prev)
+    ).withColumn(
+        "island",
+        F.sum(
+            F.when(
+                F.col("prev_max").isNull()
+                | (F.col("pos") > F.col("prev_max")),
+                1,
+            ).otherwise(0)
+        ).over(run),
+    )
+    return isl.groupBy("doc_id", "island").agg(
+        F.min("pos").alias("s"), (F.max("pos") + L).alias("e")
+    )
 
 
 _DECON_ORACLE = """
@@ -2328,58 +2191,17 @@ def dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is (doc_id, md5(cleaned), cleaned_len): the md5 pins the
     byte-exact reconstruction, including span-boundary off-by-ones.
 
-    Plan: the span table (tiny — only duplicated regions) joins back
+    Plan: the spans come from the same seeded finder
+    (:func:`_substring_spans`, so documents must be shorter than 2^20
+    chars here too); the span table (tiny — only duplicated regions) joins back
     to the corpus by doc_id; each doc's kept segments are substrings
     between consecutive spans (lag window) plus the tail, reassembled
     in position order. Text shuffles ONCE here by necessity — the
     output is a rewrite of the text itself."""
     from pyspark.sql.window import Window
 
-    L = _SUBSTR_L
     corpus = _dup_corpus(spark, sf_dir)
-    grams = (
-        corpus.filter(F.length("text") >= L)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - L + 1)
-            ).alias("pos"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.unhex(F.md5(F.expr(f"substring(text, pos, {L})"))).alias(
-                "h"
-            ),
-        )
-    )
-    dup = (
-        grams.withColumn("c", F.count("*").over(Window.partitionBy("h")))
-        .filter(F.col("c") > 1)
-        .select("doc_id", "pos")
-    )
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = Window.partitionBy("doc_id").orderBy("pos")
-    isl = dup.withColumn(
-        "prev_max", F.max(F.col("pos") + L).over(prev)
-    ).withColumn(
-        "island",
-        F.sum(
-            F.when(
-                F.col("prev_max").isNull()
-                | (F.col("pos") > F.col("prev_max")),
-                1,
-            ).otherwise(0)
-        ).over(run),
-    )
-    spans = isl.groupBy("doc_id", "island").agg(
-        F.min("pos").alias("s"), (F.max("pos") + L).alias("e")
-    )
+    spans = _substring_spans(corpus)
     segs = spans.select(
         "doc_id",
         "s",

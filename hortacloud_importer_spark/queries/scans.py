@@ -299,7 +299,7 @@ def scan_tiff_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingested exactly the way the reference's front door works
     (slice_to_dask_array, tiff2octree.py:653-691): binaryFile scan ->
     per-file page decode on executors (clean-room uncompressed-TIFF
-    reader; tifffile used instead when importable) -> per-slice
+    reader) -> per-slice
     intensity accounting. The DuckDB oracle regenerates the pixel
     formula ((i * (z+1)) % 251) with range() arithmetic, so a decode
     bug anywhere in the encode->scan->decode->stats chain breaks the

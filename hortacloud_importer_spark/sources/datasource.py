@@ -470,7 +470,7 @@ def _decode_slice_pages(
 ) -> np.ndarray:
     """One slice file -> (pages, h, w, samples), dispatched on the
     file extension: TIFF via the built-in clean-room codec, JPEG 2000
-    via the gated OpenJPEG hook (sources/jp2.py; the reference reads
+    via the clean-room codec (sources/jp2.py; the reference reads
     .jp2 slices through rasterio, tiff2octree.py:673-678).
 
     ``float_mode`` is the voxel-boundary policy for float32 pages

@@ -4,9 +4,8 @@
 The clean-room ISOBMFF parser (sources/isobmff.py) covers the
 container: probe, box tree, sample-table frame index. The coded
 HEVC/AV1 payload is a codec problem no clean-room effort should fake,
-so pixel decode follows the same optional-binding posture as the
-PIL tail in operators/multimodal.py and the glymur chain in
-sources/jp2.py: when the SYSTEM libheif (a public library,
+so pixel decode is an optional binding — the only one in the
+engine's decode paths: when the SYSTEM libheif (a public library,
 github.com/strukturag/libheif) is loadable via ctypes, decode for
 real; otherwise raise the same honest ``NotImplementedError`` gate
 ``decode_isobmff`` always raised. No Python package is required —

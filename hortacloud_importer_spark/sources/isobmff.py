@@ -15,8 +15,7 @@ images decode through the optional system libheif binding
 samples through that same binding (decode_isobmff_video: each
 keyframe rewrapped byte-identical as a HEIF/AVIF still — MP4 samples
 and HEIF items share the coded layout); other codecs (AAC audio,
-AVC) stay a gated NotImplementedError — codec bindings belong behind
-the same optional import tail as PIL, and shipping a wrong decode
+AVC) stay a gated NotImplementedError — shipping a wrong decode
 would be worse than an honest gate.
 
 What the probe extracts:

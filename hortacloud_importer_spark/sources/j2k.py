@@ -92,16 +92,15 @@ subsampling decodes on the per-component sample grid (single- or
 aligned multi-tile), upsampled back to the reference grid by
 nearest-neighbor replication — the JPEG chroma convention. The
 scope covers what a lossless microscopy slice store actually writes;
-everything else still routes to the optional OpenJPEG bindings in
-sources/jp2.py.
+everything else raises :class:`J2kUnsupported`, which sources/jp2.py
+reports as ``NotImplementedError`` naming the feature.
 
 Scale note: Tier-1 is an adaptive bit-serial coder — per-coefficient
 Python, not vectorizable. One 64x64 block decodes in ~10 ms, a
 2048x2048 16-bit slice in tens of seconds on one core; the engine
 runs it inside the per-slice executor decode (one task per file), so
 a 1000-slice ingest parallelizes across the cluster exactly like the
-TIFF path. Environments with an OpenJPEG binding still win it back
-via the jp2.py fallback chain.
+TIFF path.
 """
 
 from __future__ import annotations

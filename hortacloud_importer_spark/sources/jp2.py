@@ -12,13 +12,11 @@ Clean-room split, mirroring sources/tiff.py's design:
 - :func:`decode_jp2` — full entropy decode. Both reversible (5/3
   lossless) and irreversible (9/7 scalar-quantized) codestreams —
   single-tile or tiled, tile-part-split, multi-layer — decode
-  through the clean-room from-spec codec in sources/j2k.py with no
-  external binding. Features outside that scope (subsampled,
-  signed, custom precincts …) fall through
-  to an importable OpenJPEG binding (glymur / imageio / Pillow) and,
-  when none exists, raise ``NotImplementedError`` naming both the
-  unsupported feature and the binding options — the honest-gate
-  contract used for every partially-covered codec in this repo.
+  through the clean-room from-spec codec in sources/j2k.py, the only
+  JP2 decoder. Features outside its scope (e.g. spec-reserved
+  code-block style bits, non-maxshift RGN, >16-bit components) raise
+  ``NotImplementedError`` naming the feature — the honest-gate contract used for every
+  partially-covered codec in this repo.
 - :func:`encode_jp2` — the fixture/writer dual: wraps
   j2k.encode_j2k's codestream in a minimal spec-shaped JP2 container
   (signature, ftyp, jp2h/ihdr, jp2c), so slice directories can be
@@ -31,7 +29,6 @@ tested.
 
 from __future__ import annotations
 
-import io
 import struct
 
 import numpy as np
@@ -229,9 +226,10 @@ def decode_jp2(data: bytes) -> np.ndarray:
     """Full decode -> (pages, height, width, samples), matching
     tiff.decode_tiff's shape contract. Reversible (5/3) and
     scalar-quantized irreversible (9/7) streams — single-tile or
-    tiled, tile-part-split, multi-layer — decode bindinglessly via
-    sources/j2k.py; anything outside that scope needs an OpenJPEG
-    binding (glymur, imageio+plugin, or a Pillow built with JP2)."""
+    tiled, tile-part-split, multi-layer — decode through the
+    clean-room codec in sources/j2k.py. A spec-legal feature outside
+    its scope raises ``NotImplementedError`` naming the feature;
+    corrupt data raises :class:`Jp2ParseError`."""
     from hortacloud_importer_spark.sources.j2k import (
         J2kParseError,
         J2kUnsupported,
@@ -239,80 +237,18 @@ def decode_jp2(data: bytes) -> np.ndarray:
     )
 
     h, w, nc = jp2_shape(data)  # validate + fail with real geometry
-    failures: list[str] = []
-    unsupported: str | None = None
     try:
         return _normalize(decode_j2k(extract_codestream(data)))
     except J2kUnsupported as exc:
-        # spec-legal feature outside the clean-room lossless scope:
-        # this is the case the binding chain exists for
-        unsupported = str(exc)
-    except (J2kParseError, Jp2ParseError) as exc:
-        # genuine parse trouble — still give a present binding the
-        # chance (it may tolerate encoder quirks we reject), but a
-        # bindingless environment reports the parse error, not the
-        # missing-codec gate
-        failures.append(f"j2k: {exc}")
-    # Each binding may be importable yet still lack JPEG-2000 support
-    # (imageio without its plugin raises OSError/ValueError from
-    # imread; Pillow built without OpenJPEG raises
-    # UnidentifiedImageError, a ValueError/OSError subclass) — treat
-    # those exactly like an absent import and fall through to the
-    # next binding, carrying the messages into the final gate so a
-    # genuine decode failure is still visible.
-    importable = 0
-    try:
-        import glymur  # type: ignore[import-not-found]
-        import tempfile
-
-        importable += 1
-
-        # glymur's API is file-based
-        with tempfile.NamedTemporaryFile(suffix=".jp2") as fh:
-            fh.write(data)
-            fh.flush()
-            arr = np.asarray(glymur.Jp2k(fh.name)[:])
-        return _normalize(arr)
-    except ImportError:
-        pass
-    except (OSError, ValueError, RuntimeError) as exc:
-        failures.append(f"glymur: {exc}")
-    try:
-        import imageio.v3 as iio  # type: ignore[import-not-found]
-
-        importable += 1
-        return _normalize(np.asarray(iio.imread(io.BytesIO(data), extension=".jp2")))
-    except ImportError:
-        pass
-    except (OSError, ValueError, RuntimeError) as exc:
-        failures.append(f"imageio: {exc}")
-    try:
-        import PIL.Image as Image  # type: ignore[import-not-found]
-
-        importable += 1
-        return _normalize(np.asarray(Image.open(io.BytesIO(data))))
-    except ImportError:
-        pass
-    except (OSError, ValueError, RuntimeError) as exc:
-        failures.append(f"PIL: {exc}")
-    if importable or (failures and unsupported is None):
-        # a binding WAS present and still failed, or the clean-room
-        # codec hit genuine parse trouble with no binding to retry:
-        # that is a decode failure (corrupt data or a half-installed
-        # plugin), not the missing-codec environment gate —
-        # NotImplementedError is reserved for the latter (the
-        # FIXTURES.md honesty-gate signal)
+        raise NotImplementedError(
+            f"JP2 decode ({h}x{w}, {nc} component(s)): the codestream "
+            f"uses {exc} — outside the clean-room codec's scope (5/3 "
+            "lossless and scalar-quantized 9/7, tiled/tile-part/layered)"
+        ) from exc
+    except J2kParseError as exc:
         raise Jp2ParseError(
-            f"JP2 decode failed ({h}x{w}, {nc} component(s)): "
-            + "; ".join(failures)
-        )
-    raise NotImplementedError(
-        f"JP2 decode ({h}x{w}, {nc} component(s)): the codestream uses "
-        f"{unsupported} — outside the clean-room codec's scope (5/3 "
-        "lossless and scalar-quantized 9/7, tiled/tile-part/layered) — "
-        "and no OpenJPEG binding is importable; install glymur, imageio "
-        "(with its JPEG-2000 plugin), or a Pillow built with OpenJPEG"
-    )
+            f"JP2 decode failed ({h}x{w}, {nc} component(s)): {exc}"
+        ) from exc
 
 
 def _normalize(arr: np.ndarray) -> np.ndarray:

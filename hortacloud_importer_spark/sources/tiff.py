@@ -18,15 +18,14 @@ horizontal predictor (tag 317), grayscale or multi-sample pages in
 both chunky and separate-plane layouts (PlanarConfiguration 1/2),
 8/16-bit unsigned, 32-bit IEEE float (SampleFormat 3), and bilevel
 CCITT fax pages (compressions 2/3/4 — T.4 MH, full Group 3, and
-Group 4, clean-room in sources/ccitt.py). Formats beyond that
-(old-style pointer-tag JPEG 6, JBIG, ...) require a codec library
-(tifffile/imageio, absent here — probe in FIXTURES.md) and raise
-``TiffParseError``.
+Group 4, clean-room in sources/ccitt.py). This is the engine's only
+TIFF decoder: other compressions (old-style pointer-tag JPEG 6, JBIG,
+...) raise ``TiffParseError`` naming the compression.
 
 Spark-side use: ``binaryFile`` scan -> ``decode_tiff`` inside a
 ``mapInPandas`` kernel (operators/multimodal.py routes ``format in
-('tiff', 'tif')`` here when tifffile/imageio are missing), so whole
-files move as Arrow-batched binary and pages decode on executors.
+('tiff', 'tif')`` here), so whole files move as Arrow-batched binary
+and pages decode on executors.
 ``decode_tiff_window`` decodes only the strips/tiles a window
 intersects — the read-side payoff of the reference's tiled rewrite.
 """
@@ -383,10 +382,9 @@ def _decode_block(
         raw = _packbits_decompress(raw, expect_bytes)
     elif compression != 1:
         raise TiffParseError(
-            f"compression {compression} needs a codec library (tifffile/"
-            "imageio — absent in this container, see FIXTURES.md); built-in "
+            f"unsupported TIFF compression {compression}; built-in "
             "codecs are uncompressed (1), zlib/deflate (8, 32946), LZW (5), "
-            "baseline JPEG (7), and PackBits (32773)"
+            "baseline JPEG (7), CCITT fax (2, 3, 4), and PackBits (32773)"
         )
     expect = rows * cols * spp
     arr = np.frombuffer(raw, dtype=dtype, count=min(expect, len(raw) // dtype.itemsize))

@@ -43,17 +43,15 @@ def _dup_corpus(con):
     ]
 
 
-def test_dedup_substring_reference(con):
-    from hortacloud_importer_spark.queries.dedup import _SUBSTR_ORACLE
-
-    corpus = _dup_corpus(con)
-    # reference: count every L-char window corpus-wide, then merge
-    # the duplicated positions per doc into maximal spans
+def substring_spans_ref(corpus, L: int = L) -> dict:
+    """Plain-Python substring dedup over (doc_id, text) pairs: count
+    every L-char window corpus-wide, then merge each doc's duplicated
+    positions into maximal 0-based ``[s, e)`` spans."""
     counts: Counter = Counter()
     for _, text in corpus:
         for i in range(len(text) - L + 1):
             counts[text[i : i + L]] += 1
-    expected = {}
+    out = {}
     for doc_id, text in corpus:
         spans = []
         for i in range(len(text) - L + 1):
@@ -63,6 +61,18 @@ def test_dedup_substring_reference(con):
                 spans[-1][1] = max(spans[-1][1], i + L)
             else:
                 spans.append([i, i + L])
+        out[doc_id] = spans
+    return out
+
+
+def test_dedup_substring_reference(con):
+    from hortacloud_importer_spark.queries.dedup import _SUBSTR_ORACLE
+
+    corpus = _dup_corpus(con)
+    ref = substring_spans_ref(corpus)
+    expected = {}
+    for doc_id, text in corpus:
+        spans = ref[doc_id]
         expected[doc_id] = (
             len(spans),
             sum(e - s for s, e in spans),
@@ -81,16 +91,8 @@ def test_dedup_substring_reference(con):
 
     cleaned_expect = {}
     for doc_id, text in corpus:
-        spans = []
-        for i in range(len(text) - L + 1):
-            if counts[text[i : i + L]] < 2:
-                continue
-            if spans and i <= spans[-1][1]:
-                spans[-1][1] = max(spans[-1][1], i + L)
-            else:
-                spans.append([i, i + L])
         out, prev = [], 0
-        for s, e in spans:
+        for s, e in ref[doc_id]:
             out.append(text[prev:s])
             prev = e
         out.append(text[prev:])

@@ -121,6 +121,9 @@ def test_compressed_format_gated():
         _decode_one(
             "png", b"\x89PNG\r\n\x1a\n\x00", {"height": 1, "width": 1, "channels": 1, "n_frames": 1}
         )
+    # a format no built-in decoder covers names the built-in set
+    with pytest.raises(NotImplementedError, match="'xcf'.*tiff, jpeg, png"):
+        _decode_one("xcf", b"gimp xcf v011", {})
 
 
 def test_arrow_batch_shape(spark):
@@ -132,21 +135,12 @@ def test_arrow_batch_shape(spark):
 
 
 def test_tiff_routes_to_baseline_reader():
-    """With tifffile/imageio absent (probe in FIXTURES.md), the tiff
-    format routes to the clean-room baseline reader; compressed files
-    fail with a clear codec error, not a crash."""
+    """The tiff format routes to the clean-room baseline reader."""
     import numpy as np
-    import pytest
 
     from hortacloud_importer_spark.operators.multimodal import _decode_one
     from hortacloud_importer_spark.sources.tiff import encode_tiff
 
-    try:
-        import tifffile  # noqa: F401
-
-        pytest.skip("tifffile present; fallback not exercised")
-    except ImportError:
-        pass
     page = np.arange(12, dtype=np.uint8).reshape(1, 3, 4)
     got = _decode_one(
         "tiff",
@@ -209,19 +203,12 @@ def test_retile_tiff_windowed_read_payoff(spark):
 
 def test_decode_one_jpeg_via_builtin_codec():
     """The jpeg multimodal format decodes through the clean-room T.81
-    decoder when PIL is absent (this container)."""
+    decoder."""
     import numpy as np
-    import pytest
 
     from hortacloud_importer_spark.operators.multimodal import _decode_one
     from hortacloud_importer_spark.sources.jpeg import encode_jpeg
 
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present; the builtin fallback is shadowed")
-    except ImportError:
-        pass
     rng = np.random.default_rng(23)
     img = rng.integers(0, 256, (16, 24), dtype=np.uint8)
     arr = _decode_one("jpeg", encode_jpeg(img), {})

@@ -468,27 +468,17 @@ def test_lm_text_ops_shuffle_digests_not_grams(spark, sf_dir, qname):
         assert "text" not in first_line, first_line
 
 
-def test_seeded_substring_dedup_plan(spark, sf_dir):
-    """The minimizer-seeded variant's contract: no exchange ever
-    carries document text (the broadcast hands anchor POSITIONS back
-    to the corpus scan), the seed shuffle carries the int64 xxhash
-    (not a wide digest), and the survivors side reaches the corpus
-    via a broadcast join."""
-    plan = _plan(spark, "dedup_substring_seeded", sf_dir)
+def test_substring_dedup_shuffles_binary_digest(spark, sf_dir):
+    """The seeded finder's contract: the seed shuffle carries the
+    int64 xxhash (not a wide digest), the survivors side reaches the
+    corpus via a broadcast join (anchor POSITIONS go back to the
+    corpus scan), candidates are verified with the 16-byte BINARY
+    digest (unhex), and document text appears in no exchange's output
+    schema."""
+    plan = _plan(spark, "dedup_substring", sf_dir)
     assert "xxhash64" in plan
     assert "BroadcastHashJoin" in plan
-    for chunk in plan.split("Exchange")[1:]:
-        first_line = chunk.splitlines()[0]
-        assert "text" not in first_line, first_line
-
-
-def test_substring_dedup_shuffles_binary_digest(spark, sf_dir):
-    """The gram shuffle must carry the 16-byte BINARY digest (unhex),
-    never the window text; document text must not appear in any
-    exchange's output schema."""
-    plan = _plan(spark, "dedup_substring", sf_dir)
     assert "unhex" in plan
-    assert "substring(text" in plan  # windows read at the scan...
     for chunk in plan.split("Exchange")[1:]:
         first_line = chunk.splitlines()[0]
         assert "text" not in first_line, first_line
@@ -525,23 +515,6 @@ def test_simhash_budget_adds_no_exchange_at_scale(spark, sf_dir):
     assert len(agg_idx) == 2, budg
     span = "\n".join(lines[agg_idx[0]: agg_idx[1] + 1])
     assert "Exchange" not in span, span
-
-
-def test_substring_df_prefilter_plan(spark, sf_dir):
-    """The DF pre-filter variant's contract: the corpus-wide count
-    pass shuffles ONLY the 8-byte xxhash64 seed (a hash aggregate
-    with a partial stage — no doc_id/pos payload, no sort), and no
-    exchange anywhere carries document text (md5 is computed before
-    the semi-join so even a shuffle-fallback join moves digests)."""
-    plan = _plan(spark, "dedup_substring_df", sf_dir)
-    assert "xxhash64" in plan
-    assert "unhex" in plan
-    # the seed DF count must be a partial-aggregated HashAggregate
-    # keyed on xh alone
-    assert "partial_count" in plan
-    for chunk in plan.split("Exchange")[1:]:
-        first_line = chunk.splitlines()[0]
-        assert "text" not in first_line, first_line
 
 
 def test_ingest_increment_exchanges_digests_only(spark, sf_dir):

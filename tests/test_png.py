@@ -150,16 +150,8 @@ def test_crc_and_gates():
 
 
 def test_multimodal_png_hook():
-    import pytest as _pytest
-
     from hortacloud_importer_spark.operators.multimodal import _decode_one
 
-    try:
-        import PIL  # noqa: F401
-
-        _pytest.skip("PIL present; the builtin fallback is shadowed")
-    except ImportError:
-        pass
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
     arr = _decode_one("png", encode_png(img), {})

@@ -1,19 +1,20 @@
-"""Seeded substring dedup must be BYTE-IDENTICAL to the stride-1
-baseline on adversarial corpora — the registry oracle pins both on the
-fixture corpus; this suite attacks the seeding machinery's edges:
-minimizer ties (degenerate repeated-char text), spans at document
-boundaries, exactly-L documents, and islands that merge."""
+"""The minimizer-seeded substring finder must match a plain-Python
+window-count reference exactly on adversarial corpora — the registry
+oracle pins it on the fixture corpus; this suite attacks the seeding
+machinery's edges: minimizer ties (degenerate repeated-char text),
+spans at document boundaries, exactly-L documents, and islands that
+merge."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.queries.dedup import (
     _SUBSTR_L,
+    _substring_spans,
     substring_find,
-    substring_find_seeded,
 )
+from tests.test_llm_ops_reference import substring_spans_ref
 
 
 def _corpus(spark, texts):
@@ -63,10 +64,23 @@ CASES = {
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_seeded_equals_baseline(spark, name):
-    corpus = _corpus(spark, CASES[name])
-    base = _rows(substring_find(corpus))
-    seed = _rows(substring_find_seeded(corpus))
-    assert seed == base, f"{name}: seeded diverged from stride-1"
+    """The baseline is the plain-Python window-count reference."""
+    texts = CASES[name]
+    corpus = _corpus(spark, texts)
+    ref = substring_spans_ref(list(enumerate(texts)), _SUBSTR_L)
+    # the finder's spans are 1-based, ``e`` exclusive
+    spans = sorted(
+        (r["doc_id"], r["s"] - 1, r["e"] - 1)
+        for r in _substring_spans(corpus).collect()
+    )
+    assert spans == sorted(
+        (d, s, e) for d, sp in ref.items() for s, e in sp
+    ), name
+    expected = sorted(
+        (d, len(ref[d]), sum(e - s for s, e in ref[d]), len(t))
+        for d, t in enumerate(texts)
+    )
+    assert _rows(substring_find(corpus)) == expected, name
 
 
 def test_seeded_rejects_over_length_docs(spark):
@@ -76,4 +90,4 @@ def test_seeded_rejects_over_length_docs(spark):
 
     corpus = _corpus(spark, ["w" * (1 << 20)])
     with pytest.raises(SparkRuntimeException, match="chunk it upstream"):
-        substring_find_seeded(corpus).collect()
+        substring_find(corpus).collect()

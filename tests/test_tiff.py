@@ -81,7 +81,7 @@ def test_compressed_raises_with_codec_hint():
     # JPEG stays gated (new-style 7 decodes via sources/jpeg.py now)
     idx = blob.find(struct.pack("<HHI", 259, 3, 1))
     bad = blob[: idx + 8] + struct.pack("<HH", 6, 0) + blob[idx + 12 :]
-    with pytest.raises(TiffParseError, match="codec"):
+    with pytest.raises(TiffParseError, match="compression 6; built-in codec"):
         decode_tiff(bad)
 
 

@@ -86,10 +86,7 @@ QUERIES = [
     # fanout irrelevant) and record a fictional wall — the round-11
     # lesson (commit b7fe00e). The checksum aggregate touches every
     # output column of every row, so nothing prunes.
-    ("dedup_substring", "stride-1 exactness: ~28 shuffle B per corpus char"),
-    ("dedup_substring_df",
-     "DF pre-filter: 8-byte seed count, exact verify on candidates"),
-    ("dedup_substring_seeded", "minimizer seeds: same output, thin shuffles"),
+    ("dedup_substring", "minimizer seeds, exact verify on candidates"),
     ("dedup_substring_apply", "span rewrite: text shuffles ONCE by necessity"),
     # r14: incremental ingest against the committed fingerprint store —
     # only 16-byte digests move; gen-0 commit + classify + gen-1 append
@@ -122,8 +119,6 @@ FULL_AGG = {
     "corpus_ingest_increment",
     "q_dataset_build",
     "dedup_substring",
-    "dedup_substring_df",
-    "dedup_substring_seeded",
     "dedup_substring_apply",
     "text_ngram_ppx",
     "text_ngram_ppx_norm",
@@ -310,13 +305,12 @@ def main() -> int:
     )
     ap.add_argument(
         "--mode", choices=["registry", "substring"], default="registry",
-        help="'substring' = the seeded-vs-stride-1 comparison at the "
-        "operator's documented operating point: a UNIQUE corpus (no "
-        "planted whole-doc dups — substring dedup runs post doc-level "
-        "dedup) whose only duplication is the --boilerplate passage; "
-        "runs substring_find / substring_find_seeded directly on the "
-        "raw documents table and writes a dedicated SOAK section. "
-        "Needs its own SOAK_CORPUS_DIR.",
+        help="'substring' = the substring finder at its documented "
+        "operating point: a UNIQUE corpus (no planted whole-doc dups — "
+        "substring dedup runs post doc-level dedup) whose only "
+        "duplication is the --boilerplate passage; runs substring_find "
+        "directly on the raw documents table and writes a dedicated "
+        "SOAK section. Needs its own SOAK_CORPUS_DIR.",
     )
     args = ap.parse_args()
     N_DOCS = N_VECS = args.docs
@@ -325,12 +319,7 @@ def main() -> int:
     queries = QUERIES
     if args.mode == "substring":
         queries = [
-            ("substring_find",
-             "stride-1 exactness: ~28 shuffle B per corpus char"),
-            ("substring_find_df",
-             "DF pre-filter: 8-byte seed count, exact verify on candidates"),
-            ("substring_find_seeded",
-             "minimizer seeds: same output, thin shuffles"),
+            ("substring_find", "minimizer seeds, exact verify on candidates"),
         ]
     elif args.queries:
         wanted = set(args.queries.split(","))
@@ -420,25 +409,16 @@ def main() -> int:
     )
 
     from hortacloud_importer_spark.catalog import table
-    from hortacloud_importer_spark.queries.dedup import (
-        substring_find,
-        substring_find_df,
-        substring_find_seeded,
-    )
+    from hortacloud_importer_spark.queries.dedup import substring_find
 
-    def _raw_corpus_fn(op):
-        # --mode substring: the operator runs on the RAW documents
-        # table (no _dup_corpus wrapper — that wrapper exists for the
-        # oracle fixture's planted duplication, and substring dedup's
-        # documented operating point is post doc-level dedup)
-        return lambda spark, sf: op(
-            table(spark, sf, "documents").select("doc_id", "text")
-        )
-
+    # --mode substring: the operator runs on the RAW documents table
+    # (no _dup_corpus wrapper — that wrapper exists for the oracle
+    # fixture's planted duplication, and substring dedup's documented
+    # operating point is post doc-level dedup)
     extra_fns = {
-        "substring_find": _raw_corpus_fn(substring_find),
-        "substring_find_df": _raw_corpus_fn(substring_find_df),
-        "substring_find_seeded": _raw_corpus_fn(substring_find_seeded),
+        "substring_find": lambda spark, sf: substring_find(
+            table(spark, sf, "documents").select("doc_id", "text")
+        ),
     }
 
     phases = []
@@ -612,21 +592,6 @@ def _write_md(r: dict) -> None:
             f"{p['shuf_read_mb']} |"
         )
     by_q = {p["query"]: p for p in r["phases"]}
-    if "dedup_substring" in by_q and "dedup_substring_seeded" in by_q:
-        base, seed = by_q["dedup_substring"], by_q["dedup_substring_seeded"]
-        tot_b = base["shuf_write_mb"] + base["shuf_read_mb"]
-        tot_s = seed["shuf_write_mb"] + seed["shuf_read_mb"]
-        ratio = round(tot_b / max(tot_s, 0.1), 1)
-        lines += [
-            "",
-            "Substring-dedup seeding (identical output, one shared "
-            f"oracle): the stride-1 baseline moved **{tot_b:,.0f} MiB** "
-            f"of shuffle (write+read), the minimizer-seeded variant "
-            f"**{tot_s:,.0f} MiB** — a **{ratio}x reduction** at "
-            f"{n:,} docs. Both rows above were measured with the "
-            "full-checksum trigger (every output column of every row "
-            "aggregated), so neither wall is pruned fiction.",
-        ]
     if "dedup_minhash" in by_q and not r.get("unique"):
         lines += [
             "",
@@ -720,11 +685,10 @@ def _write_md(r: dict) -> None:
 
 
 def _write_md_substring(r: dict) -> None:
-    """Dedicated SOAK section for the seeded-vs-stride-1 comparison
-    at substring dedup's operating point."""
+    """Dedicated SOAK section for the substring finder at substring
+    dedup's operating point."""
     n = r["n_docs"]
     bp = r.get("boilerplate", 0.0)
-    by_q = {p["query"]: p for p in r["phases"]}
     lines = [
         f"# SUBSTRING SEED SOAK — {n:,} UNIQUE documents, "
         f"{int(bp * 100)}% boilerplate passages",
@@ -736,12 +700,10 @@ def _write_md_substring(r: dict) -> None:
         f"doc-level dedup), with {int(bp * 100)}% of docs sharing one "
         "fixed 20-word boilerplate prefix (the licenses / cookie "
         "banners / quoted reposts the operator exists to find). "
-        "`substring_find` and `substring_find_seeded` (the operators "
-        "behind the `dedup_substring*` registry queries) run directly "
-        "on the raw documents table; both measured with the "
-        "full-checksum trigger so neither wall is pruned fiction. "
-        "Their outputs are byte-identical by construction (one shared "
-        "DuckDB oracle pins both).",
+        "`substring_find` (the operator behind the `dedup_substring` "
+        "registry query) runs directly on the raw documents table, "
+        "measured with the full-checksum trigger so its wall is not "
+        "pruned fiction.",
         "",
         "| operator | rows | wall s | input MiB "
         "| shuffle write MiB | shuffle read MiB |",
@@ -753,46 +715,6 @@ def _write_md_substring(r: dict) -> None:
             f"{p['input_mb']} | {p['shuf_write_mb']} | "
             f"{p['shuf_read_mb']} |"
         )
-    if "substring_find" in by_q and "substring_find_seeded" in by_q:
-        base = by_q["substring_find"]
-        seed = by_q["substring_find_seeded"]
-        tot_b = base["shuf_write_mb"] + base["shuf_read_mb"]
-        tot_s = seed["shuf_write_mb"] + seed["shuf_read_mb"]
-        ratio = round(tot_b / max(tot_s, 0.1), 1)
-        wr = round(base["wall_sec"] / max(seed["wall_sec"], 0.1), 1)
-        lines += [
-            "",
-            f"**Shuffle (write+read): {tot_b:,.0f} MiB stride-1 vs "
-            f"{tot_s:,.0f} MiB seeded — a {ratio}x reduction** "
-            f"(wall {base['wall_sec']}s vs {seed['wall_sec']}s, "
-            f"{wr}x). The seeded win scales with corpus UNIQUENESS: "
-            "every truly duplicated position must still be verified "
-            "with a full-width digest row, so on a heavily duplicated "
-            "corpus (the registry fixture is ~46% duplicated content "
-            "by construction) the two converge — see the "
-            "dedup_substring rows in the CORPUS SOAK section for that "
-            "honest bound.",
-        ]
-    if "substring_find" in by_q and "substring_find_df" in by_q:
-        base = by_q["substring_find"]
-        dfp = by_q["substring_find_df"]
-        tot_b = base["shuf_write_mb"] + base["shuf_read_mb"]
-        tot_d = dfp["shuf_write_mb"] + dfp["shuf_read_mb"]
-        ratio = round(tot_b / max(tot_d, 0.1), 1)
-        wr = round(base["wall_sec"] / max(dfp["wall_sec"], 0.1), 1)
-        lines += [
-            "",
-            f"**DF pre-filter (round-14 ask #2): {tot_b:,.0f} MiB "
-            f"stride-1 vs {tot_d:,.0f} MiB DF-filtered — {ratio}x** "
-            f"(wall {base['wall_sec']}s vs {dfp['wall_sec']}s, "
-            f"{wr}x). The corpus-wide pass shrinks to an 8-byte "
-            "hash-aggregated seed count (no sort, no doc/pos "
-            "payload); the exact md5 verify then runs on candidate "
-            "positions only. Same degradation mode as seeding: as the "
-            "duplicated fraction grows, candidates approach all "
-            "positions — the dedup_substring_df row in the CORPUS "
-            "SOAK section bounds that end.",
-        ]
     lines.append("")
     _splice_md(lines)
 
