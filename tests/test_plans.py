@@ -468,16 +468,25 @@ def test_lm_text_ops_shuffle_digests_not_grams(spark, sf_dir, qname):
         assert "text" not in first_line, first_line
 
 
-def test_substring_dedup_shuffles_binary_digest(spark, sf_dir):
-    """The seeded finder's contract: the seed shuffle carries the
-    int64 xxhash (not a wide digest), the survivors side reaches the
-    corpus via a broadcast join (anchor POSITIONS go back to the
-    corpus scan), candidates are verified with the 16-byte BINARY
-    digest (unhex), and document text appears in no exchange's output
-    schema."""
+def test_seeded_substring_dedup_plan(spark, sf_dir):
+    """The minimizer-seeded finder's contract: no exchange ever
+    carries document text (the broadcast hands anchor POSITIONS back
+    to the corpus scan), the seed shuffle carries the int64 xxhash
+    (not a wide digest), and the survivors side reaches the corpus
+    via a broadcast join."""
     plan = _plan(spark, "dedup_substring", sf_dir)
     assert "xxhash64" in plan
     assert "BroadcastHashJoin" in plan
+    for chunk in plan.split("Exchange")[1:]:
+        first_line = chunk.splitlines()[0]
+        assert "text" not in first_line, first_line
+
+
+def test_substring_dedup_shuffles_binary_digest(spark, sf_dir):
+    """Candidates are verified with the 16-byte BINARY digest (unhex),
+    never the window text; document text must not appear in any
+    exchange's output schema."""
+    plan = _plan(spark, "dedup_substring", sf_dir)
     assert "unhex" in plan
     for chunk in plan.split("Exchange")[1:]:
         first_line = chunk.splitlines()[0]
