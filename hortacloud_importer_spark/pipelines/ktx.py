@@ -9,14 +9,18 @@ own mipmap chain (the bounded-state cascade), and writes one
 - list: ``_block_file_groups`` — the store's committed block files as
   PATH rows (one row per file, or one row per block holding its
   channel files when interleaving); no payload is read or shuffled;
-- convert: ``ktx_convert_blocks_fused`` — the whole per-block pass
-  (input stats, requant, optional XY halving, the in-block mip chain,
-  KTX encode) as ONE executor kernel per block that reads its own
-  file(s): a map-only plan (one paths-only groupBy when interleaving
-  channels), because every step is block-local, exactly like the
-  reference's one-task-per-node execution;
-- sink: the kernel's rows -> the ``ktx_files`` DataSource writer
-  (idempotent names, sharded manifest commit).
+- convert and write: one ``mapInPandas`` kernel per block
+  (``_write_ktx_blocks`` over ``_block_converter``: input stats, requant, optional XY halving,
+  the in-block mip chain, KTX encode) that reads its own file(s) and
+  writes its own ``.ktx`` with ``datasource.write_ktx_block``
+  (idempotent names, staged tmp+rename): a map-only plan (one
+  paths-only groupBy when interleaving channels), because every step
+  is block-local, exactly like the reference's one-task-per-node
+  execution;
+- commit: the kernel returns only the written names, and the driver
+  appends ONE manifest shard naming them (sources/manifest.py) — the
+  same commit the ``ktx_files`` DataSource writer makes, without its
+  write and commit planner processes.
 """
 
 from __future__ import annotations
@@ -25,9 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
-from hortacloud_importer_spark.sources.datasource import (
-    register_volume_sources,
-)
+from hortacloud_importer_spark.sources.datasource import _pa_fs, write_ktx_block
 
 
 def _block_file_groups(
@@ -104,41 +106,26 @@ def _block_file_groups(
     return groups.repartition(spark.sparkContext.defaultParallelism)
 
 
-def ktx_convert_blocks_fused(
-    groups: DataFrame,
+def _block_converter(
     store_root: str,
     n_mips: int,
-    filter_: str = "arthur",
-    interleave: bool = False,
-    geometry=None,
-    downsample_intensity: bool = False,
-    downsample_xy: bool = False,
-) -> DataFrame:
+    filter_: str,
+    interleave: bool,
+    geometry,
+    downsample_intensity: bool,
+    downsample_xy: bool,
+):
     """The whole per-block KTX conversion — input statistics, requant,
-    optional XY halving, the in-block mip chain, encode — as ONE
-    executor-side kernel per block.
-
-    ``groups`` are :func:`_block_file_groups` PATH rows under
-    ``store_root``: one file per row when ``interleave=False``, a
-    block's channel files per row when ``interleave=True``. Each task
-    reads and decodes its own block's file(s), the reference's
-    one-task-per-node model (ktx_from_rendered_tiff.py:331-427).
-    Every step of the reference's pass-2 is block-local: stats,
-    percentiles and requant params are per (block, channel), the mip
-    chain never crosses a block boundary, and the KTX blob serializes
-    one block. So the conversion is ``mapInPandas`` over path rows
-    and no exchange carries a payload at any store size. Blocks are
-    bounded by construction (each came from one TIFF file), so the
-    in-memory NumPy chain is safe. The values are pinned to
-    independent NumPy references (``np_halve`` against the loop
-    mirror, ``volume.geometry.requantize``) and the stored bytes to
-    the golden digests of tests/test_golden_store.py.
-    """
+    optional XY halving, the in-block mip chain, encode — as one
+    function from a pandas batch of :func:`_block_file_groups` PATH
+    rows to KTX_SCHEMA row dicts. It runs inside an executor kernel and
+    reads each row's file(s) itself (one file per row when
+    ``interleave=False``, a block's channel files when
+    ``interleave=True``): the reference's one-task-per-node model
+    (ktx_from_rendered_tiff.py:331-427)."""
     import numpy as np
-    import pandas as pd
 
     from hortacloud_importer_spark.sources.ktx import (
-        KTX_SCHEMA,
         _channel_stats,
         _interleaved_block_row,
         _single_block_row,
@@ -191,62 +178,111 @@ def ktx_convert_blocks_fused(
             True,
         )
 
-    def fused_filegroups(batches):
+    def convert(pdf) -> list[dict]:
         import re as _re
 
-        from hortacloud_importer_spark.sources.datasource import _pa_fs
         from hortacloud_importer_spark.sources.tiff import decode_tiff
 
         filesystem, base = _pa_fs(store_root)
         prefix = f"{store_root.rstrip('/')}/"
         chan_re = _re.compile(r"default\.(\d+)\.tif$")
-        single = not interleave  # per_channel rows: one file per row
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                items = []
-                for path in row.paths:
-                    m = chan_re.search(path)
-                    if m is None:
-                        raise ValueError(
-                            f"block file {path!r} does not follow the "
-                            "store's default.<channel>.tif naming — "
-                            "cannot assign it a channel for KTX "
-                            "conversion"
-                        )
-                    rel = path.split(prefix, 1)[-1]
-                    with filesystem.open_input_stream(
-                        f"{base.rstrip('/')}/{rel}"
-                    ) as fh:
-                        arr = decode_tiff(fh.read())[..., 0]
-                    items.append((int(m.group(1)), arr, arr.shape))
-                zi, yi, xi = int(row.zi), int(row.yi), int(row.xi)
-                depth = int(row.depth)
-                if single:
-                    if len(items) != 1:
-                        raise ValueError(
-                            "interleave=False file-group rows must "
-                            f"carry exactly one file, got {len(items)}"
-                            " — grouped (multi-channel) rows need "
-                            "interleave=True"
-                        )
-                    ch, voxels, shape_in = items[0]
-                    levels, st, shape = convert_one(voxels, shape_in)
-                    out.append(
-                        _single_block_row(
-                            zi, yi, xi, depth, ch,
-                            [lv.astype(dtype).tobytes() for lv in levels],
-                            shape, itemsize, geometry, st, True,
-                        )
+        out = []
+        for row in pdf.itertuples():
+            items = []
+            for path in row.paths:
+                m = chan_re.search(path)
+                if m is None:
+                    raise ValueError(
+                        f"block file {path!r} does not follow the "
+                        "store's default.<channel>.tif naming — "
+                        "cannot assign it a channel for KTX "
+                        "conversion"
                     )
-                else:
-                    out.append(interleaved_row(zi, yi, xi, depth, items))
-            yield pd.DataFrame(out)
+                rel = path.split(prefix, 1)[-1]
+                with filesystem.open_input_stream(
+                    f"{base.rstrip('/')}/{rel}"
+                ) as fh:
+                    arr = decode_tiff(fh.read())[..., 0]
+                items.append((int(m.group(1)), arr, arr.shape))
+            zi, yi, xi = int(row.zi), int(row.yi), int(row.xi)
+            depth = int(row.depth)
+            if interleave:
+                out.append(interleaved_row(zi, yi, xi, depth, items))
+                continue
+            if len(items) != 1:
+                raise ValueError(
+                    "interleave=False file-group rows must "
+                    f"carry exactly one file, got {len(items)}"
+                    " — grouped (multi-channel) rows need "
+                    "interleave=True"
+                )
+            ch, voxels, shape_in = items[0]
+            levels, st, shape = convert_one(voxels, shape_in)
+            out.append(
+                _single_block_row(
+                    zi, yi, xi, depth, ch,
+                    [lv.astype(dtype).tobytes() for lv in levels],
+                    shape, itemsize, geometry, st, True,
+                )
+            )
+        return out
 
-    # at most one metadata shuffle (the interleave channel-pairing
-    # groupBy in _block_file_groups) moves paths; a resume filter
-    # upstream acts on paths, so committed blocks are never opened
-    return groups.mapInPandas(fused_filegroups, KTX_SCHEMA)
+    return convert
+
+
+def _write_ktx_blocks(
+    groups: DataFrame,
+    store_root: str,
+    out_dir: str,
+    n_mips: int,
+    filter_: str = "arthur",
+    interleave: bool = False,
+    geometry=None,
+    downsample_intensity: bool = False,
+    downsample_xy: bool = False,
+    lz4: bool = False,
+) -> DataFrame:
+    """The per-block KTX conversion (:func:`_block_converter`) as a
+    ``mapInPandas`` from :func:`_block_file_groups` PATH rows under
+    ``store_root`` that writes each block's ``.ktx`` under ``out_dir``
+    with ``datasource.write_ktx_block`` and returns only the written
+    names (``rel``) for the driver to commit.
+
+    Every step of the reference's pass-2 is block-local: stats,
+    percentiles and requant params are per (block, channel), the mip
+    chain never crosses a block boundary, and the KTX blob serializes
+    one block. So no exchange carries a payload at any store size.
+    Blocks are bounded by construction (each came from one TIFF file),
+    so the in-memory NumPy chain is safe. The values are pinned to
+    independent NumPy references (``np_halve`` against the loop
+    mirror, ``volume.geometry.requantize``) and the stored bytes to
+    the golden digests of tests/test_golden_store.py.
+    """
+    import pandas as pd
+
+    convert = _block_converter(
+        store_root, n_mips, filter_, interleave, geometry,
+        downsample_intensity, downsample_xy,
+    )
+
+    def convert_and_write(batches):
+        filesystem, base = _pa_fs(out_dir)
+        base = base.rstrip("/")
+        filesystem.create_dir(base, recursive=True)
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "rel": [
+                        write_ktx_block(
+                            filesystem, base, r["zi"], r["yi"], r["xi"],
+                            r["depth"], r["channel"], r["ktx"], lz4,
+                        )
+                        for r in convert(pdf)
+                    ]
+                }
+            )
+
+    return groups.mapInPandas(convert_and_write, "rel string")
 
 
 def tiff_octree_to_ktx(
@@ -303,7 +339,6 @@ def tiff_octree_to_ktx(
     beside the KTX output's parent directory, exactly where the
     reference leaves its lowest-resolution slices.
     """
-    register_volume_sources(spark)
     # path rows instead of decoded payloads (round-6 soak: a
     # payload-grouped interleave shuffled ~1 GiB at 2 GiB scale):
     # single-channel mode is one row per file with zero shuffle;
@@ -363,45 +398,42 @@ def tiff_octree_to_ktx(
             downsample_intensity=downsample_intensity,
         )
 
-    # the whole conversion as one executor-side kernel per block — a
-    # map-only plan over path rows, see ktx_convert_blocks_fused
-    (
-        ktx_convert_blocks_fused(
-            blocks,
-            store_root,
-            n_mips=n_mips,
-            filter_=filter_,
-            interleave=interleave,
-            geometry=geometry,
-            downsample_intensity=downsample_intensity,
-            downsample_xy=downsample_xy,
-        )
-        .write.format("ktx_files")
-        .option("lz4", str(lz4).lower())
-        .mode("append")
-        .save(out_dir)
-    )
+    out_fs, out_base = _pa_fs(out_dir)
+    out_base = out_base.rstrip("/")
+    had_manifest = manifest.has_manifest(out_fs, out_base)
+    # the whole conversion as one executor-side kernel per block that
+    # also writes its block's file: a map-only plan over path rows,
+    # whose only output is the written names the driver commits
+    rels = {
+        r["rel"]
+        for r in _write_ktx_blocks(
+            blocks, store_root, out_dir, n_mips, filter_, interleave,
+            geometry, downsample_intensity, downsample_xy, lz4,
+        ).collect()
+    }
+    out_fs.create_dir(out_base, recursive=True)
+    manifest.write_commit(out_fs, out_base, sorted(rels))
     if transform is not None:
         # the reference copies transform.txt beside the KTX output
         # verbatim (tiff2octree.py:894-901)
-        from hortacloud_importer_spark.sources.datasource import (
-            _copy_file,
-            _pa_fs,
-        )
+        from hortacloud_importer_spark.sources.datasource import _copy_file
 
         src_fs, src_base = _pa_fs(store_root)
-        dst_fs, dst_base = _pa_fs(out_dir)
-        dst_fs.create_dir(dst_base, recursive=True)
         _copy_file(
             src_fs,
             f"{src_base.rstrip('/')}/transform.txt",
-            dst_fs,
-            f"{dst_base.rstrip('/')}/transform.txt",
+            out_fs,
+            f"{out_base}/transform.txt",
         )
-    # distinct committed-file count via the manifest-shard DataFrame
-    # (one file per block in this sink, so n_blocks == n_files); the
-    # count is a Spark job over shard text files, never a driver set
-    n_files = int(manifest.committed_files_df(spark, out_dir).distinct().count())
+    # committed-file count (one file per block in this sink, so
+    # n_blocks == n_files): this run's names when it made the store's
+    # first commit, else a Spark job over the shard union (appends and
+    # resumes), never a driver-side set
+    n_files = len(rels)
+    if had_manifest:
+        n_files = int(
+            manifest.committed_files_df(spark, out_dir).distinct().count()
+        )
     if delete_source:
         _reclaim_source_store(spark, store_root, out_dir, depth)
     return spark.createDataFrame(

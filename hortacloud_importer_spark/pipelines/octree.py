@@ -5,7 +5,7 @@ slices -> infer dims -> cut the top level into octant blocks -> write
 leaf blocks (ZLIB TIFF under octree paths, skip-empty, sentinel files
 for resume) -> downsample level by level, writing each level one
 directory shallower, until the root block.  ``build_octree`` composes
-the engine's existing operators into exactly that run:
+the engine's operators into exactly that run:
 
 - scan: the ``tiff_volume`` DataSource (A1/A2 — decode on executors),
   or any (z, y, x, channel, intensity) DataFrame the caller provides
@@ -15,27 +15,37 @@ the engine's existing operators into exactly that run:
 - blocks: leaf-grid granularity — 2^(nlevels-1) blocks per axis, the
   reference's calc_optimal_nlevels arrangement
   (tiff2octree.py:618-626). Slice directories are cut into packed
-  tiles in-executor (``_slices_to_blocks``); DataFrame sources go
-  through ``densify`` + ``blockify``;
-- pyramid: one grouped-map per parent block and level — a single
-  packed-array shuffle per level: ``halve_blocks`` for the D1-D3
-  filters, ``assemble_halved_blocks`` after the per-block aa/spline3
-  kernels. Every level reuses the same leaf block DIMS, half the
-  block COUNT per axis (ktx/util.py:223-239), so level k lands at
-  octree depth nlevels-1-k — the root block is the lowest-resolution
-  mip;
-- sink: the ``tiff_blocks`` DataSource (A6 — octree-path ZLIB TIFF,
-  skip-empty, sharded manifest commit: one immutable shard per level,
-  sources/manifest.py);
-- resume (C4/A11): blocks whose file is already in the manifest are
-  anti-joined away BEFORE any payload work, the distributed dual of
-  the reference's per-block existence checks (tiff2octree.py:359-368,
-  1040-1041). The committed side is READ as a DataFrame from the
-  manifest shards (spark.read.text — splittable), never materialized
-  as a driver-side set, so resume scales to ~1e7-block stores.
+  one-plane tiles in-executor (``_slice_pieces``); DataFrame sources
+  go through ``densify`` + ``blockify`` (``_block_pieces``);
+- pyramid and sink: passes of ONE grouped kernel per subtree
+  (``_subtree_pass``). A pass groups its pieces by their ancestor s
+  levels up (s from ``_SUBTREE_BYTES``: the most levels whose 8^s
+  pieces fit the per-task budget; a first pass over blocks too big
+  for it spans 0 levels and writes each leaf alone), assembles each
+  group's region, halves it level by level (``np_halve``; the
+  ``KERNELS`` function per block for aa/spline3) and writes every
+  non-empty block of every level it spans as octree-path ZLIB TIFF (A6,
+  ``datasource.write_tiff_block``) from inside the kernel. Every
+  level reuses the same leaf block DIMS, half the block COUNT per
+  axis (ktx/util.py:223-239), so level k lands at octree depth
+  nlevels-1-k — the root block is the lowest-resolution mip. The
+  next pass starts from the group roots; at small sizes one pass
+  builds the whole tree with one shuffle (the tiles);
+- commit: the driver appends ONE manifest shard per pass naming the
+  paths the kernels returned (sources/manifest.py); the per-level
+  summary counts those paths by depth;
+- resume (C4/A11): committed paths are READ as a DataFrame from the
+  manifest shards (spark.read.text — splittable) and cogrouped with
+  the pieces on the subtree key, never materialized as a driver-side
+  set, so resume scales to ~1e7-block stores. The pyramid is always
+  recomputed from the source and a committed file is never
+  rewritten — the distributed dual of the reference's per-block
+  existence checks (tiff2octree.py:359-368, 1040-1041).
 
-Everything stays declarative until the sink: one leaf scan, one
-shuffle per level, no driver-side payloads.
+One source scan, one shuffle per pass, no driver-side payloads, and
+per-task memory bounded by one subtree region: ``_SUBTREE_BYTES`` of
+int32 canvas, or one leaf block when that alone is bigger (eight for
+odd block dims), plus ``np_halve``'s temporaries.
 """
 
 from __future__ import annotations
@@ -45,25 +55,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
+from hortacloud_importer_spark.sources.block_store import rel_block_coords
 from hortacloud_importer_spark.sources.datasource import (
     _pa_fs,
     register_volume_sources,
+    tiff_block_rel,
+    write_tiff_block,
 )
 from hortacloud_importer_spark.volume import (
     blockify,
     densify,
     mipmap_dimension,
-    octree_path,
 )
-from hortacloud_importer_spark.operators.kernels import (
-    KERNELS,
-    downsample_blocks_kernel,
-)
-from hortacloud_importer_spark.volume.downsample import (
-    FILTERS,
-    assemble_halved_blocks,
-    halve_blocks,
-)
+from hortacloud_importer_spark.operators.kernels import KERNELS
+from hortacloud_importer_spark.volume.downsample import FILTERS, np_halve
 
 
 def _infer_dims(voxels: DataFrame) -> tuple[int, int, int]:
@@ -141,7 +146,7 @@ def _infer_slice_dims(
     return len(files), h, w
 
 
-def _slices_to_blocks(
+def _slice_pieces(
     spark: SparkSession,
     source: str,
     block_dims: tuple[int, int, int],
@@ -149,25 +154,20 @@ def _slices_to_blocks(
     channels: int,
     suffix: str = ".tif",
 ) -> DataFrame:
-    """Leaf ingest as packed tiles: slice rows (``emit=slices``) are
-    cut into per-(yi, xi) block tiles in-executor and ONE shuffle
-    assembles each block from its bz tiles — the packed dual of
-    exploding every slice to voxel rows and re-aggregating with
-    blockify (whose shuffle carries four coordinate columns per
-    intensity and, for non-grid dims, a densify grid join). Y/X
-    zero-padding happens on the tile canvas at cut time; missing z
-    tiles (z padding) zero-fill on the block canvas. This is the
-    dominant shuffle of a build — everything above it is 8x smaller
-    per level."""
+    """Leaf pieces of a slice directory: slice rows (``emit=slices``)
+    are cut into per-(yi, xi) block tiles in-executor — one z plane of
+    one leaf block per row (``lz`` = plane within the block), raw
+    uint16 bytes. The first subtree pass's shuffle groups them, so no
+    slice is ever exploded to voxel rows (whose shuffle would carry
+    four coordinate columns per intensity and, for non-grid dims, a
+    densify grid join). Y/X zero-padding happens on the tile canvas
+    at cut time; missing z tiles (z padding) zero-fill on the
+    kernel's region canvas."""
     import pandas as pd
 
     bz, by, bx = block_dims
     pz = padded_dims[0]
     gy, gx = padded_dims[1] // by, padded_dims[2] // bx
-
-    tile_schema = (
-        "zi int, lz int, yi int, xi int, channel int, tile binary"
-    )
 
     def cut(batches):
         import numpy as np
@@ -198,27 +198,25 @@ def _slices_to_blocks(
                             xi * bx : (xi + 1) * bx,
                         ]
                         if not tile.any():
-                            # skip-empty at TILE grain: the assemble
+                            # skip-empty at TILE grain: the region
                             # canvas zero-fills missing z-tiles, so an
                             # all-zero tile shuffles nothing — on
                             # blob-sparse microscopy most tiles are
-                            # background (a block with NO tiles simply
-                            # never materializes, which matches the
-                            # sink's skip-empty block filter)
+                            # background
                             continue
                         # raw little-endian bytes, not an int list:
                         # Arrow binary cells move as one buffer
                         out.append(
                             {
                                 "zi": z // bz,
-                                "lz": z % bz,
                                 "yi": yi,
                                 "xi": xi,
                                 "channel": int(row.channel),
-                                "tile": tile.astype("<u2").tobytes(),
+                                "lz": z % bz,
+                                "piece": tile.astype("<u2").tobytes(),
                             }
                         )
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(out, columns=_PIECE_COLS)
 
     tiles = None
     for ch in range(channels):
@@ -234,39 +232,232 @@ def _slices_to_blocks(
         part = (
             scan.load(source)
             .withColumn("channel", F.lit(ch))
-            .mapInPandas(cut, tile_schema)
+            .mapInPandas(cut, _PIECE_SCHEMA)
         )
         tiles = part if tiles is None else tiles.unionByName(part)
+    return tiles
 
-    out_schema = (
-        "zi int, yi int, xi int, channel int,"
-        " shape array<int>, voxels array<int>"
-    )
 
-    def assemble(key, pdf):
+def _block_pieces(blocks: DataFrame) -> DataFrame:
+    """blockify rows as whole-block pieces (``lz`` 0, raw int32 bytes:
+    DataFrame sources may carry wider intensities than uint16, and the
+    sink narrows them as it always has)."""
+    import pandas as pd
+
+    def pack(batches):
         import numpy as np
 
-        zi, yi, xi, ch = (int(k) for k in key)
-        block = np.zeros((bz, by, bx), dtype=np.int32)
-        for row in pdf.itertuples():
-            block[int(row.lz)] = np.frombuffer(
-                row.tile, dtype="<u2"
-            ).reshape(by, bx)
-        return pd.DataFrame(
-            [
+        for pdf in batches:
+            yield pd.DataFrame(
                 {
-                    "zi": zi,
-                    "yi": yi,
-                    "xi": xi,
-                    "channel": ch,
-                    "shape": [bz, by, bx],
-                    "voxels": block.ravel(),
-                }
-            ]
-        )
+                    "zi": pdf["zi"],
+                    "yi": pdf["yi"],
+                    "xi": pdf["xi"],
+                    "channel": pdf["channel"],
+                    "lz": 0,
+                    "piece": [
+                        np.asarray(v, dtype="<i4").tobytes()
+                        for v in pdf["voxels"]
+                    ],
+                },
+                columns=_PIECE_COLS,
+            )
 
-    return tiles.groupBy("zi", "yi", "xi", "channel").applyInPandas(
-        assemble, out_schema
+    return blocks.mapInPandas(pack, _PIECE_SCHEMA)
+
+
+# A subtree task assembles its group's region as one int32 canvas of
+# at most this many bytes, unless one block (eight for odd block dims)
+# is already bigger; np_halve's temporaries add a few times the canvas
+# to a task's peak.
+_SUBTREE_BYTES = 64 << 20
+
+# A piece is whole z planes of one block at the pass's input level:
+# leaf tiles (one plane at ``lz``), blockify rows and the previous
+# pass's group roots (whole, ``lz`` 0).
+_PIECE_COLS = ["zi", "yi", "xi", "channel", "lz", "piece"]
+_PIECE_SCHEMA = "zi int, yi int, xi int, channel int, lz int, piece binary"
+# One row per written file (``rel``) plus one per group carrying its
+# skip count and, unless the pass is the last, its root as a piece.
+_PASS_SCHEMA = "rel string, n_skipped int, " + _PIECE_SCHEMA
+
+
+def _pass_levels(block_dims: tuple[int, int, int], roots: bool) -> int:
+    """Levels one subtree pass spans: the largest s whose region of
+    8^s pieces fits ``_SUBTREE_BYTES`` as int32. A piece is one block,
+    or an eighth of one when it is a previous pass's halved root
+    (``roots`` and even block dims).
+
+    At least 1, so every pass makes progress — except the first pass
+    over even blocks, which may span 0 levels: it writes each leaf
+    block alone and ships it halved, so when 8 blocks are over the
+    budget no task holds more than one block (one leaf, or the 8
+    halved roots of the next pass). Odd blocks ship whole, so their
+    passes hold 8 blocks at the least."""
+    even = not any(b % 2 for b in block_dims)
+    piece = 4 * block_dims[0] * block_dims[1] * block_dims[2]
+    if roots and even:
+        piece //= 8
+    s = 0 if even and not roots else 1
+    while piece << (3 * (s + 1)) <= _SUBTREE_BYTES:
+        s += 1
+    return s
+
+
+def _subtree_pass(
+    pieces: DataFrame,
+    done: DataFrame | None,
+    out_dir: str,
+    nlevels: int,
+    lo: int,
+    hi: int,
+    block_dims: tuple[int, int, int],
+    filter_: str,
+    dtype: str,
+    piece_dtype: str,
+    roots: bool,
+) -> DataFrame:
+    """One pass of the subtree build: pieces at level ``lo`` — leaf
+    pieces, or the previous pass's ``roots`` (halved to level
+    ``lo + 1`` when the block dims are even) — are grouped by their
+    ancestor at level ``hi``; one grouped-map task per (subtree,
+    channel) assembles the region, writes every non-empty block of
+    every level from ``lo`` (``lo + 1`` for roots: the previous pass
+    wrote level ``lo``) up to the root at ``hi``, and returns the
+    written paths plus the root as the next pass's piece.
+
+    Halving: mean/max/arthur halve the whole region with
+    :func:`np_halve` (its extent is 2^k blocks, so pairs never
+    straddle two parents — the same values as halving each parent's
+    2x2x2 children, for odd block dims too); aa/spline3 apply their
+    ``KERNELS`` function per block and tile the halves. Roots ship
+    halved when every block dim is even (8x fewer bytes in the next
+    shuffle), whole otherwise.
+
+    ``done`` (rel paths of the store's committed files, or None) is
+    cogrouped on the same key, so a task skips its committed files
+    without any driver-side set: the pyramid is always recomputed
+    from the source, a committed file is never rewritten."""
+    import pandas as pd
+
+    span = hi - lo
+    bz, by, bx = block_dims
+    even = not (bz % 2 or by % 2 or bx % 2)
+    halved = roots and even
+    first = lo + 1 if roots else lo  # first level this pass writes
+    kernel = KERNELS.get(filter_)
+    last = hi == nlevels - 1
+
+    def halve(region):
+        import numpy as np
+
+        if kernel is None:
+            return np_halve(region, filter_).astype(np.int32)
+        n = region.shape[0] // bz  # blocks per axis
+        hz, hy, hx = bz // 2, by // 2, bx // 2
+        out = np.zeros((n * hz, n * hy, n * hx), dtype=np.int32)
+        for i, j, k in np.ndindex(n, n, n):
+            out[
+                i * hz : (i + 1) * hz,
+                j * hy : (j + 1) * hy,
+                k * hx : (k + 1) * hx,
+            ] = kernel(
+                region[
+                    i * bz : (i + 1) * bz,
+                    j * by : (j + 1) * by,
+                    k * bx : (k + 1) * bx,
+                ].astype(np.int64)
+            )
+        return out
+
+    def build(key, pdf, committed):
+        import numpy as np
+
+        gz, gy, gx, ch = (int(k) for k in key)
+        if pdf.empty:
+            return pd.DataFrame(columns=["rel", "n_skipped", *_PIECE_COLS])
+        # piece extent at the region's first level
+        pz, py, px = (b // 2 for b in block_dims) if halved else block_dims
+        n = 1 << span  # pieces per axis
+        region = np.zeros((n * pz, n * py, n * px), dtype=np.int32)
+        for row in pdf.itertuples():
+            arr = np.frombuffer(row.piece, dtype=piece_dtype).reshape(-1, py, px)
+            z0 = (int(row.zi) - (gz << span)) * pz + int(row.lz)
+            y0 = (int(row.yi) - (gy << span)) * py
+            x0 = (int(row.xi) - (gx << span)) * px
+            region[z0 : z0 + arr.shape[0], y0 : y0 + py, x0 : x0 + px] = arr
+        filesystem, base = _pa_fs(out_dir)
+        base = base.rstrip("/")
+        made_dirs: set[str] = set()
+        rows, skipped = [], 0
+        for level in range(lo + halved, hi + 1):
+            if level >= first:
+                depth = nlevels - level  # store depth: digit count + 1
+                up = hi - level
+                for i, j, k in np.ndindex(1 << up, 1 << up, 1 << up):
+                    zi, yi, xi = (gz << up) + i, (gy << up) + j, (gx << up) + k
+                    if tiff_block_rel(zi, yi, xi, ch, depth) in committed:
+                        continue
+                    rel = write_tiff_block(
+                        filesystem, base,
+                        region[
+                            i * bz : (i + 1) * bz,
+                            j * by : (j + 1) * by,
+                            k * bx : (k + 1) * bx,
+                        ],
+                        zi, yi, xi, ch, depth, dtype,
+                        made_dirs=made_dirs,
+                    )
+                    if rel is None:
+                        skipped += 1
+                    else:
+                        rows.append((rel, 0, 0, 0, 0, 0, 0, None))
+            if level < hi:
+                region = halve(region)
+        root = None
+        if not last:
+            root = (halve(region) if even else region).astype("<i4").tobytes()
+        rows.append((None, skipped, gz, gy, gx, ch, 0, root))
+        return pd.DataFrame(rows, columns=["rel", "n_skipped", *_PIECE_COLS])
+
+    keys = [
+        F.shiftright("zi", span).alias("gz"),
+        F.shiftright("yi", span).alias("gy"),
+        F.shiftright("xi", span).alias("gx"),
+        F.col("channel"),
+    ]
+    grouped = pieces.groupBy(*keys)
+    if done is None:
+        return grouped.applyInPandas(
+            lambda key, pdf: build(key, pdf, frozenset()), _PASS_SCHEMA
+        )
+    # committed files of the levels this pass writes, keyed by the
+    # subtree that owns them
+    zi_c, yi_c, xi_c, depth_c = rel_block_coords(F.col("rel"))
+    ch = F.regexp_extract("rel", r"default\.(\d+)\.tif$", 1)
+    level = F.lit(nlevels - 1) - F.col("_depth")
+
+    def owner(c: str):
+        # shift a level-``level`` coordinate up to the pass root at hi
+        return F.expr(f"shiftright({c}, {hi - nlevels + 1} + _depth)")
+
+    committed = (
+        done.filter(ch != "")
+        .select("rel", ch.cast("int").alias("channel"), zi_c, yi_c, xi_c, depth_c)
+        .filter(level.between(first, hi))
+        .select(
+            "rel",
+            owner("_zi").alias("gz"),
+            owner("_yi").alias("gy"),
+            owner("_xi").alias("gx"),
+            "channel",
+        )
+    )
+    return grouped.cogroup(
+        committed.groupBy("gz", "gy", "gx", "channel")
+    ).applyInPandas(
+        lambda key, pdf, rels: build(key, pdf, frozenset(rels["rel"])),
+        _PASS_SCHEMA,
     )
 
 
@@ -529,7 +720,7 @@ def build_octree(
         raise ValueError(
             f"unknown filter {filter_!r}; have {FILTERS + tuple(KERNELS)}"
         )
-    register_volume_sources(spark)  # tiff_volume scan + tiff_blocks sink
+    register_volume_sources(spark)  # the tiff_volume scan
     voxels: DataFrame | None = None
     # channels=None = "not stated": slice sources default to 1 (the
     # reference's single-channel default), DataFrame sources discover
@@ -560,9 +751,9 @@ def build_octree(
             f"kernel filter {filter_!r} needs even block dims, got {block_dims}"
         )
 
-    filesystem, base = _pa_fs(out_dir)
-    # committed side as a DataFrame (None = no manifest yet): the
-    # resume anti-join never materializes the set driver-side
+    # committed side as a DataFrame (None = no manifest yet): each
+    # subtree task gets its own committed paths by cogroup, so the set
+    # is never materialized driver-side
     done = manifest.committed_files_df(spark, out_dir) if resume else None
     if isinstance(source, str) or channels_known:
         # channel count is a scan parameter, not data — don't pay an
@@ -577,11 +768,12 @@ def build_octree(
         )
     padded = tuple(b * leaf_grid for b in block_dims)
     if isinstance(source, str):
-        # leaf ingest as packed tiles (one shuffle; y/x/z zero-pad on
-        # the tile/block canvases — no densify grid join)
-        blocks = _slices_to_blocks(
+        # leaf tiles, cut in-executor (y/x/z zero-pad on the tile and
+        # region canvases — no densify grid join); uint16 pieces
+        pieces = _slice_pieces(
             spark, source, block_dims, padded, channels, suffix
         )
+        piece_dtype = "<u2"
     else:
         if padded != dims:
             # Non-divisible dims leave edge blocks partial, which
@@ -593,98 +785,47 @@ def build_octree(
             # The pad join is the densify grid scan — only paid when
             # dims aren't grid-aligned.
             voxels = densify(voxels, spark, padded, channels=n_channels)
-        blocks = blockify(voxels, block_dims)
-    dims = padded
-    summary_rows = []
-    cur_dims = dims
-    seen_summaries = set(manifest.summary_files(filesystem, base))
-    # The source is scanned EXACTLY ONCE for the whole build: each
-    # level's blocks are persisted (memory, spilling to executor
-    # disk), the sink writes from that materialization, and the next
-    # level is derived from it. Without this, level k's write would
-    # recompute the whole chain from the source — k+1 source scans for
-    # a k-level build, which at 100 TB is the dominant cost. Each
-    # level is 8x smaller than the last, so peak persisted footprint
-    # is ~1.14x the leaf level, and parents are unpersisted as soon as
-    # their child level materializes.
-    prev: DataFrame | None = None
-    for level in range(nlevels):
-        depth = nlevels - level  # tiff_blocks nlevels option: digits+1
-        blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-        to_write = blocks
-        if done is not None:
-            rel = F.concat(
-                F.when(
-                    F.lit(depth > 1),
-                    F.concat(
-                        octree_path("zi", "yi", "xi", depth), F.lit("/")
-                    ),
-                ).otherwise(F.lit("")),
-                F.concat_ws("", F.lit("default."), "channel", F.lit(".tif")),
-            )
-            # no broadcast hint: the committed side can be ~1e7 paths
-            # at 100 TB; a shuffled anti-join on the path key is the
-            # scale-safe shape (AQE still broadcasts when it is small).
-            # Only the SINK side is filtered — the pyramid still needs
-            # every block's voxels, written or resumed.
-            to_write = (
-                blocks.withColumn("rel", rel)
-                .join(done, "rel", "left_anti")
-                .drop("rel")
-            )
-        (
-            to_write.write.format("tiff_blocks")
-            .option("nlevels", depth)
-            .option("dtype", dtype)
-            .mode("append")
-            .save(out_dir)
+        pieces = _block_pieces(blockify(voxels, block_dims))
+        piece_dtype = "<i4"
+
+    # Passes of one grouped kernel per subtree: each pass writes the
+    # levels lo..hi of its subtrees and commits ONE manifest shard; the
+    # next pass starts from the group roots. The source is scanned once;
+    # a pass's output (paths + roots, 8^s times smaller than its input)
+    # is persisted only when another pass reads it.
+    filesystem, base = _pa_fs(out_dir)
+    written = [0] * nlevels
+    lo, roots, prev = 0, False, None
+    while True:
+        hi = min(lo + _pass_levels(block_dims, roots), nlevels - 1)
+        out = _subtree_pass(
+            pieces, done, out_dir, nlevels, lo, hi, block_dims,
+            filter_, dtype, piece_dtype, roots,
         )
-        # this level is now materialized; its parent can be dropped
+        if hi < nlevels - 1:
+            out = out.persist(StorageLevel.MEMORY_AND_DISK)
+        rows = out.select("rel", "n_skipped").collect()
+        rels = [r["rel"] for r in rows if r["rel"] is not None]
+        filesystem.create_dir(base, recursive=True)
+        manifest.write_commit(
+            filesystem, base, sorted(rels),
+            n_skipped=sum(r["n_skipped"] for r in rows),
+        )
+        for rel in rels:
+            written[nlevels - 1 - rel.count("/")] += 1
         if prev is not None:
             prev.unpersist(blocking=False)
-        # accounting from metadata only — no extra jobs over the data:
-        # each level's write appends exactly one manifest shard, so
-        # "files written this level" is that shard's n_files (resumed
-        # and skipped blocks never reach the shard's file list)
-        new_summaries = [
-            p
-            for p in manifest.summary_files(filesystem, base)
-            if p not in seen_summaries
-        ]
-        seen_summaries.update(new_summaries)
-        n_blocks = sum(
-            int(manifest.read_summary(filesystem, p).get("n_files", 0))
-            for p in new_summaries
-        )
+        if hi == nlevels - 1:
+            break
+        pieces = out.filter(F.col("piece").isNotNull()).select(*_PIECE_COLS)
+        piece_dtype = "<i4"
+        lo, roots, prev = hi, True, out
+    summary_rows = []
+    cur_dims = padded
+    for level in range(nlevels):
         n_voxels = cur_dims[0] * cur_dims[1] * cur_dims[2] * n_channels
-        summary_rows.append((level, n_blocks, n_voxels))
-        if level < nlevels - 1:
-            if filter_ in FILTERS:
-                # mean/max/arthur at block granularity: assemble 8
-                # sibling blocks per parent and halve in-executor —
-                # ONE packed-array shuffle per level (see halve_blocks;
-                # values pinned by the NumPy-mirror tests in
-                # tests/test_octree_pipeline.py)
-                nxt = halve_blocks(
-                    blocks,
-                    filter_,
-                    # even dims: halve in place first so the level
-                    # shuffle moves child/8 bytes (SOAK.md)
-                    halve_first=not any(b % 2 for b in block_dims),
-                )
-            else:
-                # neighborhood kernels (aa / spline3,
-                # tiff2octree.py:244-261): halve each block's payload
-                # with the grouped-map kernel, then re-assemble 8
-                # half-size siblings into full child blocks with one
-                # packed-array shuffle
-                nxt = assemble_halved_blocks(
-                    downsample_blocks_kernel(blocks, filter_)
-                )
-            cur_dims = tuple(mipmap_dimension(1, d) for d in cur_dims)
-            prev, blocks = blocks, nxt
-        else:
-            blocks.unpersist(blocking=False)
+        summary_rows.append((level, written[level], n_voxels))
+        cur_dims = tuple(mipmap_dimension(1, d) for d in cur_dims)
     if write_transform:
         # the reference writes transform.txt once per build
         # (tiff2octree.py:842-901): origin verbatim (nm), s* = leaf

@@ -194,7 +194,14 @@ def path_block_coords(root: str):
     tiff2octree.py:281-292)."""
     import re as _re
 
-    rel = F.element_at(F.split("path", _re.escape(f"{root.rstrip('/')}/")), -1)
+    return rel_block_coords(
+        F.element_at(F.split("path", _re.escape(f"{root.rstrip('/')}/")), -1)
+    )
+
+
+def rel_block_coords(rel):
+    """(zi, yi, xi, depth) Catalyst columns of a store-relative block
+    path ``{digit}/.../default.{ch}.tif`` (depth = digit count)."""
     parts = F.split(rel, "/")
     digits = F.slice(parts, 1, F.size(parts) - 1)
 

@@ -687,6 +687,109 @@ class TiffVolumeDataSource(DataSource):
         return _TiffSliceStreamReader(dict(self.options))
 
 
+# --- per-file block writes --------------------------------------------------
+#
+# One implementation of a block file write, shared by the ``tiff_blocks``
+# / ``ktx_files`` DataSource writers and the executor kernels of
+# pipelines/octree.py and pipelines/ktx.py, which write their own files
+# and hand the driver only the relative names to commit.
+
+
+def _put_file(filesystem, dir_: str, name: str, payload: bytes) -> None:
+    """Write ``dir_/name``: staged as ``.name.tmp`` and renamed wherever
+    rename is atomic, one PUT on object stores. Names are idempotent,
+    so a retried task overwrites its own files."""
+    from hortacloud_importer_spark.sources import manifest
+
+    final = f"{dir_}/{name}"
+    staged = f"{dir_}/.{name}.tmp" if manifest.should_stage(filesystem) else final
+    with filesystem.open_output_stream(staged) as fh:
+        fh.write(payload)
+    if staged != final:
+        filesystem.move(staged, final)
+
+
+def write_tiff_block(
+    filesystem,
+    base: str,
+    vol: np.ndarray,
+    zi: int,
+    yi: int,
+    xi: int,
+    channel: int,
+    depth: int,
+    dtype: str = "uint16",
+    skip_empty: bool = True,
+    made_dirs: set[str] | None = None,
+) -> str | None:
+    """Write one (z, y, x) block as ``{octree-path}/default.{ch}.tif``
+    (ZLIB, the reference's save_block, tiff2octree.py:298-317) under
+    ``base``; ``depth`` is the store depth of the block's level (digit
+    count + 1, so 1 = the root). Returns the relative path, or None
+    for a skipped all-zero block. ``made_dirs`` caches directories
+    this task already created. Values outside an integer ``dtype``'s
+    range raise ValueError instead of wrapping."""
+    from hortacloud_importer_spark.sources.tiff import encode_tiff
+
+    if skip_empty and (vol.size == 0 or vol.max() <= 0):
+        return None
+    rel = tiff_block_rel(zi, yi, xi, channel, depth)
+    if vol.size and np.issubdtype(np.dtype(dtype), np.integer):
+        info = np.iinfo(dtype)
+        lo, hi = vol.min(), vol.max()
+        if hi > info.max or lo < info.min:
+            raise ValueError(
+                f"block {rel} holds values in [{lo}, {hi}], outside "
+                f"{dtype}'s range [{info.min}, {info.max}]; requantize "
+                f"the source to {dtype} before the build"
+            )
+    target_dir, _, name = f"{base}/{rel}".rpartition("/")
+    if made_dirs is None or target_dir not in made_dirs:
+        filesystem.create_dir(target_dir, recursive=True)
+        if made_dirs is not None:
+            made_dirs.add(target_dir)
+    _put_file(
+        filesystem, target_dir, name,
+        encode_tiff(vol.astype(dtype), compression="zlib"),
+    )
+    return rel
+
+
+def tiff_block_rel(zi: int, yi: int, xi: int, channel: int, depth: int) -> str:
+    """Store-relative path of a block file: ``{octree-path}/default.{ch}.tif``."""
+    rel_dir = _octree_rel_dir(zi, yi, xi, depth)
+    name = f"default.{channel}.tif"
+    return f"{rel_dir}/{name}" if rel_dir else name
+
+
+def write_ktx_block(
+    filesystem,
+    base: str,
+    zi: int,
+    yi: int,
+    xi: int,
+    depth: int,
+    channel: int,
+    ktx: bytes,
+    lz4: bool = False,
+) -> str:
+    """Write one encoded KTX blob as ``block_{z}_{y}_{x}[_d{depth}]_ch{c}.ktx``
+    (``.ktx.lz4`` LZ4-frame compressed with ``lz4``, the reference's
+    LZ4.exe post-pass, ktx_from_rendered_tiff.py:565-583) directly
+    under ``base``; ``depth`` 0 means a single-level store. Returns the
+    file name. The caller creates ``base``."""
+    from hortacloud_importer_spark.sources.ktx import ktx_block_name
+
+    name = ktx_block_name(zi, yi, xi, depth, channel, lz4=lz4)
+    blob = bytes(ktx)
+    if lz4:
+        from hortacloud_importer_spark.sources.codecs import lz4_frame_compress
+
+        blob = lz4_frame_compress(blob)
+    _put_file(filesystem, base, name, blob)
+    return name
+
+
 # --- KTX sink (A8) as a writable format ------------------------------------
 
 
@@ -698,13 +801,12 @@ class _KtxCommit(WriterCommitMessage):
 
 class _KtxWriter(DataSourceWriter):
     """``df.write.format("ktx_files").save(dir)`` over KTX_SCHEMA rows
-    (zi, yi, xi, channel, n_levels, ktx) — the DataSource-API form of
-    sources/ktx.py::write_ktx_files, with real commit semantics:
+    (zi, yi, xi, channel, n_levels, ktx), with real commit semantics:
 
-    - ``write()`` (executors) stages blobs via pyarrow.fs with
-      idempotent names, tmp+rename on local FS (single-PUT object
-      stores need no staging); a retried task overwrites its own
-      files, so speculative/retried attempts cannot duplicate.
+    - ``write()`` (executors) writes each blob with
+      :func:`write_ktx_block` (idempotent names, tmp+rename wherever
+      rename is atomic), so a retried or speculative task overwrites
+      its own files instead of duplicating them.
     - ``commit()`` (driver) appends ONE manifest shard naming the
       files this run committed (sources/manifest.py — the Delta-log
       pattern) — the atomic-visibility marker the reference implements
@@ -741,35 +843,22 @@ class _KtxWriter(DataSourceWriter):
                     filesystem.delete_file(info.path)
 
     def write(self, iterator) -> _KtxCommit:
-        from pyarrow import fs as pafs
-
-        from hortacloud_importer_spark.sources import manifest as _m
-
         filesystem, base = _pa_fs(self.out_dir)
         filesystem.create_dir(base, recursive=True)
-        # stage+rename wherever rename is atomic (non-object-store),
-        # not only LocalFileSystem — same rule as the manifest commit
-        local = _m.should_stage(filesystem)
-        files, n = [], 0
-        from hortacloud_importer_spark.sources.ktx import ktx_block_name
-
-        if self.lz4:
-            from hortacloud_importer_spark.sources.codecs import (
-                lz4_frame_compress,
-            )
+        files = []
         for row in iterator:
-            name = ktx_block_name(row, lz4=self.lz4)
-            staged = f"{base}/.{name}.tmp" if local else f"{base}/{name}"
-            blob = bytes(row["ktx"])
-            if self.lz4:
-                blob = lz4_frame_compress(blob)
-            with filesystem.open_output_stream(staged) as fh:
-                fh.write(blob)
-            if local:
-                filesystem.move(staged, f"{base}/{name}")
-            files.append(name)
-            n += 1
-        return _KtxCommit(files, n)
+            try:
+                depth = row["depth"]
+            except (KeyError, ValueError, IndexError):
+                depth = None  # depth column absent: single-level store
+            files.append(
+                write_ktx_block(
+                    filesystem, base,
+                    row["zi"], row["yi"], row["xi"], depth or 0,
+                    row["channel"], row["ktx"], self.lz4,
+                )
+            )
+        return _KtxCommit(files, len(files))
 
     def commit(self, messages) -> None:
         from hortacloud_importer_spark.sources import manifest
@@ -846,9 +935,9 @@ class _TiffBlockWriter(DataSourceWriter):
     a store produced here is byte-readable by the reference's tooling
     and by this engine's decode_tiff / tiff_volume scan.
 
-    Commit semantics mirror ``ktx_files``: executors stage via
-    pyarrow.fs (tmp+rename on local FS, idempotent names so retried
-    tasks overwrite themselves), the driver appends ONE manifest shard
+    Commit semantics mirror ``ktx_files``: executors write each block
+    with :func:`write_tiff_block` (tmp+rename, idempotent names so
+    retried tasks overwrite themselves), the driver appends ONE manifest shard
     per commit (sources/manifest.py) — the atomic-visibility marker
     the reference implements as sentinel files
     (tiff2octree.py:1328-1355), and the input a resume anti-join (C4)
@@ -885,43 +974,23 @@ class _TiffBlockWriter(DataSourceWriter):
                     filesystem.delete_file(info.path)
 
     def write(self, iterator) -> _TiffBlockCommit:
-        from pyarrow import fs as pafs
-
-        from hortacloud_importer_spark.sources.tiff import encode_tiff
-
-        from hortacloud_importer_spark.sources import manifest as _m
-
         filesystem, base = _pa_fs(self.out_dir)
-        local = _m.should_stage(filesystem)
-        files, n, skipped = [], 0, 0
+        files, skipped = [], 0
         made_dirs: set[str] = set()
         for row in iterator:
-            arr = np.asarray(row["voxels"], dtype=np.int64)
-            if self.skip_empty and (arr.size == 0 or arr.max() <= 0):
-                skipped += 1
-                continue
             bz, by, bx = (int(s) for s in row["shape"])
-            vol = arr[: bz * by * bx].reshape(bz, by, bx).astype(self.dtype)
-            rel_dir = _octree_rel_dir(
-                int(row["zi"]), int(row["yi"]), int(row["xi"]), self.nlevels
+            arr = np.asarray(row["voxels"], dtype=np.int64)
+            rel = write_tiff_block(
+                filesystem, base, arr[: bz * by * bx].reshape(bz, by, bx),
+                int(row["zi"]), int(row["yi"]), int(row["xi"]),
+                int(row["channel"]), self.nlevels, self.dtype,
+                skip_empty=self.skip_empty, made_dirs=made_dirs,
             )
-            name = f"default.{int(row['channel'])}.tif"
-            rel = f"{rel_dir}/{name}" if rel_dir else name
-            target_dir = f"{base}/{rel_dir}".rstrip("/")
-            if target_dir not in made_dirs:
-                filesystem.create_dir(target_dir, recursive=True)
-                made_dirs.add(target_dir)
-            payload = encode_tiff(vol, compression="zlib")
-            staged = (
-                f"{target_dir}/.{name}.tmp" if local else f"{base}/{rel}"
-            )
-            with filesystem.open_output_stream(staged) as fh:
-                fh.write(payload)
-            if local:
-                filesystem.move(staged, f"{base}/{rel}")
-            files.append(rel)
-            n += 1
-        return _TiffBlockCommit(files, n, skipped)
+            if rel is None:
+                skipped += 1
+            else:
+                files.append(rel)
+        return _TiffBlockCommit(files, len(files), skipped)
 
     def commit(self, messages) -> None:
         from hortacloud_importer_spark.sources import manifest
@@ -929,10 +998,9 @@ class _TiffBlockWriter(DataSourceWriter):
         filesystem, base = _pa_fs(self.out_dir)
         files = {f for m in messages if m for f in m.files}
         skipped = sum(m.n_skipped for m in messages if m)
-        # one immutable shard per commit: successive per-level writes
-        # of one octree build (pipelines/octree.py) accumulate shards
-        # under the shared root, prior commits stay visible through
-        # the shard union, and nothing is ever rewritten (the
+        # one immutable shard per commit: successive appends accumulate
+        # shards under the shared root, prior commits stay visible
+        # through the shard union, and nothing is ever rewritten (the
         # reference's sentinel files accumulate the same way,
         # tiff2octree.py:1328-1355). n_skipped is per-RUN by contract.
         filesystem.create_dir(base, recursive=True)

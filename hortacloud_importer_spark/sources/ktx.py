@@ -470,67 +470,19 @@ def ktx_encode_blocks(
     )
 
 
-def ktx_block_name(row, lz4: bool = False) -> str:
-    """Sink file name for one encoded block row. Single-level
-    conversions keep the flat ``block_{z}_{y}_{x}_ch{c}.ktx`` name;
-    whole-store conversions (depth column present and non-zero) add
-    ``_d{depth}`` — without it the root block and the (0,0,0) block of
-    every other octree level would collide on one file, silently
-    dropping levels (the reference disambiguates the same way, by
-    encoding the octree path into the name, tiff2octree.py:401)."""
-    try:
-        depth = row["depth"]
-    except (KeyError, ValueError, IndexError):
-        depth = None
+def ktx_block_name(
+    zi: int, yi: int, xi: int, depth: int, channel: int, lz4: bool = False
+) -> str:
+    """Sink file name for one encoded block. Single-level conversions
+    (``depth`` 0) keep the flat ``block_{z}_{y}_{x}_ch{c}.ktx`` name;
+    whole-store conversions add ``_d{depth}`` — without it the root
+    block and the (0,0,0) block of every other octree level would
+    collide on one file, silently dropping levels (the reference
+    disambiguates the same way, by encoding the octree path into the
+    name, tiff2octree.py:401)."""
     tag = f"_d{depth}" if depth else ""
     sfx = ".ktx.lz4" if lz4 else ".ktx"
-    return f"block_{row['zi']}_{row['yi']}_{row['xi']}{tag}_ch{row['channel']}{sfx}"
-
-
-def write_ktx_files(encoded: DataFrame, out_dir: str, lz4: bool = False) -> None:
-    """A8 file sink: one ``block_{z}_{y}_{x}_ch{c}.ktx`` per row,
-    written BY EXECUTORS via foreachPartition — blobs never visit the
-    driver. Paths resolve through ``pyarrow.fs.FileSystem.from_uri``,
-    so the same code writes local disk, ``hdfs://`` or ``s3://`` from
-    Python workers (which have no JVM gateway — the Hadoop Java API
-    is not reachable from executor-side Python; pyarrow's filesystems
-    are the engine-portable equivalent). Local filesystems get
-    tmp+rename for atomic visibility; object stores are single-PUT
-    atomic already, and task retries simply overwrite the same key
-    (idempotent names). Pair with ``spark.read.format("binaryFile")``
-    + :func:`ktx_decode_blocks` for the A9 read path.
-
-    ``lz4`` writes ``.ktx.lz4`` LZ4-frame side-compressed files (the
-    reference's LZ4.exe shell-out, ktx_from_rendered_tiff.py:565-583,
-    done inline per executor instead of as a post-pass over the
-    store); :func:`decode_ktx` reads them transparently."""
-
-    def write_partition(rows):
-        from pyarrow import fs as pafs
-
-        if "://" in out_dir:
-            filesystem, base = pafs.FileSystem.from_uri(out_dir)
-        else:
-            filesystem, base = pafs.LocalFileSystem(), out_dir
-        filesystem.create_dir(base, recursive=True)
-        local = isinstance(filesystem, pafs.LocalFileSystem)
-        if lz4:
-            from hortacloud_importer_spark.sources.codecs import (
-                lz4_frame_compress,
-            )
-        for row in rows:
-            name = ktx_block_name(row, lz4=lz4)
-            target = f"{base}/{name}"
-            staged = f"{base}/.{name}.tmp" if local else target
-            blob = bytes(row["ktx"])
-            if lz4:
-                blob = lz4_frame_compress(blob)
-            with filesystem.open_output_stream(staged) as fh:
-                fh.write(blob)
-            if local:
-                filesystem.move(staged, target)
-
-    encoded.foreachPartition(write_partition)
+    return f"block_{zi}_{yi}_{xi}{tag}_ch{channel}{sfx}"
 
 
 DECODE_SCHEMA = (

@@ -102,9 +102,10 @@ def downsample_voxels(
 def np_child_indices(in_len: int) -> "object":
     """Vectorized :func:`child_index`: parent index -> child index for
     one axis (identical branch structure, NumPy instead of Catalyst).
-    Used by the in-executor block kernels (np_halve: the pyramid's
-    halve_blocks and pipelines/ktx.py::ktx_convert_blocks_fused),
-    where a block's voxels are already local to one task."""
+    Used by :func:`np_halve`, which the in-executor kernels run on
+    voxels already local to one task: the subtree kernel of
+    pipelines/octree.py and the per-block KTX converter of
+    pipelines/ktx.py."""
     import numpy as np
 
     out_len = mipmap_dimension(1, in_len)
@@ -132,9 +133,13 @@ def np_halve(
     ``(False, True, True)``).
 
     Bucketing is one bincount/maximum.at pass per reduction — no
-    Python loops — so a 512^3 block halves in tens of milliseconds,
-    which is what makes the per-block KTX conversion a map-only job
-    instead of a shuffle cascade."""
+    Python loops — so a 512^3 block halves in tens of milliseconds.
+    That is what lets one task build every pyramid level of an octree
+    subtree (pipelines/octree.py: the assembled region of 8^s blocks
+    halves in place, level after level — with even extents the pairs
+    never straddle two parents, so halving the region equals halving
+    each parent's 2x2x2 children) and what makes the per-block KTX
+    conversion a map-only job instead of a shuffle cascade."""
     import numpy as np
 
     vol = np.asarray(vol)
@@ -186,160 +191,3 @@ def np_halve(
     else:
         raise ValueError(f"unknown filter {filter_!r}; have {FILTERS}")
     return out.reshape(odims)
-
-
-def halve_blocks(
-    blocks: DataFrame, filter_: str, halve_first: bool = False
-) -> DataFrame:
-    """One pyramid halving step at BLOCK granularity — the grouped-map
-    dual of ``blockify(downsample_voxels(unblockify(b)))``.
-
-    Two physically different plans, byte-identical results:
-
-    - ``halve_first=False`` (works for any block dims): assemble each
-      parent's 8 sibling child blocks into a ``(2bz, 2by, 2bx)`` array
-      and halve the canvas with :func:`np_halve`. ONE shuffle per
-      level, but it carries the FULL child level.
-    - ``halve_first=True`` (requires all-even block dims): halve every
-      block IN PLACE first (a map-only stage — no shuffle), then
-      regroup the 8x-smaller halves into parents. The level shuffle
-      now moves child-level/8 bytes; the round-6 scale soak measured
-      the difference at ~8x on the dominant pyramid stage (SOAK.md).
-      Legal exactly when no 2-voxel halving group straddles a sibling
-      boundary: even block dims make every level's extent even (no
-      odd-pivot) and pair groups ``(2i, 2i+1)`` never cross an even
-      boundary. An odd block axis WOULD cross (the pair at the
-      boundary spans two siblings), so the kernel validates and
-      raises — callers with odd dims keep the assemble-first plan.
-
-    This is the only pyramid step of ``build_octree`` for the D1-D3
-    filters. Its stores are checked level by level against the NumPy
-    loop mirror (tests/test_octree_pipeline.py) and byte for byte
-    against recorded digests (tests/test_golden_store.py); a direct
-    halve_first-vs-assemble-first equality test pins the two plans,
-    and np_halve itself is property-tested. Missing octants
-    (skip-empty store read-backs) densify to zero.
-    """
-    if not halve_first:
-        return _octant_regroup(blocks, lambda big: np_halve(big, filter_))
-
-    import pandas as pd
-
-    # the halved intermediates ship as raw little-endian uint16
-    # (lossless: every downsample of uint16 stays in range) — half the
-    # raw shuffle bytes of an int32 list array, and the payload moves
-    # as ONE Arrow buffer instead of a list conversion
-    out_schema = (
-        "zi int, yi int, xi int, channel int,"
-        " shape array<int>, voxels binary"
-    )
-
-    def halve_each(batches):
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples():
-                bz, by, bx = (int(s) for s in row.shape)
-                if bz % 2 or by % 2 or bx % 2:
-                    raise ValueError(
-                        "halve_first needs even block dims, got "
-                        f"({bz}, {by}, {bx})"
-                    )
-                arr = np.asarray(row.voxels, dtype=np.int32).reshape(
-                    bz, by, bx
-                )
-                out = np_halve(arr, filter_)
-                if int(out.max(initial=0)) > 0xFFFF:
-                    # a >16-bit source (e.g. a uint32 N5 volume) would
-                    # silently WRAP in the uint16 payload and compound
-                    # per level — unlike the assemble-first plan,
-                    # which only narrows once at the sink. Surface it.
-                    raise ValueError(
-                        "halve_first uint16 payload overflow "
-                        f"(max {int(out.max())}): the source has "
-                        ">16-bit intensities; requantize it to 16 bits "
-                        "or fewer before the build"
-                    )
-                rows.append(
-                    {
-                        "zi": int(row.zi),
-                        "yi": int(row.yi),
-                        "xi": int(row.xi),
-                        "channel": int(row.channel),
-                        "shape": list(out.shape),
-                        "voxels": out.astype("<u2").tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return _octant_regroup(
-        blocks.mapInPandas(halve_each, out_schema),
-        lambda big: big,
-        payload="u2bin",
-    )
-
-
-def assemble_halved_blocks(halved: DataFrame) -> DataFrame:
-    """Re-assemble 8 half-size sibling blocks into one full-size parent
-    block — the packed-array dual of ``blockify(unblockify(halved))``
-    that the kernel-filter build path (aa/spline3, which halve INSIDE
-    each block via operators/kernels.py) needs between levels. Same
-    single-shuffle shape as :func:`halve_blocks`, minus the halving:
-    the children are already at target resolution. Missing octants
-    zero-fill."""
-    return _octant_regroup(halved, lambda big: big)
-
-
-def _octant_regroup(blocks: DataFrame, finish, payload: str = "array") -> DataFrame:
-    """Shared octant-assembly kernel: group 8 siblings per parent
-    block, place each by its coordinate parity bits into a double-size
-    canvas (missing octants stay zero), then apply ``finish`` to the
-    canvas (np_halve for the pyramid step, identity for kernel-halved
-    re-assembly). ``payload="u2bin"`` reads raw uint16 bytes (the
-    halve-first intermediate) instead of int list arrays."""
-    import pandas as pd
-
-    out_schema = (
-        "zi int, yi int, xi int, channel int,"
-        " shape array<int>, voxels array<int>"
-    )
-
-    def regroup(key, pdf):
-        import numpy as np
-
-        zi, yi, xi, ch = (int(k) for k in key)
-        bz, by, bx = (int(s) for s in pdf.iloc[0]["shape"])
-        big = np.zeros((2 * bz, 2 * by, 2 * bx), dtype=np.int32)
-        for row in pdf.itertuples():
-            oz, oy, ox = int(row.zi) & 1, int(row.yi) & 1, int(row.xi) & 1
-            vox = (
-                np.frombuffer(row.voxels, dtype="<u2")
-                if payload == "u2bin"
-                else np.asarray(row.voxels, dtype=np.int32)
-            )
-            big[
-                oz * bz : (oz + 1) * bz,
-                oy * by : (oy + 1) * by,
-                ox * bx : (ox + 1) * bx,
-            ] = vox.reshape(bz, by, bx)
-        out = finish(big)
-        return pd.DataFrame(
-            [
-                {
-                    "zi": zi,
-                    "yi": yi,
-                    "xi": xi,
-                    "channel": ch,
-                    "shape": list(out.shape),
-                    "voxels": out.ravel(),
-                }
-            ]
-        )
-
-    return blocks.groupBy(
-        F.shiftright("zi", 1).alias("zi"),
-        F.shiftright("yi", 1).alias("yi"),
-        F.shiftright("xi", 1).alias("xi"),
-        F.col("channel"),
-    ).applyInPandas(regroup, out_schema)

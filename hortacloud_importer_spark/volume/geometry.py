@@ -310,7 +310,7 @@ def requantize(
     the black level, floor small values at 1, preserve zero as
     no-data, scale into [0,1], gamma-correct, expand to 0-254, ceil.
     The KTX conversion kernel
-    (pipelines/ktx.py::ktx_convert_blocks_fused) calls this per block
+    (pipelines/ktx.py::_block_converter) calls this per block
     and channel; it is the only requantization path."""
     v = np.asarray(values)
     t = v.astype("float64") - black

@@ -1,0 +1,84 @@
+"""tools/cpu_split.py over a fake /proc tree (no Spark)."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+
+import cpu_split  # noqa: E402
+
+DAEMON = ["python3", "-m", "pyspark.daemon"]
+
+
+def _proc(root, pid, ppid, argv, utime, stime, cutime=0, cstime=0, start=1):
+    d = root / str(pid)
+    d.mkdir(parents=True, exist_ok=True)
+    # pid (comm) state ppid pgrp session tty tpgid flags minflt cminflt
+    # majflt cmajflt utime stime cutime cstime prio nice threads
+    # itrealvalue starttime ...
+    fields = [pid, f"({os.path.basename(argv[0])} x)", "S", ppid] + [0] * 9
+    fields += [utime, stime, cutime, cstime, 20, 0, 1, 0, start, 0]
+    (d / "stat").write_text(" ".join(str(f) for f in fields))
+    (d / "cmdline").write_bytes(b"\0".join(a.encode() for a in argv) + b"\0")
+
+
+def _tree(root, ticks):
+    """Driver 100 -> JVM 101 -> two UDF worker daemons (102, 104; 102
+    has a forked worker 103) and one DataSource-write planner daemon
+    105; pid 200 is outside the tree. ``ticks`` maps pid -> (utime,
+    stime, cutime, cstime[, starttime])."""
+    argv = {
+        100: ["python", "tools/cpu_split.py"],
+        101: ["/usr/lib/jvm/bin/java", "-cp", "x", "SparkSubmit"],
+        102: DAEMON + ["pyspark_graft_worker"],
+        103: DAEMON + ["pyspark_graft_worker"],
+        104: DAEMON + ["pyspark_graft_worker"],
+        105: DAEMON + ["pyspark.sql.worker.write_into_data_source"],
+        200: ["python", "unrelated.py"],
+    }
+    parent = {100: 1, 101: 100, 102: 101, 103: 102, 104: 101, 105: 101, 200: 1}
+    for pid, t in ticks.items():
+        _proc(root, pid, parent[pid], argv[pid], *t)
+
+
+def test_split_groups_daemons_by_module_and_counts_reaped(tmp_path):
+    before, after = tmp_path / "before", tmp_path / "after"
+    _tree(before, {
+        100: (10, 5), 101: (400, 100), 102: (30, 10),
+        104: (20, 0), 105: (50, 10), 200: (999, 999),
+    })
+    _tree(after, {
+        100: (12, 6),  # driver +3
+        101: (600, 200),  # JVM +300
+        102: (40, 10, 100, 20),  # +10 own, +120 reaped forked workers
+        103: (70, 10),  # a forked worker started in between: +80
+        104: (20, 0, 0, 0, 7),  # pid reused (new starttime): +20
+        105: (80, 20),  # planner +40
+        200: (5000, 5000),  # not in the tree
+    })
+    got = cpu_split.split(
+        cpu_split.read_tree(100, str(before)),
+        cpu_split.read_tree(100, str(after)),
+        100,
+        10.0,
+    )
+    assert got == pytest.approx({
+        "driver": 0.3,
+        "jvm": 30.0,
+        "pyspark_graft_worker": 23.0,
+        "pyspark.sql.worker.write_into_data_source": 4.0,
+    })
+    text = cpu_split.table([got])
+    assert "| `jvm` | 30.00 | 52% |" in text
+    assert "| total | 57.30 | |" in text
+
+
+def test_read_tree_skips_processes_outside_the_root(tmp_path):
+    _tree(tmp_path, {100: (1, 1), 101: (1, 1), 200: (1, 1)})
+    pids = {pid for pid, _start in cpu_split.read_tree(101, str(tmp_path))}
+    assert pids == {101}
+    assert cpu_split.group_of(7, DAEMON, 100) == "pyspark.worker"

@@ -1,19 +1,29 @@
-"""A8/A9 file round trip: executor-side .ktx writes -> binaryFile scan
--> decode; plus I4 late-data watermark behavior."""
+"""A8/A9 file round trip: ``ktx_files`` writes on executors ->
+binaryFile scan -> decode; plus I4 late-data watermark behavior."""
 
 from __future__ import annotations
 
 import glob
 
 import numpy as np
+from pyarrow import fs as pafs
 from pyspark.sql import functions as F
 
+from hortacloud_importer_spark.sources import manifest
+
+from hortacloud_importer_spark.sources.datasource import register_volume_sources
 from hortacloud_importer_spark.sources.ktx import (
     ktx_decode_blocks,
     ktx_encode_blocks,
-    write_ktx_files,
 )
 from hortacloud_importer_spark.volume import blockify, synthetic_volume
+
+
+def _write_ktx(spark, encoded, out):
+    """The ``ktx_files`` DataSource sink (executor writes, one
+    manifest shard per commit)."""
+    register_volume_sources(spark)
+    encoded.write.format("ktx_files").mode("append").save(out)
 
 
 def test_ktx_file_sink_and_binary_source(spark, tmp_path):
@@ -21,7 +31,7 @@ def test_ktx_file_sink_and_binary_source(spark, tmp_path):
     v = synthetic_volume(spark, 4, 4, 4, channels=2)
     blocks = blockify(v, (4, 4, 4)).withColumn("level", F.lit(0))
     encoded = ktx_encode_blocks(blocks)
-    write_ktx_files(encoded, out)
+    _write_ktx(spark, encoded, out)
 
     files = sorted(glob.glob(f"{out}/*.ktx"))
     assert len(files) == 2
@@ -107,14 +117,17 @@ def test_watermark_drops_late_data(spark, tmp_path):
 def test_ktx_file_sink_via_uri(spark, tmp_path):
     """The sink resolves paths through pyarrow.fs.FileSystem.from_uri,
     so a file:// URI (the local stand-in for hdfs://, s3://) writes
-    the same blobs as a bare path."""
+    the same blobs as a bare path, and commits them."""
     out = str(tmp_path / "ktx_uri_out")
     v = synthetic_volume(spark, 4, 4, 4, channels=1)
     blocks = blockify(v, (4, 4, 4)).withColumn("level", F.lit(0))
-    write_ktx_files(ktx_encode_blocks(blocks), f"file://{out}")
+    _write_ktx(spark, ktx_encode_blocks(blocks), f"file://{out}")
 
     files = sorted(glob.glob(f"{out}/*.ktx"))
     assert [f.rsplit("/", 1)[1] for f in files] == ["block_0_0_0_ch0.ktx"]
+    assert manifest.committed_files(pafs.LocalFileSystem(), out) == {
+        "block_0_0_0_ch0.ktx"
+    }
     bin_df = (
         spark.read.format("binaryFile")
         .load(f"{out}/*.ktx")

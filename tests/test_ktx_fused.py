@@ -1,5 +1,5 @@
-"""The per-block KTX converter (pipelines/ktx.py::
-ktx_convert_blocks_fused) across every pass-2 option, checked against
+"""The per-block KTX converter (pipelines/ktx.py::_block_converter,
+run by ``_write_ktx_blocks``) across every pass-2 option, checked against
 an independent NumPy reference, and its map-only physical plan.
 
 The reference's KTX pass is one task per octree node
@@ -138,17 +138,19 @@ def test_fused_matches_unfused_byte_for_byte(spark, store, tmp_path, kw):
     )
 
 
-def test_fused_single_channel_plan_has_no_exchange(spark, store):
+def test_fused_single_channel_plan_has_no_exchange(spark, store, tmp_path):
     """The plan tiff_octree_to_ktx runs for one channel: MapInPandas
     over per-file PATH rows — no grouped map, no hash exchange, and
     no scan column carrying file content."""
     from hortacloud_importer_spark.pipelines.ktx import (
         _block_file_groups,
-        ktx_convert_blocks_fused,
+        _write_ktx_blocks,
     )
 
     rows = _block_file_groups(spark, store, per_channel=True)
-    out = ktx_convert_blocks_fused(rows, store, n_mips=3, filter_="arthur")
+    out = _write_ktx_blocks(
+        rows, store, str(tmp_path / "ktx"), n_mips=3, filter_="arthur"
+    )
     assert out.count() == 9
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
@@ -247,18 +249,21 @@ def test_filegroup_interleave_matches_unfused_byte_for_byte(
     _assert_ktx(_convert(spark, store2ch, tmp_path, **kw), want, 1)
 
 
-def test_filegroup_interleave_shuffles_paths_not_payloads(spark, store2ch):
+def test_filegroup_interleave_shuffles_paths_not_payloads(
+    spark, store2ch, tmp_path
+):
     """Plan shape: the only exchange feeds the PATH collect_list; the
     conversion itself is MapInPandas over (block, paths) rows — no
     grouped-map over decoded payload rows anywhere."""
     from hortacloud_importer_spark.pipelines.ktx import (
         _block_file_groups,
-        ktx_convert_blocks_fused,
+        _write_ktx_blocks,
     )
 
     groups = _block_file_groups(spark, store2ch)
-    out = ktx_convert_blocks_fused(
-        groups, store2ch, n_mips=3, filter_="arthur", interleave=True
+    out = _write_ktx_blocks(
+        groups, store2ch, str(tmp_path / "ktx"), n_mips=3,
+        filter_="arthur", interleave=True,
     )
     out.count()
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -380,7 +385,7 @@ def test_block_file_groups_skip_stray_tif(spark, tmp_path):
 
     from hortacloud_importer_spark.pipelines.ktx import (
         _block_file_groups,
-        ktx_convert_blocks_fused,
+        _write_ktx_blocks,
     )
     from hortacloud_importer_spark.sources.tiff import encode_tiff
 
@@ -402,27 +407,26 @@ def test_block_file_groups_skip_stray_tif(spark, tmp_path):
     assert not any(p.endswith("notes.tif") for p in all_paths)
 
     # and the fused conversion over those groups completes
-    out = ktx_convert_blocks_fused(
-        _block_file_groups(spark, root), root, n_mips=2, filter_="arthur",
-        interleave=True,
+    out = _write_ktx_blocks(
+        _block_file_groups(spark, root), root, str(tmp_path / "ktx"),
+        n_mips=2, filter_="arthur", interleave=True,
     )
     assert out.count() == 1
 
 
-def test_fused_filegroups_names_offending_path(spark):
+def test_fused_filegroups_names_offending_path(spark, tmp_path):
     """If a non-conforming path ever reaches the fused kernel (e.g. a
     caller-built group row), the error names the file instead of an
     opaque AttributeError."""
-    from hortacloud_importer_spark.pipelines.ktx import (
-        ktx_convert_blocks_fused,
-    )
+    from hortacloud_importer_spark.pipelines.ktx import _write_ktx_blocks
 
     rows = spark.createDataFrame(
         [(0, 0, 0, 0, ["/nowhere/block/custom_name.tif"])],
         "zi int, yi int, xi int, depth int, paths array<string>",
     )
-    out = ktx_convert_blocks_fused(
-        rows, "/nowhere", n_mips=2, filter_="arthur", interleave=True
+    out = _write_ktx_blocks(
+        rows, "/nowhere", str(tmp_path / "ktx"), n_mips=2,
+        filter_="arthur", interleave=True,
     )
     with pytest.raises(Exception, match="default.<channel>.tif"):
         out.count()

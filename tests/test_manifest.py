@@ -82,18 +82,14 @@ def test_committed_set_df_is_file_scan_backed(spark, tmp_path):
     }
 
 
-def test_build_octree_resume_side_reads_shards_distributed(spark, tmp_path):
-    """End-to-end: the resume anti-join in build_octree consumes the
-    shard text scan (no driver-side committed set, no broadcast-from-
-    local-collection)."""
-    from hortacloud_importer_spark.pipelines import build_octree
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
-    from hortacloud_importer_spark.volume import blockify, octree_path
-    from pyspark.sql import functions as F
+def test_build_octree_resume_side_reads_shards_distributed(
+    spark, tmp_path, monkeypatch
+):
+    """End-to-end: the resume side of build_octree's subtree kernel
+    consumes the shard text scan, cogrouped on the subtree key (no
+    driver-side committed set, no broadcast-from-local-collection)."""
+    from hortacloud_importer_spark.pipelines import build_octree, octree
 
-    register_volume_sources(spark)
     rng = np.random.default_rng(5)
     vol = rng.integers(1, 250, (4, 4, 4))
     rows = [
@@ -108,19 +104,24 @@ def test_build_octree_resume_side_reads_shards_distributed(spark, tmp_path):
     out = str(tmp_path / "oct")
     build_octree(spark, voxels, out, nlevels=2, filter_="max", dims=(4, 4, 4))
 
-    # replicate the resume-side plan exactly as build_octree builds it
-    done = manifest.committed_files_df(spark, out)
-    blocks = blockify(voxels, (2, 2, 2))
-    rel = F.concat(
-        octree_path("zi", "yi", "xi", 2),
-        F.lit("/"),
-        F.concat_ws("", F.lit("default."), "channel", F.lit(".tif")),
-    )
-    todo = blocks.withColumn("rel", rel).join(done, "rel", "left_anti")
-    plan = todo._jdf.queryExecution().executedPlan().toString()
+    plans = []
+    run_pass = octree._subtree_pass
+
+    def spy(*args, **kw):
+        res = run_pass(*args, **kw)
+        plans.append(res._jdf.queryExecution().executedPlan().toString())
+        return res
+
+    monkeypatch.setattr(octree, "_subtree_pass", spy)
+    resumed = build_octree(
+        spark, voxels, out, nlevels=2, filter_="max", dims=(4, 4, 4)
+    ).collect()
+    (plan,) = plans
+    assert "FlatMapCoGroupsInPandas" in plan
     assert "FileScan text" in plan
     assert "LocalTableScan" not in plan
-    assert todo.count() == 0  # everything committed -> resume drops all
+    # everything committed -> resume writes nothing
+    assert [r["n_blocks_written"] for r in resumed] == [0, 0]
 
 
 def test_read_tiff_block_store_excludes_uncommitted_leftovers(spark, tmp_path):

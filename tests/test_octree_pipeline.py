@@ -67,7 +67,8 @@ def test_build_octree_end_to_end_with_resume(spark, tmp_path):
     want_root = vol.reshape(4, 2, 4, 2, 4, 2).max(axis=(1, 3, 5))
     assert np.array_equal(root, want_root.astype(np.uint16))
 
-    # resume: a second run anti-joins every block away via the manifest
+    # resume: a second run skips every committed block (the manifest
+    # paths are cogrouped into the subtree kernel)
     resumed = {
         r["level"]: r["n_blocks_written"]
         for r in build_octree(
@@ -235,10 +236,10 @@ def test_build_octree_from_two_channel_slices(spark, tmp_path):
 
 def test_build_octree_with_neighborhood_kernel_filter(spark, tmp_path):
     """-d aa|spline parity (tiff2octree.py:244-261): non-level-0
-    levels come from the grouped-map kernel applied per block, then 8
-    half-size siblings re-assemble into each child block — matching
-    the reference's per-block map_blocks kernels. Root block must
-    equal the NumPy kernel applied to each leaf block, assembled."""
+    levels come from the neighborhood kernel applied per block, the 8
+    half-size siblings tiled into each parent block — matching the
+    reference's per-block map_blocks kernels. Root block must equal
+    the NumPy kernel applied to each leaf block, assembled."""
     from hortacloud_importer_spark.operators.kernels import KERNELS
     from hortacloud_importer_spark.pipelines import build_octree
 
@@ -376,13 +377,13 @@ def dense_volume(voxels, dims, channels=1):
 def test_fused_build_matches_global_aggregate_byte_for_byte(
     spark, tmp_path, filt
 ):
-    """halve_blocks (grouped-map per parent block, one packed-array
-    shuffle per level) stores every level exactly as the NumPy loop
-    mirror halves the whole dense volume — including odd block
-    extents (dims 20^3 / 3 levels -> 5^3 blocks, the assemble-first
-    plan), where the equality rests on 2x2x2 cubes never crossing a
-    parent's region. The name predates the removal of the global
-    aggregate build path; the reference is now the loop mirror."""
+    """The subtree kernel (np_halve over each subtree's region)
+    stores every level exactly as the NumPy loop mirror halves the
+    whole dense volume — including odd block extents (dims 20^3 / 3
+    levels -> 5^3 blocks), where the equality rests on 2x2x2 cubes
+    never crossing a parent's region. The name predates the removal
+    of the global aggregate build path; the reference is now the loop
+    mirror."""
     from hortacloud_importer_spark.pipelines import build_octree
     from hortacloud_importer_spark.volume import synthetic_volume
 
@@ -398,10 +399,9 @@ def test_fused_build_matches_global_aggregate_byte_for_byte(
 
 
 def test_fused_kernel_build_matches_voxel_row_assembly(spark, tmp_path):
-    """assemble_halved_blocks (packed re-assembly after the aa
-    per-block kernel) places each halved leaf at its octant of the
-    root: the root equals ``_kernel_aa`` applied per leaf block and
-    tiled; the leaves are the source blocks. The name predates the
+    """The subtree kernel places each aa-halved leaf at its octant of
+    the root: the root equals ``_kernel_aa`` applied per leaf block
+    and tiled; the leaves are the source blocks. The name predates the
     removal of the voxel-row assembly; the reference is now NumPy."""
     from hortacloud_importer_spark.operators.kernels import _kernel_aa
     from hortacloud_importer_spark.pipelines import build_octree
@@ -428,7 +428,7 @@ def test_fused_kernel_build_matches_voxel_row_assembly(spark, tmp_path):
 
 
 def test_fused_slice_ingest_matches_voxel_path(spark, tmp_path):
-    """The packed-tile leaf ingest (_slices_to_blocks) stores the
+    """The packed-tile leaf ingest (_slice_pieces) stores the
     zero-padded source — odd dims exercise the y/x/z canvas padding —
     and the pyramid above it matches the NumPy mirror. The name
     predates the removal of the voxel-row ingest; the reference is

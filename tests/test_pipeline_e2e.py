@@ -101,10 +101,10 @@ def test_reference_pipeline_tiff_to_ktx(spark, tmp_path):
     -> file sink -> binaryFile read-back -> exact voxel equality.
     This is tiff2octree + ktx_from_rendered_tiff end to end."""
     from hortacloud_importer_spark.operators.multimodal import _decode_one
-    from hortacloud_importer_spark.sources.ktx import (
-        ktx_decode_blocks,
-        write_ktx_files,
+    from hortacloud_importer_spark.sources.datasource import (
+        register_volume_sources,
     )
+    from hortacloud_importer_spark.sources.ktx import ktx_decode_blocks
     from hortacloud_importer_spark.sources.tiff import encode_tiff
     from hortacloud_importer_spark.volume import mipmap_dimension
 
@@ -164,7 +164,10 @@ def test_reference_pipeline_tiff_to_ktx(spark, tmp_path):
 
     # 3. ONE interleaved 2-channel KTX per block -> files -> read back
     out_dir = tmp_path / "ktx_out"
-    write_ktx_files(ktx_encode_blocks(stacked, interleave=True), str(out_dir))
+    register_volume_sources(spark)
+    ktx_encode_blocks(stacked, interleave=True).write.format("ktx_files").mode(
+        "append"
+    ).save(str(out_dir))
     back = (
         spark.read.format("binaryFile")
         .load(f"file://{out_dir}/*.ktx")

@@ -241,113 +241,6 @@ def test_join_suite_facets_keep_their_strategies(spark, sf_dir):
     assert "row_number" in plan  # the as-of top-1
 
 
-def test_halve_blocks_is_single_packed_shuffle(spark):
-    """The fused pyramid step must plan exactly ONE exchange (the
-    parent-block regroup of packed arrays) — no voxel-row explode, no
-    second re-pack shuffle."""
-    from hortacloud_importer_spark.volume.downsample import halve_blocks
-
-    rows = [
-        (zi, yi, xi, 0, [2, 2, 2], list(range(8)))
-        for zi in range(2)
-        for yi in range(2)
-        for xi in range(2)
-    ]
-    blocks = spark.createDataFrame(
-        rows,
-        "zi int, yi int, xi int, channel int, shape array<int>,"
-        " voxels array<int>",
-    )
-    out = halve_blocks(blocks, "arthur")
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the structural claim: no voxel-row explode and no collect_list
-    # re-pack — the step is one grouped map over packed arrays (AQE's
-    # initial+final plan print makes raw Exchange counts unreliable;
-    # the absent operators are the signal)
-    assert "Exchange SinglePartition" not in plan
-    assert "explode" not in plan
-    assert "FlatMapGroupsInPandas" in plan
-    assert "sort_array" not in plan  # blockify's re-pack idiom
-
-
-def test_halve_first_plan_and_equality(spark):
-    """halve_first=True must (a) match the assemble-first results
-    exactly on even block dims, (b) keep the map-only local halve out
-    of the shuffle (MapInPandas BEFORE the grouped-map exchange), and
-    (c) refuse odd block dims (a boundary pair would straddle two
-    siblings)."""
-    import numpy as np
-    import pytest
-
-    from hortacloud_importer_spark.volume.downsample import halve_blocks
-
-    rng = np.random.default_rng(17)
-    rows = [
-        (
-            zi, yi, xi, ch, [4, 4, 4],
-            [int(v) for v in rng.integers(0, 5, size=64)],
-        )
-        for zi in range(2)
-        for yi in range(2)
-        for xi in range(2)
-        for ch in range(2)
-    ]
-    schema = (
-        "zi int, yi int, xi int, channel int, shape array<int>,"
-        " voxels array<int>"
-    )
-    blocks = spark.createDataFrame(rows, schema)
-
-    def key(df):
-        return {
-            (r["zi"], r["yi"], r["xi"], r["channel"]):
-                (list(r["shape"]), list(r["voxels"]))
-            for r in df.collect()
-        }
-
-    for filt in ("arthur", "mean", "max"):
-        fast = halve_blocks(blocks, filt, halve_first=True)
-        assert key(fast) == key(halve_blocks(blocks, filt)), filt
-
-    plan = fast._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan  # the in-place halve, pre-shuffle
-    assert "FlatMapGroupsInPandas" in plan  # the regroup
-    assert "explode" not in plan
-
-    odd = spark.createDataFrame(
-        [(0, 0, 0, 0, [3, 4, 4], [1] * 48)], schema
-    )
-    with pytest.raises(Exception, match="even block dims"):
-        halve_blocks(odd, "max", halve_first=True).collect()
-
-
-def test_halve_first_rejects_17bit_values(spark):
-    """halve_first ships uint16 payloads; a >16-bit source (uint32
-    N5 volumes) must surface as an error, not wrap silently and
-    compound per level (review finding, round 6)."""
-    import pytest
-
-    from hortacloud_importer_spark.volume.downsample import halve_blocks
-
-    schema = (
-        "zi int, yi int, xi int, channel int, shape array<int>,"
-        " voxels array<int>"
-    )
-    blocks = spark.createDataFrame(
-        [(z, y, x, 0, [2, 2, 2], [70000] * 8)
-         for z in range(2) for y in range(2) for x in range(2)],
-        schema,
-    )
-    with pytest.raises(Exception, match="overflow") as err:
-        halve_blocks(blocks, "max", halve_first=True).collect()
-    # the remedy it names must exist: requantize, not a removed flag
-    assert "fused" not in str(err.value)
-    assert "requantize" in str(err.value)
-    # the assemble-first plan narrows only at the sink, so it still works
-    assert halve_blocks(blocks, "max").count() == 1
-
-
 @pytest.mark.parametrize(
     "qname", ["corpus_decontaminate", "corpus_decontaminate_norm"]
 )

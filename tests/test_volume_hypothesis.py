@@ -87,10 +87,11 @@ def test_np_halve_axes_property(filter_, dims, seed, axes):
 )
 @settings(max_examples=40, deadline=None)
 def test_halve_first_boundary_property(filter_, bdims, seed, present_mask, zero_p):
-    """The halve-first pyramid rewrite rests on one claim: for EVEN
-    block dims, halving each sibling block independently then
-    concatenating the halves equals halving the assembled 2x canvas —
-    no 2-voxel group straddles a sibling boundary. Pinned over random
+    """The subtree build ships each pass's roots HALVED to the next
+    pass when block dims are even, which rests on one claim: halving
+    each sibling block independently then concatenating the halves
+    equals halving the assembled 2x canvas — no 2-voxel group
+    straddles a sibling boundary. Pinned over random
     even dims, zero densities, and every pattern of missing octants
     (skip-empty stores densify absentees to zero). Pure NumPy, so the
     example budget is wide."""

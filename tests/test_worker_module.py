@@ -172,9 +172,12 @@ def test_reused_worker_keeps_the_pyspark_zip_directory(spark, tmp_path):
             {"pid": [os.getpid()], "dir_id": [id(zipimport._zip_directory_cache[key])]}
         )
 
-    # back-to-back single-task jobs until one worker process serves two
+    # back-to-back single-task jobs until one worker process serves two;
+    # the daemon hands out idle workers first in, first out, so this
+    # takes one more job than there are idle workers (a dozen after
+    # the registry oracle tests on 4 cores)
     seen: dict[int, list[int]] = {}
-    for _ in range(8):
+    for _ in range(64):
         row = (
             spark.range(1, numPartitions=1)
             .mapInPandas(probe, "pid long, dir_id long")

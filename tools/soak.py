@@ -8,10 +8,12 @@ would watch: wall time per phase, per-stage shuffle read/write bytes
 (Spark REST API), and peak resident memory across the whole process
 tree (JVM + every Python worker). Output: SOAK.md at the repo root.
 
-Claims under test (VERDICT r5 next-round #1):
-- the per-level pyramid shuffle decays ~8x level over level;
-- the int32 block temporaries keep peak memory far inside the box
-  (not O(volume) on any single node);
+Claims under test:
+- the build shuffles the leaf tiles once, then only the subtree roots
+  between passes (8x smaller per level they span);
+- per-task memory is bounded by one subtree's int32 region, or by one
+  leaf block when eight do not fit the budget (not O(volume) on any
+  single node);
 - the fused KTX conversion stays map-only (zero shuffle beyond the
   channel interleave).
 
@@ -375,7 +377,6 @@ def main() -> int:
 def _write_md(r: dict) -> None:
     dz, dy, dx = r["dims_zyx"]
     vox_gib = dz * dy * dx * r["channels"] * 2 / 2**30
-    shuf = [s for s in r["build_stages"] if s["shuf_write_mb"] > 1]
     lines = [
         "# SOAK — fused build+convert at ~100x the bench probe",
         "",
@@ -428,28 +429,6 @@ def _write_md(r: dict) -> None:
             f"| {s['id']}: {s['name']} | {s['tasks']} | {s['input_mb']} "
             f"| {s['shuf_write_mb']} | {s['shuf_read_mb']} | {s['run_sec']} |"
         )
-    if len(shuf) >= 3:
-        leaf, lv1, lv2 = (s["shuf_write_mb"] for s in shuf[:3])
-        lines += [
-            "",
-            "## Shuffle-decay model",
-            "",
-            f"Leaf ingest shuffled {leaf} MiB (the unavoidable z-major-"
-            "slices -> 3-D-blocks re-layout: the volume crosses the "
-            "wire once). With halve-first pyramid steps each level "
-            "shuffle carries the HALVED blocks — raw bytes are exactly "
-            "volume/8 then volume/64 (raw uint16 payloads; see the per-level "
-            f"voxel table). Measured compressed: {lv1} MiB then {lv2} "
-            f"MiB ({leaf / max(lv1, 0.1):.1f}x, {lv1 / max(lv2, 0.1):.1f}x) "
-            "— lz4 ratios shrink level-over-level because downsampled "
-            "levels are denser (2nd-max of a sparse field is less "
-            "compressible than the field), so compressed decay lags the "
-            "exact 8x raw decay. Rejected alternative: z-stripe ingest "
-            "(read bz slices per task, emit blocks directly, zero "
-            "shuffle) — per-task memory is O(XY-extent x bz), which "
-            "breaks on wide-XY specimens; the tile shuffle is bounded "
-            "by block size regardless of volume shape.",
-        ]
     lines += [
         "",
         "## Per-level accounting",
@@ -463,7 +442,7 @@ def _write_md(r: dict) -> None:
     lines.append(
         "Stage names are raw Spark callsites from the REST API; map "
         "them to pipeline phases by stage id order (listing/meta "
-        "probes -> ingest shuffle -> per-level pyramid -> manifest)."
+        "probes -> tile shuffle -> subtree passes)."
     )
     lines.append("")
     lines.append(
