@@ -4,7 +4,7 @@ The reference cuts windows out of its inputs to feed block generation
 and the viewer (``get_cropped_image_n5_zarr`` tiff2octree.py:351-383,
 ``get_cropped_image_rasterio`` :281-292); this is the same read as a
 user-facing export: crop a half-open voxel window from ONE octree
-level of a ``tiff_blocks`` store into a slice directory
+level of an octree block store into a slice directory
 (``default.{ch}.{z}.tif``, window-local z) that the octree
 subcommand/scan can ingest right back.
 
@@ -168,17 +168,13 @@ def _assemble_slices(
             ).reshape(h, w)
         filesystem, base = _pa_fs(out_dir)
         filesystem.create_dir(base, recursive=True)
-        local = _m.should_stage(filesystem)
-        name = f"default.{ch}.{z:05d}.tif"
-        staged = f"{base}/.{name}.tmp" if local else f"{base}/{name}"
         # cast FIRST so the accounting matches the bytes written: a
         # value that wraps/clips in the output dtype (256 -> 0 in
         # uint8) must not count as nonzero
         cast = page.astype(np.dtype(dtype))
-        with filesystem.open_output_stream(staged) as fh:
+        path = f"{base}/default.{ch}.{z:05d}.tif"
+        with _m.staged_output(filesystem, path) as fh:
             fh.write(encode_tiff(cast[None, ...]))
-        if local:
-            filesystem.move(staged, f"{base}/{name}")
         return pd.DataFrame(
             [
                 {

@@ -34,26 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-def _committed_buckets(spark: SparkSession, root: str, gen: int) -> set[str]:
-    """Bucket nibbles already committed for generation ``gen`` (empty
-    for a fresh store/generation)."""
-    from hortacloud_importer_spark.sources import manifest
-
-    committed = manifest.committed_files_df(spark, root)
-    if committed is None:
-        return set()
-    ids = (
-        committed.select(
-            F.regexp_extract(
-                "rel", rf"^gen={gen}/b=([0-9a-f])/part\.parquet$", 1
-            ).alias("b")
-        )
-        .filter(F.col("b") != "")
-        .distinct()
-        .collect()
-    )
-    return {r["b"] for r in ids}
-
 
 def write_fingerprints(
     spark: SparkSession,
@@ -81,7 +61,14 @@ def write_fingerprints(
 
     cols = payload_cols if payload_cols is not None else ["fp"]
     key = bucket_col if bucket_col is not None else F.substring("fp", 1, 1)
-    done = _committed_buckets(spark, root, gen) if resume else set()
+    gen_i = int(gen)
+    done = (
+        manifest.committed_ids(
+            spark, root, rf"^gen={gen_i}/b=([0-9a-f])/part\.parquet$"
+        )
+        if resume
+        else set()
+    )
     # the file-bucket key lives in an internal column so a PAYLOAD
     # column named "bucket" (the signature store's LSH bucket) is
     # never clobbered by the store's own partitioning key
@@ -90,7 +77,6 @@ def write_fingerprints(
         todo = todo.filter(~F.col("_store_bucket").isin(*sorted(done)))
 
     root_str = str(root)
-    gen_i = int(gen)
 
     def _write_one(pdf):
         import pandas as pd
@@ -111,19 +97,12 @@ def write_fingerprints(
         filesystem, base = _fs(root_str)
         rel = f"gen={gen_i}/b={b}/part.parquet"
         filesystem.create_dir(f"{base}/gen={gen_i}/b={b}", recursive=True)
-        staged = (
-            f"{base}/gen={gen_i}/b={b}/.part.parquet.tmp"
-            if _m.should_stage(filesystem)
-            else f"{base}/{rel}"
-        )
-        with filesystem.open_output_stream(staged) as fh:
+        with _m.staged_output(filesystem, f"{base}/{rel}") as fh:
             pq.write_table(
                 pa.Table.from_pandas(body, preserve_index=False),
                 fh,
                 compression="zstd",
             )
-        if staged != f"{base}/{rel}":
-            filesystem.move(staged, f"{base}/{rel}")
         return pd.DataFrame(
             [{"gen": gen_i, "bucket": b, "n_fps": len(body), "file": rel}]
         )
@@ -138,7 +117,6 @@ def write_fingerprints(
     rows = [r.asDict() for r in sorted(acct, key=lambda r: r["bucket"])]
     if rows:
         filesystem, base = _pa_fs(root_str)
-        filesystem.create_dir(base, recursive=True)
         manifest.write_commit(
             filesystem, base, sorted(r["file"] for r in rows)
         )
@@ -152,8 +130,6 @@ def read_fingerprints(spark: SparkSession, root: str) -> DataFrame:
     file is never read as data. Raises if nothing was ever committed
     (reading an uncommitted store as "empty" would silently pass every
     increment as new)."""
-    import re as _re
-
     from hortacloud_importer_spark.sources import manifest
 
     # the store is written executor-side, OUTSIDE Spark's own writers,
@@ -169,13 +145,6 @@ def read_fingerprints(spark: SparkSession, root: str) -> DataFrame:
             f"no manifest under {root}: refusing to read an "
             "uncommitted fingerprint store as data"
         )
-    df = spark.read.parquet(root)
-    rel = F.element_at(
-        F.split(F.input_file_name(), _re.escape(f"{root.rstrip('/')}/")),
-        -1,
-    ).alias("rel")
-    return (
-        df.withColumn("rel", rel)
-        .join(committed, "rel", "left_semi")
-        .drop("rel")
+    return manifest.committed_only(
+        spark.read.parquet(root), committed, root, F.input_file_name()
     )

@@ -18,9 +18,7 @@ own mipmap chain (the bounded-state cascade), and writes one
   is block-local, exactly like the reference's one-task-per-node
   execution;
 - commit: the kernel returns only the written names, and the driver
-  appends ONE manifest shard naming them (sources/manifest.py) — the
-  same commit the ``ktx_files`` DataSource writer makes, without its
-  write and commit planner processes.
+  appends ONE manifest shard naming them (sources/manifest.py).
 """
 
 from __future__ import annotations
@@ -302,7 +300,7 @@ def tiff_octree_to_ktx(
     resume: bool = False,
     lz4: bool = False,
 ) -> DataFrame:
-    """Convert a ``tiff_blocks`` octree store into a KTX block store.
+    """Convert an octree block store of TIFF files into a KTX block store.
 
     ``depth`` selects one octree level (None = every block); the
     stored blocks at that depth must share ``block_dims`` (true for
@@ -411,7 +409,6 @@ def tiff_octree_to_ktx(
             geometry, downsample_intensity, downsample_xy, lz4,
         ).collect()
     }
-    out_fs.create_dir(out_base, recursive=True)
     manifest.write_commit(out_fs, out_base, sorted(rels))
     if transform is not None:
         # the reference copies transform.txt beside the KTX output

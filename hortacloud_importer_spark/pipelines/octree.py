@@ -110,39 +110,24 @@ def _infer_slice_dims(
     voxels. One z per file is the tiff_volume scan contract."""
     from hortacloud_importer_spark.sources.datasource import (
         _read_bytes,
+        _slice_shape,
         _sorted_slices,
     )
-    from hortacloud_importer_spark.sources.tiff import tiff_shape
 
     files = _sorted_slices(
         source.rstrip("/"), suffix, "0" if channels > 1 else None
     )
     if not files:
         raise FileNotFoundError(source)
+    head = _read_bytes(files[0])
+    h, w = _slice_shape(files[0], head)
     if suffix in (".jp2", ".j2k"):
-        from hortacloud_importer_spark.sources.jp2 import (
-            check_jp2_uint16,
-            jp2_shape,
-        )
+        from hortacloud_importer_spark.sources.jp2 import check_jp2_uint16
 
-        head = _read_bytes(files[0])
-        h, w, nc = jp2_shape(head)
-        if nc != 1:
-            raise ValueError(
-                f"slice file {files[0]} has {nc} components; one "
-                "single-sample z-slice per file expected"
-            )
         # plan-time admission check mirroring TIFF's _page_dtype rule:
         # a signed or >16-bit JP2 store must fail HERE, not wrap
         # modulo 2^16 inside the uint16 tile-cut kernel
         check_jp2_uint16(head, files[0])
-        return len(files), h, w
-    pages, h, w = tiff_shape(_read_bytes(files[0]))
-    if pages != 1:
-        raise ValueError(
-            f"slice file {files[0]} has {pages} pages; one z-slice per "
-            "file expected (stacks go through stack_voxels)"
-        )
     return len(files), h, w
 
 
@@ -806,7 +791,6 @@ def build_octree(
             out = out.persist(StorageLevel.MEMORY_AND_DISK)
         rows = out.select("rel", "n_skipped").collect()
         rels = [r["rel"] for r in rows if r["rel"] is not None]
-        filesystem.create_dir(base, recursive=True)
         manifest.write_commit(
             filesystem, base, sorted(rels),
             n_skipped=sum(r["n_skipped"] for r in rows),

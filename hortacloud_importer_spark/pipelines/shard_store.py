@@ -21,8 +21,8 @@ Scale shape: the index is ~1 fragment row per 512 tokens (0.2% of
 corpus rows, no text), the deal is the map-side :func:`shard_deal`,
 and the only exchange is the hash partition on ``shard`` that routes
 each shard's rows to the one task that writes its file. Writes happen
-executor-side through pyarrow (staged+rename where rename is atomic,
-single PUT on object stores — manifest.should_stage); the driver sees
+executor-side through pyarrow (manifest.staged_output: staged+rename
+where rename is atomic, single PUT on object stores); the driver sees
 only the n_shards accounting rows and the manifest commit.
 """
 
@@ -59,27 +59,6 @@ def shard_index(
     )
 
 
-def _committed_shards(spark: SparkSession, root: str) -> set[int]:
-    """Shard ids already committed to the store's manifest (empty for
-    a fresh store). The manifest is the truth — a data file without a
-    manifest entry is an uncommitted leftover, not a committed shard."""
-    from hortacloud_importer_spark.sources import manifest
-
-    committed = manifest.committed_files_df(spark, root)
-    if committed is None:
-        return set()
-    ids = (
-        committed.select(
-            F.regexp_extract("rel", r"^shard=(\d+)/index\.parquet$", 1)
-            .alias("s")
-        )
-        .filter(F.col("s") != "")
-        .distinct()
-        .collect()
-    )
-    return {int(r["s"]) for r in ids}
-
-
 def write_shard_store(
     spark: SparkSession,
     index: DataFrame,
@@ -99,10 +78,14 @@ def write_shard_store(
     from hortacloud_importer_spark.sources import manifest
     from hortacloud_importer_spark.sources.datasource import _pa_fs
 
-    done = _committed_shards(spark, root) if resume else set()
+    done = (
+        manifest.committed_ids(spark, root, r"^shard=(\d+)/index\.parquet$")
+        if resume
+        else set()
+    )
     todo = index
     if done:
-        todo = index.filter(~F.col("shard").isin(*sorted(done)))
+        todo = index.filter(~F.col("shard").isin(*sorted(int(k) for k in done)))
 
     root_str = str(root)
 
@@ -131,19 +114,12 @@ def write_shard_store(
         filesystem, base = _fs(root_str)
         rel = f"shard={k}/index.parquet"
         filesystem.create_dir(f"{base}/shard={k}", recursive=True)
-        staged = (
-            f"{base}/shard={k}/.index.parquet.tmp"
-            if _m.should_stage(filesystem)
-            else f"{base}/{rel}"
-        )
-        with filesystem.open_output_stream(staged) as fh:
+        with _m.staged_output(filesystem, f"{base}/{rel}") as fh:
             pq.write_table(
                 pa.Table.from_pandas(body, preserve_index=False),
                 fh,
                 compression="zstd",
             )
-        if staged != f"{base}/{rel}":
-            filesystem.move(staged, f"{base}/{rel}")
         return pd.DataFrame(
             [
                 {
@@ -169,7 +145,6 @@ def write_shard_store(
     rows = [r.asDict() for r in sorted(acct, key=lambda r: r["shard"])]
     if rows:
         filesystem, base = _pa_fs(root_str)
-        filesystem.create_dir(base, recursive=True)
         manifest.write_commit(
             filesystem, base, sorted(r["file"] for r in rows)
         )
@@ -183,8 +158,6 @@ def read_shard_store(spark: SparkSession, root: str) -> DataFrame:
     semi-joined against the manifest on the file's relative path so an
     uncommitted leftover from a killed write is never read as data —
     the same rule every block-store read applies."""
-    import re as _re
-
     from hortacloud_importer_spark.sources import manifest
 
     committed = manifest.committed_files_df(spark, root)
@@ -196,13 +169,6 @@ def read_shard_store(spark: SparkSession, root: str) -> DataFrame:
             f"no manifest under {root}: refusing to read an "
             "uncommitted shard store as data"
         )
-    df = spark.read.parquet(root)
-    rel = F.element_at(
-        F.split(F.input_file_name(), _re.escape(f"{root.rstrip('/')}/")),
-        -1,
-    ).alias("rel")
-    return (
-        df.withColumn("rel", rel)
-        .join(committed, "rel", "left_semi")
-        .drop("rel")
+    return manifest.committed_only(
+        spark.read.parquet(root), committed, root, F.input_file_name()
     )

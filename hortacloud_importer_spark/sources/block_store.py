@@ -1,76 +1,19 @@
-"""Partitioned octree block store (SURVEY.md §2.A6/A4/A11, §2.C4).
+"""Octree block store reads (SURVEY.md §2.A6/A4/A11) and the parquet
+layout rewrite (A7).
 
-Spark-first restatement of the reference's filesystem block layout:
-- save_block writes ``{octree-path}/default.{ch}.tif`` with ZLIB and
-  skips all-zero blocks (tiff2octree.py:298-317, 370-387) -> here a
-  parquet write ``partitionBy`` per-level octant digits with zstd,
-  preceded by a ``array_max(voxels) > 0`` filter (§4 O5: skip-empty
-  is a plan-level HAVING, not imperative control flow).
-- check_block / resume (tiff2octree.py:359-368, 1040-1041) -> a LEFT
-  ANTI join of the work list against the committed store listing —
-  one distributed join instead of N os.path.exists round-trips.
-- windowed region read (tiff2octree.py:281-292) -> a range filter on
-  block coordinates; because the octant digits are partition columns,
-  Catalyst turns it into partition pruning (directory skip), the
-  exact analog of the reference opening only the needed files.
-
-Layout: ``{root}/l1=D/l2=D/.../part-*.parquet`` — one directory per
-octant digit per level, lexicographically Morton-ordered, so a
-spatial crop touches a contiguous subtree exactly like the
-reference's nested octant directories.
+The store is the reference's own layout, ``{octree-path}/default.{ch}.tif``
+(tiff2octree.py:298-317), written by the subtree kernel of
+pipelines/octree.py and committed through sources/manifest.py. Reads
+here recover block coordinates from the octant digits of each file's
+PATH, so windowed reads and metadata probes prune files before any
+payload decode (the reference's windowed region read,
+tiff2octree.py:281-292), and every read keeps only committed files.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def _digit(coord_bit_cols, bit: int):
-    zc, yc, xc = coord_bit_cols
-    xb = F.shiftright(xc, bit).bitwiseAND(F.lit(1))
-    yb = F.shiftright(yc, bit).bitwiseAND(F.lit(1))
-    zb = F.shiftright(zc, bit).bitwiseAND(F.lit(1))
-    return F.lit(1) + xb + yb * 2 + zb * 4
-
-
-def with_octree_digits(blocks: DataFrame, nlevels: int) -> DataFrame:
-    """Add one ``l{k}`` octant-digit column per level (MSB first)."""
-    cols = (F.col("zi"), F.col("yi"), F.col("xi"))
-    out = blocks
-    for k, bit in enumerate(range(nlevels - 2, -1, -1), start=1):
-        out = out.withColumn(f"l{k}", _digit(cols, bit).cast("int"))
-    return out
-
-
-def write_blocks(
-    blocks: DataFrame,
-    root: str,
-    nlevels: int,
-    mode: str = "append",
-    skip_empty: bool = True,
-) -> None:
-    """A6: partitioned, compressed, skip-empty block sink.
-
-    ``mode="append"`` keeps the write idempotent-with-resume (pair
-    with :func:`resume_filter`); Spark's committed-output protocol
-    replaces the reference's sentinel files (§4 O10).
-    """
-    df = with_octree_digits(blocks, nlevels)
-    if skip_empty:
-        df = df.filter(F.array_max("voxels") > 0)
-    part_cols = [f"l{k}" for k in range(1, nlevels)]
-    writer = df.write.mode(mode).option("compression", "zstd")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(root)
-
-
-def read_blocks(spark: SparkSession, root: str) -> DataFrame:
-    """A1 over the block store: schema + partition discovery are
-    parquet-native; filters on l{k}/zi/yi/xi prune directories and
-    row groups (A4)."""
-    return spark.read.parquet(root)
 
 
 def rewrite_layout(
@@ -98,7 +41,7 @@ def rewrite_layout(
 
 
 def store_channels(spark: SparkSession, root: str) -> list[int]:
-    """Distinct channel ids of a ``tiff_blocks`` store, from file
+    """Distinct channel ids of an octree block store, from file
     NAMES only (``default.{ch}.tif``): the binaryFile scan projects
     just ``path``, so no block payload is read or decoded — channel
     discovery over a 100 TB store is a listing-sized job. The result
@@ -122,32 +65,23 @@ def store_channels(spark: SparkSession, root: str) -> list[int]:
 
 
 def _committed_only(spark: SparkSession, files: DataFrame, root: str) -> DataFrame:
-    """Semi-join a ``path`` listing against the store's committed
-    manifest (no-op for manifest-less foreign stores) — every metadata
-    probe must exclude uncommitted leftovers the same way the data
-    read does, or a killed build's stray file can surface as a phantom
-    channel / wrong extent / wrong depth."""
+    """A ``path`` listing restricted to the store's committed files; a
+    manifest-less (foreign) store keeps every file. Every metadata
+    probe applies it like the data read does, or a killed build's
+    stray file could surface as a phantom channel, wrong extent or
+    wrong depth."""
     from hortacloud_importer_spark.sources import manifest
 
     committed = manifest.committed_files_df(spark, root)
     if committed is None:
         return files
-    import re as _re
-
-    rel = F.element_at(
-        F.split("path", _re.escape(f"{root.rstrip('/')}/")), -1
-    ).alias("rel")
-    return (
-        files.withColumn("rel", rel)
-        .join(committed, "rel", "left_semi")
-        .drop("rel")
-    )
+    return manifest.committed_only(files, committed, root, F.col("path"))
 
 
 def store_block_meta(
     spark: SparkSession, root: str
 ) -> tuple[tuple[int, int, int], int]:
-    """(block extent zyx, deepest octree level) of a ``tiff_blocks``
+    """(block extent zyx, deepest octree level) of an octree block
     store, for metadata cost: the depth comes from the path listing
     (octant-digit count — no payload read), and the extent from ONE
     file's TIFF header walk (``tiff_shape`` — no strip/tile decode).
@@ -228,7 +162,7 @@ def read_tiff_block_store(
     block_dims: tuple[int, int, int] | None = None,
     depth: int | None = None,
 ) -> DataFrame:
-    """Read a ``tiff_blocks`` store (the reference's octree layout,
+    """Read an octree block store (the reference's layout,
     ``{digit}/{digit}/.../default.{ch}.tif``) back into blockify-shaped
     rows (zi, yi, xi, channel, shape, voxels).
 
@@ -247,10 +181,9 @@ def read_tiff_block_store(
 
     When the store HAS a manifest (sources/manifest.py shards or the
     legacy ``_MANIFEST.json``), the scan is restricted to the
-    committed file set via a semi-join on the relative path — abort
-    cleanup is best-effort (and non-local filesystems write final
-    names directly), so a killed build can leave uncommitted ``.tif``
-    leftovers that must not be read back as data. Manifest-less
+    committed file set (manifest.committed_only) — a killed build can
+    leave uncommitted ``.tif`` leftovers (object stores write final
+    names directly) that must not be read back as data. Manifest-less
     stores (foreign octrees, e.g. the reference's own output) fall
     back to the full glob.
     """
@@ -336,43 +269,5 @@ def read_tiff_block_store(
                     (F.col(col) >= lo // b) & (F.col(col) <= (hi - 1) // b)
                 )
         files = files.drop("_zi", "_yi", "_xi", "_depth")
-    # same root-prefix split the decoder uses; no broadcast hint in
-    # _committed_only — the committed side can be ~1e7 paths, AQE
-    # broadcasts when it is small
     files = _committed_only(spark, files, root)
     return files.select("path", "content").mapInPandas(decode, out_schema)
-
-
-def resume_filter(work: DataFrame, spark: SparkSession, root: str) -> DataFrame:
-    """C4: drop work items whose output already exists in the store.
-
-    LEFT ANTI join on the block key — the committed listing is only
-    keys (columns pruned at scan), so at 100 TB the join's build side
-    is the key set, never payloads.
-    """
-    key = ["zi", "yi", "xi", "channel"]
-    # probe existence FIRST (pyarrow listing, no Spark job): a fresh
-    # store is the only state that legitimately means "nothing
-    # committed". Anything else — corrupt files, permissions, a
-    # transient object-store error — must surface, not silently read
-    # as an empty store and trigger a full rewrite (at 100 TB that is
-    # a multi-day silent redo). The probe also keeps fresh-store runs
-    # from tripping a JVM AnalysisException whose stack trace Spark
-    # logs to stderr.
-    from pyarrow import fs as pafs
-
-    from hortacloud_importer_spark.sources.datasource import _pa_fs
-
-    filesystem, base = _pa_fs(root)
-    info = filesystem.get_file_info(base)
-    if info.type == pafs.FileType.NotFound:
-        return work
-    entries = filesystem.get_file_info(pafs.FileSelector(base, recursive=False))
-    # hidden-only contents (e.g. just _temporary/ from a killed first
-    # write, or _SUCCESS) mean nothing committed — Spark's reader
-    # ignores _/. entries, so treating them as data would turn the
-    # probe into an UNABLE_TO_INFER_SCHEMA failure on a fresh store
-    if all(i.base_name.startswith(("_", ".")) for i in entries):
-        return work
-    done = read_blocks(spark, root).select(*key)
-    return work.join(done, on=key, how="left_anti")

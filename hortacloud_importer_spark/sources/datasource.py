@@ -52,7 +52,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceWriter,
     EqualTo,
     Filter,
     GreaterThan,
@@ -61,8 +60,9 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    WriterCommitMessage,
 )
+
+from hortacloud_importer_spark.sources import manifest
 
 VOXEL_DDL = "z bigint, y bigint, x bigint, intensity bigint"
 _AXES = ("z", "y", "x")
@@ -91,11 +91,12 @@ def _read_bytes(path: str) -> bytes:
 
 
 def _copy_file(src_fs, src_path: str, dst_fs, dst_path: str) -> None:
-    """Cross-filesystem single-file copy (pyarrow streams). The caller
-    ensures the destination directory exists."""
+    """Cross-filesystem single-file copy (pyarrow streams), staged like
+    every other file write. The caller ensures the destination
+    directory exists."""
     with src_fs.open_input_stream(src_path) as fh:
         payload = fh.read()
-    with dst_fs.open_output_stream(dst_path) as fh:
+    with manifest.staged_output(dst_fs, dst_path) as fh:
         fh.write(payload)
 
 
@@ -465,6 +466,41 @@ def _requant_float_pages(pages: np.ndarray) -> np.ndarray:
     return np.rint(np.clip(v, 0.0, 1.0) * 65535.0).astype(np.uint16)
 
 
+def _is_jp2(path: str) -> bool:
+    return path.partition("?")[0].lower().endswith((".jp2", ".j2k", ".jpf"))
+
+
+def _named(path: str, parse, data: bytes):
+    """``parse(data)``, with a parse error re-raised (same class,
+    chained) under a message that starts with the file's path."""
+    try:
+        return parse(data)
+    except ValueError as exc:
+        raise type(exc)(f"{path}: {exc}") from exc
+
+
+def _slice_shape(path: str, data: bytes) -> tuple[int, int]:
+    """(height, width) of one slice file's bytes from its header walk
+    (TIFF IFD or JP2 ihdr box; no payload decode). A file that is not
+    one single-sample page raises, naming it."""
+    if _is_jp2(path):
+        from hortacloud_importer_spark.sources.jp2 import jp2_shape
+
+        h, w, n = _named(path, jp2_shape, data)
+        what = "components"
+    else:
+        from hortacloud_importer_spark.sources.tiff import tiff_shape
+
+        n, h, w = _named(path, tiff_shape, data)
+        what = "pages"
+    if n != 1:
+        raise ValueError(
+            f"slice file {path} has {n} {what}; one single-sample z-slice "
+            "per file expected (stacks go through stack_voxels)"
+        )
+    return h, w
+
+
 def _decode_slice_pages(
     data: bytes, path: str, float_mode: str = "raise"
 ) -> np.ndarray:
@@ -478,10 +514,10 @@ def _decode_slice_pages(
     tiff2octree.py:250-251): ``"requant"`` converts them to uint16 at
     ingest via :func:`_requant_float_pages`; the ``"raise"`` default
     keeps the integer voxel model strict and names the knob."""
-    if path.partition("?")[0].lower().endswith((".jp2", ".j2k", ".jpf")):
+    if _is_jp2(path):
         from hortacloud_importer_spark.sources.jp2 import decode_jp2
 
-        pages = decode_jp2(data)
+        pages = _named(path, decode_jp2, data)
         # executor-side dual of the plan-time check_jp2_uint16 probe:
         # whatever the codec returned must FIT the uint16 voxel model
         # (TIFF ingest gets this from _page_dtype + the float gate
@@ -494,7 +530,7 @@ def _decode_slice_pages(
         return pages
     from hortacloud_importer_spark.sources.tiff import decode_tiff
 
-    pages = decode_tiff(data)
+    pages = _named(path, decode_tiff, data)
     if pages.dtype.kind == "f":
         if float_mode == "requant":
             return _requant_float_pages(pages)
@@ -505,16 +541,21 @@ def _decode_slice_pages(
     return pages
 
 
-def _slice_axes(data: bytes, z: int, path: str = ".tif",
-                float_mode: str = "raise"):
-    # (pages, height, width, samples)
+def _slice_array(data: bytes, path: str = ".tif",
+                 float_mode: str = "raise") -> np.ndarray:
+    """One z-slice file -> its 2-D page."""
     pages = _decode_slice_pages(data, path, float_mode)
     if pages.shape[0] != 1 or pages.shape[3] != 1:
         raise ValueError(
-            f"slice file has shape {pages.shape}; one single-sample z-slice "
-            "per file expected (stacks/channels go through queries/scans.py)"
+            f"{path}: slice file has shape {pages.shape}; one single-sample "
+            "z-slice per file expected (stacks/channels go through "
+            "queries/scans.py)"
         )
-    arr = pages[0, :, :, 0]
+    return pages[0, :, :, 0]
+
+
+def _voxel_axes(z: int, arr: np.ndarray):
+    """A decoded z-slice page -> (z, y, x, intensity) voxel columns."""
     yy, xx = np.indices(arr.shape)
     return (
         np.full(arr.size, z, dtype=np.int64),
@@ -522,19 +563,6 @@ def _slice_axes(data: bytes, z: int, path: str = ".tif",
         xx.ravel(),
         arr.astype(np.int64).ravel(),
     )
-
-
-def _slice_array(data: bytes, path: str = ".tif",
-                 float_mode: str = "raise") -> np.ndarray:
-    """One z-slice file -> its 2-D page (validation shared with
-    :func:`_slice_axes`)."""
-    pages = _decode_slice_pages(data, path, float_mode)
-    if pages.shape[0] != 1 or pages.shape[3] != 1:
-        raise ValueError(
-            f"slice file has shape {pages.shape}; one single-sample z-slice "
-            "per file expected (stacks/channels go through queries/scans.py)"
-        )
-    return pages[0, :, :, 0]
 
 
 def _slice_batch(z: int, arr: np.ndarray) -> pa.RecordBatch:
@@ -553,6 +581,28 @@ def _slice_batch(z: int, arr: np.ndarray) -> pa.RecordBatch:
 @dataclass
 class _SlicePartition(InputPartition):
     slices: list[tuple[str, int]]  # (path, z)
+    # (path, (height, width)) of the volume's first slice, when known
+    first: tuple[str, tuple[int, int]] | None = None
+
+
+def _slice_batches(partition: _SlicePartition, emit: str, float_mode: str):
+    """Decode a partition's slices, one Arrow batch each. Every slice of
+    a volume must have the first slice's page shape: a different one
+    fails the read, naming the file and both shapes, instead of being
+    cropped or zero-padded into the volume downstream."""
+    for path, z in partition.slices:
+        arr = _slice_array(_read_bytes(path), path, float_mode)
+        if partition.first is not None and arr.shape != partition.first[1]:
+            first, shape = partition.first
+            raise ValueError(
+                f"{path}: slice shape {arr.shape} differs from the first "
+                f"slice {first}, {shape}; every slice of a volume must "
+                "have one shape"
+            )
+        if emit == "slices":
+            yield _slice_batch(z, arr)
+        else:
+            yield _voxel_batch(*_voxel_axes(z, arr))
 
 
 class _TiffSliceReaderNoPushdown(DataSourceReader):
@@ -566,27 +616,23 @@ class _TiffSliceReaderNoPushdown(DataSourceReader):
         self.bounds = _Bounds()
 
     def partitions(self):
+        listed = _sorted_slices(self.root, self.suffix, self.channel)
         files = [
-            (p, z)
-            for z, p in enumerate(_sorted_slices(self.root, self.suffix, self.channel))
-            if self.bounds.admits("z", z, z)
+            (p, z) for z, p in enumerate(listed) if self.bounds.admits("z", z, z)
         ]
+        # the first slice's header fixes the volume's page shape
+        first = None
+        if files:
+            head = _read_bytes(listed[0])
+            first = (listed[0], _slice_shape(listed[0], head))
         per = max(1, self.per_partition)
         return [
-            _SlicePartition(files[i : i + per])
+            _SlicePartition(files[i : i + per], first)
             for i in range(0, len(files), per)
         ] or [_SlicePartition([])]
 
     def read(self, partition: _SlicePartition):
-        for path, z in partition.slices:
-            if self.emit == "slices":
-                yield _slice_batch(
-                    z, _slice_array(_read_bytes(path), path, self.float_mode)
-                )
-            else:
-                yield _voxel_batch(
-                    *_slice_axes(_read_bytes(path), z, path, self.float_mode)
-                )
+        return _slice_batches(partition, self.emit, self.float_mode)
 
 
 class _TiffSliceReader(_PushdownMixin, _TiffSliceReaderNoPushdown):
@@ -642,15 +688,7 @@ class _TiffSliceStreamReader(DataSourceStreamReader):
         ] or [_SlicePartition([])]
 
     def read(self, partition: _SlicePartition):
-        for path, z in partition.slices:
-            if self.emit == "slices":
-                yield _slice_batch(
-                    z, _slice_array(_read_bytes(path), path, self.float_mode)
-                )
-            else:
-                yield _voxel_batch(
-                    *_slice_axes(_read_bytes(path), z, path, self.float_mode)
-                )
+        return _slice_batches(partition, self.emit, self.float_mode)
 
     def commit(self, end: dict) -> None:
         # restart path: Spark commits recovered batches before asking
@@ -689,24 +727,10 @@ class TiffVolumeDataSource(DataSource):
 
 # --- per-file block writes --------------------------------------------------
 #
-# One implementation of a block file write, shared by the ``tiff_blocks``
-# / ``ktx_files`` DataSource writers and the executor kernels of
-# pipelines/octree.py and pipelines/ktx.py, which write their own files
-# and hand the driver only the relative names to commit.
-
-
-def _put_file(filesystem, dir_: str, name: str, payload: bytes) -> None:
-    """Write ``dir_/name``: staged as ``.name.tmp`` and renamed wherever
-    rename is atomic, one PUT on object stores. Names are idempotent,
-    so a retried task overwrites its own files."""
-    from hortacloud_importer_spark.sources import manifest
-
-    final = f"{dir_}/{name}"
-    staged = f"{dir_}/.{name}.tmp" if manifest.should_stage(filesystem) else final
-    with filesystem.open_output_stream(staged) as fh:
-        fh.write(payload)
-    if staged != final:
-        filesystem.move(staged, final)
+# One implementation of a block file write, shared by the executor
+# kernels of pipelines/octree.py and pipelines/ktx.py, which write their
+# own files (sources/manifest.py::staged_output) and hand the driver
+# only the relative names to commit.
 
 
 def write_tiff_block(
@@ -743,23 +767,24 @@ def write_tiff_block(
                 f"{dtype}'s range [{info.min}, {info.max}]; requantize "
                 f"the source to {dtype} before the build"
             )
-    target_dir, _, name = f"{base}/{rel}".rpartition("/")
+    path = f"{base}/{rel}"
+    target_dir = path.rpartition("/")[0]
     if made_dirs is None or target_dir not in made_dirs:
         filesystem.create_dir(target_dir, recursive=True)
         if made_dirs is not None:
             made_dirs.add(target_dir)
-    _put_file(
-        filesystem, target_dir, name,
-        encode_tiff(vol.astype(dtype), compression="zlib"),
-    )
+    with manifest.staged_output(filesystem, path) as fh:
+        fh.write(encode_tiff(vol.astype(dtype), compression="zlib"))
     return rel
 
 
 def tiff_block_rel(zi: int, yi: int, xi: int, channel: int, depth: int) -> str:
-    """Store-relative path of a block file: ``{octree-path}/default.{ch}.tif``."""
-    rel_dir = _octree_rel_dir(zi, yi, xi, depth)
-    name = f"default.{channel}.tif"
-    return f"{rel_dir}/{name}" if rel_dir else name
+    """Store-relative path of a block file: ``{octree-path}/default.{ch}.tif``
+    (``depth`` counts the root as 1, so the path has depth - 1 digits)."""
+    from hortacloud_importer_spark.volume.geometry import octree_path_digits
+
+    digits = octree_path_digits(zi, yi, xi, depth - 1)
+    return "/".join([*map(str, digits), f"default.{channel}.tif"])
 
 
 def write_ktx_block(
@@ -786,255 +811,9 @@ def write_ktx_block(
         from hortacloud_importer_spark.sources.codecs import lz4_frame_compress
 
         blob = lz4_frame_compress(blob)
-    _put_file(filesystem, base, name, blob)
+    with manifest.staged_output(filesystem, f"{base}/{name}") as fh:
+        fh.write(blob)
     return name
-
-
-# --- KTX sink (A8) as a writable format ------------------------------------
-
-
-@dataclass
-class _KtxCommit(WriterCommitMessage):
-    files: list[str]
-    n_rows: int
-
-
-class _KtxWriter(DataSourceWriter):
-    """``df.write.format("ktx_files").save(dir)`` over KTX_SCHEMA rows
-    (zi, yi, xi, channel, n_levels, ktx), with real commit semantics:
-
-    - ``write()`` (executors) writes each blob with
-      :func:`write_ktx_block` (idempotent names, tmp+rename wherever
-      rename is atomic), so a retried or speculative task overwrites
-      its own files instead of duplicating them.
-    - ``commit()`` (driver) appends ONE manifest shard naming the
-      files this run committed (sources/manifest.py — the Delta-log
-      pattern) — the atomic-visibility marker the reference implements
-      as sentinel files (do_step1/dummy_generated,
-      tiff2octree.py:1328-1355; I5), and what a resume anti-join (C4)
-      reads instead of listing the store. O(run) per commit, never
-      O(store).
-    - ``overwrite`` mode clears prior ``.ktx`` files + manifest first.
-    """
-
-    def __init__(self, options: dict, overwrite: bool):
-        self.out_dir = options["path"].rstrip("/")
-        self.overwrite = overwrite
-        # .ktx.lz4 side-compression (reference's LZ4.exe post-pass,
-        # ktx_from_rendered_tiff.py:565-583) done inline per executor
-        self.lz4 = str(options.get("lz4", "false")).lower() == "true"
-        if overwrite:
-            from pyarrow import fs as pafs
-
-            from hortacloud_importer_spark.sources import manifest
-
-            filesystem, base = _pa_fs(self.out_dir)
-            manifest.clear(filesystem, base)
-            try:
-                infos = filesystem.get_file_info(
-                    pafs.FileSelector(base, recursive=False)
-                )
-            except (FileNotFoundError, OSError):
-                infos = []
-            for info in infos:
-                if info.type == pafs.FileType.File and info.base_name.endswith(
-                    (".ktx", ".ktx.lz4")
-                ):
-                    filesystem.delete_file(info.path)
-
-    def write(self, iterator) -> _KtxCommit:
-        filesystem, base = _pa_fs(self.out_dir)
-        filesystem.create_dir(base, recursive=True)
-        files = []
-        for row in iterator:
-            try:
-                depth = row["depth"]
-            except (KeyError, ValueError, IndexError):
-                depth = None  # depth column absent: single-level store
-            files.append(
-                write_ktx_block(
-                    filesystem, base,
-                    row["zi"], row["yi"], row["xi"], depth or 0,
-                    row["channel"], row["ktx"], self.lz4,
-                )
-            )
-        return _KtxCommit(files, len(files))
-
-    def commit(self, messages) -> None:
-        from hortacloud_importer_spark.sources import manifest
-
-        filesystem, base = _pa_fs(self.out_dir)
-        files = {f for m in messages if m for f in m.files}
-        # one immutable shard per commit: append/resume runs accumulate
-        # shards, nothing merges or rewrites (prior commits stay
-        # visible through the shard union — sources/manifest.py)
-        filesystem.create_dir(base, recursive=True)
-        manifest.write_commit(filesystem, base, sorted(files))
-
-    def abort(self, messages) -> None:
-        filesystem, base = _pa_fs(self.out_dir)
-        for m in messages:
-            if not m:
-                continue
-            for name in m.files:
-                try:
-                    filesystem.delete_file(f"{base}/{name}")
-                except (FileNotFoundError, OSError):
-                    pass  # best-effort: uncommitted leftovers are inert
-
-
-class KtxFilesDataSource(DataSource):
-    """Writable ``ktx_files`` format (read back with ``binaryFile`` +
-    sources/ktx.py::ktx_decode_blocks)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "ktx_files"
-
-    def schema(self) -> str:
-        # depth is optional on write (0/absent = single-level store)
-        return (
-            "zi int, yi int, xi int, depth int, channel int,"
-            " n_levels int, ktx binary"
-        )
-
-    def writer(self, schema, overwrite: bool) -> _KtxWriter:
-        return _KtxWriter(dict(self.options), overwrite)
-
-
-def _octree_rel_dir(zi: int, yi: int, xi: int, nlevels: int) -> str:
-    """Octant-digit directory for a leaf block, MSB first — the same
-    ``1 + x_bit + 2*y_bit + 4*z_bit`` key as volume.model.octree_path
-    (tiff2octree.py:263-279)."""
-    parts = []
-    for bit in range(nlevels - 2, -1, -1):
-        parts.append(
-            str(
-                1
-                + ((xi >> bit) & 1)
-                + 2 * ((yi >> bit) & 1)
-                + 4 * ((zi >> bit) & 1)
-            )
-        )
-    return "/".join(parts)
-
-
-@dataclass
-class _TiffBlockCommit(WriterCommitMessage):
-    files: list[str]
-    n_rows: int
-    n_skipped: int
-
-
-class _TiffBlockWriter(DataSourceWriter):
-    """``df.write.format("tiff_blocks").save(root)`` over blockify rows
-    (zi, yi, xi, channel, shape, voxels) — the reference's ACTUAL block
-    output: ``{octree-path}/default.{channel}.tif``, zlib-compressed,
-    all-zero blocks skipped (save_block, tiff2octree.py:298-317; ZLIB
-    at :315). Written with the clean-room encoder (sources/tiff.py), so
-    a store produced here is byte-readable by the reference's tooling
-    and by this engine's decode_tiff / tiff_volume scan.
-
-    Commit semantics mirror ``ktx_files``: executors write each block
-    with :func:`write_tiff_block` (tmp+rename, idempotent names so
-    retried tasks overwrite themselves), the driver appends ONE manifest shard
-    per commit (sources/manifest.py) — the atomic-visibility marker
-    the reference implements as sentinel files
-    (tiff2octree.py:1328-1355), and the input a resume anti-join (C4)
-    reads instead of walking the tree.
-    Options: ``nlevels`` (octree depth, default 1 = flat), ``dtype``
-    (``uint8``/``uint16``, default uint16), ``skip_empty`` (default
-    true)."""
-
-    def __init__(self, options: dict, overwrite: bool):
-        self.out_dir = options["path"].rstrip("/")
-        self.nlevels = int(options.get("nlevels", 1))
-        self.dtype = options.get("dtype", "uint16")
-        if self.dtype not in ("uint8", "uint16"):
-            raise ValueError("dtype must be uint8 or uint16")
-        self.skip_empty = str(options.get("skip_empty", "true")).lower() == "true"
-        self.overwrite = overwrite
-        if overwrite:
-            from pyarrow import fs as pafs
-
-            from hortacloud_importer_spark.sources import manifest
-
-            filesystem, base = _pa_fs(self.out_dir)
-            manifest.clear(filesystem, base)
-            try:
-                infos = filesystem.get_file_info(
-                    pafs.FileSelector(base, recursive=True)
-                )
-            except (FileNotFoundError, OSError):
-                infos = []
-            for info in infos:
-                if info.type == pafs.FileType.File and info.base_name.endswith(
-                    ".tif"
-                ):
-                    filesystem.delete_file(info.path)
-
-    def write(self, iterator) -> _TiffBlockCommit:
-        filesystem, base = _pa_fs(self.out_dir)
-        files, skipped = [], 0
-        made_dirs: set[str] = set()
-        for row in iterator:
-            bz, by, bx = (int(s) for s in row["shape"])
-            arr = np.asarray(row["voxels"], dtype=np.int64)
-            rel = write_tiff_block(
-                filesystem, base, arr[: bz * by * bx].reshape(bz, by, bx),
-                int(row["zi"]), int(row["yi"]), int(row["xi"]),
-                int(row["channel"]), self.nlevels, self.dtype,
-                skip_empty=self.skip_empty, made_dirs=made_dirs,
-            )
-            if rel is None:
-                skipped += 1
-            else:
-                files.append(rel)
-        return _TiffBlockCommit(files, len(files), skipped)
-
-    def commit(self, messages) -> None:
-        from hortacloud_importer_spark.sources import manifest
-
-        filesystem, base = _pa_fs(self.out_dir)
-        files = {f for m in messages if m for f in m.files}
-        skipped = sum(m.n_skipped for m in messages if m)
-        # one immutable shard per commit: successive appends accumulate
-        # shards under the shared root, prior commits stay visible
-        # through the shard union, and nothing is ever rewritten (the
-        # reference's sentinel files accumulate the same way,
-        # tiff2octree.py:1328-1355). n_skipped is per-RUN by contract.
-        filesystem.create_dir(base, recursive=True)
-        manifest.write_commit(filesystem, base, sorted(files), n_skipped=skipped)
-
-    def abort(self, messages) -> None:
-        filesystem, base = _pa_fs(self.out_dir)
-        for m in messages:
-            if not m:
-                continue
-            for rel in m.files:
-                try:
-                    filesystem.delete_file(f"{base}/{rel}")
-                except (FileNotFoundError, OSError):
-                    pass  # best-effort: uncommitted leftovers are inert
-
-
-class TiffBlocksDataSource(DataSource):
-    """Writable ``tiff_blocks`` format — the reference's octree block
-    store (read back with ``binaryFile`` + sources/tiff.py::decode_tiff
-    or the ``tiff_volume`` scan)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "tiff_blocks"
-
-    def schema(self) -> str:
-        return (
-            "zi int, yi int, xi int, channel int,"
-            " shape array<int>, voxels array<int>"
-        )
-
-    def writer(self, schema, overwrite: bool) -> _TiffBlockWriter:
-        return _TiffBlockWriter(dict(self.options), overwrite)
 
 
 class N5VolumeDataSourceNoPushdown(N5VolumeDataSource):
@@ -1056,8 +835,6 @@ _SOURCES = (
     N5VolumeDataSource,
     ZarrVolumeDataSource,
     TiffVolumeDataSource,
-    KtxFilesDataSource,
-    TiffBlocksDataSource,
 )
 
 # Same format names, readers without pushFilters — registered when the
@@ -1067,8 +844,6 @@ _SOURCES_NO_PUSHDOWN = (
     N5VolumeDataSourceNoPushdown,
     ZarrVolumeDataSourceNoPushdown,
     TiffVolumeDataSourceNoPushdown,
-    KtxFilesDataSource,
-    TiffBlocksDataSource,
 )
 
 _PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"

@@ -30,12 +30,20 @@ committed SET goes through :func:`committed_files_df` —
 ``spark.read.text`` over the shard directory, splittable and
 distributed, never a driver-side set. :func:`committed_files` (a
 driver-side set) exists for tiny stores and tests only.
+
+Every file sink in the engine commits through this module in four
+steps: write each data file with :func:`staged_output`, append one
+shard with :func:`write_commit`, resume from :func:`committed_files_df`
+(or :func:`committed_ids` when files are named by a resume id), and
+read back only what :func:`committed_only` keeps.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import uuid
+from contextlib import contextmanager
 
 SHARD_DIR = "_manifest"
 LEGACY = "_MANIFEST.json"
@@ -63,44 +71,49 @@ def _is_object_store(filesystem) -> bool:
     return name in ("s3", "gcs", "abfs", "azurefs")
 
 
-def should_stage(filesystem) -> bool:
-    """True when a writer must stage+rename for atomic visibility
-    (everything except object stores, where the single PUT is the
-    atomic commit and rename is copy+delete). Shared by every file
-    sink in the engine so the atomicity rule lives in one place."""
-    return not _is_object_store(filesystem)
+@contextmanager
+def staged_output(filesystem, path: str):
+    """Open ``path`` for writing so no reader ever sees it partial:
+    the stream goes to ``.{name}.tmp`` beside it and is renamed on a
+    clean exit wherever rename is atomic; on object stores it is one
+    PUT of the final name, which becomes visible only when the stream
+    closes. The caller creates the parent directory. Names are
+    idempotent, so a retried task overwrites its own file."""
+    dir_, _, name = path.rpartition("/")
+    staged = path if _is_object_store(filesystem) else f"{dir_}/.{name}.tmp"
+    with filesystem.open_output_stream(staged) as fh:
+        yield fh
+    if staged != path:
+        filesystem.move(staged, path)
 
 
 def write_commit(filesystem, base: str, files: list[str], n_skipped: int = 0) -> str:
-    """Append one commit shard; returns the shard id.
+    """Append one commit shard; returns the shard id. Creates the
+    shard directory (and ``base``) as needed.
 
     O(files-in-this-commit) — independent of store size.
     """
     sdir = _shard_base(base)
     filesystem.create_dir(sdir, recursive=True)
     shard_id = uuid.uuid4().hex
-    name = f"{sdir}/commit-{shard_id}.files.txt"
-    staged = name if _is_object_store(filesystem) else f"{sdir}/.commit-{shard_id}.files.txt.tmp"
-    payload = "".join(f"{f}\n" for f in sorted(files)).encode()
-    with filesystem.open_output_stream(staged) as fh:
-        fh.write(payload)
-    if staged != name:
-        filesystem.move(staged, name)
+    with staged_output(filesystem, f"{sdir}/commit-{shard_id}.files.txt") as fh:
+        fh.write("".join(f"{f}\n" for f in sorted(files)).encode())
     summary = {"n_files": len(files), "n_skipped": int(n_skipped)}
-    with filesystem.open_output_stream(f"{sdir}/commit-{shard_id}.json") as fh:
+    with staged_output(filesystem, f"{sdir}/commit-{shard_id}.json") as fh:
         fh.write(json.dumps(summary).encode())
     return shard_id
 
 
 def _shard_infos(filesystem, base: str):
+    """The shard directory's files; none when it does not exist. Any
+    other listing error (a ``_manifest`` that is not a directory, a
+    permission or transient store error) surfaces: read as "nothing
+    committed", it would make a resume silently rewrite the store."""
     from pyarrow import fs as pafs
 
-    try:
-        infos = filesystem.get_file_info(
-            pafs.FileSelector(_shard_base(base), recursive=False)
-        )
-    except (FileNotFoundError, OSError):
-        return []
+    infos = filesystem.get_file_info(
+        pafs.FileSelector(_shard_base(base), recursive=False, allow_not_found=True)
+    )
     return [i for i in infos if i.type == pafs.FileType.File]
 
 
@@ -214,14 +227,33 @@ def committed_files_df(spark, root: str):
     return out
 
 
-def clear(filesystem, base: str) -> None:
-    """Overwrite-mode reset: drop every shard and the legacy file."""
-    for info in _shard_infos(filesystem, base):
-        try:
-            filesystem.delete_file(info.path)
-        except (FileNotFoundError, OSError):
-            pass
-    try:
-        filesystem.delete_file(f"{base}/{LEGACY}")
-    except (FileNotFoundError, OSError):
-        pass
+def committed_ids(spark, root: str, pattern: str) -> set[str]:
+    """Resume ids of a store whose files are named by id: the distinct
+    first group of ``pattern`` over the committed relative paths
+    (empty for a fresh store). A data file no shard names is an
+    uncommitted leftover, so it never counts as done."""
+    from pyspark.sql import functions as F
+
+    committed = committed_files_df(spark, root)
+    if committed is None:
+        return set()
+    ids = (
+        committed.select(F.regexp_extract("rel", pattern, 1).alias("id"))
+        .filter(F.col("id") != "")
+        .distinct()
+        .collect()
+    )
+    return {r["id"] for r in ids}
+
+
+def committed_only(df, committed, root: str, path):
+    """Rows of ``df`` whose file — ``path``, a Column holding the full
+    path or URI of a file under ``root`` — is in ``committed`` (the
+    :func:`committed_files_df` of ``root``): a semi-join on the
+    root-relative path, so a killed writer's leftover is never read as
+    data. No broadcast hint: the committed side can be ~1e7 paths, and
+    AQE broadcasts it when it is small."""
+    from pyspark.sql import functions as F
+
+    rel = F.element_at(F.split(path, re.escape(f"{root.rstrip('/')}/")), -1)
+    return df.withColumn("rel", rel).join(committed, "rel", "left_semi").drop("rel")

@@ -46,6 +46,7 @@ def write_transform_txt(
     stored s* values are the ROOT-level voxel size in nanometers:
     ``s = vox_um * 1000 * 2^(nlevels-1)`` with ``%.14g`` formatting.
     """
+    from hortacloud_importer_spark.sources import manifest
     from hortacloud_importer_spark.sources.datasource import _pa_fs
 
     filesystem, base = _pa_fs(out_dir)
@@ -61,7 +62,7 @@ def write_transform_txt(
         f"nl: {nlevels}",
     ]
     path = f"{base.rstrip('/')}/transform.txt"
-    with filesystem.open_output_stream(path) as fh:
+    with manifest.staged_output(filesystem, path) as fh:
         fh.write("\n".join(lines).encode())
     return path
 
@@ -141,8 +142,9 @@ class OctreeGeometry:
 
 def octree_path_digits(zi: int, yi: int, xi: int, depth: int) -> list[int]:
     """Block coords at ``depth`` -> octant digits, MSB first:
-    ``1 + x_bit + 2*y_bit + 4*z_bit`` per level (tiff2octree.py:263-279
-    — same key as sources/datasource.py::_octree_rel_dir)."""
+    ``1 + x_bit + 2*y_bit + 4*z_bit`` per level (tiff2octree.py:263-279).
+    Block files are named by it (sources/datasource.py::tiff_block_rel);
+    sources/block_store.py::rel_block_coords is its Catalyst inverse."""
     return [
         1
         + ((xi >> bit) & 1)

@@ -1,21 +1,31 @@
-"""Block store: skip-empty sink, resume anti-join, partition pruning."""
+"""Octree block store: skip-empty build and read-back, resume over the
+committed manifest, window pruning on path-derived coordinates, and
+the octant path shared by the writer and the readers."""
 
 from __future__ import annotations
 
 import shutil
 
+import numpy as np
 import pytest
+from pyarrow import fs as pafs
 from pyspark.sql import functions as F
 
+from hortacloud_importer_spark.pipelines import build_octree
+from hortacloud_importer_spark.sources import manifest
 from hortacloud_importer_spark.sources.block_store import (
-    read_blocks,
-    resume_filter,
-    with_octree_digits,
-    write_blocks,
+    read_tiff_block_store,
+    rel_block_coords,
 )
+from hortacloud_importer_spark.sources.datasource import tiff_block_rel
 from hortacloud_importer_spark.volume import blockify, synthetic_volume
+from tests.store_fixtures import commit_tiff_blocks
 
 NLEVELS = 3  # 4 blocks per axis of 2^3 leaves
+DIMS = (8, 8, 8)
+BLOCK = (2, 2, 2)
+LEAF_DEPTH = NLEVELS - 1  # octant digits in a leaf path
+_FS = pafs.LocalFileSystem()
 
 
 @pytest.fixture()
@@ -24,23 +34,39 @@ def store(tmp_path):
     shutil.rmtree(tmp_path / "block_store", ignore_errors=True)
 
 
-def _blocks(spark):
-    v = synthetic_volume(spark, 8, 8, 8, channels=1)
+def _voxels(spark):
+    v = synthetic_volume(spark, *DIMS, channels=1)
     # Zero out one block's voxels entirely to exercise skip-empty.
-    v = v.withColumn(
+    return v.withColumn(
         "intensity",
         F.when(
             (F.col("z") < 2) & (F.col("y") < 2) & (F.col("x") < 2), F.lit(0)
         ).otherwise(F.col("intensity")),
     )
-    return blockify(v, (2, 2, 2))  # 4x4x4 = 64 blocks
+
+
+def _build(spark, store):
+    return {
+        r["level"]: r["n_blocks_written"]
+        for r in build_octree(
+            spark, _voxels(spark), store, nlevels=NLEVELS, filter_="max",
+            dims=DIMS, channels=1,
+        ).collect()
+    }
+
+
+def _leaf_files(store):
+    return {
+        f for f in manifest.committed_files(_FS, store)
+        if f.count("/") == LEAF_DEPTH
+    }
 
 
 def test_write_skips_empty_and_reads_back(spark, store):
-    blocks = _blocks(spark)
+    blocks = blockify(_voxels(spark), BLOCK)  # 4x4x4 = 64 blocks
     assert blocks.count() == 64
-    write_blocks(blocks, store, NLEVELS)
-    back = read_blocks(spark, store)
+    assert _build(spark, store)[0] == 63
+    back = read_tiff_block_store(spark, store, depth=LEAF_DEPTH)
     assert back.count() == 63  # the all-zero block is absent (O5)
     assert back.filter((F.col("zi") == 0) & (F.col("yi") == 0) & (F.col("xi") == 0)).count() == 0
     # payloads survive the round trip
@@ -52,51 +78,86 @@ def test_write_skips_empty_and_reads_back(spark, store):
     assert got == orig
 
 
-def test_resume_anti_join(spark, store):
-    blocks = _blocks(spark).filter(F.array_max("voxels") > 0)
-    half = blocks.filter(F.col("zi") < 2)
-    write_blocks(half, store, NLEVELS)
-    remaining = resume_filter(blocks, spark, store)
-    assert remaining.count() == blocks.count() - half.count()
-    assert remaining.filter(F.col("zi") < 2).count() == 0
-    # resume against a missing store is a no-op
-    assert resume_filter(blocks, spark, store + "_absent").count() == blocks.count()
+def test_resume_anti_join(spark, store, tmp_path):
+    """Leaves committed beforehand (here by hand, with other bytes) are
+    skipped by the build's cogroup anti-join on the manifest, never
+    rewritten; every other leaf is written."""
+    import os
+
+    half = [
+        (zi, yi, xi, 0, np.full(BLOCK, 9))
+        for zi in range(2) for yi in range(4) for xi in range(4)
+        if (zi, yi, xi) != (0, 0, 0)
+    ]
+    done = set(commit_tiff_blocks(store, half, depth=NLEVELS))
+    mtimes = {f: os.stat(f"{store}/{f}").st_mtime_ns for f in done}
+    assert _build(spark, store)[0] == 63 - len(done)
+    assert _leaf_files(store) >= done
+    assert len(_leaf_files(store)) == 63
+    assert {f: os.stat(f"{store}/{f}").st_mtime_ns for f in done} == mtimes
+    # resume against a missing store builds everything
+    assert _build(spark, str(tmp_path / "absent"))[0] == 63
 
 
 def test_partition_pruning(spark, store):
-    write_blocks(_blocks(spark), store, NLEVELS)
-    pruned = read_blocks(spark, store).filter(F.col("l1") == 8)
+    """A voxel window on one level keeps only the blocks it touches,
+    filtered on path-derived coordinates below the decode."""
+    _build(spark, store)
+    pruned = read_tiff_block_store(
+        spark, store, window=((4, 8), (4, 8), (4, 8)), block_dims=BLOCK,
+        depth=LEAF_DEPTH,
+    )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(l1" in plan, plan[:2000]
-    # l1=8 is the high octant (z,y,x all >= 2): an eighth of the space
+    # the octant-digit coordinate filter sits on the path listing,
+    # between the decode and the file scan
+    window = next(
+        line for line in plan.splitlines()
+        if "Filter" in line and "aggregate(" in line and "path#" in line
+    )
+    assert (
+        plan.index("MapInPandas")
+        < plan.index(window)
+        < plan.index("FileScan binaryFile")
+    ), plan[:2000]
+    # the high octant (z,y,x all >= 2): an eighth of the space
     assert pruned.count() == 8
     assert pruned.filter((F.col("zi") < 2) | (F.col("yi") < 2) | (F.col("xi") < 2)).count() == 0
 
 
 def test_octree_digits_match_path_expr(spark):
+    """The writer's octant path (tiff_block_rel, from
+    volume.geometry.octree_path_digits) is the Catalyst octree_path of
+    the same block, and rel_block_coords inverts it."""
     from hortacloud_importer_spark.volume import octree_path
 
-    b = _blocks(spark).select("zi", "yi", "xi")
-    d = with_octree_digits(b, NLEVELS)
-    joined = d.withColumn(
+    b = blockify(_voxels(spark), BLOCK).select("zi", "yi", "xi")
+    rows = b.withColumn(
         "path", octree_path("zi", "yi", "xi", NLEVELS)
-    ).withColumn(
-        "path2", F.concat_ws("/", F.col("l1").cast("string"), F.col("l2").cast("string"))
+    ).collect()
+    assert len(rows) == 64
+    for r in rows:
+        rel = tiff_block_rel(r["zi"], r["yi"], r["xi"], 0, NLEVELS)
+        assert rel == f"{r['path']}/default.0.tif"
+    rels = [tiff_block_rel(r["zi"], r["yi"], r["xi"], 0, NLEVELS) for r in rows]
+    back = spark.createDataFrame([(p,) for p in rels], "rel string").select(
+        *rel_block_coords(F.col("rel"))
+    ).collect()
+    assert sorted(tuple(x) for x in back) == sorted(
+        (r["zi"], r["yi"], r["xi"], LEAF_DEPTH) for r in rows
     )
-    assert joined.filter(F.col("path") != F.col("path2")).count() == 0
 
 
 def test_resume_filter_corrupt_store_raises(spark, store):
     """VERDICT r5 wrongness #1: a broken store must SURFACE, not read
-    as "nothing committed" and silently trigger a full rewrite."""
+    as "nothing committed" and silently trigger a full rewrite — here a
+    ``_manifest`` that is not a directory."""
     import pathlib
 
-    blocks = _blocks(spark).filter(F.array_max("voxels") > 0)
-    write_blocks(blocks.filter(F.col("zi") < 2), store, NLEVELS)
-    for part in pathlib.Path(store).rglob("*.parquet"):
-        part.write_bytes(b"this is not a parquet file")
-    with pytest.raises(Exception):
-        resume_filter(blocks, spark, store).count()
+    pathlib.Path(store).mkdir(parents=True)
+    (pathlib.Path(store) / manifest.SHARD_DIR).write_text("not a directory")
+    with pytest.raises(NotADirectoryError):
+        _build(spark, store)
+    assert not list(pathlib.Path(store).rglob("*.tif"))
 
 
 def test_resume_filter_empty_dir_is_fresh(spark, store, tmp_path):
@@ -104,17 +165,18 @@ def test_resume_filter_empty_dir_is_fresh(spark, store, tmp_path):
     that never wrote) still means nothing committed."""
     import pathlib
 
-    blocks = _blocks(spark).filter(F.array_max("voxels") > 0)
     pathlib.Path(store).mkdir(parents=True)
-    assert resume_filter(blocks, spark, store).count() == blocks.count()
+    assert _build(spark, store)[0] == 63
 
 
 def test_resume_filter_temporary_only_dir_is_fresh(spark, store):
-    """A first write killed mid-job leaves only Spark's _temporary/
-    tree — hidden entries mean nothing committed, not a broken store."""
+    """A first build killed mid-write leaves only hidden entries — a
+    staged ``.tmp`` block, a temporary tree — which mean nothing
+    committed, not a broken store."""
     import pathlib
 
-    blocks = _blocks(spark).filter(F.array_max("voxels") > 0)
     (pathlib.Path(store) / "_temporary" / "0").mkdir(parents=True)
     (pathlib.Path(store) / "_temporary" / "0" / "task_x").write_text("")
-    assert resume_filter(blocks, spark, store).count() == blocks.count()
+    (pathlib.Path(store) / "1" / "1").mkdir(parents=True)
+    (pathlib.Path(store) / "1" / "1" / ".default.0.tif.tmp").write_text("")
+    assert _build(spark, store)[0] == 63

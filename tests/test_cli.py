@@ -330,23 +330,16 @@ def test_crop_non_contiguous_channel_ids(spark, tmp_path):
     ids — not drop channel 2 and emit a zero slice for a phantom
     channel 1 from a 0..n-1 assumption."""
     from hortacloud_importer_spark.pipelines import crop_octree
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
+    from tests.store_fixtures import commit_tiff_blocks
 
-    register_volume_sources(spark)
     store = str(tmp_path / "chan_store")
-    schema = (
-        "zi int, yi int, xi int, channel int,"
-        " shape array<int>, voxels array<int>"
+    commit_tiff_blocks(
+        store,
+        [
+            (0, 0, 0, 0, np.full((2, 2, 2), 10)),
+            (0, 0, 0, 2, np.full((2, 2, 2), 20)),
+        ],
     )
-    rows = [
-        (0, 0, 0, 0, [2, 2, 2], [10] * 8),
-        (0, 0, 0, 2, [2, 2, 2], [20] * 8),
-    ]
-    spark.createDataFrame(rows, schema).write.format("tiff_blocks").option(
-        "nlevels", 2
-    ).mode("append").save(store)
 
     out = str(tmp_path / "chan_out")
     res = {
@@ -374,23 +367,12 @@ def test_crop_accounting_counts_after_dtype_cast(spark, tmp_path):
     that wraps to 0 in the output dtype (256 -> uint8) is zero on
     disk and must not be counted."""
     from hortacloud_importer_spark.pipelines import crop_octree
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
+    from tests.store_fixtures import commit_tiff_blocks
 
-    register_volume_sources(spark)
     store = str(tmp_path / "wrap_store")
-    schema = (
-        "zi int, yi int, xi int, channel int,"
-        " shape array<int>, voxels array<int>"
-    )
     # z-plane 0: one 256 (wraps to 0 in uint8) and one 7 (survives)
-    vox = [256, 7, 0, 0] + [0] * 4
-    spark.createDataFrame(
-        [(0, 0, 0, 0, [2, 2, 2], vox)], schema
-    ).write.format("tiff_blocks").option("nlevels", 2).mode("append").save(
-        store
-    )
+    vox = np.array([256, 7, 0, 0] + [0] * 4).reshape(2, 2, 2)
+    commit_tiff_blocks(store, [(0, 0, 0, 0, vox)])
 
     out = str(tmp_path / "wrap_out")
     res = {

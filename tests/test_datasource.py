@@ -316,9 +316,10 @@ def test_tiff_stream_restart_resumes_from_checkpoint(registered, tmp_path):
 
 
 def test_ktx_writer_datasource_roundtrip(registered, tmp_path):
-    """A8 through df.write.format("ktx_files"): blobs land with
-    idempotent names, the manifest shard records the committed set,
-    and binaryFile + ktx_decode_blocks recovers the voxels."""
+    """A8 through the KTX block write (``write_ktx_block`` plus one
+    manifest commit): blobs land with idempotent names, the manifest
+    shard records the committed set, and binaryFile +
+    ktx_decode_blocks recovers the voxels."""
     from pyarrow import fs as pafs
     from pyspark.sql import functions as F
 
@@ -328,12 +329,12 @@ def test_ktx_writer_datasource_roundtrip(registered, tmp_path):
         ktx_encode_blocks,
     )
     from hortacloud_importer_spark.volume import blockify, synthetic_volume
+    from tests.store_fixtures import commit_ktx_rows
 
     out = tmp_path / "ktx_ds_out"
     v = synthetic_volume(registered, 4, 4, 4, channels=2)
     blocks = blockify(v, (4, 4, 4)).withColumn("level", F.lit(0))
-    encoded = ktx_encode_blocks(blocks)
-    encoded.write.format("ktx_files").mode("append").save(str(out))
+    commit_ktx_rows(str(out), ktx_encode_blocks(blocks).collect())
 
     fs = pafs.LocalFileSystem()
     assert sorted(manifest.committed_files(fs, str(out))) == [
@@ -363,64 +364,46 @@ def test_ktx_writer_datasource_roundtrip(registered, tmp_path):
 
 
 def test_ktx_writer_append_merges_manifest(registered, tmp_path):
-    """A second append run (an incremental/resume conversion) must keep
-    the first run's files visible in the committed set — one immutable
-    shard per run, union on read (same contract as the tiff_blocks
-    sink)."""
+    """A second conversion into the same KTX store (an incremental
+    conversion, one octree depth per run) must keep the first run's
+    files visible in the committed set — one immutable shard per run,
+    union on read — and report the union as its file count."""
     from pyarrow import fs as pafs
-    from pyspark.sql import functions as F
 
+    from hortacloud_importer_spark.pipelines import (
+        build_octree,
+        tiff_octree_to_ktx,
+    )
     from hortacloud_importer_spark.sources import manifest
-    from hortacloud_importer_spark.sources.ktx import ktx_encode_blocks
-    from hortacloud_importer_spark.volume import blockify, synthetic_volume
+    from hortacloud_importer_spark.volume import synthetic_volume
 
-    out = tmp_path / "ktx_merge_out"
+    store, out = str(tmp_path / "octree"), str(tmp_path / "ktx_merge_out")
     v = synthetic_volume(registered, 4, 4, 4, channels=2)
-    blocks = blockify(v, (4, 4, 4)).withColumn("level", F.lit(0))
-    for ch in (0, 1):  # two incremental runs, one channel each
-        ktx_encode_blocks(blocks.filter(F.col("channel") == ch)).write.format(
-            "ktx_files"
-        ).mode("append").save(str(out))
+    build_octree(registered, v, store, nlevels=2, filter_="max", dims=(4, 4, 4))
     fs = pafs.LocalFileSystem()
-    assert sorted(manifest.committed_files(fs, str(out))) == [
-        "block_0_0_0_ch0.ktx",
-        "block_0_0_0_ch1.ktx",
+    leaves = {f for f in manifest.committed_files(fs, store) if "/" in f}
+    counts = [
+        tiff_octree_to_ktx(
+            registered, store, out, (2, 2, 2), 1, depth=depth,
+            with_metadata=False,
+        ).first()["n_files"]
+        for depth in (1, 0)  # two incremental runs: leaves, then root
     ]
+    names = manifest.committed_files(fs, out)
+    assert len(names) == len(leaves) + 2 == counts[1]
+    assert counts[0] == len(leaves)
+    assert {n for n in names if "_d1_" not in n} == {
+        "block_0_0_0_ch0.ktx", "block_0_0_0_ch1.ktx",
+    }
     # two commits -> two shards; neither rewrote the other
-    assert len(manifest.summary_files(fs, str(out))) == 2
+    assert len(manifest.summary_files(fs, out)) == 2
     rows = [
         r["rel"]
-        for r in manifest.committed_files_df(registered, str(out))
+        for r in manifest.committed_files_df(registered, out)
         .distinct()
         .collect()
     ]
-    assert sorted(rows) == ["block_0_0_0_ch0.ktx", "block_0_0_0_ch1.ktx"]
-
-
-def test_ktx_writer_overwrite_clears_stale_files(registered, tmp_path):
-    from pyspark.sql import functions as F
-
-    from hortacloud_importer_spark.sources.ktx import ktx_encode_blocks
-    from hortacloud_importer_spark.volume import blockify, synthetic_volume
-
-    out = tmp_path / "ktx_ow"
-    out.mkdir()
-    (out / "block_9_9_9_ch0.ktx").write_bytes(b"stale")
-
-    v = synthetic_volume(registered, 4, 4, 4, channels=1)
-    blocks = blockify(v, (4, 4, 4)).withColumn("level", F.lit(0))
-    encoded = ktx_encode_blocks(blocks)
-    encoded.write.format("ktx_files").mode("overwrite").save(str(out))
-
-    names = sorted(p.name for p in out.glob("*.ktx"))
-    assert names == ["block_0_0_0_ch0.ktx"]  # stale file removed
-    from pyarrow import fs as pafs
-
-    from hortacloud_importer_spark.sources import manifest
-
-    assert manifest.committed_files(pafs.LocalFileSystem(), str(out)) == {
-        "block_0_0_0_ch0.ktx"
-    }
+    assert sorted(rows) == sorted(names)
 
 
 def test_tiff_stream_slices_feed_the_stateful_cascade(registered, tmp_path):
@@ -502,6 +485,32 @@ def test_corrupt_chunk_names_the_file(registered, tmp_path):
     (root / "0" / "0" / "0").write_bytes(b"\x00\x00\x00\x03trunc")
     with pytest.raises(Exception, match=r"bad N5 chunk .*bad\.n5/0/0/0"):
         registered.read.format("n5_volume").load(str(root)).collect()
+
+
+def test_truncated_slice_names_the_file():
+    """A truncated slice fails with its path in the message — both a
+    file shorter than a TIFF header and a half-length one — and keeps
+    the codec's named error class."""
+    from hortacloud_importer_spark.sources.datasource import _slice_array
+    from hortacloud_importer_spark.sources.tiff import TiffParseError
+
+    data = encode_tiff(np.arange(64 * 64, dtype=np.uint16).reshape(1, 64, 64))
+    path = "/x/slice_00003.tif"
+    for cut in (data[:7], data[: len(data) // 2]):
+        with pytest.raises(TiffParseError, match=r"^/x/slice_00003\.tif: "):
+            _slice_array(cut, path)
+
+
+def test_multipage_slice_names_the_file():
+    """A slice file holding two pages fails the one-page-per-slice
+    check with its path and shape in the message."""
+    from hortacloud_importer_spark.sources.datasource import _slice_array
+
+    data = encode_tiff(np.ones((2, 4, 4), dtype=np.uint16))
+    with pytest.raises(
+        ValueError, match=r"^/x/stack\.tif: slice file has shape \(2, 4, 4, 1\)"
+    ):
+        _slice_array(data, "/x/stack.tif")
 
 
 def test_scan_n5_query_on_truly_vanilla_session():

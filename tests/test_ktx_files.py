@@ -1,5 +1,5 @@
-"""A8/A9 file round trip: ``ktx_files`` writes on executors ->
-binaryFile scan -> decode; plus I4 late-data watermark behavior."""
+"""A8/A9 file round trip: ``tiff_octree_to_ktx`` writes on executors
+-> binaryFile scan -> decode; plus I4 late-data watermark behavior."""
 
 from __future__ import annotations
 
@@ -9,29 +9,24 @@ import numpy as np
 from pyarrow import fs as pafs
 from pyspark.sql import functions as F
 
+from hortacloud_importer_spark.pipelines import build_octree, tiff_octree_to_ktx
 from hortacloud_importer_spark.sources import manifest
-
-from hortacloud_importer_spark.sources.datasource import register_volume_sources
-from hortacloud_importer_spark.sources.ktx import (
-    ktx_decode_blocks,
-    ktx_encode_blocks,
-)
-from hortacloud_importer_spark.volume import blockify, synthetic_volume
+from hortacloud_importer_spark.sources.ktx import ktx_decode_blocks
+from hortacloud_importer_spark.volume import synthetic_volume
 
 
-def _write_ktx(spark, encoded, out):
-    """The ``ktx_files`` DataSource sink (executor writes, one
-    manifest shard per commit)."""
-    register_volume_sources(spark)
-    encoded.write.format("ktx_files").mode("append").save(out)
+def _write_ktx(spark, v, tmp_path, out):
+    """A one-block octree store of ``v`` (4^3, root only), converted by
+    the KTX pass (executor writes, one manifest shard per commit)."""
+    store = str(tmp_path / "octree")
+    build_octree(spark, v, store, nlevels=1, filter_="max", dims=(4, 4, 4))
+    tiff_octree_to_ktx(spark, store, out, (4, 4, 4), 1, with_metadata=False)
 
 
 def test_ktx_file_sink_and_binary_source(spark, tmp_path):
     out = str(tmp_path / "ktx_out")
     v = synthetic_volume(spark, 4, 4, 4, channels=2)
-    blocks = blockify(v, (4, 4, 4)).withColumn("level", F.lit(0))
-    encoded = ktx_encode_blocks(blocks)
-    _write_ktx(spark, encoded, out)
+    _write_ktx(spark, v, tmp_path, out)
 
     files = sorted(glob.glob(f"{out}/*.ktx"))
     assert len(files) == 2
@@ -120,8 +115,7 @@ def test_ktx_file_sink_via_uri(spark, tmp_path):
     the same blobs as a bare path, and commits them."""
     out = str(tmp_path / "ktx_uri_out")
     v = synthetic_volume(spark, 4, 4, 4, channels=1)
-    blocks = blockify(v, (4, 4, 4)).withColumn("level", F.lit(0))
-    _write_ktx(spark, ktx_encode_blocks(blocks), f"file://{out}")
+    _write_ktx(spark, v, tmp_path, f"file://{out}")
 
     files = sorted(glob.glob(f"{out}/*.ktx"))
     assert [f.rsplit("/", 1)[1] for f in files] == ["block_0_0_0_ch0.ktx"]

@@ -11,12 +11,9 @@ import numpy as np
 from pyarrow import fs as pafs
 
 from hortacloud_importer_spark.sources import manifest
+from tests.store_fixtures import commit_tiff_blocks
 
 _FS = pafs.LocalFileSystem()
-
-_SCHEMA = (
-    "zi int, yi int, xi int, channel int, shape array<int>, voxels array<int>"
-)
 
 
 def test_shards_accumulate_without_rewrites(tmp_path):
@@ -130,17 +127,10 @@ def test_read_tiff_block_store_excludes_uncommitted_leftovers(spark, tmp_path):
     from hortacloud_importer_spark.sources.block_store import (
         read_tiff_block_store,
     )
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
     from hortacloud_importer_spark.sources.tiff import encode_tiff
 
-    register_volume_sources(spark)
     out = str(tmp_path / "store")
-    df = spark.createDataFrame(
-        [(0, 0, 0, 0, [2, 2, 2], [5] * 8)], _SCHEMA
-    )
-    df.write.format("tiff_blocks").option("nlevels", 2).mode("append").save(out)
+    commit_tiff_blocks(out, [(0, 0, 0, 0, np.full((2, 2, 2), 5))])
 
     # simulate an uncommitted leftover from a crashed task
     leftover = tmp_path / "store" / "6"
@@ -178,12 +168,12 @@ def test_read_tiff_block_store_manifestless_reads_everything(spark, tmp_path):
 
 class _RecordingPyFS:
     """Duck-typed stand-in for a pyarrow-wrapped NFS/fuse mount: NOT a
-    LocalFileSystem instance, but rename IS atomic there. write_commit
-    only touches these four members."""
+    LocalFileSystem instance, but rename IS atomic there (``type_name``
+    "local" records the same calls for the local filesystem). The
+    staged writes only touch these four members."""
 
-    type_name = "py"
-
-    def __init__(self):
+    def __init__(self, type_name="py"):
+        self.type_name = type_name
         self._fs = pafs.LocalFileSystem()
         self.ops: list[tuple] = []
 
@@ -203,23 +193,43 @@ def test_write_commit_stages_on_nonlocal_filesystem(tmp_path):
     """VERDICT r5 wrongness #2: stage+rename must apply to EVERY
     filesystem with atomic move (NFS/fuse via pyarrow), not only
     LocalFileSystem — a direct open-write-close to the final name can
-    expose a torn shard to a concurrent reader there."""
-    fs = _RecordingPyFS()
-    base = str(tmp_path / "store")
-    fs.create_dir(base, recursive=True)
-    manifest.write_commit(fs, base, ["a/x.tif"])
+    expose a torn shard to a concurrent reader there. The data files
+    go through the same staged write (manifest.staged_output): TIFF and
+    KTX blocks, the commit shard and its summary are each opened only
+    under a ``.name.tmp`` beside their final name, then renamed, on
+    local and non-local filesystems alike."""
+    from hortacloud_importer_spark.sources.datasource import (
+        write_ktx_block,
+        write_tiff_block,
+    )
 
-    shard_writes = [
-        p for op, p, *_ in fs.ops if op == "write" and ".files.txt" in p
-    ]
-    assert len(shard_writes) == 1
-    # the commit-point file was never opened under its final name
-    assert shard_writes[0].endswith(".files.txt.tmp")
-    moves = [(s, d) for op, s, *rest in fs.ops if op == "move" for d in rest]
-    assert len(moves) == 1 and moves[0][0] == shard_writes[0]
-    assert moves[0][1].endswith(".files.txt")
-    # and the published shard is complete
-    assert manifest.committed_files(pafs.LocalFileSystem(), base) == {"a/x.tif"}
+    for type_name in ("py", "local"):
+        fs = _RecordingPyFS(type_name)
+        base = str(tmp_path / type_name)
+        fs.create_dir(base, recursive=True)
+        rel = write_tiff_block(fs, base, np.full((2, 2, 2), 7), 1, 0, 1, 0, 2)
+        name = write_ktx_block(fs, base, 0, 0, 0, 0, 0, b"not-a-real-ktx")
+        manifest.write_commit(fs, base, [rel, name])
+
+        writes = [p for op, p, *_ in fs.ops if op == "write"]
+        moves = [(s, d) for op, s, *rest in fs.ops if op == "move" for d in rest]
+        assert len(writes) == 4 and [s for s, _ in moves] == writes
+        for staged, final in moves:
+            head, _, leaf = final.rpartition("/")
+            assert staged == f"{head}/.{leaf}.tmp"
+        assert [d for _, d in moves][:2] == [f"{base}/{rel}", f"{base}/{name}"]
+        shard_writes = [p for p in writes if ".files.txt" in p]
+        assert len(shard_writes) == 1
+        # the commit-point file was never opened under its final name,
+        # and it is published before its summary
+        assert shard_writes[0].endswith(".files.txt.tmp")
+        assert moves[2][1].endswith(".files.txt")
+        assert moves[3][1].endswith(".json")
+        # and the published shard is complete
+        assert manifest.committed_files(pafs.LocalFileSystem(), base) == {
+            rel, name,
+        }
+        assert not list((tmp_path / type_name).rglob("*.tmp"))
 
 
 def test_is_object_store_classification(tmp_path):
@@ -322,3 +332,19 @@ def test_write_commit_object_store_single_put(tmp_path):
     assert manifest.committed_files(fs, base) == {
         "a/x.tif", "b/y.tif", "c/z.tif",
     }
+
+    # the data files share the same branch (manifest.staged_output):
+    # each TIFF and KTX block is ONE PUT of its final key
+    from hortacloud_importer_spark.sources.datasource import (
+        write_ktx_block,
+        write_tiff_block,
+    )
+    from hortacloud_importer_spark.sources.tiff import decode_tiff
+
+    n_puts = len(fs.puts)
+    rel = write_tiff_block(fs, base, np.full((2, 2, 2), 7), 1, 0, 1, 0, 2)
+    name = write_ktx_block(fs, base, 0, 0, 0, 0, 0, b"not-a-real-ktx")
+    assert fs.puts[n_puts:] == [f"{base}/{rel}", f"{base}/{name}"]
+    assert not any(".tmp" in p for p in fs.puts)
+    assert fs.objects[f"{base}/{name}"] == b"not-a-real-ktx"
+    assert (decode_tiff(fs.objects[f"{base}/{rel}"])[..., 0] == 7).all()

@@ -3,8 +3,8 @@ IO runs against S3-style stores, not just the local filesystem.
 
 Two independent proofs, matching the engine's two IO stacks:
 
-1. **pyarrow surfaces** (Python DataSource scans, the tiff_blocks /
-   ktx sinks, resume probes) against a real in-process S3 REST
+1. **pyarrow surfaces** (Python DataSource scans, the octree build's
+   block writes and manifest commit, resume probes) against a real in-process S3 REST
    endpoint (tests/s3_stub.py) over ``s3://`` URIs — ListObjectsV2,
    ranged GETs, multipart uploads, the lot. Also pins the
    ``s3a:// -> s3://`` alias (clusters configure the Hadoop spelling;
@@ -31,9 +31,7 @@ sys.path.insert(0, os.path.dirname(__file__))
 from s3_stub import S3Stub  # noqa: E402
 
 from hortacloud_importer_spark.sources.datasource import (  # noqa: E402
-    _list_files,
     _pa_fs,
-    _read_bytes,
     register_volume_sources,
 )
 from hortacloud_importer_spark.sources.tiff import (  # noqa: E402
@@ -78,61 +76,72 @@ def test_s3_tiff_volume_scan(spark):
 
 
 def test_s3_tiff_blocks_sink_writes_multipart(spark):
-    """A6/A7 sink to an object store: blockify rows written via the
-    tiff_blocks DataSourceWriter land as real zlib TIFF objects (one
-    multipart upload each) plus a manifest shard; payloads read back
-    byte-exactly through the same endpoint."""
+    """A6/A11 sink to an object store: build_octree from a DataFrame
+    into an ``s3://`` root. The subtree kernel writes every TIFF block
+    as ONE upload of its final key (no ``.tmp`` key anywhere: rename is
+    copy+delete there), the driver appends a manifest shard, and the
+    blocks read back through the same endpoint equal the NumPy pyramid
+    (np_downsample). The build resumes by default, so the fresh store's
+    probe must find nothing committed and let every block be built."""
+    from hortacloud_importer_spark.pipelines import build_octree
+    from hortacloud_importer_spark.sources import manifest
+    from hortacloud_importer_spark.sources.datasource import tiff_block_rel
+    from tests.test_octree_pipeline import expected_blocks
+
     rng = np.random.default_rng(5)
-    vol = rng.integers(1, 4096, size=(2, 4, 4, 4), dtype=np.int64)
-    # two channels at one block position -> two objects
-    rows = [
-        (0, 0, 0, ch, [4, 4, 4], [int(v) for v in vol[ch].ravel()])
-        for ch in range(2)
-    ]
+    vol = rng.integers(1, 4096, size=(8, 8, 8), dtype=np.int64)
+    voxels = spark.createDataFrame(
+        [
+            (z, y, x, 0, int(vol[z, y, x]))
+            for z, y, x in np.ndindex(*vol.shape)
+        ],
+        "z int, y int, x int, channel int, intensity int",
+    )
     with S3Stub() as s3:
         s3.store.buckets.add("out")
-        register_volume_sources(spark)
-        df = spark.createDataFrame(
-            rows,
-            "zi int, yi int, xi int, channel int, shape array<int>,"
-            " voxels array<bigint>",
-        )
         root = s3.uri("out", "octree")
-        df.coalesce(1).write.format("tiff_blocks").option(
-            "nlevels", "1"
-        ).mode("append").save(root)
+        summary = build_octree(
+            spark, voxels, root, nlevels=2, filter_="max", dims=(8, 8, 8),
+            channels=1,
+        ).collect()
+        assert {r["level"]: r["n_blocks_written"] for r in summary} == {
+            0: 8, 1: 1,
+        }
         keys = sorted(k for (_, k) in s3.store.objects)
-        assert any(k.endswith("default.0.tif") for k in keys)
-        assert any("_manifest" in k or "manifest" in k for k in keys), keys
-        # byte-level read-back through the endpoint
-        files = [
-            f for f in _list_files(root)
-            if f.partition("?")[0].endswith(".tif")
-        ]
-        assert len(files) == 2
-        for f in files:
-            name = f.partition("?")[0].rsplit("/", 1)[-1]
-            ch = int(name.split(".")[1])
-            pages = decode_tiff(_read_bytes(f))
-            assert pages.shape == (4, 4, 4, 1)
-            assert np.array_equal(
-                pages[:, :, :, 0].astype(np.int64), vol[ch]
-            )
+        assert not [k for k in keys if ".tmp" in k], keys
+        assert [k for k in keys if k.endswith(".files.txt")], keys
+        # byte-level read-back through the endpoint vs the NumPy pyramid
+        want = {
+            tiff_block_rel(zi, yi, xi, ch, depth + 1): blk
+            for (depth, zi, yi, xi, ch), blk in expected_blocks(
+                [vol], 2, (4, 4, 4), "max"
+            ).items()
+        }
+        filesystem, base = _pa_fs(root)
+        assert manifest.committed_files(filesystem, base) == set(want)
+        for rel, blk in want.items():
+            with filesystem.open_input_stream(f"{base}/{rel}") as fh:
+                pages = decode_tiff(fh.read())
+            assert np.array_equal(pages[..., 0].astype(np.int64), blk), rel
 
 
 def test_s3_resume_probe_fresh_store(spark):
     """A11 resume: the pyarrow existence probe recognizes a fresh
     object-store prefix (nothing committed -> run everything) without
-    needing a JVM S3 connector."""
-    from hortacloud_importer_spark.sources.block_store import resume_filter
+    needing a JVM S3 connector: no manifest, no committed-set
+    DataFrame, no committed ids."""
+    from hortacloud_importer_spark.sources import manifest
 
-    work = spark.range(3).selectExpr(
-        "0 as zi", "0 as yi", "cast(id as int) as xi", "0 as channel"
-    )
     with S3Stub() as s3:
         s3.store.buckets.add("rs")
-        fresh = resume_filter(work, spark, s3.uri("rs", "store"))
-        assert fresh.count() == 3
+        root = s3.uri("rs", "store")
+        filesystem, base = _pa_fs(root)
+        assert not manifest.has_manifest(filesystem, base)
+        assert manifest.committed_files(filesystem, base) == set()
+        assert manifest.committed_files_df(spark, root) is None
+        assert manifest.committed_ids(spark, root, r"(.+)") == set()
+        # the probe only reads: the fresh prefix stays empty
+        assert not [k for (b, k) in s3.store.objects if b == "rs"]
 
 
 _SHIM_JAVA = """

@@ -447,6 +447,26 @@ def test_fused_slice_ingest_matches_voxel_path(spark, tmp_path):
     _assert_store(out, expected_blocks([padded], 2, (4, 3, 3), "max"))
 
 
+def test_slice_with_other_dims_fails_before_any_commit(spark, tmp_path):
+    """An 8-slice 32x32 directory whose slice 5 is 40x24: the build
+    fails with a ValueError naming that file and both shapes, and
+    nothing is committed (before, the slice was cropped and
+    zero-padded into the volume and the build committed)."""
+    from hortacloud_importer_spark.pipelines import build_octree
+
+    rng = np.random.default_rng(41)
+    slices = [rng.integers(1, 60000, (32, 32)).astype(np.uint16) for _ in range(8)]
+    slices[5] = rng.integers(1, 60000, (40, 24)).astype(np.uint16)
+    _write_slices(tmp_path / "odd", slices)
+    out = str(tmp_path / "odd_store")
+    with pytest.raises(Exception) as err:
+        build_octree(spark, str(tmp_path / "odd"), out, nlevels=2).count()
+    msg = str(err.value)
+    assert "ValueError" in msg and "default.0.005.tif" in msg, msg[-2000:]
+    assert "(40, 24)" in msg and "(32, 32)" in msg, msg[-2000:]
+    assert not manifest.has_manifest(_FS, out)
+
+
 def test_fused_ingest_clips_slices_beyond_padded_grid(spark, tmp_path):
     """A slice dir with more files than the caller's dims: slices past
     the padded grid are dropped — a stray z would otherwise alias onto

@@ -1,17 +1,14 @@
-"""End-to-end pipeline (SURVEY.md §5.2.4): synthetic volume -> leaf
-blocks -> partitioned store (skip-empty) -> resume no-op -> pyramid ->
-KTX blobs, with the reference's structural invariants."""
+"""End-to-end pipeline (SURVEY.md §5.2.4): synthetic volume -> octree
+block store (skip-empty) -> resume no-op -> pyramid -> KTX blobs, with
+the reference's structural invariants."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from hortacloud_importer_spark.sources.block_store import (
-    read_blocks,
-    resume_filter,
-    write_blocks,
-)
+from hortacloud_importer_spark.pipelines import build_octree
+from hortacloud_importer_spark.sources.block_store import read_tiff_block_store
 from hortacloud_importer_spark.sources.ktx import decode_ktx, ktx_encode_blocks
 from hortacloud_importer_spark.volume import (
     blockify,
@@ -37,14 +34,22 @@ def test_full_pipeline(spark, tmp_path):
         ).otherwise(F.col("intensity")),
     )
 
-    # 1. leaf write with skip-empty
-    leaves = blockify(v, BLOCK)
-    write_blocks(leaves, store, NLEVELS)
-    stored = read_blocks(spark, store)
-    assert stored.count() == 4 * 4 * 4 - 1  # all-zero block absent (O5)
+    # 1. octree build with skip-empty; read back its leaf level
+    def build():
+        return {
+            r["level"]: r["n_blocks_written"]
+            for r in build_octree(
+                spark, v, store, nlevels=NLEVELS, filter_="max", dims=DIMS,
+                channels=1,
+            ).collect()
+        }
+
+    assert build()[0] == 4 * 4 * 4 - 1  # all-zero block absent (O5)
+    stored = read_tiff_block_store(spark, store, depth=NLEVELS - 1)
+    assert stored.count() == 4 * 4 * 4 - 1
 
     # 2. resume over a committed store is a no-op (C4/O10)
-    assert resume_filter(leaves.filter(F.array_max("voxels") > 0), spark, store).count() == 0
+    assert build() == {0: 0, 1: 0, 2: 0}
 
     # 3. pyramid from the stored blocks. The relational form is SPARSE:
     #    a group with no surviving parents emits no child row (absent ==
@@ -101,12 +106,10 @@ def test_reference_pipeline_tiff_to_ktx(spark, tmp_path):
     -> file sink -> binaryFile read-back -> exact voxel equality.
     This is tiff2octree + ktx_from_rendered_tiff end to end."""
     from hortacloud_importer_spark.operators.multimodal import _decode_one
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
     from hortacloud_importer_spark.sources.ktx import ktx_decode_blocks
     from hortacloud_importer_spark.sources.tiff import encode_tiff
     from hortacloud_importer_spark.volume import mipmap_dimension
+    from tests.store_fixtures import commit_ktx_rows
 
     dims = (8, 8, 8)
     rng = np.random.default_rng(17)
@@ -164,10 +167,9 @@ def test_reference_pipeline_tiff_to_ktx(spark, tmp_path):
 
     # 3. ONE interleaved 2-channel KTX per block -> files -> read back
     out_dir = tmp_path / "ktx_out"
-    register_volume_sources(spark)
-    ktx_encode_blocks(stacked, interleave=True).write.format("ktx_files").mode(
-        "append"
-    ).save(str(out_dir))
+    commit_ktx_rows(
+        str(out_dir), ktx_encode_blocks(stacked, interleave=True).collect()
+    )
     back = (
         spark.read.format("binaryFile")
         .load(f"file://{out_dir}/*.ktx")

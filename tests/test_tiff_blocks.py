@@ -1,7 +1,8 @@
-"""A6 as real files: the ``tiff_blocks`` DataSource writer emits the
-reference's actual output layout — ``{octree-path}/default.{ch}.tif``,
-zlib-compressed, all-zero blocks skipped (save_block,
-tiff2octree.py:298-317) — and the clean-room decoder reads it back."""
+"""A6 as real files: the block write (``datasource.write_tiff_block``)
+emits the reference's actual output layout —
+``{octree-path}/default.{ch}.tif``, zlib-compressed, all-zero blocks
+skipped (save_block, tiff2octree.py:298-317) — committed through
+sources/manifest.py, and the clean-room decoder reads it back."""
 
 from __future__ import annotations
 
@@ -12,36 +13,26 @@ from pyarrow import fs as pafs
 
 from hortacloud_importer_spark.sources import manifest
 from hortacloud_importer_spark.sources.tiff import decode_tiff
+from tests.store_fixtures import commit_tiff_blocks
 
 _FS = pafs.LocalFileSystem()
 
-_SCHEMA = (
-    "zi int, yi int, xi int, channel int, shape array<int>, voxels array<int>"
-)
+
+def _block(vox):
+    return np.asarray(vox, dtype=np.int64).reshape(2, 2, 2)
 
 
-def _registered(spark):
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
-
-    register_volume_sources(spark)
-    return spark
-
-
-def test_tiff_blocks_sink_roundtrip_and_skip_empty(spark, tmp_path):
-    spark = _registered(spark)
+def test_tiff_blocks_sink_roundtrip_and_skip_empty(tmp_path):
     rng = np.random.default_rng(9)
     data = {}
-    rows = []
+    blocks = []
     for zi, yi, xi in [(0, 0, 0), (1, 0, 1)]:
         vox = [int(v) for v in rng.integers(1, 65535, 8)]
         data[(zi, yi, xi)] = vox
-        rows.append((zi, yi, xi, 0, [2, 2, 2], vox))
-    rows.append((0, 1, 0, 0, [2, 2, 2], [0] * 8))  # all-zero -> skipped
-    df = spark.createDataFrame(rows, _SCHEMA)
+        blocks.append((zi, yi, xi, 0, _block(vox)))
+    blocks.append((0, 1, 0, 0, _block([0] * 8)))  # all-zero -> skipped
     out = str(tmp_path / "store")
-    df.write.format("tiff_blocks").option("nlevels", 2).mode("append").save(out)
+    commit_tiff_blocks(out, blocks)
 
     totals = manifest.run_totals(_FS, out)
     assert totals["n_files"] == 2
@@ -62,43 +53,22 @@ def test_tiff_blocks_sink_roundtrip_and_skip_empty(spark, tmp_path):
     assert len(blob) != 8 + 2 * 8  # not an uncompressed single payload
 
 
-def test_tiff_blocks_overwrite_clears_prior_files(spark, tmp_path):
-    spark = _registered(spark)
-    out = str(tmp_path / "store")
-    a = spark.createDataFrame(
-        [(0, 0, 0, 0, [2, 2, 2], [5] * 8), (1, 0, 1, 0, [2, 2, 2], [9] * 8)],
-        _SCHEMA,
-    )
-    a.write.format("tiff_blocks").option("nlevels", 2).mode("append").save(out)
-    b = spark.createDataFrame([(0, 0, 0, 1, [2, 2, 2], [7] * 8)], _SCHEMA)
-    b.write.format("tiff_blocks").option("nlevels", 2).mode("overwrite").save(out)
-
-    files = sorted(
-        p.split(f"{out}/")[1] for p in glob.glob(f"{out}/**/*.tif", recursive=True)
-    )
-    assert files == ["1/default.1.tif"]
-    assert manifest.committed_files(_FS, out) == {"1/default.1.tif"}
-
-
 def test_tiff_blocks_store_reads_back_distributed(spark, tmp_path):
-    """Write with the DataSource sink, read back with the binaryFile +
+    """Write with the block write, read back with the binaryFile +
     decode path — coordinates recovered from the octree digits, voxels
     byte-exact."""
     from hortacloud_importer_spark.sources.block_store import (
         read_tiff_block_store,
     )
 
-    spark = _registered(spark)
     out = str(tmp_path / "store")
     rng = np.random.default_rng(11)
-    rows, want = [], {}
+    blocks, want = [], {}
     for zi, yi, xi, ch in [(0, 0, 0, 0), (1, 1, 0, 1), (0, 1, 1, 0)]:
         vox = [int(v) for v in rng.integers(1, 65535, 8)]
         want[(zi, yi, xi, ch)] = vox
-        rows.append((zi, yi, xi, ch, [2, 2, 2], vox))
-    spark.createDataFrame(rows, _SCHEMA).write.format("tiff_blocks").option(
-        "nlevels", 2
-    ).mode("append").save(out)
+        blocks.append((zi, yi, xi, ch, _block(vox)))
+    commit_tiff_blocks(out, blocks)
 
     back = read_tiff_block_store(spark, out)
     got = {
@@ -112,13 +82,11 @@ def test_tiff_blocks_store_reads_back_distributed(spark, tmp_path):
         assert voxels == vox
 
 
-def test_tiff_blocks_store_feeds_resume_anti_join(spark, tmp_path):
+def test_tiff_blocks_store_feeds_resume_anti_join(tmp_path):
     """C4 over the manifest: the committed file list (not a tree walk)
     drives the resume filter."""
-    spark = _registered(spark)
     out = str(tmp_path / "store")
-    done = spark.createDataFrame([(0, 0, 0, 0, [2, 2, 2], [5] * 8)], _SCHEMA)
-    done.write.format("tiff_blocks").option("nlevels", 2).mode("append").save(out)
+    commit_tiff_blocks(out, [(0, 0, 0, 0, _block([5] * 8))])
 
     committed = manifest.committed_files(_FS, out)
     work = [(0, 0, 0, 0), (1, 0, 1, 0)]  # second block not yet written
@@ -135,14 +103,12 @@ def test_store_channels_from_paths_without_decode(spark, tmp_path):
     when every payload on disk is corrupt, proving no decode ran."""
     from hortacloud_importer_spark.sources.block_store import store_channels
 
-    spark = _registered(spark)
-    rows = [
-        (0, 0, 0, ch, [2, 2, 2], [1, 2, 3, 4, 5, 6, 7, 8])
-        for ch in (0, 2)
-    ]
-    df = spark.createDataFrame(rows, _SCHEMA)
     out = str(tmp_path / "chan_store")
-    df.write.format("tiff_blocks").option("nlevels", 1).mode("append").save(out)
+    commit_tiff_blocks(
+        out,
+        [(0, 0, 0, ch, _block([1, 2, 3, 4, 5, 6, 7, 8])) for ch in (0, 2)],
+        depth=1,
+    )
     # corrupt every .tif payload; path-only discovery must not care
     for p in glob.glob(f"{out}/**/*.tif", recursive=True):
         with open(p, "wb") as fh:
@@ -157,15 +123,14 @@ def test_store_block_meta_one_header_no_decode(spark, tmp_path):
         store_block_meta,
     )
 
-    spark = _registered(spark)
-    rows = [
-        (zi, yi, xi, 0, [2, 2, 2], [1, 2, 3, 4, 5, 6, 7, 8])
-        for zi, yi, xi in [(0, 0, 0), (1, 1, 1)]
-    ]
     out = str(tmp_path / "meta_store")
-    spark.createDataFrame(rows, _SCHEMA).write.format("tiff_blocks").option(
-        "nlevels", 2
-    ).mode("append").save(out)
+    commit_tiff_blocks(
+        out,
+        [
+            (zi, yi, xi, 0, _block([1, 2, 3, 4, 5, 6, 7, 8]))
+            for zi, yi, xi in [(0, 0, 0), (1, 1, 1)]
+        ],
+    )
     shape, max_depth = store_block_meta(spark, out)
     assert shape == (2, 2, 2)
     assert max_depth == 1  # nlevels=2 leaves carry one octant digit
@@ -181,11 +146,8 @@ def test_store_block_meta_ignores_uncommitted_leftovers(spark, tmp_path):
     )
     from hortacloud_importer_spark.sources.tiff import encode_tiff
 
-    spark = _registered(spark)
     out = str(tmp_path / "leftover_meta_store")
-    spark.createDataFrame(
-        [(0, 0, 0, 0, [2, 2, 2], [1] * 8)], _SCHEMA
-    ).write.format("tiff_blocks").option("nlevels", 2).mode("append").save(out)
+    commit_tiff_blocks(out, [(0, 0, 0, 0, _block([1] * 8))])
 
     # uncommitted leftover: deeper path ("1/1/" sorts before the
     # committed "1/"), different block extent
@@ -208,11 +170,8 @@ def test_store_channels_ignores_uncommitted_leftovers(spark, tmp_path):
     )
     from hortacloud_importer_spark.sources.tiff import encode_tiff
 
-    spark = _registered(spark)
     out = str(tmp_path / "phantom_store")
-    spark.createDataFrame(
-        [(0, 0, 0, 0, [2, 2, 2], [1] * 8)], _SCHEMA
-    ).write.format("tiff_blocks").option("nlevels", 2).mode("append").save(out)
+    commit_tiff_blocks(out, [(0, 0, 0, 0, _block([1] * 8))])
     leftover = tmp_path / "phantom_store" / "1"
     (leftover / "default.5.tif").write_bytes(
         encode_tiff(np.full((2, 2, 2), 9, dtype=np.uint16))
