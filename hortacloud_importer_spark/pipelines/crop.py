@@ -9,8 +9,8 @@ level of an octree block store into a slice directory
 subcommand/scan can ingest right back.
 
 Scale shape: block files outside the window are pruned on
-path-derived coordinates BEFORE any decode
-(sources/block_store.path_block_coords); each decoded block is cut
+path-derived coordinates BEFORE any file is opened (the
+sources/block_store.py::block_files rows); each decoded block is cut
 into window-clipped Z-plane TILES in-executor (packed 2-D arrays, not
 voxel rows); ONE shuffle regroups tiles by output slice; the assembly
 kernel zero-fills a (dy, dx) canvas, places tiles, encodes, and

@@ -6,9 +6,12 @@ own mipmap chain (the bounded-state cascade), and writes one
 ``block_..._ch.ktx`` per node holding the full chain.
 ``tiff_octree_to_ktx`` is that run as one declarative plan:
 
-- list: ``_block_file_groups`` — the store's committed block files as
-  PATH rows (one row per file, or one row per block holding its
-  channel files when interleaving); no payload is read or shuffled;
+- list: ``_block_file_groups`` — the store's committed block files
+  (sources/block_store.py::block_files, the one listing every store
+  reader shares) as PATH rows carrying their channel ids (one row per
+  file, or one row per block holding its channel files when
+  interleaving); no payload is read or shuffled, and no file name is
+  parsed past the listing;
 - convert and write: one ``mapInPandas`` kernel per block
   (``_write_ktx_blocks`` over ``_block_converter``: input stats, requant, optional XY halving,
   the in-block mip chain, KTX encode) that reads its own file(s) and
@@ -18,7 +21,10 @@ own mipmap chain (the bounded-state cascade), and writes one
   is block-local, exactly like the reference's one-task-per-node
   execution;
 - commit: the kernel returns only the written names, and the driver
-  appends ONE manifest shard naming them (sources/manifest.py).
+  appends ONE manifest shard naming them (sources/manifest.py);
+- resume and reclaim: the resume anti-joins the PATH rows against the
+  output's committed names (``sources/ktx.py::ktx_block_name_col``),
+  and ``delete_source`` deletes exactly the listed source blocks.
 """
 
 from __future__ import annotations
@@ -27,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
+from hortacloud_importer_spark.sources.block_store import block_files
 from hortacloud_importer_spark.sources.datasource import _pa_fs, write_ktx_block
+from hortacloud_importer_spark.sources.ktx import ktx_block_name_col
 
 
 def _block_file_groups(
@@ -36,72 +44,48 @@ def _block_file_groups(
     depth: int | None = None,
     per_channel: bool = False,
 ) -> DataFrame:
-    """All committed block files of a store as PATH rows:
-    (zi, yi, xi, depth[, channel], paths array<string>). Metadata only
-    — grouped mode shuffles PATHS (a few hundred bytes per block),
-    never payloads; ``per_channel`` mode (one row per file, channel
-    from the name) needs no shuffle at all. Each kernel task then
-    reads its own block's file(s) — the reference's one-task-per-block
-    I/O model (ktx_from_rendered_tiff.py:331-427) — and a resume
-    anti-join upstream of this listing touches no payload either."""
-    from hortacloud_importer_spark.sources.block_store import (
-        _committed_only,
-        path_block_coords,
-    )
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.tif")
-        .load(store_root)
-        .select("path")
-    )
-    files = _committed_only(spark, files, store_root)
-    zi_c, yi_c, xi_c, depth_c = path_block_coords(store_root)
-    files = files.select("path", zi_c, yi_c, xi_c, depth_c)
+    """The store's committed block files (block_store.block_files) as
+    work rows (zi, yi, xi, depth, channels array<int>, paths
+    array<string>), ``paths`` relative to ``store_root`` and
+    ``channels`` their channel ids: one row per file in
+    ``per_channel`` mode (which also keeps its ``channel``), else one
+    row per block holding its channel files in channel order. Metadata
+    only — grouped mode shuffles PATHS (a few hundred bytes per
+    block), never payloads, and per-file mode needs no shuffle at all.
+    Each kernel task then reads its own block's file(s) — the
+    reference's one-task-per-block I/O model
+    (ktx_from_rendered_tiff.py:331-427) — and a resume anti-join
+    downstream of this listing touches no payload either."""
+    files = block_files(spark, store_root)
     if depth is not None:
-        files = files.filter(F.col("_depth") == depth)
+        files = files.filter(F.col("depth") == depth)
     if per_channel:
-        ch = F.regexp_extract("path", r"default\.(\d+)\.tif$", 1)
+        rows = files.select(
+            "zi", "yi", "xi", "depth", "channel",
+            F.array("channel").alias("channels"),
+            F.array("rel").alias("paths"),
+        )
+    else:
         rows = (
-            files.filter(ch != "")
+            files.groupBy("zi", "yi", "xi", "depth")
+            .agg(
+                F.sort_array(
+                    F.collect_list(F.struct("channel", F.col("rel").alias("path")))
+                ).alias("files")
+            )
             .select(
-                F.col("_zi").alias("zi"),
-                F.col("_yi").alias("yi"),
-                F.col("_xi").alias("xi"),
-                F.col("_depth").alias("depth"),
-                ch.cast("int").alias("channel"),
-                F.array("path").alias("paths"),
+                "zi", "yi", "xi", "depth",
+                F.col("files.channel").alias("channels"),
+                F.col("files.path").alias("paths"),
             )
         )
-        # same explicit spread as the grouped mode (see below): after
-        # a resume anti-join the few-KiB metadata exchange would
-        # otherwise AQE-coalesce and serialize the conversion
-        return rows.repartition(spark.sparkContext.defaultParallelism)
-    # same admission rule as per_channel mode: only files the store's
-    # channel naming scheme claims (default.<n>.tif) join a group — a
-    # stray foo.tif inside a block directory must not crash the fused
-    # kernel's channel parse (it filters out here exactly as it does
-    # from the per-file rows above)
-    groups = (
-        files.filter(
-            F.regexp_extract("path", r"default\.(\d+)\.tif$", 1) != ""
-        )
-        .groupBy(
-            F.col("_zi").alias("zi"),
-            F.col("_yi").alias("yi"),
-            F.col("_xi").alias("xi"),
-            F.col("_depth").alias("depth"),
-        )
-        .agg(F.sort_array(F.collect_list("path")).alias("paths"))
-    )
-    # explicit spread: the groups shuffle is a few KiB, so AQE
-    # coalesces it to ONE partition — which would serialize the
-    # CPU-heavy per-block conversion downstream (the round-6 soak
-    # caught exactly this: one 312s task). An explicit partition count
-    # is respected by AQE; round-robin balances blocks whose cost
-    # varies by level.
-    return groups.repartition(spark.sparkContext.defaultParallelism)
+    # explicit spread: the metadata rows are a few KiB, so AQE would
+    # coalesce their shuffle (the groups, or the listing's commit
+    # semi-join) to ONE partition — which would serialize the CPU-heavy
+    # per-block conversion downstream (the round-6 soak caught exactly
+    # this: one 312s task). An explicit partition count is respected
+    # by AQE; round-robin balances blocks whose cost varies by level.
+    return rows.repartition(spark.sparkContext.defaultParallelism)
 
 
 def _block_converter(
@@ -116,8 +100,9 @@ def _block_converter(
     """The whole per-block KTX conversion — input statistics, requant,
     optional XY halving, the in-block mip chain, encode — as one
     function from a pandas batch of :func:`_block_file_groups` PATH
-    rows to KTX_SCHEMA row dicts. It runs inside an executor kernel and
-    reads each row's file(s) itself (one file per row when
+    rows to KTX_SCHEMA row dicts, each file's channel taken from the
+    row. It runs inside an executor kernel and reads each row's
+    file(s) itself (one file per row when
     ``interleave=False``, a block's channel files when
     ``interleave=True``): the reference's one-task-per-node model
     (ktx_from_rendered_tiff.py:331-427)."""
@@ -177,31 +162,17 @@ def _block_converter(
         )
 
     def convert(pdf) -> list[dict]:
-        import re as _re
-
         from hortacloud_importer_spark.sources.tiff import decode_tiff
 
         filesystem, base = _pa_fs(store_root)
-        prefix = f"{store_root.rstrip('/')}/"
-        chan_re = _re.compile(r"default\.(\d+)\.tif$")
+        base = base.rstrip("/")
         out = []
         for row in pdf.itertuples():
             items = []
-            for path in row.paths:
-                m = chan_re.search(path)
-                if m is None:
-                    raise ValueError(
-                        f"block file {path!r} does not follow the "
-                        "store's default.<channel>.tif naming — "
-                        "cannot assign it a channel for KTX "
-                        "conversion"
-                    )
-                rel = path.split(prefix, 1)[-1]
-                with filesystem.open_input_stream(
-                    f"{base.rstrip('/')}/{rel}"
-                ) as fh:
+            for ch, rel in zip(row.channels, row.paths):
+                with filesystem.open_input_stream(f"{base}/{rel}") as fh:
                     arr = decode_tiff(fh.read())[..., 0]
-                items.append((int(m.group(1)), arr, arr.shape))
+                items.append((int(ch), arr, arr.shape))
             zi, yi, xi = int(row.zi), int(row.yi), int(row.xi)
             depth = int(row.depth)
             if interleave:
@@ -354,23 +325,9 @@ def tiff_octree_to_ktx(
         # name, so committed blocks are never opened
         done = manifest.committed_files_df(spark, out_dir)
         if done is not None:
-            tag = F.when(
-                F.col("depth") > 0,
-                F.concat(F.lit("_d"), F.col("depth").cast("string")),
-            ).otherwise(F.lit(""))
-            ch = (
-                F.lit("-1")
-                if interleave
-                else F.col("channel").cast("string")
-            )
-            rel = F.concat(
-                F.lit("block_"),
-                F.col("zi").cast("string"), F.lit("_"),
-                F.col("yi").cast("string"), F.lit("_"),
-                F.col("xi").cast("string"),
-                tag,
-                F.lit("_ch"), ch,
-                F.lit(".ktx.lz4" if lz4 else ".ktx"),
+            rel = ktx_block_name_col(
+                F.col("zi"), F.col("yi"), F.col("xi"), F.col("depth"),
+                F.lit(-1) if interleave else F.col("channel"), lz4,
             )
             blocks = (
                 blocks.withColumn("rel", rel)
@@ -449,83 +406,48 @@ def _reclaim_source_store(
     blocks below the root (tiff2octree.py:508-515 — per-block, after
     its KTX is written; here after the whole commit, so a failed run
     never deletes anything), then move the root ``default.{ch}.tif``
-    files next to the KTX output's parent (:1153-1162). The delete is
-    a map over the path listing — executor-side, no driver set.
-    ``depth=0`` (root-only conversion) never deletes: the root slices
-    are MOVED, matching the reference's level > 1 guard."""
+    files next to the KTX output's parent (:1153-1162). Both act on
+    the :func:`block_files` rows — exactly the blocks the KTX pass
+    converted — and the delete is a map over them, executor-side, no
+    driver set. ``depth=0`` (root-only conversion) never deletes: the
+    root slices are MOVED, matching the reference's level > 1 guard;
+    a depth-restricted conversion only reclaims that depth."""
     import posixpath
 
-    import pandas as pd
+    from hortacloud_importer_spark.sources.datasource import _copy_file
 
-    from hortacloud_importer_spark.sources.block_store import (
-        path_block_coords,
-    )
-    from hortacloud_importer_spark.sources.datasource import (
-        _copy_file,
-        _pa_fs,
-    )
-
-    def move_root_slices():
-        # root slices move beside the KTX root (driver-side: one file
-        # per channel by construction)
-        src_fs, src_base = _pa_fs(store_root)
-        parent = posixpath.dirname(out_dir.rstrip("/")) or "."
-        if parent.rstrip("/") == store_root.rstrip("/"):
-            return
-        dst_fs, dst_base = _pa_fs(parent)
-        from pyarrow import fs as pafs
-
-        dst_fs.create_dir(dst_base, recursive=True)
-        infos = src_fs.get_file_info(
-            pafs.FileSelector(src_base, recursive=False)
-        )
-        for i in infos:
-            if i.type != pafs.FileType.File:
-                continue
-            name = i.base_name
-            if not (name.startswith("default.") and name.endswith(".tif")):
-                continue
-            _copy_file(
-                src_fs, i.path, dst_fs, f"{dst_base.rstrip('/')}/{name}"
-            )
-            src_fs.delete_file(i.path)
-
-    if depth == 0:
-        move_root_slices()
-        return
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.tif")
-        .load(store_root)
-        .select("path")
-    )
-    _, _, _, depth_c = path_block_coords(store_root)
-    files = files.select("path", depth_c)
-    # the reference keeps the root level (level > 1 guard); a
-    # depth-restricted conversion only reclaims that depth
-    cond = F.col("_depth") >= 1
+    files = block_files(spark, store_root)
     if depth is not None:
-        cond = F.col("_depth") == depth
-    doomed = files.filter(cond).select("path")
-    root_norm = store_root
+        files = files.filter(F.col("depth") == depth)
 
     def rm(batches):
-        filesystem, base = _pa_fs(root_norm)
+        # deletes the blocks below the root, passes the root's rels on
+        filesystem, base = _pa_fs(store_root)
+        base = base.rstrip("/")
         for pdf in batches:
-            n = 0
-            for row in pdf.itertuples():
-                rel = row.path.split(f"{root_norm.rstrip('/')}/", 1)[-1]
+            below = pdf["depth"] >= 1
+            for rel in pdf["rel"][below]:
                 try:
-                    filesystem.delete_file(f"{base.rstrip('/')}/{rel}")
-                    n += 1
+                    filesystem.delete_file(f"{base}/{rel}")
                 except FileNotFoundError:
                     pass  # idempotent under task retries; any other
                     # failure (permissions, read-only mount) must
                     # surface, not read as a successful reclaim
-            yield pd.DataFrame({"n": [n]})
+            yield pdf.loc[~below, ["rel"]]
 
-    doomed.mapInPandas(rm, "n long").agg(F.sum("n")).collect()
-    if depth is None:
-        move_root_slices()
+    roots = [
+        r["rel"]
+        for r in files.select("rel", "depth").mapInPandas(rm, "rel string").collect()
+    ]
+    parent = posixpath.dirname(out_dir.rstrip("/")) or "."
+    if depth not in (None, 0) or parent.rstrip("/") == store_root.rstrip("/"):
+        return
+    # root slices move beside the KTX root (driver-side: one file per
+    # channel by construction)
+    src_fs, src_base = _pa_fs(store_root)
+    dst_fs, dst_base = _pa_fs(parent)
+    dst_fs.create_dir(dst_base, recursive=True)
+    for rel in roots:
+        src = f"{src_base.rstrip('/')}/{rel}"
+        _copy_file(src_fs, src, dst_fs, f"{dst_base.rstrip('/')}/{rel}")
+        src_fs.delete_file(src)

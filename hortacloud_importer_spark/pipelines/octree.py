@@ -55,11 +55,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
-from hortacloud_importer_spark.sources.block_store import rel_block_coords
+from hortacloud_importer_spark.sources.block_store import (
+    parse_block_rels,
+    tiff_block_rel,
+)
 from hortacloud_importer_spark.sources.datasource import (
     _pa_fs,
     register_volume_sources,
-    tiff_block_rel,
     write_tiff_block,
 )
 from hortacloud_importer_spark.volume import (
@@ -418,23 +420,20 @@ def _subtree_pass(
         )
     # committed files of the levels this pass writes, keyed by the
     # subtree that owns them
-    zi_c, yi_c, xi_c, depth_c = rel_block_coords(F.col("rel"))
-    ch = F.regexp_extract("rel", r"default\.(\d+)\.tif$", 1)
-    level = F.lit(nlevels - 1) - F.col("_depth")
+    level = F.lit(nlevels - 1) - F.col("depth")
 
     def owner(c: str):
         # shift a level-``level`` coordinate up to the pass root at hi
-        return F.expr(f"shiftright({c}, {hi - nlevels + 1} + _depth)")
+        return F.expr(f"shiftright({c}, {hi - nlevels + 1} + depth)")
 
     committed = (
-        done.filter(ch != "")
-        .select("rel", ch.cast("int").alias("channel"), zi_c, yi_c, xi_c, depth_c)
+        parse_block_rels(done)
         .filter(level.between(first, hi))
         .select(
             "rel",
-            owner("_zi").alias("gz"),
-            owner("_yi").alias("gy"),
-            owner("_xi").alias("gx"),
+            owner("zi").alias("gz"),
+            owner("yi").alias("gy"),
+            owner("xi").alias("gx"),
             "channel",
         )
     )

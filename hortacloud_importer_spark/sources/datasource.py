@@ -63,6 +63,7 @@ from pyspark.sql.datasource import (
 )
 
 from hortacloud_importer_spark.sources import manifest
+from hortacloud_importer_spark.sources.block_store import tiff_block_rel
 
 VOXEL_DDL = "z bigint, y bigint, x bigint, intensity bigint"
 _AXES = ("z", "y", "x")
@@ -776,15 +777,6 @@ def write_tiff_block(
     with manifest.staged_output(filesystem, path) as fh:
         fh.write(encode_tiff(vol.astype(dtype), compression="zlib"))
     return rel
-
-
-def tiff_block_rel(zi: int, yi: int, xi: int, channel: int, depth: int) -> str:
-    """Store-relative path of a block file: ``{octree-path}/default.{ch}.tif``
-    (``depth`` counts the root as 1, so the path has depth - 1 digits)."""
-    from hortacloud_importer_spark.volume.geometry import octree_path_digits
-
-    digits = octree_path_digits(zi, yi, xi, depth - 1)
-    return "/".join([*map(str, digits), f"default.{channel}.tif"])
 
 
 def write_ktx_block(

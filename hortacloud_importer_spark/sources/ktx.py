@@ -485,6 +485,23 @@ def ktx_block_name(
     return f"block_{zi}_{yi}_{xi}{tag}_ch{channel}{sfx}"
 
 
+def ktx_block_name_col(zi, yi, xi, depth, channel, lz4: bool = False):
+    """:func:`ktx_block_name` as a Catalyst expression over integer
+    Columns — the name a resume anti-joins against the KTX store's
+    committed files."""
+    tag = F.when(
+        depth != 0, F.concat(F.lit("_d"), depth.cast("string"))
+    ).otherwise(F.lit(""))
+    return F.concat(
+        F.lit("block_"), zi.cast("string"),
+        F.lit("_"), yi.cast("string"),
+        F.lit("_"), xi.cast("string"),
+        tag,
+        F.lit("_ch"), channel.cast("string"),
+        F.lit(".ktx.lz4" if lz4 else ".ktx"),
+    )
+
+
 DECODE_SCHEMA = (
     "zi int, yi int, xi int, depth int, channel int, level int, n_bytes int,"
     " pixel_depth int, pixel_height int, pixel_width int, voxels array<int>"

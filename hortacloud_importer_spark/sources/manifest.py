@@ -253,7 +253,21 @@ def committed_only(df, committed, root: str, path):
     root-relative path, so a killed writer's leftover is never read as
     data. No broadcast hint: the committed side can be ~1e7 paths, and
     AQE broadcasts it when it is small."""
+    return (
+        df.withColumn("rel", relative_path(path, root))
+        .join(committed, "rel", "left_semi")
+        .drop("rel")
+    )
+
+
+def relative_path(path, root: str):
+    """The part of ``path`` — a Column holding the full path or URI of
+    a file under ``root``, as Spark's scans report it — after
+    ``root``: the scheme-independent name the manifest commits.
+    ``root`` may be a bare path or a URI (``file:///x`` is listed as
+    ``file:/x``, ``s3://b/x`` as ``s3a://b/x``), so it is matched
+    without its scheme and query."""
     from pyspark.sql import functions as F
 
-    rel = F.element_at(F.split(path, re.escape(f"{root.rstrip('/')}/")), -1)
-    return df.withColumn("rel", rel).join(committed, "rel", "left_semi").drop("rel")
+    bare = re.sub(r"^[A-Za-z][\w+.-]*://+", "/", root.partition("?")[0])
+    return F.element_at(F.split(path, re.escape(f"{bare.rstrip('/')}/")), -1)

@@ -143,8 +143,8 @@ class OctreeGeometry:
 def octree_path_digits(zi: int, yi: int, xi: int, depth: int) -> list[int]:
     """Block coords at ``depth`` -> octant digits, MSB first:
     ``1 + x_bit + 2*y_bit + 4*z_bit`` per level (tiff2octree.py:263-279).
-    Block files are named by it (sources/datasource.py::tiff_block_rel);
-    sources/block_store.py::rel_block_coords is its Catalyst inverse."""
+    Block files are named by it (sources/block_store.py::tiff_block_rel,
+    whose Catalyst inverse is parse_block_rels there)."""
     return [
         1
         + ((xi >> bit) & 1)

@@ -14,10 +14,10 @@ from pyspark.sql import functions as F
 from hortacloud_importer_spark.pipelines import build_octree
 from hortacloud_importer_spark.sources import manifest
 from hortacloud_importer_spark.sources.block_store import (
+    parse_block_rels,
     read_tiff_block_store,
-    rel_block_coords,
+    tiff_block_rel,
 )
-from hortacloud_importer_spark.sources.datasource import tiff_block_rel
 from hortacloud_importer_spark.volume import blockify, synthetic_volume
 from tests.store_fixtures import commit_tiff_blocks
 
@@ -124,10 +124,53 @@ def test_partition_pruning(spark, store):
     assert pruned.filter((F.col("zi") < 2) | (F.col("yi") < 2) | (F.col("xi") < 2)).count() == 0
 
 
+def _exchange_outputs(df):
+    """(node name, output column types) of every exchange in ``df``'s
+    executed plan, walked on the JVM plan tree."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.nodeName():
+            out.append(
+                (
+                    node.nodeName(),
+                    [a.dataType().typeName() for a in seq(node.output())],
+                )
+            )
+        stack.extend(seq(node.children()))
+    return out
+
+
+def test_commit_semi_join_shuffles_no_payload(spark, store):
+    """A manifest past the broadcast threshold (~300k paths at 10 MB)
+    makes the commit semi-join a shuffle join; it must shuffle paths
+    only. Forced here by turning broadcast joins off: no exchange in
+    the read's plan may carry a binary column."""
+    _build(spark, store)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = read_tiff_block_store(spark, store, depth=LEAF_DEPTH)
+        exchanges = _exchange_outputs(df)
+        assert any(name == "Exchange" for name, _ in exchanges), exchanges
+        assert all("binary" not in types for _, types in exchanges), exchanges
+        assert df.count() == 63
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_octree_digits_match_path_expr(spark):
     """The writer's octant path (tiff_block_rel, from
     volume.geometry.octree_path_digits) is the Catalyst octree_path of
-    the same block, and rel_block_coords inverts it."""
+    the same block, and parse_block_rels inverts it."""
     from hortacloud_importer_spark.volume import octree_path
 
     b = blockify(_voxels(spark), BLOCK).select("zi", "yi", "xi")
@@ -139,9 +182,9 @@ def test_octree_digits_match_path_expr(spark):
         rel = tiff_block_rel(r["zi"], r["yi"], r["xi"], 0, NLEVELS)
         assert rel == f"{r['path']}/default.0.tif"
     rels = [tiff_block_rel(r["zi"], r["yi"], r["xi"], 0, NLEVELS) for r in rows]
-    back = spark.createDataFrame([(p,) for p in rels], "rel string").select(
-        *rel_block_coords(F.col("rel"))
-    ).collect()
+    back = parse_block_rels(
+        spark.createDataFrame([(p,) for p in rels], "rel string")
+    ).select("zi", "yi", "xi", "depth").collect()
     assert sorted(tuple(x) for x in back) == sorted(
         (r["zi"], r["yi"], r["xi"], LEAF_DEPTH) for r in rows
     )
@@ -180,3 +223,21 @@ def test_resume_filter_temporary_only_dir_is_fresh(spark, store):
     (pathlib.Path(store) / "1" / "1").mkdir(parents=True)
     (pathlib.Path(store) / "1" / "1" / ".default.0.tif.tmp").write_text("")
     assert _build(spark, store)[0] == 63
+
+
+def test_uri_root_reads_like_a_bare_path(spark, store):
+    """A ``file://`` root (the local stand-in for any URI) lists, keeps
+    and parses the same committed block files as the bare path, though
+    Spark reports them as ``file:/...``."""
+    from hortacloud_importer_spark.sources.block_store import (
+        block_files,
+        store_channels,
+    )
+
+    _build(spark, store)
+    want = sorted(tuple(r) for r in block_files(spark, store).collect())
+    assert len(want) == 63 + 8 + 1
+    uri = f"file://{store}"
+    assert sorted(tuple(r) for r in block_files(spark, uri).collect()) == want
+    assert store_channels(spark, uri) == [0]
+    assert read_tiff_block_store(spark, uri, depth=LEAF_DEPTH).count() == 63

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import numpy as np
 import pytest
@@ -252,9 +253,10 @@ def test_filegroup_interleave_matches_unfused_byte_for_byte(
 def test_filegroup_interleave_shuffles_paths_not_payloads(
     spark, store2ch, tmp_path
 ):
-    """Plan shape: the only exchange feeds the PATH collect_list; the
-    conversion itself is MapInPandas over (block, paths) rows — no
-    grouped-map over decoded payload rows anywhere."""
+    """Plan shape: the only exchange feeds the collect_list of each
+    block's (channel, path) pairs; the conversion itself is
+    MapInPandas over (block, channels, paths) rows — no grouped-map
+    over decoded payload rows anywhere."""
     from hortacloud_importer_spark.pipelines.ktx import (
         _block_file_groups,
         _write_ktx_blocks,
@@ -269,7 +271,8 @@ def test_filegroup_interleave_shuffles_paths_not_payloads(
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan  # no payload regroup
-    assert "collect_list(path" in plan  # the metadata-only shuffle
+    # the metadata-only shuffle: a channel id and a path per file
+    assert re.search(r"collect_list\(struct\(channel, channel#\d+, path, rel#\d+\)", plan)
     # and the scan feeding it projects paths only, never content
     assert "content" not in plan
 
@@ -412,24 +415,6 @@ def test_block_file_groups_skip_stray_tif(spark, tmp_path):
         n_mips=2, filter_="arthur", interleave=True,
     )
     assert out.count() == 1
-
-
-def test_fused_filegroups_names_offending_path(spark, tmp_path):
-    """If a non-conforming path ever reaches the fused kernel (e.g. a
-    caller-built group row), the error names the file instead of an
-    opaque AttributeError."""
-    from hortacloud_importer_spark.pipelines.ktx import _write_ktx_blocks
-
-    rows = spark.createDataFrame(
-        [(0, 0, 0, 0, ["/nowhere/block/custom_name.tif"])],
-        "zi int, yi int, xi int, depth int, paths array<string>",
-    )
-    out = _write_ktx_blocks(
-        rows, "/nowhere", str(tmp_path / "ktx"), n_mips=2,
-        filter_="arthur", interleave=True,
-    )
-    with pytest.raises(Exception, match="default.<channel>.tif"):
-        out.count()
 
 
 def test_ktx_lz4_side_compression_roundtrip(spark, store, tmp_path):

@@ -85,7 +85,7 @@ def test_s3_tiff_blocks_sink_writes_multipart(spark):
     probe must find nothing committed and let every block be built."""
     from hortacloud_importer_spark.pipelines import build_octree
     from hortacloud_importer_spark.sources import manifest
-    from hortacloud_importer_spark.sources.datasource import tiff_block_rel
+    from hortacloud_importer_spark.sources.block_store import tiff_block_rel
     from tests.test_octree_pipeline import expected_blocks
 
     rng = np.random.default_rng(5)

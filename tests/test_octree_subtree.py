@@ -333,3 +333,57 @@ def test_ktx_resumes_after_crash_before_last_commit(spark, tmp_path):
     assert _digests(ktx) == digests
     assert manifest.committed_files(_FS, ktx) == committed
     assert {p: os.stat(f"{ktx}/{p}").st_mtime_ns for p in kept} == kept
+
+
+def test_build_resumes_after_failed_rename_mid_pass(
+    spark, tmp_path, one_level_passes
+):
+    """A level-1 block whose final name is taken by a directory fails
+    its staged rename partway through the second pass, after the leaf
+    pass committed. Until the resume, the readers see the committed
+    leaves only, not the level-1 files other tasks left behind; once
+    the obstacle is gone, the resume gives the uninterrupted build's
+    files and committed set without touching a committed file."""
+    from hortacloud_importer_spark.pipelines.ktx import _block_file_groups
+    from hortacloud_importer_spark.sources.block_store import (
+        read_tiff_block_store,
+        store_channels,
+        tiff_block_rel,
+    )
+
+    rng = np.random.default_rng(53)
+    vol = rng.integers(1, 60000, (16, 16, 16)).astype(np.uint16)
+    _write_slices(tmp_path / "slices", list(vol))
+    slices = str(tmp_path / "slices")
+    whole = str(tmp_path / "whole")
+    build_octree(spark, slices, whole, nlevels=3, filter_="max").count()
+
+    out = str(tmp_path / "store")
+    obstacle = f"{out}/8/default.0.tif"  # level-1 block (1, 1, 1)
+    os.makedirs(obstacle)
+    with pytest.raises(Exception, match="Is a directory"):
+        build_octree(spark, slices, out, nlevels=3, filter_="max")
+    leaves = manifest.committed_files(_FS, out)
+    assert len(_shards(out)) == 1
+    assert len(leaves) == 64 and all(r.count("/") == 2 for r in leaves)
+    leftovers = set(_digests(out)) - leaves
+    assert leftovers and all(r.count("/") == 1 for r in leftovers)
+
+    back = read_tiff_block_store(spark, out).collect()
+    assert {
+        tiff_block_rel(r["zi"], r["yi"], r["xi"], r["channel"], r["depth"] + 1)
+        for r in back
+    } == leaves
+    assert store_channels(spark, out) == [0]
+    for per_channel in (False, True):
+        groups = _block_file_groups(spark, out, per_channel=per_channel)
+        assert {p for r in groups.collect() for p in r["paths"]} == leaves
+
+    os.rmdir(obstacle)
+    kept = {p: os.stat(f"{out}/{p}").st_mtime_ns for p in leaves}
+    build_octree(spark, slices, out, nlevels=3, filter_="max").count()
+    assert _digests(out) == _digests(whole)
+    assert manifest.committed_files(_FS, out) == manifest.committed_files(
+        _FS, whole
+    )
+    assert {p: os.stat(f"{out}/{p}").st_mtime_ns for p in leaves} == kept

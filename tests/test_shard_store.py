@@ -105,3 +105,50 @@ def test_read_without_manifest_refuses(spark, tmp_path_factory):
     os.makedirs(root)
     with pytest.raises(FileNotFoundError):
         read_shard_store(spark, root)
+
+
+def _digests(root):
+    """{committed file: sha256} of a shard store."""
+    import hashlib
+
+    from pyarrow import fs as pafs
+
+    from hortacloud_importer_spark.sources import manifest
+
+    out = {}
+    for rel in manifest.committed_files(pafs.LocalFileSystem(), root):
+        with open(os.path.join(root, rel), "rb") as fh:
+            out[rel] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_failed_write_commits_nothing_and_resumes(
+    spark, index, tmp_path_factory
+):
+    """One shard's final ``index.parquet`` name taken by a directory
+    fails its staged rename, so the run commits nothing: readers see
+    the earlier commit only, and once the obstacle is gone the resume
+    writes just the missing shards and the store equals an
+    uninterrupted one."""
+    base = tmp_path_factory.mktemp("store_fault")
+    whole = str(base / "whole")
+    write_shard_store(spark, index, whole)
+
+    root = str(base / "store")
+    write_shard_store(spark, index.filter(F.col("shard") < 3), root)
+    first = _digests(root)
+    obstacle = os.path.join(root, "shard=5", "index.parquet")
+    os.makedirs(obstacle)
+    with pytest.raises(Exception, match="Is a directory"):
+        write_shard_store(spark, index, root)
+    assert _digests(root) == first
+    back = read_shard_store(spark, root)
+    assert sorted(
+        r["shard"] for r in back.select("shard").distinct().collect()
+    ) == [0, 1, 2]
+    assert back.count() == index.filter(F.col("shard") < 3).count()
+
+    os.rmdir(obstacle)
+    resumed = write_shard_store(spark, index, root)
+    assert sorted(r["shard"] for r in resumed) == [3, 4, 5, 6, 7]
+    assert _digests(root) == _digests(whole)
