@@ -79,13 +79,7 @@ def _block_file_groups(
                 F.col("files.path").alias("paths"),
             )
         )
-    # explicit spread: the metadata rows are a few KiB, so AQE would
-    # coalesce their shuffle (the groups, or the listing's commit
-    # semi-join) to ONE partition — which would serialize the CPU-heavy
-    # per-block conversion downstream (the round-6 soak caught exactly
-    # this: one 312s task). An explicit partition count is respected
-    # by AQE; round-robin balances blocks whose cost varies by level.
-    return rows.repartition(spark.sparkContext.defaultParallelism)
+    return rows
 
 
 def _block_converter(
@@ -251,7 +245,15 @@ def _write_ktx_blocks(
                 }
             )
 
-    return groups.mapInPandas(convert_and_write, "rel string")
+    # explicit spread of the kernel's input, after any resume filter:
+    # the metadata rows are a few KiB, so AQE coalesces each shuffle
+    # that feeds them (the groups, the listing's commit semi-join, a
+    # shuffled resume anti-join) to ONE partition, which serializes the
+    # CPU-heavy conversion (the round-6 soak caught exactly this: one
+    # 312s task). AQE respects an explicit partition count; round-robin
+    # balances blocks whose cost varies by level.
+    spread = groups.repartition(groups.sparkSession.sparkContext.defaultParallelism)
+    return spread.mapInPandas(convert_and_write, "rel string")
 
 
 def tiff_octree_to_ktx(

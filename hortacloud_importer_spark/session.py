@@ -39,8 +39,32 @@ def worker_conf() -> dict[str, str]:
     return conf
 
 
-def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
-    """The engine's session: AQE, Arrow and sized shuffle partitions.
+# Classes Spark's whole-stage codegen keeps compiled per JVM
+# (spark.sql.codegen.cache.maxEntries, default 100). The cache is an
+# LRU keyed by the generated source, which is the same for the same
+# query shape, so a repeated query compiles nothing while its classes
+# fit. They did not: one dataset-build pass (five registry queries and
+# the shard store) uses ~170 classes, so the default cache missed on
+# every class of every pass and each pass paid Janino again. Sized to
+# the working set of a whole registry pass with headroom: at sf0.001
+# the 50 driver queries compile 680 distinct classes and all registry
+# queries ~1,710.
+CODEGEN_CACHE_ENTRIES = 2000
+
+
+def spark_builder(app_name: str = "hortacloud-importer-spark") -> SparkSession.Builder:
+    """The engine's configured session builder: AQE, Arrow, sized
+    shuffle partitions and a codegen cache that holds the engine's
+    working set. ``get_spark`` is this plus ``getOrCreate()``; tools
+    add their own extras (UI port, timeouts) before building.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static SQL conf that
+    ``CodeGenerator`` reads once per JVM, at the first generated
+    class: it takes effect only when set here, on the builder, before
+    the JVM's first query runs (not through ``spark.conf.set``, nor on
+    a session that reuses a JVM whose cache already exists). Executor
+    JVMs read it from their tasks' SQL conf, so local-cluster executors
+    get it too.
 
     On local and local-cluster masters the Python workers start from
     WORKER_MODULE (see worker_conf), which skips pyspark.zip's
@@ -83,6 +107,7 @@ def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if master.startswith("local"):
         builder = builder.config(map=worker_conf())
@@ -90,4 +115,9 @@ def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
         builder = builder.config(
             "spark.executor.memory", os.environ.get("SPARK_GRAFT_EXEC_MEM", "2g")
         )
-    return builder.getOrCreate()
+    return builder
+
+
+def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
+    """The engine's session: :func:`spark_builder`'s, built."""
+    return spark_builder(app_name).getOrCreate()

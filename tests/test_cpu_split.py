@@ -82,3 +82,73 @@ def test_read_tree_skips_processes_outside_the_root(tmp_path):
     pids = {pid for pid, _start in cpu_split.read_tree(101, str(tmp_path))}
     assert pids == {101}
     assert cpu_split.group_of(7, DAEMON, 100) == "pyspark.worker"
+
+
+def _thread(root, pid, tid, name, utime, stime, start=1):
+    d = root / str(pid) / "task" / str(tid)
+    d.mkdir(parents=True, exist_ok=True)
+    fields = [tid, f"({name})", "S", 1] + [0] * 9
+    fields += [utime, stime, 0, 0, 20, 0, 1, 0, start, 0]
+    (d / "stat").write_text(" ".join(str(f) for f in fields))
+
+
+def _jvm_threads(root, ticks):
+    """JVM 101's threads; ``ticks`` maps tid -> (utime, stime[,
+    starttime]). Names are the kernel's 15-byte cut of Java's."""
+    names = {
+        1011: "C2 CompilerThre",
+        1012: "GC Thread#0",
+        1013: "Executor task l",
+        1014: "shuffle-exchang",
+        1015: "C1 CompilerThre",
+        1016: "Executor task l",
+        1017: "GC Thread#1",
+        1018: "G1 Conc#0",
+    }
+    for tid, t in ticks.items():
+        _thread(root, 101, tid, names[tid], *t)
+
+
+def test_jvm_split_groups_threads_and_bills_exited_and_reaped(tmp_path):
+    before, after = tmp_path / "before", tmp_path / "after"
+    _tree(before, {100: (10, 5), 101: (400, 100)})
+    _tree(after, {100: (12, 6), 101: (600, 200, 40, 10)})  # +300 own, +50 reaped
+    _jvm_threads(before, {
+        1011: (80, 20), 1012: (50, 0), 1013: (20, 0), 1014: (10, 0),
+        1015: (30, 0),  # an idle compiler thread that exits
+    })
+    _jvm_threads(after, {
+        1011: (200, 50),  # C2 +150
+        1012: (70, 10),  # GC +30
+        1014: (30, 0),  # other +20
+        1016: (40, 0),  # a task thread started in between: +40
+        1017: (10, 0),  # GC +10
+        1018: (5, 0, 9),  # G1 +5
+    })
+    tb = cpu_split.read_tree(100, str(before))
+    ta = cpu_split.read_tree(100, str(after))
+    got = cpu_split.jvm_split(
+        tb, ta,
+        cpu_split.read_threads(101, str(before)),
+        cpu_split.read_threads(101, str(after)),
+        101, 10.0,
+    )
+    assert got == pytest.approx({
+        "jit": 15.0,
+        "gc": 4.5,
+        "task": 4.0,
+        "other": 2.0,
+        "exited": 4.5,  # 300 own ticks less 255 on live threads
+        "reaped children": 5.0,
+    })
+    assert sum(got.values()) == pytest.approx(
+        cpu_split.split(tb, ta, 100, 10.0)["jvm"]
+    )
+    assert "| `jit` | 15.00 | 43% |" in cpu_split.table([got], "JVM thread group")
+
+
+def test_thread_group_names():
+    assert cpu_split.thread_group("C1 CompilerThre") == "jit"
+    assert cpu_split.thread_group("G1 Refine#0") == "gc"
+    assert cpu_split.thread_group("Executor task l") == "task"
+    assert cpu_split.thread_group("VM Thread") == "other"

@@ -379,6 +379,43 @@ def test_ktx_resume_never_opens_committed_source_blocks(spark, store, tmp_path):
         )
 
 
+def test_ktx_resume_spreads_the_kernel_input_after_a_shuffled_anti_join(
+    spark, store, tmp_path, monkeypatch
+):
+    """With broadcast joins off, the resume anti-join against the
+    output manifest is a sort-merge join whose few-KiB shuffle AQE
+    coalesces to one partition. The kernel's input is spread after
+    that filter, so a resume of a half-converted store still converts
+    on defaultParallelism tasks, into the bytes of one whole
+    conversion."""
+    from hortacloud_importer_spark.pipelines import ktx
+
+    kw = dict(block_dims=(8, 8, 8), n_mips=3, filter_="arthur")
+    whole = _convert(spark, store, tmp_path)
+    out = str(tmp_path / "resume_smj")
+    tiff_octree_to_ktx(spark, store, out, depth=1, **kw).count()
+
+    real, kernels = ktx._write_ktx_blocks, []
+
+    def spy(*args, **kwargs):
+        kernels.append(real(*args, **kwargs))
+        return kernels[-1]
+
+    monkeypatch.setattr(ktx, "_write_ktx_blocks", spy)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        res = tiff_octree_to_ktx(spark, store, out, resume=True, **kw).first()
+        (kernel,) = kernels
+        plan = kernel._jdf.queryExecution().executedPlan().toString()
+        n_parts = kernel.rdd.getNumPartitions()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert re.search(r"SortMergeJoin \[rel#\d+\], \[rel#\d+\], LeftAnti", plan)
+    assert n_parts == spark.sparkContext.defaultParallelism
+    assert res["n_files"] == 9
+    assert _files(out) == _files(whole)
+
+
 def test_block_file_groups_skip_stray_tif(spark, tmp_path):
     """ADVICE r6: grouped (interleave) mode must apply the same
     default.<n>.tif admission predicate per_channel mode does — a

@@ -248,3 +248,42 @@ def test_datasource_crop_and_streaming_under_real_executors(spark, tmp_path):
         for r in spark.read.parquet(l["sout"]).collect()
     }
     assert got_lc == got_l and got_lc
+
+
+_DRIVER3 = """
+import sys
+sys.path.insert(0, {repo!r})
+from hortacloud_importer_spark.session import get_spark
+spark = get_spark("lc3")
+
+def conf(batches):
+    import pandas as pd
+    from pyspark import TaskContext
+
+    v = TaskContext.get().getLocalProperty("spark.sql.codegen.cache.maxEntries")
+    for _ in batches:
+        yield pd.DataFrame({{"v": [v]}})
+
+print("EXECUTOR " + spark.range(1, numPartitions=1).mapInPandas(conf, "v string").first()["v"])
+spark.stop()
+"""
+
+
+def test_codegen_cache_size_reaches_executors():
+    """get_spark's codegen cache size is a static SQL conf that each
+    executor JVM's code generator reads from its first SQL task: a
+    local-cluster executor's tasks must see it."""
+    from hortacloud_importer_spark.session import CODEGEN_CACHE_ENTRIES
+
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_MASTER="local-cluster[1,1,1024]",
+        SPARK_GRAFT_EXEC_MEM="1g",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _DRIVER3.format(repo=_REPO)],
+        capture_output=True, text=True, timeout=300, cwd=_REPO, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert f"EXECUTOR {CODEGEN_CACHE_ENTRIES}" in proc.stdout, proc.stdout

@@ -1,12 +1,13 @@
-"""Where an octree import's CPU goes, process by process.
+"""Where a benchmark operation's CPU goes, by process and by JVM thread.
 
-Runs one octree import shaped like the benchmark's ``octree_import``
-operation (16 x 256 x 256 uint16 slices, ``build_octree`` arthur over
-3 levels, then ``tiff_octree_to_ktx`` with 3 mips and
-``downsample_intensity``) on a ``get_spark`` session, after one
-untimed warm-up import. ``/proc`` is read once before and once after
-the measured import (a polling thread would bill its own CPU to the
-driver), and the process tree's user + system CPU is split into:
+Runs the benchmark's own operation (``perfbench/workloads.py``, inputs
+generated from ``--seed``) on a ``get_spark`` session on local[4]:
+``octree_import`` (slices to an octree and a KTX store) or
+``dataset_build`` (five dataset-build registry queries and the shard
+store). The workload's prime runs first, untimed. ``/proc`` is read
+once before and once after each measured operation (a polling thread
+would bill its own CPU to the driver), and the process tree's user +
+system CPU is split into:
 
 - ``driver``: this Python process;
 - ``jvm``: the Spark JVM;
@@ -21,8 +22,28 @@ run at once) and counts the children a process has already reaped
 (cutime + cstime), so the groups add up to the same tree total the
 benchmark's ``op_cpu_s`` measures.
 
-Usage: ``python tools/cpu_split.py [--seed N] [--reps R]`` — prints
-one markdown table with the median over R measured imports.
+The ``jvm`` row is split again by thread name (``/proc/<jvm>/task``):
+
+- ``jit``: the C1 and C2 compiler threads;
+- ``gc``: the GC worker and G1 threads;
+- ``task``: executor task threads;
+- ``other``: every other live thread (query planning and stage
+  submission, where Janino compiles on the driver, the scheduler,
+  shuffle and Python-runner I/O);
+- ``exited``: the JVM's own CPU less its live threads': threads that
+  ended between the reads;
+- ``reaped children``: processes the JVM started and reaped (Python
+  daemons and planners that exited).
+
+The session keeps idle compiler threads alive
+(``-XX:-UseDynamicNumberOfCompilerThreads``), so JIT time does not
+drop into ``exited``. Last come the classes Janino compiled
+(``CodegenMetrics``) and the JVM's JIT compilation time
+(``CompilationMXBean``) per operation.
+
+Usage: ``python tools/cpu_split.py [--workload W] [--seed N] [--reps R]``
+— prints two markdown tables and the compile counts, each the median
+over R measured operations.
 """
 
 from __future__ import annotations
@@ -34,11 +55,8 @@ import statistics
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-DIMS = (16, 256, 256)
-NLEVELS = 3
-MIPS = 3
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def read_tree(root_pid: int, proc: str = "/proc") -> dict:
@@ -77,6 +95,24 @@ def read_tree(root_pid: int, proc: str = "/proc") -> dict:
     return out
 
 
+def read_threads(pid: int, proc: str = "/proc") -> dict:
+    """{(tid, starttime): (name, ticks)} for the live threads of
+    ``pid``; ``name`` is the kernel's (first 15 bytes of the thread's
+    name)."""
+    out = {}
+    task = f"{proc}/{pid}/task"
+    for tid in os.listdir(task):
+        try:
+            with open(f"{task}/{tid}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        name = stat[stat.index("(") + 1 : stat.rindex(")")]
+        f = stat.rsplit(")", 1)[1].split()
+        out[(int(tid), int(f[19]))] = (name, int(f[11]) + int(f[12]))
+    return out
+
+
 def group_of(pid: int, argv: list[str], driver_pid: int) -> str:
     """The CPU group of one process, from its command line."""
     if pid == driver_pid:
@@ -89,6 +125,17 @@ def group_of(pid: int, argv: list[str], driver_pid: int) -> str:
         return argv[argv.index("-m") + 1]  # a non-daemon worker
     if argv and os.path.basename(argv[0]) == "java":
         return "jvm"
+    return "other"
+
+
+def thread_group(name: str) -> str:
+    """The CPU group of one JVM thread, from its kernel name."""
+    if name.startswith(("C1 CompilerThre", "C2 CompilerThre")):
+        return "jit"
+    if name.startswith(("GC Thread", "G1 ")):
+        return "gc"
+    if name.startswith("Executor task"):
+        return "task"
     return "other"
 
 
@@ -105,7 +152,28 @@ def split(before: dict, after: dict, driver_pid: int, hz: float) -> dict:
     return out
 
 
-def table(splits: list[dict]) -> str:
+def jvm_split(
+    before: dict, after: dict, threads_before: dict, threads_after: dict,
+    jvm_pid: int, hz: float,
+) -> dict:
+    """The ``jvm`` group of :func:`split` in CPU seconds per thread
+    group, from two :func:`read_tree` tables and the JVM's
+    :func:`read_threads` tables read with them. Rows add up to the
+    ``jvm`` group."""
+    (key,) = (k for k in after if k[0] == jvm_pid)
+    _ppid, _argv, own, reaped = after[key]
+    prev = before.get(key, (0, [], 0, 0))
+    out: dict[str, float] = {}
+    for tkey, (name, ticks) in threads_after.items():
+        g = thread_group(name)
+        ticks -= threads_before.get(tkey, (name, 0))[1]
+        out[g] = out.get(g, 0.0) + ticks / hz
+    out["exited"] = (own - prev[2]) / hz - sum(out.values())
+    out["reaped children"] = (reaped - prev[3]) / hz
+    return out
+
+
+def table(splits: list[dict], header: str = "process group") -> str:
     """Markdown table of the per-group medians over ``splits``."""
     groups = sorted(
         {g for s in splits for g in s},
@@ -113,67 +181,84 @@ def table(splits: list[dict]) -> str:
     )
     med = {g: statistics.median(s.get(g, 0.0) for s in splits) for g in groups}
     total = statistics.median(sum(s.values()) for s in splits)
-    lines = ["| process group | CPU s | share |", "|---|---|---|"]
+    lines = [f"| {header} | CPU s | share |", "|---|---|---|"]
     for g in groups:
         lines.append(f"| `{g}` | {med[g]:.2f} | {med[g] / total:.0%} |")
     lines.append(f"| total | {total:.2f} | |")
     return "\n".join(lines)
 
 
-def _volume(seed: int):
-    """uint16 volume: ~30% zero voxels and one empty octant."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    vol = rng.integers(1, 4096, size=DIMS, dtype=np.uint16)
-    vol[rng.random(DIMS) < 0.3] = 0
-    vol[: DIMS[0] // 2, : DIMS[1] // 2, : DIMS[2] // 2] = 0
-    return vol
-
-
-def _import(spark, slices: str, out: str) -> None:
-    from hortacloud_importer_spark.pipelines import (
-        build_octree,
-        tiff_octree_to_ktx,
-    )
-
-    shutil.rmtree(out, ignore_errors=True)
-    build_octree(spark, slices, f"{out}/octree", NLEVELS, "arthur").collect()
-    block = tuple(d >> (NLEVELS - 1) for d in DIMS)
-    tiff_octree_to_ktx(
-        spark, f"{out}/octree", f"{out}/ktx", block, MIPS,
-        downsample_intensity=True,
-    ).collect()
+def _compiles(spark) -> tuple[int, int]:
+    """(classes Janino has compiled, JIT compilation ms) of the JVM."""
+    jvm = spark._jvm
+    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return janino.getCount(), jit.getTotalCompilationTime()
 
 
 def main() -> int:
+    perfbench = os.path.join(_REPO, "perfbench")
+    sys.path.insert(1, perfbench)
+    from spans import Tracer
+    from workloads import CORES, WORKLOADS
+
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--workload", choices=sorted(WORKLOADS), default="octree_import")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--reps", type=int, default=1)
     args = ap.parse_args()
 
-    from hortacloud_importer_spark.session import get_spark
-    from hortacloud_importer_spark.sources.tiff import encode_tiff
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(CORES))
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    from hortacloud_importer_spark.session import spark_builder
 
     work = tempfile.mkdtemp(prefix="cpu_split_")
     try:
-        slices = f"{work}/slices"
-        os.makedirs(slices)
-        for z, page in enumerate(_volume(args.seed)):
-            with open(f"{slices}/default.0.{z:03d}.tif", "wb") as fh:
-                fh.write(encode_tiff(page[None, ...]))
-        spark = get_spark("cpu_split")
-        _import(spark, slices, f"{work}/warm")  # cold paths, untimed
+        wl = WORKLOADS[args.workload](work, args.seed)
+        wl.prepare()
+        spark = (
+            spark_builder("cpu_split")
+            .config("spark.driver.extraJavaOptions", "-XX:-UseDynamicNumberOfCompilerThreads")
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        tracer = Tracer(False)
+        wl.prime(spark, tracer)  # cold paths, untimed
         me, hz = os.getpid(), os.sysconf("SC_CLK_TCK")
-        splits = []
-        for rep in range(args.reps):
+        jvm = next(
+            pid for (pid, _start), v in read_tree(me).items()
+            if group_of(pid, v[1], me) == "jvm"
+        )
+        splits, jvm_splits, compiles = [], [], []
+        for _ in range(args.reps):
+            spark.catalog.clearCache()
+            c0 = _compiles(spark)
             before = read_tree(me)
-            _import(spark, slices, f"{work}/run{rep}")
-            splits.append(split(before, read_tree(me), me, hz))
+            # the threads after the tree before and before the tree
+            # after, so no live thread is billed more than its process
+            threads_before = read_threads(jvm)
+            op = wl.op(spark, tracer)
+            threads_after = read_threads(jvm)
+            after = read_tree(me)
+            c1 = _compiles(spark)
+            if not op.ok:
+                raise SystemExit(f"operation failed its checks: {op.detail}")
+            splits.append(split(before, after, me, hz))
+            jvm_splits.append(
+                jvm_split(before, after, threads_before, threads_after, jvm, hz)
+            )
+            compiles.append((c1[0] - c0[0], c1[1] - c0[1]))
         spark.stop()
     finally:
         shutil.rmtree(work, ignore_errors=True)
     print(table(splits))
+    print()
+    print(table(jvm_splits, "JVM thread group"))
+    print()
+    print(
+        f"Janino compiles per operation: {statistics.median(c[0] for c in compiles):g}; "
+        f"JIT compilation time: {statistics.median(c[1] for c in compiles):g} ms"
+    )
     return 0
 
 

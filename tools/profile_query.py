@@ -29,33 +29,12 @@ def main() -> None:
         raise SystemExit("usage: profile_query.py <query> [query...]")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import SparkSession
+    from hortacloud_importer_spark.session import spark_builder
 
-    from hortacloud_importer_spark.session import worker_conf
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
     spark = (
-        SparkSession.builder.appName("profile-query")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # keep in lockstep with session.get_spark, which sets this
-        # unconditionally: AQE re-planning of cached plans' output
-        # partitioning
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
+        spark_builder("profile-query")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4058")
-        # the engine's Python worker path (session.get_spark)
-        .config(map=worker_conf())
         .getOrCreate()
     )
     from hortacloud_importer_spark.registry import all_queries

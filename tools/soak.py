@@ -243,28 +243,17 @@ def main() -> int:
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    from hortacloud_importer_spark.session import spark_builder
 
-    from hortacloud_importer_spark.session import worker_conf
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("soak")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SOAK_SHUFFLE", cpus),
-        )
-        .config("spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"])
+    builder = (
+        spark_builder("soak")
         .config("spark.ui.enabled", "true")  # REST stage metrics
         .config("spark.ui.port", "4051")
-        # the engine's Python worker path (session.get_spark)
-        .config(map=worker_conf())
-        .getOrCreate()
     )
+    if "SOAK_SHUFFLE" in os.environ:
+        builder = builder.config("spark.sql.shuffle.partitions", os.environ["SOAK_SHUFFLE"])
+    spark = builder.getOrCreate()
     from hortacloud_importer_spark.pipelines import (
         build_octree,
         tiff_octree_to_ktx,
@@ -286,7 +275,7 @@ def main() -> int:
         "channels": CHANNELS,
         "nlevels": NLEVELS,
         "auto_nlevels": optimal_nlevels(DIMS),
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
         "baseline_rss_gib": round(baseline_kb / 2**20, 2),
     }
 

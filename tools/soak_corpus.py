@@ -329,16 +329,11 @@ def main() -> int:
         queries = [(q, c) for q, c in QUERIES if q in wanted]
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    from hortacloud_importer_spark.session import spark_builder
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.appName("soak_corpus")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"])
+        spark_builder("soak_corpus")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4052")
         # A GC pause > the default 120s network timeout expires the
@@ -364,7 +359,7 @@ def main() -> int:
         "n_vecs": N_VECS,
         "boilerplate": BOILERPLATE,
         "unique": UNIQUE,
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
         "baseline_rss_gib": round(sampler._total_rss_kb() / 2**20, 2),
     }
 

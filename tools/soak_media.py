@@ -243,17 +243,13 @@ def main() -> int:
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from pyspark.sql import functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from hortacloud_importer_spark.session import spark_builder
+
     spark = (
-        SparkSession.builder.appName("soak_media")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"])
+        spark_builder("soak_media")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4053")
         .getOrCreate()
@@ -264,7 +260,7 @@ def main() -> int:
     report: dict = {
         "per_format": args.per_format,
         "reps": max(1, args.reps),
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
         "baseline_rss_gib": round(sampler._total_rss_kb() / 2**20, 2),
     }
 
