@@ -316,14 +316,10 @@ def _run_octree(args) -> dict:
                 # N5/Zarr input (the reference auto-detects too,
                 # tiff2octree.py:319-328): the DataSource emits dense
                 # (z, y, x, intensity) rows with chunk-grain
-                # partitions and pushed-filter chunk pruning
+                # partitions and pushed-filter chunk pruning (the
+                # session registers the format)
                 from pyspark.sql import functions as F
 
-                from hortacloud_importer_spark.sources.datasource import (
-                    register_volume_sources,
-                )
-
-                register_volume_sources(spark)
                 source = (
                     spark.read.format(fmt)
                     .load(args.inputdir)

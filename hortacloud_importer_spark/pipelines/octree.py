@@ -7,16 +7,22 @@ for resume) -> downsample level by level, writing each level one
 directory shallower, until the root block.  ``build_octree`` composes
 the engine's operators into exactly that run:
 
-- scan: the ``tiff_volume`` DataSource (A1/A2 — decode on executors),
-  or any (z, y, x, channel, intensity) DataFrame the caller provides
-  (N5/Zarr via ``n5_volume``/``zarr_volume``, parquet, …);
-- dims: inferred with one tiny aggregate when not given (the
-  reference infers from the first file, tiff2octree.py:653-691);
+- scan: a slice directory is listed once on the driver
+  (``_list_slices``: z order, the first slice's header per channel),
+  and one ``mapInPandas`` kernel reads, decodes and tiles each slice
+  by path on the executors (``_slice_pieces``; A1/A2) — the
+  reference's lazy per-block read (tiff2octree.py:689), with no
+  DataSource planning and no voxel rows. Any (z, y, x, channel,
+  intensity) DataFrame the caller provides works too (N5/Zarr via
+  ``n5_volume``/``zarr_volume``, parquet, …);
+- dims: a slice directory's from its listing and first header (the
+  reference infers from the first file, tiff2octree.py:653-691); a
+  DataFrame's from one tiny aggregate when not given;
 - blocks: leaf-grid granularity — 2^(nlevels-1) blocks per axis, the
   reference's calc_optimal_nlevels arrangement
-  (tiff2octree.py:618-626). Slice directories are cut into packed
-  one-plane tiles in-executor (``_slice_pieces``); DataFrame sources
-  go through ``densify`` + ``blockify`` (``_block_pieces``);
+  (tiff2octree.py:618-626). Slices are cut into packed one-plane
+  uint16 tiles in the scan kernel; DataFrame sources go through
+  ``densify`` + ``blockify`` (``_block_pieces``);
 - pyramid and sink: passes of ONE grouped kernel per subtree
   (``_subtree_pass``). A pass groups its pieces by their ancestor s
   levels up (s from ``_SUBTREE_BYTES``: the most levels whose 8^s
@@ -50,6 +56,8 @@ odd block dims), plus ``np_halve``'s temporaries.
 
 from __future__ import annotations
 
+import re
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,7 +69,6 @@ from hortacloud_importer_spark.sources.block_store import (
 )
 from hortacloud_importer_spark.sources.datasource import (
     _pa_fs,
-    register_volume_sources,
     write_tiff_block,
 )
 from hortacloud_importer_spark.volume import (
@@ -80,104 +87,129 @@ def _infer_dims(voxels: DataFrame) -> tuple[int, int, int]:
     return int(row["z"]) + 1, int(row["y"]) + 1, int(row["x"]) + 1
 
 
-def _detect_slice_suffix(source: str, channels: int) -> str:
-    """``.tif`` unless the directory holds only JPEG 2000 slices — the
-    reference auto-detects .jp2 inputs the same way (rasterio branch,
-    tiff2octree.py:673-678). ONE listing, classified by extension (an
-    object-store LIST over ~1e5 slices is not free; probing suffixes
-    one listing each would triple it)."""
-    from hortacloud_importer_spark.sources.datasource import _list_files
+def _list_slices(
+    source: str, channels: int
+) -> tuple[list[list[str]], list[tuple[int, int] | None]]:
+    """A slice directory's slices per channel in z order (sorted
+    paths; with several channels the reference's ``default.{ch}.{z}``
+    names select each) and the page shape of each channel's first
+    slice, from ONE listing (an object-store LIST over ~1e5 slices is
+    not free) and one header walk per channel (TIFF IFD or JP2 ihdr
+    box, no payload decode) — the reference infers dims from one file
+    (tiff2octree.py:653-691). The suffix is ``.tif`` unless the first
+    channel's slices are all JPEG 2000, the reference's auto-detection
+    (rasterio branch, tiff2octree.py:673-678).
 
-    prefix = f"default.{0}." if channels > 1 else None
-    have: set[str] = set()
-    for p in _list_files(source.rstrip("/")):
-        name = p.rsplit("/", 1)[-1]
-        if prefix is not None and not name.startswith(prefix):
-            continue
-        for sfx in (".tif", ".jp2", ".j2k"):
-            if name.endswith(sfx):
-                have.add(sfx)
-    if ".tif" in have or not have:
-        return ".tif"
-    return ".jp2" if ".jp2" in have else ".j2k"
-
-
-def _infer_slice_dims(
-    source: str, channels: int, suffix: str = ".tif"
-) -> tuple[int, int, int]:
-    """Dims of a slice directory from its LISTING plus one file's
-    header walk (TIFF IFD or JP2 ihdr box — neither decodes payload)
-    — the reference's inference (one file header,
-    tiff2octree.py:653-691) instead of a max-aggregate over decoded
-    voxels. One z per file is the tiff_volume scan contract."""
+    Bad input fails here, before any Spark job: no slice, a gap in z
+    (``_check_z_run``), a first slice that is not one single-sample
+    page, or a signed or >16-bit JP2 first slice (the mirror of TIFF's
+    _page_dtype rule; the uint16 tile cut would wrap it)."""
     from hortacloud_importer_spark.sources.datasource import (
+        _list_files,
         _read_bytes,
         _slice_shape,
         _sorted_slices,
     )
 
-    files = _sorted_slices(
-        source.rstrip("/"), suffix, "0" if channels > 1 else None
+    listing = _list_files(source.rstrip("/"))
+    names = [str(ch) if channels > 1 else None for ch in range(channels)]
+    suffix = next(
+        (
+            sfx
+            for sfx in (".tif", ".jp2", ".j2k")
+            if _sorted_slices(listing, sfx, names[0])
+        ),
+        ".tif",
     )
-    if not files:
+    files = [_sorted_slices(listing, suffix, name) for name in names]
+    if not files[0]:
         raise FileNotFoundError(source)
-    head = _read_bytes(files[0])
-    h, w = _slice_shape(files[0], head)
-    if suffix in (".jp2", ".j2k"):
-        from hortacloud_importer_spark.sources.jp2 import check_jp2_uint16
+    shapes = []
+    for slices in files:
+        _check_z_run(slices, suffix)
+        if not slices:
+            shapes.append(None)
+            continue
+        head = _read_bytes(slices[0])
+        shapes.append(_slice_shape(slices[0], head))
+        if suffix != ".tif":
+            from hortacloud_importer_spark.sources.jp2 import check_jp2_uint16
 
-        # plan-time admission check mirroring TIFF's _page_dtype rule:
-        # a signed or >16-bit JP2 store must fail HERE, not wrap
-        # modulo 2^16 inside the uint16 tile-cut kernel
-        check_jp2_uint16(head, files[0])
-    return len(files), h, w
+            check_jp2_uint16(head, slices[0])
+    return files, shapes
+
+
+_Z_INDEX = re.compile(r"(\d+)$")
+
+
+def _check_z_run(slices: list[str], suffix: str) -> None:
+    """When every slice name ends in a decimal index (the reference's
+    ``default.{ch}.{z}``), the sorted indices must be consecutive: a
+    missing slice would otherwise shift every later z down by one."""
+    index = []
+    for p in slices:
+        name = p.partition("?")[0].rsplit("/", 1)[-1]
+        m = _Z_INDEX.search(name[: -len(suffix)])
+        if m is None:
+            return
+        index.append(int(m.group(1)))
+    for i in range(1, len(slices)):
+        if index[i] != index[i - 1] + 1:
+            raise ValueError(
+                f"slice z gap: {slices[i - 1]} (index {index[i - 1]}) is "
+                f"followed by {slices[i]} (index {index[i]}); a volume's "
+                "slice indices must be consecutive"
+            )
 
 
 def _slice_pieces(
     spark: SparkSession,
-    source: str,
+    files: list[list[str]],
+    shapes: list[tuple[int, int] | None],
     block_dims: tuple[int, int, int],
     padded_dims: tuple[int, int, int],
-    channels: int,
-    suffix: str = ".tif",
 ) -> DataFrame:
-    """Leaf pieces of a slice directory: slice rows (``emit=slices``)
-    are cut into per-(yi, xi) block tiles in-executor — one z plane of
-    one leaf block per row (``lz`` = plane within the block), raw
-    uint16 bytes. The first subtree pass's shuffle groups them, so no
-    slice is ever exploded to voxel rows (whose shuffle would carry
-    four coordinate columns per intensity and, for non-grid dims, a
-    densify grid join). Y/X zero-padding happens on the tile canvas
-    at cut time; missing z tiles (z padding) zero-fill on the
+    """Leaf pieces of a slice directory (:func:`_list_slices`): one
+    ``mapInPandas`` kernel reads each slice by path, decodes it and
+    checks its shape against its channel's first slice
+    (``datasource._read_slice``), and cuts it into per-(yi, xi) block
+    tiles — one z plane of one leaf block per row (``lz`` = plane
+    within the block), raw uint16 bytes. The kernel's input is the
+    (path, z, channel) work list, built locally (no shuffle, spread
+    over ``defaultParallelism`` tasks); a task yields one frame per
+    slice, so it holds one slice at a time. Slices past the padded
+    grid are left out (one channel listing more files than the dims
+    were inferred from must not alias onto an in-grid octree path).
+
+    The first subtree pass's shuffle groups the tiles, so no slice is
+    ever exploded to voxel rows. Y/X zero-padding happens on the tile
+    canvas at cut time; missing z tiles (z padding) zero-fill on the
     kernel's region canvas."""
     import pandas as pd
 
     bz, by, bx = block_dims
     pz = padded_dims[0]
     gy, gx = padded_dims[1] // by, padded_dims[2] // bx
+    first = {
+        ch: (slices[0], shapes[ch]) for ch, slices in enumerate(files) if slices
+    }
 
     def cut(batches):
         import numpy as np
 
+        from hortacloud_importer_spark.sources.datasource import _read_slice
+
         for pdf in batches:
-            out = []
             for row in pdf.itertuples():
-                z = int(row.z)
-                if z >= pz:
-                    # clip to the padded grid: a stray slice past the
-                    # grid (e.g. one channel listing more files than
-                    # the channel dims were inferred from) must not
-                    # alias onto an in-grid octree path
-                    continue
-                h, w = int(row.height), int(row.width)
+                z, ch = int(row.z), int(row.channel)
+                arr = _read_slice(row.path, first[ch])
                 # uint16 is lossless for every supported slice source
                 # (TIFF/JP2 decode to uint8/uint16) and HALVES the raw
                 # bytes of the build's dominant shuffle vs int32 tiles
                 page = np.zeros((gy * by, gx * bx), dtype=np.uint16)
-                arr = np.asarray(row.voxels, dtype=np.uint16).reshape(h, w)
-                page[: min(h, gy * by), : min(w, gx * bx)] = arr[
-                    : gy * by, : gx * bx
-                ]
+                h, w = min(arr.shape[0], gy * by), min(arr.shape[1], gx * bx)
+                page[:h, :w] = arr[:h, :w]
+                out = []
                 for yi in range(gy):
                     for xi in range(gx):
                         tile = page[
@@ -194,35 +226,22 @@ def _slice_pieces(
                         # raw little-endian bytes, not an int list:
                         # Arrow binary cells move as one buffer
                         out.append(
-                            {
-                                "zi": z // bz,
-                                "yi": yi,
-                                "xi": xi,
-                                "channel": int(row.channel),
-                                "lz": z % bz,
-                                "piece": tile.astype("<u2").tobytes(),
-                            }
+                            (z // bz, yi, xi, ch, z % bz,
+                             tile.astype("<u2").tobytes())
                         )
-            yield pd.DataFrame(out, columns=_PIECE_COLS)
+                yield pd.DataFrame(out, columns=_PIECE_COLS)
 
-    tiles = None
-    for ch in range(channels):
-        scan = (
-            spark.read.format("tiff_volume")
-            .option("emit", "slices")
-            .option("suffix", suffix)
-        )
-        if channels > 1:
-            # the reference's default.{ch}.{z} naming; z stays
-            # per-channel
-            scan = scan.option("channel", str(ch))
-        part = (
-            scan.load(source)
-            .withColumn("channel", F.lit(ch))
-            .mapInPandas(cut, _PIECE_SCHEMA)
-        )
-        tiles = part if tiles is None else tiles.unionByName(part)
-    return tiles
+    work = pd.DataFrame(
+        [
+            (p, z, ch)
+            for ch, slices in enumerate(files)
+            for z, p in enumerate(slices[:pz])
+        ],
+        columns=["path", "z", "channel"],
+    )
+    return spark.createDataFrame(
+        work, "path string, z int, channel int"
+    ).mapInPandas(cut, _PIECE_SCHEMA)
 
 
 def _block_pieces(blocks: DataFrame) -> DataFrame:
@@ -686,10 +705,11 @@ def build_octree(
 ) -> DataFrame:
     """Run the full slices -> octree-of-TIFF-blocks build.
 
-    ``source``: a slice directory (scanned via the ``tiff_volume``
-    format) or a voxels DataFrame — which must be DENSE (one row per
-    coordinate, zeros present; ``volume.densify`` converts sparse
-    sources) because block payloads reshape to full block extent.
+    ``source``: a slice directory (each slice read by path in the
+    tile-cut kernel, ``_slice_pieces``) or a voxels DataFrame — which
+    must be DENSE (one row per coordinate, zeros present;
+    ``volume.densify`` converts sparse sources) because block payloads
+    reshape to full block extent.
     Returns the per-level accounting (level, n_blocks_written,
     n_voxels) the run produced — all sink effects are in ``out_dir``
     (blocks + manifest shards + root ``transform.txt``).
@@ -704,7 +724,6 @@ def build_octree(
         raise ValueError(
             f"unknown filter {filter_!r}; have {FILTERS + tuple(KERNELS)}"
         )
-    register_volume_sources(spark)  # the tiff_volume scan
     voxels: DataFrame | None = None
     # channels=None = "not stated": slice sources default to 1 (the
     # reference's single-channel default), DataFrame sources discover
@@ -714,10 +733,11 @@ def build_octree(
     if channels is None:
         channels = 1
     if isinstance(source, str):
-        suffix = _detect_slice_suffix(source, channels)
+        # one listing + one header walk per channel, never a voxel
+        # aggregate
+        files, shapes = _list_slices(source, channels)
         if dims is None:
-            # listing + one header walk, never a voxel aggregate
-            dims = _infer_slice_dims(source, channels, suffix)
+            dims = (len(files[0]), *shapes[0])
     else:
         voxels = source
         if dims is None:
@@ -754,9 +774,7 @@ def build_octree(
     if isinstance(source, str):
         # leaf tiles, cut in-executor (y/x/z zero-pad on the tile and
         # region canvases — no densify grid join); uint16 pieces
-        pieces = _slice_pieces(
-            spark, source, block_dims, padded, channels, suffix
-        )
+        pieces = _slice_pieces(spark, files, shapes, block_dims, padded)
         piece_dtype = "<u2"
     else:
         if padded != dims:

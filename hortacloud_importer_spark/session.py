@@ -119,5 +119,15 @@ def spark_builder(app_name: str = "hortacloud-importer-spark") -> SparkSession.B
 
 
 def get_spark(app_name: str = "hortacloud-importer-spark") -> SparkSession:
-    """The engine's session: :func:`spark_builder`'s, built."""
-    return spark_builder(app_name).getOrCreate()
+    """The engine's session: :func:`spark_builder`'s, built, with the
+    volume formats (``tiff_volume``, ``n5_volume``, ``zarr_volume``)
+    registered, so it reads and streams them by name. The first
+    registration in a JVM runs Spark's lookup of installed Python data
+    sources (one short-lived Python process)."""
+    from hortacloud_importer_spark.sources.datasource import (
+        register_volume_sources,
+    )
+
+    spark = spark_builder(app_name).getOrCreate()
+    register_volume_sources(spark)
+    return spark

@@ -435,18 +435,18 @@ class ZarrVolumeDataSource(DataSource):
         return _ZarrReader(dict(self.options))
 
 
-def _sorted_slices(root: str, suffix: str, channel: str | None = None) -> list[str]:
-    """Sorted slice paths == z order (the reference's
-    ``img_files.sort()``, tiff2octree.py:1034 — F2 semantics).
+def _sorted_slices(
+    paths: list[str], suffix: str, channel: str | None = None
+) -> list[str]:
+    """The slices among a directory's listing (``_list_files``), sorted:
+    sorted paths == z order (the reference's ``img_files.sort()``,
+    tiff2octree.py:1034 — F2 semantics).
 
     ``channel`` selects one channel of a multi-channel slice dir by
     the reference's ``default.{ch}.{z}`` naming — without it a
     2-channel directory would sort channel-major and assign wrong z
     indices to the second channel's files."""
-    files = (
-        p for p in _list_files(root)
-        if p.partition("?")[0].endswith(suffix)
-    )
+    files = (p for p in paths if p.partition("?")[0].endswith(suffix))
     if channel is not None:
         prefix = f"default.{channel}."
         files = (
@@ -586,20 +586,32 @@ class _SlicePartition(InputPartition):
     first: tuple[str, tuple[int, int]] | None = None
 
 
+def _read_slice(
+    path: str,
+    first: tuple[str, tuple[int, int]] | None,
+    float_mode: str = "raise",
+) -> np.ndarray:
+    """Read one z-slice file by path and decode its page. Every slice
+    of a volume must have the page shape of ``first`` (the volume's
+    first slice and its shape, when known): a different one fails the
+    read, naming the file and both shapes, instead of being cropped or
+    zero-padded into the volume downstream. Decode errors keep the
+    codec's named class (``_slice_array``)."""
+    arr = _slice_array(_read_bytes(path), path, float_mode)
+    if first is not None and arr.shape != first[1]:
+        raise ValueError(
+            f"{path}: slice shape {arr.shape} differs from the first "
+            f"slice {first[0]}, {first[1]}; every slice of a volume must "
+            "have one shape"
+        )
+    return arr
+
+
 def _slice_batches(partition: _SlicePartition, emit: str, float_mode: str):
-    """Decode a partition's slices, one Arrow batch each. Every slice of
-    a volume must have the first slice's page shape: a different one
-    fails the read, naming the file and both shapes, instead of being
-    cropped or zero-padded into the volume downstream."""
+    """Decode a partition's slices (:func:`_read_slice`), one Arrow
+    batch each."""
     for path, z in partition.slices:
-        arr = _slice_array(_read_bytes(path), path, float_mode)
-        if partition.first is not None and arr.shape != partition.first[1]:
-            first, shape = partition.first
-            raise ValueError(
-                f"{path}: slice shape {arr.shape} differs from the first "
-                f"slice {first}, {shape}; every slice of a volume must "
-                "have one shape"
-            )
+        arr = _read_slice(path, partition.first, float_mode)
         if emit == "slices":
             yield _slice_batch(z, arr)
         else:
@@ -617,7 +629,9 @@ class _TiffSliceReaderNoPushdown(DataSourceReader):
         self.bounds = _Bounds()
 
     def partitions(self):
-        listed = _sorted_slices(self.root, self.suffix, self.channel)
+        listed = _sorted_slices(
+            _list_files(self.root), self.suffix, self.channel
+        )
         files = [
             (p, z) for z, p in enumerate(listed) if self.bounds.admits("z", z, z)
         ]
@@ -668,7 +682,9 @@ class _TiffSliceStreamReader(DataSourceStreamReader):
         return {"n": 0}
 
     def latestOffset(self) -> dict:
-        total = len(_sorted_slices(self.root, self.suffix, self.channel))
+        total = len(
+            _sorted_slices(_list_files(self.root), self.suffix, self.channel)
+        )
         # never move backward: _advanced is floored at every offset
         # Spark has already shown us (partitions()/commit() raise it on
         # restart), so a fresh reader instance cannot offer an offset
@@ -683,7 +699,9 @@ class _TiffSliceStreamReader(DataSourceStreamReader):
         # On checkpoint restart Spark replans the pending batch without
         # calling latestOffset; keep the high-water mark consistent.
         self._advanced = max(self._advanced, b)
-        files = _sorted_slices(self.root, self.suffix, self.channel)[a:b]
+        files = _sorted_slices(
+            _list_files(self.root), self.suffix, self.channel
+        )[a:b]
         return [
             _SlicePartition([(p, a + i)]) for i, p in enumerate(files)
         ] or [_SlicePartition([])]

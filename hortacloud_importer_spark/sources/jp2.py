@@ -127,9 +127,10 @@ def jp2_sample_format(data: bytes) -> tuple[int, bool]:
 def check_jp2_uint16(data: bytes, path: str = "<jp2>") -> None:
     """Raise unless every component is unsigned <=16-bit — the same
     admission rule TIFF ingest enforces via ``_page_dtype`` (uint8/
-    uint16 only). Called at plan time so a 32-bit or signed JP2 slice
-    fails the build up front rather than wrapping modulo 2^16 inside
-    the tile-cut kernel (pipelines/octree.py ``_slice_pieces``)."""
+    uint16 only). Called at plan time (pipelines/octree.py
+    ``_list_slices``) so a 32-bit or signed JP2 slice fails the build
+    up front rather than wrapping modulo 2^16 inside the tile-cut
+    kernel (``_slice_pieces``)."""
     depth, signed = jp2_sample_format(data)
     if signed or depth > 16:
         raise Jp2ParseError(

@@ -152,3 +152,28 @@ def test_thread_group_names():
     assert cpu_split.thread_group("G1 Refine#0") == "gc"
     assert cpu_split.thread_group("Executor task l") == "task"
     assert cpu_split.thread_group("VM Thread") == "other"
+
+
+def test_measure_bills_what_ran_between_its_reads(tmp_path):
+    """``measure`` reads the fake /proc before and after the callback
+    (which advances it) and returns the callback's result with the
+    process and JVM-thread splits of that interval."""
+    proc = tmp_path / "proc"
+    _tree(proc, {100: (10, 5), 101: (400, 100), 105: (50, 10)})
+    _jvm_threads(proc, {1011: (80, 20), 1013: (20, 0)})
+
+    def run():
+        _tree(proc, {100: (11, 5), 101: (500, 100), 105: (70, 10)})
+        _jvm_threads(proc, {1011: (150, 20), 1013: (40, 0)})
+        return "done"
+
+    result, got, jvm = cpu_split.measure(run, 100, 101, 10.0, str(proc))
+    assert result == "done"
+    assert got == pytest.approx({
+        "driver": 0.1,
+        "jvm": 10.0,
+        "pyspark.sql.worker.write_into_data_source": 2.0,
+    })
+    assert jvm == pytest.approx({
+        "jit": 7.0, "task": 2.0, "exited": 1.0, "reaped children": 0.0,
+    })

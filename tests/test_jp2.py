@@ -115,10 +115,7 @@ def test_build_octree_ingests_jp2_slices(spark, tmp_path):
     import numpy as np
 
     from hortacloud_importer_spark.pipelines import build_octree
-    from hortacloud_importer_spark.pipelines.octree import (
-        _detect_slice_suffix,
-        _infer_slice_dims,
-    )
+    from hortacloud_importer_spark.pipelines.octree import _list_slices
     from hortacloud_importer_spark.sources.jp2 import encode_jp2
 
     rng = np.random.default_rng(11)
@@ -130,8 +127,11 @@ def test_build_octree_ingests_jp2_slices(spark, tmp_path):
             encode_jp2(vol[z], levels=1)
         )
 
-    assert _detect_slice_suffix(str(indir), 1) == ".jp2"
-    assert _infer_slice_dims(str(indir), 1, ".jp2") == (4, 4, 4)
+    files, shapes = _list_slices(str(indir), 1)
+    assert [p.rsplit("/", 1)[-1] for p in files[0]] == [
+        f"default.0.{z:05d}.jp2" for z in range(4)
+    ]
+    assert shapes == [(4, 4)]
 
     out = tmp_path / "out"
     build_octree(
@@ -188,18 +188,17 @@ def test_check_jp2_uint16_rejects_wide_or_signed_samples():
         check_jp2_uint16(_jp2_bytes_bpc(4, 4, 1, 0x87))
 
 
-def test_infer_slice_dims_rejects_wide_jp2(tmp_path):
-    """The plan-time probe in _infer_slice_dims applies the admission
-    rule, so a 32-bit JP2 store fails the build before any executor
-    work."""
-    from hortacloud_importer_spark.pipelines.octree import _infer_slice_dims
+def test_list_slices_rejects_wide_jp2(tmp_path):
+    """The plan-time probe in _list_slices applies the admission rule,
+    so a 32-bit JP2 store fails the build before any executor work."""
+    from hortacloud_importer_spark.pipelines.octree import _list_slices
 
     indir = tmp_path / "wide_jp2"
     indir.mkdir()
     for z in range(2):
         (indir / f"{z:05d}.jp2").write_bytes(_jp2_bytes_bpc(4, 4, 1, 31))
     with pytest.raises(Jp2ParseError, match="32-bit"):
-        _infer_slice_dims(str(indir), 1, ".jp2")
+        _list_slices(str(indir), 1)
 
 
 def test_tiled_jp2_container_roundtrip():

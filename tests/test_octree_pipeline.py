@@ -467,6 +467,130 @@ def test_slice_with_other_dims_fails_before_any_commit(spark, tmp_path):
     assert not manifest.has_manifest(_FS, out)
 
 
+def test_truncated_slice_mid_volume_fails_before_any_commit(spark, tmp_path):
+    """Slice 3 of 8 cut to half its bytes: the build fails in the
+    tile-cut kernel with the TIFF codec's named error and the file's
+    path, and nothing is committed."""
+    from hortacloud_importer_spark.pipelines import build_octree
+
+    rng = np.random.default_rng(43)
+    _write_slices(
+        tmp_path / "cut",
+        [rng.integers(1, 60000, (32, 32)).astype(np.uint16) for _ in range(8)],
+    )
+    bad = tmp_path / "cut" / "default.0.003.tif"
+    bad.write_bytes(bad.read_bytes()[: bad.stat().st_size // 2])
+    out = str(tmp_path / "cut_store")
+    with pytest.raises(Exception) as err:
+        build_octree(spark, str(tmp_path / "cut"), out, nlevels=2).count()
+    msg = str(err.value)
+    assert f"TiffParseError: {bad}: " in msg, msg[-2000:]
+    assert not manifest.has_manifest(_FS, out)
+
+
+def test_gap_in_z_fails_before_any_commit(spark, tmp_path):
+    """Slices default.0.000-007 without 004: the build fails before any
+    Spark job with a ValueError naming the files on both sides of the
+    gap, and nothing is committed. The check is per channel."""
+    from hortacloud_importer_spark.pipelines import build_octree
+
+    rng = np.random.default_rng(47)
+    vol = rng.integers(1, 60000, (8, 16, 16)).astype(np.uint16)
+    _write_slices(tmp_path / "gap", list(vol))
+    (tmp_path / "gap" / "default.0.004.tif").unlink()
+    out = str(tmp_path / "gap_store")
+    with pytest.raises(ValueError, match="slice z gap") as err:
+        build_octree(spark, str(tmp_path / "gap"), out, nlevels=2)
+    msg = str(err.value)
+    assert "default.0.003.tif" in msg and "default.0.005.tif" in msg, msg
+    assert not manifest.has_manifest(_FS, out)
+
+    d = tmp_path / "gap2"
+    d.mkdir()
+    for ch in range(2):
+        for z in range(4):
+            if (ch, z) != (1, 2):
+                (d / f"default.{ch}.{z:03d}.tif").write_bytes(
+                    encode_tiff(vol[z][None, ...])
+                )
+    with pytest.raises(ValueError, match="default.1.001.tif.*default.1.003.tif"):
+        build_octree(spark, str(d), str(tmp_path / "gap2_store"), 2, channels=2)
+
+
+def test_z_gap_check_needs_an_index_on_every_name():
+    """Names that do not all end in a decimal index are ordered by name
+    only; consecutive indices pass, with or without zero padding."""
+    from hortacloud_importer_spark.pipelines.octree import _check_z_run
+
+    _check_z_run(["/d/a.tif", "/d/b7.tif", "/d/c9.tif"], ".tif")
+    _check_z_run(["/d/s.000098.tif", "/d/s.000099.tif", "/d/s.000100.tif"], ".tif")
+    _check_z_run(["s3://b/d/7.jp2?region=x", "s3://b/d/8.jp2?region=x"], ".jp2")
+    with pytest.raises(ValueError, match=r"/d/s\.1\.tif \(index 1\) is followed by /d/s\.3\.tif"):
+        _check_z_run(["/d/s.0.tif", "/d/s.1.tif", "/d/s.3.tif"], ".tif")
+
+
+def test_slice_build_lists_the_directory_once(spark, tmp_path, monkeypatch):
+    """One build over a 2-channel slice directory lists it once: the
+    suffix, each channel's z order and the dims all come from that one
+    listing."""
+    from hortacloud_importer_spark.pipelines import build_octree
+    from hortacloud_importer_spark.sources import datasource
+
+    d = tmp_path / "once"
+    d.mkdir()
+    rng = np.random.default_rng(53)
+    for ch in range(2):
+        for z in range(4):
+            (d / f"default.{ch}.{z:03d}.tif").write_bytes(
+                encode_tiff(rng.integers(1, 250, (1, 8, 8)).astype(np.uint8))
+            )
+    calls = []
+    listed = datasource._list_files
+
+    def counting(root):
+        calls.append(root)
+        return listed(root)
+
+    monkeypatch.setattr(datasource, "_list_files", counting)
+    build_octree(
+        spark, str(d), str(tmp_path / "once_store"), 2, channels=2,
+        resume=False,
+    ).count()
+    assert calls == [str(d)]
+
+
+def test_slice_build_plans_no_python_data_source_scan(spark, tmp_path, monkeypatch):
+    """The leaf pieces of a slice build come from one mapInPandas kernel
+    over a local (path, z, channel) work list: no Python data source
+    scan, no shuffle, one task per slice up to defaultParallelism."""
+    from hortacloud_importer_spark.pipelines import build_octree, octree
+
+    rng = np.random.default_rng(59)
+    _write_slices(
+        tmp_path / "plan",
+        [rng.integers(1, 60000, (16, 16)).astype(np.uint16) for _ in range(8)],
+    )
+    seen = []
+
+    class _Stop(Exception):
+        pass
+
+    def first_pass(pieces, *args):
+        seen.append(pieces)
+        raise _Stop
+
+    monkeypatch.setattr(octree, "_subtree_pass", first_pass)
+    with pytest.raises(_Stop):
+        build_octree(spark, str(tmp_path / "plan"), str(tmp_path / "plan_out"), 2)
+    (pieces,) = seen
+    plan = pieces._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan
+    for node in ("BatchScan", "(Python)", "Exchange"):
+        assert node not in plan, plan
+    parallelism = spark.sparkContext.defaultParallelism
+    assert pieces.rdd.getNumPartitions() == min(8, parallelism)
+
+
 def test_fused_ingest_clips_slices_beyond_padded_grid(spark, tmp_path):
     """A slice dir with more files than the caller's dims: slices past
     the padded grid are dropped — a stray z would otherwise alias onto

@@ -4,10 +4,11 @@ Runs the benchmark's own operation (``perfbench/workloads.py``, inputs
 generated from ``--seed``) on a ``get_spark`` session on local[4]:
 ``octree_import`` (slices to an octree and a KTX store) or
 ``dataset_build`` (five dataset-build registry queries and the shard
-store). The workload's prime runs first, untimed. ``/proc`` is read
-once before and once after each measured operation (a polling thread
-would bill its own CPU to the driver), and the process tree's user +
-system CPU is split into:
+store). The workload's prime runs first: the session's first execution,
+which the benchmark's ``setup_s`` counts and a one-shot CLI import
+pays. ``/proc`` is read once before and once after the prime and each
+measured operation (a polling thread would bill its own CPU to the
+driver), and the process tree's user + system CPU is split into:
 
 - ``driver``: this Python process;
 - ``jvm``: the Spark JVM;
@@ -42,8 +43,8 @@ drop into ``exited``. Last come the classes Janino compiled
 (``CompilationMXBean``) per operation.
 
 Usage: ``python tools/cpu_split.py [--workload W] [--seed N] [--reps R]``
-— prints two markdown tables and the compile counts, each the median
-over R measured operations.
+— prints the prime's two markdown tables, then the operation's two
+tables and compile counts, each the median over R measured operations.
 """
 
 from __future__ import annotations
@@ -173,6 +174,24 @@ def jvm_split(
     return out
 
 
+def measure(run, root_pid: int, jvm_pid: int, hz: float, proc: str = "/proc"):
+    """``run()``'s result, and the CPU the process tree under
+    ``root_pid`` spent while it ran: :func:`split` and the JVM's
+    :func:`jvm_split`. The JVM's threads are read after the tree
+    before and before the tree after, so no live thread is billed more
+    than its process."""
+    before = read_tree(root_pid, proc)
+    threads_before = read_threads(jvm_pid, proc)
+    result = run()
+    threads_after = read_threads(jvm_pid, proc)
+    after = read_tree(root_pid, proc)
+    return (
+        result,
+        split(before, after, root_pid, hz),
+        jvm_split(before, after, threads_before, threads_after, jvm_pid, hz),
+    )
+
+
 def table(splits: list[dict], header: str = "process group") -> str:
     """Markdown table of the per-group medians over ``splits``."""
     groups = sorted(
@@ -211,6 +230,9 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(CORES))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     from hortacloud_importer_spark.session import spark_builder
+    from hortacloud_importer_spark.sources.datasource import (
+        register_volume_sources,
+    )
 
     work = tempfile.mkdtemp(prefix="cpu_split_")
     try:
@@ -222,35 +244,38 @@ def main() -> int:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")
+        register_volume_sources(spark)  # as get_spark does
         tracer = Tracer(False)
-        wl.prime(spark, tracer)  # cold paths, untimed
         me, hz = os.getpid(), os.sysconf("SC_CLK_TCK")
         jvm = next(
             pid for (pid, _start), v in read_tree(me).items()
             if group_of(pid, v[1], me) == "jvm"
         )
+        _, prime_cpu, prime_jvm = measure(
+            lambda: wl.prime(spark, tracer), me, jvm, hz
+        )
         splits, jvm_splits, compiles = [], [], []
         for _ in range(args.reps):
             spark.catalog.clearCache()
             c0 = _compiles(spark)
-            before = read_tree(me)
-            # the threads after the tree before and before the tree
-            # after, so no live thread is billed more than its process
-            threads_before = read_threads(jvm)
-            op = wl.op(spark, tracer)
-            threads_after = read_threads(jvm)
-            after = read_tree(me)
+            op, cpu, jvm_cpu = measure(lambda: wl.op(spark, tracer), me, jvm, hz)
             c1 = _compiles(spark)
             if not op.ok:
                 raise SystemExit(f"operation failed its checks: {op.detail}")
-            splits.append(split(before, after, me, hz))
-            jvm_splits.append(
-                jvm_split(before, after, threads_before, threads_after, jvm, hz)
-            )
+            splits.append(cpu)
+            jvm_splits.append(jvm_cpu)
             compiles.append((c1[0] - c0[0], c1[1] - c0[1]))
         spark.stop()
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    print("Prime (the session's first execution):")
+    print()
+    print(table([prime_cpu]))
+    print()
+    print(table([prime_jvm], "JVM thread group"))
+    print()
+    print(f"Operation (median of {args.reps}):")
+    print()
     print(table(splits))
     print()
     print(table(jvm_splits, "JVM thread group"))
