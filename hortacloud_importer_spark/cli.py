@@ -172,7 +172,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--resume",
         action="store_true",
         help="skip blocks whose .ktx output is already committed "
-        "(the reference's per-file exists check, as one anti-join)",
+        "(the reference's per-file exists check, on the work list)",
     )
     ktx_p.add_argument(
         "--delete-source",
@@ -377,7 +377,7 @@ def _run_octree(args) -> dict:
             store_block_meta,
         )
 
-        block_dims, _ = store_block_meta(spark, store)
+        block_dims, _ = store_block_meta(store)
         # the KTX pass's per-block mip chain is a group aggregate; the
         # neighborhood kernels don't apply there — the reference's KTX
         # converter defaults to 'arthur' regardless of the octree
@@ -422,7 +422,7 @@ def _run_ktx(args) -> dict:
             store_block_meta,
         )
 
-        block_dims, _ = store_block_meta(spark, args.inputdir)
+        block_dims, _ = store_block_meta(args.inputdir)
     res = tiff_octree_to_ktx(
         spark,
         args.inputdir,
@@ -498,7 +498,7 @@ def _run_crop(args) -> dict:
     # block extent from one TIFF header + deepest level from the path
     # listing — the old probe decoded EVERY block (max over a decoded
     # column) just to learn the store's metadata
-    block_dims, max_depth = store_block_meta(spark, args.inputdir)
+    block_dims, max_depth = store_block_meta(args.inputdir)
     depth = args.depth
     if depth is None:
         depth = max_depth

@@ -67,7 +67,7 @@ def crop_octree(
     if channels:
         channel_ids = list(range(channels))
     else:
-        channel_ids = store_channels(spark, store_root) or [0]
+        channel_ids = store_channels(store_root) or [0]
 
     tile_schema = (
         "z int, channel int, y_off int, x_off int,"
@@ -275,7 +275,7 @@ def crop_chunk_store(
 
     # driver-side listing + grid pruning (paths only, the A4 shape)
     work = []
-    for path in _list_files(base):
+    for path in _list_files(base, recursive=True):
         name = path[len(base) + 1 :]
         tail = name.rsplit("/", 1)[-1]
         if tail.startswith((".", "_")) or tail in ("zarr.json",):

@@ -7,35 +7,37 @@ own mipmap chain (the bounded-state cascade), and writes one
 ``tiff_octree_to_ktx`` is that run as one declarative plan:
 
 - list: ``_block_file_groups`` — the store's committed block files
-  (sources/block_store.py::block_files, the one listing every store
-  reader shares) as PATH rows carrying their channel ids (one row per
-  file, or one row per block holding its channel files when
-  interleaving); no payload is read or shuffled, and no file name is
-  parsed past the listing;
+  (sources/block_store.py::block_files, the one driver-side listing
+  every store reader shares) as PATH rows carrying their channel ids
+  (one row per file, or one row per block holding its channel files
+  when interleaving), built on the driver and handed over as one
+  local relation; no payload is read, and nothing is shuffled;
 - convert and write: one ``mapInPandas`` kernel per block
-  (``_write_ktx_blocks`` over ``_block_converter``: input stats, requant, optional XY halving,
-  the in-block mip chain, KTX encode) that reads its own file(s) and
-  writes its own ``.ktx`` with ``datasource.write_ktx_block``
-  (idempotent names, staged tmp+rename): a map-only plan (one
-  paths-only groupBy when interleaving channels), because every step
-  is block-local, exactly like the reference's one-task-per-node
-  execution;
+  (``_write_ktx_blocks`` over ``_block_converter``: input stats,
+  requant, optional XY halving, the in-block mip chain, KTX encode)
+  that reads its own file(s) and writes its own ``.ktx`` with
+  ``datasource.write_ktx_block`` (idempotent names, staged
+  tmp+rename): a map-only plan, because every step is block-local,
+  exactly like the reference's one-task-per-node execution;
 - commit: the kernel returns only the written names, and the driver
   appends ONE manifest shard naming them (sources/manifest.py);
-- resume and reclaim: the resume anti-joins the PATH rows against the
-  output's committed names (``sources/ktx.py::ktx_block_name_col``),
+- resume and reclaim: the work list leaves out each block whose name
+  (``sources/ktx.py::ktx_block_name``) the output manifest commits,
   and ``delete_source`` deletes exactly the listed source blocks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
-from hortacloud_importer_spark.sources.block_store import block_files
+from hortacloud_importer_spark.sources.block_store import BlockFile, block_files
 from hortacloud_importer_spark.sources.datasource import _pa_fs, write_ktx_block
-from hortacloud_importer_spark.sources.ktx import ktx_block_name_col
+from hortacloud_importer_spark.sources.ktx import ktx_block_name
+
+_GROUP_SCHEMA = (
+    "zi int, yi int, xi int, depth int, channels array<int>, paths array<string>"
+)
 
 
 def _block_file_groups(
@@ -43,43 +45,40 @@ def _block_file_groups(
     store_root: str,
     depth: int | None = None,
     per_channel: bool = False,
+    done: frozenset[str] | set[str] = frozenset(),
+    lz4: bool = False,
 ) -> DataFrame:
-    """The store's committed block files (block_store.block_files) as
-    work rows (zi, yi, xi, depth, channels array<int>, paths
-    array<string>), ``paths`` relative to ``store_root`` and
-    ``channels`` their channel ids: one row per file in
-    ``per_channel`` mode (which also keeps its ``channel``), else one
-    row per block holding its channel files in channel order. Metadata
-    only — grouped mode shuffles PATHS (a few hundred bytes per
-    block), never payloads, and per-file mode needs no shuffle at all.
-    Each kernel task then reads its own block's file(s) — the
-    reference's one-task-per-block I/O model
-    (ktx_from_rendered_tiff.py:331-427) — and a resume anti-join
-    downstream of this listing touches no payload either."""
-    files = block_files(spark, store_root)
-    if depth is not None:
-        files = files.filter(F.col("depth") == depth)
-    if per_channel:
-        rows = files.select(
-            "zi", "yi", "xi", "depth", "channel",
-            F.array("channel").alias("channels"),
-            F.array("rel").alias("paths"),
-        )
-    else:
-        rows = (
-            files.groupBy("zi", "yi", "xi", "depth")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("channel", F.col("rel").alias("path")))
-                ).alias("files")
+    """The store's committed block files (block_store.block_files) at
+    ``depth`` (None = every depth) as the kernel's work rows
+    (zi, yi, xi, depth, channels array<int>, paths array<string>),
+    ``paths`` relative to ``store_root`` and ``channels`` their channel
+    ids: one row per file in ``per_channel`` mode, else one row per
+    block holding its channel files in channel order. A block whose
+    ``.ktx`` name (``ktx_block_name``) is in ``done``, the output's
+    committed set, is left out. All of it happens on the driver's
+    rows, so the work list reaches the kernel as one local relation:
+    no listing job, no shuffle. Each kernel task then reads its own
+    block's file(s) — the reference's one-task-per-block I/O model
+    (ktx_from_rendered_tiff.py:331-427) — and a resumed block is never
+    opened."""
+    import pandas as pd
+
+    groups: dict[tuple[int, int, int, int, int], list[BlockFile]] = {}
+    for f in block_files(store_root):
+        if depth is None or f.depth == depth:
+            key = (f.zi, f.yi, f.xi, f.depth, f.channel if per_channel else -1)
+            groups.setdefault(key, []).append(f)
+    rows = []
+    for key, group in groups.items():
+        if ktx_block_name(*key, lz4=lz4) not in done:
+            group.sort(key=lambda f: f.channel)
+            rows.append(
+                (*key[:4], [f.channel for f in group], [f.rel for f in group])
             )
-            .select(
-                "zi", "yi", "xi", "depth",
-                F.col("files.channel").alias("channels"),
-                F.col("files.path").alias("paths"),
-            )
-        )
-    return rows
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["zi", "yi", "xi", "depth", "channels", "paths"]),
+        _GROUP_SCHEMA,
+    )
 
 
 def _block_converter(
@@ -245,15 +244,7 @@ def _write_ktx_blocks(
                 }
             )
 
-    # explicit spread of the kernel's input, after any resume filter:
-    # the metadata rows are a few KiB, so AQE coalesces each shuffle
-    # that feeds them (the groups, the listing's commit semi-join, a
-    # shuffled resume anti-join) to ONE partition, which serializes the
-    # CPU-heavy conversion (the round-6 soak caught exactly this: one
-    # 312s task). AQE respects an explicit partition count; round-robin
-    # balances blocks whose cost varies by level.
-    spread = groups.repartition(groups.sparkSession.sparkContext.defaultParallelism)
-    return spread.mapInPandas(convert_and_write, "rel string")
+    return groups.mapInPandas(convert_and_write, "rel string")
 
 
 def tiff_octree_to_ktx(
@@ -305,37 +296,12 @@ def tiff_octree_to_ktx(
     ``delete_source`` mirrors the reference's ``--ktxonly`` space
     reclaim (tiff2octree.py:508-515, 1153-1162): after the KTX
     manifest commits, the converted source ``.tif`` blocks below the
-    root are deleted (a distributed map over the listing — no driver
-    set), and the root-level ``default.{ch}.tif`` files are moved
+    root are deleted (a map over the listed files, executor-side), and
+    the root-level ``default.{ch}.tif`` files are moved
     beside the KTX output's parent directory, exactly where the
     reference leaves its lowest-resolution slices.
     """
-    # path rows instead of decoded payloads (round-6 soak: a
-    # payload-grouped interleave shuffled ~1 GiB at 2 GiB scale):
-    # single-channel mode is one row per file with zero shuffle;
-    # interleave pairs a block's channel files with a paths-only
-    # groupBy. Resume below then filters on paths, so committed
-    # blocks are never opened, let alone decoded.
-    blocks = _block_file_groups(
-        spark, store_root, depth, per_channel=not interleave
-    )
-    if resume:
-        # the reference's pass-2 resume skips blocks whose .ktx output
-        # already exists (tiff2octree.py:400-402, per-file
-        # os.path.exists); here: one anti-join of the PATH rows
-        # against the OUTPUT store's manifest on the expected file
-        # name, so committed blocks are never opened
-        done = manifest.committed_files_df(spark, out_dir)
-        if done is not None:
-            rel = ktx_block_name_col(
-                F.col("zi"), F.col("yi"), F.col("xi"), F.col("depth"),
-                F.lit(-1) if interleave else F.col("channel"), lz4,
-            )
-            blocks = (
-                blocks.withColumn("rel", rel)
-                .join(done, "rel", "left_anti")
-                .drop("rel")
-            )
+    import pandas as pd
 
     from hortacloud_importer_spark.volume.geometry import (
         OctreeGeometry,
@@ -357,18 +323,27 @@ def tiff_octree_to_ktx(
 
     out_fs, out_base = _pa_fs(out_dir)
     out_base = out_base.rstrip("/")
-    had_manifest = manifest.has_manifest(out_fs, out_base)
-    # the whole conversion as one executor-side kernel per block that
-    # also writes its block's file: a map-only plan over path rows,
-    # whose only output is the written names the driver commits
-    rels = {
+    # the reference's pass-2 resume skips blocks whose .ktx output
+    # already exists (tiff2octree.py:400-402, per-file os.path.exists);
+    # here the work list leaves out every block whose name the OUTPUT
+    # manifest commits, so committed blocks are never opened
+    done = manifest.committed_files(out_fs, out_base) if resume else frozenset()
+    # path rows, not payloads (round-6 soak: a payload-grouped
+    # interleave shuffled ~1 GiB at 2 GiB scale): one row per file, or
+    # per block with its channel files when interleaving, handed to
+    # ONE map kernel that converts each block and writes its own file;
+    # its only output is the written names the driver commits
+    blocks = _block_file_groups(
+        spark, store_root, depth, per_channel=not interleave, done=done, lz4=lz4
+    )
+    rels = [
         r["rel"]
         for r in _write_ktx_blocks(
             blocks, store_root, out_dir, n_mips, filter_, interleave,
             geometry, downsample_intensity, downsample_xy, lz4,
         ).collect()
-    }
-    manifest.write_commit(out_fs, out_base, sorted(rels))
+    ]
+    manifest.write_commit(out_fs, out_base, rels)
     if transform is not None:
         # the reference copies transform.txt beside the KTX output
         # verbatim (tiff2octree.py:894-901)
@@ -381,19 +356,16 @@ def tiff_octree_to_ktx(
             out_fs,
             f"{out_base}/transform.txt",
         )
-    # committed-file count (one file per block in this sink, so
-    # n_blocks == n_files): this run's names when it made the store's
-    # first commit, else a Spark job over the shard union (appends and
-    # resumes), never a driver-side set
-    n_files = len(rels)
-    if had_manifest:
-        n_files = int(
-            manifest.committed_files_df(spark, out_dir).distinct().count()
-        )
+    # committed-file count over every commit (appends and resumes);
+    # one file per block in this sink, so n_blocks == n_files
+    n_files = len(manifest.committed_files(out_fs, out_base))
     if delete_source:
         _reclaim_source_store(spark, store_root, out_dir, depth)
+    # a local relation: collecting the summary runs no job
     return spark.createDataFrame(
-        [(n_files, n_files, n_mips)],
+        pd.DataFrame(
+            {"n_files": [n_files], "n_blocks": [n_files], "n_mips": [n_mips]}
+        ),
         "n_files long, n_blocks long, n_mips int",
     )
 
@@ -409,38 +381,35 @@ def _reclaim_source_store(
     its KTX is written; here after the whole commit, so a failed run
     never deletes anything), then move the root ``default.{ch}.tif``
     files next to the KTX output's parent (:1153-1162). Both act on
-    the :func:`block_files` rows — exactly the blocks the KTX pass
-    converted — and the delete is a map over them, executor-side, no
-    driver set. ``depth=0`` (root-only conversion) never deletes: the
-    root slices are MOVED, matching the reference's level > 1 guard;
-    a depth-restricted conversion only reclaims that depth."""
+    the :func:`block_files` rows at ``depth`` — exactly the blocks the
+    KTX pass converted — and the delete is a map over them,
+    executor-side. ``depth=0`` (root-only conversion) never
+    deletes: the root slices are MOVED, matching the reference's
+    level > 1 guard; a depth-restricted conversion only reclaims that
+    depth."""
     import posixpath
 
+    from hortacloud_importer_spark.sources.block_store import block_frame
     from hortacloud_importer_spark.sources.datasource import _copy_file
 
-    files = block_files(spark, store_root)
-    if depth is not None:
-        files = files.filter(F.col("depth") == depth)
-
     def rm(batches):
-        # deletes the blocks below the root, passes the root's rels on
+        # deletes the blocks below the root
         filesystem, base = _pa_fs(store_root)
         base = base.rstrip("/")
         for pdf in batches:
-            below = pdf["depth"] >= 1
-            for rel in pdf["rel"][below]:
+            for rel in pdf["rel"]:
                 try:
                     filesystem.delete_file(f"{base}/{rel}")
                 except FileNotFoundError:
                     pass  # idempotent under task retries; any other
                     # failure (permissions, read-only mount) must
                     # surface, not read as a successful reclaim
-            yield pdf.loc[~below, ["rel"]]
+            yield pdf[["rel"]]
 
-    roots = [
-        r["rel"]
-        for r in files.select("rel", "depth").mapInPandas(rm, "rel string").collect()
-    ]
+    files = [f for f in block_files(store_root) if depth is None or f.depth == depth]
+    below = [f for f in files if f.depth >= 1]
+    if below:
+        block_frame(spark, below).mapInPandas(rm, "rel string").collect()
     parent = posixpath.dirname(out_dir.rstrip("/")) or "."
     if depth not in (None, 0) or parent.rstrip("/") == store_root.rstrip("/"):
         return
@@ -449,7 +418,8 @@ def _reclaim_source_store(
     src_fs, src_base = _pa_fs(store_root)
     dst_fs, dst_base = _pa_fs(parent)
     dst_fs.create_dir(dst_base, recursive=True)
-    for rel in roots:
-        src = f"{src_base.rstrip('/')}/{rel}"
-        _copy_file(src_fs, src, dst_fs, f"{dst_base.rstrip('/')}/{rel}")
-        src_fs.delete_file(src)
+    for f in files:
+        if f.depth == 0:
+            src = f"{src_base.rstrip('/')}/{f.rel}"
+            _copy_file(src_fs, src, dst_fs, f"{dst_base.rstrip('/')}/{f.rel}")
+            src_fs.delete_file(src)

@@ -64,7 +64,7 @@ from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
 from hortacloud_importer_spark.sources.block_store import (
-    parse_block_rels,
+    parse_block_rel,
     tiff_block_rel,
 )
 from hortacloud_importer_spark.sources.datasource import (
@@ -438,23 +438,23 @@ def _subtree_pass(
             lambda key, pdf: build(key, pdf, frozenset()), _PASS_SCHEMA
         )
     # committed files of the levels this pass writes, keyed by the
-    # subtree that owns them
-    level = F.lit(nlevels - 1) - F.col("depth")
+    # subtree that owns them: a level-L coordinate shifts up hi - L
+    # levels, and L = nlevels - 1 - depth
+    shift = hi - nlevels + 1
 
-    def owner(c: str):
-        # shift a level-``level`` coordinate up to the pass root at hi
-        return F.expr(f"shiftright({c}, {hi - nlevels + 1} + depth)")
+    def owned(batches):
+        for pdf in batches:
+            rows = []
+            for f in map(parse_block_rel, pdf["rel"]):
+                if f is not None and first <= nlevels - 1 - f.depth <= hi:
+                    up = shift + f.depth
+                    rows.append(
+                        (f.rel, f.zi >> up, f.yi >> up, f.xi >> up, f.channel)
+                    )
+            yield pd.DataFrame(rows, columns=["rel", "gz", "gy", "gx", "channel"])
 
-    committed = (
-        parse_block_rels(done)
-        .filter(level.between(first, hi))
-        .select(
-            "rel",
-            owner("zi").alias("gz"),
-            owner("yi").alias("gy"),
-            owner("xi").alias("gx"),
-            "channel",
-        )
+    committed = done.mapInPandas(
+        owned, "rel string, gz int, gy int, gx int, channel int"
     )
     return grouped.cogroup(
         committed.groupBy("gz", "gy", "gx", "channel")

@@ -5,23 +5,28 @@ block-file listing every reader starts from, the windowed read
 The store is the reference's own layout, ``{octree-path}/default.{ch}.tif``
 (tiff2octree.py:298-317), written by the subtree kernel of
 pipelines/octree.py and committed through sources/manifest.py.
-:func:`tiff_block_rel` names a block's file and :func:`parse_block_rels`
-is its Catalyst inverse. :func:`block_files` lists a store's committed
-block files as path-only rows; channel discovery, the metadata probe,
-the windowed read, and the KTX pass's work list and source reclaim
-(pipelines/ktx.py) are all built on it. So windowed reads and probes
-prune files on path-derived coordinates before any payload is opened
-(the reference's windowed region read, tiff2octree.py:281-292), and
-every read keeps only committed files.
+:func:`tiff_block_rel` names a block's file and :func:`parse_block_rel`
+is its inverse. :func:`block_files` lists a store's committed block
+files once, on the driver, as parsed rows; channel discovery, the
+metadata probe, the windowed read, and the KTX pass's work list and
+source reclaim (pipelines/ktx.py) are all built on those rows, and a
+kernel gets them as one local relation (:func:`block_frame`). The
+build's resume (pipelines/octree.py) parses the manifest's committed
+names with the same :func:`parse_block_rel`. So windowed reads and
+probes prune files on path-derived coordinates before any payload is
+opened (the reference's windowed region read, tiff2octree.py:281-292),
+and every read keeps only committed files.
 """
 
 from __future__ import annotations
 
+import re
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # a block file's store-relative path: octant digits, then the channel
-_BLOCK_REL = r"^(?:[1-8]/)*default\.(\d+)\.tif$"
+_BLOCK_REL = re.compile(r"((?:[1-8]/)*)default\.(\d+)\.tif")
 
 
 def rewrite_layout(
@@ -57,75 +62,80 @@ def tiff_block_rel(zi: int, yi: int, xi: int, channel: int, depth: int) -> str:
     return "/".join([*map(str, digits), f"default.{channel}.tif"])
 
 
-def parse_block_rels(df: DataFrame) -> DataFrame:
-    """The rows of ``df`` whose ``rel`` (a store-relative path) names a
-    block file, as (rel, zi, yi, xi, depth, channel): depth is the
-    digit count (the root is 0) and the coordinates come from the
-    octant digits, ``1 + x_bit + 2*y_bit + 4*z_bit`` per level, MSB
-    first (tiff2octree.py:263-279) — the inverse of
-    :func:`tiff_block_rel`. Any other file is dropped here, the one
-    place the name format is matched."""
-    rel = F.col("rel")
-    parts = F.split(rel, "/")
-    digits = F.slice(parts, 1, F.size(parts) - 1)
+class BlockFile(NamedTuple):
+    """One block file of a store: its store-relative path, block
+    coordinates, depth (the digit count: the root is 0) and channel."""
 
-    def axis(shift: int):
-        return F.aggregate(
-            digits,
-            F.lit(0),
-            lambda acc, d: acc * 2
-            + F.shiftright(d.cast("int") - 1, shift).bitwiseAND(F.lit(1)),
-        )
-
-    return df.filter(rel.rlike(_BLOCK_REL)).select(
-        rel,
-        axis(2).alias("zi"),
-        axis(1).alias("yi"),
-        axis(0).alias("xi"),
-        (F.size(parts) - 1).alias("depth"),
-        F.regexp_extract(rel, _BLOCK_REL, 1).cast("int").alias("channel"),
-    )
+    rel: str
+    zi: int
+    yi: int
+    xi: int
+    depth: int
+    channel: int
 
 
-def block_files(spark: SparkSession, root: str) -> DataFrame:
-    """The store's committed block files as path-only rows
-    (rel, zi, yi, xi, depth, channel): a ``binaryFile`` listing that
-    projects ``path`` alone, kept to the files the manifest commits (a
-    store without one — a foreign octree, e.g. the reference's own
-    output — keeps them all), parsed by :func:`parse_block_rels`. No
-    payload is read, so the commit semi-join shuffles only paths at
-    any manifest size, and a killed build's uncommitted leftover never
-    surfaces as data, a phantom channel, a wrong extent or a wrong
-    depth."""
+def parse_block_rel(rel: str) -> BlockFile | None:
+    """The block a store-relative path names, or None for any other
+    file: the inverse of :func:`tiff_block_rel`, and the one place the
+    name format is matched. Coordinates come from the octant digits,
+    ``1 + x_bit + 2*y_bit + 4*z_bit`` per level, MSB first
+    (tiff2octree.py:263-279)."""
+    m = _BLOCK_REL.fullmatch(rel)
+    if m is None:
+        return None
+    digits = [int(d) - 1 for d in m.group(1).split("/")[:-1]]
+    zi = yi = xi = 0
+    for d in digits:
+        zi, yi, xi = 2 * zi + (d >> 2 & 1), 2 * yi + (d >> 1 & 1), 2 * xi + (d & 1)
+    return BlockFile(rel, zi, yi, xi, len(digits), int(m.group(2)))
+
+
+def block_files(root: str) -> list[BlockFile]:
+    """The store's committed block files, sorted by path: ONE listing
+    of ``root`` on the driver, kept to the files the manifest commits
+    (a store without one — a foreign octree, e.g. the reference's own
+    output — keeps them all) and parsed by :func:`parse_block_rel`. No
+    payload is read and no Spark job runs, so a killed build's
+    uncommitted leftover never surfaces as data, a phantom channel, a
+    wrong extent or a wrong depth. The rows are as many as the store's
+    files, like the paths the driver collects to commit them."""
+    from pyarrow import fs as pafs
+
     from hortacloud_importer_spark.sources import manifest
+    from hortacloud_importer_spark.sources.datasource import _pa_fs
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.tif")
-        .load(root)
-        .select("path")
+    filesystem, base = _pa_fs(root)
+    base = base.rstrip("/")
+    infos = filesystem.get_file_info(pafs.FileSelector(base, recursive=True))
+    rels = (
+        i.path[len(base) + 1 :] for i in infos if i.type == pafs.FileType.File
     )
-    committed = manifest.committed_files_df(spark, root)
-    if committed is not None:
-        files = manifest.committed_only(files, committed, root, F.col("path"))
-    return parse_block_rels(
-        files.select(manifest.relative_path(F.col("path"), root).alias("rel"))
+    if manifest.has_manifest(filesystem, base):
+        committed = manifest.committed_files(filesystem, base)
+        rels = (rel for rel in rels if rel in committed)
+    return sorted(f for f in map(parse_block_rel, rels) if f is not None)
+
+
+def block_frame(spark: SparkSession, files: list[BlockFile]) -> DataFrame:
+    """:func:`block_files` rows as a local DataFrame (one scan of a
+    local relation, ``defaultParallelism`` partitions at most, no
+    shuffle) for a kernel that opens each file by path."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(files, columns=BlockFile._fields),
+        "rel string, zi int, yi int, xi int, depth int, channel int",
     )
 
 
-def store_channels(spark: SparkSession, root: str) -> list[int]:
+def store_channels(root: str) -> list[int]:
     """Distinct channel ids of an octree block store, from the
-    :func:`block_files` listing — no block payload is read, so channel
-    discovery over a 100 TB store is a listing-sized job. The result
-    (a handful of ints) is driver-safe by construction."""
-    ids = block_files(spark, root).select("channel").distinct()
-    return sorted(r["channel"] for r in ids.collect())
+    :func:`block_files` listing — no block payload is read and no
+    Spark job runs."""
+    return sorted({f.channel for f in block_files(root)})
 
 
-def store_block_meta(
-    spark: SparkSession, root: str
-) -> tuple[tuple[int, int, int], int]:
+def store_block_meta(root: str) -> tuple[tuple[int, int, int], int]:
     """(block extent zyx, deepest octree level) of an octree block
     store, for metadata cost: the depth comes from the
     :func:`block_files` listing (no payload read), and the extent from
@@ -136,15 +146,13 @@ def store_block_meta(
     from hortacloud_importer_spark.sources.datasource import _pa_fs
     from hortacloud_importer_spark.sources.tiff import tiff_shape
 
-    row = block_files(spark, root).agg(
-        F.max("depth").alias("max_depth"), F.min("rel").alias("probe")
-    ).first()
-    if row is None or row["probe"] is None:
+    files = block_files(root)
+    if not files:
         raise FileNotFoundError(f"no .tif blocks under {root}")
     filesystem, base = _pa_fs(root)
-    with filesystem.open_input_stream(f"{base.rstrip('/')}/{row['probe']}") as fh:
+    with filesystem.open_input_stream(f"{base.rstrip('/')}/{files[0].rel}") as fh:
         shape = tiff_shape(fh.read())
-    return shape, int(row["max_depth"])
+    return shape, max(f.depth for f in files)
 
 
 def read_tiff_block_store(
@@ -160,16 +168,17 @@ def read_tiff_block_store(
 
     The :func:`block_files` rows (committed files only; block
     coordinates from the octant digits of each PATH, so the store
-    round-trips without a manifest) feed one ``mapInPandas`` whose
-    tasks open and decode their own files (sources/tiff.py). Payload
-    bytes never visit the driver or an exchange.
+    round-trips without a manifest) feed one ``mapInPandas`` over a
+    local relation whose tasks open and decode their own files
+    (sources/tiff.py). Payload bytes never visit the driver or an
+    exchange.
 
     ``window`` = ((z0, z1), (y0, y1), (x0, x1)) half-open VOXEL bounds
     (requires ``block_dims``) restricts the read to blocks overlapping
     the region, and ``depth`` to one octree level — both filters
-    evaluate on path-derived coordinates BEFORE any file is opened, so
-    a small crop of a huge store decodes only the touched blocks (A4
-    windowed read, tiff2octree.py:281-292).
+    evaluate on the driver's path-derived coordinates before any file
+    is opened, so a small crop of a huge store decodes only the
+    touched blocks (A4 windowed read, tiff2octree.py:281-292).
     """
     from pyspark.sql.types import (
         ArrayType,
@@ -220,16 +229,19 @@ def read_tiff_block_store(
                 )
             yield pd.DataFrame(out)
 
-    files = block_files(spark, root)
+    files = block_files(root)
     if depth is not None:
-        files = files.filter(F.col("depth") == depth)
+        files = [f for f in files if f.depth == depth]
     if window is not None:
         if block_dims is None or depth is None:
             # block extent is depth-relative: a voxel window only
             # names blocks at ONE level
             raise ValueError("window pruning requires block_dims and depth")
-        for col, (lo, hi), b in zip(("zi", "yi", "xi"), window, block_dims):
-            files = files.filter(
-                (F.col(col) >= lo // b) & (F.col(col) <= (hi - 1) // b)
+        files = [
+            f for f in files
+            if all(
+                lo // b <= c <= (hi - 1) // b
+                for c, (lo, hi), b in zip((f.zi, f.yi, f.xi), window, block_dims)
             )
-    return files.mapInPandas(decode, out_schema)
+        ]
+    return block_frame(spark, files).mapInPandas(decode, out_schema)

@@ -101,11 +101,15 @@ def _copy_file(src_fs, src_path: str, dst_fs, dst_path: str) -> None:
         fh.write(payload)
 
 
-def _list_files(root: str) -> list[str]:
+def _list_files(root: str, recursive: bool = False) -> list[str]:
+    """The files directly in ``root`` (with ``recursive``, in its whole
+    tree: a chunk store's chunks sit in nested directories). A slice
+    directory's slices are its own files, so an octree written inside
+    it is never read as more z slices."""
     from pyarrow import fs as pafs
 
     filesystem, base = _pa_fs(root)
-    infos = filesystem.get_file_info(pafs.FileSelector(base, recursive=True))
+    infos = filesystem.get_file_info(pafs.FileSelector(base, recursive=recursive))
     # scheme prefix, with any ?opts query (pyarrow filesystem options
     # like s3 endpoint_override ride in the URI query and must follow
     # every child path so executor-side _pa_fs calls reconstruct the
@@ -229,7 +233,7 @@ class _N5ReaderNoPushdown(DataSourceReader):
         bx, by, bz = self.block_xyz
         chunks = []
         base_len = len(self.root) + 1
-        for path in _list_files(self.root):
+        for path in _list_files(self.root, recursive=True):
             rel = path[base_len:]
             parts = rel.split("/")
             if len(parts) != 3:
@@ -335,7 +339,7 @@ class _ZarrReaderNoPushdown(DataSourceReader):
         cz, cy, cx = self.chunks_zyx
         base_len = len(self.root) + 1
         chunks = []
-        for path in _list_files(self.root):
+        for path in _list_files(self.root, recursive=True):
             rel = path[base_len:]
             name = rel.replace("/", self.sep) if self.sep == "/" else rel
             if name.startswith("."):

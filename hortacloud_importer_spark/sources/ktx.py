@@ -26,7 +26,6 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Public OpenGL enum values (gl.h / Khronos registry).
 GL_UNSIGNED_BYTE = 0x1401
@@ -483,23 +482,6 @@ def ktx_block_name(
     tag = f"_d{depth}" if depth else ""
     sfx = ".ktx.lz4" if lz4 else ".ktx"
     return f"block_{zi}_{yi}_{xi}{tag}_ch{channel}{sfx}"
-
-
-def ktx_block_name_col(zi, yi, xi, depth, channel, lz4: bool = False):
-    """:func:`ktx_block_name` as a Catalyst expression over integer
-    Columns — the name a resume anti-joins against the KTX store's
-    committed files."""
-    tag = F.when(
-        depth != 0, F.concat(F.lit("_d"), depth.cast("string"))
-    ).otherwise(F.lit(""))
-    return F.concat(
-        F.lit("block_"), zi.cast("string"),
-        F.lit("_"), yi.cast("string"),
-        F.lit("_"), xi.cast("string"),
-        tag,
-        F.lit("_ch"), channel.cast("string"),
-        F.lit(".ktx.lz4" if lz4 else ".ktx"),
-    )
 
 
 DECODE_SCHEMA = (

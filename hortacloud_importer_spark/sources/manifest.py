@@ -25,17 +25,24 @@ shard pair under ``{root}/_manifest/`` and nothing is ever rewritten:
     ``committed_files_df().distinct()`` does.
 
 Committed set = union of every shard, plus a legacy ``_MANIFEST.json``
-if the store predates sharding. Scale rule: anything that needs the
-committed SET goes through :func:`committed_files_df` —
-``spark.read.text`` over the shard directory, splittable and
-distributed, never a driver-side set. :func:`committed_files` (a
-driver-side set) exists for tiny stores and tests only.
+if the store predates sharding. It is read in one of two forms:
+
+- :func:`committed_files`, a driver-side set. The octree block store
+  and the KTX store use it (sources/block_store.py::block_files, the
+  KTX resume): their driver already lists every block file and
+  collects every written name to commit it, so the set costs no more
+  driver memory than that, and no Spark job.
+- :func:`committed_files_df`, ``spark.read.text`` over the shard
+  directory, splittable and distributed. The build's resume cogroups
+  it with the subtree kernel, and the shard and fingerprint stores
+  semi-join their scans with it (:func:`committed_only`) or read
+  their resume ids from it (:func:`committed_ids`).
 
 Every file sink in the engine commits through this module in four
 steps: write each data file with :func:`staged_output`, append one
-shard with :func:`write_commit`, resume from :func:`committed_files_df`
-(or :func:`committed_ids` when files are named by a resume id), and
-read back only what :func:`committed_only` keeps.
+shard with :func:`write_commit`, resume from the committed set (or
+:func:`committed_ids` when files are named by a resume id), and read
+back only committed files.
 """
 
 from __future__ import annotations
@@ -149,8 +156,8 @@ def has_manifest(filesystem, base: str) -> bool:
 
 
 def committed_files(filesystem, base: str) -> set[str]:
-    """Driver-side committed set — tests and tiny stores ONLY; scale
-    paths use :func:`committed_files_df`."""
+    """The committed set on the driver (see the module docstring for
+    which stores read it this way)."""
     out: set[str] = set()
     for info in _shard_infos(filesystem, base):
         if not info.base_name.endswith(".files.txt"):

@@ -286,7 +286,7 @@ def missing_fill_voxels(
         )
     base = root.rstrip("/")
     present = set()
-    for path in _list_files(base):
+    for path in _list_files(base, recursive=True):
         key = key_of(path[len(base) + 1 :])
         if key is not None:
             present.add(key)

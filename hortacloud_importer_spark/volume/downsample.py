@@ -132,20 +132,28 @@ def np_halve(
     (the XY-only first-mip option, ktx/util.py:183-192, is
     ``(False, True, True)``).
 
-    Bucketing is one bincount/maximum.at pass per reduction — no
-    Python loops — so a 512^3 block halves in tens of milliseconds.
-    That is what lets one task build every pyramid level of an octree
-    subtree (pipelines/octree.py: the assembled region of 8^s blocks
-    halves in place, level after level — with even extents the pairs
-    never straddle two parents, so halving the region equals halving
-    each parent's 2x2x2 children) and what makes the per-block KTX
-    conversion a map-only job instead of a shuffle cascade."""
+    When every halved axis is even, each output voxel reduces its
+    window of 8 parents (4 when only Y and X halve) with elementwise
+    ops over strided views (:func:`_halve_windows`); odd extents, whose
+    pivot child owns three parents, bucket with one bincount/maximum.at
+    pass per reduction.
+    Neither has a Python loop, so a 512^3 block halves in tens of
+    milliseconds. That is what lets one task build every pyramid level
+    of an octree subtree (pipelines/octree.py: the assembled region of
+    8^s blocks halves in place, level after level — with even extents
+    the pairs never straddle two parents, so halving the region equals
+    halving each parent's 2x2x2 children) and what makes the per-block
+    KTX conversion a map-only job instead of a shuffle cascade."""
     import numpy as np
 
     vol = np.asarray(vol)
+    if not np.issubdtype(vol.dtype, np.integer):
+        vol = vol.astype(np.int64)
     odims = tuple(
         mipmap_dimension(1, d) if h else d for d, h in zip(vol.shape, axes)
     )
+    if all(d == 2 * o or not h for d, o, h in zip(vol.shape, odims, axes)):
+        return _halve_windows(vol, odims, filter_)
     oz, oy, ox = odims
     n = oz * oy * ox
     # int32 bucket indexes halve the dominant temporary (one index per
@@ -165,8 +173,6 @@ def np_halve(
     # values keep their input dtype (comparisons and gathers only);
     # mean sums go through float64 bincount weights regardless
     v = vol.ravel()
-    if not np.issubdtype(v.dtype, np.integer):
-        v = v.astype(np.int64)
     if filter_ == "mean":
         nzm = v != 0
         s = np.bincount(idx[nzm], weights=v[nzm].astype(np.float64), minlength=n)
@@ -191,3 +197,44 @@ def np_halve(
     else:
         raise ValueError(f"unknown filter {filter_!r}; have {FILTERS}")
     return out.reshape(odims)
+
+
+def _halve_windows(
+    vol: "object", odims: tuple[int, int, int], filter_: str
+) -> "object":
+    """:func:`np_halve` over even halved axes. Output voxel (i, j, k)
+    reduces its window of 8 parents (4 when only Y and X halve), one
+    from each strided view ``vol[a::2, b::2, c::2]``, with the same
+    semantics as the bucketed form (zero is no data): elementwise ops
+    over whole views, one per window position."""
+    import numpy as np
+
+    fz, fy, fx = (d // o for d, o in zip(vol.shape, odims))
+    views = [
+        vol[a::fz, b::fy, c::fx]
+        for a in range(fz)
+        for b in range(fy)
+        for c in range(fx)
+    ]
+    if filter_ == "mean":
+        # zeros add nothing to the sum; floor division equals the
+        # float64 floor(sum / count) of these small integer sums
+        total = sum(v.astype(np.int64) for v in views)
+        count = sum((v != 0).astype(np.int8) for v in views)
+        return np.where(count > 0, total // np.maximum(count, 1), 0)
+    if filter_ == "max":
+        out = np.zeros(odims, dtype=np.int64)
+        for v in views:
+            np.maximum(out, v, out=out)
+        return out
+    if filter_ == "arthur":
+        # the window's largest and second-largest value (ties count
+        # twice), kept running over the views
+        first = views[0].astype(np.int64)
+        second = first if len(views) == 1 else None
+        for v in views[1:]:
+            low = np.minimum(first, v)
+            second = low if second is None else np.maximum(second, low)
+            first = np.maximum(first, v)
+        return np.where(second != 0, second, first)
+    raise ValueError(f"unknown filter {filter_!r}; have {FILTERS}")

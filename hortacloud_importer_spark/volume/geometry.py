@@ -144,7 +144,7 @@ def octree_path_digits(zi: int, yi: int, xi: int, depth: int) -> list[int]:
     """Block coords at ``depth`` -> octant digits, MSB first:
     ``1 + x_bit + 2*y_bit + 4*z_bit`` per level (tiff2octree.py:263-279).
     Block files are named by it (sources/block_store.py::tiff_block_rel,
-    whose Catalyst inverse is parse_block_rels there)."""
+    whose inverse is parse_block_rel there)."""
     return [
         1
         + ((xi >> bit) & 1)
@@ -257,11 +257,12 @@ def nonzero_percentiles(histogram: np.ndarray) -> np.ndarray:
     counts = histogram[nz].astype("float64")
     total = counts.sum()
     cum_pct = 100.0 * np.cumsum(counts) / total
-    prev_pct = np.concatenate(([0.0], cum_pct[:-1]))
-    for i, lo, hi in zip(nz, prev_pct, cum_pct):
-        for p in range(int(lo) + 1, int(hi) + 1):
-            if p <= 100:
-                out[p] = i
+    # p in 1..100 goes to the first intensity whose truncated cumulative
+    # percentage reaches p (the loop assigns it to the intensity whose
+    # truncated range first covers p)
+    first = np.searchsorted(np.trunc(cum_pct), np.arange(1, 101), side="left")
+    hit = first < nz.size
+    out[1:][hit] = nz[first[hit]]
     out[0] = nz[0]
     out[100] = nz[-1]
     return out

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from hortacloud_importer_spark.pipelines import build_octree
 from hortacloud_importer_spark.sources import manifest
 from hortacloud_importer_spark.sources.block_store import (
-    parse_block_rels,
+    block_files,
+    parse_block_rel,
     read_tiff_block_store,
     tiff_block_rel,
 )
@@ -101,76 +102,44 @@ def test_resume_anti_join(spark, store, tmp_path):
 
 def test_partition_pruning(spark, store):
     """A voxel window on one level keeps only the blocks it touches,
-    filtered on path-derived coordinates below the decode."""
+    filtered on path-derived coordinates before the decode: every
+    other leaf is corrupted here, and the read never opens one."""
     _build(spark, store)
+    for rel in _leaf_files(store):
+        if not rel.startswith("8/"):  # the high octant's first digit
+            with open(f"{store}/{rel}", "wb") as fh:
+                fh.write(b"not a tiff")
     pruned = read_tiff_block_store(
         spark, store, window=((4, 8), (4, 8), (4, 8)), block_dims=BLOCK,
         depth=LEAF_DEPTH,
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # the octant-digit coordinate filter sits on the path listing,
-    # between the decode and the file scan
-    window = next(
-        line for line in plan.splitlines()
-        if "Filter" in line and "aggregate(" in line and "path#" in line
-    )
-    assert (
-        plan.index("MapInPandas")
-        < plan.index(window)
-        < plan.index("FileScan binaryFile")
-    ), plan[:2000]
+    assert "MapInPandas" in plan and "LocalTableScan" in plan, plan
+    assert "Filter" not in plan, plan
     # the high octant (z,y,x all >= 2): an eighth of the space
     assert pruned.count() == 8
     assert pruned.filter((F.col("zi") < 2) | (F.col("yi") < 2) | (F.col("xi") < 2)).count() == 0
 
 
-def _exchange_outputs(df):
-    """(node name, output column types) of every exchange in ``df``'s
-    executed plan, walked on the JVM plan tree."""
-
-    def seq(s):
-        return [s.apply(i) for i in range(s.size())]
-
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()
-    out, stack = [], [plan]
-    while stack:
-        node = stack.pop()
-        if "Exchange" in node.nodeName():
-            out.append(
-                (
-                    node.nodeName(),
-                    [a.dataType().typeName() for a in seq(node.output())],
-                )
-            )
-        stack.extend(seq(node.children()))
-    return out
-
-
-def test_commit_semi_join_shuffles_no_payload(spark, store):
-    """A manifest past the broadcast threshold (~300k paths at 10 MB)
-    makes the commit semi-join a shuffle join; it must shuffle paths
-    only. Forced here by turning broadcast joins off: no exchange in
-    the read's plan may carry a binary column."""
+def test_block_read_plans_no_exchange_and_no_file_scan(spark, store):
+    """The committed-file filter runs on the driver's listing, so the
+    read is one MapInPandas over a local relation: no exchange (which
+    a shuffled commit semi-join needed once the manifest passed the
+    broadcast threshold) and no file scan."""
     _build(spark, store)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        df = read_tiff_block_store(spark, store, depth=LEAF_DEPTH)
-        exchanges = _exchange_outputs(df)
-        assert any(name == "Exchange" for name, _ in exchanges), exchanges
-        assert all("binary" not in types for _, types in exchanges), exchanges
-        assert df.count() == 63
-    finally:
-        spark.conf.set(key, old)
+    df = read_tiff_block_store(spark, store, depth=LEAF_DEPTH)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "LocalTableScan" in plan, plan
+    for node in ("Exchange", "FileScan", "Join"):
+        assert node not in plan, plan
+    assert df.count() == 63
 
 
 def test_octree_digits_match_path_expr(spark):
     """The writer's octant path (tiff_block_rel, from
     volume.geometry.octree_path_digits) is the Catalyst octree_path of
-    the same block, and parse_block_rels inverts it."""
+    the same block, and parse_block_rel inverts it; any other name
+    parses to None."""
     from hortacloud_importer_spark.volume import octree_path
 
     b = blockify(_voxels(spark), BLOCK).select("zi", "yi", "xi")
@@ -179,15 +148,17 @@ def test_octree_digits_match_path_expr(spark):
     ).collect()
     assert len(rows) == 64
     for r in rows:
-        rel = tiff_block_rel(r["zi"], r["yi"], r["xi"], 0, NLEVELS)
-        assert rel == f"{r['path']}/default.0.tif"
-    rels = [tiff_block_rel(r["zi"], r["yi"], r["xi"], 0, NLEVELS) for r in rows]
-    back = parse_block_rels(
-        spark.createDataFrame([(p,) for p in rels], "rel string")
-    ).select("zi", "yi", "xi", "depth").collect()
-    assert sorted(tuple(x) for x in back) == sorted(
-        (r["zi"], r["yi"], r["xi"], LEAF_DEPTH) for r in rows
-    )
+        rel = tiff_block_rel(r["zi"], r["yi"], r["xi"], 3, NLEVELS)
+        assert rel == f"{r['path']}/default.3.tif"
+        assert parse_block_rel(rel) == (
+            rel, r["zi"], r["yi"], r["xi"], LEAF_DEPTH, 3
+        )
+    assert parse_block_rel("default.12.tif") == ("default.12.tif", 0, 0, 0, 0, 12)
+    for other in (
+        "notes.tif", "9/default.0.tif", "1/default.0.tif.tmp",
+        "_temporary/default.0.tif", "1/.default.0.tif", "1/default.x.tif",
+    ):
+        assert parse_block_rel(other) is None, other
 
 
 def test_resume_filter_corrupt_store_raises(spark, store):
@@ -229,15 +200,12 @@ def test_uri_root_reads_like_a_bare_path(spark, store):
     """A ``file://`` root (the local stand-in for any URI) lists, keeps
     and parses the same committed block files as the bare path, though
     Spark reports them as ``file:/...``."""
-    from hortacloud_importer_spark.sources.block_store import (
-        block_files,
-        store_channels,
-    )
+    from hortacloud_importer_spark.sources.block_store import store_channels
 
     _build(spark, store)
-    want = sorted(tuple(r) for r in block_files(spark, store).collect())
+    want = block_files(store)
     assert len(want) == 63 + 8 + 1
     uri = f"file://{store}"
-    assert sorted(tuple(r) for r in block_files(spark, uri).collect()) == want
-    assert store_channels(spark, uri) == [0]
+    assert block_files(uri) == want
+    assert store_channels(uri) == [0]
     assert read_tiff_block_store(spark, uri, depth=LEAF_DEPTH).count() == 63

@@ -260,9 +260,11 @@ def test_cli_crop_window_round_trips(spark, tmp_path, capsys):
 
 
 def test_window_prune_filters_before_decode(spark, tmp_path):
-    """The window filter must sit on path-derived coordinates below
-    the Python decode in the plan — a crop of a huge store reads only
-    the touched block files."""
+    """The window filter runs on path-derived coordinates before the
+    Python decode — on the driver's listing, so the plan is the decode
+    over a local relation of the touched files alone, and a crop of a
+    huge store never opens another block file (corrupted here)."""
+    import glob
     from hortacloud_importer_spark.pipelines import build_octree
     from hortacloud_importer_spark.sources.block_store import (
         read_tiff_block_store,
@@ -274,16 +276,17 @@ def test_window_prune_filters_before_decode(spark, tmp_path):
     build_octree(spark, v, store, nlevels=2, filter_="max", dims=(8, 8, 8))
 
     win = ((0, 4), (0, 4), (0, 4))  # exactly one leaf octant
+    for p in glob.glob(f"{store}/[2-8]/default.0.tif"):
+        with open(p, "wb") as fh:
+            fh.write(b"not a tiff")
     df = read_tiff_block_store(
         spark, store, window=win, block_dims=(4, 4, 4), depth=1
     )
     rows = df.collect()
     assert [(r["zi"], r["yi"], r["xi"]) for r in rows] == [(0, 0, 0)]
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the coordinate filter is below MapInPandas (decode), not above
-    assert plan.index("Filter") > plan.index("MapInPandas") or (
-        "PushedFilters" in plan
-    ) or plan.index("MapInPandas") > plan.index("aggregate")
+    assert "MapInPandas" in plan and "LocalTableScan" in plan, plan
+    assert "Filter" not in plan, plan
 
 
 def test_crop_writes_zero_slices_for_skipped_blocks(spark, tmp_path):

@@ -177,3 +177,20 @@ def test_measure_bills_what_ran_between_its_reads(tmp_path):
     assert jvm == pytest.approx({
         "jit": 7.0, "task": 2.0, "exited": 1.0, "reaped children": 0.0,
     })
+
+
+def test_table_reports_the_first_operation_beside_the_median():
+    """The benchmark times the first operation after the prime; later
+    repeats run warmer, so the table shows that one beside the median."""
+    splits = [
+        {"jvm": 9.0, "driver": 1.0},  # the first: JIT still warming
+        {"jvm": 3.0, "driver": 1.0},
+        {"jvm": 4.0, "driver": 0.5},
+    ]
+    text = cpu_split.table(splits, first=True).splitlines()
+    assert text[0] == "| process group | first CPU s | median CPU s | share |"
+    assert text[1] == "|---|---|---|---|"
+    # shares are of the median total (10, 4 and 4.5 s)
+    assert text[2] == "| `jvm` | 9.00 | 4.00 | 89% |"
+    assert text[3] == "| `driver` | 1.00 | 1.00 | 22% |"
+    assert text[4] == "| total | 10.00 | 4.50 | |"

@@ -213,6 +213,45 @@ def test_nonzero_percentiles_matches_reference_loop(seed):
     assert np.array_equal(got, want)
 
 
+def _loop_percentiles(histogram):
+    """The per-intensity loop ``nonzero_percentiles`` replaced: each
+    non-zero intensity takes the percentiles its truncated cumulative
+    range covers."""
+    out = np.zeros(101, dtype="uint32")
+    nz = np.nonzero(histogram[1:])[0] + 1
+    if nz.size == 0:
+        return out
+    counts = histogram[nz].astype("float64")
+    cum_pct = 100.0 * np.cumsum(counts) / counts.sum()
+    prev_pct = np.concatenate(([0.0], cum_pct[:-1]))
+    for i, lo, hi in zip(nz, prev_pct, cum_pct):
+        for p in range(int(lo) + 1, int(hi) + 1):
+            if p <= 100:
+                out[p] = i
+    out[0] = nz[0]
+    out[100] = nz[-1]
+    return out
+
+
+def _histograms():
+    rng = np.random.default_rng(11)
+    for _ in range(40):
+        hist = np.zeros(65536, dtype="int64")
+        n = int(rng.integers(1, 3000))
+        top = int(rng.choice([2, 10, 1000, 10**6]))
+        hist[rng.integers(0, 65536, n)] = rng.integers(1, top, n)
+        yield hist
+    single = np.zeros(65536, dtype="int64")
+    single[[0, 700]] = (9, 5)
+    yield single
+    yield np.zeros(65536, dtype="int64")
+
+
+def test_nonzero_percentiles_matches_the_per_intensity_loop():
+    for hist in _histograms():
+        assert np.array_equal(G.nonzero_percentiles(hist), _loop_percentiles(hist))
+
+
 def test_nonzero_percentiles_all_zero_histogram():
     hist = np.zeros(65536, dtype="int64")
     hist[0] = 42  # only no-data voxels

@@ -312,31 +312,3 @@ def test_decode_reference_write_sequence_field_for_field():
         metadata=dict(kv_pairs),
     )
     assert encode_ktx(h, mips) == out.getvalue()
-
-
-def test_ktx_block_name_matches_name_col(spark):
-    """The Catalyst name a KTX resume anti-joins on
-    (ktx_block_name_col) is the writer's file name (ktx_block_name)
-    for single-level (depth 0) and octree (depth > 0) blocks,
-    interleaved (channel -1) and per-channel files, with and without
-    LZ4."""
-    from hortacloud_importer_spark.sources.ktx import (
-        ktx_block_name,
-        ktx_block_name_col,
-    )
-
-    blocks = [(0, 0, 0, 0), (1, 0, 3, 0), (0, 0, 0, 1), (3, 2, 5, 3)]
-    rows = [(*b, ch) for b in blocks for ch in (-1, 0, 7)]
-    df = spark.createDataFrame(
-        rows, "zi int, yi int, xi int, depth int, channel int"
-    )
-    for lz4 in (False, True):
-        got = df.select(
-            ktx_block_name_col(
-                F.col("zi"), F.col("yi"), F.col("xi"), F.col("depth"),
-                F.col("channel"), lz4,
-            ).alias("name")
-        ).collect()
-        assert [r["name"] for r in got] == [
-            ktx_block_name(*r, lz4=lz4) for r in rows
-        ]

@@ -139,25 +139,41 @@ def test_fused_matches_unfused_byte_for_byte(spark, store, tmp_path, kw):
     )
 
 
-def test_fused_single_channel_plan_has_no_exchange(spark, store, tmp_path):
-    """The plan tiff_octree_to_ktx runs for one channel: MapInPandas
-    over per-file PATH rows — no grouped map, no hash exchange, and
-    no scan column carrying file content."""
-    from hortacloud_importer_spark.pipelines.ktx import (
-        _block_file_groups,
-        _write_ktx_blocks,
-    )
+def _spy_kernels(monkeypatch):
+    """A list that collects the kernel DataFrame of every
+    ``_write_ktx_blocks`` call ``tiff_octree_to_ktx`` makes."""
+    from hortacloud_importer_spark.pipelines import ktx
 
-    rows = _block_file_groups(spark, store, per_channel=True)
-    out = _write_ktx_blocks(
-        rows, store, str(tmp_path / "ktx"), n_mips=3, filter_="arthur"
-    )
-    assert out.count() == 9
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "Exchange hashpartitioning" not in plan
-    assert "content" not in plan
+    real, kernels = ktx._write_ktx_blocks, []
+
+    def spy(*args, **kwargs):
+        kernels.append(real(*args, **kwargs))
+        return kernels[-1]
+
+    monkeypatch.setattr(ktx, "_write_ktx_blocks", spy)
+    return kernels
+
+
+def _assert_local_map_plan(kernel):
+    plan = kernel._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "LocalTableScan" in plan, plan
+    for node in ("Exchange", "FileScan", "Join", "FlatMapGroupsInPandas"):
+        assert node not in plan, plan
+
+
+def test_fused_single_channel_plan_has_no_exchange(
+    spark, store, tmp_path, monkeypatch
+):
+    """The plan tiff_octree_to_ktx runs for one channel: MapInPandas
+    over a local relation of per-file PATH rows — no grouped map, no
+    exchange, no file scan, no join — spread over defaultParallelism
+    tasks at most."""
+    kernels = _spy_kernels(monkeypatch)
+    _convert(spark, store, tmp_path)
+    (kernel,) = kernels
+    _assert_local_map_plan(kernel)
+    parallelism = spark.sparkContext.defaultParallelism
+    assert kernel.rdd.getNumPartitions() == min(9, parallelism)
 
 
 def test_delete_source_reclaims_store_after_commit(spark, tmp_path):
@@ -234,9 +250,10 @@ def test_filegroup_interleave_matches_unfused_byte_for_byte(
     spark, store2ch, tmp_path
 ):
     """SOAK.md finding: a payload-grouped interleave shuffled every
-    decoded block. The converter plans per-block FILE groups (paths
-    shuffle, payloads don't); the interleaved, requantized output of a
-    genuinely multi-channel store must match the NumPy reference. The
+    decoded block. The converter plans per-block FILE groups (paired
+    on the driver, no payload moves); the interleaved, requantized
+    output of a genuinely multi-channel store must match the NumPy
+    reference. The
     name predates the removal of the distributed-aggregate conversion
     it was compared with."""
     vols = dense_volume(
@@ -250,31 +267,17 @@ def test_filegroup_interleave_matches_unfused_byte_for_byte(
     _assert_ktx(_convert(spark, store2ch, tmp_path, **kw), want, 1)
 
 
-def test_filegroup_interleave_shuffles_paths_not_payloads(
-    spark, store2ch, tmp_path
+def test_filegroup_interleave_plan_has_no_exchange(
+    spark, store2ch, tmp_path, monkeypatch
 ):
-    """Plan shape: the only exchange feeds the collect_list of each
-    block's (channel, path) pairs; the conversion itself is
-    MapInPandas over (block, channels, paths) rows — no grouped-map
-    over decoded payload rows anywhere."""
-    from hortacloud_importer_spark.pipelines.ktx import (
-        _block_file_groups,
-        _write_ktx_blocks,
-    )
-
-    groups = _block_file_groups(spark, store2ch)
-    out = _write_ktx_blocks(
-        groups, store2ch, str(tmp_path / "ktx"), n_mips=3,
-        filter_="arthur", interleave=True,
-    )
-    out.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "FlatMapGroupsInPandas" not in plan  # no payload regroup
-    # the metadata-only shuffle: a channel id and a path per file
-    assert re.search(r"collect_list\(struct\(channel, channel#\d+, path, rel#\d+\)", plan)
-    # and the scan feeding it projects paths only, never content
-    assert "content" not in plan
+    """Interleaving pairs each block's channel files on the driver, so
+    the conversion is the same MapInPandas over a local relation of
+    (block, channels, paths) rows: no groupBy, no exchange, no grouped
+    map over decoded payloads."""
+    kernels = _spy_kernels(monkeypatch)
+    _convert(spark, store2ch, tmp_path, interleave=True)
+    (kernel,) = kernels
+    _assert_local_map_plan(kernel)
 
 
 def test_block_file_groups_depth_filter_and_channels(spark, store2ch):
@@ -302,9 +305,9 @@ def test_block_file_groups_depth_filter_and_channels(spark, store2ch):
 
 def test_ktx_resume_skips_committed_blocks(spark, store, tmp_path):
     """A11 for the KTX pass (reference: per-file os.path.exists skip,
-    tiff2octree.py:400-402): resume anti-joins the work list against
-    the OUTPUT manifest — already-converted blocks are neither decoded
-    nor rewritten."""
+    tiff2octree.py:400-402): resume leaves the OUTPUT manifest's
+    committed blocks out of the work list — already-converted blocks
+    are neither decoded nor rewritten."""
     import os
 
     out = str(tmp_path / "resume_ktx")
@@ -379,41 +382,49 @@ def test_ktx_resume_never_opens_committed_source_blocks(spark, store, tmp_path):
         )
 
 
-def test_ktx_resume_spreads_the_kernel_input_after_a_shuffled_anti_join(
+def test_ktx_resume_drops_committed_blocks_before_the_kernel(
     spark, store, tmp_path, monkeypatch
 ):
-    """With broadcast joins off, the resume anti-join against the
-    output manifest is a sort-merge join whose few-KiB shuffle AQE
-    coalesces to one partition. The kernel's input is spread after
-    that filter, so a resume of a half-converted store still converts
-    on defaultParallelism tasks, into the bytes of one whole
-    conversion."""
-    from hortacloud_importer_spark.pipelines import ktx
-
+    """A resume of a half-converted store leaves the committed blocks
+    out of the work list on the driver: the kernel's input is the one
+    unconverted block (the root), as a local relation with no join,
+    and the result has the bytes of one whole conversion."""
     kw = dict(block_dims=(8, 8, 8), n_mips=3, filter_="arthur")
     whole = _convert(spark, store, tmp_path)
-    out = str(tmp_path / "resume_smj")
+    out = str(tmp_path / "resume_local")
     tiff_octree_to_ktx(spark, store, out, depth=1, **kw).count()
 
-    real, kernels = ktx._write_ktx_blocks, []
-
-    def spy(*args, **kwargs):
-        kernels.append(real(*args, **kwargs))
-        return kernels[-1]
-
-    monkeypatch.setattr(ktx, "_write_ktx_blocks", spy)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        res = tiff_octree_to_ktx(spark, store, out, resume=True, **kw).first()
-        (kernel,) = kernels
-        plan = kernel._jdf.queryExecution().executedPlan().toString()
-        n_parts = kernel.rdd.getNumPartitions()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    assert re.search(r"SortMergeJoin \[rel#\d+\], \[rel#\d+\], LeftAnti", plan)
-    assert n_parts == spark.sparkContext.defaultParallelism
+    kernels = _spy_kernels(monkeypatch)
+    res = tiff_octree_to_ktx(spark, store, out, resume=True, **kw).first()
+    (kernel,) = kernels
+    _assert_local_map_plan(kernel)
+    assert kernel.count() == 1
     assert res["n_files"] == 9
     assert _files(out) == _files(whole)
+
+
+def test_ktx_resume_interleaved_skips_by_the_written_name(
+    spark, store2ch, tmp_path
+):
+    """The resume drops a block by the name its file was written
+    under, the interleaved (``ch-1``) LZ4 (``.ktx.lz4``) form too, so
+    a resumed run rewrites no committed file."""
+    kw = dict(
+        block_dims=(8, 8, 8), n_mips=2, filter_="arthur", interleave=True, lz4=True
+    )
+    out = str(tmp_path / "resume_interleaved")
+    tiff_octree_to_ktx(spark, store2ch, out, depth=1, **kw).count()
+    first = {
+        p: os.path.getmtime(os.path.join(out, p))
+        for p in os.listdir(out)
+        if p.startswith("block_")
+    }
+    assert len(first) == 8
+    assert all(re.fullmatch(r"block_\d_\d_\d_d1_ch-1\.ktx\.lz4", p) for p in first)
+    res = tiff_octree_to_ktx(spark, store2ch, out, resume=True, **kw).first()
+    assert res["n_files"] == 9
+    for name, mtime in first.items():
+        assert os.path.getmtime(os.path.join(out, name)) == mtime, name
 
 
 def test_block_file_groups_skip_stray_tif(spark, tmp_path):
@@ -432,8 +443,8 @@ def test_block_file_groups_skip_stray_tif(spark, tmp_path):
     root = str(tmp_path / "store")
     v = synthetic_volume(spark, 8, 8, 8, zero_fraction_mod=5)
     build_octree(spark, v, root, nlevels=1, filter_="arthur", dims=(8, 8, 8))
-    # make it a foreign store (no manifest -> listing is not filtered
-    # by the commit semi-join) and drop in a non-conforming file
+    # make it a foreign store (no manifest -> the listing keeps every
+    # file) and drop in a non-conforming file
     shutil.rmtree(os.path.join(root, "_manifest"))
     stray = os.path.join(root, "notes.tif")
     with open(stray, "wb") as fh:
@@ -496,8 +507,8 @@ def test_ktx_lz4_side_compression_roundtrip(spark, store, tmp_path):
 
 
 def test_ktx_lz4_resume_skips_committed(spark, store, tmp_path):
-    """Resume with lz4 on: the anti-join's expected name carries the
-    .ktx.lz4 suffix, so committed compressed blocks are skipped."""
+    """Resume with lz4 on: the expected name the resume skips carries
+    the .ktx.lz4 suffix, so committed compressed blocks are skipped."""
     import os
 
     out = str(tmp_path / "resume_lz4")

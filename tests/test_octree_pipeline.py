@@ -613,3 +613,33 @@ def test_fused_ingest_clips_slices_beyond_padded_grid(spark, tmp_path):
     padded = np.zeros((8, 6, 6), dtype=np.int64)
     padded[:, :, :5] = vol[:8]
     _assert_store(out, expected_blocks([padded], 2, (4, 3, 3), "max"))
+
+
+def test_slice_listing_takes_only_the_directory_own_files(spark, tmp_path):
+    """An octree written inside the slice directory is not more z
+    slices: the build and the ``tiff_volume`` reader list the
+    directory's own files only. The slice names end in no index, so
+    no z-run check could catch the extra file either."""
+    from hortacloud_importer_spark.pipelines import build_octree
+    from hortacloud_importer_spark.sources.datasource import (
+        register_volume_sources,
+    )
+
+    rng = np.random.default_rng(61)
+    vol = rng.integers(1, 60000, (4, 6, 6)).astype(np.uint16)
+    d = tmp_path / "nested"
+    d.mkdir()
+    for name, sl in zip("abcd", vol):
+        (d / f"slice_{name}.tif").write_bytes(encode_tiff(sl[None, ...]))
+    (d / "out" / "1").mkdir(parents=True)
+    (d / "out" / "1" / "default.0.tif").write_bytes(
+        encode_tiff(np.full((1, 6, 6), 7, dtype=np.uint16))
+    )
+    out = str(tmp_path / "nested_store")
+    summary = build_octree(spark, str(d), out, nlevels=1, filter_="max").collect()
+    assert [r["n_voxels"] for r in summary] == [4 * 6 * 6]
+    _assert_store(out, expected_blocks([vol.astype(np.int64)], 1, (4, 6, 6), "max"))
+
+    register_volume_sources(spark)
+    slices = spark.read.format("tiff_volume").option("emit", "slices").load(str(d))
+    assert sorted(r["z"] for r in slices.select("z").collect()) == [0, 1, 2, 3]

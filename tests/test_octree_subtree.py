@@ -335,6 +335,47 @@ def test_ktx_resumes_after_crash_before_last_commit(spark, tmp_path):
     assert {p: os.stat(f"{ktx}/{p}").st_mtime_ns for p in kept} == kept
 
 
+def test_ktx_resumes_after_failed_rename_in_the_kernel(spark, tmp_path):
+    """A level-1 block whose final ``.ktx`` name is taken by a
+    directory fails its staged rename inside the conversion kernel,
+    after an earlier run committed the leaves. The failed run commits
+    nothing, and every visible file is a whole KTX (staged files are
+    hidden); once the obstacle is gone, the resume gives the
+    uninterrupted conversion's bytes without rewriting a file the
+    earlier run committed."""
+    from hortacloud_importer_spark.sources.ktx import decode_ktx
+
+    v = synthetic_volume(spark, 16, 16, 16, zero_fraction_mod=5)
+    store = str(tmp_path / "store")
+    build_octree(spark, v, store, nlevels=3, filter_="arthur", dims=(16, 16, 16))
+    kw = dict(block_dims=(4, 4, 4), n_mips=2, filter_="arthur")
+    whole = str(tmp_path / "whole")
+    tiff_octree_to_ktx(spark, store, whole, **kw).count()
+
+    ktx = str(tmp_path / "ktx")
+    tiff_octree_to_ktx(spark, store, ktx, depth=2, **kw).count()
+    leaves = manifest.committed_files(_FS, ktx)
+    assert len(leaves) == 64
+    kept = {p: os.stat(f"{ktx}/{p}").st_mtime_ns for p in leaves}
+    obstacle = f"{ktx}/block_1_1_1_d1_ch0.ktx"
+    os.makedirs(f"{obstacle}/x")
+    with pytest.raises(Exception, match="Is a directory"):
+        tiff_octree_to_ktx(spark, store, ktx, resume=True, **kw).count()
+    assert len(_shards(ktx)) == 1
+    assert manifest.committed_files(_FS, ktx) == leaves
+    for rel in (r for r in _digests(ktx) if r.endswith(".ktx")):
+        with open(f"{ktx}/{rel}", "rb") as fh:
+            decode_ktx(fh.read())  # whole files only
+
+    os.rmdir(f"{obstacle}/x")
+    os.rmdir(obstacle)
+    res = tiff_octree_to_ktx(spark, store, ktx, resume=True, **kw).first()
+    assert res["n_files"] == 64 + 8 + 1
+    assert _digests(ktx) == _digests(whole)
+    assert manifest.committed_files(_FS, ktx) == manifest.committed_files(_FS, whole)
+    assert {p: os.stat(f"{ktx}/{p}").st_mtime_ns for p in leaves} == kept
+
+
 def test_build_resumes_after_failed_rename_mid_pass(
     spark, tmp_path, one_level_passes
 ):
@@ -374,7 +415,7 @@ def test_build_resumes_after_failed_rename_mid_pass(
         tiff_block_rel(r["zi"], r["yi"], r["xi"], r["channel"], r["depth"] + 1)
         for r in back
     } == leaves
-    assert store_channels(spark, out) == [0]
+    assert store_channels(out) == [0]
     for per_channel in (False, True):
         groups = _block_file_groups(spark, out, per_channel=per_channel)
         assert {p for r in groups.collect() for p in r["paths"]} == leaves

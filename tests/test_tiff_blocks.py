@@ -113,7 +113,7 @@ def test_store_channels_from_paths_without_decode(spark, tmp_path):
     for p in glob.glob(f"{out}/**/*.tif", recursive=True):
         with open(p, "wb") as fh:
             fh.write(b"not a tiff")
-    assert store_channels(spark, out) == [0, 2]
+    assert store_channels(out) == [0, 2]
 
 
 def test_store_block_meta_one_header_no_decode(spark, tmp_path):
@@ -131,7 +131,7 @@ def test_store_block_meta_one_header_no_decode(spark, tmp_path):
             for zi, yi, xi in [(0, 0, 0), (1, 1, 1)]
         ],
     )
-    shape, max_depth = store_block_meta(spark, out)
+    shape, max_depth = store_block_meta(out)
     assert shape == (2, 2, 2)
     assert max_depth == 1  # nlevels=2 leaves carry one octant digit
 
@@ -157,7 +157,7 @@ def test_store_block_meta_ignores_uncommitted_leftovers(spark, tmp_path):
         encode_tiff(np.full((4, 4, 4), 9, dtype=np.uint16))
     )
 
-    shape, max_depth = store_block_meta(spark, out)
+    shape, max_depth = store_block_meta(out)
     assert shape == (2, 2, 2)  # committed extent, not the leftover's
     assert max_depth == 1  # leftover's depth-2 path not counted
 
@@ -176,4 +176,4 @@ def test_store_channels_ignores_uncommitted_leftovers(spark, tmp_path):
     (leftover / "default.5.tif").write_bytes(
         encode_tiff(np.full((2, 2, 2), 9, dtype=np.uint16))
     )
-    assert store_channels(spark, out) == [0]
+    assert store_channels(out) == [0]

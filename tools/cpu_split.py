@@ -44,7 +44,8 @@ drop into ``exited``. Last come the classes Janino compiled
 
 Usage: ``python tools/cpu_split.py [--workload W] [--seed N] [--reps R]``
 — prints the prime's two markdown tables, then the operation's two
-tables and compile counts, each the median over R measured operations.
+tables and compile counts: the first measured operation (the one the
+benchmark times, right after the prime) beside the median over R.
 """
 
 from __future__ import annotations
@@ -192,18 +193,34 @@ def measure(run, root_pid: int, jvm_pid: int, hz: float, proc: str = "/proc"):
     )
 
 
-def table(splits: list[dict], header: str = "process group") -> str:
-    """Markdown table of the per-group medians over ``splits``."""
+def table(
+    splits: list[dict], header: str = "process group", first: bool = False
+) -> str:
+    """Markdown table of the per-group medians over ``splits``; with
+    ``first``, the first split's CPU s beside them. ``perfbench`` at
+    ``run_seconds`` 1 times one operation, right after the prime, and
+    later repeats run with a warmer JIT, so their median alone
+    understates it."""
     groups = sorted(
         {g for s in splits for g in s},
         key=lambda g: -statistics.median(s.get(g, 0.0) for s in splits),
     )
     med = {g: statistics.median(s.get(g, 0.0) for s in splits) for g in groups}
     total = statistics.median(sum(s.values()) for s in splits)
-    lines = [f"| {header} | CPU s | share |", "|---|---|---|"]
+    columns = [("CPU s", med, total)]
+    if first:
+        columns = [
+            ("first CPU s", splits[0], sum(splits[0].values())),
+            ("median CPU s", med, total),
+        ]
+    lines = [
+        f"| {header} | {' | '.join(c[0] for c in columns)} | share |",
+        "|---" * (len(columns) + 2) + "|",
+    ]
     for g in groups:
-        lines.append(f"| `{g}` | {med[g]:.2f} | {med[g] / total:.0%} |")
-    lines.append(f"| total | {total:.2f} | |")
+        cells = " | ".join(f"{c[1].get(g, 0.0):.2f}" for c in columns)
+        lines.append(f"| `{g}` | {cells} | {med[g] / total:.0%} |")
+    lines.append(f"| total | {' | '.join(f'{c[2]:.2f}' for c in columns)} | |")
     return "\n".join(lines)
 
 
@@ -274,15 +291,17 @@ def main() -> int:
     print()
     print(table([prime_jvm], "JVM thread group"))
     print()
-    print(f"Operation (median of {args.reps}):")
+    print(f"Operation (the first, and the median of {args.reps}):")
     print()
-    print(table(splits))
+    print(table(splits, first=True))
     print()
-    print(table(jvm_splits, "JVM thread group"))
+    print(table(jvm_splits, "JVM thread group", first=True))
     print()
     print(
-        f"Janino compiles per operation: {statistics.median(c[0] for c in compiles):g}; "
-        f"JIT compilation time: {statistics.median(c[1] for c in compiles):g} ms"
+        f"Janino compiles per operation: first {compiles[0][0]:g}, "
+        f"median {statistics.median(c[0] for c in compiles):g}; "
+        f"JIT compilation time: first {compiles[0][1]:g} ms, "
+        f"median {statistics.median(c[1] for c in compiles):g} ms"
     )
     return 0
 
