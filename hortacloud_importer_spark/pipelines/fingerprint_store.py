@@ -20,8 +20,9 @@ store (SURVEY.md §2.A6/A11):
   uncommitted leftover and is never read.
 - resume: the resume unit is (gen, bucket) — a re-run of a killed
   write produces only the missing bucket files, found by a set lookup
-  against the committed manifest (the A11 anti-join, driver-cheap:
-  16 ids per generation, not n_fingerprints rows).
+  against the manifest's committed names on the driver (the A11
+  pattern, driver-cheap: 16 ids per generation, not n_fingerprints
+  rows).
 
 Scale shape: fingerprints are 32 hex chars, no text; a generation's
 write is one hash exchange on the bucket nibble; the read-back is a
@@ -30,6 +31,8 @@ manifest-filtered parquet scan. The store for a 100 TB corpus is
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,13 +65,11 @@ def write_fingerprints(
     cols = payload_cols if payload_cols is not None else ["fp"]
     key = bucket_col if bucket_col is not None else F.substring("fp", 1, 1)
     gen_i = int(gen)
-    done = (
-        manifest.committed_ids(
-            spark, root, rf"^gen={gen_i}/b=([0-9a-f])/part\.parquet$"
-        )
-        if resume
-        else set()
-    )
+    root_str = str(root)
+    done = set()
+    if resume:
+        name = re.compile(rf"gen={gen_i}/b=([0-9a-f])/part\.parquet")
+        done = manifest.committed_ids(*_pa_fs(root_str), name)
     # the file-bucket key lives in an internal column so a PAYLOAD
     # column named "bucket" (the signature store's LSH bucket) is
     # never clobbered by the store's own partitioning key
@@ -76,7 +77,6 @@ def write_fingerprints(
     if done:
         todo = todo.filter(~F.col("_store_bucket").isin(*sorted(done)))
 
-    root_str = str(root)
 
     def _write_one(pdf):
         import pandas as pd
@@ -124,27 +124,14 @@ def write_fingerprints(
 
 
 def read_fingerprints(spark: SparkSession, root: str) -> DataFrame:
-    """Committed-only read-back of EVERY generation: parquet scan with
-    ``gen``/``b`` as partition columns (the bucket dir key is ``b``, not ``fp`` — a dir named fp= would collide with the fp DATA column during partition discovery), semi-joined against the
-    manifest on the file's relative path so a killed writer's stray
+    """Committed-only read-back of EVERY generation: a parquet scan of
+    exactly the files the manifest commits (``manifest.read_committed``)
+    with ``gen``/``b`` as partition columns (the bucket dir key is
+    ``b``, not ``fp`` — a dir named fp= would collide with the fp DATA
+    column during partition discovery), so a killed writer's stray
     file is never read as data. Raises if nothing was ever committed
     (reading an uncommitted store as "empty" would silently pass every
     increment as new)."""
     from hortacloud_importer_spark.sources import manifest
 
-    # the store is written executor-side, OUTSIDE Spark's own writers,
-    # and this path is read once per GENERATION: without the refresh,
-    # the session FileStatusCache pins the first read's listings (data
-    # dirs AND the _manifest shard dir read below) and a later read
-    # never discovers the new generation (observed: the
-    # post-increment read-back missed generation 1's commit)
-    spark.catalog.refreshByPath(root)
-    committed = manifest.committed_files_df(spark, root)
-    if committed is None:
-        raise FileNotFoundError(
-            f"no manifest under {root}: refusing to read an "
-            "uncommitted fingerprint store as data"
-        )
-    return manifest.committed_only(
-        spark.read.parquet(root), committed, root, F.input_file_name()
-    )
+    return manifest.read_committed(spark, root, "fingerprint store")

@@ -327,7 +327,9 @@ def tiff_octree_to_ktx(
     # already exists (tiff2octree.py:400-402, per-file os.path.exists);
     # here the work list leaves out every block whose name the OUTPUT
     # manifest commits, so committed blocks are never opened
-    done = manifest.committed_files(out_fs, out_base) if resume else frozenset()
+    done = frozenset()
+    if resume:
+        done = manifest.committed_files(out_fs, out_base) or done
     # path rows, not payloads (round-6 soak: a payload-grouped
     # interleave shuffled ~1 GiB at 2 GiB scale): one row per file, or
     # per block with its channel files when interleaving, handed to

@@ -40,10 +40,11 @@ the engine's operators into exactly that run:
 - commit: the driver appends ONE manifest shard per pass naming the
   paths the kernels returned (sources/manifest.py); the per-level
   summary counts those paths by depth;
-- resume (C4/A11): committed paths are READ as a DataFrame from the
-  manifest shards (spark.read.text — splittable) and cogrouped with
-  the pieces on the subtree key, never materialized as a driver-side
-  set, so resume scales to ~1e7-block stores. The pyramid is always
+- resume (C4/A11): the manifest's committed set is read on the
+  driver and parsed once per build (``manifest.committed_files``,
+  ``parse_block_rel``); each pass hands the names it owns, keyed by
+  subtree, to its kernel as a local relation cogrouped on the subtree
+  key, so a task holds only its own. The pyramid is always
   recomputed from the source and a committed file is never
   rewritten — the distributed dual of the reference's per-block
   existence checks (tiff2octree.py:359-368, 1040-1041).
@@ -64,6 +65,7 @@ from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.sources import manifest
 from hortacloud_importer_spark.sources.block_store import (
+    BlockFile,
     parse_block_rel,
     tiff_block_rel,
 )
@@ -312,7 +314,7 @@ def _pass_levels(block_dims: tuple[int, int, int], roots: bool) -> int:
 
 def _subtree_pass(
     pieces: DataFrame,
-    done: DataFrame | None,
+    done: list[BlockFile],
     out_dir: str,
     nlevels: int,
     lo: int,
@@ -340,10 +342,13 @@ def _subtree_pass(
     halved when every block dim is even (8x fewer bytes in the next
     shuffle), whole otherwise.
 
-    ``done`` (rel paths of the store's committed files, or None) is
-    cogrouped on the same key, so a task skips its committed files
-    without any driver-side set: the pyramid is always recomputed
-    from the source, a committed file is never rewritten."""
+    ``done`` (the store's committed block files, parsed once per
+    build) gives the pass the committed names of the levels it
+    writes, keyed on the driver by the subtree that owns them. That local relation is cogrouped on
+    the same key, so a task gets only its own names and skips those
+    files; a pass that owns none skips the cogroup. The pyramid is
+    always recomputed from the source, and a committed file is never
+    rewritten."""
     import pandas as pd
 
     span = hi - lo
@@ -433,28 +438,21 @@ def _subtree_pass(
         F.col("channel"),
     ]
     grouped = pieces.groupBy(*keys)
-    if done is None:
-        return grouped.applyInPandas(
-            lambda key, pdf: build(key, pdf, frozenset()), _PASS_SCHEMA
-        )
     # committed files of the levels this pass writes, keyed by the
     # subtree that owns them: a level-L coordinate shifts up hi - L
     # levels, and L = nlevels - 1 - depth
-    shift = hi - nlevels + 1
-
-    def owned(batches):
-        for pdf in batches:
-            rows = []
-            for f in map(parse_block_rel, pdf["rel"]):
-                if f is not None and first <= nlevels - 1 - f.depth <= hi:
-                    up = shift + f.depth
-                    rows.append(
-                        (f.rel, f.zi >> up, f.yi >> up, f.xi >> up, f.channel)
-                    )
-            yield pd.DataFrame(rows, columns=["rel", "gz", "gy", "gx", "channel"])
-
-    committed = done.mapInPandas(
-        owned, "rel string, gz int, gy int, gx int, channel int"
+    owned = [
+        (f.rel, f.zi >> up, f.yi >> up, f.xi >> up, f.channel)
+        for f in done
+        if 0 <= (up := f.depth + hi - nlevels + 1) <= hi - first
+    ]
+    if not owned:
+        return grouped.applyInPandas(
+            lambda key, pdf: build(key, pdf, frozenset()), _PASS_SCHEMA
+        )
+    committed = pieces.sparkSession.createDataFrame(
+        pd.DataFrame(owned, columns=["rel", "gz", "gy", "gx", "channel"]),
+        "rel string, gz int, gy int, gx int, channel int",
     )
     return grouped.cogroup(
         committed.groupBy("gz", "gy", "gx", "channel")
@@ -720,6 +718,8 @@ def build_octree(
     KTX pass reads first (ktx_from_rendered_tiff.py:34-48) —
     ``pipelines.ktx.tiff_octree_to_ktx`` picks it up automatically.
     """
+    import pandas as pd
+
     if filter_ not in FILTERS and filter_ not in KERNELS:
         raise ValueError(
             f"unknown filter {filter_!r}; have {FILTERS + tuple(KERNELS)}"
@@ -755,10 +755,12 @@ def build_octree(
             f"kernel filter {filter_!r} needs even block dims, got {block_dims}"
         )
 
-    # committed side as a DataFrame (None = no manifest yet): each
-    # subtree task gets its own committed paths by cogroup, so the set
-    # is never materialized driver-side
-    done = manifest.committed_files_df(spark, out_dir) if resume else None
+    # the committed block files, read and parsed once per build; each
+    # pass cogroups the names it owns with its subtrees, so a task
+    # holds only its own
+    filesystem, base = _pa_fs(out_dir)
+    committed = manifest.committed_files(filesystem, base) if resume else None
+    done = [f for f in map(parse_block_rel, committed or ()) if f is not None]
     if isinstance(source, str) or channels_known:
         # channel count is a scan parameter, not data — don't pay an
         # aggregate over the whole volume to rediscover it. DataFrame
@@ -795,7 +797,6 @@ def build_octree(
     # next pass starts from the group roots. The source is scanned once;
     # a pass's output (paths + roots, 8^s times smaller than its input)
     # is persisted only when another pass reads it.
-    filesystem, base = _pa_fs(out_dir)
     written = [0] * nlevels
     lo, roots, prev = 0, False, None
     while True:
@@ -836,6 +837,10 @@ def build_octree(
         )
 
         write_transform_txt(out_dir, origin_nm, voxel_size_um, nlevels)
+    # a local relation: collecting the summary runs no job
     return spark.createDataFrame(
-        summary_rows, "level int, n_blocks_written long, n_voxels long"
+        pd.DataFrame(
+            summary_rows, columns=["level", "n_blocks_written", "n_voxels"]
+        ),
+        "level int, n_blocks_written long, n_voxels long",
     )

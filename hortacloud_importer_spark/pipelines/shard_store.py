@@ -14,8 +14,9 @@ discipline as the octree block store (SURVEY.md §2.A6/A11):
   (sources/manifest.py — the Delta-log pattern); a file is data only
   if the manifest says so, so a killed job's stray ``index.parquet``
   is inert to readers;
-- resume: an ANTI-JOIN of the wanted shard ids against the committed
-  manifest (the A11 pattern) — a re-run writes only missing shards.
+- resume: the wanted shard ids less the committed ones, read from the
+  manifest on the driver (the A11 pattern) — a re-run writes only
+  missing shards.
 
 Scale shape: the index is ~1 fragment row per 512 tokens (0.2% of
 corpus rows, no text), the deal is the map-side :func:`shard_deal`,
@@ -28,10 +29,14 @@ only the n_shards accounting rows and the manifest commit.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _INDEX_COLS = ["seq_id", "doc_id", "seq_off", "doc_off", "n_tok", "u"]
+# a committed shard file's name; its group is the shard id
+_SHARD_FILE = re.compile(r"shard=(\d+)/index\.parquet")
 
 
 def shard_index(
@@ -71,23 +76,18 @@ def write_shard_store(
     written THIS run (empty when everything was already committed).
 
     The resume filter is driver-cheap by design: shard ids are the
-    resume unit (n_shards ints, not n_fragments rows), so the
-    anti-join is a set lookup folded into a pushable filter — the
-    committed SET of fragment rows never materializes anywhere.
+    resume unit (n_shards ints, not n_fragments rows), taken from the
+    manifest's committed names with no Spark job and folded into a
+    pushable filter.
     """
     from hortacloud_importer_spark.sources import manifest
     from hortacloud_importer_spark.sources.datasource import _pa_fs
 
-    done = (
-        manifest.committed_ids(spark, root, r"^shard=(\d+)/index\.parquet$")
-        if resume
-        else set()
-    )
+    root_str = str(root)
+    done = manifest.committed_ids(*_pa_fs(root_str), _SHARD_FILE) if resume else set()
     todo = index
     if done:
         todo = index.filter(~F.col("shard").isin(*sorted(int(k) for k in done)))
-
-    root_str = str(root)
 
     def _write_one(pdf):
         import pandas as pd
@@ -152,23 +152,11 @@ def write_shard_store(
 
 
 def read_shard_store(spark: SparkSession, root: str) -> DataFrame:
-    """Committed-only read-back: parquet scan over the store (the
-    ``shard=k`` directories are parquet partition columns; Spark
-    ignores the ``_manifest`` dir like any ``_``-prefixed path),
-    semi-joined against the manifest on the file's relative path so an
-    uncommitted leftover from a killed write is never read as data —
-    the same rule every block-store read applies."""
+    """Committed-only read-back: a parquet scan of exactly the files
+    the manifest commits, the ``shard=k`` directories as a partition
+    column (``manifest.read_committed``), so an uncommitted leftover
+    from a killed write is never read as data — the same rule every
+    block-store read applies."""
     from hortacloud_importer_spark.sources import manifest
 
-    committed = manifest.committed_files_df(spark, root)
-    if committed is None:
-        # checked BEFORE the parquet scan: an empty/foreign dir would
-        # otherwise surface as a schema-inference AnalysisException
-        # instead of the real problem (nothing committed here)
-        raise FileNotFoundError(
-            f"no manifest under {root}: refusing to read an "
-            "uncommitted shard store as data"
-        )
-    return manifest.committed_only(
-        spark.read.parquet(root), committed, root, F.input_file_name()
-    )
+    return manifest.read_committed(spark, root, "shard store")

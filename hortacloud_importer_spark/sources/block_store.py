@@ -12,8 +12,9 @@ metadata probe, the windowed read, and the KTX pass's work list and
 source reclaim (pipelines/ktx.py) are all built on those rows, and a
 kernel gets them as one local relation (:func:`block_frame`). The
 build's resume (pipelines/octree.py) parses the manifest's committed
-names with the same :func:`parse_block_rel`. So windowed reads and
-probes prune files on path-derived coordinates before any payload is
+set (``manifest.committed_files``, the one reader every store shares)
+once per build with the same :func:`parse_block_rel`. So windowed
+reads and probes prune files on path-derived coordinates before any payload is
 opened (the reference's windowed region read, tiff2octree.py:281-292),
 and every read keeps only committed files.
 """
@@ -110,8 +111,8 @@ def block_files(root: str) -> list[BlockFile]:
     rels = (
         i.path[len(base) + 1 :] for i in infos if i.type == pafs.FileType.File
     )
-    if manifest.has_manifest(filesystem, base):
-        committed = manifest.committed_files(filesystem, base)
+    committed = manifest.committed_files(filesystem, base)
+    if committed is not None:
         rels = (rel for rel in rels if rel in committed)
     return sorted(f for f in map(parse_block_rel, rels) if f is not None)
 

@@ -3,8 +3,7 @@
 The reference marks committed work with accumulating sentinel files
 (tiff2octree.py:1328-1355); rounds 2-4 of this engine folded that into
 a single merged ``_MANIFEST.json``, rewritten in full on every commit.
-That rewrite is O(store) per commit and the resume path materialized
-the whole committed set on the driver — fine at 1e5 blocks, a
+That rewrite is O(store) per commit — fine at 1e5 blocks, a
 bottleneck at the ~1e7 blocks a 100 TB octree implies. This module is
 the Delta-log pattern instead: every commit appends ONE immutable
 shard pair under ``{root}/_manifest/`` and nothing is ever rewritten:
@@ -22,33 +21,32 @@ shard pair under ``{root}/_manifest/`` and nothing is ever rewritten:
     DESIGN: a resumed build re-encounters and re-skips the same
     all-zero blocks, so summing shards counts such a block once per
     run — callers wanting lifetime totals must dedupe on files, which
-    ``committed_files_df().distinct()`` does.
+    the committed set does.
 
 Committed set = union of every shard, plus a legacy ``_MANIFEST.json``
-if the store predates sharding. It is read in one of two forms:
+if the store predates sharding. :func:`committed_files` is its one
+reader: one listing of the shard directory on the driver, no Spark
+job. Every store's driver already collects each name it writes to
+commit it, so the set costs no more driver memory than that:
 
-- :func:`committed_files`, a driver-side set. The octree block store
-  and the KTX store use it (sources/block_store.py::block_files, the
-  KTX resume): their driver already lists every block file and
-  collects every written name to commit it, so the set costs no more
-  driver memory than that, and no Spark job.
-- :func:`committed_files_df`, ``spark.read.text`` over the shard
-  directory, splittable and distributed. The build's resume cogroups
-  it with the subtree kernel, and the shard and fingerprint stores
-  semi-join their scans with it (:func:`committed_only`) or read
-  their resume ids from it (:func:`committed_ids`).
+- the octree block store lists its files against it
+  (sources/block_store.py::block_files), and the KTX pass leaves out
+  the blocks it names;
+- the octree build parses it once per build and hands each pass the
+  names that pass owns, cogrouped with the subtree kernel;
+- the shard and fingerprint stores take their resume ids from it
+  (:func:`committed_ids`) and read back exactly the files it names
+  (:func:`read_committed`).
 
 Every file sink in the engine commits through this module in four
 steps: write each data file with :func:`staged_output`, append one
-shard with :func:`write_commit`, resume from the committed set (or
-:func:`committed_ids` when files are named by a resume id), and read
-back only committed files.
+shard with :func:`write_commit`, resume from the committed set, and
+read back only committed files.
 """
 
 from __future__ import annotations
 
 import json
-import re
 import uuid
 from contextlib import contextmanager
 
@@ -147,33 +145,60 @@ def _legacy_manifest(filesystem, base: str) -> dict | None:
         return None
 
 
-def has_manifest(filesystem, base: str) -> bool:
-    if any(
-        i.base_name.endswith(".files.txt") for i in _shard_infos(filesystem, base)
-    ):
-        return True
-    return _legacy_manifest(filesystem, base) is not None
-
-
-def committed_files(filesystem, base: str) -> set[str]:
-    """The committed set on the driver (see the module docstring for
-    which stores read it this way)."""
-    out: set[str] = set()
-    for info in _shard_infos(filesystem, base):
-        if not info.base_name.endswith(".files.txt"):
-            continue
-        with filesystem.open_input_stream(info.path) as fh:
-            out.update(line for line in fh.read().decode().splitlines() if line)
+def committed_files(filesystem, base: str) -> set[str] | None:
+    """The committed set, or None when the store has no manifest at
+    all (a fresh store, or a foreign one such as the reference's own
+    output): one listing of the shard directory, on the driver."""
+    shards = [
+        i.path
+        for i in _shard_infos(filesystem, base)
+        if i.base_name.endswith(".files.txt")
+    ]
     legacy = _legacy_manifest(filesystem, base)
-    if legacy:
-        out.update(legacy.get("files", []))
+    if not shards and legacy is None:
+        return None
+    out = set(legacy.get("files", [])) if legacy else set()
+    for path in shards:
+        with filesystem.open_input_stream(path) as fh:
+            out.update(line for line in fh.read().decode().splitlines() if line)
     return out
+
+
+def committed_ids(filesystem, base: str, pattern) -> set[str]:
+    """Resume ids of a store whose files are named by id: the first
+    group of ``pattern`` (a compiled regex) over every committed name
+    it fully matches; empty for a fresh store. A data file no shard
+    names is an uncommitted leftover, so it never counts as done."""
+    matches = map(pattern.fullmatch, committed_files(filesystem, base) or ())
+    return {m.group(1) for m in matches if m}
+
+
+def read_committed(spark, root: str, store: str):
+    """A parquet store's committed files as one DataFrame: a scan of
+    exactly the paths the manifest names, its ``key=value``
+    directories discovered as partition columns under ``root``
+    (``basePath``). A killed writer's leftover is never listed, so it
+    is never read as data. Raises FileNotFoundError when ``root`` has
+    no manifest: read as empty, an uncommitted store would pass every
+    increment as new."""
+    from hortacloud_importer_spark.sources.datasource import _pa_fs
+
+    root = str(root).rstrip("/")
+    committed = committed_files(*_pa_fs(root))
+    if committed is None:
+        raise FileNotFoundError(
+            f"no manifest under {root}: refusing to read an "
+            f"uncommitted {store} as data"
+        )
+    return spark.read.option("basePath", root).parquet(
+        *(f"{root}/{rel}" for rel in sorted(committed))
+    )
 
 
 def run_totals(filesystem, base: str) -> dict:
     """Sum of per-run shard summaries (+ legacy counters). n_skipped is
     a sum of PER-RUN counts (see module docstring); n_files may count
-    a rewritten file once per commit — use committed_files_df for the
+    a rewritten file once per commit — use committed_files for the
     distinct set."""
     n_files = 0
     n_skipped = 0
@@ -186,95 +211,3 @@ def run_totals(filesystem, base: str) -> dict:
         n_files += len(legacy.get("files", []))
         n_skipped += int(legacy.get("n_skipped", 0))
     return {"n_files": n_files, "n_skipped": n_skipped}
-
-
-def committed_files_df(spark, root: str):
-    """The committed set as a DataFrame (column ``rel``), or None when
-    the store has no manifest at all.
-
-    Shards load via ``spark.read.text`` — line-splittable, so a
-    ~1e7-path manifest parses across executors and feeds a resume
-    anti-join without ever materializing driver-side. The legacy
-    single-JSON form (pre-shard stores only) is parsed driver-side:
-    Spark's hidden-file filter drops ``_``-prefixed files from scans,
-    and any legacy store was already bounded by the old whole-file
-    rewrite, so its set is small by construction."""
-    from pyspark.sql import functions as F
-
-    from hortacloud_importer_spark.sources.datasource import _pa_fs
-
-    filesystem, base = _pa_fs(root)
-    has_shards = any(
-        i.base_name.endswith(".files.txt") for i in _shard_infos(filesystem, base)
-    )
-    legacy = _legacy_manifest(filesystem, base)
-    frames = []
-    if has_shards:
-        frames.append(
-            # directory + pathGlobFilter, NOT a glob path: Spark stats
-            # the un-globbed literal while probing for a streaming-sink
-            # metadata dir and warn-logs a FileNotFoundException stack
-            # trace on every read of a glob that names no real file
-            spark.read.option("pathGlobFilter", "*.files.txt")
-            .text(f"{root.rstrip('/')}/{SHARD_DIR}")
-            .filter(F.length("value") > 0)
-            .select(F.col("value").alias("rel"))
-        )
-    if legacy is not None and legacy.get("files"):
-        frames.append(
-            spark.createDataFrame(
-                [(f,) for f in legacy["files"]], "rel string"
-            )
-        )
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def committed_ids(spark, root: str, pattern: str) -> set[str]:
-    """Resume ids of a store whose files are named by id: the distinct
-    first group of ``pattern`` over the committed relative paths
-    (empty for a fresh store). A data file no shard names is an
-    uncommitted leftover, so it never counts as done."""
-    from pyspark.sql import functions as F
-
-    committed = committed_files_df(spark, root)
-    if committed is None:
-        return set()
-    ids = (
-        committed.select(F.regexp_extract("rel", pattern, 1).alias("id"))
-        .filter(F.col("id") != "")
-        .distinct()
-        .collect()
-    )
-    return {r["id"] for r in ids}
-
-
-def committed_only(df, committed, root: str, path):
-    """Rows of ``df`` whose file — ``path``, a Column holding the full
-    path or URI of a file under ``root`` — is in ``committed`` (the
-    :func:`committed_files_df` of ``root``): a semi-join on the
-    root-relative path, so a killed writer's leftover is never read as
-    data. No broadcast hint: the committed side can be ~1e7 paths, and
-    AQE broadcasts it when it is small."""
-    return (
-        df.withColumn("rel", relative_path(path, root))
-        .join(committed, "rel", "left_semi")
-        .drop("rel")
-    )
-
-
-def relative_path(path, root: str):
-    """The part of ``path`` — a Column holding the full path or URI of
-    a file under ``root``, as Spark's scans report it — after
-    ``root``: the scheme-independent name the manifest commits.
-    ``root`` may be a bare path or a URI (``file:///x`` is listed as
-    ``file:/x``, ``s3://b/x`` as ``s3a://b/x``), so it is matched
-    without its scheme and query."""
-    from pyspark.sql import functions as F
-
-    bare = re.sub(r"^[A-Za-z][\w+.-]*://+", "/", root.partition("?")[0])
-    return F.element_at(F.split(path, re.escape(f"{bare.rstrip('/')}/")), -1)

@@ -26,78 +26,11 @@ from collections import deque
 
 import numpy as np
 
-from hortacloud_importer_spark.volume.downsample import mipmap_dimension
-
-
-def _np_child_groups(in_len: int) -> list[list[int]]:
-    """Parent indices owned by each child along one dimension (the
-    pivot rule of volume/downsample.py:child_index, materialized)."""
-    out_len = mipmap_dimension(1, in_len)
-    groups: list[list[int]] = [[] for _ in range(out_len)]
-    if in_len <= 3 or out_len == 1:
-        for j in range(in_len):
-            groups[0].append(j)
-        return groups
-    if in_len == 2 * out_len:
-        for j in range(in_len):
-            groups[j // 2].append(j)
-        return groups
-    p = out_len // 2
-    for j in range(in_len):
-        if j <= 2 * p + 1:
-            groups[j // 2].append(j)
-        elif j == 2 * p + 2:
-            groups[p].append(j)
-        else:
-            groups[(j - 1) // 2].append(j)
-    return groups
-
-
-def _reduce(vals: np.ndarray, filter_: str) -> int:
-    nz = vals[vals != 0]
-    if filter_ == "mean":
-        return int(nz.mean()) if nz.size else 0
-    if filter_ == "max":
-        return int(nz.max()) if nz.size else 0
-    # arthur: 2nd largest incl. zeros, falling back to the largest
-    s = np.sort(vals)[::-1]
-    return int(s[1]) if len(s) > 1 and s[1] != 0 else int(s[0])
-
-
-def downsample_slice_stack(
-    parents: np.ndarray, filter_: str = "arthur"
-) -> np.ndarray:
-    """Combine a stack of 1-3 parent z-slices (n, h, w) into one child
-    slice (h', w'). Even dims use the vectorized reshape fast path;
-    odd dims fall back to the general contributor gather."""
-    n, h, w = parents.shape
-    gy, gx = _np_child_groups(h), _np_child_groups(w)
-    oh, ow = len(gy), len(gx)
-    if h == 2 * oh and w == 2 * ow:  # vectorized even path
-        sub = (
-            parents.reshape(n, oh, 2, ow, 2)
-            .transpose(1, 3, 0, 2, 4)
-            .reshape(oh, ow, n * 4)
-            .astype(np.float64)
-        )
-        if filter_ in ("mean", "max"):
-            sub[sub == 0] = np.nan
-            with np.errstate(invalid="ignore"):
-                out = (
-                    np.nanmean(sub, axis=2)
-                    if filter_ == "mean"
-                    else np.nanmax(sub, axis=2)
-                )
-            return np.nan_to_num(out).astype(np.int64)
-        s = np.sort(sub, axis=2)
-        first, second = s[:, :, -1], s[:, :, -2]
-        second = np.where(second == 0, first, second)
-        return second.astype(np.int64)
-    out = np.zeros((oh, ow), dtype=np.int64)
-    for iy, ys in enumerate(gy):
-        for ix, xs in enumerate(gx):
-            out[iy, ix] = _reduce(parents[:, ys][:, :, xs].ravel(), filter_)
-    return out
+from hortacloud_importer_spark.volume.downsample import (
+    mipmap_dimension,
+    np_child_indices,
+    np_halve,
+)
 
 
 class MipmapCascade:
@@ -112,11 +45,14 @@ class MipmapCascade:
             d = tuple(mipmap_dimension(1, x) for x in d)
             self.level_dims.append(d)
         self.nlevels = len(self.level_dims)
-        # per level >= 1: parent groups along z, deque of pending parents
-        self.zgroups = [
-            _np_child_groups(self.level_dims[lv - 1][0])
-            for lv in range(1, self.nlevels)
-        ]
+        # per level >= 1: the parent z indices each daughter slice owns
+        # (np_child_indices, grouped), deque of pending parents
+        self.zgroups = []
+        for lv in range(1, self.nlevels):
+            child = np_child_indices(self.level_dims[lv - 1][0])
+            self.zgroups.append(
+                [np.flatnonzero(child == c) for c in range(child[-1] + 1)]
+            )
         self.buffers: list[deque] = [deque(maxlen=3) for _ in range(self.nlevels - 1)]
         self.seen = [0] * (self.nlevels - 1)  # parents consumed per level
         self.emitted = [0] * (self.nlevels - 1)  # daughters emitted per level
@@ -140,7 +76,7 @@ class MipmapCascade:
             return
         k = len(groups[child])  # 1, 2, or 3 (thick middle) parents
         parents = np.stack(list(self.buffers[li])[-k:])
-        daughter = downsample_slice_stack(parents, self.filter_)
+        daughter = np_halve(parents, self.filter_)[0]
         self.emitted[li] += 1
         out.append((level, child, daughter))
         self._feed_level(level + 1, child, daughter, out)

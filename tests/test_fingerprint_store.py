@@ -93,6 +93,18 @@ def test_uncommitted_leftover_is_inert(spark, fps, tmp_path_factory):
     }
 
 
+def test_read_back_scans_committed_files_only(spark, fps, tmp_path_factory):
+    """The read-back is one parquet scan of the files the manifest
+    names: no join against the manifest and no text scan of it."""
+    root = str(tmp_path_factory.mktemp("fp_plan") / "store")
+    write_fingerprints(spark, fps, root, gen=0)
+    back = read_fingerprints(spark, root)
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+    assert "Join" not in plan and "FileScan text" not in plan
+    assert back.count() == fps.distinct().count()
+
+
 def test_files_hold_sorted_distinct_fingerprints(
     spark, fps, tmp_path_factory
 ):

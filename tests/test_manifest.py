@@ -1,11 +1,13 @@
 """Sharded commit manifest (sources/manifest.py): append-only shards,
-legacy fold-in, distributed committed-set reads, and the
-leftover-exclusion contract for read_tiff_block_store."""
+legacy fold-in, the one driver-side committed-set reader and the
+build's resume over it, and the leftover-exclusion contract for
+read_tiff_block_store."""
 
 from __future__ import annotations
 
-import json
 import io
+import json
+import os
 
 import numpy as np
 from pyarrow import fs as pafs
@@ -38,17 +40,19 @@ def test_shards_accumulate_without_rewrites(tmp_path):
     }
     totals = manifest.run_totals(_FS, base)
     assert totals == {"n_files": 3, "n_skipped": 3}
-    assert manifest.has_manifest(_FS, base)
 
 
-def test_no_manifest_returns_none_df(spark, tmp_path):
+def test_no_manifest_returns_none_df(tmp_path):
+    """A store with no manifest at all reads as None, not as an empty
+    committed set: a foreign store keeps all its files."""
     base = str(tmp_path / "empty")
     _FS.create_dir(base, recursive=True)
-    assert not manifest.has_manifest(_FS, base)
-    assert manifest.committed_files_df(spark, base) is None
+    assert manifest.committed_files(_FS, base) is None
+    manifest.write_commit(_FS, base, [])
+    assert manifest.committed_files(_FS, base) == set()
 
 
-def test_legacy_manifest_folds_into_committed_set(spark, tmp_path):
+def test_legacy_manifest_folds_into_committed_set(tmp_path):
     base = str(tmp_path / "legacy_store")
     _FS.create_dir(base, recursive=True)
     (tmp_path / "legacy_store" / "_MANIFEST.json").write_text(
@@ -58,34 +62,12 @@ def test_legacy_manifest_folds_into_committed_set(spark, tmp_path):
 
     assert manifest.committed_files(_FS, base) == {"old/a.tif", "new/b.tif"}
     assert manifest.run_totals(_FS, base) == {"n_files": 2, "n_skipped": 4}
-    rows = sorted(
-        r["rel"] for r in manifest.committed_files_df(spark, base).collect()
-    )
-    assert rows == ["new/b.tif", "old/a.tif"]
 
 
-def test_committed_set_df_is_file_scan_backed(spark, tmp_path):
-    """The resume side must come from a distributed text scan of the
-    shards — never a createDataFrame over a driver-side set."""
-    base = str(tmp_path / "scan_store")
-    _FS.create_dir(base, recursive=True)
-    manifest.write_commit(_FS, base, [f"{d}/default.0.tif" for d in "1234"])
-    df = manifest.committed_files_df(spark, base)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan text" in plan
-    assert "LocalTableScan" not in plan and "scan ExistingRDD" not in plan
-    assert {r["rel"] for r in df.collect()} == {
-        f"{d}/default.0.tif" for d in "1234"
-    }
-
-
-def test_build_octree_resume_side_reads_shards_distributed(
-    spark, tmp_path, monkeypatch
-):
-    """End-to-end: the resume side of build_octree's subtree kernel
-    consumes the shard text scan, cogrouped on the subtree key (no
-    driver-side committed set, no broadcast-from-local-collection)."""
-    from hortacloud_importer_spark.pipelines import build_octree, octree
+def _committed_voxel_store(spark, tmp_path):
+    """A 4^3 volume built into a two-level store: the voxels and the
+    store."""
+    from hortacloud_importer_spark.pipelines import build_octree
 
     rng = np.random.default_rng(5)
     vol = rng.integers(1, 250, (4, 4, 4))
@@ -100,7 +82,37 @@ def test_build_octree_resume_side_reads_shards_distributed(
     )
     out = str(tmp_path / "oct")
     build_octree(spark, voxels, out, nlevels=2, filter_="max", dims=(4, 4, 4))
+    return voxels, out
 
+
+def test_fully_committed_resume_writes_nothing(spark, tmp_path):
+    """A resume of a fully committed store writes no file: every
+    committed block keeps its mtime and the summary counts 0 blocks
+    written per level."""
+    from hortacloud_importer_spark.pipelines import build_octree
+
+    voxels, out = _committed_voxel_store(spark, tmp_path)
+    committed = manifest.committed_files(_FS, out)
+    assert len(committed) == 8 + 1
+    kept = {p: os.stat(f"{out}/{p}").st_mtime_ns for p in committed}
+    resumed = build_octree(
+        spark, voxels, out, nlevels=2, filter_="max", dims=(4, 4, 4)
+    ).collect()
+    assert [r["n_blocks_written"] for r in resumed] == [0, 0]
+    assert manifest.committed_files(_FS, out) == committed
+    assert {p: os.stat(f"{out}/{p}").st_mtime_ns for p in committed} == kept
+
+
+def test_build_octree_resume_cogroups_the_driver_set(
+    spark, tmp_path, monkeypatch
+):
+    """The resume side of build_octree's subtree kernel is the
+    manifest's committed set, read and parsed on the driver and
+    cogrouped on the subtree key as a local relation: no text scan of
+    the shards, and nothing written."""
+    from hortacloud_importer_spark.pipelines import build_octree, octree
+
+    voxels, out = _committed_voxel_store(spark, tmp_path)
     plans = []
     run_pass = octree._subtree_pass
 
@@ -115,9 +127,7 @@ def test_build_octree_resume_side_reads_shards_distributed(
     ).collect()
     (plan,) = plans
     assert "FlatMapCoGroupsInPandas" in plan
-    assert "FileScan text" in plan
-    assert "LocalTableScan" not in plan
-    # everything committed -> resume writes nothing
+    assert "FileScan text" not in plan
     assert [r["n_blocks_written"] for r in resumed] == [0, 0]
 
 
@@ -314,7 +324,7 @@ def test_write_commit_object_store_single_put(tmp_path):
     reader sees the whole commit or none of it."""
     fs = _MockObjectStore()
     base = "bucket/store"
-    assert not manifest.has_manifest(fs, base)
+    assert manifest.committed_files(fs, base) is None
     manifest.write_commit(fs, base, ["a/x.tif", "b/y.tif"], n_skipped=3)
 
     shard_puts = [p for p in fs.puts if p.endswith(".files.txt")]

@@ -21,6 +21,7 @@ Two independent proofs, matching the engine's two IO stacks:
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 
@@ -125,21 +126,18 @@ def test_s3_tiff_blocks_sink_writes_multipart(spark):
             assert np.array_equal(pages[..., 0].astype(np.int64), blk), rel
 
 
-def test_s3_resume_probe_fresh_store(spark):
+def test_s3_resume_probe_fresh_store():
     """A11 resume: the pyarrow existence probe recognizes a fresh
     object-store prefix (nothing committed -> run everything) without
-    needing a JVM S3 connector: no manifest, no committed-set
-    DataFrame, no committed ids."""
+    needing a JVM S3 connector: no manifest and no committed ids."""
     from hortacloud_importer_spark.sources import manifest
 
     with S3Stub() as s3:
         s3.store.buckets.add("rs")
         root = s3.uri("rs", "store")
         filesystem, base = _pa_fs(root)
-        assert not manifest.has_manifest(filesystem, base)
-        assert manifest.committed_files(filesystem, base) == set()
-        assert manifest.committed_files_df(spark, root) is None
-        assert manifest.committed_ids(spark, root, r"(.+)") == set()
+        assert manifest.committed_files(filesystem, base) is None
+        assert manifest.committed_ids(filesystem, base, re.compile("(.+)")) == set()
         # the probe only reads: the fresh prefix stays empty
         assert not [k for (b, k) in s3.store.objects if b == "rs"]
 

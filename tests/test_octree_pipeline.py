@@ -464,7 +464,7 @@ def test_slice_with_other_dims_fails_before_any_commit(spark, tmp_path):
     msg = str(err.value)
     assert "ValueError" in msg and "default.0.005.tif" in msg, msg[-2000:]
     assert "(40, 24)" in msg and "(32, 32)" in msg, msg[-2000:]
-    assert not manifest.has_manifest(_FS, out)
+    assert manifest.committed_files(_FS, out) is None
 
 
 def test_truncated_slice_mid_volume_fails_before_any_commit(spark, tmp_path):
@@ -485,7 +485,7 @@ def test_truncated_slice_mid_volume_fails_before_any_commit(spark, tmp_path):
         build_octree(spark, str(tmp_path / "cut"), out, nlevels=2).count()
     msg = str(err.value)
     assert f"TiffParseError: {bad}: " in msg, msg[-2000:]
-    assert not manifest.has_manifest(_FS, out)
+    assert manifest.committed_files(_FS, out) is None
 
 
 def test_gap_in_z_fails_before_any_commit(spark, tmp_path):
@@ -503,7 +503,7 @@ def test_gap_in_z_fails_before_any_commit(spark, tmp_path):
         build_octree(spark, str(tmp_path / "gap"), out, nlevels=2)
     msg = str(err.value)
     assert "default.0.003.tif" in msg and "default.0.005.tif" in msg, msg
-    assert not manifest.has_manifest(_FS, out)
+    assert manifest.committed_files(_FS, out) is None
 
     d = tmp_path / "gap2"
     d.mkdir()

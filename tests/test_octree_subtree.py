@@ -223,13 +223,14 @@ def test_values_over_dtype_range_fail_the_build(spark, tmp_path):
         build_octree(
             spark, v, out, nlevels=2, filter_="max", dims=(4, 4, 4), channels=1
         ).count()
-    assert manifest.committed_files(_FS, out) == set()
+    assert manifest.committed_files(_FS, out) is None
 
 
 def test_single_pass_build_plans_one_exchange(spark, tmp_path, monkeypatch):
     """The golden single-channel input builds in one pass: one manifest
     shard, and the pass's plan has exactly one exchange — the tile
-    shuffle into the subtree kernel — and no cogroup (fresh store)."""
+    shuffle into the subtree kernel — and no cogroup (fresh store).
+    The returned summary is a local relation."""
     from tests.test_golden_store import _volume, _write_slices as _slices
 
     plans = []
@@ -244,7 +245,9 @@ def test_single_pass_build_plans_one_exchange(spark, tmp_path, monkeypatch):
     slices = str(tmp_path / "slices")
     _slices(slices, [_volume(5, (16, 32, 32), np.s_[:8, :16, 8:24])])
     out = str(tmp_path / "store")
-    build_octree(spark, slices, out, nlevels=3, filter_="arthur").count()
+    summary = build_octree(spark, slices, out, nlevels=3, filter_="arthur")
+    # the per-level summary is a local relation: collecting it runs no job
+    assert "LocalTableScan" in summary._jdf.queryExecution().executedPlan().toString()
     assert len(_shards(out)) == 1
     (plan,) = plans
     assert plan.count("Exchange") == 1, plan
@@ -376,15 +379,14 @@ def test_ktx_resumes_after_failed_rename_in_the_kernel(spark, tmp_path):
     assert {p: os.stat(f"{ktx}/{p}").st_mtime_ns for p in leaves} == kept
 
 
-def test_build_resumes_after_failed_rename_mid_pass(
-    spark, tmp_path, one_level_passes
-):
-    """A level-1 block whose final name is taken by a directory fails
-    its staged rename partway through the second pass, after the leaf
-    pass committed. Until the resume, the readers see the committed
-    leaves only, not the level-1 files other tasks left behind; once
-    the obstacle is gone, the resume gives the uninterrupted build's
-    files and committed set without touching a committed file."""
+def _resume_after_failed_rename(spark, tmp_path, obstacle, n_committed):
+    """A block whose final name (``obstacle``) is taken by a directory
+    fails its staged rename partway through its pass, after the passes
+    below it committed ``n_committed`` files. Until the resume, the
+    readers see the committed blocks only, not the files other tasks of
+    the failed pass left behind; once the obstacle is gone, the resume
+    gives the uninterrupted build's files and committed set without
+    touching a committed file."""
     from hortacloud_importer_spark.pipelines.ktx import _block_file_groups
     from hortacloud_importer_spark.sources.block_store import (
         read_tiff_block_store,
@@ -400,31 +402,59 @@ def test_build_resumes_after_failed_rename_mid_pass(
     build_octree(spark, slices, whole, nlevels=3, filter_="max").count()
 
     out = str(tmp_path / "store")
-    obstacle = f"{out}/8/default.0.tif"  # level-1 block (1, 1, 1)
-    os.makedirs(obstacle)
+    os.makedirs(f"{out}/{obstacle}")
     with pytest.raises(Exception, match="Is a directory"):
         build_octree(spark, slices, out, nlevels=3, filter_="max")
-    leaves = manifest.committed_files(_FS, out)
-    assert len(_shards(out)) == 1
-    assert len(leaves) == 64 and all(r.count("/") == 2 for r in leaves)
-    leftovers = set(_digests(out)) - leaves
-    assert leftovers and all(r.count("/") == 1 for r in leftovers)
+    failed = obstacle.count("/")  # the depth of the failed pass's files
+    committed = manifest.committed_files(_FS, out) or set()
+    assert len(_shards(out)) == 2 - failed
+    assert len(committed) == n_committed
+    assert all(r.count("/") > failed for r in committed)
+    # the root pass writes one file, the one that failed
+    leftovers = set(_digests(out)) - committed
+    assert bool(leftovers) == (failed > 0)
+    assert all(r.count("/") == failed for r in leftovers)
 
-    back = read_tiff_block_store(spark, out).collect()
-    assert {
-        tiff_block_rel(r["zi"], r["yi"], r["xi"], r["channel"], r["depth"] + 1)
-        for r in back
-    } == leaves
-    assert store_channels(out) == [0]
-    for per_channel in (False, True):
-        groups = _block_file_groups(spark, out, per_channel=per_channel)
-        assert {p for r in groups.collect() for p in r["paths"]} == leaves
+    if committed:
+        back = read_tiff_block_store(spark, out).collect()
+        assert {
+            tiff_block_rel(
+                r["zi"], r["yi"], r["xi"], r["channel"], r["depth"] + 1
+            )
+            for r in back
+        } == committed
+        assert store_channels(out) == [0]
+        for per_channel in (False, True):
+            groups = _block_file_groups(spark, out, per_channel=per_channel)
+            assert {p for r in groups.collect() for p in r["paths"]} == committed
 
-    os.rmdir(obstacle)
-    kept = {p: os.stat(f"{out}/{p}").st_mtime_ns for p in leaves}
+    os.rmdir(f"{out}/{obstacle}")
+    kept = {p: os.stat(f"{out}/{p}").st_mtime_ns for p in committed}
     build_octree(spark, slices, out, nlevels=3, filter_="max").count()
     assert _digests(out) == _digests(whole)
     assert manifest.committed_files(_FS, out) == manifest.committed_files(
         _FS, whole
     )
-    assert {p: os.stat(f"{out}/{p}").st_mtime_ns for p in leaves} == kept
+    assert {p: os.stat(f"{out}/{p}").st_mtime_ns for p in committed} == kept
+
+
+def test_build_resumes_after_failed_rename_mid_pass(
+    spark, tmp_path, one_level_passes
+):
+    """The level-1 block (1, 1, 1) fails, after the leaf pass
+    committed."""
+    _resume_after_failed_rename(spark, tmp_path, "8/default.0.tif", 64)
+
+
+@pytest.mark.parametrize(
+    "obstacle, n_committed",
+    [("8/8/default.0.tif", 0), ("default.0.tif", 64 + 8)],
+    ids=["leaf", "root"],
+)
+def test_build_resumes_after_failed_rename_at_leaf_and_root(
+    spark, tmp_path, one_level_passes, obstacle, n_committed
+):
+    """The leaf block (3, 3, 3) fails in the first pass, so nothing is
+    committed and the store has no manifest yet; the root block fails
+    in the last pass, after the leaves and level 1 committed."""
+    _resume_after_failed_rename(spark, tmp_path, obstacle, n_committed)

@@ -62,6 +62,18 @@ def test_uncommitted_leftover_is_inert(spark, index, tmp_path_factory):
     assert shards == set(range(8))
 
 
+def test_read_back_scans_committed_files_only(spark, index, tmp_path_factory):
+    """The read-back is one parquet scan of the files the manifest
+    names: no join against the manifest and no text scan of it."""
+    root = str(tmp_path_factory.mktemp("store_plan") / "store")
+    write_shard_store(spark, index, root)
+    back = read_shard_store(spark, root)
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+    assert "Join" not in plan and "FileScan text" not in plan
+    assert back.count() == index.count()
+
+
 def test_files_carry_within_shard_read_order(
     spark, index, tmp_path_factory
 ):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from hortacloud_importer_spark.streaming.cascade import (
     MipmapCascade,
-    downsample_slice_stack,
     streaming_cascade,
 )
 from hortacloud_importer_spark.streaming.windows import tumbling_agg
@@ -43,26 +42,6 @@ def test_cascade_kernel_matches_batch_pyramid(dims, filter_):
         for cz in range(want[lv].shape[0]):
             assert (lv, cz) in got, f"level {lv} slice {cz} never emitted"
             assert np.array_equal(got[(lv, cz)], want[lv][cz]), (lv, cz)
-
-
-def test_slice_stack_even_vs_general_path():
-    """The vectorized even path and the contributor gather agree."""
-    rng = np.random.default_rng(5)
-    parents = rng.integers(0, 1 << 16, size=(2, 6, 8)).astype(np.int64)
-    parents[rng.random(size=parents.shape) < 0.4] = 0
-    for filter_ in ("mean", "max", "arthur"):
-        fast = downsample_slice_stack(parents, filter_)
-        slow = np.zeros_like(fast)
-        from hortacloud_importer_spark.streaming.cascade import (
-            _np_child_groups,
-            _reduce,
-        )
-
-        gy, gx = _np_child_groups(6), _np_child_groups(8)
-        for iy, ys in enumerate(gy):
-            for ix, xs in enumerate(gx):
-                slow[iy, ix] = _reduce(parents[:, ys][:, :, xs].ravel(), filter_)
-        assert np.array_equal(fast, slow), filter_
 
 
 def test_streaming_cascade_e2e(spark, tmp_path):

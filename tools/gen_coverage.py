@@ -17,8 +17,8 @@ from hortacloud_importer_spark.registry import all_queries  # noqa: E402
 # §2 rows with no query registration, covered by tests/design instead.
 NON_QUERY_ROWS = {
     "A11": "SURVEY maps existence-check to the C4 resume anti-join "
-    "(join_anti query; the manifest committed set cogrouped into "
-    "build_octree's subtree kernel, sources/manifest.py; "
+    "(join_anti query; the manifest committed set, read on the driver "
+    "and cogrouped into build_octree's subtree kernel, sources/manifest.py; "
     "tests/test_block_store.py, tests/test_pipeline_e2e.py)",
 }
 
