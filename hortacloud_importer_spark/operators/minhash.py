@@ -1,21 +1,28 @@
 """MinHash-LSH and SimHash near-duplicate operators.
 
-Pure Catalyst-expression implementations (no Python UDFs in the hot
-path): shingle/token ids come from xxhash64, permutations are the
-classic (a*x + b) mod p family, and signatures/bands are built with
-built-in aggregate + bit functions. At 100 TB the only shuffles are
-(a) the signature groupBy per document and (b) the band-bucket join,
-whose fan-out is governed by band width — the documents themselves
-are never shuffled.
+MinHash runs as two Arrow kernels around Catalyst exchanges. The
+signature kernel splits each document's text into word 3-grams,
+takes a 28-bit md5 id per shingle (the id any SQL engine reproduces,
+see :func:`portable_hex_id`) and min-reduces the (a*x + b) mod p
+permutations in NumPy int64. The signature frame is exchanged once by
+doc id; its band rows are exchanged by band key into a second kernel
+that streams each bucket and emits the candidate id pairs, and the
+pairs are scored by joining the signature frame back. SimHash stays
+in Catalyst expressions (bit sums and shifts).
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# 2^31-1: keeps (a*x + b) < 2^62 so the bigint math can't overflow —
-# Spark 4 runs ANSI mode by default, where overflow raises.
+# 2^31-1: with ids x < 2^31, a*x + b < 2^62, so the int64 math is exact
+# (and, in the DuckDB oracles' bigint math, cannot overflow).
 _MERSENNE_P = (1 << 31) - 1
 
 
@@ -44,6 +51,109 @@ def portable_hex_id(col: str, ndigits: int) -> "F.Column":
     return F.conv(F.substring(F.md5(col), 1, ndigits), 16, 10).cast("bigint")
 
 
+def _perm_arrays(n_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    a, b = zip(*_perm_params(n_hashes))
+    return np.array(a, np.int64), np.array(b, np.int64)
+
+
+def _min_reduce(
+    x: np.ndarray, starts: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """(groups, n_hashes) minima of (a_j * x + b_j) mod p over the runs
+    of ``x`` that begin at ``starts`` (each run non-empty). int64 is
+    exact: x < 2^31 and a_j < 2^31 keep a_j * x + b_j below 2^63."""
+    out = np.empty((len(starts), len(a)), np.int64)
+    for j in range(len(a)):
+        out[:, j] = np.minimum.reduceat((x * a[j] + b[j]) % _MERSENNE_P, starts)
+    return out
+
+
+def _shingle_ids(text: str) -> np.ndarray:
+    """The 28-bit ids of a text's word 3-grams: split on single spaces
+    and joined back with one, as ``queries/dedup.py::_shingles_of``
+    forms them in Catalyst, then the first 7 hex digits of md5, the
+    same value as ``portable_hex_id(shingle, 7)``."""
+    w = text.split(" ")
+    head = b"".join(
+        hashlib.md5(f"{p} {q} {r}".encode()).digest()[:4]
+        for p, q, r in zip(w, w[1:], w[2:])
+    )
+    return np.frombuffer(head, ">u4").astype(np.int64) >> 4
+
+
+def _hash_names(n_hashes: int) -> list[str]:
+    return [f"h{j}" for j in range(n_hashes)]
+
+
+def _signature_schema(id_field: T.StructField, n_hashes: int) -> T.StructType:
+    # non-nullable: the joins on doc id then infer no isnotnull filter
+    # above the kernel, so every consumer reads the same exchange
+    return T.StructType(
+        [T.StructField(id_field.name, id_field.dataType, False)]
+        + [T.StructField(h, T.LongType(), False) for h in _hash_names(n_hashes)]
+    )
+
+
+def _text_signatures(n_hashes: int):
+    """mapInPandas kernel: (doc_id, text) rows to (doc_id, h0..h{n-1}),
+    one row per document with at least one shingle."""
+    a, b = _perm_arrays(n_hashes)
+    names = _hash_names(n_hashes)
+
+    def text_signatures(batches):
+        for pdf in batches:
+            ids, xs = [], []
+            for doc, text in zip(pdf["doc_id"], pdf["text"]):
+                x = _shingle_ids(text) if isinstance(text, str) else ()
+                if len(x):
+                    ids.append(doc)
+                    xs.append(x)
+            if not ids:
+                continue
+            starts = np.cumsum([0] + [len(x) for x in xs[:-1]])
+            sig = _min_reduce(np.concatenate(xs), starts, a, b)
+            out = pd.DataFrame(sig, columns=names)
+            out.insert(0, "doc_id", np.array(ids, dtype=pdf["doc_id"].dtype))
+            yield out
+
+    return text_signatures
+
+
+def _id_signatures(id_col: str, n_hashes: int):
+    """mapInPandas kernel over (id, x) rows sorted by id: one signature
+    row per id. A run of ids cut by a batch boundary is carried into
+    the next batch, so a task holds one batch and one signature."""
+    a, b = _perm_arrays(n_hashes)
+    names = _hash_names(n_hashes)
+
+    def id_signatures(batches):
+        carry_id, carry = None, None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy()
+            starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+            sig = _min_reduce(pdf["x"].to_numpy(np.int64), starts, a, b)
+            run_ids = ids[starts]
+            if carry_id is not None:
+                if run_ids[0] == carry_id:
+                    sig[0] = np.minimum(sig[0], carry)
+                else:
+                    sig = np.vstack([carry, sig])
+                    run_ids = np.r_[[carry_id], run_ids].astype(ids.dtype)
+            carry_id, carry = run_ids[-1], sig[-1]
+            if len(run_ids) > 1:
+                out = pd.DataFrame(sig[:-1], columns=names)
+                out.insert(0, id_col, run_ids[:-1])
+                yield out
+        if carry_id is not None:
+            out = pd.DataFrame(carry[None, :], columns=names)
+            out.insert(0, id_col, np.array([carry_id]))
+            yield out
+
+    return id_signatures
+
+
 def minhash_signatures(
     shingles: DataFrame,
     n_hashes: int = 32,
@@ -52,37 +162,29 @@ def minhash_signatures(
 ) -> DataFrame:
     """(doc_id, sig: array<bigint>) — min over permuted shingle hashes.
 
-    h_j(x) = ((a_j * x + b_j) mod p); x = xxhash64(shingle) masked to
-    non-negative (or, with ``portable=True``, a 28-bit md5-derived id
-    any SQL engine reproduces — used by the oracle-checked driver
-    query). The whole signature is one hash aggregate of n_hashes
-    MIN()s.
+    h_j(x) = ((a_j * x + b_j) mod p) over shingle rows; x =
+    xxhash64(shingle) mod p (or, with ``portable=True``, the 28-bit
+    md5-derived id any SQL engine reproduces). The ids are computed in
+    Catalyst, exchanged by document and sorted, and one kernel
+    min-reduces each document's run in NumPy int64 (the same reduction
+    :func:`minhash_pairs` runs over texts).
     """
     if portable:
-        # 7 hex digits = 28 bits: a * x < 2^59, no ANSI overflow
+        # 7 hex digits = 28 bits: a * x < 2^59
         x = portable_hex_id("shingle", 7)
     else:
         x = F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE_P))
-    # hash once in a projection BEFORE the aggregate: the 32 MIN
-    # expressions then read the same 8-byte column instead of each
-    # re-deriving the (md5-based) id per row (measured ~20% on the
-    # signature aggregate at sf0.1; an explicit distinct pre-group
-    # was measured slower — the extra exchange costs more than the
-    # duplicate rows, which map-side partial MIN absorbs anyway)
-    ids = shingles.select(F.col(id_col), x.alias("_x"))
-    # expression strings parse JVM-side in one py4j round-trip each;
-    # the Column-object form spent more driver time constructing the
-    # 32 MIN chains than the aggregate takes to run (same finding as
-    # operators/requant.band_moments). Integer literals and % keep the
-    # exact bigint math of the F.lit form.
-    mins = [
-        F.expr(f"min((_x * {a} + {b}) % {_MERSENNE_P})").alias(f"h{j}")
-        for j, (a, b) in enumerate(_perm_params(n_hashes))
-    ]
-    sig = ids.groupBy(id_col).agg(*mins)
-    return sig.select(
-        id_col, F.array(*[f"h{j}" for j in range(n_hashes)]).alias("sig")
+    ids = (
+        shingles.select(F.col(id_col), x.alias("x"))
+        .filter(F.col("x").isNotNull())
+        .repartition(id_col)
+        .sortWithinPartitions(id_col)
     )
+    sig = ids.mapInPandas(
+        _id_signatures(id_col, n_hashes),
+        _signature_schema(shingles.schema[id_col], n_hashes),
+    )
+    return sig.select(id_col, F.array(*_hash_names(n_hashes)).alias("sig"))
 
 
 def _drop_hot_buckets(
@@ -106,102 +208,144 @@ def _drop_hot_buckets(
     return banded.join(F.broadcast(hot), keys, "left_anti")
 
 
+def _bucket_pairs(keys: list[str], cap: int | None):
+    """mapInPandas kernel over (keys..., doc_id) rows sorted by keys
+    then doc_id: every pair ``doc_a < doc_b`` sharing a bucket of at
+    most ``cap`` documents. It streams the sorted partition and holds
+    one open bucket at a time; a bucket over the cap is counted, not
+    held, so a task holds one batch plus at most ``cap`` ids."""
+    limit = cap if cap is not None else np.iinfo(np.int64).max
+
+    def pairs_of(ids: np.ndarray, out: list) -> None:
+        if 2 <= len(ids) <= limit:
+            i, j = np.triu_indices(len(ids), 1)
+            out.append((ids[i], ids[j]))
+
+    def bucket_pairs(batches):
+        key, held, count = None, [], 0
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            k = pdf[keys].to_numpy(np.int64)
+            ids = pdf["doc_id"].to_numpy()
+            cut = np.flatnonzero((k[1:] != k[:-1]).any(axis=1)) + 1
+            starts, ends = np.r_[0, cut], np.r_[cut, len(ids)]
+            out: list = []
+            first = 0
+            if key is not None and tuple(k[0]) == key:
+                # the batch opens with the rest of the open bucket
+                count += ends[0]
+                held = held + [ids[: ends[0]]] if count <= limit else []
+                if len(starts) == 1:
+                    continue
+                first = 1
+            if key is not None and count <= limit:
+                pairs_of(np.concatenate(held), out)
+            sizes = ends[first:-1] - starts[first:-1]
+            for r in np.flatnonzero((sizes >= 2) & (sizes <= limit)) + first:
+                pairs_of(ids[starts[r] : ends[r]], out)
+            s = starts[-1]
+            key, count = tuple(k[s]), len(ids) - s
+            held = [ids[s:]] if count <= limit else []
+            if out:
+                yield pd.DataFrame(
+                    {
+                        "doc_a": np.concatenate([p[0] for p in out]),
+                        "doc_b": np.concatenate([p[1] for p in out]),
+                    }
+                )
+        if key is not None and count <= limit:
+            out = []
+            pairs_of(np.concatenate(held), out)
+            if out:
+                yield pd.DataFrame({"doc_a": out[0][0], "doc_b": out[0][1]})
+
+    return bucket_pairs
+
+
+def _band_key_sql(hashes: list[int]) -> str:
+    """One bigint packing up to two 31-bit hashes losslessly."""
+    if len(hashes) == 1:
+        return f"h{hashes[0]}"
+    return f"shiftleft(h{hashes[0]}, 31) | h{hashes[1]}"
+
+
 def minhash_pairs(
-    shingles: DataFrame,
+    docs: DataFrame,
     n_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
     bucket_cap: int | None = None,
 ) -> DataFrame:
-    """Banded-LSH candidate pairs with estimated similarity.
+    """Banded-LSH candidate pairs with estimated similarity, from a
+    (doc_id, text) corpus whose doc_id is a key.
 
     rows = n_hashes // bands hashes per band; a pair is a candidate if
     any band matches exactly (classic banding: P[match] = 1-(1-s^r)^b).
     Output: (doc_a, doc_b, est_jaccard = matching hash fraction).
-    ``portable=True`` uses md5-derived shingle ids and joins buckets on
-    the joined hash string instead of an xxhash64 of the band — same
-    plan shape, engine-neutral values (the oracle path).
-    ``bucket_cap`` drops band buckets larger than the cap before the
-    self-join (see _drop_hot_buckets) — the production guard against
-    pair blowup on repetitive corpora; None preserves classic-LSH
-    semantics exactly (the oracle-checked mode).
+    Shingles are the texts' word 3-grams with md5-derived ids, so the
+    DuckDB oracles replay every signature, bucket and estimate.
+    ``bucket_cap`` drops band buckets holding more than the cap
+    documents before any pair is formed — the production guard
+    against pair blowup on repetitive corpora; None preserves
+    classic-LSH semantics exactly.
+
+    Plan: the signature kernel maps the texts, its frame is exchanged
+    once by doc_id and read by both consumers (the exchange is reused,
+    so the kernel runs once): the band rows (band, k0, k1, ..., doc_id)
+    — a band's hashes packed two to a bigint — are exchanged by band
+    key and sorted into the pair kernel, and the distinct pairs join
+    the signature frame back once per side to score the estimate.
     """
     rows = n_hashes // bands
-    sig = minhash_signatures(shingles, n_hashes, portable=portable)
-    # Materialize the signature table ONCE for its 3-4 consumers
-    # (banding, hot-bucket filter, both join-back sides). Two concerns
-    # both demand eagerness: AQE submits the consumer subtrees as
-    # concurrent jobs, and a lazy cache lets them race through the
-    # un-filled InMemoryRelation — the signature aggregate (the
-    # query's dominant compute) ran TWICE in the round-14 profile.
-    # cache()+count() rather than localCheckpoint() (round-15 A/B): the
-    # checkpoint showed no clean win, and its RDD blocks' ASYNC
-    # ContextCleaner teardown lands in the NEXT query's window.
-    sig = sig.cache()
-    sig.count()
-
-    def _bucket_sql(i: int) -> str:
-        cols = [f"sig[{i * rows + r}]" for r in range(rows)]
-        if portable:
-            joined = ", ".join(f"CAST({c} AS STRING)" for c in cols)
-            return f"concat_ws('_', {joined})"
-        return f"xxhash64({', '.join(cols)})"
-
-    structs = ", ".join(
-        f"named_struct('band', {i}, 'bucket', {_bucket_sql(i)})"
-        for i in range(bands)
-    )
-    # flat codegen sum of the n_hashes equality bits, NOT
-    # zip_with+filter+size: higher-order functions are CodegenFallback
-    # (interpreted per row, closure allocation per element), and this
-    # projection runs once per surviving pair — the round-14 profile
-    # put 17 s of the 32-core executor time in the interpreted form at
-    # sf0.1. Same integer count, same /n division -> bit-identical.
-    def _est(sig_a: str, sig_b: str) -> "F.Column":
-        matches = " + ".join(
-            f"CAST({sig_a}[{j}] = {sig_b}[{j}] AS INT)"
-            for j in range(n_hashes)
+    id_field = docs.schema["doc_id"]
+    sig = (
+        docs.select("doc_id", "text")
+        .mapInPandas(
+            _text_signatures(n_hashes), _signature_schema(id_field, n_hashes)
         )
-        return F.expr(f"({matches}) / {float(n_hashes)!r}D")
+        .repartition("doc_id")
+    )
+    keys = [f"k{m}" for m in range((rows + 1) // 2)]
 
-    # Round-15 (guide §2.3 "shuffle keys and metadata instead of
-    # payloads" / §8): the band exchange carries ONLY
-    # (band, bucket, doc_id) — ~24 B/doc/band — never the signature.
-    # The distinct pair set is computed on ids alone, then the sig
-    # table is joined back ONCE per side to score the survivors. At
-    # 100 TB the dominant LSH shuffle moves bands x 24 B per doc
-    # instead of bands x ~260 B x 2 sides, and the join-back shuffles
-    # the sig table once per side — bounded by docs, not by band
-    # fan-out. est is a deterministic function of the pair, so scoring
-    # after the distinct returns exactly the same rows. (Carrying the
-    # signatures through the band join saved the join-back stage but
-    # moved ~20x the band-exchange payload; OPTIMIZATION_r15.md.)
+    def band_struct(i: int) -> str:
+        hs = list(range(i * rows, (i + 1) * rows))
+        fields = ", ".join(
+            f"'{k}', {_band_key_sql(hs[2 * m : 2 * m + 2])}"
+            for m, k in enumerate(keys)
+        )
+        return f"named_struct('band', {i}, {fields})"
+
+    # the band exchange carries only (band, keys, doc_id), never the
+    # signature: its rows are bands x docs, the join-backs' are docs
     banded = sig.select(
-        "doc_id", F.expr(f"explode(array({structs}))").alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-    if bucket_cap is not None:
-        banded = _drop_hot_buckets(banded, ["band", "bucket"], bucket_cap)
-    a = banded.alias("a")
-    b = banded.alias("b")
+        "doc_id",
+        F.expr(f"inline(array({', '.join(band_struct(i) for i in range(bands))}))"),
+    )
+    pair_type = id_field.dataType.simpleString()
     pairs = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+        banded.repartition("band", *keys)
+        .sortWithinPartitions("band", *keys, "doc_id")
+        .mapInPandas(
+            _bucket_pairs(["band", *keys], bucket_cap),
+            f"doc_a {pair_type} not null, doc_b {pair_type} not null",
         )
         .distinct()
     )
-    sig_a = sig.select(
-        F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
-    )
-    sig_b = sig.select(
-        F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")
-    )
+
+    def side(s: str) -> DataFrame:
+        return sig.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(f"h{j}").alias(f"{s}{j}") for j in range(n_hashes)],
+        )
+
+    # a flat sum of the n_hashes equality bits (codegen), not a
+    # higher-order function over arrays
+    matches = " + ".join(f"CAST(a{j} = b{j} AS INT)" for j in range(n_hashes))
+    est = F.expr(f"({matches}) / {float(n_hashes)!r}D")
     return (
-        pairs.join(sig_a, "doc_a")
-        .join(sig_b, "doc_b")
-        .select("doc_a", "doc_b", _est("sig_a", "sig_b").alias("est_jaccard"))
+        pairs.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select("doc_a", "doc_b", est.alias("est_jaccard"))
     )
 
 
@@ -255,9 +399,9 @@ def simhash_pairs(
 ) -> DataFrame:
     """Candidate pairs via 16-bit prefix band + exact hamming filter.
 
-    The signature frame is cached (same as minhash_pairs): both join
-    sides read it, and without the cache the token aggregation runs
-    twice. Set-semantics output — no trailing global sort.
+    The signature frame is cached: both join sides read it, and
+    without the cache the token aggregation runs twice. Set-semantics
+    output — no trailing global sort.
     ``bucket_cap`` drops prefix bands larger than the cap (see
     _drop_hot_buckets); None = classic semantics (oracle mode).
 
@@ -276,8 +420,11 @@ def simhash_pairs(
     sig = simhash_signatures(tokens, portable=portable).withColumn(
         "band", F.shiftrightunsigned("simhash", 48)
     )
-    # one eager materialization for both join sides + the hot filter —
-    # same rationale (cache, not checkpoint) as minhash_pairs above
+    # one eager materialization for both join sides + the hot filter:
+    # AQE submits the consumers as concurrent jobs, which race through a
+    # lazy cache's unfilled relation. cache()+count() rather than
+    # localCheckpoint(): the checkpoint showed no clean win, and its RDD
+    # blocks' asynchronous cleanup lands in the next query's window.
     sig = sig.cache()
     sig.count()
     if bucket_cap is not None:

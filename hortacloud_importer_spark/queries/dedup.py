@@ -330,21 +330,20 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutation hashes h_j(x) = (a_j * x + b_j) mod p over portable
     md5-derived shingle ids, banded 4-per-band into 8 LSH buckets;
     candidate pairs agree on at least one band. This replaces K2's
-    shingle self-join with a bounded bucket join — the 100 TB scale
+    shingle self-join with a bounded bucket pass — the 100 TB scale
     path (bucket cardinality is controlled by band width, not document
     frequency). Unlike dedup_approx (classic uncapped LSH), this runs
     the PRODUCTION guard: buckets holding more than
-    _MINHASH_BUCKET_CAP documents are dropped before the self-join,
-    and the DuckDB oracle replays that drop too. The xxhash64
-    production-hash mode stays available (operators/minhash.py,
-    portable=False) and recall-validated in tests/test_neardup.py."""
+    _MINHASH_BUCKET_CAP documents form no pairs, and the DuckDB oracle
+    replays that drop too. Signatures and bucket pairs are NumPy
+    kernels over the texts (operators/minhash.py::minhash_pairs);
+    recall is validated in tests/test_neardup.py."""
     from hortacloud_importer_spark.operators.minhash import minhash_pairs
 
     return minhash_pairs(
-        _shingles(spark, sf_dir),
+        table(spark, sf_dir, "documents"),
         n_hashes=32,
         bands=8,
-        portable=True,
         bucket_cap=_MINHASH_BUCKET_CAP,
     )
 
@@ -539,26 +538,23 @@ def dedup_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs with estimated Jaccard (bucket join — candidate
     set bounded by band width, not document frequency: the 100 TB
     scale path); `simhash` = 64-bit SimHash prefix-band pairs with
-    hamming distance. Both run in portable-hash mode (md5-derived
-    shingle/token ids, operators/minhash.py::portable_hex_id), so the
-    DuckDB oracle reproduces every signature, bucket, pair, and metric
-    bit-for-bit; recall vs exact Jaccard is separately validated in
-    tests/test_neardup.py. The xxhash64 production variants stay
-    registered driver=False."""
+    hamming distance. Both hash md5-derived shingle/token ids
+    (operators/minhash.py::portable_hex_id), so the DuckDB oracle
+    reproduces every signature, bucket, pair, and metric bit-for-bit;
+    recall vs exact Jaccard is separately validated in
+    tests/test_neardup.py."""
     from hortacloud_importer_spark.operators.minhash import (
         minhash_pairs,
         simhash_pairs,
     )
 
-    mh = minhash_pairs(
-        _shingles(spark, sf_dir), n_hashes=32, bands=8, portable=True
-    ).select(
+    d = table(spark, sf_dir, "documents")
+    mh = minhash_pairs(d, n_hashes=32, bands=8).select(
         F.lit("minhash").alias("method"),
         "doc_a",
         "doc_b",
         F.col("est_jaccard").cast("double").alias("metric"),
     )
-    d = table(spark, sf_dir, "documents")
     tokens = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     sh = simhash_pairs(tokens, max_hamming=12, portable=True).select(
         F.lit("simhash").alias("method"),

@@ -145,12 +145,11 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("sim_ann_lsh", "K3", oracle=None, driver=False)
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH (K3 scale path), rows-only:
-    16-bit sign signature per vector from deterministic pseudo-random
-    hyperplanes; candidates share the query's bucket (multi-probe:
-    hamming ≤ 4 on the signature), then exact cosine re-scoring of the
-    pruned set. The bucket join replaces the corpus scan — at 100 TB
-    only bucket-mates are scored. Validated in tests for recall
-    against sim_topk."""
+    16-bit sign signature per vector from the md5-derived hyperplanes
+    (operators/ann.py::md5_planes); candidates lie within hamming ≤ 4
+    of the query's signature (multi-probe), then exact cosine
+    re-scoring of the pruned set. The same search as `sim_ann`'s
+    `lsh` branch, on its own. Validated in tests for exact scores."""
     from hortacloud_importer_spark.operators.ann import lsh_topk
 
     e = table(spark, sf_dir, "embeddings")
@@ -284,34 +283,32 @@ def sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consolidated ANN driver query (K3), oracle-exact,
     union-with-tag: `lsh` = random-hyperplane signature bucketing +
     multi-probe + exact re-score; `ivf` = learned-centroid inverted
-    file + probe-cell semi-join + exact re-score. Both prune the
-    corpus scan to a bounded candidate set — the two standard 100 TB
-    ANN shapes. The LSH planes run in portable-hash mode
-    (operators/ann.py::_plane_component, md5-derived — bit-identical
-    in DuckDB); IVF centroid similarity is rounded to 6 dp before
-    cell ranking so cross-engine float-summation ulps can't change
-    the probed set. Recall vs sim_topk stays asserted in tests; the
-    xxhash64 plane variants stay registered driver=False."""
-    from hortacloud_importer_spark.operators.ann import ivf_topk, lsh_topk
+    file + probed-cell filter + exact re-score. Both prune the corpus
+    to a bounded candidate set — the two standard 100 TB ANN shapes —
+    and share one fold (operators/ann.py::ann_search): one driver job
+    for the query vector and the cell sums, one kernel for the plane
+    dots, query dot and norm of every vector. The planes are
+    md5-derived (bit-identical in DuckDB); IVF centroid similarity is
+    rounded to 6 dp before cell ranking so cross-engine
+    float-summation ulps can't change the probed set."""
+    from hortacloud_importer_spark.operators.ann import ann_search
 
-    e = table(spark, sf_dir, "embeddings")
-    # dim=64 (the fixture embedding width, TESTDATA.md) bakes the md5
-    # planes in as literals instead of per-row md5 expressions
-    lsh = lsh_topk(
-        e, query_vec_id=_QUERY_VEC_ID, k=_TOP_K, portable=True, dim=64
-    ).select(
+    lsh, ivf = ann_search(
+        table(spark, sf_dir, "embeddings"), query_vec_id=_QUERY_VEC_ID, k=_TOP_K
+    )
+    return lsh.select(
         F.lit("lsh").alias("method"),
         "vec_id",
         "score",
         F.col("hamming").cast("bigint").alias("extra"),
+    ).unionByName(
+        ivf.select(
+            F.lit("ivf").alias("method"),
+            "vec_id",
+            "score",
+            F.col("label").cast("bigint").alias("extra"),
+        )
     )
-    ivf = ivf_topk(e, query_vec_id=_QUERY_VEC_ID, k=_TOP_K).select(
-        F.lit("ivf").alias("method"),
-        "vec_id",
-        "score",
-        F.col("label").cast("bigint").alias("extra"),
-    )
-    return lsh.unionByName(ivf)
 
 
 @register(

@@ -194,3 +194,46 @@ def test_table_reports_the_first_operation_beside_the_median():
     assert text[2] == "| `jvm` | 9.00 | 4.00 | 89% |"
     assert text[3] == "| `driver` | 1.00 | 1.00 | 22% |"
     assert text[4] == "| total | 10.00 | 4.50 | |"
+
+
+def test_step_meter_sums_a_querys_spans_into_one_step():
+    """``DatasetBuild.op`` wraps each query's planning and execution in
+    two spans and the shard store's write in a third; the meter bills
+    each span's CPU and compiles to its step, a query's two spans to
+    one row, in the order the steps ran."""
+    import contextlib
+
+    readings = iter([(10, 100), (12, 150), (12, 150), (12, 170), (12, 170), (13, 171)])
+    cpu = iter([
+        ({"jvm": 1.0, "driver": 0.5}, {"jit": 0.6, "task": 0.2}),
+        ({"jvm": 2.0}, {"jit": 1.0, "task": 0.5, "gc": 0.1}),
+        ({"jvm": 0.5, "pyspark_graft_worker": 0.25}, {"task": 0.5}),
+    ])
+
+    @contextlib.contextmanager
+    def meter():
+        out = {}
+        yield out
+        out["cpu"], out["jvm"] = next(cpu)
+
+    m = cpu_split.StepMeter(meter, lambda: next(readings))
+    assert not m.enabled
+    with m.span("queries.plan", query="sim_ann"):
+        pass
+    with m.span("queries.exec", query="sim_ann"):
+        pass
+    with m.span("pipelines.shard_store.write"):
+        pass
+    assert list(m.steps) == ["sim_ann", "shard store"]
+    assert m.steps["sim_ann"] == pytest.approx({
+        "CPU s": 3.5, "JVM": 3.0, "JIT": 1.6, "task": 0.7,
+        "Janino compiles": 2, "JIT compile ms": 70,
+    })
+    assert m.steps["shard store"]["Janino compiles"] == 1
+    text = cpu_split.step_table([m.steps, m.steps]).splitlines()
+    assert text[0] == (
+        "| step | first CPU s | CPU s | JVM | JIT | task | Janino compiles"
+        " | JIT compile ms |"
+    )
+    assert text[2] == "| `sim_ann` | 3.50 | 3.50 | 3.00 | 1.60 | 0.70 | 2 | 70 |"
+    assert text[-1] == "| total | 4.25 | 4.25 | 3.50 | 1.60 | 1.20 | 3 | 71 |"

@@ -1,6 +1,7 @@
 """Validation the rows-only near-dup/ANN operators promise in their
 docstrings: MinHash/SimHash find planted near-duplicates and estimate
-similarity accurately; LSH-ANN candidates carry exact cosine scores."""
+similarity accurately; LSH-ANN candidates carry exact cosine scores;
+the MinHash kernels give the same rows whatever the Arrow batch size."""
 
 from __future__ import annotations
 
@@ -70,7 +71,7 @@ def test_minhash_finds_planted_dups(spark, corpus):
     exact = _exact_jaccard(corpus)
     pairs = {
         (r["doc_a"], r["doc_b"]): r["est_jaccard"]
-        for r in minhash_pairs(_shingles(corpus), n_hashes=32, bands=8).collect()
+        for r in minhash_pairs(corpus, n_hashes=32, bands=8).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] == 1.0  # exact dup
     assert (0, 2) in pairs  # near dup found
@@ -220,6 +221,13 @@ def test_connected_components_long_chain_converges(spark):
     assert len(comp) == n + 1
 
 
+def _identical_texts(spark):
+    text = " ".join(f"s{i}" for i in range(12))
+    return spark.createDataFrame(
+        [(d, text) for d in range(12)], "doc_id long, text string"
+    )
+
+
 def test_lsh_bucket_cap_drops_nondiscriminative_buckets(spark):
     """SOAK finding: an adversarially repetitive corpus pair-bombs the
     uncapped LSH joins (3.7e9 candidates at 500k docs). bucket_cap
@@ -231,16 +239,14 @@ def test_lsh_bucket_cap_drops_nondiscriminative_buckets(spark):
     )
     from pyspark.sql import functions as F
 
-    # 12 documents with IDENTICAL shingle sets -> every minhash band
-    # bucket holds all 12 docs
-    rows = [(d, f"s{i}") for d in range(12) for i in range(10)]
-    sh = spark.createDataFrame(rows, "doc_id long, shingle string")
-    uncapped = minhash_pairs(sh, n_hashes=32, bands=8).count()
+    # 12 identical texts -> every minhash band bucket holds all 12 docs
+    docs = _identical_texts(spark)
+    uncapped = minhash_pairs(docs, n_hashes=32, bands=8).count()
     assert uncapped == 12 * 11 // 2
-    assert minhash_pairs(sh, n_hashes=32, bands=8, bucket_cap=8).count() == 0
+    assert minhash_pairs(docs, n_hashes=32, bands=8, bucket_cap=8).count() == 0
     # cap above the bucket size changes nothing
     assert (
-        minhash_pairs(sh, n_hashes=32, bands=8, bucket_cap=64).count()
+        minhash_pairs(docs, n_hashes=32, bands=8, bucket_cap=64).count()
         == uncapped
     )
 
@@ -272,8 +278,8 @@ def test_components_edges_materialized_once(spark):
 
 
 def test_capped_portable_minhash_matches_duckdb_when_cap_fires(spark):
-    """The registered dedup_minhash runs the production bucket cap in
-    portable-hash mode with a DuckDB oracle — but at fixture scale no
+    """The registered dedup_minhash runs the production bucket cap
+    with a DuckDB oracle — but at fixture scale no
     bucket exceeds 1024, so the cap branch of the oracle is never
     exercised there. Replay the SAME SQL here with cap=3 on a corpus
     where four identical docs blow past it: both engines must drop the
@@ -284,7 +290,6 @@ def test_capped_portable_minhash_matches_duckdb_when_cap_fires(spark):
     from hortacloud_importer_spark.queries.dedup import (
         _DEDUP_MINHASH_SQL,
         _minhash_perm_values,
-        _shingles_of,
     )
 
     words = BASE.split()
@@ -296,10 +301,7 @@ def test_capped_portable_minhash_matches_duckdb_when_cap_fires(spark):
 
     got = sorted(
         (r.doc_a, r.doc_b, r.est_jaccard)
-        for r in minhash_pairs(
-            _shingles_of(df), n_hashes=32, bands=8, portable=True,
-            bucket_cap=3,
-        ).collect()
+        for r in minhash_pairs(df, n_hashes=32, bands=8, bucket_cap=3).collect()
     )
 
     con = duckdb.connect()
@@ -370,3 +372,208 @@ def test_simhash_budget_matches_duckdb_when_budget_fires(spark):
     assert max(per_doc.values()) <= 2
     assert per_doc[0] == 2
     assert {(a, b) for a, b, _ in got if a == 0} == {(0, 1), (0, 2)}
+
+
+def _pairs(df):
+    return sorted((r.doc_a, r.doc_b, r.est_jaccard) for r in df.collect())
+
+
+def test_minhash_rows_do_not_depend_on_arrow_batch_size(spark, sf_dir):
+    """The MinHash kernels stream their input: the signature adapter
+    carries a document's run, and the pair kernel its open bucket,
+    across Arrow batch boundaries. Two-row batches must give the same
+    rows as the default, on the registry query and on a bucket over the
+    cap that spans six batches."""
+    import pandas as pd
+
+    from hortacloud_importer_spark.queries.dedup import _MINHASH_BUCKET_CAP
+    from hortacloud_importer_spark.registry import all_queries
+
+    small = spark.newSession()
+    small.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    sizes = small.range(10).mapInPandas(
+        lambda it: (pd.DataFrame({"n": [len(b)]}) for b in it), "n long"
+    )
+    assert max(r.n for r in sizes.collect()) == 2
+
+    want = _pairs(all_queries()["dedup_minhash"].fn(spark, sf_dir))
+    docs = small.read.parquet(f"{sf_dir}/documents.parquet")
+    got = _pairs(minhash_pairs(docs, bucket_cap=_MINHASH_BUCKET_CAP))
+    assert want and got == want
+
+    same = _identical_texts(small)
+    assert minhash_pairs(same).count() == 12 * 11 // 2
+    assert minhash_pairs(same, bucket_cap=8).count() == 0
+    assert minhash_pairs(same, bucket_cap=12).count() == 12 * 11 // 2
+
+    def sigs(session):
+        d = session.createDataFrame(
+            [(i, " ".join(BASE.split()[i:])) for i in range(6)],
+            "doc_id long, text string",
+        )
+        return sorted(
+            (r.doc_id, tuple(r.sig))
+            for r in minhash_signatures(_shingles(d), portable=True).collect()
+        )
+
+    assert sigs(small) == sigs(spark)
+
+
+def _split(n, rng, max_batch):
+    cuts = sorted(rng.choice(np.arange(1, n), size=min(n - 1, n // max_batch + 3), replace=False))
+    return np.split(np.arange(n), cuts)
+
+
+def test_bucket_pair_kernel_matches_brute_force_on_any_batching():
+    """The pair kernel over one sorted partition, cut into random
+    batches: every pair of a bucket of at most ``cap`` documents, none
+    from a bigger one, wherever the batch boundaries fall."""
+    import pandas as pd
+
+    from hortacloud_importer_spark.operators.minhash import _bucket_pairs
+
+    rng = np.random.default_rng(7)
+    for cap in (None, 1, 3, 5):
+        band = np.sort(rng.integers(0, 3, 200))
+        k0 = rng.integers(0, 4, 200)
+        rows = pd.DataFrame({"band": band, "k0": k0, "doc_id": rng.permutation(1000)[:200]})
+        rows = rows.sort_values(["band", "k0", "doc_id"], ignore_index=True)
+        want = set()
+        for _, g in rows.groupby(["band", "k0"]):
+            ids = sorted(g["doc_id"])
+            if cap is None or len(ids) <= cap:
+                want |= {(a, b) for i, a in enumerate(ids) for b in ids[i + 1 :]}
+        for trial in range(5):
+            batches = [rows.iloc[ix] for ix in _split(len(rows), rng, 1 + trial * 7)]
+            out = list(_bucket_pairs(["band", "k0"], cap)(iter(batches)))
+            got = [tuple(p) for o in out for p in o[["doc_a", "doc_b"]].to_numpy()]
+            assert len(got) == len(set(got)) and set(got) == want, (cap, trial)
+
+
+def test_id_signature_kernel_carries_runs_across_batches():
+    """The shingle-row adapter's kernel: one signature per document,
+    equal to the direct min-reduce, however its run is cut."""
+    import pandas as pd
+
+    from hortacloud_importer_spark.operators.minhash import (
+        _id_signatures,
+        _min_reduce,
+        _perm_arrays,
+    )
+
+    rng = np.random.default_rng(3)
+    ids = np.sort(rng.integers(0, 40, 300))
+    rows = pd.DataFrame({"doc_id": ids, "x": rng.integers(0, 1 << 28, 300)})
+    a, b = _perm_arrays(32)
+    starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+    want = _min_reduce(rows["x"].to_numpy(), starts, a, b)
+    for max_batch in (1, 2, 5, 50, 400):
+        batches = [rows.iloc[ix] for ix in _split(len(rows), rng, max_batch)]
+        got = pd.concat(list(_id_signatures("doc_id", 32)(iter(batches))))
+        assert got["doc_id"].tolist() == ids[starts].tolist()
+        assert (got.drop(columns="doc_id").to_numpy() == want).all()
+
+
+def _fixture_sf001(sf_dir):
+    return sf_dir.replace("sf0.001", "sf0.01")
+
+
+def test_ann_fold_is_bit_identical_to_the_spark_fold(spark, sf_dir):
+    """The kernel's plane dots, query dot and squared norm equal, bit
+    for bit, the higher-order-function folds they replace (written out
+    here as the reference), and the driver's query signature, query
+    norm and probed cells equal the ones Spark derives from them."""
+    from hortacloud_importer_spark.operators.ann import (
+        ann_fold,
+        ann_query,
+        md5_planes,
+    )
+
+    emb = spark.read.parquet(f"{_fixture_sf001(sf_dir)}/embeddings.parquet")
+    q = ann_query(emb, 0)
+    planes = md5_planes(16, len(q.vector))
+
+    def fold(prods: str) -> str:
+        return f"aggregate({prods}, 0.0D, (acc, v) -> acc + v)"
+
+    ref = emb.crossJoin(
+        emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    ).select(
+        "vec_id",
+        *[
+            F.expr(
+                fold(
+                    "zip_with(array({}), embedding, (w, x) -> CAST(x AS DOUBLE) * w)".format(
+                        ", ".join(f"{w!r}D" for w in planes[j])
+                    )
+                )
+            ).alias(f"r{j}")
+            for j in range(16)
+        ],
+        F.expr(
+            fold("zip_with(embedding, qv, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))")
+        ).alias("rq"),
+        F.expr(
+            fold(
+                "zip_with(embedding, embedding,"
+                " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
+            )
+        ).alias("rn"),
+    )
+    rows = ann_fold(emb, q.vector).join(ref, "vec_id").collect()
+    assert len(rows) == emb.count()
+    for r in rows:
+        for j in range(16):
+            assert r[f"p{j}"].hex() == r[f"r{j}"].hex(), (r.vec_id, j)
+        assert r.qdot.hex() == r.rq.hex() and r.norm2.hex() == r.rn.hex(), r.vec_id
+
+    # the driver's side: the query's signature and norm, from Spark's round
+    sig = " | ".join(
+        f"shiftleft(CASE WHEN round(r{j}, 6) >= 0 THEN 1L ELSE 0L END, {j})"
+        for j in range(16)
+    )
+    qrow = ref.filter(F.col("vec_id") == 0).select(
+        F.expr(sig).alias("sig"), F.sqrt("rn").alias("qnorm")
+    ).first()
+    assert qrow.sig == q.signature and qrow.qnorm.hex() == q.norm.hex()
+    # the probed cells: Spark's centroid averages ranked by the
+    # 6-dp-rounded cosine, as the pre-kernel plan computed them
+    cent = emb.select("label", F.posexplode("embedding").alias("pos", "v")).groupBy(
+        "label", "pos"
+    ).agg(F.avg("v").alias("cv"))
+    cent = cent.groupBy("label").agg(
+        F.expr("transform(sort_array(collect_list(struct(pos, cv))), s -> s.cv)").alias("c")
+    )
+    dot = lambda a, b: F.expr(  # noqa: E731
+        fold(f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))")
+    )
+    probe = (
+        cent.crossJoin(
+            emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+        )
+        .select(
+            "label",
+            F.round(dot("c", "qv") / (F.sqrt(dot("c", "c")) * F.sqrt(dot("qv", "qv"))), 6)
+            .alias("csim"),
+        )
+        .orderBy(F.col("csim").desc(), "label")
+        .limit(3)
+    )
+    assert [r.label for r in probe.collect()] == q.probe
+
+
+def test_spark_round_matches_catalyst_round_on_half_way_values(spark):
+    """The driver ranks cells and signs the query with ``spark_round``:
+    it must round as Spark's ``round(x, 6)`` does — HALF_UP on the
+    decimal form — where a binary HALF_EVEN or float rounding differs."""
+    from hortacloud_importer_spark.operators.ann import spark_round
+
+    rng = np.random.default_rng(11)
+    half = [(2 * k + 1) * 5e-7 for k in range(-40, 40)]
+    half += [0.1234565, -0.1234565, 1.0000005, 0.9999995, 123.4567885, 2.5e-7]
+    vals = half + [0.0, -0.0, 1 / 3, -2 / 3, 1e-7, -1e-7]
+    vals += [round(v, 7) for v in rng.uniform(-1, 1, 500)]
+    vals += list(rng.uniform(-1, 1, 500)) + list(rng.normal(0, 1e-6, 200))
+    df = spark.createDataFrame([(float(v),) for v in vals], "x double")
+    for r in df.select("x", F.round("x", 6).alias("r")).collect():
+        assert spark_round(r.x).hex() == r.r.hex(), r.x

@@ -460,3 +460,47 @@ def test_minhash_band_exchange_carries_ids_not_signatures(spark, sf_dir):
     assert band_exchanges, plan  # the LSH join must still shuffle bands
     for first_line in band_exchanges:
         assert "sig" not in first_line, first_line
+
+
+def _final_plan(df) -> str:
+    """The executed plan after a run: AQE's final plan, without the
+    initial plan it prints below it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("name", ["sim_ann", "dedup_minhash"])
+def test_ann_and_minhash_plans_have_no_higher_order_functions_or_cache(
+    spark, sf_dir, name
+):
+    """Both queries score with plain arithmetic over kernel columns: no
+    lambda (aggregate/zip_with are interpreted per element), and no
+    cached relation (an eager cache is a job of its own per run)."""
+    df = SPECS[name].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for banned in ("lambdafunction", "aggregate(", "zip_with(", "InMemoryRelation"):
+        assert banned not in plan, banned
+    assert "InMemoryTableScan" not in _final_plan(df)
+
+
+def test_minhash_signature_kernel_runs_once(spark, sf_dir):
+    """The signature frame feeds the band rows and both join-backs
+    through ONE doc-keyed exchange, reused: the kernel appears once in
+    the executed plan, adaptive or not (an inferred isnotnull filter
+    above the kernel on one consumer would make the exchanges differ
+    and run the kernel twice)."""
+    plan = _final_plan(SPECS["dedup_minhash"].fn(spark, sf_dir))
+    assert plan.count("MapInPandas text_signatures(") == 1, plan
+    assert "ReusedExchange" in plan
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        plan = _plan(spark, "dedup_minhash", sf_dir)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    assert plan.count("MapInPandas text_signatures(") == 1, plan
+    assert plan.count("ReusedExchange") >= 2, plan

@@ -51,6 +51,8 @@ benchmark times, right after the prime) beside the median over R.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import functools
 import os
 import shutil
 import statistics
@@ -175,22 +177,95 @@ def jvm_split(
     return out
 
 
-def measure(run, root_pid: int, jvm_pid: int, hz: float, proc: str = "/proc"):
-    """``run()``'s result, and the CPU the process tree under
-    ``root_pid`` spent while it ran: :func:`split` and the JVM's
-    :func:`jvm_split`. The JVM's threads are read after the tree
-    before and before the tree after, so no live thread is billed more
-    than its process."""
+@contextlib.contextmanager
+def measuring(root_pid: int, jvm_pid: int, hz: float, proc: str = "/proc"):
+    """Yields a dict that holds, once the block has run, the CPU the
+    process tree under ``root_pid`` spent in it: ``cpu`` (:func:`split`)
+    and ``jvm`` (the JVM's :func:`jvm_split`). The JVM's threads are
+    read after the tree before and before the tree after, so no live
+    thread is billed more than its process."""
+    out: dict = {}
     before = read_tree(root_pid, proc)
     threads_before = read_threads(jvm_pid, proc)
-    result = run()
+    yield out
     threads_after = read_threads(jvm_pid, proc)
     after = read_tree(root_pid, proc)
-    return (
-        result,
-        split(before, after, root_pid, hz),
-        jvm_split(before, after, threads_before, threads_after, jvm_pid, hz),
-    )
+    out["cpu"] = split(before, after, root_pid, hz)
+    out["jvm"] = jvm_split(before, after, threads_before, threads_after, jvm_pid, hz)
+
+
+def measure(run, root_pid: int, jvm_pid: int, hz: float, proc: str = "/proc"):
+    """``run()``'s result, and the CPU split (:func:`measuring`) of the
+    time it ran."""
+    with measuring(root_pid, jvm_pid, hz, proc) as m:
+        result = run()
+    return result, m["cpu"], m["jvm"]
+
+
+STEP_COLUMNS = ("CPU s", "JVM", "JIT", "task", "Janino compiles", "JIT compile ms")
+
+
+class StepMeter:
+    """Takes the place of perfbench's tracer in ``DatasetBuild.op``,
+    which wraps each query's planning and execution and the shard
+    store's write in ``tracer.span``: the CPU split and the compiles
+    of each span, summed per step (a query's two spans make one step).
+    ``meter()`` is a :func:`measuring` context; ``compiles()`` returns
+    :func:`_compiles`' pair."""
+
+    enabled = False  # the operation records no per-layer figures
+
+    def __init__(self, meter, compiles):
+        self._meter, self._compiles = meter, compiles
+        self.steps: dict[str, dict[str, float]] = {}
+
+    @contextlib.contextmanager
+    def span(self, name: str, **attrs):
+        step = attrs.get("query") or {
+            "pipelines.shard_store.write": "shard store"
+        }.get(name, name)
+        c0 = self._compiles()
+        with self._meter() as m:
+            yield None
+        c1 = self._compiles()
+        row = self.steps.setdefault(step, dict.fromkeys(STEP_COLUMNS, 0.0))
+        for col, value in zip(
+            STEP_COLUMNS,
+            (
+                sum(m["cpu"].values()),
+                m["cpu"].get("jvm", 0.0),
+                m["jvm"].get("jit", 0.0),
+                m["jvm"].get("task", 0.0),
+                c1[0] - c0[0],
+                c1[1] - c0[1],
+            ),
+        ):
+            row[col] += value
+
+
+def step_table(ops: list[dict]) -> str:
+    """Markdown table of :class:`StepMeter` steps over operations
+    (``ops`` holds each operation's ``steps``): the first operation's
+    CPU s, then the median over ``ops`` of every column."""
+    lines = [
+        f"| step | first CPU s | {' | '.join(STEP_COLUMNS)} |",
+        "|---" * (len(STEP_COLUMNS) + 2) + "|",
+    ]
+    total = dict.fromkeys(("first",) + STEP_COLUMNS, 0.0)
+    for step in ops[0]:
+        med = {c: statistics.median(o[step][c] for o in ops) for c in STEP_COLUMNS}
+        total["first"] += ops[0][step]["CPU s"]
+        for c in STEP_COLUMNS:
+            total[c] += med[c]
+        cells = [f"{ops[0][step]['CPU s']:.2f}"] + [_cell(c, med[c]) for c in STEP_COLUMNS]
+        lines.append(f"| `{step}` | {' | '.join(cells)} |")
+    cells = [f"{total['first']:.2f}"] + [_cell(c, total[c]) for c in STEP_COLUMNS]
+    lines.append(f"| total | {' | '.join(cells)} |")
+    return "\n".join(lines)
+
+
+def _cell(column: str, value: float) -> str:
+    return f"{value:g}" if column in ("Janino compiles", "JIT compile ms") else f"{value:.2f}"
 
 
 def table(
@@ -271,17 +346,22 @@ def main() -> int:
         _, prime_cpu, prime_jvm = measure(
             lambda: wl.prime(spark, tracer), me, jvm, hz
         )
-        splits, jvm_splits, compiles = [], [], []
+        splits, jvm_splits, compiles, steps = [], [], [], []
         for _ in range(args.reps):
             spark.catalog.clearCache()
+            meter = StepMeter(
+                functools.partial(measuring, me, jvm, hz),
+                functools.partial(_compiles, spark),
+            )
             c0 = _compiles(spark)
-            op, cpu, jvm_cpu = measure(lambda: wl.op(spark, tracer), me, jvm, hz)
+            op, cpu, jvm_cpu = measure(lambda: wl.op(spark, meter), me, jvm, hz)
             c1 = _compiles(spark)
             if not op.ok:
                 raise SystemExit(f"operation failed its checks: {op.detail}")
             splits.append(cpu)
             jvm_splits.append(jvm_cpu)
             compiles.append((c1[0] - c0[0], c1[1] - c0[1]))
+            steps.append(meter.steps)
         spark.stop()
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -303,6 +383,11 @@ def main() -> int:
         f"JIT compilation time: first {compiles[0][1]:g} ms, "
         f"median {statistics.median(c[1] for c in compiles):g} ms"
     )
+    if steps[0]:
+        print()
+        print(f"Per step (the first operation's CPU s, and the median of {args.reps}):")
+        print()
+        print(step_table(steps))
     return 0
 
 
