@@ -248,42 +248,19 @@ def _session(args):
     return spark
 
 
-def _detect_volume_format(path: str) -> str | None:
-    """N5 roots carry ``attributes.json``; Zarr-v2 arrays carry
-    ``.zarray`` — the same probe order the reference's zarr.open
-    fallback implies (tiff2octree.py:322-326). Anything else is a
-    slice directory or a c{i}/s{j} hierarchy."""
-    import json
-    import os
-
-    try:
-        with open(os.path.join(path, "attributes.json")) as fh:
-            attrs = json.load(fh)
-        # group-level attributes.json (e.g. just pixelResolution) is
-        # NOT a dataset: the N5 spec keys datasets on dimensions
-        if "dimensions" in attrs:
-            return "n5_volume"
-    except (FileNotFoundError, OSError, ValueError):
-        pass
-    if os.path.exists(os.path.join(path, ".zarray")):
-        return "zarr_volume"
-    return None
-
-
 def _pixel_resolution(path: str) -> tuple[float, float, float] | None:
     """The reference reads a ``pixelResolution`` attribute from the N5
     root to default the voxel size (get_pixel_resolution_n5_zarr,
     tiff2octree.py:694-709); both the bare-list and the
-    ``{"dimensions": [...]}`` forms occur in the wild."""
-    import json
-    import os
+    ``{"dimensions": [...]}`` forms occur in the wild. The root's
+    ``attributes.json`` is a dataset's or a group's, as the store
+    probe (sources/n5.py::probe_store) finds it."""
+    from hortacloud_importer_spark.sources.n5 import probe_store
 
-    try:
-        with open(os.path.join(path, "attributes.json")) as fh:
-            attrs = json.load(fh)
-    except (FileNotFoundError, OSError, ValueError):
+    found = probe_store(path)
+    if found is None or found[0] != "attributes.json":
         return None
-    res = attrs.get("pixelResolution")
+    res = found[1].get("pixelResolution")
     if isinstance(res, dict):
         res = res.get("dimensions")
     if isinstance(res, (list, tuple)) and len(res) == 3:
@@ -297,6 +274,7 @@ def _run_octree(args) -> dict:
         stack_voxels,
         tiff_octree_to_ktx,
     )
+    from hortacloud_importer_spark.sources.n5 import chunk_store
 
     spark = _session(args)
     filter_ = FILTER_ALIASES[args.downsample]
@@ -311,20 +289,22 @@ def _run_octree(args) -> dict:
             source, dims = stack_voxels(spark, args.inputfile, args.channel)
         else:
             source = args.inputdir
-            fmt = _detect_volume_format(args.inputdir)
-            if fmt is not None:
+            store = chunk_store(args.inputdir, missing_ok=True)
+            if store is not None:
                 # N5/Zarr input (the reference auto-detects too,
                 # tiff2octree.py:319-328): the DataSource emits dense
                 # (z, y, x, intensity) rows with chunk-grain
                 # partitions and pushed-filter chunk pruning (the
-                # session registers the format)
+                # session registers the format); the store's shape is
+                # the volume's, so no voxel pass infers it
                 from pyspark.sql import functions as F
 
                 source = (
-                    spark.read.format(fmt)
+                    spark.read.format(store.format)
                     .load(args.inputdir)
                     .withColumn("channel", F.lit(args.channel))
                 )
+                dims = store.shape
             else:
                 # c{i}/s{j} multi-channel/multi-scale hierarchy
                 # (check_n5_levels/check_n5_channels,
@@ -454,27 +434,14 @@ def _run_crop(args) -> dict:
     from hortacloud_importer_spark.sources.block_store import (
         store_block_meta,
     )
-    from hortacloud_importer_spark.sources.datasource import _read_bytes
+    from hortacloud_importer_spark.sources.n5 import chunk_store
 
     spark = _session(args)
+    window = (tuple(args.z), tuple(args.y), tuple(args.x))
     # chunk-store inputs (N5 / Zarr v2 / Zarr v3) crop directly — the
     # reference's get_cropped_image_n5_zarr (tiff2octree.py:351-383);
-    # probe by metadata file, exactly like the octree subcommand's
-    # input auto-detection
-    base = args.inputdir.rstrip("/")
-    for probe in (".zarray", "zarr.json", "attributes.json"):
-        try:
-            raw = _read_bytes(f"{base}/{probe}")
-        except (FileNotFoundError, OSError):
-            continue
-        if probe == "attributes.json":
-            # a GROUP-level attributes.json ({"pixelResolution": ...}
-            # on an N5 group / rendered-octree root) is not a dataset
-            # — same rule as _detect_volume_format's probe
-            import json as _json
-
-            if "dimensions" not in _json.loads(raw):
-                continue
+    # detected by the same store probe as the octree subcommand's input
+    if chunk_store(args.inputdir, missing_ok=True) is not None:
         if args.depth is not None:
             raise SystemExit(
                 "--depth applies to octree stores; chunk stores are "
@@ -482,35 +449,21 @@ def _run_crop(args) -> dict:
                 "level instead"
             )
         res = crop_chunk_store(
+            spark, args.inputdir, args.output, window=window, dtype=args.dtype
+        )
+    else:
+        # block extent from one TIFF header + deepest level from the
+        # path listing — no payload decode to learn the store's metadata
+        block_dims, max_depth = store_block_meta(args.inputdir)
+        res = crop_octree(
             spark,
             args.inputdir,
             args.output,
-            window=(tuple(args.z), tuple(args.y), tuple(args.x)),
+            window=window,
+            depth=max_depth if args.depth is None else args.depth,
+            block_dims=block_dims,
             dtype=args.dtype,
         )
-        rows = res.collect()
-        return {
-            "command": "crop",
-            "output": args.output,
-            "n_slices": len(rows),
-            "n_nonzero": sum(r["n_nonzero"] for r in rows),
-        }
-    # block extent from one TIFF header + deepest level from the path
-    # listing — the old probe decoded EVERY block (max over a decoded
-    # column) just to learn the store's metadata
-    block_dims, max_depth = store_block_meta(args.inputdir)
-    depth = args.depth
-    if depth is None:
-        depth = max_depth
-    res = crop_octree(
-        spark,
-        args.inputdir,
-        args.output,
-        window=(tuple(args.z), tuple(args.y), tuple(args.x)),
-        depth=depth,
-        block_dims=block_dims,
-        dtype=args.dtype,
-    )
     rows = res.collect()
     return {
         "command": "crop",

@@ -349,12 +349,10 @@ def minhash_pairs(
     )
 
 
-def simhash_signatures(
-    tokens: DataFrame, id_col: str = "doc_id", portable: bool = False
-) -> DataFrame:
-    """64-bit SimHash per document from token-hash bit majorities
-    (60 significant bits in portable mode — md5-derived, so the SQL
-    oracle reproduces every signature).
+def simhash_signatures(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """SimHash per document from token-hash bit majorities over 60-bit
+    md5-derived token ids (``portable_hex_id``), so the SQL oracle
+    reproduces every signature and ``>>`` is sign-free in both engines.
 
     Occurrences are pre-grouped to (doc, hash, count) so the 64
     bit-sum aggregates scan distinct hashes, not raw tokens, weighted
@@ -363,9 +361,8 @@ def simhash_signatures(
     is what matters at 100 TB: the wide 64-buffer aggregate's input
     becomes bounded by vocabulary x docs instead of raw token count,
     and the extra exchange is map-side-combined."""
-    h = portable_hex_id("token", 15) if portable else F.xxhash64("token")
     th = (
-        tokens.select(F.col(id_col), h.alias("_h"))
+        tokens.select(F.col(id_col), portable_hex_id("token", 15).alias("_h"))
         .groupBy(id_col, "_h")
         .agg(F.count("*").alias("_c"))
     )
@@ -393,15 +390,15 @@ def simhash_signatures(
 def simhash_pairs(
     tokens: DataFrame,
     max_hamming: int = 12,
-    portable: bool = False,
     bucket_cap: int | None = None,
     per_doc_budget: int | None = None,
 ) -> DataFrame:
     """Candidate pairs via 16-bit prefix band + exact hamming filter.
 
-    The signature frame is cached: both join sides read it, and
-    without the cache the token aggregation runs twice. Set-semantics
-    output — no trailing global sort.
+    The signature frame is exchanged once by ``band``: the hot-band
+    count and both join sides read that one exchange (the join needs
+    no other), so the token aggregation runs once and nothing is
+    cached. Set-semantics output — no trailing global sort.
     ``bucket_cap`` drops prefix bands larger than the cap (see
     _drop_hot_buckets); None = classic semantics (oracle mode).
 
@@ -417,16 +414,11 @@ def simhash_pairs(
     that enforces the budget satisfies its clustering from the join's
     partitioning — the full pair stream is ranked and cut WITHOUT
     ever being exchanged (plan-asserted in tests/test_plans.py)."""
-    sig = simhash_signatures(tokens, portable=portable).withColumn(
-        "band", F.shiftrightunsigned("simhash", 48)
+    sig = (
+        simhash_signatures(tokens)
+        .withColumn("band", F.shiftrightunsigned("simhash", 48))
+        .repartition("band")
     )
-    # one eager materialization for both join sides + the hot filter:
-    # AQE submits the consumers as concurrent jobs, which race through a
-    # lazy cache's unfilled relation. cache()+count() rather than
-    # localCheckpoint(): the checkpoint showed no clean win, and its RDD
-    # blocks' asynchronous cleanup lands in the next query's window.
-    sig = sig.cache()
-    sig.count()
     if bucket_cap is not None:
         sig = _drop_hot_buckets(sig, ["band"], bucket_cap)
     a = sig.select(

@@ -199,123 +199,53 @@ def crop_chunk_store(
     store — the reference's ``get_cropped_image_n5_zarr``
     (tiff2octree.py:351-383) as a distributed slice-directory export.
 
-    Same scale shape as :func:`crop_octree`: chunks outside the
-    window are pruned on their GRID COORDINATES from the listing
-    (driver sees paths only, never payloads), each surviving chunk is
-    decoded and cut into window-clipped Z-plane tiles in-executor,
-    and one packed-tile shuffle regroups by output slice."""
-    import json as _json
-
-    from hortacloud_importer_spark.sources.datasource import (
-        _list_files,
-        _read_bytes,
-    )
-    from hortacloud_importer_spark.sources.n5 import (
-        ChunkStoreError,
-        n5_meta,
-        zarr3_meta,
-        zarr_meta,
-    )
+    Same scale shape as :func:`crop_octree`: the store is opened and
+    listed once on the driver (sources/n5.py::chunk_store), chunks
+    outside the window are pruned on their grid cells (the driver sees
+    paths only, never payloads), each surviving chunk is read by path
+    and cut into window-clipped Z-plane tiles in-executor, and one
+    packed-tile shuffle regroups by output slice. Never-written chunks
+    are the canvas fill. A chunk that fails to decode fails the tile
+    cut, before any slice is written."""
+    from hortacloud_importer_spark.sources.n5 import ChunkStoreError, chunk_store
 
     (z0, z1), (y0, y1), (x0, x1) = window
     if not (z0 < z1 and y0 < y1 and x0 < x1):
         raise ValueError(f"empty window {window}")
     dz, dy, dx = z1 - z0, y1 - y0, x1 - x0
-    base = root.rstrip("/")
-
-    def _try_json(name):
-        try:
-            return _json.loads(_read_bytes(f"{base}/{name}"))
-        except (FileNotFoundError, OSError):
-            return None
-
-    kind = None
-    if (meta := _try_json(".zarray")) is not None:
-        kind = "zarr2"
-        shape, chunks_zyx, codec, order, np_dtype, sep, _ = zarr_meta(meta)
-        shard, transpose = None, None
-    elif (meta := _try_json("zarr.json")) is not None:
-        kind = "zarr3"
-        shape, chunks_zyx, np_dtype, bb, sep, shard, extra = zarr3_meta(meta)
-        codec, order = "raw", "C"
-        transpose = extra["transpose"]
-        v3_prefixed = extra["kenc"] == "default"  # v2 keys: no c/ prefix
-    elif (meta := _try_json("attributes.json")) is not None:
-        kind = "n5"
-        dims_xyz, block_xyz, codec, np_dtype = n5_meta(meta)
-        shape = list(reversed(dims_xyz))
-        chunks_zyx = list(reversed(block_xyz))
-        order, sep, shard, bb, transpose = "C", "/", None, [], None
-    else:
-        raise ChunkStoreError(
-            f"{root} holds none of .zarray / zarr.json / attributes.json"
-        )
-    if kind != "zarr3":
-        bb = []
+    store = chunk_store(root)
     # the export format is uint8/uint16 TIFF slices and tiles pack as
     # little-endian uint16 — gate anything wider/signed/float rather
     # than silently wrapping it (the octree-crop cast is safe only
     # because block stores are uint8/uint16 on disk by construction)
-    if np.dtype(np_dtype).kind != "u" or np.dtype(np_dtype).itemsize > 2:
+    if store.dtype.kind != "u" or store.dtype.itemsize > 2:
         raise ChunkStoreError(
             f"crop export supports unsigned <=16-bit chunk stores; "
-            f"this store is {np.dtype(np_dtype).name}"
+            f"this store is {store.dtype.name}"
         )
-    # a spec-conforming reader materializes never-written chunks as
-    # the declared fill_value, not an assumed zero
-    fill = meta.get("fill_value", 0) or 0
-    if not isinstance(fill, int) or not 0 <= fill <= int(
-        np.iinfo(np_dtype).max
-    ):
+    fill = store.fill
+    if not 0 <= fill <= int(np.iinfo(store.dtype).max):
         raise ChunkStoreError(
             f"unsupported fill_value {fill!r} for a "
-            f"{np.dtype(np_dtype).name} slice export"
+            f"{store.dtype.name} slice export"
         )
-    cz, cy, cx = chunks_zyx
+    cz, cy, cx = store.chunks
 
     # driver-side listing + grid pruning (paths only, the A4 shape)
-    work = []
-    for path in _list_files(base, recursive=True):
-        name = path[len(base) + 1 :]
-        tail = name.rsplit("/", 1)[-1]
-        if tail.startswith((".", "_")) or tail in ("zarr.json",):
-            continue
-        try:
-            if kind == "n5":
-                gx_, gy_, gz_ = (int(p) for p in name.split("/"))
-            elif kind == "zarr3":
-                strip = 1 if v3_prefixed else 0
-                fields = (
-                    name.split("/")[strip:]
-                    if sep == "/"
-                    else tail.split(sep)[strip:]
-                )
-                if v3_prefixed:
-                    if sep == "/" and not name.startswith("c/"):
-                        continue
-                    if sep != "/" and not tail.startswith(f"c{sep}"):
-                        continue
-                gz_, gy_, gx_ = (int(p) for p in fields)
-            else:
-                # nested keys (sep '/') use the full relative path,
-                # flat keys ('.') use the filename
-                key = name if sep == "/" else tail
-                gz_, gy_, gx_ = (int(p) for p in key.split(sep))
-        except ValueError:
-            continue
-        if (
-            gz_ * cz >= z1
-            or (gz_ + 1) * cz <= z0
-            or gy_ * cy >= y1
-            or (gy_ + 1) * cy <= y0
-            or gx_ * cx >= x1
-            or (gx_ + 1) * cx <= x0
-        ):
-            continue
-        work.append((path, gz_, gy_, gx_))
+    work = [
+        key
+        for key in store.keys()
+        if key[0] is not None
+        and key[1] * cz < z1
+        and (key[1] + 1) * cz > z0
+        and key[2] * cy < y1
+        and (key[2] + 1) * cy > y0
+        and key[3] * cx < x1
+        and (key[3] + 1) * cx > x0
+    ]
     chunks_df = spark.createDataFrame(
         work or [("", -1, -1, -1)],
-        "path string, gz int, gy int, gx int",
+        "rel string, gz int, gy int, gx int",
     ).filter(F.col("gz") >= 0)
     chunks_df = chunks_df.repartition(spark.sparkContext.defaultParallelism)
 
@@ -323,53 +253,18 @@ def crop_chunk_store(
         "z int, channel int, y_off int, x_off int,"
         " h int, w int, tile binary"
     )
-    uri = root
 
     def cut(batches):
-        import numpy as np
         import pandas as pd
 
-        from hortacloud_importer_spark.sources.datasource import _pa_fs
-        from hortacloud_importer_spark.sources.n5 import (
-            n5_chunk_array,
-            zarr3_chunk_bytes,
-            zarr3_shard_bytes,
-            zarr_chunk_array,
-        )
-
-        fs_, fs_base = _pa_fs(uri)
-        prefix = f"{base.rstrip('/')}/"
         for pdf in batches:
             out = []
             for row in pdf.itertuples():
-                rel = row.path.split(prefix, 1)[-1]
-                with fs_.open_input_stream(
-                    f"{fs_base.rstrip('/')}/{rel}"
-                ) as fh:
-                    raw = fh.read()
-                if kind == "n5":
-                    arr = n5_chunk_array(
-                        raw, codec, np_dtype, list(reversed(chunks_zyx))
-                    )
-                elif kind == "zarr3":
-                    if shard is not None:
-                        raw = zarr3_shard_bytes(raw, shard, chunks_zyx, np_dtype)
-                    else:
-                        raw = zarr3_chunk_bytes(
-                            raw, bb, transpose, chunks_zyx, np_dtype
-                        )
-                    arr = zarr_chunk_array(raw, "raw", np_dtype, chunks_zyx, "C")
-                else:
-                    arr = zarr_chunk_array(raw, codec, np_dtype, chunks_zyx, order)
-                gz_, gy_, gx_ = int(row.gz), int(row.gy), int(row.gx)
-                oz, oy, ox = gz_ * cz, gy_ * cy, gx_ * cx
-                # clip stored-full-size chunks to the array extent,
-                # then to the window, in chunk-local coordinates
-                bz_, by_, bx_ = (
-                    min(arr.shape[0], shape[0] - oz),
-                    min(arr.shape[1], shape[1] - oy),
-                    min(arr.shape[2], shape[2] - ox),
-                )
+                key = (row.rel, int(row.gz), int(row.gy), int(row.gx))
+                arr = store.read(key)
+                oz, oy, ox = key[1] * cz, key[2] * cy, key[3] * cx
+                # clip to the window, in chunk-local coordinates
+                bz_, by_, bx_ = arr.shape
                 ly0, ly1 = max(y0 - oy, 0), min(y1 - oy, by_)
                 lx0, lx1 = max(x0 - ox, 0), min(x1 - ox, bx_)
                 if ly0 >= ly1 or lx0 >= lx1:

@@ -396,7 +396,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF). Runs the PRODUCTION _SIMHASH_BUCKET_CAP prefix-band guard
     (near-uniform corpora would otherwise funnel the corpus into one
     band — SOAK.md corpus section), and the DuckDB oracle replays the
-    guard. The xxhash64 mode stays available via portable=False."""
+    guard."""
     from hortacloud_importer_spark.operators.minhash import simhash_pairs
 
     d = spread(table(spark, sf_dir, "documents"))
@@ -404,7 +404,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(
         tokens,
         max_hamming=12,
-        portable=True,
         bucket_cap=_SIMHASH_BUCKET_CAP,
     )
 
@@ -456,7 +455,6 @@ def dedup_simhash_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(
         tokens,
         max_hamming=12,
-        portable=True,
         bucket_cap=_SIMHASH_BUCKET_CAP,
         per_doc_budget=_SIMHASH_PAIR_BUDGET,
     )
@@ -556,7 +554,7 @@ def dedup_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("est_jaccard").cast("double").alias("metric"),
     )
     tokens = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    sh = simhash_pairs(tokens, max_hamming=12, portable=True).select(
+    sh = simhash_pairs(tokens, max_hamming=12).select(
         F.lit("simhash").alias("method"),
         "doc_a",
         "doc_b",

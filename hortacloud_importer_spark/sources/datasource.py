@@ -16,10 +16,12 @@ Scale design:
 
 - **Planning = chunk grid, not payloads.** ``partitions()`` lists the
   chunk files (driver side, metadata only) and emits one input
-  partition per ~``target_partition_bytes`` of decoded voxels, so a
+  partition per ~``target_partition_bytes`` of decoded samples, so a
   100 TB store with millions of chunks plans into input splits the
-  same way the built-in Parquet source sizes its splits. Payload
-  bytes are only ever touched inside ``read()`` on executors.
+  same way the built-in Parquet source sizes its splits. The default,
+  8 MiB of samples, is ~128 MiB of voxel rows for uint16 (four bigint
+  columns), Spark's own split size. Payload bytes are only ever
+  touched inside ``read()`` on executors.
 - **Filter pushdown prunes chunks.** ``pushFilters`` accepts range /
   equality predicates on ``z``/``y``/``x`` and drops whole chunks
   whose coordinate extent cannot intersect — the A4 windowed-read
@@ -28,7 +30,7 @@ Scale design:
   runs: pruning is a pure optimization and can never under-deliver.
 - **Arrow batches out.** ``read()`` yields one pyarrow RecordBatch
   per chunk (columnar, zero row-at-a-time Python), so decode cost is
-  NumPy-bound like the mapInPandas readers in sources/n5.py.
+  NumPy-bound (sources/n5.py::ChunkStore.read).
 - **No JVM dependence.** Planning and decode run in Python workers
   (no py4j gateway there); file IO goes through ``pyarrow.fs`` like
   sources/ktx.py's executor-side sink, so local / HDFS / S3 paths
@@ -67,7 +69,7 @@ from hortacloud_importer_spark.sources.block_store import tiff_block_rel
 
 VOXEL_DDL = "z bigint, y bigint, x bigint, intensity bigint"
 _AXES = ("z", "y", "x")
-_DEFAULT_PARTITION_BYTES = 128 * 1024 * 1024
+_DEFAULT_PARTITION_BYTES = 8 * 1024 * 1024
 
 
 def _pa_fs(path: str):
@@ -176,18 +178,20 @@ def _absorb_filters(filters: list[Filter], bounds: _Bounds) -> list[Filter]:
 
 @dataclass
 class _ChunkPartition(InputPartition):
-    """A group of chunk files decoded by one task."""
+    """A group of chunk keys, ``(rel, gz, gy, gx)``, decoded by one task."""
 
-    chunks: list[tuple[str, int, int, int]]  # (path, gx|gz, gy, gz|gx)
+    chunks: list[tuple[str | None, int, int, int]]
 
 
 def _group_chunks(
-    chunks: list[tuple[str, int, int, int]], bytes_per_chunk: int, target: int
+    chunks: list[tuple[str | None, int, int, int]],
+    bytes_per_chunk: int,
+    target: int,
 ) -> list[_ChunkPartition]:
     per = max(1, target // max(1, bytes_per_chunk))
     return [
         _ChunkPartition(chunks[i : i + per]) for i in range(0, len(chunks), per)
-    ]
+    ] or [_ChunkPartition([])]
 
 
 def _voxel_batch(z, y, x, i) -> pa.RecordBatch:
@@ -215,64 +219,59 @@ class _PushdownMixin:
         return _absorb_filters(filters, self.bounds)
 
 
-class _N5ReaderNoPushdown(DataSourceReader):
+class _ChunkReaderNoPushdown(DataSourceReader):
+    """Both chunk-store formats: the store is opened once on the
+    planner (sources/n5.py::chunk_store), its chunk keys are listed and
+    pruned there, and each task reads its chunks by path. Options:
+    ``target_partition_bytes`` (decoded bytes per task) and ``verify``
+    (check lz4-java xxh32 and Zarr v3 crc32c checksums)."""
+
     def __init__(self, options: dict):
-        from hortacloud_importer_spark.sources.n5 import n5_meta
+        from hortacloud_importer_spark.sources.n5 import chunk_store
 
-        import json
-
-        self.root = options["path"].rstrip("/")
+        self.store = chunk_store(options["path"].rstrip("/"))
         self.target = int(
             options.get("target_partition_bytes", _DEFAULT_PARTITION_BYTES)
         )
-        attrs = json.loads(_read_bytes(f"{self.root}/attributes.json"))
-        self.dims_xyz, self.block_xyz, self.codec, self.np_dtype = n5_meta(attrs)
+        self.verify = str(options.get("verify", "false")).lower() == "true"
         self.bounds = _Bounds()
 
     def partitions(self):
-        bx, by, bz = self.block_xyz
-        chunks = []
-        base_len = len(self.root) + 1
-        for path in _list_files(self.root, recursive=True):
-            rel = path[base_len:]
-            parts = rel.split("/")
-            if len(parts) != 3:
-                continue  # attributes.json and non-chunk files
-            try:
-                gx, gy, gz = (int(p) for p in parts)
-            except ValueError:
-                continue
-            if not (
-                self.bounds.admits("z", gz * bz, (gz + 1) * bz - 1)
-                and self.bounds.admits("y", gy * by, (gy + 1) * by - 1)
-                and self.bounds.admits("x", gx * bx, (gx + 1) * bx - 1)
-            ):
-                continue
-            chunks.append((path, gx, gy, gz))
-        chunks.sort(key=lambda c: (c[3], c[2], c[1]))
-        voxel_bytes = bx * by * bz * np.dtype(self.np_dtype).itemsize
-        return _group_chunks(chunks, voxel_bytes, self.target)
+        chunks = self.store.chunks
+        keys = [
+            key
+            for key in self.store.keys()
+            if all(
+                self.bounds.admits(axis, g * c, (g + 1) * c - 1)
+                for axis, g, c in zip(_AXES, key[1:], chunks)
+            )
+        ]
+        voxel_bytes = int(np.prod(chunks)) * self.store.dtype.itemsize
+        return _group_chunks(keys, voxel_bytes, self.target)
 
     def read(self, partition: _ChunkPartition):
-        from hortacloud_importer_spark.sources.n5 import n5_chunk_axes
+        cz, cy, cx = self.store.chunks
+        for key in partition.chunks:
+            arr = self.store.read(key, self.verify)
+            zz, yy, xx = np.indices(arr.shape)
+            yield _voxel_batch(
+                (zz + key[1] * cz).ravel(),
+                (yy + key[2] * cy).ravel(),
+                (xx + key[3] * cx).ravel(),
+                arr.astype(np.int64).ravel(),
+            )
 
-        for path, gx, gy, gz in partition.chunks:
-            try:
-                z, y, x, i = n5_chunk_axes(
-                    _read_bytes(path), self.codec, self.np_dtype,
-                    self.block_xyz, gx, gy, gz,
-                )
-            except Exception as exc:
-                raise ValueError(f"bad N5 chunk {path}: {exc}") from exc
-            yield _voxel_batch(z, y, x, i)
 
-
-class _N5Reader(_PushdownMixin, _N5ReaderNoPushdown):
+class _ChunkReader(_PushdownMixin, _ChunkReaderNoPushdown):
     pass
 
 
 class N5VolumeDataSource(DataSource):
-    """``spark.read.format("n5_volume").load(dataset_dir)``."""
+    """``spark.read.format("n5_volume").load(dataset_dir)``. Both
+    chunk-store names read any N5 dataset or Zarr v2/v3 array: the
+    store's own metadata decides how it decodes."""
+
+    _reader = _ChunkReader
 
     @classmethod
     def name(cls) -> str:
@@ -281,162 +280,16 @@ class N5VolumeDataSource(DataSource):
     def schema(self) -> str:
         return VOXEL_DDL
 
-    def reader(self, schema) -> _N5Reader:
-        return _N5Reader(dict(self.options))
+    def reader(self, schema) -> _ChunkReaderNoPushdown:
+        return self._reader(dict(self.options))
 
 
-class _ZarrReaderNoPushdown(DataSourceReader):
-    def __init__(self, options: dict):
-        from hortacloud_importer_spark.sources.n5 import zarr3_meta, zarr_meta
-
-        import json
-
-        self.root = options["path"].rstrip("/")
-        self.target = int(
-            options.get("target_partition_bytes", _DEFAULT_PARTITION_BYTES)
-        )
-        self.v3_codecs = None  # None = v2; a list = v3 bytes->bytes chain
-        self.v3_shard = None  # ZEP-2 shard spec for sharded v3 stores
-        self.v3_transpose = None
-        self.verify = str(options.get("verify", "false")).lower() == "true"
-        try:
-            meta = json.loads(_read_bytes(f"{self.root}/.zarray"))
-        except FileNotFoundError:
-            # missing .zarray only — a transient IO/permission error
-            # on a genuine v2 store must surface as itself, not as a
-            # misleading zarr.json complaint
-            # Zarr v3 (zarr-python 3.x default): zarr.json metadata,
-            # c/<i>/<j>/<k> chunk keys, codec chain
-            meta = json.loads(_read_bytes(f"{self.root}/zarr.json"))
-            (
-                self.shape,
-                self.chunks_zyx,
-                self.np_dtype,
-                self.v3_codecs,
-                self.sep,
-                self.v3_shard,
-                extra,
-            ) = zarr3_meta(meta)
-            self.codec, self.order = "raw", "C"
-            self.v3_transpose = extra["transpose"]
-            self.v3_prefixed = extra["kenc"] == "default"  # v2: bare keys
-            self.fill = extra["fill"]
-            if self.v3_shard is not None and self.verify:
-                self.v3_shard = dict(self.v3_shard, verify=True)
-        else:
-            (
-                self.shape,
-                self.chunks_zyx,
-                self.codec,
-                self.order,
-                self.np_dtype,
-                self.sep,
-                self.fill,
-            ) = zarr_meta(meta)
-        self.bounds = _Bounds()
-
-    def partitions(self):
-        cz, cy, cx = self.chunks_zyx
-        base_len = len(self.root) + 1
-        chunks = []
-        for path in _list_files(self.root, recursive=True):
-            rel = path[base_len:]
-            name = rel.replace("/", self.sep) if self.sep == "/" else rel
-            if name.startswith("."):
-                continue  # .zarray / .zattrs
-            if self.v3_codecs is not None and self.v3_prefixed:
-                if not name.startswith(f"c{self.sep}"):
-                    continue  # zarr.json and any non-chunk keys
-                name = name[len(f"c{self.sep}") :]
-            try:
-                gz, gy, gx = (int(p) for p in name.split(self.sep))
-            except ValueError:
-                continue
-            if not (
-                self.bounds.admits("z", gz * cz, (gz + 1) * cz - 1)
-                and self.bounds.admits("y", gy * cy, (gy + 1) * cy - 1)
-                and self.bounds.admits("x", gx * cx, (gx + 1) * cx - 1)
-            ):
-                continue
-            chunks.append((path, gz, gy, gx))
-        if self.fill:
-            # a nonzero declared fill_value materializes never-written
-            # chunks — synthesize path-less partitions for the grid
-            # cells (within pushed bounds) no file covers; read()
-            # expands them to fill voxels with zero I/O
-            present = {(gz, gy, gx) for _, gz, gy, gx in chunks}
-            for gz in range(-(-self.shape[0] // cz)):
-                if not self.bounds.admits("z", gz * cz, (gz + 1) * cz - 1):
-                    continue
-                for gy in range(-(-self.shape[1] // cy)):
-                    if not self.bounds.admits("y", gy * cy, (gy + 1) * cy - 1):
-                        continue
-                    for gx in range(-(-self.shape[2] // cx)):
-                        if (gz, gy, gx) in present or not self.bounds.admits(
-                            "x", gx * cx, (gx + 1) * cx - 1
-                        ):
-                            continue
-                        chunks.append((None, gz, gy, gx))
-        chunks.sort(key=lambda c: (c[1], c[2], c[3]))
-        voxel_bytes = cz * cy * cx * self.np_dtype.itemsize
-        return _group_chunks(chunks, voxel_bytes, self.target)
-
-    def read(self, partition: _ChunkPartition):
-        from hortacloud_importer_spark.sources.n5 import (
-            zarr3_chunk_bytes,
-            zarr3_shard_bytes,
-            zarr_chunk_axes,
-        )
-
-        import numpy as np
-
-        for path, gz, gy, gx in partition.chunks:
-            try:
-                if path is None:  # never-written chunk: fill_value
-                    raw = np.full(
-                        self.chunks_zyx, self.fill, dtype=self.np_dtype
-                    ).tobytes()
-                    z, y, x, i = zarr_chunk_axes(
-                        raw, "raw", self.np_dtype,
-                        self.chunks_zyx, "C", self.shape, gz, gy, gx,
-                    )
-                    yield _voxel_batch(z, y, x, i)
-                    continue
-                raw = _read_bytes(path)
-                if self.v3_shard is not None:
-                    raw = zarr3_shard_bytes(
-                        raw, self.v3_shard, self.chunks_zyx, self.np_dtype
-                    )
-                elif self.v3_codecs is not None:
-                    raw = zarr3_chunk_bytes(
-                        raw, self.v3_codecs, self.v3_transpose,
-                        self.chunks_zyx, self.np_dtype, verify=self.verify,
-                    )
-                z, y, x, i = zarr_chunk_axes(
-                    raw, self.codec, self.np_dtype,
-                    self.chunks_zyx, self.order, self.shape, gz, gy, gx,
-                )
-            except Exception as exc:
-                raise ValueError(f"bad Zarr chunk {path}: {exc}") from exc
-            yield _voxel_batch(z, y, x, i)
-
-
-class _ZarrReader(_PushdownMixin, _ZarrReaderNoPushdown):
-    pass
-
-
-class ZarrVolumeDataSource(DataSource):
+class ZarrVolumeDataSource(N5VolumeDataSource):
     """``spark.read.format("zarr_volume").load(array_dir)``."""
 
     @classmethod
     def name(cls) -> str:
         return "zarr_volume"
-
-    def schema(self) -> str:
-        return VOXEL_DDL
-
-    def reader(self, schema) -> _ZarrReader:
-        return _ZarrReader(dict(self.options))
 
 
 def _sorted_slices(
@@ -831,13 +684,11 @@ def write_ktx_block(
 
 
 class N5VolumeDataSourceNoPushdown(N5VolumeDataSource):
-    def reader(self, schema) -> _N5ReaderNoPushdown:
-        return _N5ReaderNoPushdown(dict(self.options))
+    _reader = _ChunkReaderNoPushdown
 
 
 class ZarrVolumeDataSourceNoPushdown(ZarrVolumeDataSource):
-    def reader(self, schema) -> _ZarrReaderNoPushdown:
-        return _ZarrReaderNoPushdown(dict(self.options))
+    _reader = _ChunkReaderNoPushdown
 
 
 class TiffVolumeDataSourceNoPushdown(TiffVolumeDataSource):

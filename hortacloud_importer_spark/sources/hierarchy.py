@@ -57,57 +57,64 @@ def discover_hierarchy(spark: SparkSession, root: str) -> dict[int, list[int]]:
     return channels
 
 
+def _level_groups(
+    spark: SparkSession, root: str, scale: int
+) -> list[tuple[int, str]]:
+    """(channel, group path) of every channel that has scale ``scale``."""
+    layout = discover_hierarchy(spark, root)
+    if not layout:
+        raise FileNotFoundError(f"no c*/s* hierarchy under {root}")
+    has_channel_dirs = bool(
+        [n for n in _list_dirs(spark, root) if _CHANNEL_RE.match(n)]
+    )
+    groups = [
+        (ch, f"{root}/c{ch}/s{scale}" if has_channel_dirs else f"{root}/s{scale}")
+        for ch, scales in layout.items()
+        if scale in scales
+    ]
+    if not groups:
+        raise FileNotFoundError(f"scale s{scale} absent under {root}")
+    return groups
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def read_level(spark: SparkSession, root: str, scale: int) -> DataFrame:
     """One DataFrame for a scale level: every channel's data unioned
     with its channel id (C1's n-way channel zip happens later as an
     equi-join or stays long-form — both plans keep channels
     co-partitioned by coordinate)."""
-    layout = discover_hierarchy(spark, root)
-    if not layout:
-        raise FileNotFoundError(f"no c*/s* hierarchy under {root}")
-    has_channel_dirs = bool(
-        [n for n in _list_dirs(spark, root) if _CHANNEL_RE.match(n)]
+    return _union(
+        [
+            spark.read.parquet(base).withColumn("channel", F.lit(ch))
+            for ch, base in _level_groups(spark, root, scale)
+        ]
     )
-    parts = []
-    for ch, scales in layout.items():
-        if scale not in scales:
-            continue
-        base = f"{root}/c{ch}/s{scale}" if has_channel_dirs else f"{root}/s{scale}"
-        df = spark.read.parquet(base)
-        parts.append(df.withColumn("channel", F.lit(ch)))
-    if not parts:
-        raise FileNotFoundError(f"scale s{scale} absent under {root}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def read_level_chunks(spark: SparkSession, root: str, scale: int) -> DataFrame:
     """The chunk-store form of :func:`read_level`: each ``c{i}/s{j}``
     group is an N5 dataset or Zarr array (the reference's actual
-    layout, tiff2octree.py:711-777 + 779-823) decoded by
-    sources/n5.py's executor-side readers — the full
+    layout, tiff2octree.py:711-777 + 779-823), opened on the driver
+    (sources/n5.py::chunk_store) and read through its
+    ``n5_volume``/``zarr_volume`` DataSource — the full
     ``n5_zarr_to_dask_array`` front door, Spark-first."""
-    from hortacloud_importer_spark.sources.n5 import open_chunk_store
-
-    layout = discover_hierarchy(spark, root)
-    if not layout:
-        raise FileNotFoundError(f"no c*/s* hierarchy under {root}")
-    has_channel_dirs = bool(
-        [n for n in _list_dirs(spark, root) if _CHANNEL_RE.match(n)]
+    from hortacloud_importer_spark.sources.datasource import (
+        register_volume_sources,
     )
-    parts = []
-    for ch, scales in layout.items():
-        if scale not in scales:
-            continue
-        base = f"{root}/c{ch}/s{scale}" if has_channel_dirs else f"{root}/s{scale}"
-        parts.append(
-            open_chunk_store(spark, base).withColumn("channel", F.lit(ch))
-        )
-    if not parts:
-        raise FileNotFoundError(f"scale s{scale} absent under {root}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    from hortacloud_importer_spark.sources.n5 import chunk_store
+
+    register_volume_sources(spark)
+    return _union(
+        [
+            spark.read.format(chunk_store(base).format)
+            .load(base)
+            .withColumn("channel", F.lit(ch))
+            for ch, base in _level_groups(spark, root, scale)
+        ]
+    )

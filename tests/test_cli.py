@@ -123,6 +123,94 @@ def test_cli_octree_from_n5_store(spark, tmp_path, capsys):
     assert np.array_equal(got, vol)
 
 
+def test_cli_octree_from_zarr_v3_array(spark, tmp_path, capsys):
+    """-i pointing at a Zarr v3 array (zarr.json) auto-detects like an
+    N5 root and builds through the zarr_volume DataSource."""
+    from tests.test_n5_zarr import _write_zarr_v3
+
+    rng = np.random.default_rng(37)
+    vol = rng.integers(1, 60000, (8, 8, 8)).astype(np.uint16)
+    root = tmp_path / "v3.zarr"
+    _write_zarr_v3(
+        root, vol, (4, 4, 4), [{"name": "gzip", "configuration": {"level": 1}}]
+    )
+    out = tmp_path / "oct_v3"
+
+    rc = main(["octree", "-i", str(root), "-o", str(out), "-l", "1", "-d", "area"])
+    assert rc == 0
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert [r["n_blocks_written"] for r in res["levels"]] == [1]
+    got = decode_tiff((out / "default.0.tif").read_bytes())[..., 0]
+    assert np.array_equal(got, vol)
+
+
+def _block_digests(root) -> dict[str, str]:
+    """sha256 of every TIFF block file of an octree store, by relative
+    path (manifests and transform.txt excluded)."""
+    import hashlib
+    import pathlib
+
+    root = pathlib.Path(root)
+    return {
+        p.relative_to(root).as_posix(): hashlib.sha256(p.read_bytes()).hexdigest()
+        for p in root.rglob("*.tif")
+    }
+
+
+def test_chunk_store_imports_match_slice_import(spark, tmp_path, capsys):
+    """One volume imported from a slice directory, a raw and a gzip N5
+    dataset, a Zarr v2 array and a sharded Zarr v3 array (chunk grids
+    that do not match the block grid) writes the same block files, byte
+    for byte; a 2-channel c{i}/s0 hierarchy matches the 2-channel slice
+    import the same way."""
+    from tests.test_n5_zarr import _write_n5, _write_zarr, _write_zarr_v3_sharded
+
+    rng = np.random.default_rng(53)
+    vols = []
+    for _ in range(2):
+        v = rng.integers(1, 60000, (8, 16, 16)).astype(np.uint16)
+        v[rng.random(v.shape) < 0.3] = 0
+        v[:, 8:, 8:] = 0  # two all-zero leaf blocks, which are skipped
+        vols.append(v)
+    vol = vols[0]
+
+    def imported(src, *flags):
+        out = tmp_path / f"oct_{src.name}"
+        rc = main(
+            ["octree", "-i", str(src), "-o", str(out), "-l", "2", "-d", "2ndmax",
+             *flags]
+        )
+        assert rc == 0
+        capsys.readouterr()
+        return _block_digests(out)
+
+    for name, channels in (("slices1", 1), ("slices2", 2)):
+        d = tmp_path / name
+        d.mkdir()
+        for ch in range(channels):
+            for z in range(vol.shape[0]):
+                (d / f"default.{ch}.{z:03d}.tif").write_bytes(
+                    encode_tiff(vols[ch][z][None, ...])
+                )
+    want = imported(tmp_path / "slices1")
+    assert len(want) == 7  # 6 leaf blocks + the root
+    _write_n5(tmp_path / "raw.n5", vol, (5, 6, 3), "raw")
+    _write_n5(tmp_path / "gzip.n5", vol, (5, 6, 3), "gzip")
+    _write_zarr(tmp_path / "v2.zarr", vol, (3, 5, 6), {"id": "zlib", "level": 1})
+    _write_zarr_v3_sharded(
+        tmp_path / "v3s.zarr", vol, (4, 8, 8), (2, 4, 8),
+        [{"name": "blosc", "configuration": {"cname": "lz4"}}],
+    )
+    for name in ("raw.n5", "gzip.n5", "v2.zarr", "v3s.zarr"):
+        assert imported(tmp_path / name) == want, name
+
+    want2 = imported(tmp_path / "slices2", "--channels", "2")
+    assert len(want2) == 14
+    for ch in range(2):
+        _write_n5(tmp_path / "hier" / f"c{ch}" / "s0", vols[ch], (5, 6, 3), "gzip")
+    assert imported(tmp_path / "hier", "--channels", "2") == want2
+
+
 def test_stack_voxels_multi_file_z_offsets(spark, tmp_path):
     """A glob of uniform stacks concatenates along z in sorted-path
     order (dask imread parity); non-uniform stacks are rejected."""

@@ -1,8 +1,8 @@
 """Python DataSource front door (sources/datasource.py).
 
-The batch readers must agree exactly with the mapInPandas readers in
-sources/n5.py (same chunk decode helpers, different planning); the
-stream reader must deliver slices in z order across micro-batches.
+The chunk-store reader must give back the NumPy volume a store was
+written from; the stream reader must deliver slices in z order across
+micro-batches.
 Partition planning (grouping + filter pruning) is unit-tested on the
 reader objects directly — it is driver-side pure Python.
 """
@@ -18,12 +18,10 @@ import pytest
 from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, In, LessThan
 
 from hortacloud_importer_spark.sources.datasource import (
-    _N5Reader,
+    _ChunkReader,
     _TiffSliceReader,
-    _ZarrReader,
     register_volume_sources,
 )
-from hortacloud_importer_spark.sources.n5 import read_n5, read_zarr
 from hortacloud_importer_spark.sources.tiff import encode_tiff
 
 
@@ -109,6 +107,11 @@ def _rows(df):
     return {tuple(r) for r in df.collect()}
 
 
+def _vol_rows(vol):
+    """The (z, y, x, intensity) rows of a NumPy volume."""
+    return {(z, y, x, int(v)) for (z, y, x), v in np.ndenumerate(vol)}
+
+
 @pytest.fixture(scope="module")
 def registered(spark):
     register_volume_sources(spark)
@@ -120,7 +123,7 @@ def test_n5_datasource_matches_mapinpandas_reader(registered, tmp_path):
     root = tmp_path / "vol.n5"
     _write_n5(root, vol, (4, 4, 4))
     via_ds = registered.read.format("n5_volume").load(str(root))
-    assert _rows(via_ds) == _rows(read_n5(registered, str(root)))
+    assert _rows(via_ds) == _vol_rows(vol)
     assert via_ds.count() == 6 * 5 * 7
 
 
@@ -129,7 +132,7 @@ def test_zarr_datasource_matches_mapinpandas_reader(registered, tmp_path):
     root = tmp_path / "vol.zarr"
     _write_zarr(root, vol, (4, 4, 4))
     via_ds = registered.read.format("zarr_volume").load(str(root))
-    assert _rows(via_ds) == _rows(read_zarr(registered, str(root)))
+    assert _rows(via_ds) == _vol_rows(vol)
     assert via_ds.count() == 5 * 6 * 4
 
 
@@ -154,7 +157,7 @@ def test_n5_pushed_filters_prune_chunk_partitions(tmp_path):
     root = tmp_path / "p.n5"
     _write_n5(root, vol, (4, 4, 4))
     # chunk-per-partition so partition count == surviving chunk count
-    reader = _N5Reader({"path": str(root), "target_partition_bytes": 1})
+    reader = _ChunkReader({"path": str(root), "target_partition_bytes": 1})
     assert len(reader.partitions()) == 8
     unsupported = reader.pushFilters(
         [GreaterThanOrEqual(("z",), 4), LessThan(("x",), 4), EqualTo(("y",), 2)]
@@ -164,14 +167,14 @@ def test_n5_pushed_filters_prune_chunk_partitions(tmp_path):
     parts = reader.partitions()
     assert len(parts) == 1  # (gz=1, gy=0, gx=0) only
     (chunk,) = parts[0].chunks
-    assert chunk[1:] == (0, 0, 1)  # gx, gy, gz
+    assert chunk == ("0/0/1", 1, 0, 0)  # N5 key x/y/z; gz, gy, gx
 
 
 def test_zarr_in_filter_prunes(tmp_path):
     vol = _vol(8, 4, 4)
     root = tmp_path / "p.zarr"
     _write_zarr(root, vol, (4, 4, 4))
-    reader = _ZarrReader({"path": str(root), "target_partition_bytes": 1})
+    reader = _ChunkReader({"path": str(root), "target_partition_bytes": 1})
     assert len(reader.partitions()) == 2
     reader.pushFilters([In(("z",), (1, 2))])
     parts = reader.partitions()
@@ -184,11 +187,11 @@ def test_partition_grouping_targets_bytes(tmp_path):
     root = tmp_path / "g.n5"
     _write_n5(root, vol, (4, 4, 4))
     opts = {"path": str(root)}
-    # default 128 MB target -> all 8 chunks (128 voxel-bytes each) in 1
-    assert len(_N5Reader(opts).partitions()) == 1
+    # default 8 MiB target -> all 8 chunks (128 voxel-bytes each) in 1
+    assert len(_ChunkReader(opts).partitions()) == 1
     # 2 chunks' decoded bytes per partition -> 4 partitions
     two_chunks = 2 * 4 * 4 * 4 * 2
-    reader = _N5Reader({**opts, "target_partition_bytes": two_chunks})
+    reader = _ChunkReader({**opts, "target_partition_bytes": two_chunks})
     parts = reader.partitions()
     assert len(parts) == 4
     assert all(len(p.chunks) == 2 for p in parts)
@@ -576,11 +579,11 @@ def test_register_falls_back_to_no_pushdown_readers(spark, tmp_path):
         from pyspark.sql.datasource import DataSourceReader
 
         from hortacloud_importer_spark.sources.datasource import (
-            _N5ReaderNoPushdown,
+            _ChunkReaderNoPushdown,
         )
 
         assert (
-            getattr(_N5ReaderNoPushdown, "pushFilters", None)
+            getattr(_ChunkReaderNoPushdown, "pushFilters", None)
             is DataSourceReader.pushFilters
         )
         vol = _vol(6, 5, 7)

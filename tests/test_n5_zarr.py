@@ -1,7 +1,10 @@
-"""Clean-room N5 / Zarr-v2 chunk-store readers (A1/A3 front door).
+"""Clean-room N5 / Zarr chunk stores (A1/A3 front door).
 
 Stores are hand-built from the public specs with stdlib gzip/zlib, so
 the readers are tested against the format, not against themselves.
+Every store is read through its ``n5_volume``/``zarr_volume``
+DataSource (sources/n5.py::chunk_store underneath) and compared with
+the NumPy volume it was written from.
 """
 
 from __future__ import annotations
@@ -13,12 +16,7 @@ import zlib
 import numpy as np
 import pytest
 
-from hortacloud_importer_spark.sources.n5 import (
-    ChunkStoreError,
-    open_chunk_store,
-    read_n5,
-    read_zarr,
-)
+from hortacloud_importer_spark.sources.n5 import ChunkStoreError, chunk_store
 
 
 def _write_n5(root, vol: np.ndarray, block_xyz, codec="raw"):
@@ -148,6 +146,11 @@ def _write_zarr(root, vol: np.ndarray, chunks_zyx, compressor, fill=0, skip=()):
                 (root / f"{gz_i}.{gy}.{gx}").write_bytes(payload)
 
 
+def _read(spark, fmt, root, **options):
+    """The voxel DataFrame of a store, read through its DataSource."""
+    return spark.read.format(fmt).options(**options).load(str(root))
+
+
 def _collect_vol(df, shape):
     got = np.zeros(shape, dtype=np.int64)
     rows = df.collect()
@@ -164,7 +167,9 @@ def test_n5_roundtrip(spark, tmp_path, codec):
     rng = np.random.default_rng(8)
     vol = rng.integers(0, 65535, (4, 6, 8), dtype=np.uint16)
     _write_n5(tmp_path / "data.n5", vol, (4, 3, 2), codec)
-    got = _collect_vol(read_n5(spark, f"file://{tmp_path}/data.n5"), vol.shape)
+    got = _collect_vol(
+        _read(spark, "n5_volume", f"file://{tmp_path}/data.n5"), vol.shape
+    )
     assert np.array_equal(got, vol)
 
 
@@ -188,14 +193,27 @@ def test_zarr_roundtrip_with_edge_chunks(spark, tmp_path, compressor):
     rng = np.random.default_rng(9)
     vol = rng.integers(0, 65535, (5, 7, 6), dtype=np.uint16)  # non-divisible
     _write_zarr(tmp_path / "arr.zarr", vol, (4, 4, 4), compressor)
-    got = _collect_vol(read_zarr(spark, f"file://{tmp_path}/arr.zarr"), vol.shape)
+    got = _collect_vol(
+        _read(spark, "zarr_volume", f"file://{tmp_path}/arr.zarr"), vol.shape
+    )
     assert np.array_equal(got, vol)
 
 
 def test_probe_order_matches_reference(spark, tmp_path):
+    """.zarray wins over a dataset attributes.json beside it, as in
+    the reference's zarr-then-N5 probe (tiff2octree.py:789-795)."""
     vol = np.arange(8, dtype=np.uint16).reshape(2, 2, 2)
     _write_zarr(tmp_path / "store", vol, (2, 2, 2), None)
-    got = _collect_vol(open_chunk_store(spark, f"file://{tmp_path}/store"), vol.shape)
+    (tmp_path / "store" / "attributes.json").write_text(
+        json.dumps(
+            {"dimensions": [2, 2, 2], "blockSize": [2, 2, 2],
+             "dataType": "uint16"}
+        )
+    )
+    assert chunk_store(f"file://{tmp_path}/store").kind == "zarr2"
+    got = _collect_vol(
+        _read(spark, "n5_volume", f"file://{tmp_path}/store"), vol.shape
+    )
     assert np.array_equal(got, vol)
 
 
@@ -207,7 +225,7 @@ def test_unknown_codec_raises(spark, tmp_path):
     meta["compressor"] = {"id": "brotli"}
     (root / ".zarray").write_text(json.dumps(meta))
     with pytest.raises(Exception, match="brotli"):
-        read_zarr(spark, f"file://{root}").collect()
+        _read(spark, "zarr_volume", f"file://{root}").collect()
 
 
 def test_hierarchy_discovery_over_n5(spark, tmp_path):
@@ -241,7 +259,10 @@ def test_corrupt_chunk_bytes_fail_fast_without_spark():
     truncated header once parsed to a ~2-billion-element dim and hung
     np.indices.  One bad chunk in a 100 TB store must die in
     microseconds with a parseable message, not stall an executor."""
-    from hortacloud_importer_spark.sources.n5 import n5_chunk_axes, zarr_chunk_axes
+    from hortacloud_importer_spark.sources.n5 import (
+        n5_chunk_array,
+        zarr_chunk_array,
+    )
 
     bad = [
         b"",  # empty file
@@ -253,18 +274,16 @@ def test_corrupt_chunk_bytes_fail_fast_without_spark():
     ]
     for raw in bad:
         with pytest.raises(ChunkStoreError, match="corrupt N5 chunk"):
-            n5_chunk_axes(raw, "raw", np.dtype(">u2"), (4, 4, 4), 0, 0, 0)
+            n5_chunk_array(raw, "raw", np.dtype(">u2"), (4, 4, 4))
 
     with pytest.raises(ChunkStoreError, match="corrupt Zarr chunk"):
-        zarr_chunk_axes(
-            b"\x00" * 3, "raw", np.dtype("<u2"), (4, 4, 4), "C", (4, 4, 4), 0, 0, 0
-        )
+        zarr_chunk_array(b"\x00" * 3, "raw", np.dtype("<u2"), (4, 4, 4), "C")
 
     # a good chunk still decodes exactly
     hdr = b"\x00\x00\x00\x03" + (4).to_bytes(4, "big") * 3
     payload = np.arange(64, dtype=">u2").tobytes()
-    z, y, x, i = n5_chunk_axes(hdr + payload, "raw", np.dtype(">u2"), (4, 4, 4), 1, 0, 0)
-    assert i.tolist() == list(range(64)) and int(x.min()) == 4 and int(x.max()) == 7
+    arr = n5_chunk_array(hdr + payload, "raw", np.dtype(">u2"), (4, 4, 4))
+    assert np.array_equal(arr, np.arange(64).reshape(4, 4, 4))
 
 
 def _write_zarr_v3(
@@ -374,13 +393,11 @@ def _write_zarr_v3(
 def test_zarr_v3_roundtrip(spark, tmp_path, codecs):
     """Zarr v3 (zarr-python 3.x default layout): zarr.json metadata,
     c/<i>/<j>/<k> chunk keys, bytes + bytes->bytes codec chain."""
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     rng = np.random.default_rng(21)
     vol = rng.integers(0, 65535, (5, 7, 6), dtype=np.uint16)  # edge chunks
     _write_zarr_v3(tmp_path / "v3.zarr", vol, (4, 4, 4), codecs)
     got = _collect_vol(
-        read_zarr_v3(spark, f"file://{tmp_path}/v3.zarr"), vol.shape
+        _read(spark, "zarr_volume", f"file://{tmp_path}/v3.zarr"), vol.shape
     )
     assert np.array_equal(got, vol)
 
@@ -390,8 +407,6 @@ def test_zarr_v3_transpose_roundtrip(spark, tmp_path, order):
     """The v3 ``transpose`` array->array codec: stored bytes are
     C-order over the PERMUTED chunk shape; the reader undoes the
     permutation."""
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     rng = np.random.default_rng(33)
     vol = rng.integers(0, 65535, (5, 7, 6), dtype=np.uint16)  # edge chunks
     root = tmp_path / f"t{''.join(map(str, order))}.zarr"
@@ -400,7 +415,7 @@ def test_zarr_v3_transpose_roundtrip(spark, tmp_path, order):
         [{"name": "gzip", "configuration": {"level": 1}}],
         transpose=order,
     )
-    got = _collect_vol(read_zarr_v3(spark, f"file://{root}"), vol.shape)
+    got = _collect_vol(_read(spark, "zarr_volume", f"file://{root}"), vol.shape)
     assert np.array_equal(got, vol)
 
 
@@ -408,8 +423,6 @@ def test_zarr_v3_unsharded_fill_value(spark, tmp_path):
     """Never-written chunks of an unsharded v3 store materialize as
     the declared nonzero fill_value (previously they were dropped,
     disagreeing with the shard path and the spec)."""
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     rng = np.random.default_rng(34)
     vol = rng.integers(1, 65535, (5, 7, 6), dtype=np.uint16)
     root = tmp_path / "fill.zarr"
@@ -419,7 +432,7 @@ def test_zarr_v3_unsharded_fill_value(spark, tmp_path):
     want = vol.astype(np.int64).copy()
     want[4:5, 0:4, 4:6] = 77
     want[0:4, 4:7, 0:4] = 77
-    got = _collect_vol(read_zarr_v3(spark, f"file://{root}"), vol.shape)
+    got = _collect_vol(_read(spark, "zarr_volume", f"file://{root}"), vol.shape)
     assert np.array_equal(got, want)
 
 
@@ -427,15 +440,8 @@ def test_zarr_v3_unsharded_fill_value(spark, tmp_path):
 def test_zarr_v3_v2_chunk_key_encoding(spark, tmp_path, sep):
     """The v3 spec's second chunk-key scheme: ``v2`` encoding stores
     bare Zarr-v2-style keys (<i>.<j>.<k>, no ``c`` prefix) — what
-    zarr-python writes when migrating old stores. Covers both the
-    reader function and the ``zarr_volume`` DataSource, incl. fill
+    zarr-python writes when migrating old stores, incl. fill
     materialization for a skipped chunk."""
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
-    register_volume_sources(spark)
     rng = np.random.default_rng(36)
     vol = rng.integers(1, 65535, (5, 7, 6), dtype=np.uint16)
     root = tmp_path / f"v2enc{'s' if sep == '/' else 'd'}.zarr"
@@ -446,17 +452,8 @@ def test_zarr_v3_v2_chunk_key_encoding(spark, tmp_path, sep):
     )
     want = vol.astype(np.int64).copy()
     want[4:5, 4:7, 4:6] = 55
-    got = _collect_vol(read_zarr_v3(spark, f"file://{root}"), vol.shape)
+    got = _collect_vol(_read(spark, "zarr_volume", f"file://{root}"), vol.shape)
     assert np.array_equal(got, want)
-    ds = (
-        spark.read.format("zarr_volume")
-        .load(str(root))
-        .toPandas()
-        .sort_values(["z", "y", "x"])
-    )
-    grid = np.zeros(vol.shape, dtype=np.int64)
-    grid[ds["z"], ds["y"], ds["x"]] = ds["intensity"]
-    assert np.array_equal(grid, want)
 
 
 def test_zarr_v2_fill_value(spark, tmp_path):
@@ -466,7 +463,7 @@ def test_zarr_v2_fill_value(spark, tmp_path):
     _write_zarr(root, vol, (4, 4, 4), None, fill=9, skip={(0, 0, 0)})
     want = vol.astype(np.int64).copy()
     want[0:4, 0:4, 0:4] = 9
-    got = _collect_vol(read_zarr(spark, f"file://{root}"), vol.shape)
+    got = _collect_vol(_read(spark, "zarr_volume", f"file://{root}"), vol.shape)
     assert np.array_equal(got, want)
 
 
@@ -497,14 +494,12 @@ def test_zarr_v3_crc32c_verify(spark, tmp_path):
     """Opt-in crc32c verification: a clean store reads identically,
     a flipped byte raises a named checksum error instead of decoding
     garbage."""
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     rng = np.random.default_rng(37)
     vol = rng.integers(0, 65535, (4, 4, 4), dtype=np.uint16)
     root = tmp_path / "crc.zarr"
     _write_zarr_v3(root, vol, (4, 4, 4), [{"name": "crc32c"}])
     got = _collect_vol(
-        read_zarr_v3(spark, f"file://{root}", verify=True), vol.shape
+        _read(spark, "zarr_volume", f"file://{root}", verify="true"), vol.shape
     )
     assert np.array_equal(got, vol)
     chunk = root / "c" / "0" / "0" / "0"
@@ -513,17 +508,15 @@ def test_zarr_v3_crc32c_verify(spark, tmp_path):
     chunk.write_bytes(bytes(raw))
     # default (no verify) decodes the corrupt bytes silently; verify raises
     with pytest.raises(Exception, match="crc32c mismatch"):
-        read_zarr_v3(spark, f"file://{root}", verify=True).collect()
+        _read(spark, "zarr_volume", f"file://{root}", verify="true").collect()
 
 
 def test_n5_lz4_xxh32_verify(spark, tmp_path):
-    from hortacloud_importer_spark.sources.n5 import read_n5
-
     rng = np.random.default_rng(38)
     vol = rng.integers(0, 65535, (4, 4, 4), dtype=np.uint16)  # incompressible
     _write_n5(tmp_path / "v.n5", vol, (4, 4, 4), codec="lz4")
     got = _collect_vol(
-        read_n5(spark, f"file://{tmp_path}/v.n5", verify=True), vol.shape
+        _read(spark, "n5_volume", f"file://{tmp_path}/v.n5", verify="true"), vol.shape
     )
     assert np.array_equal(got, vol)
     chunk = tmp_path / "v.n5" / "0" / "0" / "0"
@@ -534,27 +527,28 @@ def test_n5_lz4_xxh32_verify(spark, tmp_path):
     raw[16 + 21 + 3] ^= 0x01
     chunk.write_bytes(bytes(raw))
     with pytest.raises(Exception, match="xxh32 mismatch"):
-        read_n5(spark, f"file://{tmp_path}/v.n5", verify=True).collect()
+        _read(spark, "n5_volume", f"file://{tmp_path}/v.n5", verify="true").collect()
 
 
 def test_zarr_v3_dot_separator(spark, tmp_path):
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     vol = np.arange(8, dtype=np.uint16).reshape(2, 2, 2)
     _write_zarr_v3(tmp_path / "v3dot.zarr", vol, (2, 2, 2), [], sep=".")
     got = _collect_vol(
-        read_zarr_v3(spark, f"file://{tmp_path}/v3dot.zarr"), vol.shape
+        _read(spark, "zarr_volume", f"file://{tmp_path}/v3dot.zarr"), vol.shape
     )
     assert np.array_equal(got, vol)
 
 
-def test_open_chunk_store_probes_v3(spark, tmp_path):
+def test_chunk_store_probes_v3(spark, tmp_path):
+    """zarr.json is probed when .zarray is absent, and both DataSource
+    names read the store."""
     vol = np.arange(8, dtype=np.uint16).reshape(2, 2, 2)
     _write_zarr_v3(tmp_path / "store3", vol, (2, 2, 2), [])
-    got = _collect_vol(
-        open_chunk_store(spark, f"file://{tmp_path}/store3"), vol.shape
-    )
-    assert np.array_equal(got, vol)
+    root = f"file://{tmp_path}/store3"
+    assert chunk_store(root).kind == "zarr3"
+    for fmt in ("n5_volume", "zarr_volume"):
+        got = _collect_vol(_read(spark, fmt, root), vol.shape)
+        assert np.array_equal(got, vol), fmt
 
 
 def test_zarr_v3_gates_sharding_and_transpose(spark, tmp_path):
@@ -748,8 +742,6 @@ def test_zarr_v3_sharded_roundtrip(spark, tmp_path, inner_codecs, index_location
     """ZEP-2 sharding — the v3 layout built FOR huge stores: outer
     chunks are shard objects with an inner-chunk grid and a uint64
     index; missing inner chunks read as fill (zero)."""
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     rng = np.random.default_rng(33)
     vol = rng.integers(0, 65535, (10, 9, 8), dtype=np.uint16)
     vol[0:2, 0:4, 0:4] = 0  # a whole inner chunk of zeros -> omitted
@@ -759,7 +751,7 @@ def test_zarr_v3_sharded_roundtrip(spark, tmp_path, inner_codecs, index_location
         index_location,
     )
     got = _collect_vol(
-        read_zarr_v3(spark, f"file://{tmp_path}/{name}"), vol.shape
+        _read(spark, "zarr_volume", f"file://{tmp_path}/{name}"), vol.shape
     )
     assert np.array_equal(got, vol)
 
@@ -785,19 +777,15 @@ def test_zarr_v3_root_containing_c_component(spark, tmp_path):
     """Review r7: chunk indices must parse from the path TAIL — a
     store root like .../cells/... (or the c{ch}/s{scale} hierarchy)
     contains '/c' before the chunk directory."""
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     vol = np.arange(8, dtype=np.uint16).reshape(2, 2, 2)
     root = tmp_path / "cells" / "c0" / "v3.zarr"
     _write_zarr_v3(root, vol, (2, 2, 2), [])
-    got = _collect_vol(read_zarr_v3(spark, f"file://{root}"), vol.shape)
+    got = _collect_vol(_read(spark, "zarr_volume", f"file://{root}"), vol.shape)
     assert np.array_equal(got, vol)
 
 
 def test_zarr_v3_shard_fill_value_honored(spark, tmp_path):
     """Missing inner chunks materialize as the declared fill_value."""
-    from hortacloud_importer_spark.sources.n5 import read_zarr_v3
-
     vol = np.full((4, 4, 4), 7, dtype=np.uint16)
     vol[0:2, :, :] = 0  # the writer omits all-zero inner chunks
     root = tmp_path / "fill.zarr"
@@ -805,7 +793,7 @@ def test_zarr_v3_shard_fill_value_honored(spark, tmp_path):
     meta = json.loads((root / "zarr.json").read_text())
     meta["fill_value"] = 9
     (root / "zarr.json").write_text(json.dumps(meta))
-    got = _collect_vol(read_zarr_v3(spark, f"file://{root}"), vol.shape)
+    got = _collect_vol(_read(spark, "zarr_volume", f"file://{root}"), vol.shape)
     assert (got[0:2] == 9).all() and (got[2:4] == 7).all()
 
 
@@ -842,9 +830,10 @@ def test_zarr_v3_gates_exotic_index_codecs():
         zarr3_meta(meta)
 
 
-def test_open_chunk_store_preserves_gate_errors(spark, tmp_path):
+def test_chunk_store_preserves_gate_errors(spark, tmp_path):
     """A parsed-but-gated metadata file must surface its own message,
-    not fall through to an unrelated attributes.json error."""
+    not fall through to an unrelated attributes.json error — also when
+    the caller only asks whether a store is there."""
     root = tmp_path / "gated.zarr"
     root.mkdir()
     (root / "zarr.json").write_text(
@@ -867,7 +856,11 @@ def test_open_chunk_store_preserves_gate_errors(spark, tmp_path):
         )
     )
     with pytest.raises(ChunkStoreError, match="zfp"):
-        open_chunk_store(spark, f"file://{root}")
+        chunk_store(f"file://{root}")
+    with pytest.raises(ChunkStoreError, match="zfp"):
+        chunk_store(f"file://{root}", missing_ok=True)
+    with pytest.raises(Exception, match="zfp"):
+        _read(spark, "zarr_volume", f"file://{root}").collect()
 
 
 def test_crop_chunk_store_all_kinds(spark, tmp_path):
@@ -997,3 +990,37 @@ def test_cli_crop_depth_rejected_for_chunk_store(spark, tmp_path, capsys):
                 "--z", "0,2", "--y", "0,2", "--x", "0,2", "--depth", "1",
             ]
         )
+
+
+@pytest.mark.parametrize("kind", ["n5", "zarr2", "zarr3_sharded"])
+def test_truncated_chunk_names_its_key(spark, tmp_path, kind):
+    """A truncated chunk fails the DataSource read and the crop with a
+    ChunkStoreError that names the chunk's key, and the crop fails in
+    its tile cut, before any slice is written. (The N5 DataSource read
+    is also tests/test_datasource.py::test_corrupt_chunk_names_the_file.)"""
+    import re
+
+    from hortacloud_importer_spark.pipelines import crop_chunk_store
+
+    vol = np.arange(1, 65, dtype=np.uint16).reshape(4, 4, 4)
+    root = tmp_path / f"bad_{kind}"
+    if kind == "n5":
+        _write_n5(root, vol, (2, 4, 4))
+        key, fmt = "1/0/0", "n5_volume"
+    elif kind == "zarr2":
+        _write_zarr(root, vol, (4, 4, 2), None)
+        key, fmt = "0.0.1", "zarr_volume"
+    else:
+        _write_zarr_v3_sharded(root, vol, (4, 4, 2), (2, 4, 2), [])
+        key, fmt = "c/0/0/1", "zarr_volume"
+    chunk = root / key
+    chunk.write_bytes(chunk.read_bytes()[:-5])
+    named = rf"ChunkStoreError: bad .*chunk .*bad_{kind}/{re.escape(key)}: "
+    with pytest.raises(Exception, match=named):
+        _read(spark, fmt, root).collect()
+    out = tmp_path / f"crop_{kind}"
+    with pytest.raises(Exception, match=named):
+        crop_chunk_store(
+            spark, str(root), str(out), ((0, 4), (0, 4), (0, 4))
+        ).collect()
+    assert not out.exists() or not list(out.iterdir())

@@ -348,7 +348,7 @@ def test_simhash_budget_matches_duckdb_when_budget_fires(spark):
     )
 
     budgeted = simhash_pairs(
-        tokens, max_hamming=12, portable=True, per_doc_budget=2
+        tokens, max_hamming=12, per_doc_budget=2
     )
     got = sorted(
         (r.doc_a, r.doc_b, r.hamming) for r in budgeted.collect()

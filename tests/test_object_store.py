@@ -3,15 +3,16 @@ IO runs against S3-style stores, not just the local filesystem.
 
 Two independent proofs, matching the engine's two IO stacks:
 
-1. **pyarrow surfaces** (Python DataSource scans, the octree build's
-   block writes and manifest commit, resume probes) against a real in-process S3 REST
+1. **pyarrow surfaces** (Python DataSource scans, chunk-store probes,
+   listings and reads, the octree build's block writes and manifest
+   commit, resume probes) against a real in-process S3 REST
    endpoint (tests/s3_stub.py) over ``s3://`` URIs — ListObjectsV2,
    ranged GETs, multipart uploads, the lot. Also pins the
    ``s3a:// -> s3://`` alias (clusters configure the Hadoop spelling;
    pyarrow only speaks ``s3://``).
 
-2. **Hadoop-FileSystem surfaces** (driver-side hierarchy discovery,
-   N5 attribute JSON) via a compiled shim FileSystem registered as
+2. **Hadoop-FileSystem surfaces** (driver-side hierarchy discovery)
+   via a compiled shim FileSystem registered as
    ``fs.s3a.impl`` — proving the listing code is scheme-agnostic
    given any classpath implementation, exactly how hadoop-aws plugs
    into a real cluster. Runs in a subprocess so the shim can ride the
@@ -126,6 +127,50 @@ def test_s3_tiff_blocks_sink_writes_multipart(spark):
             assert np.array_equal(pages[..., 0].astype(np.int64), blk), rel
 
 
+def test_s3_chunk_stores_read_and_crop(spark, tmp_path):
+    """A3 over an object store: an N5 dataset and a sharded Zarr v3
+    array live only in the S3 endpoint. The store probe finds each
+    (the CLI's input detection), its DataSource reads it, and
+    ``crop_chunk_store`` exports a window of it; every read equals the
+    NumPy volume."""
+    from hortacloud_importer_spark.pipelines import crop_chunk_store
+    from hortacloud_importer_spark.sources.n5 import chunk_store
+    from tests.test_n5_zarr import _write_n5, _write_zarr_v3_sharded
+
+    rng = np.random.default_rng(17)
+    vol = rng.integers(1, 65535, (6, 7, 8), dtype=np.uint16)
+    _write_n5(tmp_path / "a.n5", vol, (4, 3, 2), "gzip")
+    _write_zarr_v3_sharded(tmp_path / "b.zarr", vol, (4, 4, 4), (2, 4, 4), [])
+    window = ((1, 5), (2, 6), (3, 8))
+    (z0, z1), (y0, y1), (x0, x1) = window
+    with S3Stub() as s3:
+        s3.store.buckets.add("cs")
+        for name, fmt in (("a.n5", "n5_volume"), ("b.zarr", "zarr_volume")):
+            for f in (tmp_path / name).rglob("*"):
+                if f.is_file():
+                    rel = f.relative_to(tmp_path).as_posix()
+                    s3.store.objects[("cs", rel)] = f.read_bytes()
+            root = s3.uri("cs", name)
+            assert chunk_store(root, missing_ok=True).format == fmt
+            got = np.zeros(vol.shape, dtype=np.int64)
+            rows = spark.read.format(fmt).load(root).collect()
+            assert len(rows) == vol.size, name
+            for r in rows:
+                got[r["z"], r["y"], r["x"]] = r["intensity"]
+            assert np.array_equal(got, vol), name
+            out = tmp_path / f"crop_{name}"
+            crop_chunk_store(spark, root, str(out), window).collect()
+            crop = np.stack(
+                [
+                    decode_tiff((out / f"default.0.{z:05d}.tif").read_bytes())[
+                        0, :, :, 0
+                    ]
+                    for z in range(z1 - z0)
+                ]
+            )
+            assert np.array_equal(crop, vol[z0:z1, y0:y1, x0:x1]), name
+
+
 def test_s3_resume_probe_fresh_store():
     """A11 resume: the pyarrow existence probe recognizes a fresh
     object-store prefix (nothing committed -> run everything) without
@@ -163,12 +208,9 @@ spark = (
     .getOrCreate()
 )
 from hortacloud_importer_spark.sources.hierarchy import discover_hierarchy
-from hortacloud_importer_spark.sources.n5 import _read_json
 
 layout = discover_hierarchy(spark, "s3a://" + store)
 assert layout == {0: [0, 1], 1: [0]}, layout
-attrs = _read_json(spark, "s3a://" + store + "/c0/s0/attributes.json")
-assert attrs["dimensions"] == [8, 8, 4], attrs
 print("S3A_OK")
 """
 
@@ -177,12 +219,10 @@ print("S3A_OK")
     not os.path.exists("/usr/bin/javac"), reason="no JDK for the shim"
 )
 def test_s3a_hadoop_fs_listing(tmp_path):
-    """A3 discovery + A5 attrs over ``s3a://`` URIs through the Hadoop
-    FileSystem API: a shim fs.s3a.impl on the driver classpath (local
-    disk behind it) stands in for hadoop-aws; the engine's listing
-    code runs unchanged."""
-    import json
-
+    """A3 discovery over ``s3a://`` URIs through the Hadoop FileSystem
+    API: a shim fs.s3a.impl on the driver classpath (local disk behind
+    it) stands in for hadoop-aws; the engine's listing code runs
+    unchanged."""
     import pyspark
 
     # shim classpath
@@ -203,9 +243,6 @@ def test_s3a_hadoop_fs_listing(tmp_path):
     store = tmp_path / "n5"
     for d in ("c0/s0", "c0/s1", "c1/s0"):
         (store / d).mkdir(parents=True)
-    (store / "c0/s0/attributes.json").write_text(
-        json.dumps({"dimensions": [8, 8, 4], "dataType": "uint16"})
-    )
     script = tmp_path / "probe.py"
     script.write_text(_SUBPROC)
     env = dict(os.environ)

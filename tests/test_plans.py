@@ -4,6 +4,8 @@ silently loses a pushdown/broadcast/TakeOrdered fails here."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from hortacloud_importer_spark.registry import all_queries
@@ -504,3 +506,20 @@ def test_minhash_signature_kernel_runs_once(spark, sf_dir):
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
     assert plan.count("MapInPandas text_signatures(") == 1, plan
     assert plan.count("ReusedExchange") >= 2, plan
+
+
+def test_simhash_signature_frame_is_exchanged_once_not_cached(spark, sf_dir):
+    """dedup_simhash caches nothing: its signature frame is exchanged
+    once by band, and the hot-band count and both join sides read that
+    exchange, so the token aggregation runs once."""
+    df = SPECS["dedup_simhash"].fn(spark, sf_dir)
+    assert "InMemoryRelation" not in (
+        df._jdf.queryExecution().optimizedPlan().toString()
+    )
+    plan = _final_plan(df)
+    assert "InMemoryTableScan" not in plan
+    # the per-(doc, token id) count, partial and final, once each
+    for fn in ("count", "partial_count"):
+        token_agg = rf"keys=\[doc_id#\d+L?, _h#\d+L?\], functions=\[{fn}\(1\)\]"
+        assert len(re.findall(token_agg, plan)) == 1, plan
+    assert "ReusedExchange" in plan, plan

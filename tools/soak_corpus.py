@@ -590,14 +590,12 @@ def _write_md(r: dict) -> None:
     if "dedup_minhash" in by_q and not r.get("unique"):
         lines += [
             "",
-            "dedup_minhash/dedup_simhash run the PORTABLE md5-derived "
-            "hash mode since round 13 (what makes them oracle-exact "
-            "including the bucket-cap guard). The md5 ids cost roughly "
-            "2x the xxhash64 mode's wall/shuffle (round-12 measured "
-            "the xxhash minhash at ~12s / 323 MiB on this corpus) — "
-            "the deliberate price of cross-engine replayability; the "
-            "xxhash64 mode stays available in operators/minhash.py "
-            "(portable=False) for throughput-first production runs.",
+            "dedup_minhash/dedup_simhash hash md5-derived ids "
+            "(what makes them oracle-exact including the bucket-cap "
+            "guard); their xxhash64 modes are gone. The md5 ids cost "
+            "roughly 2x the xxhash64 mode's wall/shuffle (round-12 "
+            "measured the xxhash minhash at ~12s / 323 MiB on this "
+            "corpus) — the price of cross-engine replayability.",
         ]
     if "text_ngram_ppx" in by_q:
         lines += [
