@@ -338,6 +338,8 @@ def tiff_octree_to_ktx(
     blocks = _block_file_groups(
         spark, store_root, depth, per_channel=not interleave, done=done, lz4=lz4
     )
+    # a failed conversion job leaves an opened store, not a foreign one
+    manifest.open_store(out_fs, out_base)
     rels = [
         r["rel"]
         for r in _write_ktx_blocks(

@@ -9,50 +9,56 @@ the engine's operators into exactly that run:
 
 - scan: a slice directory is listed once on the driver
   (``_list_slices``: z order, the first slice's header per channel),
-  and one ``mapInPandas`` kernel reads, decodes and tiles each slice
-  by path on the executors (``_slice_pieces``; A1/A2) — the
+  and each first-pass task reads its own subtree's window of every
+  slice in its z-range by path (``_slice_pass``; A1/A2) — the
   reference's lazy per-block read (tiff2octree.py:689), with no
-  DataSource planning and no voxel rows. Any (z, y, x, channel,
-  intensity) DataFrame the caller provides works too (N5/Zarr via
-  ``n5_volume``/``zarr_volume``, parquet, …);
+  DataSource planning, no voxel rows and no exchange. Any (z, y, x,
+  channel, intensity) DataFrame the caller provides works too
+  (N5/Zarr via ``n5_volume``/``zarr_volume``, parquet, …);
 - dims: a slice directory's from its listing and first header (the
   reference infers from the first file, tiff2octree.py:653-691); a
   DataFrame's from one tiny aggregate when not given;
 - blocks: leaf-grid granularity — 2^(nlevels-1) blocks per axis, the
   reference's calc_optimal_nlevels arrangement
-  (tiff2octree.py:618-626). Slices are cut into packed one-plane
-  uint16 tiles in the scan kernel; DataFrame sources go through
-  ``densify`` + ``blockify`` (``_block_pieces``);
-- pyramid and sink: passes of ONE grouped kernel per subtree
-  (``_subtree_pass``). A pass groups its pieces by their ancestor s
-  levels up (s from ``_SUBTREE_BYTES``: the most levels whose 8^s
-  pieces fit the per-task budget; a first pass over blocks too big
-  for it spans 0 levels and writes each leaf alone), assembles each
-  group's region, halves it level by level (``np_halve``; the
-  ``KERNELS`` function per block for aa/spline3) and writes every
-  non-empty block of every level it spans as octree-path ZLIB TIFF (A6,
-  ``datasource.write_tiff_block``) from inside the kernel. Every
-  level reuses the same leaf block DIMS, half the block COUNT per
-  axis (ktx/util.py:223-239), so level k lands at octree depth
-  nlevels-1-k — the root block is the lowest-resolution mip. The
-  next pass starts from the group roots; at small sizes one pass
-  builds the whole tree with one shuffle (the tiles);
-- commit: the driver appends ONE manifest shard per pass naming the
-  paths the kernels returned (sources/manifest.py); the per-level
-  summary counts those paths by depth;
+  (tiff2octree.py:618-626). Slice windows land on the region canvas
+  directly; DataFrame sources go through ``densify`` + ``blockify``
+  (``_block_pieces``);
+- pyramid and sink: passes of ONE kernel per subtree. A pass spans
+  the most levels whose 8^s pieces fit the per-task budget
+  (``_SUBTREE_BYTES``; a first pass over blocks too big for it spans
+  0 levels and writes each leaf alone). Each (subtree, channel)
+  task assembles its region, halves it level by level (``np_halve``;
+  the ``KERNELS`` function per block for aa/spline3) and writes every
+  non-empty block of every level it spans as octree-path ZLIB TIFF
+  (A6, ``datasource.write_tiff_block``) from inside the kernel
+  (``_region_build``). Every level reuses the same leaf block DIMS,
+  half the block COUNT per axis (ktx/util.py:223-239), so level k
+  lands at octree depth nlevels-1-k — the root block is the
+  lowest-resolution mip. A slice directory's first pass is a map
+  over a local list of subtree roots; every later pass groups the
+  previous pass's roots by subtree (``_subtree_pass``, one exchange
+  of roots 8^s times smaller than the volume), as does the first
+  pass over a DataFrame's blocks. At small sizes one pass builds the
+  whole tree with no exchange at all;
+- commit: the driver opens the store (``manifest.open_store``), then
+  appends ONE manifest shard per pass naming the paths the kernels
+  returned (sources/manifest.py); the per-level summary counts those
+  paths by depth;
 - resume (C4/A11): the manifest's committed set is read on the
   driver and parsed once per build (``manifest.committed_files``,
-  ``parse_block_rel``); each pass hands the names it owns, keyed by
-  subtree, to its kernel as a local relation cogrouped on the subtree
-  key, so a task holds only its own. The pyramid is always
-  recomputed from the source and a committed file is never
-  rewritten — the distributed dual of the reference's per-block
-  existence checks (tiff2octree.py:359-368, 1040-1041).
+  ``parse_block_rel``); each pass gets the names it owns, keyed by
+  subtree (``_owned``) — in the first pass's work rows, or as a
+  local relation cogrouped on the subtree key — so a task holds only
+  its own. The pyramid is always recomputed from the source and a
+  committed file is never rewritten — the distributed dual of the
+  reference's per-block existence checks (tiff2octree.py:359-368,
+  1040-1041).
 
-One source scan, one shuffle per pass, no driver-side payloads, and
-per-task memory bounded by one subtree region: ``_SUBTREE_BYTES`` of
-int32 canvas, or one leaf block when that alone is bigger (eight for
-odd block dims), plus ``np_halve``'s temporaries.
+One source read, no exchange in a slice directory's first pass, no
+driver-side payloads, and per-task memory bounded by one subtree
+region: ``_SUBTREE_BYTES`` of int32 canvas, or one leaf block when
+that alone is bigger (eight for odd block dims), plus ``np_halve``'s
+temporaries.
 """
 
 from __future__ import annotations
@@ -164,92 +170,10 @@ def _check_z_run(slices: list[str], suffix: str) -> None:
             )
 
 
-def _slice_pieces(
-    spark: SparkSession,
-    files: list[list[str]],
-    shapes: list[tuple[int, int] | None],
-    block_dims: tuple[int, int, int],
-    padded_dims: tuple[int, int, int],
-) -> DataFrame:
-    """Leaf pieces of a slice directory (:func:`_list_slices`): one
-    ``mapInPandas`` kernel reads each slice by path, decodes it and
-    checks its shape against its channel's first slice
-    (``datasource._read_slice``), and cuts it into per-(yi, xi) block
-    tiles — one z plane of one leaf block per row (``lz`` = plane
-    within the block), raw uint16 bytes. The kernel's input is the
-    (path, z, channel) work list, built locally (no shuffle, spread
-    over ``defaultParallelism`` tasks); a task yields one frame per
-    slice, so it holds one slice at a time. Slices past the padded
-    grid are left out (one channel listing more files than the dims
-    were inferred from must not alias onto an in-grid octree path).
-
-    The first subtree pass's shuffle groups the tiles, so no slice is
-    ever exploded to voxel rows. Y/X zero-padding happens on the tile
-    canvas at cut time; missing z tiles (z padding) zero-fill on the
-    kernel's region canvas."""
-    import pandas as pd
-
-    bz, by, bx = block_dims
-    pz = padded_dims[0]
-    gy, gx = padded_dims[1] // by, padded_dims[2] // bx
-    first = {
-        ch: (slices[0], shapes[ch]) for ch, slices in enumerate(files) if slices
-    }
-
-    def cut(batches):
-        import numpy as np
-
-        from hortacloud_importer_spark.sources.datasource import _read_slice
-
-        for pdf in batches:
-            for row in pdf.itertuples():
-                z, ch = int(row.z), int(row.channel)
-                arr = _read_slice(row.path, first[ch])
-                # uint16 is lossless for every supported slice source
-                # (TIFF/JP2 decode to uint8/uint16) and HALVES the raw
-                # bytes of the build's dominant shuffle vs int32 tiles
-                page = np.zeros((gy * by, gx * bx), dtype=np.uint16)
-                h, w = min(arr.shape[0], gy * by), min(arr.shape[1], gx * bx)
-                page[:h, :w] = arr[:h, :w]
-                out = []
-                for yi in range(gy):
-                    for xi in range(gx):
-                        tile = page[
-                            yi * by : (yi + 1) * by,
-                            xi * bx : (xi + 1) * bx,
-                        ]
-                        if not tile.any():
-                            # skip-empty at TILE grain: the region
-                            # canvas zero-fills missing z-tiles, so an
-                            # all-zero tile shuffles nothing — on
-                            # blob-sparse microscopy most tiles are
-                            # background
-                            continue
-                        # raw little-endian bytes, not an int list:
-                        # Arrow binary cells move as one buffer
-                        out.append(
-                            (z // bz, yi, xi, ch, z % bz,
-                             tile.astype("<u2").tobytes())
-                        )
-                yield pd.DataFrame(out, columns=_PIECE_COLS)
-
-    work = pd.DataFrame(
-        [
-            (p, z, ch)
-            for ch, slices in enumerate(files)
-            for z, p in enumerate(slices[:pz])
-        ],
-        columns=["path", "z", "channel"],
-    )
-    return spark.createDataFrame(
-        work, "path string, z int, channel int"
-    ).mapInPandas(cut, _PIECE_SCHEMA)
-
-
 def _block_pieces(blocks: DataFrame) -> DataFrame:
-    """blockify rows as whole-block pieces (``lz`` 0, raw int32 bytes:
-    DataFrame sources may carry wider intensities than uint16, and the
-    sink narrows them as it always has)."""
+    """blockify rows as whole-block pieces (raw int32 bytes: DataFrame
+    sources may carry wider intensities than uint16, and the sink
+    narrows them as it always has)."""
     import pandas as pd
 
     def pack(batches):
@@ -262,7 +186,6 @@ def _block_pieces(blocks: DataFrame) -> DataFrame:
                     "yi": pdf["yi"],
                     "xi": pdf["xi"],
                     "channel": pdf["channel"],
-                    "lz": 0,
                     "piece": [
                         np.asarray(v, dtype="<i4").tobytes()
                         for v in pdf["voxels"]
@@ -280,13 +203,13 @@ def _block_pieces(blocks: DataFrame) -> DataFrame:
 # to a task's peak.
 _SUBTREE_BYTES = 64 << 20
 
-# A piece is whole z planes of one block at the pass's input level:
-# leaf tiles (one plane at ``lz``), blockify rows and the previous
-# pass's group roots (whole, ``lz`` 0).
-_PIECE_COLS = ["zi", "yi", "xi", "channel", "lz", "piece"]
-_PIECE_SCHEMA = "zi int, yi int, xi int, channel int, lz int, piece binary"
+# A piece is one whole int32 block at the pass's input level:
+# blockify rows, or the previous pass's group roots.
+_PIECE_COLS = ["zi", "yi", "xi", "channel", "piece"]
+_PIECE_SCHEMA = "zi int, yi int, xi int, channel int, piece binary"
 # One row per written file (``rel``) plus one per group carrying its
 # skip count and, unless the pass is the last, its root as a piece.
+_PASS_COLS = ["rel", "n_skipped", *_PIECE_COLS]
 _PASS_SCHEMA = "rel string, n_skipped int, " + _PIECE_SCHEMA
 
 
@@ -312,9 +235,23 @@ def _pass_levels(block_dims: tuple[int, int, int], roots: bool) -> int:
     return s
 
 
-def _subtree_pass(
-    pieces: DataFrame,
-    done: list[BlockFile],
+def _owned(
+    done: list[BlockFile], nlevels: int, first: int, hi: int
+) -> dict[tuple[int, int, int, int], list[str]]:
+    """The committed files of the levels ``first``..``hi`` a pass
+    writes, bucketed by the (gz, gy, gx, channel) subtree that owns
+    them: a level-L coordinate shifts up hi - L levels, and
+    L = nlevels - 1 - depth."""
+    owned: dict[tuple[int, int, int, int], list[str]] = {}
+    for f in done:
+        up = f.depth + hi - nlevels + 1
+        if 0 <= up <= hi - first:
+            key = (f.zi >> up, f.yi >> up, f.xi >> up, f.channel)
+            owned.setdefault(key, []).append(f.rel)
+    return owned
+
+
+def _region_build(
     out_dir: str,
     nlevels: int,
     lo: int,
@@ -322,17 +259,17 @@ def _subtree_pass(
     block_dims: tuple[int, int, int],
     filter_: str,
     dtype: str,
-    piece_dtype: str,
     roots: bool,
-) -> DataFrame:
-    """One pass of the subtree build: pieces at level ``lo`` — leaf
-    pieces, or the previous pass's ``roots`` (halved to level
-    ``lo + 1`` when the block dims are even) — are grouped by their
-    ancestor at level ``hi``; one grouped-map task per (subtree,
-    channel) assembles the region, writes every non-empty block of
-    every level from ``lo`` (``lo + 1`` for roots: the previous pass
-    wrote level ``lo``) up to the root at ``hi``, and returns the
-    written paths plus the root as the next pass's piece.
+):
+    """The build both pass forms run on one (subtree, channel) region:
+    ``build(region, gz, gy, gx, channel, committed)`` takes the int32
+    region at level ``lo`` (``lo + 1`` when the pieces are a previous
+    pass's halved ``roots``), writes every non-empty block of every
+    level from ``lo`` (``lo + 1`` for roots: the previous pass wrote
+    level ``lo``) up to the root at ``hi``, leaving out the names in
+    ``committed``, and returns the written paths plus one row with the
+    skip count and, unless ``hi`` is the top level, the root as the
+    next pass's piece.
 
     Halving: mean/max/arthur halve the whole region with
     :func:`np_halve` (its extent is 2^k blocks, so pairs never
@@ -340,18 +277,7 @@ def _subtree_pass(
     2x2x2 children, for odd block dims too); aa/spline3 apply their
     ``KERNELS`` function per block and tile the halves. Roots ship
     halved when every block dim is even (8x fewer bytes in the next
-    shuffle), whole otherwise.
-
-    ``done`` (the store's committed block files, parsed once per
-    build) gives the pass the committed names of the levels it
-    writes, keyed on the driver by the subtree that owns them. That local relation is cogrouped on
-    the same key, so a task gets only its own names and skips those
-    files; a pass that owns none skips the cogroup. The pyramid is
-    always recomputed from the source, and a committed file is never
-    rewritten."""
-    import pandas as pd
-
-    span = hi - lo
+    exchange), whole otherwise."""
     bz, by, bx = block_dims
     even = not (bz % 2 or by % 2 or bx % 2)
     halved = roots and even
@@ -381,22 +307,10 @@ def _subtree_pass(
             )
         return out
 
-    def build(key, pdf, committed):
+    def build(region, gz, gy, gx, ch, committed):
         import numpy as np
+        import pandas as pd
 
-        gz, gy, gx, ch = (int(k) for k in key)
-        if pdf.empty:
-            return pd.DataFrame(columns=["rel", "n_skipped", *_PIECE_COLS])
-        # piece extent at the region's first level
-        pz, py, px = (b // 2 for b in block_dims) if halved else block_dims
-        n = 1 << span  # pieces per axis
-        region = np.zeros((n * pz, n * py, n * px), dtype=np.int32)
-        for row in pdf.itertuples():
-            arr = np.frombuffer(row.piece, dtype=piece_dtype).reshape(-1, py, px)
-            z0 = (int(row.zi) - (gz << span)) * pz + int(row.lz)
-            y0 = (int(row.yi) - (gy << span)) * py
-            x0 = (int(row.xi) - (gx << span)) * px
-            region[z0 : z0 + arr.shape[0], y0 : y0 + py, x0 : x0 + px] = arr
         filesystem, base = _pa_fs(out_dir)
         base = base.rstrip("/")
         made_dirs: set[str] = set()
@@ -422,14 +336,163 @@ def _subtree_pass(
                     if rel is None:
                         skipped += 1
                     else:
-                        rows.append((rel, 0, 0, 0, 0, 0, 0, None))
+                        rows.append((rel, 0, 0, 0, 0, 0, None))
             if level < hi:
                 region = halve(region)
         root = None
         if not last:
             root = (halve(region) if even else region).astype("<i4").tobytes()
-        rows.append((None, skipped, gz, gy, gx, ch, 0, root))
-        return pd.DataFrame(rows, columns=["rel", "n_skipped", *_PIECE_COLS])
+        rows.append((None, skipped, gz, gy, gx, ch, root))
+        return pd.DataFrame(rows, columns=_PASS_COLS)
+
+    return build
+
+
+def _slice_work(
+    files: list[list[str]],
+    owned: dict[tuple[int, int, int, int], list[str]],
+    span: int,
+    block_dims: tuple[int, int, int],
+    padded: tuple[int, int, int],
+):
+    """The first pass's work list over a slice directory: one row per
+    (gz, gy, gx, channel) subtree root spanning ``span`` levels, with
+    the z-range of its channel's slice paths and the committed names
+    it owns. Slices past the padded grid are left out (one channel
+    listing more files than the dims were inferred from must not alias
+    onto an in-grid octree path), and so is a subtree with no slice:
+    it is z padding, all zero."""
+    import pandas as pd
+
+    ez, ey, ex = (b << span for b in block_dims)  # region extent
+    rows = []
+    for ch, slices in enumerate(files):
+        for gz in range(padded[0] // ez):
+            paths = slices[gz * ez : min((gz + 1) * ez, padded[0])]
+            if not paths:
+                continue
+            for gy in range(padded[1] // ey):
+                for gx in range(padded[2] // ex):
+                    key = (gz, gy, gx, ch)
+                    rows.append((*key, paths, owned.get(key, [])))
+    return pd.DataFrame(
+        rows, columns=["gz", "gy", "gx", "channel", "paths", "owned"]
+    )
+
+
+def _slice_pass(
+    spark: SparkSession,
+    files: list[list[str]],
+    shapes: list[tuple[int, int] | None],
+    done: list[BlockFile],
+    out_dir: str,
+    nlevels: int,
+    hi: int,
+    block_dims: tuple[int, int, int],
+    padded: tuple[int, int, int],
+    filter_: str,
+    dtype: str,
+) -> DataFrame:
+    """The first pass over a slice directory (:func:`_list_slices`),
+    in one hop: one ``mapInPandas`` kernel over the local relation of
+    :func:`_slice_work` rows (no shuffle, ``defaultParallelism`` tasks
+    at most). Each row reads the window of its subtree from each slice
+    of its z-range by path into the int32 region canvas
+    (``datasource._read_slice``: the page count and shape are checked
+    against the channel's first slice before any payload is decoded,
+    then only the strips or tiles the window touches are), and runs
+    the region build (:func:`_region_build`) over levels 0..``hi``.
+    A task holds one region at a time. Y/X/Z zero padding is the
+    canvas's; an all-zero region writes nothing."""
+    build = _region_build(
+        out_dir, nlevels, 0, hi, block_dims, filter_, dtype, False
+    )
+    ez, ey, ex = (b << hi for b in block_dims)
+    first = {
+        ch: (slices[0], shapes[ch]) for ch, slices in enumerate(files) if slices
+    }
+
+    def read(batches):
+        import numpy as np
+
+        from hortacloud_importer_spark.sources.datasource import _read_slice
+
+        for pdf in batches:
+            for row in pdf.itertuples():
+                gz, gy, gx, ch = (
+                    int(row.gz), int(row.gy), int(row.gx), int(row.channel)
+                )
+                window = (gy * ey, (gy + 1) * ey, gx * ex, (gx + 1) * ex)
+                region = np.zeros((ez, ey, ex), dtype=np.int32)
+                for z, path in enumerate(row.paths):
+                    arr = _read_slice(path, first[ch], window=window)
+                    region[z, : arr.shape[0], : arr.shape[1]] = arr
+                if region.any():
+                    yield build(region, gz, gy, gx, ch, frozenset(row.owned))
+
+    work = _slice_work(
+        files, _owned(done, nlevels, 0, hi), hi, block_dims, padded
+    )
+    return spark.createDataFrame(
+        work,
+        "gz int, gy int, gx int, channel int, paths array<string>, "
+        "owned array<string>",
+    ).mapInPandas(read, _PASS_SCHEMA)
+
+
+def _subtree_pass(
+    pieces: DataFrame,
+    done: list[BlockFile],
+    out_dir: str,
+    nlevels: int,
+    lo: int,
+    hi: int,
+    block_dims: tuple[int, int, int],
+    filter_: str,
+    dtype: str,
+    roots: bool,
+) -> DataFrame:
+    """One grouped pass of the subtree build: pieces at level ``lo`` —
+    whole blocks of a DataFrame source, or the previous pass's
+    ``roots`` (halved to level ``lo + 1`` when the block dims are
+    even) — are grouped by their ancestor at level ``hi``; one
+    grouped-map task per (subtree, channel) assembles the region and
+    runs the region build (:func:`_region_build`).
+
+    ``done`` (the store's committed block files, parsed once per
+    build) gives the pass the committed names of the levels it
+    writes, keyed on the driver by the subtree that owns them
+    (:func:`_owned`). That local relation is cogrouped on the same
+    key, so a task gets only its own names and skips those files; a
+    pass that owns none skips the cogroup. The pyramid is always
+    recomputed from the source, and a committed file is never
+    rewritten."""
+    import pandas as pd
+
+    span = hi - lo
+    build = _region_build(
+        out_dir, nlevels, lo, hi, block_dims, filter_, dtype, roots
+    )
+    halved = roots and not any(b % 2 for b in block_dims)
+    # piece extent at the region's first level
+    pz, py, px = (b // 2 for b in block_dims) if halved else block_dims
+    n = 1 << span  # pieces per axis
+
+    def assemble(key, pdf, committed):
+        import numpy as np
+
+        gz, gy, gx, ch = (int(k) for k in key)
+        if pdf.empty:
+            return pd.DataFrame(columns=_PASS_COLS)
+        region = np.zeros((n * pz, n * py, n * px), dtype=np.int32)
+        for row in pdf.itertuples():
+            z0 = (int(row.zi) - (gz << span)) * pz
+            y0 = (int(row.yi) - (gy << span)) * py
+            x0 = (int(row.xi) - (gx << span)) * px
+            region[z0 : z0 + pz, y0 : y0 + py, x0 : x0 + px] = np.frombuffer(
+                row.piece, dtype="<i4"
+            ).reshape(pz, py, px)
+        return build(region, gz, gy, gx, ch, committed)
 
     keys = [
         F.shiftright("zi", span).alias("gz"),
@@ -438,26 +501,22 @@ def _subtree_pass(
         F.col("channel"),
     ]
     grouped = pieces.groupBy(*keys)
-    # committed files of the levels this pass writes, keyed by the
-    # subtree that owns them: a level-L coordinate shifts up hi - L
-    # levels, and L = nlevels - 1 - depth
-    owned = [
-        (f.rel, f.zi >> up, f.yi >> up, f.xi >> up, f.channel)
-        for f in done
-        if 0 <= (up := f.depth + hi - nlevels + 1) <= hi - first
-    ]
+    owned = _owned(done, nlevels, lo + 1 if roots else lo, hi)
     if not owned:
         return grouped.applyInPandas(
-            lambda key, pdf: build(key, pdf, frozenset()), _PASS_SCHEMA
+            lambda key, pdf: assemble(key, pdf, frozenset()), _PASS_SCHEMA
         )
     committed = pieces.sparkSession.createDataFrame(
-        pd.DataFrame(owned, columns=["rel", "gz", "gy", "gx", "channel"]),
+        pd.DataFrame(
+            [(rel, *key) for key, rels in owned.items() for rel in rels],
+            columns=["rel", "gz", "gy", "gx", "channel"],
+        ),
         "rel string, gz int, gy int, gx int, channel int",
     )
     return grouped.cogroup(
         committed.groupBy("gz", "gy", "gx", "channel")
     ).applyInPandas(
-        lambda key, pdf, rels: build(key, pdf, frozenset(rels["rel"])),
+        lambda key, pdf, rels: assemble(key, pdf, frozenset(rels["rel"])),
         _PASS_SCHEMA,
     )
 
@@ -703,9 +762,9 @@ def build_octree(
 ) -> DataFrame:
     """Run the full slices -> octree-of-TIFF-blocks build.
 
-    ``source``: a slice directory (each slice read by path in the
-    tile-cut kernel, ``_slice_pieces``) or a voxels DataFrame — which
-    must be DENSE (one row per coordinate, zeros present;
+    ``source``: a slice directory (each subtree's window of each slice
+    read by path in the first pass, ``_slice_pass``) or a voxels
+    DataFrame — which must be DENSE (one row per coordinate, zeros present;
     ``volume.densify`` converts sparse sources) because block payloads
     reshape to full block extent.
     Returns the per-level accounting (level, n_blocks_written,
@@ -756,8 +815,7 @@ def build_octree(
         )
 
     # the committed block files, read and parsed once per build; each
-    # pass cogroups the names it owns with its subtrees, so a task
-    # holds only its own
+    # pass hands every subtree task the names it owns, and no more
     filesystem, base = _pa_fs(out_dir)
     committed = manifest.committed_files(filesystem, base) if resume else None
     done = [f for f in map(parse_block_rel, committed or ()) if f is not None]
@@ -773,12 +831,8 @@ def build_octree(
             voxels.agg(F.countDistinct("channel").alias("c")).first()["c"]
         )
     padded = tuple(b * leaf_grid for b in block_dims)
-    if isinstance(source, str):
-        # leaf tiles, cut in-executor (y/x/z zero-pad on the tile and
-        # region canvases — no densify grid join); uint16 pieces
-        pieces = _slice_pieces(spark, files, shapes, block_dims, padded)
-        piece_dtype = "<u2"
-    else:
+    pieces = None  # a slice directory's first pass reads the slices
+    if not isinstance(source, str):
         if padded != dims:
             # Non-divisible dims leave edge blocks partial, which
             # cannot reshape to block extent; zero-pad to the grid
@@ -790,21 +844,27 @@ def build_octree(
             # dims aren't grid-aligned.
             voxels = densify(voxels, spark, padded, channels=n_channels)
         pieces = _block_pieces(blockify(voxels, block_dims))
-        piece_dtype = "<i4"
 
-    # Passes of one grouped kernel per subtree: each pass writes the
-    # levels lo..hi of its subtrees and commits ONE manifest shard; the
-    # next pass starts from the group roots. The source is scanned once;
-    # a pass's output (paths + roots, 8^s times smaller than its input)
+    # Passes of one kernel per subtree: each pass writes the levels
+    # lo..hi of its subtrees and commits ONE manifest shard; the next
+    # pass starts from the group roots. The source is read once; a
+    # pass's output (paths + roots, 8^s times smaller than its input)
     # is persisted only when another pass reads it.
+    manifest.open_store(filesystem, base)
     written = [0] * nlevels
     lo, roots, prev = 0, False, None
     while True:
         hi = min(lo + _pass_levels(block_dims, roots), nlevels - 1)
-        out = _subtree_pass(
-            pieces, done, out_dir, nlevels, lo, hi, block_dims,
-            filter_, dtype, piece_dtype, roots,
-        )
+        if pieces is None:
+            out = _slice_pass(
+                spark, files, shapes, done, out_dir, nlevels, hi,
+                block_dims, padded, filter_, dtype,
+            )
+        else:
+            out = _subtree_pass(
+                pieces, done, out_dir, nlevels, lo, hi, block_dims,
+                filter_, dtype, roots,
+            )
         if hi < nlevels - 1:
             out = out.persist(StorageLevel.MEMORY_AND_DISK)
         rows = out.select("rel", "n_skipped").collect()
@@ -820,7 +880,6 @@ def build_octree(
         if hi == nlevels - 1:
             break
         pieces = out.filter(F.col("piece").isNotNull()).select(*_PIECE_COLS)
-        piece_dtype = "<i4"
         lo, roots, prev = hi, True, out
     summary_rows = []
     cur_dims = padded

@@ -388,27 +388,37 @@ def _decode_slice_pages(
         return pages
     from hortacloud_importer_spark.sources.tiff import decode_tiff
 
-    pages = _named(path, decode_tiff, data)
-    if pages.dtype.kind == "f":
-        if float_mode == "requant":
-            return _requant_float_pages(pages)
+    return _integer_samples(path, _named(path, decode_tiff, data), float_mode)
+
+
+def _integer_samples(path: str, arr: np.ndarray, float_mode: str) -> np.ndarray:
+    """Float samples requantized to uint16 or refused (``float_mode``);
+    integer samples as they are."""
+    if arr.dtype.kind != "f":
+        return arr
+    if float_mode == "requant":
+        return _requant_float_pages(arr)
+    raise ValueError(
+        f"{path}: float32 samples need float_mode='requant' "
+        "(uint16 requant at ingest); the voxel model is integer"
+    )
+
+
+def _check_one_page(path: str, shape: tuple[int, int, int, int]) -> None:
+    """A slice file is one single-sample page: (pages, h, w, samples)."""
+    if shape[0] != 1 or shape[3] != 1:
         raise ValueError(
-            f"{path}: float32 samples need float_mode='requant' "
-            "(uint16 requant at ingest); the voxel model is integer"
+            f"{path}: slice file has shape {tuple(shape)}; one single-sample "
+            "z-slice per file expected (stacks/channels go through "
+            "queries/scans.py)"
         )
-    return pages
 
 
 def _slice_array(data: bytes, path: str = ".tif",
                  float_mode: str = "raise") -> np.ndarray:
     """One z-slice file -> its 2-D page."""
     pages = _decode_slice_pages(data, path, float_mode)
-    if pages.shape[0] != 1 or pages.shape[3] != 1:
-        raise ValueError(
-            f"{path}: slice file has shape {pages.shape}; one single-sample "
-            "z-slice per file expected (stacks/channels go through "
-            "queries/scans.py)"
-        )
+    _check_one_page(path, pages.shape)
     return pages[0, :, :, 0]
 
 
@@ -447,21 +457,66 @@ def _read_slice(
     path: str,
     first: tuple[str, tuple[int, int]] | None,
     float_mode: str = "raise",
+    window: tuple[int, int, int, int] | None = None,
+    stats: dict | None = None,
 ) -> np.ndarray:
-    """Read one z-slice file by path and decode its page. Every slice
-    of a volume must have the page shape of ``first`` (the volume's
-    first slice and its shape, when known): a different one fails the
-    read, naming the file and both shapes, instead of being cropped or
-    zero-padded into the volume downstream. Decode errors keep the
-    codec's named class (``_slice_array``)."""
-    arr = _slice_array(_read_bytes(path), path, float_mode)
-    if first is not None and arr.shape != first[1]:
+    """Read one z-slice file by path and decode its page, or only the
+    ``window`` (y0, y1, x0, x1; clipped to the page) of it. Every slice
+    of a volume must be one single-sample page with the shape of
+    ``first`` (the volume's first slice and its shape, when known): a
+    different one fails the read, naming the file and both shapes,
+    instead of being cropped or zero-padded into the volume
+    downstream. Decode errors keep the codec's named class and start
+    with the path.
+
+    A TIFF is read by seek: its header walk checks the page count and
+    shape, then only the strips or tiles the window touches are
+    fetched and decoded (only the rows of an uncompressed strip). A
+    JPEG 2000 slice decodes whole and is cropped. ``stats`` counts the
+    payload bytes read (``bytes_read``) against the slice's
+    (``bytes_total``)."""
+    if _is_jp2(path):
+        data = _read_bytes(path)
+        arr = _slice_array(data, path, float_mode)
+        _check_slice_shape(path, arr.shape, first)
+        if stats is not None:
+            stats["bytes_read"] = stats.get("bytes_read", 0) + len(data)
+            stats["bytes_total"] = stats.get("bytes_total", 0) + len(data)
+        if window is None:
+            return arr
+        y0, y1, x0, x1 = window
+        return arr[y0:y1, x0:x1]
+    from hortacloud_importer_spark.sources.tiff import (
+        decode_stack_page,
+        page_shape,
+        tiff_page_table,
+    )
+
+    filesystem, p = _pa_fs(path)
+    with filesystem.open_input_file(p) as fh:
+        ec, ifds = _named(path, tiff_page_table, fh)
+        h, w, spp = _named(path, page_shape, ifds[0])
+        _check_one_page(path, (len(ifds), h, w, spp))
+        _check_slice_shape(path, (h, w), first)
+        arr = _named(
+            path,
+            lambda f: decode_stack_page(f, ec, ifds[0], window, stats),
+            fh,
+        )[..., 0]
+    return _integer_samples(path, arr, float_mode)
+
+
+def _check_slice_shape(
+    path: str,
+    shape: tuple[int, int],
+    first: tuple[str, tuple[int, int]] | None,
+) -> None:
+    if first is not None and tuple(shape) != tuple(first[1]):
         raise ValueError(
-            f"{path}: slice shape {arr.shape} differs from the first "
+            f"{path}: slice shape {tuple(shape)} differs from the first "
             f"slice {first[0]}, {first[1]}; every slice of a volume must "
             "have one shape"
         )
-    return arr
 
 
 def _slice_batches(partition: _SlicePartition, emit: str, float_mode: str):

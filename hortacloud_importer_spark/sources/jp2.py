@@ -129,14 +129,14 @@ def check_jp2_uint16(data: bytes, path: str = "<jp2>") -> None:
     admission rule TIFF ingest enforces via ``_page_dtype`` (uint8/
     uint16 only). Called at plan time (pipelines/octree.py
     ``_list_slices``) so a 32-bit or signed JP2 slice fails the build
-    up front rather than wrapping modulo 2^16 inside the tile-cut
-    kernel (``_slice_pieces``)."""
+    up front rather than being narrowed to the uint16 store inside the
+    first pass's kernel (``_slice_pass``)."""
     depth, signed = jp2_sample_format(data)
     if signed or depth > 16:
         raise Jp2ParseError(
             f"{path}: JP2 samples are {'signed ' if signed else ''}"
             f"{depth}-bit; octree ingest supports unsigned <=16-bit "
-            "samples only (uint16 tile shuffle would wrap the values)"
+            "samples only (the uint16 store would wrap the values)"
         )
 
 

@@ -33,7 +33,9 @@ commit it, so the set costs no more driver memory than that:
   (sources/block_store.py::block_files), and the KTX pass leaves out
   the blocks it names;
 - the octree build parses it once per build and hands each pass the
-  names that pass owns, cogrouped with the subtree kernel;
+  names that pass owns: as a column of the first pass's work rows
+  over a slice directory, cogrouped with the subtree kernel in the
+  other passes;
 - the shard and fingerprint stores take their resume ids from it
   (:func:`committed_ids`) and read back exactly the files it names
   (:func:`read_committed`).
@@ -41,7 +43,10 @@ commit it, so the set costs no more driver memory than that:
 Every file sink in the engine commits through this module in four
 steps: write each data file with :func:`staged_output`, append one
 shard with :func:`write_commit`, resume from the committed set, and
-read back only committed files.
+read back only committed files. A store whose first write job may
+fail after some of its tasks wrote files is opened first
+(:func:`open_store`), so its leftovers are never read as a foreign
+store's data.
 """
 
 from __future__ import annotations
@@ -52,6 +57,9 @@ from contextlib import contextmanager
 
 SHARD_DIR = "_manifest"
 LEGACY = "_MANIFEST.json"
+# an empty file in the shard directory: the store is this engine's,
+# even before its first commit
+OPENED = "opened"
 
 
 def _shard_base(base: str) -> str:
@@ -109,6 +117,18 @@ def write_commit(filesystem, base: str, files: list[str], n_skipped: int = 0) ->
     return shard_id
 
 
+def open_store(filesystem, base: str) -> None:
+    """Mark ``base`` as a store this engine writes, before its first
+    write job: a failed first job then leaves a store with nothing
+    committed (:func:`committed_files` is empty, not None), and every
+    reader skips the files its tasks left. The marker is no commit
+    shard, so it adds nothing to the committed set or the summaries."""
+    sdir = _shard_base(base)
+    filesystem.create_dir(sdir, recursive=True)
+    with staged_output(filesystem, f"{sdir}/{OPENED}"):
+        pass
+
+
 def _shard_infos(filesystem, base: str):
     """The shard directory's files; none when it does not exist. Any
     other listing error (a ``_manifest`` that is not a directory, a
@@ -148,15 +168,13 @@ def _legacy_manifest(filesystem, base: str) -> dict | None:
 def committed_files(filesystem, base: str) -> set[str] | None:
     """The committed set, or None when the store has no manifest at
     all (a fresh store, or a foreign one such as the reference's own
-    output): one listing of the shard directory, on the driver."""
-    shards = [
-        i.path
-        for i in _shard_infos(filesystem, base)
-        if i.base_name.endswith(".files.txt")
-    ]
+    output; an opened store has one, see :func:`open_store`): one
+    listing of the shard directory, on the driver."""
+    infos = _shard_infos(filesystem, base)
+    shards = [i.path for i in infos if i.base_name.endswith(".files.txt")]
     legacy = _legacy_manifest(filesystem, base)
     if not shards and legacy is None:
-        return None
+        return set() if any(i.base_name == OPENED for i in infos) else None
     out = set(legacy.get("files", [])) if legacy else set()
     for path in shards:
         with filesystem.open_input_stream(path) as fh:

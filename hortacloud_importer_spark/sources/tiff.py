@@ -97,6 +97,33 @@ class TiffParseError(ValueError):
     pass
 
 
+# what a corrupt stream raises from deep in the IFD walk or a codec
+# when no check names it first (a mangled offset or count field)
+_MALFORMED = (
+    IndexError,
+    KeyError,
+    OverflowError,
+    TypeError,  # corrupt IFD field types decode tags as floats
+    ValueError,
+    struct.error,
+    zlib.error,
+)
+
+
+def _named_errors(what: str, parse, *args):
+    """``parse(*args)``, with any raw error of a corrupt stream
+    re-raised as :class:`TiffParseError`: skip-on-error kernels and
+    the slice readers need ONE named error."""
+    try:
+        return parse(*args)
+    except TiffParseError:
+        raise
+    except _MALFORMED as exc:
+        raise TiffParseError(
+            f"malformed TIFF {what}: {type(exc).__name__}: {exc}"
+        ) from exc
+
+
 def _packbits_decompress(raw: bytes, expect: int) -> bytes:
     """PackBits RLE (TIFF 6.0 §9): n in 0..127 copies n+1 literals,
     n in -127..-1 repeats the next byte 1-n times, -128 is a no-op."""
@@ -479,6 +506,8 @@ def _decode_oldjpeg_interchange(
     if stats is not None:
         stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + 1
         stats["blocks_total"] = stats.get("blocks_total", 0) + 1
+        stats["bytes_read"] = stats.get("bytes_read", 0) + jlen
+        stats["bytes_total"] = stats.get("bytes_total", 0) + jlen
     arr = arr[:length, :width].astype(dtype.newbyteorder("="))
     y0, y1, x0, x1 = window if window else (0, length, 0, width)
     y0, y1 = max(0, y0), min(length, y1)
@@ -596,7 +625,10 @@ def _decode_block_grid(
     stats: dict | None,
 ) -> np.ndarray:
     """Decode (a window of) one block grid — a chunky page, or one
-    plane of a PlanarConfiguration-2 page."""
+    plane of a PlanarConfiguration-2 page. ``stats`` also counts the
+    payload bytes fetched (``bytes_read``) against the grid's
+    (``bytes_total``). An uncompressed strip is row-addressable, so
+    only the rows of it the window touches are fetched."""
     y0, y1, x0, x1 = window if window else (0, length, 0, width)
     y0, y1 = max(0, y0), min(length, y1)
     x0, x1 = max(0, x0), min(width, x1)
@@ -607,15 +639,22 @@ def _decode_block_grid(
     out = np.zeros(
         ((by1 - by0) * brows, (bx1 - bx0) * bcols, spp), dtype=dtype.newbyteorder("=")
     )
-    decoded = 0
+    row_bytes = bcols * spp * dtype.itemsize if compression == 1 and not tiled else 0
+    decoded = fetched = 0
     for by in range(by0, by1):
         for bx in range(bx0, bx1):
             i = by * across + bx
             # Strips cover full width but may be short on the last row
             # of the grid; tiles are always padded to tile size.
             rows = brows if tiled else min(brows, length - by * brows)
+            off, count, r0 = offsets[i], counts[i], 0
+            if row_bytes:
+                r0 = max(0, y0 - by * brows)
+                rows = min(rows, y1 - by * brows) - r0
+                off += r0 * row_bytes
+                count = max(0, min(count - r0 * row_bytes, rows * row_bytes))
             block = _decode_block(
-                fetch(offsets[i], counts[i]), offsets[i], compression,
+                fetch(off, count), off, compression,
                 predictor, dtype, rows, bcols, spp,
                 jpeg_tables=jpeg_tables, bits=_bits,
                 ccitt=(
@@ -624,12 +663,17 @@ def _decode_block_grid(
                     ifd.get(_TAG_FILL_ORDER, [1])[0],
                 ),
             )
-            oy, ox = (by - by0) * brows, (bx - bx0) * bcols
+            oy, ox = (by - by0) * brows + r0, (bx - bx0) * bcols
             out[oy : oy + rows, ox : ox + bcols] = block
             decoded += 1
+            fetched += count
     if stats is not None:
         stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + decoded
         stats["blocks_total"] = stats.get("blocks_total", 0) + across * down
+        stats["bytes_read"] = stats.get("bytes_read", 0) + fetched
+        stats["bytes_total"] = stats.get("bytes_total", 0) + sum(
+            counts[: across * down]
+        )
     return out[y0 - by0 * brows : y1 - by0 * brows, x0 - bx0 * bcols : x1 - bx0 * bcols]
 
 
@@ -670,34 +714,15 @@ def decode_tiff(data: bytes) -> np.ndarray:
     Corrupt streams always raise :class:`TiffParseError` (a mangled
     offset/count field otherwise trips a raw struct.error deep in the
     IFD walk — skip-on-error kernels need ONE named error)."""
-    try:
-        return _decode_tiff_checked(data)
-    except TiffParseError:
-        raise
-    except (
-        IndexError,
-        KeyError,
-        OverflowError,
-        TypeError,  # corrupt IFD field types decode tags as floats
-        ValueError,
-        struct.error,
-        zlib.error,
-    ) as exc:
-        raise TiffParseError(
-            f"malformed TIFF stream: {type(exc).__name__}: {exc}"
-        ) from exc
+    return _named_errors("stream", _decode_tiff_checked, data)
 
 
 def _decode_tiff_checked(data: bytes) -> np.ndarray:
-    ec, pos, big = _parse_header(data)
-    pages = []
-    while pos:
-        ifd, pos = _parse_ifd(data, ec, pos, big)
-        pages.append(_decode_page(lambda o, c: data[o : o + c], ec, ifd))
-        if len(pages) > 65536:
-            raise TiffParseError("IFD chain too long (cyclic?)")
-    if not pages:
-        raise TiffParseError("no IFDs")
+    def fetch(off: int, n: int) -> bytes:
+        return data[off : off + n]
+
+    ec, ifds = _page_table(fetch)
+    pages = [_decode_page(fetch, ec, ifd) for ifd in ifds]
     if len({p.shape for p in pages}) != 1:
         raise TiffParseError("pages differ in shape")
     return np.stack(pages)
@@ -707,13 +732,14 @@ def tiff_probe(data: bytes) -> tuple[int, int, int, int]:
     """(pages, height, width, samples_per_pixel) from the IFD chain
     only — tiff_shape plus the channel count, for metadata-pass
     kernels that must not decode."""
-    pages, h, w = tiff_shape(data)
-    try:
-        ec, pos, big = _parse_header(data)
-        ifd, _ = _parse_ifd(data, ec, pos, big)
-    except (IndexError, KeyError, OverflowError, TypeError, ValueError, struct.error) as exc:
-        raise TiffParseError(f"malformed TIFF header: {exc}") from exc
-    return pages, h, w, ifd.get(_TAG_SAMPLES_PER_PIXEL, [1])[0]
+    return _named_errors("header", _probe, data)
+
+
+def _probe(data: bytes) -> tuple[int, int, int, int]:
+    _ec, pages = _page_table(lambda o, c: data[o : o + c])
+    if len({page_shape(p)[:2] for p in pages}) != 1:
+        raise TiffParseError("pages differ in shape")
+    return (len(pages), *page_shape(pages[0]))
 
 
 def tiff_shape(data: bytes) -> tuple[int, int, int]:
@@ -724,34 +750,7 @@ def tiff_shape(data: bytes) -> tuple[int, int, int]:
     the reference inferring geometry from one file header
     (tiff2octree.py:653-691). Corruption raises TiffParseError, same
     contract as decode_tiff."""
-    try:
-        return _tiff_shape_checked(data)
-    except TiffParseError:
-        raise
-    except (IndexError, KeyError, OverflowError, TypeError, ValueError, struct.error) as exc:
-        raise TiffParseError(f"malformed TIFF header: {exc}") from exc
-
-
-def _tiff_shape_checked(data: bytes) -> tuple[int, int, int]:
-    ec, pos, big = _parse_header(data)
-    n_pages = 0
-    hw: tuple[int, int] | None = None
-    while pos:
-        ifd, pos = _parse_ifd(data, ec, pos, big)
-        page_hw = (
-            _required(ifd, _TAG_LENGTH, "ImageLength")[0],
-            _required(ifd, _TAG_WIDTH, "ImageWidth")[0],
-        )
-        if hw is None:
-            hw = page_hw
-        elif hw != page_hw:
-            raise TiffParseError("pages differ in shape")
-        n_pages += 1
-        if n_pages > 65536:
-            raise TiffParseError("IFD chain too long (cyclic?)")
-    if hw is None:
-        raise TiffParseError("no IFDs")
-    return n_pages, hw[0], hw[1]
+    return tiff_probe(data)[:3]
 
 
 def tiff_page_table(fh) -> tuple[str, list[dict]]:
@@ -761,16 +760,24 @@ def tiff_page_table(fh) -> tuple[str, list[dict]]:
     100 GB BigTIFF stack costs O(pages) small reads here; each page's
     strips are then fetched individually by :func:`decode_stack_page`.
     The returned dicts are the same tag->values shape the in-memory
-    parser produces, so the page decoders are shared."""
+    parser produces, so the page decoders are shared. Corruption
+    raises TiffParseError, as in :func:`decode_tiff`."""
+    return _named_errors("header", _page_table, _seek_fetch(fh))
 
-    def read_at(off: int, n: int) -> bytes:
+
+def _seek_fetch(fh):
+    def fetch(off: int, n: int) -> bytes:
         fh.seek(off)
         return fh.read(n)
 
-    ec, pos, big = _parse_header(read_at(0, 16))
+    return fetch
+
+
+def _page_table(fetch) -> tuple[str, list[dict]]:
+    ec, pos, big = _parse_header(fetch(0, 16))
     pages: list[dict] = []
     while pos:
-        entries, pos = _parse_ifd_fetch(read_at, ec, pos, big)
+        entries, pos = _parse_ifd_fetch(fetch, ec, pos, big)
         pages.append(entries)
         if len(pages) > 65536:
             raise TiffParseError("IFD chain too long (cyclic?)")
@@ -779,16 +786,30 @@ def tiff_page_table(fh) -> tuple[str, list[dict]]:
     return ec, pages
 
 
-def decode_stack_page(fh, ec: str, ifd: dict[int, list]) -> np.ndarray:
+def page_shape(ifd: dict[int, list]) -> tuple[int, int, int]:
+    """(height, width, samples per pixel) of one page's IFD."""
+    return (
+        _required(ifd, _TAG_LENGTH, "ImageLength")[0],
+        _required(ifd, _TAG_WIDTH, "ImageWidth")[0],
+        ifd.get(_TAG_SAMPLES_PER_PIXEL, [1])[0],
+    )
+
+
+def decode_stack_page(
+    fh,
+    ec: str,
+    ifd: dict[int, list],
+    window: tuple[int, int, int, int] | None = None,
+    stats: dict | None = None,
+) -> np.ndarray:
     """One page -> (h, w, spp) from a seekable reader, reading ONLY
     that page's strip/tile payloads (pair with
-    :func:`tiff_page_table`)."""
-
-    def fetch(off: int, n: int) -> bytes:
-        fh.seek(off)
-        return fh.read(n)
-
-    return _decode_page(fetch, ec, ifd)
+    :func:`tiff_page_table`); with ``window`` (y0, y1, x0, x1), only
+    the strips or tiles the window touches, cropped to it (``stats`` as
+    in :func:`decode_tiff_window`). Corruption raises TiffParseError."""
+    return _named_errors(
+        "stream", _decode_page, _seek_fetch(fh), ec, ifd, window, stats
+    )
 
 
 def decode_tiff_window(
@@ -803,8 +824,9 @@ def decode_tiff_window(
     This is why the reference rewrites big slices as 256x256 tiles
     (tiff2octree.py:516-551): an octant-sized window over a tiled page
     decodes O(window) tiles, not the whole page. ``stats`` (optional
-    dict) receives ``blocks_decoded`` / ``blocks_total`` so callers and
-    tests can assert pruning actually happened.
+    dict) receives ``blocks_decoded`` / ``blocks_total`` and the payload
+    ``bytes_read`` / ``bytes_total`` so callers and tests can assert
+    pruning actually happened.
     """
     ec, pos, big = _parse_header(data)
     idx = 0

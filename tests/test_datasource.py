@@ -511,6 +511,80 @@ def test_multipage_slice_names_the_file():
         _slice_array(data, "/x/stack.tif")
 
 
+def _strip_tiff(page: np.ndarray, rows_per_strip: int, deflate: bool) -> bytes:
+    """A classic little-endian uint16 TIFF of one page cut into strips
+    of ``rows_per_strip`` rows, raw or deflated: IFD first, then the
+    strip offset and count arrays, then the strips."""
+    import struct
+
+    h, w = page.shape
+    strips = [
+        page[y : y + rows_per_strip].astype("<u2").tobytes()
+        for y in range(0, h, rows_per_strip)
+    ]
+    if deflate:
+        strips = [zlib.compress(b) for b in strips]
+    n = len(strips)
+    tags = 8
+    arrays = 8 + 2 + 12 * tags + 4
+    data = arrays + 8 * n
+    offsets = [data + sum(map(len, strips[:i])) for i in range(n)]
+
+    def entry(tag, ftype, count, value):
+        return struct.pack("<HHII", tag, ftype, count, value)
+
+    ifd = b"".join(
+        [
+            struct.pack("<H", tags),
+            entry(256, 4, 1, w),
+            entry(257, 4, 1, h),
+            struct.pack("<HHIHH", 258, 3, 1, 16, 0),
+            struct.pack("<HHIHH", 259, 3, 1, 8 if deflate else 1, 0),
+            entry(273, 4, n, arrays),
+            struct.pack("<HHIHH", 277, 3, 1, 1, 0),
+            entry(278, 4, 1, rows_per_strip),
+            entry(279, 4, n, arrays + 4 * n),
+            struct.pack("<I", 0),
+        ]
+    )
+    return (
+        b"II*\x00" + struct.pack("<I", 8) + ifd
+        + struct.pack(f"<{n}I", *offsets)
+        + struct.pack(f"<{n}I", *map(len, strips))
+        + b"".join(strips)
+    )
+
+
+@pytest.mark.parametrize("deflate", [False, True], ids=["raw", "deflate"])
+def test_windowed_slice_read_decodes_only_touched_strips(tmp_path, deflate):
+    """A 40x24 slice in ten 4-row strips: the window rows 6..15,
+    columns 5..17 decodes the three strips it touches (rows 4..15) and
+    no other, reading their payload alone (of a raw strip, only the
+    window's rows), and equals that crop of the whole page."""
+    from hortacloud_importer_spark.sources.datasource import _read_slice
+
+    page = np.random.default_rng(7).integers(0, 1 << 16, (40, 24)).astype(np.uint16)
+    path = tmp_path / "slice.tif"
+    path.write_bytes(_strip_tiff(page, 4, deflate))
+    first = (str(path), (40, 24))
+    stats: dict = {}
+    win = _read_slice(str(path), first, window=(6, 16, 5, 17), stats=stats)
+    assert np.array_equal(win, page[6:16, 5:17])
+    assert (stats["blocks_decoded"], stats["blocks_total"]) == (3, 10)
+    whole: dict = {}
+    assert np.array_equal(_read_slice(str(path), first, stats=whole), page)
+    assert whole["bytes_read"] == whole["bytes_total"] == stats["bytes_total"]
+    if deflate:
+        sizes = [len(zlib.compress(page[y : y + 4].astype("<u2").tobytes())) for y in (4, 8, 12)]
+        assert stats["bytes_read"] == sum(sizes)
+    else:
+        assert stats["bytes_read"] == 10 * 24 * 2  # rows 6..15 only
+    # a window wholly past the page reads nothing and is empty
+    none: dict = {}
+    assert _read_slice(str(path), first, window=(40, 48, 0, 24), stats=none).size == 0
+    assert none.get("bytes_read", 0) == 0
+
+
 def test_scan_n5_query_on_truly_vanilla_session():
     """The driver runs queries in a session built by a plain
     ``SparkSession.builder`` (no session.py factory), where

@@ -3,6 +3,8 @@ frame sampling, binaryFile source, codec gating."""
 
 from __future__ import annotations
 
+import io
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -160,6 +162,7 @@ def test_retile_tiff_windowed_read_payoff(spark):
         decode_tiff,
         decode_tiff_window,
         encode_tiff,
+        tiff_page_table,
     )
 
     rng = np.random.default_rng(13)
@@ -193,7 +196,13 @@ def test_retile_tiff_windowed_read_payoff(spark):
     stats_tiled: dict = {}
     win = decode_tiff_window(tiled_blob, y=(0, 16), x=(16, 32), stats=stats_tiled)
     assert np.array_equal(win[..., 0], img[0:16, 16:32])
-    assert stats_tiled == {"blocks_decoded": 1, "blocks_total": 16}
+    counts = tiff_page_table(io.BytesIO(tiled_blob))[1][0][325]  # TileByteCounts
+    assert stats_tiled == {
+        "blocks_decoded": 1,
+        "blocks_total": 16,
+        "bytes_read": counts[1],  # the tile at row 0, column 1
+        "bytes_total": sum(counts),
+    }
 
     stats_strip: dict = {}
     decode_tiff_window(strip_blob, y=(0, 16), x=(16, 32), stats=stats_strip)

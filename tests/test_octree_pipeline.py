@@ -428,8 +428,8 @@ def test_fused_kernel_build_matches_voxel_row_assembly(spark, tmp_path):
 
 
 def test_fused_slice_ingest_matches_voxel_path(spark, tmp_path):
-    """The packed-tile leaf ingest (_slice_pieces) stores the
-    zero-padded source — odd dims exercise the y/x/z canvas padding —
+    """The windowed slice read of the first pass (_slice_pass) stores
+    the zero-padded source — odd dims exercise the y/x/z canvas padding —
     and the pyramid above it matches the NumPy mirror. The name
     predates the removal of the voxel-row ingest; the reference is
     now NumPy."""
@@ -464,13 +464,31 @@ def test_slice_with_other_dims_fails_before_any_commit(spark, tmp_path):
     msg = str(err.value)
     assert "ValueError" in msg and "default.0.005.tif" in msg, msg[-2000:]
     assert "(40, 24)" in msg and "(32, 32)" in msg, msg[-2000:]
-    assert manifest.committed_files(_FS, out) is None
+    _assert_reads_no_block(spark, out, tmp_path)
+
+
+def _assert_reads_no_block(spark, out, tmp_path):
+    """A build that failed inside a task committed nothing, but its
+    store is opened: whatever its tasks left is read as no block by
+    the block reader, the channel listing and the KTX pass."""
+    from hortacloud_importer_spark.pipelines import tiff_octree_to_ktx
+    from hortacloud_importer_spark.sources.block_store import (
+        read_tiff_block_store,
+        store_channels,
+    )
+
+    assert manifest.committed_files(_FS, out) == set()
+    assert read_tiff_block_store(spark, out).count() == 0
+    assert store_channels(out) == []
+    ktx = str(tmp_path / "ktx_of_failed_store")
+    (res,) = tiff_octree_to_ktx(spark, out, ktx, (4, 16, 16), 1).collect()
+    assert res["n_files"] == 0
 
 
 def test_truncated_slice_mid_volume_fails_before_any_commit(spark, tmp_path):
     """Slice 3 of 8 cut to half its bytes: the build fails in the
-    tile-cut kernel with the TIFF codec's named error and the file's
-    path, and nothing is committed."""
+    first pass's kernel with the TIFF codec's named error and the
+    file's path, and nothing is committed."""
     from hortacloud_importer_spark.pipelines import build_octree
 
     rng = np.random.default_rng(43)
@@ -485,7 +503,28 @@ def test_truncated_slice_mid_volume_fails_before_any_commit(spark, tmp_path):
         build_octree(spark, str(tmp_path / "cut"), out, nlevels=2).count()
     msg = str(err.value)
     assert f"TiffParseError: {bad}: " in msg, msg[-2000:]
-    assert manifest.committed_files(_FS, out) is None
+    _assert_reads_no_block(spark, out, tmp_path)
+
+
+def test_multipage_slice_mid_volume_fails_before_any_commit(spark, tmp_path):
+    """Slice 6 of 8 holds two pages: the build fails in the first
+    pass's kernel with a ValueError naming the file and its shape,
+    before any payload of it is decoded, and nothing is committed."""
+    from hortacloud_importer_spark.pipelines import build_octree
+
+    rng = np.random.default_rng(45)
+    _write_slices(
+        tmp_path / "pages",
+        [rng.integers(1, 60000, (32, 32)).astype(np.uint16) for _ in range(8)],
+    )
+    bad = tmp_path / "pages" / "default.0.006.tif"
+    bad.write_bytes(encode_tiff(np.ones((2, 32, 32), dtype=np.uint16)))
+    out = str(tmp_path / "pages_store")
+    with pytest.raises(Exception) as err:
+        build_octree(spark, str(tmp_path / "pages"), out, nlevels=2).count()
+    msg = str(err.value)
+    assert f"ValueError: {bad}: slice file has shape (2, 32, 32, 1)" in msg, msg[-2000:]
+    _assert_reads_no_block(spark, out, tmp_path)
 
 
 def test_gap_in_z_fails_before_any_commit(spark, tmp_path):
@@ -560,9 +599,9 @@ def test_slice_build_lists_the_directory_once(spark, tmp_path, monkeypatch):
 
 
 def test_slice_build_plans_no_python_data_source_scan(spark, tmp_path, monkeypatch):
-    """The leaf pieces of a slice build come from one mapInPandas kernel
-    over a local (path, z, channel) work list: no Python data source
-    scan, no shuffle, one task per slice up to defaultParallelism."""
+    """The first pass over a slice directory is one mapInPandas kernel
+    over a local work list of subtree roots: no Python data source
+    scan, no shuffle, one task per subtree up to defaultParallelism."""
     from hortacloud_importer_spark.pipelines import build_octree, octree
 
     rng = np.random.default_rng(59)
@@ -571,24 +610,27 @@ def test_slice_build_plans_no_python_data_source_scan(spark, tmp_path, monkeypat
         [rng.integers(1, 60000, (16, 16)).astype(np.uint16) for _ in range(8)],
     )
     seen = []
+    run_pass = octree._slice_pass
 
     class _Stop(Exception):
         pass
 
-    def first_pass(pieces, *args):
-        seen.append(pieces)
+    def first_pass(*args):
+        seen.append(run_pass(*args))
         raise _Stop
 
-    monkeypatch.setattr(octree, "_subtree_pass", first_pass)
+    monkeypatch.setattr(octree, "_slice_pass", first_pass)
+    # a budget under 8 blocks: each leaf block is its own subtree
+    monkeypatch.setattr(octree, "_SUBTREE_BYTES", 0)
     with pytest.raises(_Stop):
         build_octree(spark, str(tmp_path / "plan"), str(tmp_path / "plan_out"), 2)
-    (pieces,) = seen
-    plan = pieces._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan
+    (out,) = seen
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "LocalTableScan" in plan, plan
     for node in ("BatchScan", "(Python)", "Exchange"):
         assert node not in plan, plan
     parallelism = spark.sparkContext.defaultParallelism
-    assert pieces.rdd.getNumPartitions() == min(8, parallelism)
+    assert out.rdd.getNumPartitions() == min(8, parallelism)
 
 
 def test_fused_ingest_clips_slices_beyond_padded_grid(spark, tmp_path):

@@ -9,8 +9,10 @@ level and writes every level it spans.
   each leaf alone.
 - Values outside the store dtype's range fail the build instead of
   wrapping.
-- A single-pass build plans one exchange (the tile shuffle) and
-  commits one manifest shard.
+- A single-pass build over slices plans no exchange (each subtree
+  task reads its own slice windows) and commits one manifest shard;
+  a first pass of many subtrees stores the single-pass bytes, and a
+  resume over it rewrites nothing.
 - A build or KTX conversion that dies after writing its last pass's
   files but before committing them resumes to the same store.
 """
@@ -205,6 +207,9 @@ def test_values_over_dtype_range_fail_the_build(spark, tmp_path):
     """A DataFrame source with intensities over 16 bits and even block
     dims fails with an error naming the dtype and the remedy instead
     of storing values wrapped modulo 2^16."""
+    from hortacloud_importer_spark.sources.block_store import (
+        read_tiff_block_store,
+    )
     from hortacloud_importer_spark.sources.datasource import write_tiff_block
 
     with pytest.raises(ValueError, match="uint16.*requantize"):
@@ -223,25 +228,26 @@ def test_values_over_dtype_range_fail_the_build(spark, tmp_path):
         build_octree(
             spark, v, out, nlevels=2, filter_="max", dims=(4, 4, 4), channels=1
         ).count()
-    assert manifest.committed_files(_FS, out) is None
+    assert manifest.committed_files(_FS, out) == set()
+    assert read_tiff_block_store(spark, out).count() == 0
 
 
-def test_single_pass_build_plans_one_exchange(spark, tmp_path, monkeypatch):
+def test_single_pass_build_plans_no_exchange(spark, tmp_path, monkeypatch):
     """The golden single-channel input builds in one pass: one manifest
-    shard, and the pass's plan has exactly one exchange — the tile
-    shuffle into the subtree kernel — and no cogroup (fresh store).
-    The returned summary is a local relation."""
+    shard, and the pass's plan is one MapInPandas over a LocalTableScan
+    of subtree roots — no Exchange, no grouped or cogrouped kernel. The
+    returned summary is a local relation."""
     from tests.test_golden_store import _volume, _write_slices as _slices
 
     plans = []
-    run_pass = octree._subtree_pass
+    run_pass = octree._slice_pass
 
     def spy(*args, **kw):
         out = run_pass(*args, **kw)
         plans.append(out._jdf.queryExecution().executedPlan().toString())
         return out
 
-    monkeypatch.setattr(octree, "_subtree_pass", spy)
+    monkeypatch.setattr(octree, "_slice_pass", spy)
     slices = str(tmp_path / "slices")
     _slices(slices, [_volume(5, (16, 32, 32), np.s_[:8, :16, 8:24])])
     out = str(tmp_path / "store")
@@ -250,10 +256,87 @@ def test_single_pass_build_plans_one_exchange(spark, tmp_path, monkeypatch):
     assert "LocalTableScan" in summary._jdf.queryExecution().executedPlan().toString()
     assert len(_shards(out)) == 1
     (plan,) = plans
-    assert plan.count("Exchange") == 1, plan
-    assert "Exchange hashpartitioning(gz" in plan
-    assert "FlatMapGroupsInPandas" in plan
-    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "MapInPandas" in plan and "LocalTableScan" in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+
+
+def _write_channels(d, vols):
+    """vols: one (z, y, x) uint16 volume per channel, as the
+    reference's ``default.{ch}.{z}`` slices."""
+    d.mkdir()
+    for ch, vol in enumerate(vols):
+        for z, sl in enumerate(vol):
+            (d / f"default.{ch}.{z:03d}.tif").write_bytes(encode_tiff(sl[None, ...]))
+
+
+@pytest.mark.parametrize("channels", [1, 2])
+def test_many_subtree_first_pass_matches_single_pass(
+    spark, tmp_path, monkeypatch, channels
+):
+    """Dims 29x27x22 over three levels: odd 8x7x6 blocks, a y/x pad of
+    1 and 2 voxels and a z pad of 3. Under a budget no block fits, the
+    first pass reads 8 subtree windows per channel, each task its own;
+    the store is the single-pass store byte for byte and the NumPy
+    pyramid."""
+    rng = np.random.default_rng(67 + channels)
+    vols = rng.integers(0, 60000, (channels, 29, 27, 22)).astype(np.uint16)
+    vols[rng.random(vols.shape) < 0.3] = 0
+    vols[:, :16, :14, :12] = 0  # an empty subtree
+    _write_channels(tmp_path / "slices", vols)
+    rows = []
+    work = octree._slice_work
+
+    def spy(*args):
+        rows.append(work(*args))
+        return rows[-1]
+
+    monkeypatch.setattr(octree, "_slice_work", spy)
+    multi, _ = _two_ways(
+        spark, tmp_path, monkeypatch, str(tmp_path / "slices"), 2,
+        nlevels=3, filter_="arthur", channels=channels,
+    )
+    assert [len(w) for w in rows] == [channels, 8 * channels]
+    padded = np.zeros((channels, 32, 28, 24), dtype=np.int64)
+    padded[:, :29, :27, :22] = vols
+    _assert_store(multi, expected_blocks(list(padded), 3, (8, 7, 6), "arthur"))
+
+
+def test_slice_resume_rewrites_nothing(spark, tmp_path, monkeypatch):
+    """A second build over a committed store: each first-pass work row
+    carries the committed names of its subtree, so no kernel writes a
+    file — every committed file keeps its bytes and its mtime, and the
+    summary counts no block written."""
+    rng = np.random.default_rng(71)
+    vol = rng.integers(1, 60000, (16, 16, 16)).astype(np.uint16)
+    _write_slices(tmp_path / "slices", list(vol))
+    slices, out = str(tmp_path / "slices"), str(tmp_path / "store")
+    monkeypatch.setattr(octree, "_SUBTREE_BYTES", 4 * 4**3)  # one leaf
+    build_octree(spark, slices, out, nlevels=3, filter_="max").count()
+    committed = manifest.committed_files(_FS, out)
+    digests = _digests(out)
+    kept = {p: os.stat(f"{out}/{p}").st_mtime_ns for p in committed}
+    rows = []
+    work = octree._slice_work
+
+    def spy(*args):
+        rows.append(work(*args))
+        return rows[-1]
+
+    monkeypatch.setattr(octree, "_slice_work", spy)
+    summary = build_octree(spark, slices, out, nlevels=3, filter_="max").collect()
+    (first,) = rows
+    assert len(first) == 64  # one row per leaf block
+    assert sorted(r for owned in first["owned"] for r in owned) == sorted(
+        r for r in committed if r.count("/") == 2
+    )
+    assert {r["level"]: r["n_blocks_written"] for r in summary} == {
+        0: 0, 1: 0, 2: 0
+    }
+    assert _digests(out) == digests
+    assert manifest.committed_files(_FS, out) == committed
+    assert {p: os.stat(f"{out}/{p}").st_mtime_ns for p in kept} == kept
 
 
 def _last_shard(root, name):
@@ -406,7 +489,8 @@ def _resume_after_failed_rename(spark, tmp_path, obstacle, n_committed):
     with pytest.raises(Exception, match="Is a directory"):
         build_octree(spark, slices, out, nlevels=3, filter_="max")
     failed = obstacle.count("/")  # the depth of the failed pass's files
-    committed = manifest.committed_files(_FS, out) or set()
+    # opened before the first pass: set(), not None, when it commits nothing
+    committed = manifest.committed_files(_FS, out)
     assert len(_shards(out)) == 2 - failed
     assert len(committed) == n_committed
     assert all(r.count("/") > failed for r in committed)
@@ -415,18 +499,15 @@ def _resume_after_failed_rename(spark, tmp_path, obstacle, n_committed):
     assert bool(leftovers) == (failed > 0)
     assert all(r.count("/") == failed for r in leftovers)
 
-    if committed:
-        back = read_tiff_block_store(spark, out).collect()
-        assert {
-            tiff_block_rel(
-                r["zi"], r["yi"], r["xi"], r["channel"], r["depth"] + 1
-            )
-            for r in back
-        } == committed
-        assert store_channels(out) == [0]
-        for per_channel in (False, True):
-            groups = _block_file_groups(spark, out, per_channel=per_channel)
-            assert {p for r in groups.collect() for p in r["paths"]} == committed
+    back = read_tiff_block_store(spark, out).collect()
+    assert {
+        tiff_block_rel(r["zi"], r["yi"], r["xi"], r["channel"], r["depth"] + 1)
+        for r in back
+    } == committed
+    assert store_channels(out) == ([0] if committed else [])
+    for per_channel in (False, True):
+        groups = _block_file_groups(spark, out, per_channel=per_channel)
+        assert {p for r in groups.collect() for p in r["paths"]} == committed
 
     os.rmdir(f"{out}/{obstacle}")
     kept = {p: os.stat(f"{out}/{p}").st_mtime_ns for p in committed}
@@ -455,6 +536,7 @@ def test_build_resumes_after_failed_rename_at_leaf_and_root(
     spark, tmp_path, one_level_passes, obstacle, n_committed
 ):
     """The leaf block (3, 3, 3) fails in the first pass, so nothing is
-    committed and the store has no manifest yet; the root block fails
-    in the last pass, after the leaves and level 1 committed."""
+    committed, though the store is opened and other leaves are on
+    disk; the root block fails in the last pass, after the leaves and
+    level 1 committed."""
     _resume_after_failed_rename(spark, tmp_path, obstacle, n_committed)

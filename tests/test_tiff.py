@@ -6,6 +6,7 @@ encode_tiff, so a writer bug cannot mask a reader bug.
 
 from __future__ import annotations
 
+import io
 import struct
 
 import numpy as np
@@ -17,6 +18,7 @@ from hortacloud_importer_spark.sources.tiff import (
     decode_tiff,
     decode_tiff_window,
     encode_tiff,
+    tiff_page_table,
     tiff_probe,
 )
 
@@ -255,7 +257,13 @@ def test_tiled_roundtrip_and_window_pruning():
     stats: dict = {}
     win = decode_tiff_window(blob, page=0, y=(0, 4), x=(4, 8), stats=stats)
     assert np.array_equal(win[..., 0], img[0, 0:4, 4:8])
-    assert stats == {"blocks_decoded": 1, "blocks_total": 16}
+    counts = tiff_page_table(io.BytesIO(blob))[1][0][325]  # TileByteCounts
+    assert stats == {
+        "blocks_decoded": 1,
+        "blocks_total": 16,
+        "bytes_read": counts[1],  # the tile at row 0, column 1
+        "bytes_total": sum(counts),
+    }
 
     # a window straddling tile borders decodes exactly the touched tiles
     stats = {}

@@ -18,7 +18,8 @@ from hortacloud_importer_spark.registry import all_queries  # noqa: E402
 NON_QUERY_ROWS = {
     "A11": "SURVEY maps existence-check to the C4 resume anti-join "
     "(join_anti query; the manifest committed set, read on the driver "
-    "and cogrouped into build_octree's subtree kernel, sources/manifest.py; "
+    "and handed to build_octree's subtree kernels by subtree, in the "
+    "first pass's work rows or cogrouped, sources/manifest.py; "
     "tests/test_block_store.py, tests/test_pipeline_e2e.py)",
 }
 

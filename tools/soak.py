@@ -9,8 +9,12 @@ would watch: wall time per phase, per-stage shuffle read/write bytes
 tree (JVM + every Python worker). Output: SOAK.md at the repo root.
 
 Claims under test:
-- the build shuffles the leaf tiles once, then only the subtree roots
-  between passes (8x smaller per level they span);
+- the build's first pass exchanges nothing: each subtree task reads
+  its own window of its slices by path. Only the subtree roots move
+  between passes (8x smaller per level they span). The cost is read
+  amplification — a slice is opened by every subtree window of its
+  z-row — reported as bytes of slice payload read over bytes of slice
+  payload;
 - per-task memory is bounded by one subtree's int32 region, or by one
   leaf block when eight do not fit the budget (not O(volume) on any
   single node);
@@ -201,6 +205,36 @@ def _gen_slices_sparse(spark, root: str) -> float:
     return time.monotonic() - t0
 
 
+def _read_amplification(slices: str) -> dict:
+    """The first pass's decode amplification, replayed on the driver:
+    every window of every first-pass work row read through the build's
+    own slice reader (``_read_slice``), as bytes of slice payload read
+    over bytes of slice payload."""
+    from hortacloud_importer_spark.pipelines import octree
+    from hortacloud_importer_spark.sources.datasource import _read_slice
+
+    files, shapes = octree._list_slices(slices, CHANNELS)
+    grid = 1 << (NLEVELS - 1)
+    block_dims = tuple(-(-d // grid) for d in DIMS)
+    padded = tuple(b * grid for b in block_dims)
+    span = min(octree._pass_levels(block_dims, False), NLEVELS - 1)
+    _, ey, ex = (b << span for b in block_dims)
+    work = octree._slice_work(files, {}, span, block_dims, padded)
+    read, payload = 0, {}
+    for row in work.itertuples():
+        first = (files[row.channel][0], shapes[row.channel])
+        window = (row.gy * ey, (row.gy + 1) * ey, row.gx * ex, (row.gx + 1) * ex)
+        for path in row.paths:
+            stats: dict = {}
+            _read_slice(path, first, window=window, stats=stats)
+            read += stats["bytes_read"]
+            payload[path] = stats["bytes_total"]
+    return {
+        "first_pass_subtrees": len(work),
+        "read_amplification": round(read / sum(payload.values()), 2),
+    }
+
+
 def _task_skew(spark, stages: list[dict]) -> list[dict]:
     """Per-stage task run-time quantiles from the REST taskSummary:
     the straggler measure a cluster operator watches. Stages under
@@ -308,6 +342,8 @@ def main() -> int:
         s for s in _stages(spark) if s["stageId"] not in stages_before
     ]
     stages_before |= {s["stageId"] for s in build_stages}
+    sampler.phase("read_amplification")
+    report.update(_read_amplification(slices))
 
     grid = 1 << (NLEVELS - 1)
     block_dims = tuple(-(-d // grid) for d in DIMS)
@@ -398,6 +434,12 @@ def _write_md(r: dict) -> None:
         "",
         "## build_octree stages (Spark REST, completed stages)",
         "",
+        f"The first pass reads {r['first_pass_subtrees']} subtree windows "
+        "(spread over at most one task per core); read amplification "
+        f"**{r['read_amplification']}x**: bytes of slice payload read "
+        "over bytes of slice payload, replayed on the driver through "
+        "the build's slice reader.",
+        "",
         "| stage | tasks | input MiB | shuffle write MiB | shuffle read MiB | run sec |",
         "|---|---|---|---|---|---|",
     ]
@@ -430,8 +472,8 @@ def _write_md(r: dict) -> None:
     lines.append("")
     lines.append(
         "Stage names are raw Spark callsites from the REST API; map "
-        "them to pipeline phases by stage id order (listing/meta "
-        "probes -> tile shuffle -> subtree passes)."
+        "them to pipeline phases by stage id order (the first pass's "
+        "map over subtree windows -> the root passes)."
     )
     lines.append("")
     lines.append(
