@@ -315,7 +315,7 @@ def _run_octree(args) -> dict:
                     read_level_chunks,
                 )
 
-                if discover_hierarchy(spark, args.inputdir):
+                if discover_hierarchy(args.inputdir):
                     source = read_level_chunks(spark, args.inputdir, 0)
             if args.voxsize == (1.0, 1.0, 1.0):
                 res = _pixel_resolution(args.inputdir)

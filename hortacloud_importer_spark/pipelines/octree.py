@@ -102,11 +102,12 @@ def _list_slices(
     paths; with several channels the reference's ``default.{ch}.{z}``
     names select each) and the page shape of each channel's first
     slice, from ONE listing (an object-store LIST over ~1e5 slices is
-    not free) and one header walk per channel (TIFF IFD or JP2 ihdr
-    box, no payload decode) — the reference infers dims from one file
-    (tiff2octree.py:653-691). The suffix is ``.tif`` unless the first
-    channel's slices are all JPEG 2000, the reference's auto-detection
-    (rasterio branch, tiff2octree.py:673-678).
+    not free) and one header walk per channel (a TIFF's IFD chain by
+    seek, fetching only its header; a JP2's ihdr box, read whole) —
+    the reference infers dims from one file (tiff2octree.py:653-691).
+    The suffix is ``.tif`` unless the first channel's slices are all
+    JPEG 2000, the reference's auto-detection (rasterio branch,
+    tiff2octree.py:673-678).
 
     Bad input fails here, before any Spark job: no slice, a gap in z
     (``_check_z_run``), a first slice that is not one single-sample
@@ -114,8 +115,7 @@ def _list_slices(
     _page_dtype rule; the uint16 tile cut would wrap it)."""
     from hortacloud_importer_spark.sources.datasource import (
         _list_files,
-        _read_bytes,
-        _slice_shape,
+        _slice_file_shape,
         _sorted_slices,
     )
 
@@ -135,15 +135,7 @@ def _list_slices(
     shapes = []
     for slices in files:
         _check_z_run(slices, suffix)
-        if not slices:
-            shapes.append(None)
-            continue
-        head = _read_bytes(slices[0])
-        shapes.append(_slice_shape(slices[0], head))
-        if suffix != ".tif":
-            from hortacloud_importer_spark.sources.jp2 import check_jp2_uint16
-
-            check_jp2_uint16(head, slices[0])
+        shapes.append(_slice_file_shape(slices[0]) if slices else None)
     return files, shapes
 
 

@@ -1611,17 +1611,6 @@ FROM rebuilt
 _PACK_S = 512  # tokens per packed training sequence
 
 
-def _seq_ids(S: int):
-    """Sequence ids covered by a doc laid at [prefix, prefix + n):
-    ``prefix div S .. (prefix + n - 1) div S``. INTEGER `div`, not
-    float floor-of-division: floor(prefix / S) agrees with the
-    oracle's ``//`` only while S is a power of two and prefixes stay
-    below 2^53 — `div` holds for any S at any corpus size."""
-    return F.sequence(
-        F.expr(f"prefix div {S}"),
-        F.expr(f"(prefix + n - 1) div {S}"),
-    )
-
 _PACK_ORACLE = f"""
 WITH d AS (
   SELECT doc_id,
@@ -1654,82 +1643,15 @@ FROM frag GROUP BY seq_id
 """
 
 
-def _pack_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n, prefix) over the raw documents table — see
-    :func:`_pack_prefix_of` for the mechanism. Shared by corpus_pack
-    and corpus_pack_index; q_dataset_build feeds the generalized
-    version its filtered/deduped corpus instead. NOT spread: the
-    round-14 profile put the single-task token-count stage at 0.11 s
-    — far below the cost of the extra exchange a spread would add
-    (the range-partition exchange right after it already spreads the
-    downstream work)."""
-    d = (
-        table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.size(
-                F.filter(F.split("text", " "), lambda x: x != "")
-            )
-            .cast("bigint")
-            .alias("n"),
-        )
-        .filter(F.col("n") >= 1)
-    )
-    return _pack_prefix_of(spark, d)
+def _token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n) of the raw documents table, n >= 1: the input both
+    packing forms start from (corpus_pack, corpus_pack_index,
+    corpus_shard and the shard store). NOT spread: the round-14
+    profile put the single-task token-count stage at 0.11 s, far below
+    the cost of the extra exchange a spread would add."""
+    from hortacloud_importer_spark.operators.packing import token_counts
 
-
-def _pack_prefix_of(spark: SparkSession, d: DataFrame) -> DataFrame:
-    """Append the GLOBAL token offset (`prefix`) in doc_id order to any
-    (doc_id, n) frame, via the scale-safe two-pass prefix sum
-    (operators/rownum.py pattern): range-partition by doc_id,
-    per-partition token totals (<= n_partitions rows), prefix-sum
-    THOSE in the only unpartitioned window, broadcast the offsets
-    back, then a partition-local cumulative sum — no SinglePartition
-    exchange ever touches document rows (plan-asserted in
-    tests/test_plans.py)."""
-    from pyspark.sql.window import Window
-
-    spark_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    # localCheckpoint: the two passes below (per-partition totals, then
-    # the offsets join + local cumsum) otherwise each recompute the
-    # WHOLE upstream of `d` — for q_dataset_build that is the entire
-    # quality-filter + md5-dedup pipeline twice, for the raw pack
-    # queries a second full text scan + tokenize (the round-14 before
-    # plans show the duplicated subtrees; column pruning makes the two
-    # copies differ, so ReuseExchange never fires). The materialized
-    # rows are (doc_id, n, _pid) — 20 bytes/doc, executor-local — so
-    # the checkpoint is cheap at any scale while the avoided recompute
-    # is a full corpus pass (guide §3.3/§5: truncate duplicated
-    # lineage; the jaccard posting-list checkpoint is the same move).
-    ranged = (
-        d.repartitionByRange(spark_parts, "doc_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = ranged.groupBy("_pid").agg(F.sum("n").alias("_t"))
-    w_off = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"),
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        ranged.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            "prefix",
-            F.col("_off")
-            + F.coalesce(F.sum("n").over(w_local), F.lit(0)),
-        )
-        .drop("_pid", "_off")
-    )
+    return token_counts(table(spark, sf_dir, "documents"))
 
 
 @register("corpus_pack", "K1+F2", oracle=_PACK_ORACLE, driver=False)
@@ -1743,30 +1665,22 @@ def corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final partial sequence), and the first/last doc — the index a
     dataloader needs to range-read its shard.
 
-    100 TB posture: the global token prefix sum is the scale-safe
-    TWO-PASS pattern (operators/rownum.py): range-partition by
-    doc_id, per-partition token totals (a tiny n_partitions-row
-    side), prefix-sum THOSE, broadcast the offsets back, then a
-    partition-local cumulative sum — no Exchange SinglePartition ever
-    touches the corpus (plan-asserted in tests/test_plans.py). The
-    fragment explode is map-side (a doc spans at most ceil(n/512) + 1
-    sequences) and the final aggregate is one map-side-combined
+    100 TB posture: the fragments come from
+    :func:`~hortacloud_importer_spark.operators.packing.pack_fragments`:
+    a range partition by doc_id, one collect of the per-partition
+    token totals (at most shuffle.partitions rows) folded into offsets
+    on the driver, then one map kernel taking each partition's
+    cumulative sum in NumPy — no window, and no SinglePartition
+    exchange ever touches the corpus (plan-asserted in
+    tests/test_plans.py). A doc spans at most ceil(n/512) + 1
+    fragments, and the final aggregate is one map-side-combined
     groupBy(seq_id)."""
-    pre = _pack_prefix(spark, sf_dir)
-    S = _PACK_S
-    frag = pre.select(
-        "doc_id",
-        "n",
-        "prefix",
-        F.explode(_seq_ids(S)).alias("seq_id"),
-    ).withColumn(
-        "tokens",
-        F.least((F.col("seq_id") + 1) * S, F.col("prefix") + F.col("n"))
-        - F.greatest(F.col("seq_id") * S, F.col("prefix")),
-    )
+    from hortacloud_importer_spark.operators.packing import pack_fragments
+
+    frag = pack_fragments(spark, _token_counts(spark, sf_dir), _PACK_S)
     return frag.groupBy("seq_id").agg(
         F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("tokens").cast("bigint").alias("seq_tokens"),
+        F.sum("n_tok").cast("bigint").alias("seq_tokens"),
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
     )
@@ -1814,32 +1728,14 @@ def corpus_pack_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragments tile [0, 512) with no gaps; per document, fragments
     tile [0, n) in doc_off order.
 
-    100 TB posture: identical plan to corpus_pack minus its final
-    aggregate — the two-pass prefix sum (the only unpartitioned window
-    sees per-partition totals), then a map-side fragment explode; the
-    index is emitted partition-local with NO additional exchange, and
-    at ~1 row per 512 tokens it is ~0.2% of corpus row count."""
-    pre = _pack_prefix(spark, sf_dir)
-    S = _PACK_S
-    frag = pre.select(
-        "doc_id",
-        "n",
-        "prefix",
-        F.explode(_seq_ids(S)).alias("seq_id"),
-    )
-    start = F.greatest(F.col("seq_id") * S, F.col("prefix"))
-    return frag.select(
-        "seq_id",
-        "doc_id",
-        (start - F.col("seq_id") * S).cast("bigint").alias("seq_off"),
-        (start - F.col("prefix")).cast("bigint").alias("doc_off"),
-        (
-            F.least((F.col("seq_id") + 1) * S, F.col("prefix") + F.col("n"))
-            - start
-        )
-        .cast("bigint")
-        .alias("n_tok"),
-    )
+    100 TB posture: corpus_pack's plan minus its final aggregate —
+    the range partition, one collect of per-partition token totals,
+    then the partition-local fragment kernel; the index is emitted with
+    NO further exchange, and at ~1 row per 512 tokens it is ~0.2% of
+    corpus row count."""
+    from hortacloud_importer_spark.operators.packing import pack_fragments
+
+    return pack_fragments(spark, _token_counts(spark, sf_dir), _PACK_S)
 
 
 _SHARD_N = 8  # dataloader shards (ranks x workers in a real job)
@@ -1911,26 +1807,40 @@ def corpus_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arg_min/arg_max by u — pins the order endpoints), and a key
     checksum.
 
-    100 TB posture: the shard deal is a pure map over the PACK INDEX
-    (one row per sequence, ~1/512 of corpus row count, no text), so
-    the only new exchange is the hash partition on `shard` for the
-    accounting aggregate (map-side combined, _SHARD_N output rows) —
-    plan-asserted in tests/test_plans.py. The full within-shard order
-    is never materialized by a global sort: each shard's reader sorts
-    its OWN index slice (n/_SHARD_N tiny index rows) at load time.
-    The deal itself is the reusable :func:`shard_deal` (epoch seed and
-    shard count parameterized; determinism pinned in
+    100 TB posture: the sequences are closed-form
+    (:func:`~hortacloud_importer_spark.operators.packing.packed_sequences`):
+    one sum(n) job brings the corpus token total T to the driver, and
+    sequence s of ceil(T/512) holds min(512, T - 512*s) tokens, so the
+    deal is a pure map over a ``spark.range`` — no document row is
+    ordered, exchanged or exploded. The only exchange after the sum is
+    the hash partition on `shard` for the accounting aggregate
+    (map-side combined, _SHARD_N output rows) — plan-asserted in
+    tests/test_plans.py. The full within-shard order is never
+    materialized by a global sort: each shard's reader sorts its OWN
+    index slice (n/_SHARD_N tiny index rows) at load time. The deal
+    itself is the reusable :func:`shard_deal` (epoch seed and shard
+    count parameterized; determinism pinned in
     tests/test_llm_ops_reference.py)."""
+    from hortacloud_importer_spark.operators.packing import packed_sequences
+
     keyed = shard_deal(
-        corpus_pack(spark, sf_dir).select("seq_id", "seq_tokens")
+        packed_sequences(spark, _token_counts(spark, sf_dir), _PACK_S)
     )
     return keyed.groupBy("shard").agg(
+        *_shard_accounting(),
+        F.sum(F.col("u") % 1048576).cast("bigint").alias("key_checksum"),
+    )
+
+
+def _shard_accounting() -> list:
+    """The per-shard aggregates corpus_shard and q_dataset_build share
+    over dealt (seq_id, seq_tokens, u) rows."""
+    return [
         F.count("*").cast("bigint").alias("n_seqs"),
         F.sum("seq_tokens").cast("bigint").alias("shard_tokens"),
         F.min_by("seq_id", "u").alias("first_seq"),
         F.max_by("seq_id", "u").alias("last_seq"),
-        F.sum(F.col("u") % 1048576).cast("bigint").alias("key_checksum"),
-    )
+    ]
 
 
 _SHARD_STORE_ORACLE = f"""
@@ -1960,11 +1870,15 @@ def corpus_shard_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes only missing shards; stray uncommitted files are inert) are
     pinned in tests/test_shard_store.py.
 
-    100 TB posture: the index is ~1 row per 512 tokens with no text;
-    the only exchange is the hash partition on ``shard`` routing each
-    shard's rows to its writer task; files are written executor-side
-    (staged+rename / atomic PUT) and the driver handles only n_shards
-    accounting rows plus one immutable manifest shard append."""
+    100 TB posture: the index is corpus_pack_index's fragment kernel
+    (operators/packing.py::pack_fragments: a range partition of the
+    16-byte (doc_id, n) counts, one collect of per-partition token
+    totals, no window), ~1 row per 512 tokens with no text; after the
+    range partition the only exchange is the hash partition on
+    ``shard`` routing each shard's rows to its writer task; files are
+    written executor-side (staged+rename / atomic PUT) and the driver
+    handles only n_shards accounting rows plus one immutable manifest
+    shard append."""
     import tempfile
 
     from hortacloud_importer_spark.pipelines.shard_store import (
@@ -1984,7 +1898,44 @@ def corpus_shard_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DSB_STOPS = "'the','a','of','and','to','in','is','for','on','with'"
+_DSB_STOPWORDS = frozenset(
+    ("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
+)
+_DSB_STOPS = ",".join(f"'{w}'" for w in sorted(_DSB_STOPWORDS))
+
+
+def _dataset_build_docs(batches):
+    """mapInPandas kernel, the front of q_dataset_build: documents
+    (doc_id, source, text) to (fp, doc_id, source, n) for every row of
+    the dup-injected corpus (each doc_id % 5 == 0 document again as
+    doc_id + 100000, the re-crawl) that passes the quality filter.
+    Spark's semantics exactly: words are split(text, ' ') keeping
+    empty strings, 5 <= words <= 2000, stop-word share >= 0.01 as a
+    double division, n = non-empty words >= 1, a null text dropped
+    (its size is -1), fp = hex md5 of the UTF-8 text."""
+    import hashlib
+
+    import pandas as pd
+
+    for pdf in batches:
+        rows = []
+        for doc, source, text in zip(pdf["doc_id"], pdf["source"], pdf["text"]):
+            if not isinstance(text, str):
+                continue
+            words = text.split(" ")
+            n_words = len(words)
+            n = n_words - words.count("")
+            if not 5 <= n_words <= 2000 or n < 1:
+                continue
+            if sum(w in _DSB_STOPWORDS for w in words) / n_words < 0.01:
+                continue
+            fp = hashlib.md5(text.encode("utf-8")).hexdigest()
+            rows.append((fp, doc, source, n))
+            if doc % 5 == 0:
+                rows.append((fp, doc + 100000, source, n))
+        if rows:
+            yield pd.DataFrame(rows, columns=["fp", "doc_id", "source", "n"])
+
 
 _DATASET_BUILD_ORACLE = f"""
 WITH corpus AS (
@@ -2065,8 +2016,8 @@ def q_dataset_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses re-crawls (16-byte md5 shuffle), deterministic mixture
     sampling applies per-source rates (stateless seed-keyed md5, the
     corpus_sample_mix stage), survivors pack end-to-end into 512-token
-    sequences (the two-pass global prefix sum — no SinglePartition
-    over data rows), and the sequences deal into dataloader shards
+    sequences (closed form from their token total), and the sequences
+    deal into dataloader shards
     (shard_deal). Output: per-shard sequence/token accounting with the
     shuffled-order endpoints. Every stage is an already-verified
     operator; this pins their COMPOSITION with one DuckDB oracle.
@@ -2074,45 +2025,30 @@ def q_dataset_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     join before sampling — but is pinned by its own oracle pair, so
     this composite keeps the plan readable without it.)
 
-    Scale shape: the only full-corpus shuffles are the md5 dedup
-    groupBy and the pack range-partition; sampling is a map-side
-    filter on the deduped (doc_id, n) index, the prefix-sum window
-    sees per-partition totals only, and the shard accounting is one
-    map-side-combined aggregate with _SHARD_N output rows."""
-    stopwords = (
-        "the", "a", "of", "and", "to", "in", "is", "for", "on", "with"
-    )
-    d = table(spark, sf_dir, "documents")
-    dup = d.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "source", "text"
-    )
+    100 TB posture: one map kernel (:func:`_dataset_build_docs`)
+    reads each document once and emits its quality-kept copies as
+    (fp, doc_id, source, n); the only full-corpus shuffle is the md5
+    dedup groupBy over those hex digests (no text). Sampling is a
+    map-side filter on the deduped (doc_id, n) index; packing is
+    closed-form (operators/packing.py::packed_sequences: one sum(n)
+    job, then sequence s of ceil(T/512) holds min(512, T - 512*s)
+    tokens), so no document row is ordered, windowed or exploded; and
+    the shard accounting is one map-side-combined aggregate over a
+    ``spark.range`` of sequences with _SHARD_N output rows."""
+    from hortacloud_importer_spark.operators.packing import packed_sequences
+
     # NOT spread: the quality stage ran 0.77 s over 2 scan tasks in
     # the round-14 profile — an extra round-robin exchange (plus its
     # AQE stage-job) costs about what the wider tokenize would save,
     # and the md5-dedup exchange right after it already spreads the
     # rest of the composite
-    corpus = d.select("doc_id", "source", "text").unionByName(dup)
-    words = F.split("text", " ")
-    n_words = F.size(words).cast("bigint")
-    stop_ratio = (
-        F.size(F.filter(words, lambda w: w.isin(*stopwords))).cast(
-            "double"
-        )
-        / n_words
+    kept = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    ).mapInPandas(
+        _dataset_build_docs,
+        "fp string, doc_id bigint, source string, n bigint",
     )
-    n = F.size(F.filter(words, lambda x: x != "")).cast("bigint")
-    kept = (
-        corpus.withColumn("n", n)
-        .withColumn("n_words", n_words)
-        .withColumn("stop_ratio", stop_ratio)
-        .filter(
-            (F.col("n_words") >= 5)
-            & (F.col("n_words") <= 2000)
-            & (F.col("stop_ratio") >= 0.01)
-            & (F.col("n") >= 1)
-        )
-    )
-    dedup = kept.groupBy(F.md5("text").alias("fp")).agg(
+    dedup = kept.groupBy("fp").agg(
         F.min("doc_id").alias("doc_id"),
         F.min_by("source", "doc_id").alias("source"),
         F.min("n").alias("n"),
@@ -2152,27 +2088,8 @@ def q_dataset_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("u") < F.col("rate"))
         .select("doc_id", "n")
     )
-    pre = _pack_prefix_of(spark, sampled)
-    S = _PACK_S
-    frag = pre.select(
-        F.explode(_seq_ids(S)).alias("seq_id"),
-        "prefix",
-        "n",
-    ).withColumn(
-        "tokens",
-        F.least((F.col("seq_id") + 1) * S, F.col("prefix") + F.col("n"))
-        - F.greatest(F.col("seq_id") * S, F.col("prefix")),
-    )
-    seqs = frag.groupBy("seq_id").agg(
-        F.sum("tokens").cast("bigint").alias("seq_tokens")
-    )
-    keyed = shard_deal(seqs)
-    return keyed.groupBy("shard").agg(
-        F.count("*").cast("bigint").alias("n_seqs"),
-        F.sum("seq_tokens").cast("bigint").alias("shard_tokens"),
-        F.min_by("seq_id", "u").alias("first_seq"),
-        F.max_by("seq_id", "u").alias("last_seq"),
-    )
+    keyed = shard_deal(packed_sequences(spark, sampled, _PACK_S))
+    return keyed.groupBy("shard").agg(*_shard_accounting())
 
 
 @register("dedup_substring_apply", "K1",

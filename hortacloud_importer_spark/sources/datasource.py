@@ -486,24 +486,48 @@ def _read_slice(
             return arr
         y0, y1, x0, x1 = window
         return arr[y0:y1, x0:x1]
-    from hortacloud_importer_spark.sources.tiff import (
-        decode_stack_page,
-        page_shape,
-        tiff_page_table,
-    )
+    from hortacloud_importer_spark.sources.tiff import decode_stack_page
 
     filesystem, p = _pa_fs(path)
     with filesystem.open_input_file(p) as fh:
-        ec, ifds = _named(path, tiff_page_table, fh)
-        h, w, spp = _named(path, page_shape, ifds[0])
-        _check_one_page(path, (len(ifds), h, w, spp))
-        _check_slice_shape(path, (h, w), first)
+        ec, ifds, shape = _tiff_slice_header(path, fh)
+        _check_slice_shape(path, shape, first)
         arr = _named(
             path,
             lambda f: decode_stack_page(f, ec, ifds[0], window, stats),
             fh,
         )[..., 0]
     return _integer_samples(path, arr, float_mode)
+
+
+def _tiff_slice_header(path: str, fh) -> tuple[str, list[dict], tuple[int, int]]:
+    """A TIFF slice's IFD walk by seek over its opened file ``fh``:
+    (endian, page table, (height, width)). A file that is not one
+    single-sample page raises, naming it."""
+    from hortacloud_importer_spark.sources.tiff import page_shape, tiff_page_table
+
+    ec, ifds = _named(path, tiff_page_table, fh)
+    h, w, spp = _named(path, page_shape, ifds[0])
+    _check_one_page(path, (len(ifds), h, w, spp))
+    return ec, ifds, (h, w)
+
+
+def _slice_file_shape(path: str) -> tuple[int, int]:
+    """(height, width) of one slice file from its header. A TIFF's IFD
+    chain is walked by seek, so only its header is fetched; a JPEG
+    2000 slice is read whole for its ihdr box and must pass
+    ``check_jp2_uint16``. A file that is not one single-sample page
+    raises, naming it."""
+    if _is_jp2(path):
+        from hortacloud_importer_spark.sources.jp2 import check_jp2_uint16
+
+        data = _read_bytes(path)
+        shape = _slice_shape(path, data)
+        check_jp2_uint16(data, path)
+        return shape
+    filesystem, p = _pa_fs(path)
+    with filesystem.open_input_file(p) as fh:
+        return _tiff_slice_header(path, fh)[2]
 
 
 def _check_slice_shape(

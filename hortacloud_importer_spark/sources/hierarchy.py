@@ -4,11 +4,12 @@ The reference probes N5/Zarr group layouts — ``{root}/c{i}/s{j}``
 (channel i, scale j) vs flat ``{root}/s{j}`` — by listing subgroups
 (tiff2octree.py:711-777 ``check_n5_channels``/``check_n5_levels``)
 and builds one lazy array per (channel, level). The Spark analog
-lists the store through the Hadoop FileSystem API (so the same code
-walks local disk, HDFS, or s3a://), then assembles one DataFrame per
-level as a ``unionByName`` of per-channel reads tagged with their
-channel — the lazy-scan equivalent of the reference's virtual dask
-arrays (nothing is read until an action).
+lists the store on the driver through pyarrow (``_pa_fs``, as the
+chunk stores are read: local disk or ``s3://``/``s3a://``), then
+assembles one DataFrame per level as a ``unionByName`` of
+per-channel reads tagged with their channel — the lazy-scan
+equivalent of the reference's virtual dask arrays (nothing is read
+until an action).
 """
 
 from __future__ import annotations
@@ -22,31 +23,44 @@ _CHANNEL_RE = re.compile(r"^c(\d+)$")
 _SCALE_RE = re.compile(r"^s(\d+)$")
 
 
-def _list_dirs(spark: SparkSession, root: str) -> list[str]:
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+def _child(root: str, name: str) -> str:
+    """``root/name``, with any ``?filesystem`` options of the root
+    following the child (pyarrow rebuilds the filesystem from them)."""
+    bare, q, query = root.partition("?")
+    return f"{bare.rstrip('/')}/{name}{q}{query}"
+
+
+def _list_dirs(root: str) -> list[str]:
+    """The names of the directories directly in ``root`` (none when it
+    does not exist), listed through pyarrow (``_pa_fs``), as the chunk
+    stores are: local paths and ``s3://``/``s3a://`` URIs alike. A
+    file has none."""
+    from pyarrow import fs as pafs
+
+    from hortacloud_importer_spark.sources.datasource import _pa_fs
+
+    filesystem, base = _pa_fs(root)
+    try:
+        infos = filesystem.get_file_info(
+            pafs.FileSelector(base.rstrip("/"), allow_not_found=True)
+        )
+    except NotADirectoryError:
         return []
-    return [
-        s.getPath().getName()
-        for s in fs.listStatus(path)
-        if s.isDirectory()
-    ]
+    return [i.base_name for i in infos if i.type == pafs.FileType.Directory]
 
 
-def discover_hierarchy(spark: SparkSession, root: str) -> dict[int, list[int]]:
+def discover_hierarchy(root: str) -> dict[int, list[int]]:
     """Probe the layout: {channel: [scale, ...]}. A flat ``s{j}``
     layout (no channel groups) reports as channel 0, matching the
     reference's fallback (tiff2octree.py:758-777)."""
     channels: dict[int, list[int]] = {}
-    names = _list_dirs(spark, root)
+    names = _list_dirs(root)
     chan_dirs = {int(m.group(1)): n for n in names if (m := _CHANNEL_RE.match(n))}
     if chan_dirs:
         for ch, dirname in sorted(chan_dirs.items()):
             scales = [
                 int(m.group(1))
-                for n in _list_dirs(spark, f"{root}/{dirname}")
+                for n in _list_dirs(_child(root, dirname))
                 if (m := _SCALE_RE.match(n))
             ]
             channels[ch] = sorted(scales)
@@ -57,18 +71,17 @@ def discover_hierarchy(spark: SparkSession, root: str) -> dict[int, list[int]]:
     return channels
 
 
-def _level_groups(
-    spark: SparkSession, root: str, scale: int
-) -> list[tuple[int, str]]:
+def _level_groups(root: str, scale: int) -> list[tuple[int, str]]:
     """(channel, group path) of every channel that has scale ``scale``."""
-    layout = discover_hierarchy(spark, root)
+    layout = discover_hierarchy(root)
     if not layout:
         raise FileNotFoundError(f"no c*/s* hierarchy under {root}")
-    has_channel_dirs = bool(
-        [n for n in _list_dirs(spark, root) if _CHANNEL_RE.match(n)]
-    )
+    has_channel_dirs = any(_CHANNEL_RE.match(n) for n in _list_dirs(root))
     groups = [
-        (ch, f"{root}/c{ch}/s{scale}" if has_channel_dirs else f"{root}/s{scale}")
+        (
+            ch,
+            _child(root, f"c{ch}/s{scale}" if has_channel_dirs else f"s{scale}"),
+        )
         for ch, scales in layout.items()
         if scale in scales
     ]
@@ -92,7 +105,7 @@ def read_level(spark: SparkSession, root: str, scale: int) -> DataFrame:
     return _union(
         [
             spark.read.parquet(base).withColumn("channel", F.lit(ch))
-            for ch, base in _level_groups(spark, root, scale)
+            for ch, base in _level_groups(root, scale)
         ]
     )
 
@@ -115,6 +128,6 @@ def read_level_chunks(spark: SparkSession, root: str, scale: int) -> DataFrame:
             spark.read.format(chunk_store(base).format)
             .load(base)
             .withColumn("channel", F.lit(ch))
-            for ch, base in _level_groups(spark, root, scale)
+            for ch, base in _level_groups(root, scale)
         ]
     )

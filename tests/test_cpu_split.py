@@ -199,8 +199,8 @@ def test_table_reports_the_first_operation_beside_the_median():
 def test_step_meter_sums_a_querys_spans_into_one_step():
     """``DatasetBuild.op`` wraps each query's planning and execution in
     two spans and the shard store's write in a third; the meter bills
-    each span's CPU and compiles to its step, a query's two spans to
-    one row, in the order the steps ran."""
+    each span's CPU, compiles and Spark jobs to its step, a query's two
+    spans to one row, in the order the steps ran."""
     import contextlib
 
     readings = iter([(10, 100), (12, 150), (12, 150), (12, 170), (12, 170), (13, 171)])
@@ -216,7 +216,8 @@ def test_step_meter_sums_a_querys_spans_into_one_step():
         yield out
         out["cpu"], out["jvm"] = next(cpu)
 
-    m = cpu_split.StepMeter(meter, lambda: next(readings))
+    jobs = iter([3, 5, 5, 9, 9, 15])  # submitted-job counts around each span
+    m = cpu_split.StepMeter(meter, lambda: next(readings), lambda: next(jobs))
     assert not m.enabled
     with m.span("queries.plan", query="sim_ann"):
         pass
@@ -227,13 +228,34 @@ def test_step_meter_sums_a_querys_spans_into_one_step():
     assert list(m.steps) == ["sim_ann", "shard store"]
     assert m.steps["sim_ann"] == pytest.approx({
         "CPU s": 3.5, "JVM": 3.0, "JIT": 1.6, "task": 0.7,
-        "Janino compiles": 2, "JIT compile ms": 70,
+        "Janino compiles": 2, "JIT compile ms": 70, "Spark jobs": 6,
     })
     assert m.steps["shard store"]["Janino compiles"] == 1
+    assert m.steps["shard store"]["Spark jobs"] == 6
     text = cpu_split.step_table([m.steps, m.steps]).splitlines()
     assert text[0] == (
         "| step | first CPU s | CPU s | JVM | JIT | task | Janino compiles"
-        " | JIT compile ms |"
+        " | JIT compile ms | Spark jobs |"
     )
-    assert text[2] == "| `sim_ann` | 3.50 | 3.50 | 3.00 | 1.60 | 0.70 | 2 | 70 |"
-    assert text[-1] == "| total | 4.25 | 4.25 | 3.50 | 1.60 | 1.20 | 3 | 71 |"
+    assert text[2] == "| `sim_ann` | 3.50 | 3.50 | 3.00 | 1.60 | 0.70 | 2 | 70 | 6 |"
+    assert text[-1] == "| total | 4.25 | 4.25 | 3.50 | 1.60 | 1.20 | 3 | 71 | 12 |"
+
+
+def test_jobs_counts_the_sessions_submitted_jobs():
+    """One more than the newest job id in the status store; 0 before
+    any job."""
+
+    class Tracker:
+        def __init__(self, ids):
+            self.ids = ids
+
+        def getJobIdsForGroup(self, group):
+            assert group is None
+            return self.ids
+
+    class Spark:
+        def __init__(self, ids):
+            self.sparkContext = type("Sc", (), {"statusTracker": lambda _s: Tracker(ids)})()
+
+    assert cpu_split._jobs(Spark([])) == 0
+    assert cpu_split._jobs(Spark([4, 7, 2])) == 8

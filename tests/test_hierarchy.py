@@ -24,14 +24,14 @@ def n5_like_store(spark, tmp_path_factory):
 
 
 def test_discover_channels_and_scales(spark, n5_like_store):
-    assert discover_hierarchy(spark, n5_like_store) == {0: [0, 1], 1: [0, 1]}
+    assert discover_hierarchy(n5_like_store) == {0: [0, 1], 1: [0, 1]}
 
 
 def test_discover_flat_layout(spark, tmp_path):
     root = str(tmp_path / "flat")
     v = synthetic_volume(spark, 2, 2, 2)
     v.drop("channel").write.parquet(f"{root}/s0")
-    assert discover_hierarchy(spark, root) == {0: [0]}
+    assert discover_hierarchy(root) == {0: [0]}
     df = read_level(spark, root, 0)
     assert df.count() == 8
     assert df.select("channel").distinct().collect()[0][0] == 0
@@ -46,7 +46,7 @@ def test_read_level_unions_channels(spark, n5_like_store):
 
 
 def test_missing_paths_raise(spark, n5_like_store, tmp_path):
-    assert discover_hierarchy(spark, str(tmp_path / "nope")) == {}
+    assert discover_hierarchy(str(tmp_path / "nope")) == {}
     with pytest.raises(FileNotFoundError):
         read_level(spark, str(tmp_path / "nope"), 0)
     with pytest.raises(FileNotFoundError):

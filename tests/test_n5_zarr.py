@@ -243,7 +243,7 @@ def test_hierarchy_discovery_over_n5(spark, tmp_path):
         _write_n5(tmp_path / f"c{ch}" / "s1", vol[::2, ::2, ::2], (2, 2, 1), "gzip")
 
     root = f"file://{tmp_path}"
-    assert discover_hierarchy(spark, root) == {0: [0, 1], 1: [0, 1]}
+    assert discover_hierarchy(root) == {0: [0, 1], 1: [0, 1]}
     lv0 = read_level_chunks(spark, root, 0)
     assert lv0.count() == 2 * 64
     got = {ch: np.zeros((4, 4, 4), dtype=np.int64) for ch in (0, 1)}

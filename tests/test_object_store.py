@@ -1,33 +1,23 @@
 """Object-store integration evidence (SURVEY A3/A6/A11): the engine's
 IO runs against S3-style stores, not just the local filesystem.
 
-Two independent proofs, matching the engine's two IO stacks:
-
-1. **pyarrow surfaces** (Python DataSource scans, chunk-store probes,
-   listings and reads, the octree build's block writes and manifest
-   commit, resume probes) against a real in-process S3 REST
-   endpoint (tests/s3_stub.py) over ``s3://`` URIs — ListObjectsV2,
-   ranged GETs, multipart uploads, the lot. Also pins the
-   ``s3a:// -> s3://`` alias (clusters configure the Hadoop spelling;
-   pyarrow only speaks ``s3://``).
-
-2. **Hadoop-FileSystem surfaces** (driver-side hierarchy discovery)
-   via a compiled shim FileSystem registered as
-   ``fs.s3a.impl`` — proving the listing code is scheme-agnostic
-   given any classpath implementation, exactly how hadoop-aws plugs
-   into a real cluster. Runs in a subprocess so the shim can ride the
-   driver classpath without disturbing the shared test session.
+Every engine surface reads and writes through pyarrow (Python
+DataSource scans, chunk-store probes, listings and reads, hierarchy
+discovery, the octree build's block writes and manifest commit,
+resume probes); here they run against a real in-process S3 REST
+endpoint (tests/s3_stub.py) over ``s3://`` URIs — ListObjectsV2 with
+and without a delimiter, ranged GETs, multipart uploads, the lot.
+Also pins the ``s3a:// -> s3://`` alias (clusters configure the
+Hadoop spelling; pyarrow only speaks ``s3://``).
 """
 
 from __future__ import annotations
 
 import os
 import re
-import subprocess
 import sys
 
 import numpy as np
-import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
 from s3_stub import S3Stub  # noqa: E402
@@ -187,69 +177,36 @@ def test_s3_resume_probe_fresh_store():
         assert not [k for (b, k) in s3.store.objects if b == "rs"]
 
 
-_SHIM_JAVA = """
-import java.net.URI;
-public class S3aLocalFileSystem
-    extends org.apache.hadoop.fs.RawLocalFileSystem {
-  @Override public URI getUri() { return URI.create("s3a:///"); }
-}
-"""
-
-_SUBPROC = """
-import sys
-from pyspark.sql import SparkSession
-
-shim_dir, store = sys.argv[1], sys.argv[2]
-spark = (
-    SparkSession.builder.master("local[2]")
-    .config("spark.driver.extraClassPath", shim_dir)
-    .config("spark.hadoop.fs.s3a.impl", "S3aLocalFileSystem")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-from hortacloud_importer_spark.sources.hierarchy import discover_hierarchy
-
-layout = discover_hierarchy(spark, "s3a://" + store)
-assert layout == {0: [0, 1], 1: [0]}, layout
-print("S3A_OK")
-"""
-
-
-@pytest.mark.skipif(
-    not os.path.exists("/usr/bin/javac"), reason="no JDK for the shim"
-)
-def test_s3a_hadoop_fs_listing(tmp_path):
-    """A3 discovery over ``s3a://`` URIs through the Hadoop FileSystem
-    API: a shim fs.s3a.impl on the driver classpath (local disk behind
-    it) stands in for hadoop-aws; the engine's listing code runs
-    unchanged."""
-    import pyspark
-
-    # shim classpath
-    shim = tmp_path / "shim"
-    shim.mkdir()
-    (shim / "S3aLocalFileSystem.java").write_text(_SHIM_JAVA)
-    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
-    cp = ":".join(
-        os.path.join(jars, j)
-        for j in os.listdir(jars)
-        if j.startswith("hadoop-client-api")
+def test_s3_hierarchy_discovery_and_level_read(spark, tmp_path):
+    """A3 discovery over an object store: a c{i}/s{j} N5 hierarchy
+    lives only in the S3 endpoint. ``discover_hierarchy`` lists its
+    groups through pyarrow, under the ``s3://`` URI and its ``s3a://``
+    alias, and ``read_level_chunks`` decodes level 0 of every channel
+    through the same endpoint."""
+    from hortacloud_importer_spark.sources.hierarchy import (
+        discover_hierarchy,
+        read_level_chunks,
     )
-    subprocess.run(
-        ["javac", "-cp", cp, "S3aLocalFileSystem.java"],
-        cwd=shim, check=True, capture_output=True,
-    )
-    # an n5-ish hierarchy on local disk, addressed via s3a:///
-    store = tmp_path / "n5"
-    for d in ("c0/s0", "c0/s1", "c1/s0"):
-        (store / d).mkdir(parents=True)
-    script = tmp_path / "probe.py"
-    script.write_text(_SUBPROC)
-    env = dict(os.environ)
-    env["PYTHONPATH"] = os.getcwd() + os.pathsep + env.get("PYTHONPATH", "")
-    r = subprocess.run(
-        [sys.executable, str(script), str(shim), str(store)],
-        capture_output=True, text=True, timeout=240, env=env,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
-    assert "S3A_OK" in r.stdout
+    from tests.test_n5_zarr import _write_n5
+
+    rng = np.random.default_rng(23)
+    vols = {ch: rng.integers(1, 65535, (4, 4, 4), dtype=np.uint16) for ch in (0, 1)}
+    for ch, vol in vols.items():
+        _write_n5(tmp_path / "h" / f"c{ch}" / "s0", vol, (4, 2, 2), "gzip")
+    _write_n5(tmp_path / "h" / "c0" / "s1", vols[0][::2, ::2, ::2], (2, 2, 2), "gzip")
+    with S3Stub() as s3:
+        s3.store.buckets.add("hs")
+        for f in (tmp_path / "h").rglob("*"):
+            if f.is_file():
+                s3.store.objects[("hs", f.relative_to(tmp_path).as_posix())] = (
+                    f.read_bytes()
+                )
+        root = s3.uri("hs", "h")
+        assert discover_hierarchy(root) == {0: [0, 1], 1: [0]}
+        assert discover_hierarchy("s3a://" + root[len("s3://"):]) == {0: [0, 1], 1: [0]}
+        assert discover_hierarchy(s3.uri("hs", "nope")) == {}
+        got = {ch: np.zeros((4, 4, 4), dtype=np.int64) for ch in vols}
+        for r in read_level_chunks(spark, root, 0).collect():
+            got[r["channel"]][r["z"], r["y"], r["x"]] = r["intensity"]
+    for ch, vol in vols.items():
+        assert np.array_equal(got[ch], vol), ch

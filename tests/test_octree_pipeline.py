@@ -527,6 +527,82 @@ def test_multipage_slice_mid_volume_fails_before_any_commit(spark, tmp_path):
     _assert_reads_no_block(spark, out, tmp_path)
 
 
+def test_list_slices_reads_only_the_first_slice_header(tmp_path, monkeypatch):
+    """The driver's listing takes each channel's shape from a seek-based
+    header walk of its first slice: no slice is read whole, and only
+    header bytes are fetched (the payload of a 64x64 uint16 slice is
+    8 KiB)."""
+    from hortacloud_importer_spark.pipelines.octree import _list_slices
+    from hortacloud_importer_spark.sources import datasource
+
+    rng = np.random.default_rng(47)
+    _write_slices(
+        tmp_path / "s",
+        [rng.integers(1, 60000, (48, 64)).astype(np.uint16) for _ in range(3)],
+    )
+
+    def no_whole_read(path):
+        raise AssertionError(f"read whole: {path}")
+
+    fetched = []
+    real_fs = datasource._pa_fs
+
+    class Counting:
+        def __init__(self, fh):
+            self._fh = fh
+
+        def read(self, n=-1):
+            out = self._fh.read(n)
+            fetched.append(len(out))
+            return out
+
+        def __getattr__(self, name):
+            return getattr(self._fh, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._fh.close()
+
+    class CountingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def open_input_file(self, p):
+            return Counting(self._fs.open_input_file(p))
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    monkeypatch.setattr(datasource, "_read_bytes", no_whole_read)
+    monkeypatch.setattr(
+        datasource, "_pa_fs",
+        lambda p: (CountingFs(real_fs(p)[0]), real_fs(p)[1]),
+    )
+    files, shapes = _list_slices(str(tmp_path / "s"), 1)
+    assert len(files[0]) == 3 and shapes == [(48, 64)]
+    assert 0 < sum(fetched) < 48 * 64 * 2, fetched
+
+
+def test_multipage_first_slice_fails_at_listing_naming_it(spark, tmp_path):
+    """A first slice with two pages fails the driver's header walk,
+    before any Spark job, with a ValueError naming the file."""
+    from hortacloud_importer_spark.pipelines import build_octree
+
+    rng = np.random.default_rng(49)
+    _write_slices(
+        tmp_path / "p0",
+        [rng.integers(1, 60000, (32, 32)).astype(np.uint16) for _ in range(4)],
+    )
+    bad = tmp_path / "p0" / "default.0.000.tif"
+    bad.write_bytes(encode_tiff(np.ones((2, 32, 32), dtype=np.uint16)))
+    out = str(tmp_path / "p0_store")
+    with pytest.raises(ValueError, match=f"{bad}: slice file has shape \\(2, 32, 32, 1\\)"):
+        build_octree(spark, str(tmp_path / "p0"), out, nlevels=2)
+    assert not os.path.exists(out)
+
+
 def test_gap_in_z_fails_before_any_commit(spark, tmp_path):
     """Slices default.0.000-007 without 004: the build fails before any
     Spark job with a ValueError naming the files on both sides of the

@@ -183,13 +183,6 @@ def test_no_registered_query_has_unpartitioned_window_over_facts():
     allowed = {
         ("queries/windows.py", "sort_global"),  # nation: 25 rows
         ("operators/rownum.py", "global_row_numbers"),  # <= npartitions rows
-        # the shared token-offset prefix sum behind corpus_pack and
-        # corpus_pack_index: the same two-pass shape as
-        # global_row_numbers — the window runs over the
-        # <= npartitions per-partition totals, never document rows
-        # (test_corpus_pack_has_no_global_window_over_the_data pins
-        # the executed plan)
-        ("queries/dedup.py", "_pack_prefix_of"),
     }
     hits = []
     for py in qdir.rglob("*.py"):
@@ -285,14 +278,7 @@ def test_redact_pii_has_no_exchange(spark, sf_dir):
     assert "Exchange" not in plan
 
 
-def test_corpus_pack_has_no_global_window_over_the_data(spark, sf_dir):
-    """Sequence packing's global token prefix sum must use the
-    two-pass shape: the corpus-side cumulative sum is keyed by the
-    range-partition id; the only SinglePartition exchange feeds the
-    tiny per-partition token totals, never document rows."""
-    plan = _plan(spark, "corpus_pack", sf_dir)
-    assert "BroadcastHashJoin" in plan
-    assert "windowspecdefinition(_pid#" in plan
+def _no_single_partition_reads_documents(plan):
     single = [
         seg for seg in plan.split("Exchange ")
         if seg.startswith("SinglePartition")
@@ -303,48 +289,54 @@ def test_corpus_pack_has_no_global_window_over_the_data(spark, sf_dir):
             assert "ReadSchema: struct<>" in head, (
                 f"data columns feed SinglePartition: {head}"
             )
+
+
+def test_corpus_pack_has_no_global_window_over_the_data(spark, sf_dir):
+    """Packing needs no window at all, in corpus_pack or in any query
+    built on packing: the fragment index takes each range partition's
+    cumulative sum in one kernel, and the per-sequence accounting is
+    closed-form. No SinglePartition exchange reads document columns."""
+    for qname in (
+        "corpus_pack", "corpus_pack_index", "corpus_shard", "q_dataset_build"
+    ):
+        plan = _plan(spark, qname, sf_dir)
+        assert not re.search(r"\bWindow \[", plan), (qname, plan)
+        _no_single_partition_reads_documents(plan)
+
+
+def test_pack_fragments_is_one_kernel_over_the_checkpoint(spark, sf_dir):
+    """corpus_pack_index is the fragment kernel straight over the
+    checkpointed range partitions: no exchange, join or explode."""
+    plan = _plan(spark, "corpus_pack_index", sf_dir)
+    assert "MapInPandas" in plan and "Scan ExistingRDD" in plan
+    for op in ("Exchange", "Join", "Generate"):
+        assert op not in plan, plan
 
 
 def test_corpus_shard_deal_is_one_hash_exchange_on_shard(spark, sf_dir):
-    """The shard deal must be a pure map over the pack index: the only
-    NEW exchange vs corpus_pack is the hash partition on `shard` for
-    the accounting aggregate, and (inherited) no SinglePartition
-    exchange reads document columns."""
+    """The shard deal is a pure map over the closed-form sequences (a
+    Range, no document rows): the only exchange is the hash partition
+    on `shard` for the accounting aggregate."""
     plan = _plan(spark, "corpus_shard", sf_dir)
+    assert plan.count("Exchange ") == 1
     assert "Exchange hashpartitioning(shard" in plan
-    single = [
-        seg for seg in plan.split("Exchange ")
-        if seg.startswith("SinglePartition")
-    ]
-    for seg in single:
-        head = seg[:500]
-        if "parquet" in head:
-            assert "ReadSchema: struct<>" in head, (
-                f"data columns feed SinglePartition: {head}"
-            )
+    assert "Range (" in plan
+    _no_single_partition_reads_documents(plan)
 
 
 def test_dataset_build_composite_plan_shape(spark, sf_dir):
-    """The raw-crawl->shards composite must inherit every stage's
-    scale guarantee in composition: the pack prefix-sum's two-pass
-    shape (windows keyed by the range-partition id; any
-    SinglePartition exchange over a parquet scan reads no columns),
-    the shard accounting's hash exchange, and no cartesian join
-    anywhere."""
+    """The raw-crawl->shards composite packs in closed form: its
+    executed plan deals a Range of sequences (the md5 dedup and the
+    sampling ran in the token-total job), so it has no range
+    partition (in the plan or checkpointed under it), no window and no
+    cartesian join; the shard accounting is one hash exchange."""
     plan = _plan(spark, "q_dataset_build", sf_dir)
-    assert "windowspecdefinition(_pid#" in plan
+    assert "rangepartitioning" not in plan
+    assert "ExistingRDD" not in plan
+    assert "Range (" in plan
     assert "Exchange hashpartitioning(shard" in plan
     assert "CartesianProduct" not in plan
-    single = [
-        seg for seg in plan.split("Exchange ")
-        if seg.startswith("SinglePartition")
-    ]
-    for seg in single:
-        head = seg[:500]
-        if "parquet" in head:
-            assert "ReadSchema: struct<>" in head, (
-                f"data columns feed SinglePartition: {head}"
-            )
+    _no_single_partition_reads_documents(plan)
 
 
 @pytest.mark.parametrize(

@@ -45,7 +45,9 @@ drop into ``exited``. Last come the classes Janino compiled
 Usage: ``python tools/cpu_split.py [--workload W] [--seed N] [--reps R]``
 — prints the prime's two markdown tables, then the operation's two
 tables and compile counts: the first measured operation (the one the
-benchmark times, right after the prime) beside the median over R.
+benchmark times, right after the prime) beside the median over R, and
+each operation's CPU and JIT seconds in order (the JIT warm-up
+curve).
 """
 
 from __future__ import annotations
@@ -202,21 +204,25 @@ def measure(run, root_pid: int, jvm_pid: int, hz: float, proc: str = "/proc"):
     return result, m["cpu"], m["jvm"]
 
 
-STEP_COLUMNS = ("CPU s", "JVM", "JIT", "task", "Janino compiles", "JIT compile ms")
+STEP_COLUMNS = (
+    "CPU s", "JVM", "JIT", "task", "Janino compiles", "JIT compile ms", "Spark jobs",
+)
+_COUNT_COLUMNS = ("Janino compiles", "JIT compile ms", "Spark jobs")
 
 
 class StepMeter:
     """Takes the place of perfbench's tracer in ``DatasetBuild.op``,
     which wraps each query's planning and execution and the shard
-    store's write in ``tracer.span``: the CPU split and the compiles
-    of each span, summed per step (a query's two spans make one step).
-    ``meter()`` is a :func:`measuring` context; ``compiles()`` returns
-    :func:`_compiles`' pair."""
+    store's write in ``tracer.span``: the CPU split, the compiles and
+    the Spark jobs of each span, summed per step (a query's two spans
+    make one step). ``meter()`` is a :func:`measuring` context;
+    ``compiles()`` returns :func:`_compiles`' pair and ``jobs()``
+    :func:`_jobs`' count."""
 
     enabled = False  # the operation records no per-layer figures
 
-    def __init__(self, meter, compiles):
-        self._meter, self._compiles = meter, compiles
+    def __init__(self, meter, compiles, jobs):
+        self._meter, self._compiles, self._jobs = meter, compiles, jobs
         self.steps: dict[str, dict[str, float]] = {}
 
     @contextlib.contextmanager
@@ -224,10 +230,10 @@ class StepMeter:
         step = attrs.get("query") or {
             "pipelines.shard_store.write": "shard store"
         }.get(name, name)
-        c0 = self._compiles()
+        c0, j0 = self._compiles(), self._jobs()
         with self._meter() as m:
             yield None
-        c1 = self._compiles()
+        c1, j1 = self._compiles(), self._jobs()
         row = self.steps.setdefault(step, dict.fromkeys(STEP_COLUMNS, 0.0))
         for col, value in zip(
             STEP_COLUMNS,
@@ -238,6 +244,7 @@ class StepMeter:
                 m["jvm"].get("task", 0.0),
                 c1[0] - c0[0],
                 c1[1] - c0[1],
+                j1 - j0,
             ),
         ):
             row[col] += value
@@ -265,7 +272,7 @@ def step_table(ops: list[dict]) -> str:
 
 
 def _cell(column: str, value: float) -> str:
-    return f"{value:g}" if column in ("Janino compiles", "JIT compile ms") else f"{value:.2f}"
+    return f"{value:g}" if column in _COUNT_COLUMNS else f"{value:.2f}"
 
 
 def table(
@@ -305,6 +312,14 @@ def _compiles(spark) -> tuple[int, int]:
     janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     return janino.getCount(), jit.getTotalCompilationTime()
+
+
+def _jobs(spark) -> int:
+    """Spark jobs the session has submitted so far: one more than the
+    newest job id in the driver's status store (ids count up from 0;
+    the engine sets no job groups)."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1) + 1
 
 
 def main() -> int:
@@ -352,6 +367,7 @@ def main() -> int:
             meter = StepMeter(
                 functools.partial(measuring, me, jvm, hz),
                 functools.partial(_compiles, spark),
+                functools.partial(_jobs, spark),
             )
             c0 = _compiles(spark)
             op, cpu, jvm_cpu = measure(lambda: wl.op(spark, meter), me, jvm, hz)
@@ -383,6 +399,12 @@ def main() -> int:
         f"JIT compilation time: first {compiles[0][1]:g} ms, "
         f"median {statistics.median(c[1] for c in compiles):g} ms"
     )
+    print()
+    print("Warm-up, operation by operation (CPU s / JIT thread s):")
+    print(", ".join(
+        f"{sum(c.values()):.2f} / {j.get('jit', 0.0):.2f}"
+        for c, j in zip(splits, jvm_splits)
+    ))
     if steps[0]:
         print()
         print(f"Per step (the first operation's CPU s, and the median of {args.reps}):")

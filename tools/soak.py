@@ -58,10 +58,39 @@ NLEVELS = int(os.environ.get("SOAK_NLEVELS", "3"))
 WORK = os.environ.get("SOAK_DIR", "/tmp/spark_graft_soak")
 
 
+def _children() -> dict[int, list[int]]:
+    """{ppid: [pid, ...]} of every live process (/proc)."""
+    kids: dict[int, list[int]] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        # field 4 (ppid) follows the parenthesised command name
+        ppid = int(stat.rsplit(")", 1)[1].split()[1])
+        kids.setdefault(ppid, []).append(int(entry))
+    return kids
+
+
+def process_tree(root: int) -> list[int]:
+    """``root`` and all its descendants."""
+    kids = _children()
+    out, todo = [], [root]
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo.extend(kids.get(pid, []))
+    return out
+
+
 class RssSampler(threading.Thread):
-    """Peak RSS summed over every process owned by this uid — the
-    local-mode analog of 'peak executor memory': driver JVM plus all
-    pyspark daemon/worker children."""
+    """Peak RSS summed over the soak's own process tree — the
+    local-mode analog of 'peak executor memory': this driver, its JVM
+    and every pyspark daemon/worker below it. Other processes of the
+    same user are not counted."""
 
     def __init__(self, interval: float = 0.5):
         super().__init__(daemon=True)
@@ -76,21 +105,15 @@ class RssSampler(threading.Thread):
 
     @staticmethod
     def _total_rss_kb() -> int:
-        me = os.getuid()
         total = 0
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
+        for pid in process_tree(os.getpid()):
             try:
-                st = os.stat(f"/proc/{pid}")
-                if st.st_uid != me:
-                    continue
                 with open(f"/proc/{pid}/status") as fh:
                     for line in fh:
                         if line.startswith("VmRSS:"):
                             total += int(line.split()[1])
                             break
-            except (FileNotFoundError, ProcessLookupError, PermissionError):
+            except OSError:
                 continue
         return total
 
