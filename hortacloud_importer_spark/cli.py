@@ -83,7 +83,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--channel",
         type=int,
         default=0,
-        help="channel id for single-stack input (-f)",
+        help="channel id for a stack (-f) or a single N5/Zarr store (-i)",
     )
     oct_p.add_argument(
         "--channels",
@@ -271,9 +271,10 @@ def _pixel_resolution(path: str) -> tuple[float, float, float] | None:
 def _run_octree(args) -> dict:
     from hortacloud_importer_spark.pipelines import (
         build_octree,
-        stack_voxels,
         tiff_octree_to_ktx,
     )
+    from hortacloud_importer_spark.sources import listing
+    from hortacloud_importer_spark.sources.hierarchy import discover_hierarchy
     from hortacloud_importer_spark.sources.n5 import chunk_store
 
     spark = _session(args)
@@ -284,53 +285,32 @@ def _run_octree(args) -> dict:
     if not args.ktxonly:
         if bool(args.inputdir) == bool(args.inputfile):
             raise SystemExit("exactly one of -i/--inputdir or -f/--inputfile")
-        dims = None
+        # every input is listed on the driver and each first-pass task
+        # reads its own windows by path (sources/listing.py); an input
+        # directory is an N5/Zarr store (auto-detected like the
+        # reference's, tiff2octree.py:319-328), a c{i}/s{j} hierarchy
+        # (level s0, every channel; check_n5_levels/check_n5_channels,
+        # tiff2octree.py:711-777) or a slice directory
         if args.inputfile:
-            source, dims = stack_voxels(spark, args.inputfile, args.channel)
+            source = listing.stack_volume(args.inputfile, args.channel)
+        elif (opened := chunk_store(args.inputdir, missing_ok=True)) is not None:
+            source = listing.store_volume([(args.channel, opened)])
+        elif discover_hierarchy(args.inputdir):
+            source = listing.hierarchy_volume(args.inputdir)
         else:
-            source = args.inputdir
-            store = chunk_store(args.inputdir, missing_ok=True)
-            if store is not None:
-                # N5/Zarr input (the reference auto-detects too,
-                # tiff2octree.py:319-328): the DataSource emits dense
-                # (z, y, x, intensity) rows with chunk-grain
-                # partitions and pushed-filter chunk pruning (the
-                # session registers the format); the store's shape is
-                # the volume's, so no voxel pass infers it
-                from pyspark.sql import functions as F
-
-                source = (
-                    spark.read.format(store.format)
-                    .load(args.inputdir)
-                    .withColumn("channel", F.lit(args.channel))
-                )
-                dims = store.shape
-            else:
-                # c{i}/s{j} multi-channel/multi-scale hierarchy
-                # (check_n5_levels/check_n5_channels,
-                # tiff2octree.py:711-777): full-res level s0, every
-                # channel, through the chunk-store readers
-                from hortacloud_importer_spark.sources.hierarchy import (
-                    discover_hierarchy,
-                    read_level_chunks,
-                )
-
-                if discover_hierarchy(args.inputdir):
-                    source = read_level_chunks(spark, args.inputdir, 0)
-            if args.voxsize == (1.0, 1.0, 1.0):
-                res = _pixel_resolution(args.inputdir)
-                if res is not None:
-                    args.voxsize = res
+            source = listing.slice_volume(args.inputdir, args.channels)
+        if args.inputdir and args.voxsize == (1.0, 1.0, 1.0):
+            res = _pixel_resolution(args.inputdir)
+            if res is not None:
+                args.voxsize = res
         summary = build_octree(
             spark,
             source,
             args.output,
             nlevels=nlevels,
             filter_=filter_,
-            dims=dims,
             dtype=args.dtype,
             resume=args.resume,
-            channels=args.channels,
             origin_nm=args.origin,
             voxel_size_um=args.voxsize,
         ).collect()

@@ -3,7 +3,6 @@
 from hortacloud_importer_spark.pipelines.octree import (  # noqa: F401
     build_octree,
     optimal_nlevels,
-    stack_voxels,
 )
 from hortacloud_importer_spark.pipelines.crop import (  # noqa: F401
     crop_chunk_store,

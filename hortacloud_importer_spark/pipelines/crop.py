@@ -207,6 +207,7 @@ def crop_chunk_store(
     packed-tile shuffle regroups by output slice. Never-written chunks
     are the canvas fill. A chunk that fails to decode fails the tile
     cut, before any slice is written."""
+    from hortacloud_importer_spark.sources.listing import _chunk_items
     from hortacloud_importer_spark.sources.n5 import ChunkStoreError, chunk_store
 
     (z0, z1), (y0, y1), (x0, x1) = window
@@ -232,17 +233,8 @@ def crop_chunk_store(
     cz, cy, cx = store.chunks
 
     # driver-side listing + grid pruning (paths only, the A4 shape)
-    work = [
-        key
-        for key in store.keys()
-        if key[0] is not None
-        and key[1] * cz < z1
-        and (key[1] + 1) * cz > z0
-        and key[2] * cy < y1
-        and (key[2] + 1) * cy > y0
-        and key[3] * cx < x1
-        and (key[3] + 1) * cx > x0
-    ]
+    overlapping = _chunk_items(store)((z0, y0, x0), (z1, y1, x1))
+    work = [key for key in overlapping if key[0] is not None]
     chunks_df = spark.createDataFrame(
         work or [("", -1, -1, -1)],
         "rel string, gz int, gy int, gx int",

@@ -7,20 +7,21 @@ for resume) -> downsample level by level, writing each level one
 directory shallower, until the root block.  ``build_octree`` composes
 the engine's operators into exactly that run:
 
-- scan: a slice directory is listed once on the driver
-  (``_list_slices``: z order, the first slice's header per channel),
-  and each first-pass task reads its own subtree's window of every
-  slice in its z-range by path (``_slice_pass``; A1/A2) — the
-  reference's lazy per-block read (tiff2octree.py:689), with no
-  DataSource planning, no voxel rows and no exchange. Any (z, y, x,
-  channel, intensity) DataFrame the caller provides works too
-  (N5/Zarr via ``n5_volume``/``zarr_volume``, parquet, …);
-- dims: a slice directory's from its listing and first header (the
+- scan: every file-backed input — a slice directory, TIFF stacks, an
+  N5 dataset, a Zarr v2/v3 array, a ``c{i}/s{j}`` hierarchy level — is
+  listed once on the driver (``sources/listing.py``), and each
+  first-pass task reads its own subtree's window of the slices, stack
+  pages or chunks its region overlaps by path (``_window_pass``;
+  A1/A2/A3) — the reference's lazy per-block read (tiff2octree.py:689,
+  821), with no DataSource planning, no voxel rows and no exchange. A
+  dense (z, y, x, channel, intensity) DataFrame the caller provides
+  works too;
+- dims: a listed volume's from its headers and metadata (the
   reference infers from the first file, tiff2octree.py:653-691); a
   DataFrame's from one tiny aggregate when not given;
 - blocks: leaf-grid granularity — 2^(nlevels-1) blocks per axis, the
   reference's calc_optimal_nlevels arrangement
-  (tiff2octree.py:618-626). Slice windows land on the region canvas
+  (tiff2octree.py:618-626). Item windows land on the region canvas
   directly; DataFrame sources go through ``densify`` + ``blockify``
   (``_block_pieces``);
 - pyramid and sink: passes of ONE kernel per subtree. A pass spans
@@ -34,8 +35,8 @@ the engine's operators into exactly that run:
   (``_region_build``). Every level reuses the same leaf block DIMS,
   half the block COUNT per axis (ktx/util.py:223-239), so level k
   lands at octree depth nlevels-1-k — the root block is the
-  lowest-resolution mip. A slice directory's first pass is a map
-  over a local list of subtree roots; every later pass groups the
+  lowest-resolution mip. A listed volume's first pass is a map over
+  a local list of subtree roots; every later pass groups the
   previous pass's roots by subtree (``_subtree_pass``, one exchange
   of roots 8^s times smaller than the volume), as does the first
   pass over a DataFrame's blocks. At small sizes one pass builds the
@@ -54,7 +55,7 @@ the engine's operators into exactly that run:
   reference's per-block existence checks (tiff2octree.py:359-368,
   1040-1041).
 
-One source read, no exchange in a slice directory's first pass, no
+One source read, no exchange in a listed volume's first pass, no
 driver-side payloads, and per-task memory bounded by one subtree
 region: ``_SUBTREE_BYTES`` of int32 canvas, or one leaf block when
 that alone is bigger (eight for odd block dims), plus ``np_halve``'s
@@ -62,8 +63,6 @@ temporaries.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -79,6 +78,7 @@ from hortacloud_importer_spark.sources.datasource import (
     _pa_fs,
     write_tiff_block,
 )
+from hortacloud_importer_spark.sources.listing import FileVolume, slice_volume
 from hortacloud_importer_spark.volume import (
     blockify,
     densify,
@@ -93,73 +93,6 @@ def _infer_dims(voxels: DataFrame) -> tuple[int, int, int]:
         F.max("z").alias("z"), F.max("y").alias("y"), F.max("x").alias("x")
     ).first()
     return int(row["z"]) + 1, int(row["y"]) + 1, int(row["x"]) + 1
-
-
-def _list_slices(
-    source: str, channels: int
-) -> tuple[list[list[str]], list[tuple[int, int] | None]]:
-    """A slice directory's slices per channel in z order (sorted
-    paths; with several channels the reference's ``default.{ch}.{z}``
-    names select each) and the page shape of each channel's first
-    slice, from ONE listing (an object-store LIST over ~1e5 slices is
-    not free) and one header walk per channel (a TIFF's IFD chain by
-    seek, fetching only its header; a JP2's ihdr box, read whole) —
-    the reference infers dims from one file (tiff2octree.py:653-691).
-    The suffix is ``.tif`` unless the first channel's slices are all
-    JPEG 2000, the reference's auto-detection (rasterio branch,
-    tiff2octree.py:673-678).
-
-    Bad input fails here, before any Spark job: no slice, a gap in z
-    (``_check_z_run``), a first slice that is not one single-sample
-    page, or a signed or >16-bit JP2 first slice (the mirror of TIFF's
-    _page_dtype rule; the uint16 tile cut would wrap it)."""
-    from hortacloud_importer_spark.sources.datasource import (
-        _list_files,
-        _slice_file_shape,
-        _sorted_slices,
-    )
-
-    listing = _list_files(source.rstrip("/"))
-    names = [str(ch) if channels > 1 else None for ch in range(channels)]
-    suffix = next(
-        (
-            sfx
-            for sfx in (".tif", ".jp2", ".j2k")
-            if _sorted_slices(listing, sfx, names[0])
-        ),
-        ".tif",
-    )
-    files = [_sorted_slices(listing, suffix, name) for name in names]
-    if not files[0]:
-        raise FileNotFoundError(source)
-    shapes = []
-    for slices in files:
-        _check_z_run(slices, suffix)
-        shapes.append(_slice_file_shape(slices[0]) if slices else None)
-    return files, shapes
-
-
-_Z_INDEX = re.compile(r"(\d+)$")
-
-
-def _check_z_run(slices: list[str], suffix: str) -> None:
-    """When every slice name ends in a decimal index (the reference's
-    ``default.{ch}.{z}``), the sorted indices must be consecutive: a
-    missing slice would otherwise shift every later z down by one."""
-    index = []
-    for p in slices:
-        name = p.partition("?")[0].rsplit("/", 1)[-1]
-        m = _Z_INDEX.search(name[: -len(suffix)])
-        if m is None:
-            return
-        index.append(int(m.group(1)))
-    for i in range(1, len(slices)):
-        if index[i] != index[i - 1] + 1:
-            raise ValueError(
-                f"slice z gap: {slices[i - 1]} (index {index[i - 1]}) is "
-                f"followed by {slices[i]} (index {index[i]}); a volume's "
-                "slice indices must be consecutive"
-            )
 
 
 def _block_pieces(blocks: DataFrame) -> DataFrame:
@@ -340,42 +273,43 @@ def _region_build(
     return build
 
 
-def _slice_work(
-    files: list[list[str]],
+def _window_work(
+    volume: FileVolume,
     owned: dict[tuple[int, int, int, int], list[str]],
     span: int,
     block_dims: tuple[int, int, int],
     padded: tuple[int, int, int],
 ):
-    """The first pass's work list over a slice directory: one row per
+    """The first pass's work list over a listed volume: one row per
     (gz, gy, gx, channel) subtree root spanning ``span`` levels, with
-    the z-range of its channel's slice paths and the committed names
-    it owns. Slices past the padded grid are left out (one channel
-    listing more files than the dims were inferred from must not alias
-    onto an in-grid octree path), and so is a subtree with no slice:
-    it is z padding, all zero."""
+    the items its region overlaps (``VolumeChannel.items``, pickled)
+    and the committed names it owns. Items past the padded grid are
+    left out (one channel listing more slices than the dims were
+    inferred from must not alias onto an in-grid octree path), and so
+    is a subtree with no item: it is padding or no-data, all zero."""
+    import pickle
+
+    import numpy as np
     import pandas as pd
 
-    ez, ey, ex = (b << span for b in block_dims)  # region extent
+    extent = tuple(b << span for b in block_dims)
+    grid = [p // e for p, e in zip(padded, extent)]
     rows = []
-    for ch, slices in enumerate(files):
-        for gz in range(padded[0] // ez):
-            paths = slices[gz * ez : min((gz + 1) * ez, padded[0])]
-            if not paths:
-                continue
-            for gy in range(padded[1] // ey):
-                for gx in range(padded[2] // ex):
-                    key = (gz, gy, gx, ch)
-                    rows.append((*key, paths, owned.get(key, [])))
+    for c in volume.channels:
+        for g in np.ndindex(*grid):
+            lo = tuple(i * e for i, e in zip(g, extent))
+            items = c.items(lo, tuple(i + e for i, e in zip(lo, extent)))
+            if items:
+                key = (*g, c.channel)
+                rows.append((*key, pickle.dumps(items), owned.get(key, [])))
     return pd.DataFrame(
-        rows, columns=["gz", "gy", "gx", "channel", "paths", "owned"]
+        rows, columns=["gz", "gy", "gx", "channel", "items", "owned"]
     )
 
 
-def _slice_pass(
+def _window_pass(
     spark: SparkSession,
-    files: list[list[str]],
-    shapes: list[tuple[int, int] | None],
+    volume: FileVolume,
     done: list[BlockFile],
     out_dir: str,
     nlevels: int,
@@ -385,49 +319,44 @@ def _slice_pass(
     filter_: str,
     dtype: str,
 ) -> DataFrame:
-    """The first pass over a slice directory (:func:`_list_slices`),
-    in one hop: one ``mapInPandas`` kernel over the local relation of
-    :func:`_slice_work` rows (no shuffle, ``defaultParallelism`` tasks
-    at most). Each row reads the window of its subtree from each slice
-    of its z-range by path into the int32 region canvas
-    (``datasource._read_slice``: the page count and shape are checked
-    against the channel's first slice before any payload is decoded,
-    then only the strips or tiles the window touches are), and runs
-    the region build (:func:`_region_build`) over levels 0..``hi``.
-    A task holds one region at a time. Y/X/Z zero padding is the
+    """The first pass over a listed volume (``sources/listing.py``), in
+    one hop: one ``mapInPandas`` kernel over the local relation of
+    :func:`_window_work` rows (no shuffle, ``defaultParallelism`` tasks
+    at most). Each row paints the window of its subtree from each of
+    its items, read by path, onto the int32 region canvas
+    (``VolumeChannel.paint``: slice and stack pages decode only the
+    strips or tiles the window touches, chunks are clipped to it), and
+    runs the region build (:func:`_region_build`) over levels
+    0..``hi``. A task holds one region at a time. Zero padding is the
     canvas's; an all-zero region writes nothing."""
     build = _region_build(
         out_dir, nlevels, 0, hi, block_dims, filter_, dtype, False
     )
-    ez, ey, ex = (b << hi for b in block_dims)
-    first = {
-        ch: (slices[0], shapes[ch]) for ch, slices in enumerate(files) if slices
-    }
+    extent = tuple(b << hi for b in block_dims)
+    paint = {c.channel: c.paint for c in volume.channels}
 
     def read(batches):
-        import numpy as np
+        import pickle
 
-        from hortacloud_importer_spark.sources.datasource import _read_slice
+        import numpy as np
 
         for pdf in batches:
             for row in pdf.itertuples():
                 gz, gy, gx, ch = (
                     int(row.gz), int(row.gy), int(row.gx), int(row.channel)
                 )
-                window = (gy * ey, (gy + 1) * ey, gx * ex, (gx + 1) * ex)
-                region = np.zeros((ez, ey, ex), dtype=np.int32)
-                for z, path in enumerate(row.paths):
-                    arr = _read_slice(path, first[ch], window=window)
-                    region[z, : arr.shape[0], : arr.shape[1]] = arr
+                region = np.zeros(extent, dtype=np.int32)
+                lo = tuple(g * e for g, e in zip((gz, gy, gx), extent))
+                paint[ch](region, lo, pickle.loads(row.items))
                 if region.any():
                     yield build(region, gz, gy, gx, ch, frozenset(row.owned))
 
-    work = _slice_work(
-        files, _owned(done, nlevels, 0, hi), hi, block_dims, padded
+    work = _window_work(
+        volume, _owned(done, nlevels, 0, hi), hi, block_dims, padded
     )
     return spark.createDataFrame(
         work,
-        "gz int, gy int, gx int, channel int, paths array<string>, "
+        "gz int, gy int, gx int, channel int, items binary, "
         "owned array<string>",
     ).mapInPandas(read, _PASS_SCHEMA)
 
@@ -527,220 +456,9 @@ def optimal_nlevels(dims: tuple[int, int, int]) -> int:
         lv += 1
 
 
-def stack_voxels(
-    spark: SparkSession, path: str, channel: int = 0
-) -> tuple[DataFrame, tuple[int, int, int]]:
-    """Multi-page TIFF stack(s) -> (voxels DataFrame, dims).
-
-    The dual of the reference's ``stack_to_dask_array``
-    (tiff2octree.py:627-651, dask_image.imread): every page of every
-    matched file, files in sorted-path order, is one z slice. All
-    files must share one page count and page shape — the same
-    uniformity dask's imread demands. Partition grain is the PAGE,
-    not the file: the driver walks each file's IFD chain with seeks
-    (tiff_page_table — O(pages) small reads, no payload), broadcasts
-    the per-page strip tables, and each task seeks straight to its
-    page's strips (decode_stack_page). The old whole-file binaryFile
-    read capped stacks at the 2 GB row limit and made one file one
-    task; a 100 GB BigTIFF stack now streams page-by-page with
-    per-task memory bounded by one page.
-
-    ``path`` may glob (``*?[{`` Hadoop-style, with ``{a,b}``
-    alternation) in ANY segment: intermediate glob segments expand
-    against directories level by level (``run*/stack.tif``), a final
-    glob segment matches files in each expanded directory.
-    """
-    import pandas as pd
-    from pyarrow import fs as pafs
-
-    from hortacloud_importer_spark.sources.datasource import _pa_fs
-    from hortacloud_importer_spark.sources.tiff import (
-        _TAG_LENGTH,
-        _TAG_WIDTH,
-        _required,
-        tiff_page_table,
-    )
-
-    def _hidden(p_: str) -> bool:
-        # binaryFile-parity: _SUCCESS, ._resource forks, .DS_Store,
-        # _logs/ subtrees etc. are never stack files
-        return any(
-            seg.startswith(("_", ".")) for seg in p_.split("/") if seg
-        )
-
-    def _expand_braces(pat: str) -> list[str]:
-        # Hadoop-glob {a,b} alternation (single nesting level suffices
-        # for slice-set patterns like stack_{1,2}.tif)
-        i = pat.find("{")
-        if i < 0:
-            return [pat]
-        j = pat.find("}", i)
-        if j < 0:
-            return [pat]
-        out = []
-        for alt in pat[i + 1 : j].split(","):
-            out.extend(_expand_braces(pat[:i] + alt + pat[j + 1 :]))
-        return out
-
-    def _glob_seg(s_: str) -> bool:
-        return any(c in s_ for c in "*?[{")
-
-    filesystem, base = _pa_fs(path)
-    segs = base.split("/")
-    # a CONCRETE existing path that happens to contain glob characters
-    # (e.g. a literal directory named 'set[1]') keeps resolving as
-    # itself — glob expansion applies only when the literal path does
-    # not exist, so pre-glob-support call sites never break
-    glob_form = any(_glob_seg(s) for s in segs) and (
-        filesystem.get_file_info(base).type == pafs.FileType.NotFound
-    )
-    if glob_form:
-        # glob form (dask imread / Hadoop-glob parity): ANY segment
-        # may glob, not just the last — run*/stack.tif expands the
-        # run* DIRECTORIES level by level, then matches files (or
-        # falls through to the concrete-path branch per expansion)
-        import fnmatch
-
-        def _matches(name, seg):
-            return any(
-                fnmatch.fnmatch(name, q) for q in _expand_braces(seg)
-            )
-
-        first = next(i for i, s in enumerate(segs) if _glob_seg(s))
-        prefixes = ["/".join(segs[:first])]
-        for seg in segs[first:-1]:
-            if not _glob_seg(seg):
-                prefixes = [f"{pre}/{seg}" for pre in prefixes]
-                continue
-            nxt = []
-            for pre in prefixes:
-                infos = filesystem.get_file_info(pafs.FileSelector(pre))
-                nxt.extend(
-                    i.path
-                    for i in infos
-                    if i.type == pafs.FileType.Directory
-                    and not _hidden(i.base_name)
-                    and _matches(i.base_name, seg)
-                )
-            prefixes = sorted(nxt)
-        last = segs[-1]
-        paths = []
-        if _glob_seg(last):
-            for pre in prefixes:
-                infos = filesystem.get_file_info(pafs.FileSelector(pre))
-                paths.extend(
-                    i.path
-                    for i in infos
-                    if i.type == pafs.FileType.File
-                    and not _hidden(i.base_name)
-                    and _matches(i.base_name, last)
-                )
-        else:
-            for pre in prefixes:
-                cand = f"{pre}/{last}"
-                if (
-                    filesystem.get_file_info(cand).type
-                    == pafs.FileType.File
-                ):
-                    paths.append(cand)
-        paths = sorted(paths)
-    else:
-        info = filesystem.get_file_info(base)
-        if info.type == pafs.FileType.File:
-            paths = [base]
-        else:
-            # list through the filesystem we derived (scheme-correct
-            # for s3://, hdfs://, ...); paths stay scheme-stripped so
-            # the kernel can open them with the same filesystem object
-            infos = filesystem.get_file_info(
-                pafs.FileSelector(base, recursive=True)
-            )
-            paths = sorted(
-                i.path
-                for i in infos
-                if i.type == pafs.FileType.File
-                and not _hidden(i.path[len(base) :])
-            )
-    if not paths:
-        raise FileNotFoundError(path)
-    # page tables in parallel: each file's walk is a handful of small
-    # reads, and on an object store doing hundreds of files serially
-    # would turn planning into minutes of driver dead time
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _table(p_):
-        with filesystem.open_input_file(p_) as fh:
-            return p_, tiff_page_table(fh)
-
-    with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
-        tables = dict(pool.map(_table, paths))
-    shape0 = None
-    for p_ in paths:
-        _ec, page_ifds = tables[p_]
-        shape_ = (
-            len(page_ifds),
-            _required(page_ifds[0], _TAG_LENGTH, "ImageLength")[0],
-            _required(page_ifds[0], _TAG_WIDTH, "ImageWidth")[0],
-        )
-        if shape0 is None:
-            shape0 = shape_
-        elif shape_ != shape0:
-            raise ValueError(
-                f"stack file {p_} shape {shape_} != {shape0}; "
-                "stacks must be uniform"
-            )
-    n_pages, h, w = shape0
-    dims = (n_pages * len(paths), h, w)
-    bc = spark.sparkContext.broadcast(tables)
-    order = {p_: i for i, p_ in enumerate(paths)}
-    uri = path  # re-derive the filesystem executor-side (not picklable)
-
-    def gen(batches):
-        from hortacloud_importer_spark.sources.datasource import _pa_fs
-        from hortacloud_importer_spark.sources.tiff import (
-            decode_stack_page,
-        )
-
-        fs_, _ = _pa_fs(uri)
-        for pdf in batches:
-            for row in pdf.itertuples():
-                p_, pg = row.path, int(row.page_idx)
-                ec_, page_ifds = bc.value[p_]
-                with fs_.open_input_file(p_) as fh:
-                    arr = decode_stack_page(fh, ec_, page_ifds[pg])[..., 0]
-                if arr.shape != (h, w):
-                    raise ValueError(
-                        f"stack file {p_} page {pg} shape {arr.shape} != "
-                        f"({h}, {w}); stacks must be uniform"
-                    )
-                yield pd.DataFrame(
-                    {
-                        "z": [order[p_] * n_pages + pg],
-                        "page": [arr.astype("int64").ravel()],
-                    }
-                )
-
-    tasks = spark.createDataFrame(
-        [(p_, pg) for p_ in paths for pg in range(n_pages)],
-        "path string, page_idx int",
-    ).repartition(spark.sparkContext.defaultParallelism)
-    pages = tasks.mapInPandas(gen, "z int, page array<long>")
-    pos = F.col("pos")
-    voxels = pages.select(
-        "z", F.posexplode("page").alias("pos", "intensity")
-    ).select(
-        "z",
-        (pos / w).cast("int").alias("y"),
-        (pos % w).cast("int").alias("x"),
-        F.lit(int(channel)).alias("channel"),
-        F.col("intensity").cast("int").alias("intensity"),
-    )
-    return voxels, dims
-
-
 def build_octree(
     spark: SparkSession,
-    source: str | DataFrame,
+    source: str | FileVolume | DataFrame,
     out_dir: str,
     nlevels: int | None,
     filter_: str = "arthur",
@@ -754,11 +472,17 @@ def build_octree(
 ) -> DataFrame:
     """Run the full slices -> octree-of-TIFF-blocks build.
 
-    ``source``: a slice directory (each subtree's window of each slice
-    read by path in the first pass, ``_slice_pass``) or a voxels
-    DataFrame — which must be DENSE (one row per coordinate, zeros present;
-    ``volume.densify`` converts sparse sources) because block payloads
-    reshape to full block extent.
+    ``source``: a volume listed on the driver (``sources/listing.py``:
+    a slice directory, TIFF stacks, an N5 dataset, a Zarr array or a
+    ``c{i}/s{j}`` hierarchy level; each subtree task reads its own
+    window of its items by path in the first pass, ``_window_pass``),
+    a slice directory's path (listed with ``channels`` channels, 1
+    when not stated), or a voxels DataFrame — which must be DENSE (one
+    row per coordinate, zeros present; ``volume.densify`` converts
+    sparse sources) because block payloads reshape to full block
+    extent. A DataFrame's channel count is ``channels``, or one
+    aggregate over it when not stated; a listed volume carries its
+    own.
     Returns the per-level accounting (level, n_blocks_written,
     n_voxels) the run produced — all sink effects are in ``out_dir``
     (blocks + manifest shards + root ``transform.txt``).
@@ -775,20 +499,13 @@ def build_octree(
         raise ValueError(
             f"unknown filter {filter_!r}; have {FILTERS + tuple(KERNELS)}"
         )
-    voxels: DataFrame | None = None
-    # channels=None = "not stated": slice sources default to 1 (the
-    # reference's single-channel default), DataFrame sources discover
-    # it with the aggregate below. A caller who KNOWS the channel
-    # count states it and skips that whole extra job (round-14).
-    channels_known = channels is not None
-    if channels is None:
-        channels = 1
+    volume = voxels = None
     if isinstance(source, str):
-        # one listing + one header walk per channel, never a voxel
-        # aggregate
-        files, shapes = _list_slices(source, channels)
-        if dims is None:
-            dims = (len(files[0]), *shapes[0])
+        source = slice_volume(source, channels or 1)
+    if isinstance(source, FileVolume):
+        # dims from headers and metadata, never a voxel aggregate
+        volume = source
+        dims = dims or volume.dims
     else:
         voxels = source
         if dims is None:
@@ -811,20 +528,18 @@ def build_octree(
     filesystem, base = _pa_fs(out_dir)
     committed = manifest.committed_files(filesystem, base) if resume else None
     done = [f for f in map(parse_block_rel, committed or ()) if f is not None]
-    if isinstance(source, str) or channels_known:
-        # channel count is a scan parameter, not data — don't pay an
-        # aggregate over the whole volume to rediscover it. DataFrame
-        # callers that state ``channels`` (any value, including 1)
-        # skip the aggregate; only callers that omit it pay the
-        # discovery job.
-        n_channels = channels
-    else:
-        n_channels = int(
-            voxels.agg(F.countDistinct("channel").alias("c")).first()["c"]
-        )
     padded = tuple(b * leaf_grid for b in block_dims)
-    pieces = None  # a slice directory's first pass reads the slices
-    if not isinstance(source, str):
+    if volume is not None:
+        n_channels = len(volume.channels)
+    else:
+        # the channel count is a scan parameter, not data: a caller
+        # who states it (any value, including 1) skips the aggregate
+        # that discovers it
+        n_channels = channels
+        if n_channels is None:
+            n_channels = int(
+                voxels.agg(F.countDistinct("channel").alias("c")).first()["c"]
+            )
         if padded != dims:
             # Non-divisible dims leave edge blocks partial, which
             # cannot reshape to block extent; zero-pad to the grid
@@ -847,10 +562,10 @@ def build_octree(
     lo, roots, prev = 0, False, None
     while True:
         hi = min(lo + _pass_levels(block_dims, roots), nlevels - 1)
-        if pieces is None:
-            out = _slice_pass(
-                spark, files, shapes, done, out_dir, nlevels, hi,
-                block_dims, padded, filter_, dtype,
+        if not roots and volume is not None:
+            out = _window_pass(
+                spark, volume, done, out_dir, nlevels, hi, block_dims,
+                padded, filter_, dtype,
             )
         else:
             out = _subtree_pass(

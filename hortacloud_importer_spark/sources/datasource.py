@@ -354,7 +354,7 @@ def _slice_shape(path: str, data: bytes) -> tuple[int, int]:
     if n != 1:
         raise ValueError(
             f"slice file {path} has {n} {what}; one single-sample z-slice "
-            "per file expected (stacks go through stack_voxels)"
+            "per file expected (stacks go through listing.stack_volume)"
         )
     return h, w
 

@@ -3,21 +3,17 @@
 The reference probes N5/Zarr group layouts — ``{root}/c{i}/s{j}``
 (channel i, scale j) vs flat ``{root}/s{j}`` — by listing subgroups
 (tiff2octree.py:711-777 ``check_n5_channels``/``check_n5_levels``)
-and builds one lazy array per (channel, level). The Spark analog
-lists the store on the driver through pyarrow (``_pa_fs``, as the
-chunk stores are read: local disk or ``s3://``/``s3a://``), then
-assembles one DataFrame per level as a ``unionByName`` of
-per-channel reads tagged with their channel — the lazy-scan
-equivalent of the reference's virtual dask arrays (nothing is read
-until an action).
+and builds one lazy array per (channel, level). Here the store is
+listed on the driver through pyarrow (``_pa_fs``, as the chunk stores
+are read: local disk or ``s3://``/``s3a://``); a level's groups, one
+N5 dataset or Zarr array per channel, become one listed volume
+(``sources/listing.py::hierarchy_volume``) whose tasks read their own
+chunks by path.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _CHANNEL_RE = re.compile(r"^c(\d+)$")
 _SCALE_RE = re.compile(r"^s(\d+)$")
@@ -88,46 +84,3 @@ def _level_groups(root: str, scale: int) -> list[tuple[int, str]]:
     if not groups:
         raise FileNotFoundError(f"scale s{scale} absent under {root}")
     return groups
-
-
-def _union(parts: list[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def read_level(spark: SparkSession, root: str, scale: int) -> DataFrame:
-    """One DataFrame for a scale level: every channel's data unioned
-    with its channel id (C1's n-way channel zip happens later as an
-    equi-join or stays long-form — both plans keep channels
-    co-partitioned by coordinate)."""
-    return _union(
-        [
-            spark.read.parquet(base).withColumn("channel", F.lit(ch))
-            for ch, base in _level_groups(root, scale)
-        ]
-    )
-
-
-def read_level_chunks(spark: SparkSession, root: str, scale: int) -> DataFrame:
-    """The chunk-store form of :func:`read_level`: each ``c{i}/s{j}``
-    group is an N5 dataset or Zarr array (the reference's actual
-    layout, tiff2octree.py:711-777 + 779-823), opened on the driver
-    (sources/n5.py::chunk_store) and read through its
-    ``n5_volume``/``zarr_volume`` DataSource — the full
-    ``n5_zarr_to_dask_array`` front door, Spark-first."""
-    from hortacloud_importer_spark.sources.datasource import (
-        register_volume_sources,
-    )
-    from hortacloud_importer_spark.sources.n5 import chunk_store
-
-    register_volume_sources(spark)
-    return _union(
-        [
-            spark.read.format(chunk_store(base).format)
-            .load(base)
-            .withColumn("channel", F.lit(ch))
-            for ch, base in _level_groups(root, scale)
-        ]
-    )

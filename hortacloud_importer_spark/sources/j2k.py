@@ -722,14 +722,6 @@ class _T1State:
         return (hh + vv + dd) > 0
 
 
-def _stripe_scan(w: int, h: int):
-    """Annex D scan order: stripes of 4 rows, column-major inside."""
-    for k in range(0, h, 4):
-        for x in range(w):
-            for y in range(k, min(k + 4, h)):
-                yield x, y
-
-
 def _seg_plan(
     start: int, npasses: int, termall: bool, bypass: bool
 ) -> list:

@@ -127,10 +127,10 @@ def jp2_sample_format(data: bytes) -> tuple[int, bool]:
 def check_jp2_uint16(data: bytes, path: str = "<jp2>") -> None:
     """Raise unless every component is unsigned <=16-bit — the same
     admission rule TIFF ingest enforces via ``_page_dtype`` (uint8/
-    uint16 only). Called at plan time (pipelines/octree.py
+    uint16 only). Called at plan time (sources/listing.py
     ``_list_slices``) so a 32-bit or signed JP2 slice fails the build
     up front rather than being narrowed to the uint16 store inside the
-    first pass's kernel (``_slice_pass``)."""
+    first pass's kernel (``_window_pass``)."""
     depth, signed = jp2_sample_format(data)
     if signed or depth > 16:
         raise Jp2ParseError(

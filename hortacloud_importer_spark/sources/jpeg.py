@@ -413,35 +413,6 @@ def jpeg_probe(data: bytes) -> tuple[int, int, int]:
     raise JpegParseError("no SOF frame header before scan")
 
 
-def sniff_sof_precision(data: bytes) -> int | None:
-    """Walk marker segments to the first SOF and return its precision
-    byte (8/12), or None if no SOF appears before the first scan/EOI.
-    A cheap header sniff for dispatch decisions (e.g. route 8-bit
-    streams to a native binding, 12-bit to the clean-room decoder) —
-    no table parsing, no validation."""
-    if data[:2] != b"\xff\xd8":
-        return None
-    pos, n = 2, len(data)
-    while pos + 1 < n:
-        if data[pos] != 0xFF:
-            return None
-        while pos + 1 < n and data[pos + 1] == 0xFF:
-            pos += 1
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD9, 0xDA):
-            return None
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue
-        if pos + 2 > n:
-            return None
-        (seglen,) = struct.unpack(">H", data[pos : pos + 2])
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            return data[pos + 2] if pos + 2 < n else None
-        pos += seglen
-    return None
-
-
 def _frame_geometry(sof: dict):
     """(hmax, vmax, mcux, mcuy) with the integer-ratio sampling
     admission check shared by the sequential and progressive paths."""

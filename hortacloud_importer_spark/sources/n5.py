@@ -6,10 +6,11 @@ dtype, then window-read chunks lazily. Here :func:`chunk_store` opens a
 store once on the driver: it probes the metadata files in the
 reference's order, validates them, and returns a :class:`ChunkStore`
 that lists the chunk keys (one recursive pyarrow listing) and decodes
-one chunk by path. The ``n5_volume``/``zarr_volume`` DataSources
-(sources/datasource.py), ``pipelines.crop.crop_chunk_store``, the CLI
-and ``sources.hierarchy.read_level_chunks`` all open stores through
-it. Every read goes through pyarrow, so local, ``s3://`` and
+one chunk by path. The octree build's listed volumes
+(sources/listing.py: ``store_volume``, ``hierarchy_volume``), the
+``n5_volume``/``zarr_volume`` DataSources (sources/datasource.py),
+``pipelines.crop.crop_chunk_store`` and the CLI all open stores
+through it. Every read goes through pyarrow, so local, ``s3://`` and
 ``s3a://`` roots behave alike. The container formats are public specs:
 
 - **N5** (github.com/saalfeldlab/n5): ``attributes.json`` with
@@ -489,11 +490,6 @@ class ChunkStore:
     codecs: list | None = None
     transpose: list | None = None
     shard: dict | None = None
-
-    @property
-    def format(self) -> str:
-        """The DataSource name this store reads under."""
-        return "n5_volume" if self.kind == "n5" else "zarr_volume"
 
     def _grid_of(self, rel: str) -> tuple[int, int, int] | None:
         """The (gz, gy, gx) cell a relative file name encodes, or None

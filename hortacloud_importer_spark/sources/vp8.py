@@ -946,14 +946,6 @@ class _BoolEnc:
         for i in range(n - 1, -1, -1):
             self.put((v >> i) & 1, 128)
 
-    def flag_signed(self, v: int, n: int) -> None:
-        if v == 0:
-            self.put(0, 128)
-            return
-        self.put(1, 128)
-        self.literal(abs(v), n)
-        self.put(1 if v < 0 else 0, 128)
-
     def tree(self, tree: tuple, probs, leaf: int, start: int = 0) -> None:
         # depth-first search for the bit path root->leaf
         def walk(i: int, path):

@@ -159,10 +159,11 @@ def _block_digests(root) -> dict[str, str]:
 
 def test_chunk_store_imports_match_slice_import(spark, tmp_path, capsys):
     """One volume imported from a slice directory, a raw and a gzip N5
-    dataset, a Zarr v2 array and a sharded Zarr v3 array (chunk grids
-    that do not match the block grid) writes the same block files, byte
-    for byte; a 2-channel c{i}/s0 hierarchy matches the 2-channel slice
-    import the same way."""
+    dataset, a Zarr v2 array, a sharded Zarr v3 array (chunk grids
+    that do not match the block grid), one TIFF stack and a glob of two
+    stacks writes the same block files, byte for byte; a 2-channel
+    c{i}/s0 hierarchy matches the 2-channel slice import the same
+    way."""
     from tests.test_n5_zarr import _write_n5, _write_zarr, _write_zarr_v3_sharded
 
     rng = np.random.default_rng(53)
@@ -174,11 +175,10 @@ def test_chunk_store_imports_match_slice_import(spark, tmp_path, capsys):
         vols.append(v)
     vol = vols[0]
 
-    def imported(src, *flags):
-        out = tmp_path / f"oct_{src.name}"
+    def imported(label, *flags):
+        out = tmp_path / f"oct_{label}"
         rc = main(
-            ["octree", "-i", str(src), "-o", str(out), "-l", "2", "-d", "2ndmax",
-             *flags]
+            ["octree", "-o", str(out), "-l", "2", "-d", "2ndmax", *flags]
         )
         assert rc == 0
         capsys.readouterr()
@@ -192,7 +192,7 @@ def test_chunk_store_imports_match_slice_import(spark, tmp_path, capsys):
                 (d / f"default.{ch}.{z:03d}.tif").write_bytes(
                     encode_tiff(vols[ch][z][None, ...])
                 )
-    want = imported(tmp_path / "slices1")
+    want = imported("slices1", "-i", str(tmp_path / "slices1"))
     assert len(want) == 7  # 6 leaf blocks + the root
     _write_n5(tmp_path / "raw.n5", vol, (5, 6, 3), "raw")
     _write_n5(tmp_path / "gzip.n5", vol, (5, 6, 3), "gzip")
@@ -202,19 +202,97 @@ def test_chunk_store_imports_match_slice_import(spark, tmp_path, capsys):
         [{"name": "blosc", "configuration": {"cname": "lz4"}}],
     )
     for name in ("raw.n5", "gzip.n5", "v2.zarr", "v3s.zarr"):
-        assert imported(tmp_path / name) == want, name
+        assert imported(name, "-i", str(tmp_path / name)) == want, name
+    (tmp_path / "stack.tif").write_bytes(encode_tiff(vol, compression="zlib"))
+    assert imported("stack", "-f", str(tmp_path / "stack.tif")) == want
+    (tmp_path / "stacks").mkdir()
+    for i in range(2):
+        (tmp_path / "stacks" / f"part{i}.tif").write_bytes(
+            encode_tiff(vol[4 * i : 4 * i + 4], tile=(8, 8))
+        )
+    glob_ = str(tmp_path / "stacks" / "part*.tif")
+    assert imported("stacks", "-f", glob_) == want
 
-    want2 = imported(tmp_path / "slices2", "--channels", "2")
+    want2 = imported("slices2", "-i", str(tmp_path / "slices2"), "--channels", "2")
     assert len(want2) == 14
     for ch in range(2):
         _write_n5(tmp_path / "hier" / f"c{ch}" / "s0", vols[ch], (5, 6, 3), "gzip")
-    assert imported(tmp_path / "hier", "--channels", "2") == want2
+    assert imported("hier", "-i", str(tmp_path / "hier")) == want2
 
 
-def test_stack_voxels_multi_file_z_offsets(spark, tmp_path):
+def test_truncated_chunk_fails_the_import_and_commits_nothing(
+    spark, tmp_path, capsys
+):
+    """An N5 import whose chunk is cut to half its bytes fails in the
+    first pass's kernel with a ChunkStoreError naming the chunk, and
+    commits nothing: the store has no manifest shard and its readers
+    see no leftover block."""
+    from hortacloud_importer_spark.sources import manifest
+    from hortacloud_importer_spark.sources.block_store import (
+        block_files,
+        store_channels,
+    )
+    from hortacloud_importer_spark.sources.datasource import _pa_fs
+    from tests.test_n5_zarr import _write_n5
+
+    rng = np.random.default_rng(61)
+    vol = rng.integers(1, 60000, (8, 16, 16)).astype(np.uint16)
+    _write_n5(tmp_path / "cut.n5", vol, (8, 8, 4), "gzip")
+    bad = tmp_path / "cut.n5" / "1" / "0" / "1"
+    bad.write_bytes(bad.read_bytes()[: bad.stat().st_size // 2])
+    out = str(tmp_path / "oct_cut")
+    with pytest.raises(Exception) as err:
+        main(["octree", "-i", str(tmp_path / "cut.n5"), "-o", out, "-l", "2"])
+    msg = str(err.value)
+    assert f"ChunkStoreError: bad N5 chunk {bad}: " in msg, msg[-2000:]
+    assert manifest.committed_files(*_pa_fs(out)) == set()
+    assert block_files(out) == [] and store_channels(out) == []
+
+
+def test_zarr_fill_value_builds_the_filled_pyramid(spark, tmp_path, capsys):
+    """A Zarr v2 array with fill_value 7 and one never-written chunk
+    builds the blocks of the NumPy pyramid of the filled volume."""
+    from tests.test_n5_zarr import _write_zarr
+    from tests.test_octree_pipeline import _assert_store, expected_blocks
+
+    rng = np.random.default_rng(67)
+    vol = rng.integers(1, 60000, (8, 16, 16)).astype(np.uint16)
+    _write_zarr(tmp_path / "f.zarr", vol, (4, 8, 8), None, fill=7, skip=[(1, 0, 1)])
+    filled = vol.astype(np.int64)
+    filled[4:, :8, 8:] = 7
+    out = str(tmp_path / "oct_fill")
+    src = str(tmp_path / "f.zarr")
+    assert main(["octree", "-i", src, "-o", out, "-l", "2", "-d", "max"]) == 0
+    _assert_store(out, expected_blocks([filled], 2, (4, 8, 8), "max"))
+
+
+def test_hierarchy_of_unequal_channel_shapes_fails_before_any_job(
+    spark, tmp_path
+):
+    """A c{i}/s0 hierarchy whose channels' s0 shapes differ fails at
+    listing, before any Spark job, naming both groups, and creates no
+    output store."""
+    from hortacloud_importer_spark.sources.n5 import ChunkStoreError
+    from tests.test_n5_zarr import _write_n5
+
+    _write_n5(tmp_path / "h" / "c0" / "s0", np.ones((4, 8, 8), np.uint16), (4, 4, 4))
+    _write_n5(tmp_path / "h" / "c1" / "s0", np.ones((4, 8, 4), np.uint16), (4, 4, 4))
+    out = tmp_path / "oct_h"
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(None))
+    msg = r"c1/s0 shape \(4, 8, 4\) != .*c0/s0 shape \(4, 8, 8\)"
+    with pytest.raises(ChunkStoreError, match=msg):
+        main(["octree", "-i", str(tmp_path / "h"), "-o", str(out)])
+    assert set(tracker.getJobIdsForGroup(None)) == jobs
+    assert not out.exists()
+
+
+def test_stack_voxels_multi_file_z_offsets(tmp_path):
     """A glob of uniform stacks concatenates along z in sorted-path
-    order (dask imread parity); non-uniform stacks are rejected."""
-    from hortacloud_importer_spark.pipelines import stack_voxels
+    order (dask imread parity); non-uniform stacks are rejected at
+    listing, before any Spark job, naming the file."""
+    from hortacloud_importer_spark.sources.listing import stack_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(41)
     vols = [
@@ -222,20 +300,49 @@ def test_stack_voxels_multi_file_z_offsets(spark, tmp_path):
     ]
     for i, v in enumerate(vols):
         (tmp_path / f"s{i:02d}.tif").write_bytes(encode_tiff(v))
-    vox, dims = stack_voxels(spark, str(tmp_path / "s*.tif"))
-    assert dims == (6, 4, 4)
-    got = np.zeros(dims, dtype=np.int64)
-    for r in vox.collect():
-        got[r["z"], r["y"], r["x"]] = r["intensity"]
-    assert np.array_equal(got, np.concatenate(vols).astype(np.int64))
+    volume = stack_volume(str(tmp_path / "s*.tif"))
+    assert volume.dims == (6, 4, 4)
+    assert np.array_equal(read_volume(volume)[0], np.concatenate(vols))
 
     (tmp_path / "s99.tif").write_bytes(
         encode_tiff(rng.integers(1, 9, (3, 4, 4), dtype=np.uint8))
     )
-    # non-uniform stacks now fail FAST at plan time (the driver's
-    # page-table walk sees every file's geometry before any decode)
-    with pytest.raises(Exception, match="uniform"):
-        stack_voxels(spark, str(tmp_path / "s*.tif"))
+    with pytest.raises(ValueError, match="s99.tif.*uniform"):
+        stack_volume(str(tmp_path / "s*.tif"))
+    # a page of another shape inside one file fails the same way
+    (tmp_path / "s99.tif").unlink()
+    pages = [encode_tiff(vols[0][:1]), encode_tiff(np.ones((1, 4, 5), np.uint8))]
+    (tmp_path / "s50.tif").write_bytes(_two_page_tiff(*pages))
+    with pytest.raises(ValueError, match=r"s50.tif shape \(2, 4, 5\)"):
+        stack_volume(str(tmp_path / "s*.tif"))
+
+
+def _two_page_tiff(a: bytes, b: bytes) -> bytes:
+    """Two one-page little-endian classic TIFFs as one two-page file:
+    ``b`` appended, its offsets shifted, and ``a``'s next-IFD pointer
+    aimed at ``b``'s IFD (the writer needs one shape for all pages)."""
+    import io
+    import struct
+
+    from hortacloud_importer_spark.sources.tiff import tiff_page_table
+
+    shift = len(a)
+    (ifd_b,) = struct.unpack_from("<I", b, 4)
+    out = bytearray(a) + bytearray(b)
+    # a's IFD chain ends with a zero pointer right after its entries
+    (ifd_a,) = struct.unpack_from("<I", a, 4)
+    (n_a,) = struct.unpack_from("<H", a, ifd_a)
+    struct.pack_into("<I", out, ifd_a + 2 + 12 * n_a, ifd_b + shift)
+    (n_b,) = struct.unpack_from("<H", b, ifd_b)
+    for e in range(n_b):
+        pos = shift + ifd_b + 2 + 12 * e
+        tag, ftype, count = struct.unpack_from("<HHI", out, pos)
+        # StripOffsets and every out-of-line value move with b
+        if tag == 273 or (count * {3: 2, 4: 4}.get(ftype, 1) > 4):
+            (v,) = struct.unpack_from("<I", out, pos + 8)
+            struct.pack_into("<I", out, pos + 8, v + shift)
+    assert len(tiff_page_table(io.BytesIO(bytes(out)))[1]) == 2
+    return bytes(out)
 
 
 def test_cli_kernel_build_with_ktx_falls_back_to_arthur_mips(
@@ -485,12 +592,13 @@ def test_crop_accounting_counts_after_dtype_cast(spark, tmp_path):
     assert int(np.count_nonzero(page)) == 1
 
 
-def test_stack_voxels_intermediate_segment_glob(spark, tmp_path):
+def test_stack_voxels_intermediate_segment_glob(tmp_path):
     """ADVICE r6: Hadoop-style globs in INTERMEDIATE path segments
     (run*/stack.tif) expand against directories level by level — the
-    binaryFile reader supported these and the page-grain planner must
+    binaryFile reader supported these and the stack lister must
     too."""
-    from hortacloud_importer_spark.pipelines import stack_voxels
+    from hortacloud_importer_spark.sources.listing import stack_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(47)
     vols = [
@@ -507,32 +615,30 @@ def test_stack_voxels_intermediate_segment_glob(spark, tmp_path):
         encode_tiff(rng.integers(1, 9, (3, 4, 4), dtype=np.uint8))
     )
 
-    vox, dims = stack_voxels(spark, str(tmp_path / "run*" / "stack.tif"))
-    assert dims == (4, 4, 4)
-    got = np.zeros(dims, dtype=np.int64)
-    for r in vox.collect():
-        got[r["z"], r["y"], r["x"]] = r["intensity"]
-    assert np.array_equal(got, np.concatenate(vols).astype(np.int64))
+    volume = stack_volume(str(tmp_path / "run*" / "stack.tif"))
+    assert volume.dims == (4, 4, 4)
+    assert np.array_equal(read_volume(volume)[0], np.concatenate(vols))
 
     # glob in BOTH an intermediate and the final segment
-    vox2, dims2 = stack_voxels(spark, str(tmp_path / "run*" / "*.tif"))
-    assert dims2 == (4, 4, 4)
+    assert stack_volume(str(tmp_path / "run*" / "*.tif")).dims == (4, 4, 4)
 
 
-def test_stack_voxels_literal_path_with_glob_chars(spark, tmp_path):
+def test_stack_voxels_literal_path_with_glob_chars(tmp_path):
     """Review r7: a CONCRETE directory whose name contains glob
     characters (set[1]) must keep resolving as a literal path — glob
     expansion only applies when the literal path does not exist."""
-    from hortacloud_importer_spark.pipelines import stack_voxels
+    from hortacloud_importer_spark.sources.listing import stack_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(53)
     vol = rng.integers(1, 250, (2, 4, 4), dtype=np.uint8)
     d = tmp_path / "set[1]"
     d.mkdir()
     (d / "stack.tif").write_bytes(encode_tiff(vol))
-    vox, dims = stack_voxels(spark, str(d / "stack.tif"))
-    assert dims == (2, 4, 4)
-    assert vox.count() == 32
+    volume = stack_volume(str(d / "stack.tif"))
+    assert volume.dims == (2, 4, 4)
+    assert np.array_equal(read_volume(volume)[0], vol)
+    assert stack_volume(str(d)).dims == (2, 4, 4)
 
 
 def test_cli_crop_from_zarr_store(spark, tmp_path, capsys):

@@ -115,7 +115,7 @@ def test_build_octree_ingests_jp2_slices(spark, tmp_path):
     import numpy as np
 
     from hortacloud_importer_spark.pipelines import build_octree
-    from hortacloud_importer_spark.pipelines.octree import _list_slices
+    from hortacloud_importer_spark.sources.listing import _list_slices
     from hortacloud_importer_spark.sources.jp2 import encode_jp2
 
     rng = np.random.default_rng(11)
@@ -191,7 +191,7 @@ def test_check_jp2_uint16_rejects_wide_or_signed_samples():
 def test_list_slices_rejects_wide_jp2(tmp_path):
     """The plan-time probe in _list_slices applies the admission rule,
     so a 32-bit JP2 store fails the build before any executor work."""
-    from hortacloud_importer_spark.pipelines.octree import _list_slices
+    from hortacloud_importer_spark.sources.listing import _list_slices
 
     indir = tmp_path / "wide_jp2"
     indir.mkdir()

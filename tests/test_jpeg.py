@@ -203,20 +203,19 @@ def test_jpeg_12bit_stream_roundtrip():
         decode_jpeg(bytes(blob))
 
 
-def test_stack_voxels_reads_jpeg_stack(spark, tmp_path):
-    """The page-grain stack reader decodes compression-7 pages through
-    the same seek-based strip fetch as every other codec."""
-    from hortacloud_importer_spark.pipelines import stack_voxels
+def test_stack_voxels_reads_jpeg_stack(tmp_path):
+    """The stack pages decode compression-7 pages through the same
+    seek-based strip fetch as every other codec."""
+    from hortacloud_importer_spark.sources.listing import stack_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(19)
     vol = rng.integers(0, 250, (3, 8, 8), dtype=np.uint8)
     f = tmp_path / "stack.tif"
     f.write_bytes(encode_tiff(vol, compression="jpeg"))
-    vox, dims = stack_voxels(spark, str(f))
-    assert dims == (3, 8, 8)
-    got = np.zeros(dims, dtype=np.int64)
-    for r in vox.collect():
-        got[r["z"], r["y"], r["x"]] = r["intensity"]
+    volume = stack_volume(str(f))
+    assert volume.dims == (3, 8, 8)
+    got = read_volume(volume)[0]
     assert np.abs(got - vol.astype(np.int64)).max() <= 1
 
 

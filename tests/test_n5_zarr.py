@@ -228,13 +228,13 @@ def test_unknown_codec_raises(spark, tmp_path):
         _read(spark, "zarr_volume", f"file://{root}").collect()
 
 
-def test_hierarchy_discovery_over_n5(spark, tmp_path):
+def test_hierarchy_discovery_over_n5(tmp_path):
     """The reference's full front door: c{i}/s{j} group discovery over
-    an N5 store, each level decoded distributed, channels tagged."""
-    from hortacloud_importer_spark.sources.hierarchy import (
-        discover_hierarchy,
-        read_level_chunks,
-    )
+    an N5 store, and each level listed as one volume whose channels
+    are tagged with their group's id and read their own chunks."""
+    from hortacloud_importer_spark.sources.hierarchy import discover_hierarchy
+    from hortacloud_importer_spark.sources.listing import hierarchy_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(11)
     vols = {ch: rng.integers(0, 65535, (4, 4, 4), dtype=np.uint16) for ch in (0, 1)}
@@ -244,14 +244,15 @@ def test_hierarchy_discovery_over_n5(spark, tmp_path):
 
     root = f"file://{tmp_path}"
     assert discover_hierarchy(root) == {0: [0, 1], 1: [0, 1]}
-    lv0 = read_level_chunks(spark, root, 0)
-    assert lv0.count() == 2 * 64
-    got = {ch: np.zeros((4, 4, 4), dtype=np.int64) for ch in (0, 1)}
-    for r in lv0.collect():
-        got[r["channel"]][r["z"], r["y"], r["x"]] = r["intensity"]
+    lv0 = hierarchy_volume(root, 0)
+    assert lv0.dims == (4, 4, 4)
+    got = read_volume(lv0)
+    assert sorted(got) == [0, 1]
     for ch in (0, 1):
         assert np.array_equal(got[ch], vols[ch])
-    assert read_level_chunks(spark, root, 1).count() == 2 * 8
+    lv1 = read_volume(hierarchy_volume(root, 1))
+    for ch in (0, 1):
+        assert np.array_equal(lv1[ch], vols[ch][::2, ::2, ::2])
 
 
 def test_corrupt_chunk_bytes_fail_fast_without_spark():

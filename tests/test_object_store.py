@@ -135,13 +135,15 @@ def test_s3_chunk_stores_read_and_crop(spark, tmp_path):
     (z0, z1), (y0, y1), (x0, x1) = window
     with S3Stub() as s3:
         s3.store.buckets.add("cs")
-        for name, fmt in (("a.n5", "n5_volume"), ("b.zarr", "zarr_volume")):
+        for name, fmt, kind in (
+            ("a.n5", "n5_volume", "n5"), ("b.zarr", "zarr_volume", "zarr3")
+        ):
             for f in (tmp_path / name).rglob("*"):
                 if f.is_file():
                     rel = f.relative_to(tmp_path).as_posix()
                     s3.store.objects[("cs", rel)] = f.read_bytes()
             root = s3.uri("cs", name)
-            assert chunk_store(root, missing_ok=True).format == fmt
+            assert chunk_store(root, missing_ok=True).kind == kind
             got = np.zeros(vol.shape, dtype=np.int64)
             rows = spark.read.format(fmt).load(root).collect()
             assert len(rows) == vol.size, name
@@ -181,12 +183,12 @@ def test_s3_hierarchy_discovery_and_level_read(spark, tmp_path):
     """A3 discovery over an object store: a c{i}/s{j} N5 hierarchy
     lives only in the S3 endpoint. ``discover_hierarchy`` lists its
     groups through pyarrow, under the ``s3://`` URI and its ``s3a://``
-    alias, and ``read_level_chunks`` decodes level 0 of every channel
-    through the same endpoint."""
-    from hortacloud_importer_spark.sources.hierarchy import (
-        discover_hierarchy,
-        read_level_chunks,
-    )
+    alias, and an octree build of its level 0 reads every channel's
+    chunks through the same endpoint, each channel's blocks tagged
+    with its group's id."""
+    from hortacloud_importer_spark.pipelines import build_octree
+    from hortacloud_importer_spark.sources.hierarchy import discover_hierarchy
+    from hortacloud_importer_spark.sources.listing import hierarchy_volume
     from tests.test_n5_zarr import _write_n5
 
     rng = np.random.default_rng(23)
@@ -205,8 +207,8 @@ def test_s3_hierarchy_discovery_and_level_read(spark, tmp_path):
         assert discover_hierarchy(root) == {0: [0, 1], 1: [0]}
         assert discover_hierarchy("s3a://" + root[len("s3://"):]) == {0: [0, 1], 1: [0]}
         assert discover_hierarchy(s3.uri("hs", "nope")) == {}
-        got = {ch: np.zeros((4, 4, 4), dtype=np.int64) for ch in vols}
-        for r in read_level_chunks(spark, root, 0).collect():
-            got[r["channel"]][r["z"], r["y"], r["x"]] = r["intensity"]
+        out = str(tmp_path / "oct")
+        build_octree(spark, hierarchy_volume(root), out, nlevels=1).collect()
     for ch, vol in vols.items():
-        assert np.array_equal(got[ch], vol), ch
+        got = decode_tiff((tmp_path / "oct" / f"default.{ch}.tif").read_bytes())
+        assert np.array_equal(got[..., 0], vol), ch

@@ -428,7 +428,7 @@ def test_fused_kernel_build_matches_voxel_row_assembly(spark, tmp_path):
 
 
 def test_fused_slice_ingest_matches_voxel_path(spark, tmp_path):
-    """The windowed slice read of the first pass (_slice_pass) stores
+    """The windowed slice read of the first pass (_window_pass) stores
     the zero-padded source — odd dims exercise the y/x/z canvas padding —
     and the pyramid above it matches the NumPy mirror. The name
     predates the removal of the voxel-row ingest; the reference is
@@ -532,7 +532,7 @@ def test_list_slices_reads_only_the_first_slice_header(tmp_path, monkeypatch):
     header walk of its first slice: no slice is read whole, and only
     header bytes are fetched (the payload of a 64x64 uint16 slice is
     8 KiB)."""
-    from hortacloud_importer_spark.pipelines.octree import _list_slices
+    from hortacloud_importer_spark.sources.listing import _list_slices
     from hortacloud_importer_spark.sources import datasource
 
     rng = np.random.default_rng(47)
@@ -635,7 +635,7 @@ def test_gap_in_z_fails_before_any_commit(spark, tmp_path):
 def test_z_gap_check_needs_an_index_on_every_name():
     """Names that do not all end in a decimal index are ordered by name
     only; consecutive indices pass, with or without zero padding."""
-    from hortacloud_importer_spark.pipelines.octree import _check_z_run
+    from hortacloud_importer_spark.sources.listing import _check_z_run
 
     _check_z_run(["/d/a.tif", "/d/b7.tif", "/d/c9.tif"], ".tif")
     _check_z_run(["/d/s.000098.tif", "/d/s.000099.tif", "/d/s.000100.tif"], ".tif")
@@ -686,7 +686,7 @@ def test_slice_build_plans_no_python_data_source_scan(spark, tmp_path, monkeypat
         [rng.integers(1, 60000, (16, 16)).astype(np.uint16) for _ in range(8)],
     )
     seen = []
-    run_pass = octree._slice_pass
+    run_pass = octree._window_pass
 
     class _Stop(Exception):
         pass
@@ -695,7 +695,7 @@ def test_slice_build_plans_no_python_data_source_scan(spark, tmp_path, monkeypat
         seen.append(run_pass(*args))
         raise _Stop
 
-    monkeypatch.setattr(octree, "_slice_pass", first_pass)
+    monkeypatch.setattr(octree, "_window_pass", first_pass)
     # a budget under 8 blocks: each leaf block is its own subtree
     monkeypatch.setattr(octree, "_SUBTREE_BYTES", 0)
     with pytest.raises(_Stop):

@@ -240,14 +240,14 @@ def test_single_pass_build_plans_no_exchange(spark, tmp_path, monkeypatch):
     from tests.test_golden_store import _volume, _write_slices as _slices
 
     plans = []
-    run_pass = octree._slice_pass
+    run_pass = octree._window_pass
 
     def spy(*args, **kw):
         out = run_pass(*args, **kw)
         plans.append(out._jdf.queryExecution().executedPlan().toString())
         return out
 
-    monkeypatch.setattr(octree, "_slice_pass", spy)
+    monkeypatch.setattr(octree, "_window_pass", spy)
     slices = str(tmp_path / "slices")
     _slices(slices, [_volume(5, (16, 32, 32), np.s_[:8, :16, 8:24])])
     out = str(tmp_path / "store")
@@ -286,13 +286,13 @@ def test_many_subtree_first_pass_matches_single_pass(
     vols[:, :16, :14, :12] = 0  # an empty subtree
     _write_channels(tmp_path / "slices", vols)
     rows = []
-    work = octree._slice_work
+    work = octree._window_work
 
     def spy(*args):
         rows.append(work(*args))
         return rows[-1]
 
-    monkeypatch.setattr(octree, "_slice_work", spy)
+    monkeypatch.setattr(octree, "_window_work", spy)
     multi, _ = _two_ways(
         spark, tmp_path, monkeypatch, str(tmp_path / "slices"), 2,
         nlevels=3, filter_="arthur", channels=channels,
@@ -318,13 +318,13 @@ def test_slice_resume_rewrites_nothing(spark, tmp_path, monkeypatch):
     digests = _digests(out)
     kept = {p: os.stat(f"{out}/{p}").st_mtime_ns for p in committed}
     rows = []
-    work = octree._slice_work
+    work = octree._window_work
 
     def spy(*args):
         rows.append(work(*args))
         return rows[-1]
 
-    monkeypatch.setattr(octree, "_slice_work", spy)
+    monkeypatch.setattr(octree, "_window_work", spy)
     summary = build_octree(spark, slices, out, nlevels=3, filter_="max").collect()
     (first,) = rows
     assert len(first) == 64  # one row per leaf block

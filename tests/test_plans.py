@@ -515,3 +515,46 @@ def test_simhash_signature_frame_is_exchanged_once_not_cached(spark, sf_dir):
         token_agg = rf"keys=\[doc_id#\d+L?, _h#\d+L?\], functions=\[{fn}\(1\)\]"
         assert len(re.findall(token_agg, plan)) == 1, plan
     assert "ReusedExchange" in plan, plan
+
+
+@pytest.mark.parametrize("kind", ["stack", "n5", "hierarchy"])
+def test_file_volume_first_pass_is_one_map_over_local_work(
+    spark, tmp_path, monkeypatch, kind
+):
+    """The first pass of a stack, N5 or hierarchy import is one
+    mapInPandas kernel over the local list of subtree roots: no
+    Generate (no voxel rows), no BatchScan of a volume DataSource and
+    no Exchange."""
+    import numpy as np
+
+    from hortacloud_importer_spark.pipelines import build_octree, octree
+    from hortacloud_importer_spark.sources import listing
+    from hortacloud_importer_spark.sources.n5 import chunk_store
+    from hortacloud_importer_spark.sources.tiff import encode_tiff
+    from tests.test_n5_zarr import _write_n5
+
+    vol = np.random.default_rng(3).integers(1, 60000, (8, 8, 8)).astype(np.uint16)
+    if kind == "stack":
+        (tmp_path / "s.tif").write_bytes(encode_tiff(vol))
+        volume = listing.stack_volume(str(tmp_path / "s.tif"))
+    elif kind == "n5":
+        _write_n5(tmp_path / "a.n5", vol, (4, 4, 4), "gzip")
+        volume = listing.store_volume([(0, chunk_store(str(tmp_path / "a.n5")))])
+    else:
+        for ch in range(2):
+            _write_n5(tmp_path / "h" / f"c{ch}" / "s0", vol, (4, 4, 4), "gzip")
+        volume = listing.hierarchy_volume(str(tmp_path / "h"))
+    plans = []
+    run_pass = octree._window_pass
+
+    def spy(*args):
+        out = run_pass(*args)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(octree, "_window_pass", spy)
+    build_octree(spark, volume, str(tmp_path / "out"), nlevels=2).collect()
+    (plan,) = plans
+    assert "MapInPandas" in plan and "LocalTableScan" in plan, plan
+    for node in ("Generate", "BatchScan", "Exchange"):
+        assert node not in plan, plan

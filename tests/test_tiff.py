@@ -562,45 +562,48 @@ def test_page_table_streaming_decode_matches_full_decode():
             assert np.array_equal(got, full[z]), (kw, z)
 
 
-def test_stack_voxels_bigtiff_zlib_roundtrip(spark, tmp_path):
-    """The page-grain stack reader (one task per page, strip-range
-    seeks — never a whole-file read) reproduces the full decode on a
-    compressed BigTIFF stack."""
-    from hortacloud_importer_spark.pipelines import stack_voxels
+def test_stack_voxels_bigtiff_zlib_roundtrip(tmp_path):
+    """The stack listing walks a compressed BigTIFF's IFD chain once on
+    the driver; each page is then read by seek with its IFD (strip
+    fetches only, never a whole-file read), and the voxels painted
+    from them reproduce the full decode."""
+    from hortacloud_importer_spark.sources.listing import stack_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(31)
     vol = rng.integers(1, 1 << 16, size=(5, 6, 7), dtype=np.uint16)
     f = tmp_path / "stack.tif"
     f.write_bytes(encode_tiff(vol, bigtiff=True, compression="zlib"))
-    vox, dims = stack_voxels(spark, str(f))
-    assert dims == (5, 6, 7)
-    got = np.zeros(dims, dtype=np.int64)
-    for r in vox.collect():
-        got[r["z"], r["y"], r["x"]] = r["intensity"]
-    assert np.array_equal(got, vol.astype(np.int64))
+    volume = stack_volume(str(f))
+    assert volume.dims == (5, 6, 7)
+    assert np.array_equal(read_volume(volume)[0], vol)
 
 
-def test_stack_voxels_file_uri_directory(spark, tmp_path):
+def test_stack_voxels_file_uri_directory(tmp_path):
     """Directory listing must go through the URI-derived filesystem
     (review finding: the scheme-stripped path was re-rooted onto a
     LocalFileSystem, breaking s3://-style inputs; file:// exercises
-    the same dispatch)."""
-    from hortacloud_importer_spark.pipelines import stack_voxels
+    the same dispatch), and the listed pages keep the scheme."""
+    from hortacloud_importer_spark.sources.listing import stack_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(47)
     vol = rng.integers(1, 250, (2, 3, 4), dtype=np.uint8)
     d = tmp_path / "uristacks"
     d.mkdir()
     (d / "a.tif").write_bytes(encode_tiff(vol))
-    vox, dims = stack_voxels(spark, f"file://{d}")
-    assert dims == (2, 3, 4)
-    assert vox.count() == 24
+    volume = stack_volume(f"file://{d}")
+    assert volume.dims == (2, 3, 4)
+    pages = volume.channels[0].items((0, 0, 0), volume.dims)
+    assert [p[0] for p in pages] == [f"file://{d}/a.tif"] * 2
+    assert np.array_equal(read_volume(volume)[0], vol)
 
 
-def test_stack_voxels_ignores_hidden_files_and_expands_braces(spark, tmp_path):
+def test_stack_voxels_ignores_hidden_files_and_expands_braces(tmp_path):
     """binaryFile-parity listing rules: _SUCCESS / dotfiles are never
     stack files, and Hadoop-style {a,b} alternation works."""
-    from hortacloud_importer_spark.pipelines import stack_voxels
+    from hortacloud_importer_spark.sources.listing import stack_volume
+    from tests.test_listing import read_volume
 
     rng = np.random.default_rng(53)
     vols = [rng.integers(1, 250, (2, 3, 4), dtype=np.uint8) for _ in range(2)]
@@ -615,12 +618,9 @@ def test_stack_voxels_ignores_hidden_files_and_expands_braces(spark, tmp_path):
     (d / ".DS_Store").write_bytes(b"junk")
     (d / "._stack_1.tif").write_bytes(b"resource fork junk")
 
-    vox, dims = stack_voxels(spark, str(d / "stack_{1,2}.tif"))
-    assert dims == (4, 3, 4)
-    got = np.zeros(dims, dtype=np.int64)
-    for r in vox.collect():
-        got[r["z"], r["y"], r["x"]] = r["intensity"]
-    assert np.array_equal(got, np.concatenate(vols).astype(np.int64))
+    volume = stack_volume(str(d / "stack_{1,2}.tif"))
+    assert volume.dims == (4, 3, 4)
+    assert np.array_equal(read_volume(volume)[0], np.concatenate(vols))
 
     # directory listing skips the hidden junk too
     d2 = tmp_path / "dirdir"
@@ -628,8 +628,7 @@ def test_stack_voxels_ignores_hidden_files_and_expands_braces(spark, tmp_path):
     (d2 / "a.tif").write_bytes(encode_tiff(vols[0]))
     (d2 / "_SUCCESS").write_text("")
     (d2 / ".hidden.tif").write_bytes(b"junk")
-    _, dims2 = stack_voxels(spark, str(d2))
-    assert dims2 == (2, 3, 4)
+    assert stack_volume(str(d2)).dims == (2, 3, 4)
 
 
 def test_float32_tiff_roundtrip_and_gates():

@@ -212,3 +212,45 @@ def test_reused_worker_keeps_the_pyspark_zip_directory(spark, tmp_path):
         .collect()
     )
     assert [r.v for r in got] == [42]
+
+
+_PLAIN_SESSION = """
+import importlib.util
+from pyspark.sql import SparkSession
+spec = importlib.util.spec_from_file_location(
+    "spark_entry", {entry!r}
+)
+entry = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(entry)
+spark = (SparkSession.builder.appName("plain").master("local[2]")
+    .config("spark.ui.enabled", "false").getOrCreate())
+for name in ("sim_ann", "vol_kernel_box"):
+    print(name, len(entry.queries()[name](spark, {sf_dir!r}).collect()))
+spark.stop()
+"""
+
+
+def test_driver_contract_runs_python_kernels_from_any_directory(
+    tmp_path, sf_dir
+):
+    """A plain session (no engine conf) in a directory that is not the
+    repository, with PYTHONPATH unset, and ``__spark_entry__.py``
+    imported by path: the queries whose Python kernels import the
+    package still run, because the driver contract puts the repo root
+    on the workers' path."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    script = _PLAIN_SESSION.format(
+        entry=os.path.join(_REPO, "__spark_entry__.py"), sf_dir=sf_dir
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(tmp_path),
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    counts = dict(line.split() for line in proc.stdout.splitlines())
+    assert set(counts) == {"sim_ann", "vol_kernel_box"}, proc.stdout
+    assert all(int(n) > 0 for n in counts.values()), proc.stdout

@@ -19,7 +19,12 @@ Claims under test:
   leaf block when eight do not fit the budget (not O(volume) on any
   single node);
 - the fused KTX conversion stays map-only (zero shuffle beyond the
-  channel interleave).
+  channel interleave);
+- the same volume written as a gzip N5 ``c{i}/s0`` hierarchy imports
+  to a store whose block files are sha256-identical to the slice
+  import's, each first-pass task reading its own chunks by path; its
+  cost is reported beside the slice import's, with its chunk read
+  amplification (chunk bytes read over chunk bytes).
 
 Usage: python tools/soak.py [--keep-data]  (~5-10 min on 32 cores)
 
@@ -39,6 +44,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import pathlib
 import shutil
 import sys
 import threading
@@ -56,6 +62,7 @@ NLEVELS = int(os.environ.get("SOAK_NLEVELS", "3"))
 # the 8x shuffle-decay model is observable; the sparse soak also runs
 # at 4 to demonstrate that block size is the straggler-granule knob
 WORK = os.environ.get("SOAK_DIR", "/tmp/spark_graft_soak")
+N5_CHUNKS = (32, 64, 64)  # z, y, x chunk extent of the N5 hierarchy
 
 
 def _children() -> dict[int, list[int]]:
@@ -97,6 +104,7 @@ class RssSampler(threading.Thread):
         self.interval = interval
         self.peak = 0
         self.peak_at = ""
+        self.peaks: dict[str, int] = {}  # kB per phase
         self._phase = "idle"
         self._stop = threading.Event()
 
@@ -120,6 +128,7 @@ class RssSampler(threading.Thread):
     def run(self) -> None:
         while not self._stop.is_set():
             rss = self._total_rss_kb()
+            self.peaks[self._phase] = max(self.peaks.get(self._phase, 0), rss)
             if rss > self.peak:
                 self.peak, self.peak_at = rss, self._phase
             self._stop.wait(self.interval)
@@ -228,33 +237,157 @@ def _gen_slices_sparse(spark, root: str) -> float:
     return time.monotonic() - t0
 
 
+def _first_pass_work(volume):
+    """The build's first-pass work rows over a listed volume, with each
+    row's region extent."""
+    from hortacloud_importer_spark.pipelines import octree
+
+    grid = 1 << (NLEVELS - 1)
+    block_dims = tuple(-(-d // grid) for d in DIMS)
+    padded = tuple(b * grid for b in block_dims)
+    span = min(octree._pass_levels(block_dims, False), NLEVELS - 1)
+    extent = tuple(b << span for b in block_dims)
+    return octree._window_work(volume, {}, span, block_dims, padded), extent
+
+
 def _read_amplification(slices: str) -> dict:
     """The first pass's decode amplification, replayed on the driver:
     every window of every first-pass work row read through the build's
     own slice reader (``_read_slice``), as bytes of slice payload read
     over bytes of slice payload."""
-    from hortacloud_importer_spark.pipelines import octree
-    from hortacloud_importer_spark.sources.datasource import _read_slice
+    import pickle
 
-    files, shapes = octree._list_slices(slices, CHANNELS)
-    grid = 1 << (NLEVELS - 1)
-    block_dims = tuple(-(-d // grid) for d in DIMS)
-    padded = tuple(b * grid for b in block_dims)
-    span = min(octree._pass_levels(block_dims, False), NLEVELS - 1)
-    _, ey, ex = (b << span for b in block_dims)
-    work = octree._slice_work(files, {}, span, block_dims, padded)
+    from hortacloud_importer_spark.sources.datasource import _read_slice
+    from hortacloud_importer_spark.sources.listing import slice_volume
+
+    work, (_, ey, ex) = _first_pass_work(slice_volume(slices, CHANNELS))
     read, payload = 0, {}
     for row in work.itertuples():
-        first = (files[row.channel][0], shapes[row.channel])
         window = (row.gy * ey, (row.gy + 1) * ey, row.gx * ex, (row.gx + 1) * ex)
-        for path in row.paths:
+        for path in pickle.loads(row.items):
             stats: dict = {}
-            _read_slice(path, first, window=window, stats=stats)
+            _read_slice(path, None, window=window, stats=stats)
             read += stats["bytes_read"]
             payload[path] = stats["bytes_total"]
     return {
         "first_pass_subtrees": len(work),
         "read_amplification": round(read / sum(payload.values()), 2),
+    }
+
+
+def _chunk_read_amplification(volume, groups: dict[int, str]) -> float:
+    """The chunk bytes the first pass's work rows read (each row reads
+    every chunk its region overlaps, whole) over the chunk bytes of
+    the hierarchy's level groups (``{channel: group directory}``)."""
+    import pickle
+
+    size = {
+        (ch, p.relative_to(group).as_posix()): p.stat().st_size
+        for ch, group in groups.items()
+        for p in pathlib.Path(group).rglob("*")
+        if p.is_file() and p.name != "attributes.json"
+    }
+    work, _ = _first_pass_work(volume)
+    read = sum(
+        size[(row.channel, key[0])]
+        for row in work.itertuples()
+        for key in pickle.loads(row.items)
+    )
+    return round(read / sum(size.values()), 2)
+
+
+def _gen_n5(spark, slices: str, root: str) -> float:
+    """The slice fixture rewritten as a gzip N5 ``c{i}/s0`` hierarchy of
+    N5_CHUNKS (z, y, x) chunks, one task per (channel, z-slab)."""
+    from pyspark.sql import functions as F
+
+    dz, dy, dx = DIMS
+    cz, cy, cx = N5_CHUNKS
+    t0 = time.monotonic()
+    for ch in range(CHANNELS):
+        os.makedirs(f"{root}/c{ch}/s0", exist_ok=True)
+        with open(f"{root}/c{ch}/s0/attributes.json", "w") as fh:
+            json.dump(
+                {
+                    "dimensions": [dx, dy, dz],
+                    "blockSize": [cx, cy, cz],
+                    "dataType": "uint16",
+                    "compression": {"type": "gzip"},
+                },
+                fh,
+            )
+
+    def write(batches):
+        import gzip
+
+        import numpy as np
+        import pandas as pd
+
+        from hortacloud_importer_spark.sources.tiff import decode_tiff
+
+        def page(ch: int, z: int) -> np.ndarray:
+            with open(f"{slices}/default.{ch}.{z:05d}.tif", "rb") as fh:
+                return decode_tiff(fh.read())[0, :, :, 0]
+
+        for pdf in batches:
+            for row in pdf.itertuples():
+                ch, gz = int(row.ch), int(row.gz)
+                slab = np.stack(
+                    [page(ch, z) for z in range(gz * cz, min((gz + 1) * cz, dz))]
+                )
+                for gy, gx in np.ndindex(-(-dy // cy), -(-dx // cx)):
+                    blk = slab[:, gy * cy : (gy + 1) * cy, gx * cx : (gx + 1) * cx]
+                    head = np.array([0, 3], ">u2").tobytes() + np.array(
+                        blk.shape[::-1], ">u4"
+                    ).tobytes()
+                    d = f"{root}/c{ch}/s0/{gx}/{gy}"
+                    os.makedirs(d, exist_ok=True)
+                    with open(f"{d}/{gz}", "wb") as fh:
+                        fh.write(head + gzip.compress(blk.astype(">u2").tobytes(), 1))
+            yield pd.DataFrame({"n": [len(pdf)]})
+
+    slabs = -(-dz // cz)
+    spark.range(slabs * CHANNELS, numPartitions=slabs * CHANNELS).select(
+        (F.col("id") % slabs).cast("int").alias("gz"),
+        (F.col("id") / slabs).cast("int").alias("ch"),
+    ).mapInPandas(write, "n long").collect()
+    return time.monotonic() - t0
+
+
+def _block_digests(root: str) -> dict[str, str]:
+    """sha256 of every TIFF block file of an octree store, by path."""
+    import hashlib
+
+    base = pathlib.Path(root)
+    return {
+        p.relative_to(base).as_posix(): hashlib.sha256(p.read_bytes()).hexdigest()
+        for p in base.rglob("*.tif")
+    }
+
+
+def _n5_import(spark, sampler, n5: str, out: str, slice_store: str) -> dict:
+    """Import the N5 hierarchy as the slice store was built and compare
+    the two stores' block files."""
+    from hortacloud_importer_spark.pipelines import build_octree
+    from hortacloud_importer_spark.sources.listing import hierarchy_volume
+
+    sampler.phase("build_octree_n5")
+    t0 = time.monotonic()
+    volume = hierarchy_volume(n5)
+    build_octree(
+        spark, volume, out, nlevels=NLEVELS, filter_="arthur",
+        voxel_size_um=(0.4, 0.4, 1.0),
+    ).collect()
+    wall = time.monotonic() - t0
+    sampler.phase("n5_read_amplification")
+    groups = {ch: f"{n5}/c{ch}/s0" for ch in range(CHANNELS)}
+    digests = _block_digests(out)
+    return {
+        "n5_build_sec": round(wall, 1),
+        "n5_peak_rss_gib": round(sampler.peaks.get("build_octree_n5", 0) / 2**20, 2),
+        "n5_read_amplification": _chunk_read_amplification(volume, groups),
+        "n5_blocks": len(digests),
+        "n5_identical": digests == _block_digests(slice_store),
     }
 
 
@@ -321,7 +454,8 @@ def main() -> int:
     slices = f"{work}/slices"
     store = f"{work}/octree"
     ktx_out = f"{work}/ktx"
-    for d in (store, ktx_out):
+    n5, n5_store = f"{work}/n5", f"{work}/octree_n5"
+    for d in (store, ktx_out, n5_store):
         shutil.rmtree(d, ignore_errors=True)
 
     sampler = RssSampler()
@@ -343,6 +477,11 @@ def main() -> int:
     else:
         shutil.rmtree(slices, ignore_errors=True)
         report["gen_sec"] = round(gen(spark, slices), 1)
+    last = [-(-d // c) - 1 for d, c in zip(DIMS, N5_CHUNKS)][::-1]  # x/y/z
+    last_chunk = f"{n5}/c{CHANNELS - 1}/s0/" + "/".join(map(str, last))
+    if not args.sparse and not os.path.exists(last_chunk):
+        shutil.rmtree(n5, ignore_errors=True)
+        report["gen_sec"] += round(_gen_n5(spark, slices, n5), 1)
     stages_before = {s["stageId"] for s in _stages(spark)}
 
     sampler.phase("build_octree")
@@ -367,6 +506,9 @@ def main() -> int:
     stages_before |= {s["stageId"] for s in build_stages}
     sampler.phase("read_amplification")
     report.update(_read_amplification(slices))
+    if not args.sparse:
+        report.update(_n5_import(spark, sampler, n5, n5_store, store))
+        stages_before |= {s["stageId"] for s in _stages(spark)}
 
     grid = 1 << (NLEVELS - 1)
     block_dims = tuple(-(-d // grid) for d in DIMS)
@@ -388,6 +530,9 @@ def main() -> int:
 
     sampler.stop()
     report["peak_rss_gib"] = round(sampler.peak / 2**20, 2)
+    report["build_peak_rss_gib"] = round(
+        sampler.peaks.get("build_octree", 0) / 2**20, 2
+    )
     report["peak_rss_phase"] = sampler.peak_at
 
     def stage_rows(stages):
@@ -416,8 +561,8 @@ def main() -> int:
         _write_md(report)
     print(json.dumps(report, indent=1)[:2000])
     if not args.keep_data:
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(ktx_out, ignore_errors=True)
+        for d in (store, ktx_out, n5_store):
+            shutil.rmtree(d, ignore_errors=True)
     spark.stop()
     return 0
 
@@ -454,6 +599,22 @@ def _write_md(r: dict) -> None:
         f"- The int32 temporary claim holds: peak is a small multiple of "
         f"the {vox_gib:.1f} GiB volume, not O(volume) per worker — "
         "and 0.4% of a 1000-executor cluster's aggregate at this ratio.",
+        "",
+        "## The same volume as a gzip N5 hierarchy",
+        "",
+        f"`c{{i}}/s0`, {N5_CHUNKS[0]} x {N5_CHUNKS[1]} x {N5_CHUNKS[2]} "
+        "(z, y, x) chunks, imported after the slice import with the same "
+        "levels and filter (`sources/listing.py::hierarchy_volume`).",
+        "",
+        "| import | build sec | process-tree peak GiB | read amplification |",
+        "|---|---|---|---|",
+        f"| slices | {r['build_sec']} | {r['build_peak_rss_gib']} "
+        f"| {r['read_amplification']} (slice payload) |",
+        f"| gzip N5 | {r['n5_build_sec']} | {r['n5_peak_rss_gib']} "
+        f"| {r['n5_read_amplification']} (chunk bytes) |",
+        "",
+        f"Block files sha256-identical to the slice import's: "
+        f"**{r['n5_identical']}** ({r['n5_blocks']} files).",
         "",
         "## build_octree stages (Spark REST, completed stages)",
         "",
@@ -508,13 +669,13 @@ def _write_md(r: dict) -> None:
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SOAK.md"
     )
-    # preserve the corpus-soak section tools/soak_corpus.py maintains
+    # preserve the sections --sparse and tools/soak_corpus.py maintain
     tail = ""
     if os.path.exists(path):
         old = open(path).read()
-        marker = old.find("\n# CORPUS SOAK")
-        if marker >= 0:
-            tail = old[marker:]
+        marks = [old.find(m) for m in ("\n# SPARSE SOAK", "\n# CORPUS SOAK")]
+        if max(marks) >= 0:
+            tail = old[min(m for m in marks if m >= 0) :]
     with open(path, "w") as fh:
         fh.write("\n".join(lines) + tail)
 
